@@ -39,7 +39,7 @@ object Scale {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val parts =
       try df.rdd.getNumPartitions
-      catch { case _: Throwable => target }
+      catch { case scala.util.control.NonFatal(_) => target }
     if (parts < target) df.repartition(target, col(key)) else df
   }
 

@@ -71,7 +71,7 @@ object GraftTables {
   }
 
   def unregister(dataDir: String): Unit = tables.remove(canon(dataDir)): Unit
-  def clear(): Unit = { tables.clear(); StatsPruneRule.clearProofCache() }
+  def clear(): Unit = { tables.clear(); graft.util.EpochCache.clear() }
 
   /** Single-root lookup — the exact-coverage consumers
     * ([[MetaAggRule]]) need ONE metadata identity whose stats cover
@@ -393,7 +393,7 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** VERSION-KEYED proof cache: the planning-time metadata queries
+  /** VERSION-KEYED proofs: the planning-time metadata queries
     * (two collects per registered scan) are re-issued for every plan
     * of a hot table, so identical proofs memoize. The key carries the
     * metadata epochs' CURRENT VERSIONS (one cheap FS resolution each,
@@ -401,18 +401,11 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     * the version, which changes the key, so staleness is structural:
     * a cached entry can only ever be served for the exact epoch it
     * was proven against (Delta caches its snapshot state the same
-    * way). Bounded LRU; an unresolvable predicate simply skips the
-    * cache. The second identical query on an unchanged table issues
-    * ZERO metadata jobs (PlanSpec-counted). */
-  private val ProofCacheMax = 256
-  private val proofCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Set[String]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Set[String]]): Boolean =
-        size() > ProofCacheMax
-    })
-
-  private[plans] def clearProofCache(): Unit = proofCache.clear()
+    * way). Entries live in [[graft.util.EpochCache]]; an unresolvable
+    * predicate simply skips the cache. The second identical query on
+    * an unchanged table issues ZERO metadata jobs (PlanSpec-counted). */
+  private val Proofs =
+    new graft.util.EpochCache.Kind[Set[String]](s => 1024L + 128L * s.size)
 
   /** Uncached proof computations (each costs the metadata jobs) —
     * test-visible, so the cache contract is pinned directly: a cache
@@ -441,12 +434,10 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
   private[graft] def provablyExcluded(spark: SparkSession, cond: Expression,
                                       entry: GraftTables.Entry): Set[String] = {
     val key = proofKey(spark, cond, entry)
-    key.flatMap(k => Option(proofCache.get(k))) match {
-      case Some(hit) => hit
-      case None =>
-        val computed = provablyExcludedUncached(spark, cond, entry)
-        key.foreach(k => proofCache.put(k, computed): Unit)
-        computed
+    key match {
+      case Some(k) => graft.util.EpochCache.getOrElseUpdate(Proofs, k)(
+        provablyExcludedUncached(spark, cond, entry))
+      case None => provablyExcludedUncached(spark, cond, entry)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Union}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.types.StructType
 
 /** DRIVER-SIDE parquet staging for METADATA-SCALE epochs (guide §5:
@@ -51,21 +51,14 @@ private[graft] object LocalEpoch {
     walk(plan).map(_.flatten)
   }
 
-  /** The parquet compression codec the session would write with. */
+  /** The parquet compression codec the session would write with —
+    * resolved by Spark's own [[ParquetOptions]], exactly as the task
+    * write path resolves it (an unsupported name fails there too). */
   private def codecOf(spark: SparkSession)
-      : org.apache.parquet.hadoop.metadata.CompressionCodecName = {
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName._
-    spark.conf.getOption("spark.sql.parquet.compression.codec")
-      .getOrElse("snappy").toLowerCase(java.util.Locale.ROOT) match {
-      case "uncompressed" | "none" => UNCOMPRESSED
-      case "gzip"                  => GZIP
-      case "lz4"                   => LZ4
-      case "lz4_raw" | "lz4raw"    => LZ4_RAW
-      case "zstd"                  => ZSTD
-      case "brotli"                => BROTLI
-      case _                       => SNAPPY
-    }
-  }
+      : org.apache.parquet.hadoop.metadata.CompressionCodecName =
+    org.apache.parquet.hadoop.metadata.CompressionCodecName.valueOf(
+      new ParquetOptions(Map.empty[String, String], spark.sessionState.conf)
+        .compressionCodecClassName)
 
   private final class Builder(path: org.apache.hadoop.fs.Path)
       extends org.apache.parquet.hadoop.ParquetWriter.Builder[

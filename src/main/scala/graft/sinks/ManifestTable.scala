@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.util.EpochCache
 
 /** Manifest-based table format — epochs as FILE LISTS, not physical
   * copies. [[VersionedTable]] commits every epoch as a full `epoch=N`
@@ -120,13 +121,24 @@ object ManifestTable {
     * equality deletes apply by (a delete at seq s kills matching rows
     * only in files with seq < s); legacy files' seq 0 makes them
     * subject to every later delete, which is exactly their age. */
-  def manifest(spark: SparkSession, root: String, version: Long): DataFrame =
-    manifestLocalDf(spark, root, version).getOrElse(
-      manifestFromFiles(spark, root, version))
+  def manifest(spark: SparkSession, root: String, version: Long): DataFrame = {
+    val key = manifestKey(spark, root, version)
+    collected(spark, root, version, key, narrowOnMiss = false) match {
+      case Some(c) if c.full => spark.createDataFrame(c.rows.asJava, c.schema)
+      case _                 => manifestFromFiles(spark, root, version, key)
+    }
+  }
+
+  private def manifestKey(spark: SparkSession, root: String,
+                          version: Long): Option[VersionedTable.EpochKey] =
+    VersionedTable.epochKey(spark, root,
+      new Path(s"${manifestsRoot(root)}/epoch=$version"))
 
   private def manifestFromFiles(spark: SparkSession, root: String,
-                                version: Long): DataFrame = {
-    var m = VersionedTable.readVersion(spark, manifestsRoot(root), version)
+                                version: Long,
+                                key: Option[VersionedTable.EpochKey])
+      : DataFrame = {
+    var m = VersionedTable.readEpoch(spark, manifestsRoot(root), version, key)
     if (!m.columns.contains("dv_path"))
       m = m.withColumn("dv_path", lit(null).cast("string"))
     if (!m.columns.contains("dv_rows"))
@@ -138,117 +150,89 @@ object ManifestTable {
     m
   }
 
-  /** Collected-manifest cache: a committed manifest epoch is immutable,
-    * so its [[manifest]] rows can be collected ONCE and every further
-    * metadata accessor ([[filesAt]], [[rawFiles]], [[effectiveFiles]],
-    * [[fileBuckets]], the DV-state reads) served driver-side — each of
-    * those otherwise re-runs a Spark job over the same tiny parquet
-    * (measured: 56 such jobs in one MV-refresh query). Keyed by (epoch
-    * dir, mtime) like [[VersionedTable]]'s schema cache, so a deleted-
-    * and-re-created root can never serve stale rows.
+  /** Collected manifest epochs: a committed epoch is immutable, so its
+    * [[manifest]] rows are collected ONCE and then served driver-side —
+    * to every metadata accessor ([[filesAt]], [[rawFiles]],
+    * [[effectiveFiles]], [[fileBuckets]], the DV-state reads), each of
+    * which otherwise re-runs a Spark job over the same tiny parquet
+    * (measured: 56 such jobs in one MV-refresh query), and as a
+    * LocalRelation to every [[manifest]] consumer: each COMMIT reads
+    * the base version's whole manifest (carried ∪ landed is what gets
+    * written), and pruning/touched-file joins read the stats columns.
+    * A local commit frame is what lets [[VersionedTable]] stage the
+    * next epoch driver-side.
     *
-    * Only the NARROW accessor columns are collected — path, size,
-    * row_count, dv_path, dv_rows, seq, bucket — never the stats
-    * (min/max) columns, which no accessor reads: collecting the full
-    * width was a driver-memory and transfer regression on wide-stats
-    * tables, and made the cache's worst case hundreds of MB. Driver
-    * memory is bounded by TOTAL CACHED ROWS (not entry count): ~200 B
-    * per narrow row keeps the whole cache under ~50 MB at the bound. */
+    * One entry per epoch in [[graft.util.EpochCache]], keyed by its
+    * [[VersionedTable.EpochKey]]. Full-width rows (stats included) are
+    * the driver-memory hazard the round-14 ADVICE named, so an epoch
+    * keeps them only when its parquet is ≤ [[ManifestFullMaxBytes]]
+    * AND ≤ [[ManifestFullMaxRows]] rows; a larger epoch of up to
+    * [[LocalizeMaxRows]] rows keeps just the narrow accessor columns
+    * (its [[manifest]] stays the parquet-backed frame). Accessors read
+    * columns by name, so either width serves them. */
   private val LocalizeMaxRows = 65536
-  private val ManifestCacheMaxTotalRows = 262144L
-  private val manifestAccessorCols = Seq(
-    "path", "size", "row_count", "dv_path", "dv_rows", "seq", "bucket")
-  private val manifestRowsCache =
-    new java.util.LinkedHashMap[(String, Long, Long),
-        (StructType, Seq[org.apache.spark.sql.Row])](16, 0.75f, true)
-
-  /** FULL-WIDTH localized manifests — the stats (min/max) columns
-    * included, unlike [[manifestRowsCache]]: every COMMIT reads the
-    * base version's whole manifest (carried ∪ landed is what gets
-    * written), and pruning/touched-file joins read the stats columns
-    * too. Serving those consumers a [[org.apache.spark.sql.catalyst
-    * .plans.logical.LocalRelation]] instead of a parquet-backed scan
-    * removes a per-consumer Spark job AND keeps the commit frame
-    * local, which is what lets [[VersionedTable]] stage the next
-    * epoch driver-side (one write job + one scan job fewer per
-    * commit — measured across the ~50 table-format queries).
-    *
-    * Guards, because full-width rows are the exact driver-memory
-    * hazard the round-14 ADVICE named: localization fires only for
-    * epochs whose on-disk parquet is ≤ [[ManifestFullMaxBytes]] AND
-    * ≤ [[ManifestFullMaxRows]] rows; the LRU cache is bounded by
-    * TOTAL RETAINED ROWS. A manifest past any bound serves the
-    * ordinary parquet-backed frame unchanged. Cache keys are the
-    * same (uri, mtime, child fingerprint) epoch identity as every
-    * other epoch cache. */
   private val ManifestFullMaxRows = 16384
   private val ManifestFullMaxBytes = 8L << 20
-  private val ManifestFullCacheTotalRows = 65536L
-  private val manifestFullCache =
-    new java.util.LinkedHashMap[(String, Long, Long),
-        (StructType, Seq[org.apache.spark.sql.Row])](16, 0.75f, true)
+  private val manifestAccessorCols = Seq(
+    "path", "size", "row_count", "dv_path", "dv_rows", "seq", "bucket")
 
-  private def manifestFullPut(key: (String, Long, Long),
-                              v: (StructType,
-                                Seq[org.apache.spark.sql.Row])): Unit =
-    manifestFullCache.synchronized {
-      manifestFullCache.put(key, v)
-      var total = 0L
-      manifestFullCache.values.forEach(e => total += e._2.length)
-      val it = manifestFullCache.entrySet().iterator()
-      while (total > ManifestFullCacheTotalRows && it.hasNext) {
-        val e = it.next()
-        if (e.getKey != key) { total -= e.getValue._2.length; it.remove() }
-      }
-    }
+  private final case class Collected(schema: StructType,
+                                     rows: Seq[org.apache.spark.sql.Row],
+                                     full: Boolean)
+  private val Manifests = new EpochCache.Kind[Collected](c =>
+    256L + 32L * c.rows.length * c.schema.length)
 
-  /** The localized manifest of one version, when within bounds: a
-    * cache hit serves directly; a miss under the byte gate collects
-    * the normalized frame ONCE (the one job every consumer of this
-    * epoch then skips). None past the bounds — the parquet path. */
-  private def manifestLocalDf(spark: SparkSession, root: String,
-                              version: Long): Option[DataFrame] = {
-    val dir = new Path(s"${manifestsRoot(root)}/epoch=$version")
-    val key = VersionedTable.epochKey(spark, root, dir) match {
-      case Some(k) => k
-      case None    => return None
-    }
-    val hit = manifestFullCache.synchronized(
-      Option(manifestFullCache.get(key)))
-    val served = hit.orElse {
-      if (!VersionedTable.epochBytes(spark, root, dir)
-          .exists(_ <= ManifestFullMaxBytes)) None
+  /** The cached collection of one epoch; on a miss, a fresh one — full
+    * width under the byte gate, else (only when `narrowOnMiss`) the
+    * narrow columns — cached when within the row bounds above. */
+  private def collected(spark: SparkSession, root: String, version: Long,
+                        key: Option[VersionedTable.EpochKey],
+                        narrowOnMiss: Boolean): Option[Collected] =
+    key.flatMap(EpochCache.get(Manifests, _)).orElse {
+      val small = key.exists(_.bytes <= ManifestFullMaxBytes)
+      if (!small && !narrowOnMiss) None
       else {
-        val m = manifestFromFiles(spark, root, version)
-        val rows = m.collect().toSeq
-        if (rows.length <= ManifestFullMaxRows) {
-          val v = (m.schema, rows)
-          manifestFullPut(key, v)
-          Some(v)
-        } else None
+        val m = manifestFromFiles(spark, root, version, key)
+        val c =
+          if (!small) {
+            val n = m.select(manifestAccessorCols.map(col): _*)
+            Collected(n.schema, n.collect().toSeq, full = false)
+          } else {
+            val rows = m.collect().toSeq
+            if (rows.length <= ManifestFullMaxRows)
+              Collected(m.schema, rows, full = true)
+            else {
+              val idx = manifestAccessorCols.map(m.schema.fieldIndex)
+              Collected(StructType(idx.map(m.schema(_))),
+                rows.map(r => org.apache.spark.sql.Row.fromSeq(idx.map(r.get))),
+                full = false)
+            }
+          }
+        if (c.full || c.rows.length <= LocalizeMaxRows)
+          key.foreach(EpochCache.put(Manifests, _, c))
+        Some(c)
       }
     }
-    served.map { case (sch, rows) =>
-      spark.createDataFrame(rows.asJava, sch) }
-  }
 
-  /** Prime the full-width cache with the rows a commit JUST wrote —
-    * when the committed frame was driver-local anyway — so the next
+  /** Prime the manifest entry with the rows a commit JUST wrote — when
+    * the committed frame was driver-local anyway — so the next
     * commit's carried-manifest read (and every accessor in between)
     * runs zero Spark jobs. The primed value is exactly what a
     * read-back would serve: same column order and types (the parquet
     * round trip is value-exact for every stats type the landing
     * writes), all-nullable schema rendering, and the one
     * normalization [[manifest]] applies to committed rows — NULL
-    * `seq` (a create's landing rows) coalesced to 0. Best-effort and
-    * conservative: any missing column, over-bound size, or
-    * conversion surprise just skips the prime. */
+    * `seq` (a create's landing rows) coalesced to 0, which also makes
+    * `seq` the one non-nullable column. Best-effort and conservative:
+    * any missing column, over-bound size, or conversion surprise just
+    * skips the prime. */
   private def primeManifestCaches(spark: SparkSession, root: String,
                                   version: Long, rows: DataFrame): Unit =
     try {
       val plan = rows.queryExecution.optimizedPlan
       LocalEpoch.localRows(plan, ManifestFullMaxRows).foreach { irows =>
-        val sch = VersionedTable.allNullable(plan.schema)
+        val sch = StructType(VersionedTable.allNullable(plan.schema).map(f =>
+          if (f.name == "seq") f.copy(nullable = false) else f))
         if (manifestAccessorCols.forall(sch.fieldNames.contains)) {
           val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
             .createToScalaConverter(sch)
@@ -260,48 +244,21 @@ object ManifestTable {
                 r.toSeq.updated(seqIdx, 0L))
             else r
           }
-          val dir = new Path(s"${manifestsRoot(root)}/epoch=$version")
-          VersionedTable.epochKey(spark, root, dir).foreach { k =>
-            manifestFullPut(k, (sch, ext))
-          }
+          manifestKey(spark, root, version).foreach(
+            EpochCache.put(Manifests, _, Collected(sch, ext, full = true)))
         }
       }
     } catch { case e: Throwable if scala.util.control.NonFatal(e) => () }
 
-  /** The normalized manifest of one version projected to the narrow
-    * accessor columns, collected once per immutable epoch (see
-    * [[manifestRowsCache]]). */
+  /** The normalized manifest of one version as collected rows carrying
+    * at least the narrow accessor columns (read them by name), served
+    * from the one cached entry per epoch. */
   private[graft] def manifestCollected(spark: SparkSession, root: String,
                                        version: Long)
       : (StructType, Seq[org.apache.spark.sql.Row]) = {
-    val dir = new Path(s"${manifestsRoot(root)}/epoch=$version")
-    // same (uri, mtime, child fingerprint) identity as the schema
-    // cache — a drop-and-recreate within one mtime tick cannot serve
-    // stale rows (the ADVICE staleness window)
-    val key = VersionedTable.epochKey(spark, root, dir)
-    key.flatMap(k => Option(
-        manifestRowsCache.synchronized(manifestRowsCache.get(k)))) match {
-      case Some(v) => v
-      case None =>
-        val m = manifest(spark, root, version)
-          .select(manifestAccessorCols.map(col): _*)
-        val v = (m.schema, m.collect().toSeq)
-        if (v._2.length <= LocalizeMaxRows) key.foreach { k =>
-          manifestRowsCache.synchronized {
-            manifestRowsCache.put(k, v)
-            // row-budget eviction: drop least-recently-used entries
-            // until the cache's total retained rows fit the budget
-            var total = 0L
-            manifestRowsCache.values.forEach(e => total += e._2.length)
-            val it = manifestRowsCache.entrySet().iterator()
-            while (total > ManifestCacheMaxTotalRows && it.hasNext) {
-              val e = it.next()
-              if (e.getKey != k) { total -= e.getValue._2.length; it.remove() }
-            }
-          }
-        }
-        v
-    }
+    val c = collected(spark, root, version,
+      manifestKey(spark, root, version), narrowOnMiss = true).get
+    (c.schema, c.rows)
   }
 
   // ------------------------------------------------------- bucketing
@@ -2814,24 +2771,13 @@ object ManifestTable {
   // deferred to the first read and paid once; [[compactEq]] / the
   // first row-level op / the maintenance tick make it durable.
 
-  /** Version-keyed cache of resolved equality deletes. Entries are
+  /** Resolved equality deletes per (root, version). Entries are
     * immutable per version; scratch sidecars are TTL-swept by
     * [[vacuum]] when no manifest adopted them, so a hit re-validates
-    * one sidecar's existence before being trusted. */
-  private val eqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[(String, Option[String], Long, Long)]]()
-
-  /** Cached resolutions retained per table root — newest-N covers the
-    * live readers (the current version plus a few time travelers)
-    * while bounding a long-lived driver that walks many versions. */
-  private val EqCacheVersionsPerRoot = 4
-
-  /** Test hook: simulate a FRESH JVM's empty resolution/probe
-    * caches. */
-  private[graft] def clearEqCache(): Unit = {
-    eqCache.clear()
-    eqProbeCache.clear()
-  }
+    * its sidecars before being trusted. */
+  private val EqResolutions =
+    new EpochCache.Kind[Seq[(String, Option[String], Long, Long)]](s =>
+      64L + 256L * s.length)
 
   /** Whether `version` has pending (unmaterialized) equality deletes
     * — consumers that answer from MANIFEST STATISTICS alone (metadata
@@ -2850,7 +2796,6 @@ object ManifestTable {
     val entries = eqDeletes(spark, root, version)
     if (entries.isEmpty) return dvStates(spark, root, version)
     val key = (canon(root), version)
-    val hit = eqCache.get(key)
     // re-validate EVERY scratch sidecar: committed vectors are
     // refcount-durable, but unadopted eqres scratch is what the
     // vacuum TTL sweeps out from under a long-lived cache entry —
@@ -2859,26 +2804,16 @@ object ManifestTable {
     // read then fails until the JVM restarts). Scratch sidecars are
     // few — one per eq-touched file — so each gets its own exists();
     // any miss evicts and recomputes instead of failing the read.
-    if (hit != null) {
+    EpochCache.get(EqResolutions, key).filter { hit =>
       val scratch = hit.collect {
         case (_, Some(dv), _, _) if dv.contains("/eqres-") => dv }
-      if (scratch.forall(dv => fs(spark, root).exists(new Path(dv))))
-        return hit
-      eqCache.remove(key): Unit
+      scratch.forall(dv => fs(spark, root).exists(new Path(dv)))
+    }.getOrElse {
+      val resolved = resolveEq(spark, root, version,
+        manifest(spark, root, version), entries)
+      EpochCache.put(EqResolutions, key, resolved) // replaces a stale hit
+      resolved
     }
-    val resolved = resolveEq(spark, root, version,
-      manifest(spark, root, version), entries)
-    eqCache.put(key, resolved)
-    // BOUNDED per root: entries are full file-state lists, so a
-    // long-lived driver walking many versions of a large table would
-    // otherwise accumulate them for the life of the JVM. Old versions
-    // re-resolve on the rare re-read; newest-N covers the live
-    // readers (current version + a few time travelers).
-    val mine = eqCache.keySet.asScala.filter(_._1 == key._1).toSeq
-    if (mine.size > EqCacheVersionsPerRoot)
-      mine.sortBy(_._2).dropRight(EqCacheVersionsPerRoot)
-        .foreach(k => eqCache.remove(k): Unit)
-    resolved
   }
 
   /** One pending equality delete compiled for PURE-READ application:
@@ -2891,15 +2826,16 @@ object ManifestTable {
                                           keys: Set[Seq[Any]],
                                           touched: Set[String])
 
-  /** Probe plans cached per (root, version) — entries are a few key
-    * sets plus touched-path sets, all metadata-scale; key files are
+  /** Probe plans per (root, version) — entries are a few key sets
+    * plus touched-path sets, all metadata-scale; key files are
     * immutable and registry-refcounted (vacuum keeps referenced
-    * ones), so entries never go stale. Bounded like [[eqCache]]. Each
-    * entry carries the key-file BYTES it holds in memory, re-checked
-    * against the conf on every hit — neither raising nor lowering
+    * ones), so entries never go stale. Each entry carries the
+    * key-file BYTES it holds in memory, re-checked against the conf
+    * on every hit — neither raising nor lowering
     * `spark.graft.eq.maxProbeBytes` is pinned by the cache. */
-  private val eqProbeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Long, Seq[EqProbe])]()
+  private val EqProbePlans = new EpochCache.Kind[(Long, Seq[EqProbe])](
+    _._2.map(p => 64L + 32L * p.keys.size * p.keyCols.length +
+      128L * p.touched.size).sum)
 
   /** Compile `version`'s pending equality deletes into per-task probe
     * plans — the PURE-READ application path: a SELECT on an
@@ -2919,13 +2855,14 @@ object ManifestTable {
     val key = (canon(root), version)
     val maxBytes = spark.conf
       .get("spark.graft.eq.maxProbeBytes", (64L << 20).toString).toLong
-    val hit = eqProbeCache.get(key)
-    if (hit != null) {
-      // a LOWERED guard evicts an oversized cached plan (and its
-      // heap-held key tuples) instead of pinning the old decision
-      if (hit._1 <= maxBytes) return Some(hit._2)
-      eqProbeCache.remove(key): Unit
-      return None
+    EpochCache.get(EqProbePlans, key) match {
+      case Some((bytes, plan)) if bytes <= maxBytes => return Some(plan)
+      case Some(_) =>
+        // a LOWERED guard evicts an oversized cached plan (and its
+        // heap-held key tuples) instead of pinning the old decision
+        EpochCache.remove(EqProbePlans, key)
+        return None
+      case None =>
     }
     val schema = tableSchema(spark, root, version)
     val f = fs(spark, root)
@@ -2981,13 +2918,7 @@ object ManifestTable {
     // cached None would pin this version to the scratch path for the
     // JVM's life even after the conf is raised (the None computation
     // is a registry read + per-entry FS length — cheap to redo)
-    computed.foreach { plan =>
-      eqProbeCache.put(key, (keyBytes, plan))
-      val mine = eqProbeCache.keySet.asScala.filter(_._1 == key._1).toSeq
-      if (mine.size > EqCacheVersionsPerRoot)
-        mine.sortBy(_._2).dropRight(EqCacheVersionsPerRoot)
-          .foreach(k => eqProbeCache.remove(k): Unit)
-    }
+    computed.foreach(plan => EpochCache.put(EqProbePlans, key, (keyBytes, plan)))
     computed
   }
 
@@ -4548,12 +4479,12 @@ object ManifestTable {
     * from narrow values, so a post-widen index would FALSELY exclude
     * files). Consumers skip a mismatched index ([[bloomsValid]]);
     * missing marker = pre-widening legacy, necessarily matching. */
-  /** Per-(index root, index version) marker cache: a rebuild bumps
+  /** Markers cached per (index root, index version): a rebuild bumps
     * the index's version, so an entry can never serve a different
     * generation's type — the planning hot path then pays the two
     * marker round-trips once per index generation, not per scan. */
-  private val bloomTypeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Option[String]]()
+  private val BloomTypes =
+    new EpochCache.Kind[Option[String]](_ => 64L)
 
   private def bloomTypeMarker(spark: SparkSession,
                               bloomRoot: String): Option[String] = {
@@ -4589,8 +4520,8 @@ object ManifestTable {
       : Seq[(String, String)] =
     blooms(spark, root).filter { case (pc, br) =>
       val v = VersionedTable.latestVersion(spark, br)
-      val marker = bloomTypeCache.computeIfAbsent((canon(br), v),
-        _ => bloomTypeMarker(spark, br))
+      val marker = EpochCache.getOrElseUpdate(BloomTypes, (canon(br), v))(
+        bloomTypeMarker(spark, br))
       schema.fields.find(f => physicalName(f) == pc)
         .map(_.dataType.catalogString)
         .exists(t => marker.contains(t))

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** INCREMENTAL MATERIALIZED VIEWS over manifest tables — exact
   * aggregates maintained at cost ∝ what changed, not table size.
@@ -194,11 +195,11 @@ object MaterializedView {
     case other => other
   }
 
-  // keyed by mvRoot; validity = the spec sidecar's exact content
-  // (offsets advance on every refresh, so staleness self-invalidates)
-  private val rewriteCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Option[RewriteCandidate])]()
+  // keyed by (mvRoot, the spec sidecar's exact content): offsets
+  // advance on every refresh, so staleness self-invalidates. The
+  // weight is a flat estimate — a canonical plan is never walked.
+  private val RewriteCandidates =
+    new graft.util.EpochCache.Kind[Option[RewriteCandidate]](_ => 64L << 10)
 
   /** The view's definition re-analyzed against the snapshots its
     * offsets name, in canonical normalized form — rebuilt only when
@@ -217,10 +218,9 @@ object MaterializedView {
       val specTxt = try new String(
         org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
       finally in.close()
-      val hit = rewriteCache.get(mvRoot)
-      if (hit != null && hit._1 == specTxt) return hit._2
-      buildingRewrite.set(true)
-      val built =
+      graft.util.EpochCache.getOrElseUpdate(RewriteCandidates,
+          (mvRoot, specTxt)) {
+        buildingRewrite.set(true)
         try {
           val spec = readSpec(spark, mvRoot)
           val base = ManifestTable.readVersion(spark, spec.baseRoot,
@@ -242,9 +242,8 @@ object MaterializedView {
             case _ => None
           }
         } finally buildingRewrite.set(false)
-      rewriteCache.put(mvRoot, (specTxt, built))
-      built
-    } catch { case _: Throwable => None }
+      }
+    } catch { case NonFatal(_) => None }
 
   /** Replace a matched aggregate with a read of the view, projecting
     * the view's columns BY NAME under the matched node's own output
@@ -272,7 +271,7 @@ object MaterializedView {
           org.apache.spark.sql.catalyst.expressions.Alias(
             byName(o.name), o.name)(exprId = o.exprId)
         }, rel))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
     finally buildingRewrite.set(false)
   }
 

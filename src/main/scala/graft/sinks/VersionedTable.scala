@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, not, struct, when}
+import graft.util.EpochCache
 
 /** Always-readable versioned table — the epoch-flip pattern the
   * persisted-index docs prescribe ([[graft.operators.Dedup
@@ -724,71 +725,56 @@ object VersionedTable {
     readVersion(spark, root, v)
   }
 
-  /** Epoch-schema cache: a committed `epoch=N` directory is immutable
-    * (the publishing rename is the commit; only vacuum removes it), so
-    * its parquet schema can be inferred ONCE and reused — every
-    * further [[readVersion]] of the same epoch then skips the
-    * footer-reading Spark job schema inference launches (measured: the
-    * single largest job population in the table-format query family —
-    * 118 one-task jobs in one MV-refresh query). Keyed by (path,
-    * directory mtime, child fingerprint): mtime alone is not a
-    * guarantee — a rename preserves the stage dir's mtime and
-    * filesystem mtime granularity can be a full second, so a root
-    * dropped and re-created at the same path within one tick could
-    * serve a stale schema. The fingerprint (a hash of the child file
-    * names and lengths from one listStatus) closes that window: a
-    * re-created epoch writes differently-named part files. The cached
-    * schema is exactly the previously inferred one, so the returned
-    * frame is identical to an uncached read. */
-  private val epochSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
+  /** Identity of an immutable epoch directory — the key of every
+    * cache over it ([[graft.util.EpochCache]]). A committed `epoch=N`
+    * directory never changes (the publishing rename is the commit;
+    * only vacuum removes it), but mtime alone does not identify it: a
+    * rename preserves the stage dir's mtime and filesystem mtime
+    * granularity can be a full second, so a root dropped and
+    * re-created at the same path within one tick could serve stale
+    * entries. The fingerprint (a hash of the child file names and
+    * lengths from one listStatus) closes that window: a re-created
+    * epoch writes differently-named part files. `bytes` is the
+    * children's total length from the same listing — the size gate
+    * the collected-manifest cache localizes by. */
+  private[sinks] final case class EpochKey(uri: String, mtime: Long,
+                                           fingerprint: Long, bytes: Long)
 
-  /** Identity key of an immutable epoch directory: (uri, mtime,
-    * child-listing fingerprint). None when the directory is unstatable
+  /** [[EpochKey]] of an epoch directory; None when it is unstatable
     * (callers then use the uncached path). One getFileStatus + one
     * listStatus — far below the Spark job the caches skip. */
   private[sinks] def epochKey(spark: SparkSession, root: String,
                               dir: org.apache.hadoop.fs.Path)
-      : Option[(String, Long, Long)] =
+      : Option[EpochKey] =
     try {
       val f = fs(spark, root)
       val st = f.getFileStatus(dir)
       var fp = 1125899906842597L
+      var bytes = 0L
       f.listStatus(dir).sortBy(_.getPath.getName).foreach { c =>
         fp = fp * 31 + c.getPath.getName.hashCode
         fp = fp * 31 + c.getLen
+        bytes += c.getLen
       }
-      Some((dir.toUri.toString, st.getModificationTime, fp))
+      Some(EpochKey(dir.toUri.toString, st.getModificationTime, fp, bytes))
     } catch { case _: java.io.IOException => None }
 
-  /** Prime [[epochSchemaCache]] for a JUST-PUBLISHED epoch from the
+  /** Prime the epoch-schema entry for a JUST-PUBLISHED epoch from the
     * written frame's own schema, so even the FIRST read of a new
-    * version skips the footer-inference job (the cache above only
-    * helps re-reads; every commit's read-back paid one inference job
-    * per fresh epoch). File-source relations force every column
-    * nullable (`DataSource` applies `asNullable`), so the primed
-    * value is the all-nullable rendering of the written schema —
-    * identical to what inference would return for the parquet files
-    * this very frame wrote.
-    * Best-effort: a failed stat just leaves the lazy path. */
+    * version skips the footer-inference job ([[readEpoch]] only helps
+    * re-reads; every commit's read-back paid one inference job per
+    * fresh epoch). File-source relations force every column nullable
+    * (`DataSource` applies `asNullable`), so the primed value is the
+    * all-nullable rendering of the written schema — identical to what
+    * inference would return for the parquet files this very frame
+    * wrote. Best-effort: a failed stat just leaves the lazy path. */
   private def primeSchemaCache(spark: SparkSession, root: String,
                                version: Long,
                                schema: org.apache.spark.sql.types.StructType)
       : Unit =
     epochKey(spark, root,
-        new org.apache.hadoop.fs.Path(s"$root/epoch=$version")).foreach { k =>
-      if (epochSchemaCache.size > 8192) epochSchemaCache.clear()
-      epochSchemaCache.put(k, allNullable(schema)): Unit
-    }
-
-  /** Total bytes of an epoch directory's children — the cheap size
-    * gate the collected-manifest caches decide localization by (one
-    * listStatus; no Spark job). None when unstatable. */
-  private[sinks] def epochBytes(spark: SparkSession, root: String,
-                                dir: org.apache.hadoop.fs.Path)
-      : Option[Long] =
-    try Some(fs(spark, root).listStatus(dir).map(_.getLen).sum)
-    catch { case _: java.io.IOException => None }
+        new org.apache.hadoop.fs.Path(s"$root/epoch=$version")).foreach(k =>
+      EpochCache.put(EpochCache.Schemas, k, allNullable(schema)))
 
   /** Every field (and nested struct/array/map element) nullable — what
     * a file-source read reports regardless of writer nullability. */
@@ -810,21 +796,18 @@ object VersionedTable {
   }
 
   /** As-of read of a retained epoch. */
-  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val dir = s"$root/epoch=$version"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val key = epochKey(spark, root, p)
-    key.flatMap(k => Option(epochSchemaCache.get(k))) match {
-      case Some(s) => spark.read.schema(s).parquet(dir)
-      case None =>
-        val df = spark.read.parquet(dir)
-        key.foreach { k =>
-          if (epochSchemaCache.size > 8192) epochSchemaCache.clear()
-          epochSchemaCache.put(k, df.schema)
-        }
-        df
-    }
-  }
+  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
+    readEpoch(spark, root, version, epochKey(spark, root,
+      new org.apache.hadoop.fs.Path(s"$root/epoch=$version")))
+
+  /** [[readVersion]] under an already-computed key. The epoch's parquet
+    * schema is inferred ONCE per [[EpochKey]] (footer inference was the
+    * single largest job population in the table-format query family —
+    * 118 one-task jobs in one MV-refresh query). */
+  private[sinks] def readEpoch(spark: SparkSession, root: String,
+                               version: Long, key: Option[EpochKey])
+      : DataFrame =
+    EpochCache.readParquet(spark, s"$root/epoch=$version", key)
 
   /** Raw commit stamp of one epoch (ms), None for epochs committed
     * before stamping existed. */

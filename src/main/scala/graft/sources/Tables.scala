@@ -17,17 +17,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Input-schema cache: the corpus parquet files are immutable per
-    * (path, mtime, length), yet every `spark.read.parquet` call pays a
+  /** The corpus parquet files are immutable per (path, mtime,
+    * length), yet every `spark.read.parquet` call pays a
     * footer-inference Spark job — one per table load, across EVERY
     * query in a session (measured ~20-60 ms each at any scale; on an
-    * object store the footer round-trips cost far more). Caching the
-    * inferred schema and re-reading with `.schema(s)` skips that job
-    * and returns an identical frame. Invalidation is by file identity:
-    * a replaced file has a new (mtime, length) and re-infers. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), org.apache.spark.sql.types.StructType]()
-
+    * object store the footer round-trips cost far more), so the schema
+    * is inferred once per file identity: a replaced file has a new
+    * (mtime, length) and re-infers. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     val key =
@@ -37,16 +33,7 @@ object Tables {
           .getFileStatus(p)
         Some((path, st.getModificationTime, st.getLen))
       } catch { case _: java.io.IOException => None }
-    key.flatMap(k => Option(schemaCache.get(k))) match {
-      case Some(s) => spark.read.schema(s).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        key.foreach { k =>
-          if (schemaCache.size > 1024) schemaCache.clear()
-          schemaCache.put(k, df.schema): Unit
-        }
-        df
-    }
+    graft.util.EpochCache.readParquet(spark, path, key)
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

@@ -812,7 +812,7 @@ class PlanSpec extends AnyFunSuite {
       plans.GraftTables.unregister(layB) }
   }
 
-  /** The version-keyed proof cache: planning a hot table twice must
+  /** Version-keyed proofs in the epoch cache: planning a hot table twice must
     * compute the metadata proofs ONCE (the second identical query
     * issues no metadata job), and a new stats commit must invalidate
     * structurally (version in the key), with pruning still exact. */
@@ -844,6 +844,11 @@ class PlanSpec extends AnyFunSuite {
       assert(plans.StatsPruneRule.proofComputations.get() == c1,
         "the second identical query must be a pure cache hit — zero " +
           "metadata computations or jobs")
+      // a fresh JVM's empty cache recomputes the same proof
+      graft.util.EpochCache.clear()
+      assert(run() == want)
+      val c1b = plans.StatsPruneRule.proofComputations.get()
+      assert(c1b > c1, "a cleared cache must recompute the proof")
       // a fresh stats commit (new data appended, then rebuilt stats)
       // bumps the epoch version: the cache key changes, the proof
       // recomputes, and pruning stays exact over the grown table

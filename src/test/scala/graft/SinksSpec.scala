@@ -2740,7 +2740,7 @@ class SinksSpec extends AnyFunSuite {
     ManifestTable.effectiveStates(spark, root, 1L): Unit
     // ...then compact in a simulated OTHER JVM (fresh cache → a fresh,
     // differently-named resolution gets adopted by v2)
-    ManifestTable.clearEqCache()
+    graft.util.EpochCache.clear()
     val v2 = ManifestTable.compactEq(spark, root).get
     // compaction changes no effective rows, so the file-set delta —
     // and with it the change feed — must be EMPTY even though the two
@@ -2827,7 +2827,7 @@ class SinksSpec extends AnyFunSuite {
       "a pure SELECT on an eq-pending table must create no files")
     // a SECOND fresh session (cold caches) reads the same pending
     // version — still zero files created
-    ManifestTable.clearEqCache()
+    graft.util.EpochCache.clear()
     assert(readAll().filter(col("k") === "k0005").head().getLong(1) == 555L)
     assert(listing() == before,
       "a fresh session's read must not re-materialize scratch")
@@ -2850,7 +2850,7 @@ class SinksSpec extends AnyFunSuite {
     assert(probe.filter(col("k") === "k0005").head().getLong(1) == 555L)
     // the conf-forced MATERIALIZING path answers identically (the
     // compaction-grade fallback stays correct)
-    ManifestTable.clearEqCache()
+    graft.util.EpochCache.clear()
     spark.conf.set("spark.graft.eq.materializeOnRead", "true")
     try {
       assert(readAll().count() == 1001L)
