@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Observed metrics each gated query publishes (graft.util.OpMetrics);
@@ -21,7 +22,7 @@ object Bench {
   private def loadAvg(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       .split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   /** Whole-machine busy CPU seconds since boot (/proc/stat cpu line:
     * user+nice+system+irq+softirq+steal, USER_HZ=100). -1 if
@@ -33,14 +34,14 @@ object Bench {
       // cpu user nice system idle iowait irq softirq steal ...
       val v = cols.drop(1).map(_.toDouble)
       (v(0) + v(1) + v(2) + v(5) + v(6) + (if (v.length > 7) v(7) else 0.0)) / 100.0
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** This JVM's consumed CPU seconds (the bench's own work). */
   private def selfCpuSec(): Double =
     try java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
       .getProcessCpuTime / 1e9
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -154,7 +155,7 @@ object Bench {
     try {
       SparkEntry.queries("q1_agg")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     spark.catalog.clearCache()
     graft.util.OpMetrics.reset() // drop metrics scraped during warmup
     val loadStart = loadAvg()
@@ -189,7 +190,7 @@ object Bench {
         // noop sink: full materialization of every row and column (count()
         // would let Spark skip final sort/projection work for some plans)
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           // record, don't swallow: a failing query must not masquerade as
           // a fast one in the round's bench artifact
           errors(name) = sanitize(e.toString)
@@ -339,7 +340,7 @@ object Bench {
           (artifact + "\n").getBytes("UTF-8"))
       } else
         java.nio.file.Files.write(p, (artifact + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write BENCH_LOCAL.json: $e")
     }
     // the full artifact prints LAST so a parser that takes the final

@@ -30,12 +30,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // planner-integrated data skipping: plain filters over directories
-    // registered with graft.plans.GraftTables prune files against the
-    // committed stats/bloom epochs at optimization time
+    // registered with graft.plans.GraftTables prune files against
+    // their adopted manifest and bloom indexes at optimization time
     ext.injectOptimizerRule(session => graft.plans.StatsPruneRule(session))
     // metadata-only whole-table aggregates: COUNT/MIN/MAX over a
-    // registered directory collapse to the committed stats epoch's
-    // answer when the epoch provably covers the scan's exact file set
+    // manifest table or a registered directory collapse to the
+    // manifest's answer when it provably covers the scan's file set
     ext.injectOptimizerRule(session => graft.plans.MetaAggRule(session))
     // SQL MERGE INTO / UPDATE / DELETE on graft catalog tables:
     // substituted at post-hoc resolution (before the optimizer's

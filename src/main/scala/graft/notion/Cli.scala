@@ -124,9 +124,8 @@ object Cli {
     val tables = Derive.deriveAll(defs, stages, ts)
     Derive.assertIntegrity(tables("FactTimeslices"), tables("DimStage"),
       tables("DimWorkflow"), stages, defs)
-    ExcelSink.write(tables.map { case (k, v) =>
+    val counts = ExcelSink.write(tables.map { case (k, v) =>
       k -> (if (v.columns.contains("attributes")) v.drop("attributes") else v) }, outputPath)
-    val counts = tables.map { case (k, v) => k -> v.count() }
     counts.toSeq.sortBy(_._1).foreach { case (k, n) => env.log(s"[excel] $k rows=$n") }
     counts
   }

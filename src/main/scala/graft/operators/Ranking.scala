@@ -129,7 +129,7 @@ object Ranking {
   }
 
   /** One manifest-driven index-ingest tick — the retrieval twin of
-    * [[graft.sources.MetadataMaintenance.tick]]: discover doc files
+    * [[graft.sinks.ManifestTable.adopt]]: discover doc files
     * newly landed under `landingDir` (via the committed
     * [[graft.sources.FileManifest]]), read ONLY those files, fold
     * their documents into the index with [[upsertIndexedDocs]], and

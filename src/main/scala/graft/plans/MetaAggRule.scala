@@ -11,22 +11,25 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{col, lit, max, min, sum, when}
 
 /** Metadata-only aggregates in the PLANNER — the Delta/Iceberg
-  * "COUNT(*) answered from the manifest" ergonomics on plain parquet:
-  * a whole-table `COUNT(*)/COUNT(c)/MIN(c)/MAX(c)` aggregate over a
-  * [[GraftTables]]-registered directory collapses at optimization
-  * time to a [[LocalRelation]] holding the answer computed from the
-  * committed [[graft.sources.FileStats]] epoch — zero data I/O, no
-  * scan stage, independent of table size. The API-level twin is
-  * [[graft.sources.FileStats.tableSummary]]; this rule is what makes
-  * a user's plain `spark.read.parquet(dir).agg(...)` get the same
-  * answer for free.
+  * "COUNT(*) answered from the manifest" ergonomics: a whole-table
+  * `COUNT(*)/COUNT(c)/MIN(c)/MAX(c)` aggregate over a manifest table
+  * (`format("graft")` / catalog reads) or a [[GraftTables]]-registered
+  * plain directory (its adopted manifest, [[graft.sinks.ManifestTable
+  * .adopt]]) collapses at optimization time to a [[LocalRelation]]
+  * holding the answer computed from the manifest's per-file entries —
+  * zero data I/O, no scan stage, independent of table size. The
+  * API-level twin is [[graft.sources.FileStats.tableSummary]]; this
+  * rule is what makes a user's plain `spark.read.parquet(dir).agg(...)`
+  * get the same answer for free.
   *
-  * Exactness is PROVEN per query, never assumed: the rewrite fires
-  * only when the stats epoch's path set covers EXACTLY the scan's own
-  * live file listing (one metadata-scale set comparison — the same
-  * listing the scan would use), each path appears once, and every
-  * consulted PER-FILE summary cell is proven usable (footer-collected
-  * stats may record NULL = "unknown" for writer-omitted columns; one
+  * Exactness is PROVEN per query, never assumed: over a plain
+  * directory the rewrite fires only when the manifest's path set
+  * covers EXACTLY the scan's own live file listing (one
+  * metadata-scale set comparison — the same listing the scan would
+  * use; a file landed after the last adopt routes to the scan), each
+  * path appears once, and every consulted PER-FILE summary cell is
+  * proven usable (footer-collected stats may record NULL = "unknown"
+  * for writer-omitted columns; one
   * unknown cell among known ones would make the null-skipping global
   * fold silently wrong, so any unknown cell — except a min/max NULL
   * from a provably all-NULL file — disqualifies: unknown must scan,
@@ -42,35 +45,14 @@ import org.apache.spark.sql.functions.{col, lit, max, min, sum, when}
   */
 case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  /** Where the metadata answer comes from: a registered plain-parquet
-    * directory's external stats epoch (coverage must be PROVEN
-    * against the scan's live listing), or a manifest-table snapshot
-    * (`format("graft")` / catalog reads) whose manifest IS the
-    * listing — coverage is structural there, no proof query needed. */
-  private sealed trait MetaSource {
-    def statsCols: Seq[String]
-    def stats(): org.apache.spark.sql.DataFrame
-    def covered(): Boolean
-  }
-  private final case class FsSource(rel: HadoopFsRelation,
-                                    entry: GraftTables.Entry) extends MetaSource {
-    def statsCols: Seq[String] = entry.statsCols
-    // one read serves both the coverage proof and the answer query
-    private lazy val frame =
-      graft.sources.FileStats.readStats(spark, entry.statsRoot.get)
-    def stats(): org.apache.spark.sql.DataFrame = frame
-    def covered(): Boolean = {
-      // proof of coverage: stats paths == the scan's OWN live listing,
-      // each exactly once (metadata scale on both sides)
-      val statPaths = frame.select(col("path")).collect()
-        .map(r => GraftTables.canon(r.getString(0)))
-      val live = rel.location.inputFiles.map(p => GraftTables.canon(p))
-      statPaths.length == statPaths.distinct.length &&
-        statPaths.toSet == live.toSet
-    }
-  }
-  private final case class ManifestSource(root: String, version: Long)
-    extends MetaSource {
+  /** Where the metadata answer comes from: one manifest-table version.
+    * Read as a manifest-table snapshot (`format("graft")` / catalog
+    * reads) the manifest IS the listing — coverage is structural, no
+    * proof query needed. Read as a registered plain directory
+    * (`listing` = the scan's own live files), coverage must be PROVEN
+    * against that listing. */
+  private final class MetaSource(val root: String, version: Long,
+                                 listing: Option[Seq[String]] = None) {
     private lazy val raw =
       graft.sinks.ManifestTable.manifest(spark, root, version)
     // manifest stat triplets are keyed by PHYSICAL column name
@@ -112,11 +94,17 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     }
     def stats(): org.apache.spark.sql.DataFrame = frame
-    // the manifest IS the listing — but PENDING equality deletes live
-    // outside its row counts (they resolve at scan time), so a version
-    // carrying them must route to the scan, never answer from stats
+    // PENDING equality deletes live outside the manifest's row counts
+    // (they resolve at scan time), so a version carrying them must
+    // route to the scan, never answer from stats; a plain scan also
+    // needs its live listing == the manifest's paths, each once
     def covered(): Boolean =
-      !graft.sinks.ManifestTable.hasPendingEq(spark, root, version)
+      !graft.sinks.ManifestTable.hasPendingEq(spark, root, version) &&
+        listing.forall { live =>
+          val paths = graft.sinks.ManifestTable.filesAt(spark, root, version)
+          paths.length == paths.distinct.length &&
+            paths.toSet == live.map(GraftTables.canon).toSet
+        }
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -135,17 +123,17 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def bareRelation(p: LogicalPlan): Option[MetaSource] = p match {
     case l: LogicalRelation => l.relation match {
       case r: HadoopFsRelation if !r.location.isInstanceOf[GraftPrunedFileIndex] =>
-        GraftTables.lookup(r.location.rootPaths) match {
-          case Some(entry) if entry.statsRoot.nonEmpty =>
-            Some(FsSource(r, entry))
-          case _ => None
+        GraftTables.lookup(r.location.rootPaths).flatMap { entry =>
+          val v = graft.sinks.ManifestTable.latestVersion(spark, entry.root)
+          if (v < 0) None
+          else Some(new MetaSource(entry.root, v, Some(r.location.inputFiles.toSeq)))
         }
       case _ => None
     }
     case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
       d.table match {
         case t: graft.sources.v2.GraftTable =>
-          t.manifestInfo.map { case (root, v) => ManifestSource(root, v) }
+          t.manifestInfo.map { case (root, v) => new MetaSource(root, v) }
         case _ => None
       }
     case Project(exprs, child) if exprs.forall(_.isInstanceOf[AttributeReference]) =>
@@ -249,7 +237,7 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
         Seq(InternalRow.fromSeq(values)), isStreaming = false))
     } catch {
       case e: Exception =>
-        logWarning(s"graft metadata aggregate skipped for $source: $e")
+        logWarning(s"graft metadata aggregate skipped for ${source.root}: $e")
         None
     } finally StatsPruneRule.inMetadataQuery.set(false)
   }

@@ -10,65 +10,47 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, 
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
-/** Planner-integrated data skipping over the committed
-  * [[graft.sources.FileStats]] / [[graft.sources.FileBloomIndex]]
-  * epochs — the Delta/Iceberg ergonomics on plain parquet: after a
-  * one-time [[GraftTables.register]] of a directory's metadata roots,
-  * a plain `spark.read.parquet(dir).filter(...)` prunes files at
-  * PLANNING time with no API opt-in. The read paths
-  * (`FileStats.readRange`, `FileBloomIndex.readKeys`) stay available
-  * for explicit use; this rule is what makes every OTHER query — the
-  * ones a user writes without thinking about metadata — benefit.
+/** Planner-integrated data skipping for plain parquet directories —
+  * the Delta/Iceberg ergonomics: after [[graft.sinks.ManifestTable
+  * .adopt]] mirrors a directory's files in a manifest table and a
+  * one-time [[GraftTables.register]] names it, a plain
+  * `spark.read.parquet(dir).filter(...)` prunes files at PLANNING time
+  * with no API opt-in, from the manifest's per-file envelopes and the
+  * table's bloom indexes ([[graft.sinks.ManifestTable.buildBloom]]).
   *
   * Soundness is exclusion-by-proof over the scan's OWN listing: a
-  * file is dropped only when a committed metadata row for that exact
-  * file proves no row can match (stats envelope misses the conjunct's
+  * file is dropped only when a manifest entry for that exact file
+  * proves no row can match (stats envelope misses the conjunct's
   * range, or the bloom filter denies every probed key — blooms have
-  * no false negatives). Files with no metadata row (not yet indexed)
-  * and stale rows for deleted files (they exclude nothing from a
+  * no false negatives). Files landed after the last adopt (no entry)
+  * and entries for since-deleted files (they exclude nothing from a
   * listing they don't appear in) both degrade to "keep" — the rule is
-  * correct under ANY metadata staleness, and metadata freshness only
-  * governs how much is pruned. Spark still applies the full predicate
-  * to surviving rows, so a kept-but-unmatching file costs I/O, never
-  * wrong rows.
+  * correct under ANY staleness, and adopting only governs how much is
+  * pruned. Spark still applies the full predicate to surviving rows,
+  * so a kept-but-unmatching file costs I/O, never wrong rows.
   *
-  * Scale shape: the planning-time cost is two metadata-scale queries
-  * (the |files|-row stats/bloom epochs) per registered scan — the
-  * same listing-order cost Delta pays against its log, independent of
-  * data volume. The pruned index DELEGATES to the original file
-  * index, so directory-partition pruning, schema, and locality
-  * compose unchanged.
+  * Scale shape: the planning-time cost is metadata-scale queries over
+  * the |files|-row manifest (and bloom index) per registered scan —
+  * the same listing-order cost Delta pays against its log,
+  * independent of data volume. The pruned index DELEGATES to the
+  * original file index, so directory-partition pruning, schema, and
+  * locality compose unchanged.
   */
 object GraftTables {
 
-  /** Metadata registration for one parquet directory. */
-  final case class Entry(dataDir: String,
-                         statsRoot: Option[String], statsCols: Seq[String],
-                         bloomRoot: Option[String], bloomKey: Option[String])
+  /** A plain parquet directory and the manifest table at `root` that
+    * mirrors it ([[graft.sinks.ManifestTable.adopt]]). */
+  final case class Entry(dataDir: String, root: String)
 
   private val tables =
     new java.util.concurrent.ConcurrentHashMap[String, Entry]()
 
   private[plans] def canon(p: String): String = new Path(p).toUri.getPath
 
-  /** Register `dataDir`'s committed metadata roots. Idempotent;
-    * re-registering replaces the entry. `statsCols` must name columns
-    * tracked by the stats table at `statsRoot`; `bloomKey` the column
-    * indexed at `bloomRoot`. */
-  def register(dataDir: String,
-               statsRoot: Option[String] = None,
-               statsCols: Seq[String] = Nil,
-               bloomRoot: Option[String] = None,
-               bloomKey: Option[String] = None): Unit = {
-    require(statsRoot.isEmpty == statsCols.isEmpty,
-      "statsRoot and statsCols must be given together")
-    require(bloomRoot.isEmpty == bloomKey.isEmpty,
-      "bloomRoot and bloomKey must be given together")
-    require(statsRoot.nonEmpty || bloomRoot.nonEmpty,
-      "register at least one metadata root")
-    tables.put(canon(dataDir),
-      Entry(dataDir, statsRoot, statsCols, bloomRoot, bloomKey)): Unit
-  }
+  /** Register `dataDir`'s adopted manifest table. Idempotent;
+    * re-registering replaces the entry. */
+  def register(dataDir: String, root: String): Unit =
+    tables.put(canon(dataDir), Entry(dataDir, root)): Unit
 
   def unregister(dataDir: String): Unit = tables.remove(canon(dataDir)): Unit
   def clear(): Unit = { tables.clear(); graft.util.EpochCache.clear() }
@@ -114,7 +96,7 @@ final class GraftPrunedFileIndex(delegate: FileIndex,
 }
 
 /** The optimizer rule: for a Filter directly over a registered
-  * parquet scan, consult the committed stats/bloom epochs and replace
+  * parquet scan, consult its manifest and bloom indexes and replace
   * the relation's file index with a pruned delegate. Injected by
   * [[graft.GraftExtensions]]; runs inside the operator-optimization
   * fixed point, so the marker class above keeps it one-shot per scan
@@ -180,23 +162,23 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
 
   /** Per-column closed bounds (lo, hi) merged from `cond`'s conjuncts
     * (strict bounds relax to closed — sound, marginally less tight),
-    * plus the equality probe keys for `bloomKey`'s column. */
-  private def extractBounds(cond: Expression, bloomKey: Option[String])
-      : (Map[String, Column], Map[String, Column], List[Column]) = {
+    * plus per-column equality probe keys (the bloom probes). */
+  private def extractBounds(cond: Expression)
+      : (Map[String, Column], Map[String, Column], Map[String, List[Column]]) = {
     val lows = scala.collection.mutable.Map.empty[String, List[Column]]
     val highs = scala.collection.mutable.Map.empty[String, List[Column]]
-    var keys = List.empty[Column]
+    val keys = scala.collection.mutable.Map.empty[String, List[Column]]
     def addLo(c: String, v: Column): Unit =
       lows(c) = v :: lows.getOrElse(c, Nil)
     def addHi(c: String, v: Column): Unit =
       highs(c) = v :: highs.getOrElse(c, Nil)
+    def addKeys(c: String, vs: List[Column]): Unit =
+      keys(c) = vs ::: keys.getOrElse(c, Nil)
     conjuncts(cond).foreach {
       case EqualTo(Attr(a), v: Literal) =>
-        addLo(a, scalaLit(v)); addHi(a, scalaLit(v))
-        if (bloomKey.contains(a)) keys ::= scalaLit(v)
+        addLo(a, scalaLit(v)); addHi(a, scalaLit(v)); addKeys(a, List(scalaLit(v)))
       case EqualTo(v: Literal, Attr(a)) =>
-        addLo(a, scalaLit(v)); addHi(a, scalaLit(v))
-        if (bloomKey.contains(a)) keys ::= scalaLit(v)
+        addLo(a, scalaLit(v)); addHi(a, scalaLit(v)); addKeys(a, List(scalaLit(v)))
       case GreaterThan(Attr(a), v: Literal) => addLo(a, scalaLit(v))
       case GreaterThanOrEqual(Attr(a), v: Literal) => addLo(a, scalaLit(v))
       case LessThan(Attr(a), v: Literal) => addHi(a, scalaLit(v))
@@ -206,19 +188,17 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
       case LessThan(v: Literal, Attr(a)) => addLo(a, scalaLit(v))
       case LessThanOrEqual(v: Literal, Attr(a)) => addLo(a, scalaLit(v))
       case In(Attr(a), vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        if (bloomKey.contains(a))
-          keys :::= vs.map(v => scalaLit(v.asInstanceOf[Literal])).toList
+        addKeys(a, vs.map(v => scalaLit(v.asInstanceOf[Literal])).toList)
       case InSet(ar: AttributeReference, vs) => // post-optimizer shape only
-        if (bloomKey.contains(ar.name))
-          keys :::= vs.toList.map(v => lit(
-            CatalystTypeConverters.convertToScala(v, ar.dataType)))
+        addKeys(ar.name, vs.toList.map(v => lit(
+          CatalystTypeConverters.convertToScala(v, ar.dataType))))
       case _ => () // unsupported conjunct: contributes no proof
     }
     (lows.view.mapValues(_.reduce((x, y) =>
         org.apache.spark.sql.functions.greatest(x, y))).toMap,
       highs.view.mapValues(_.reduce((x, y) =>
         org.apache.spark.sql.functions.least(x, y))).toMap,
-      keys)
+      keys.toMap)
   }
 
   /** Envelope proofs against an EXPLICIT stats frame (FileStats shape:
@@ -248,7 +228,7 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
         try Literal.create(e.eval(null), e.dataType)
         catch { case _: RuntimeException => e }
     }
-    val (lows, highs, _) = extractBounds(folded, None)
+    val (lows, highs, _) = extractBounds(folded)
     val ranges = statsCols.flatMap { c =>
       val lo = lows.get(c)
       val hi = highs.get(c)
@@ -394,16 +374,17 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
   }
 
   /** VERSION-KEYED proofs: the planning-time metadata queries
-    * (two collects per registered scan) are re-issued for every plan
-    * of a hot table, so identical proofs memoize. The key carries the
-    * metadata epochs' CURRENT VERSIONS (one cheap FS resolution each,
-    * no Spark job) plus the canonicalized predicate — a commit bumps
-    * the version, which changes the key, so staleness is structural:
-    * a cached entry can only ever be served for the exact epoch it
-    * was proven against (Delta caches its snapshot state the same
-    * way). Entries live in [[graft.util.EpochCache]]; an unresolvable
-    * predicate simply skips the cache. The second identical query on
-    * an unchanged table issues ZERO metadata jobs (PlanSpec-counted). */
+    * (collects per registered scan) are re-issued for every plan of a
+    * hot table, so identical proofs memoize. The key carries the
+    * CURRENT VERSION of the metadata proven against (the manifest, or
+    * the bloom index — one cheap FS resolution each, no Spark job)
+    * plus the canonicalized predicate — a commit bumps the version,
+    * which changes the key, so staleness is structural: a cached
+    * entry can only ever be served for the exact epoch it was proven
+    * against (Delta caches its snapshot state the same way). Entries
+    * live in [[graft.util.EpochCache]]; an unresolvable predicate
+    * simply skips the cache. The second identical query on an
+    * unchanged table issues ZERO metadata jobs (PlanSpec-counted). */
   private val Proofs =
     new graft.util.EpochCache.Kind[Set[String]](s => 1024L + 128L * s.size)
 
@@ -412,58 +393,69 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     * hit must leave this untouched. */
   private[graft] val proofComputations = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def proofKey(spark: SparkSession, cond: Expression,
-                       entry: GraftTables.Entry): Option[String] =
-    try {
-      val sv = entry.statsRoot.map(r =>
-        graft.sinks.VersionedTable.latestVersion(spark, r)).getOrElse(-1L)
-      val bv = entry.bloomRoot.map(r =>
-        graft.sinks.VersionedTable.latestVersion(spark, r)).getOrElse(-1L)
-      // exprIds are fresh per reader instantiation — key on the
-      // id-stripped canonical form so identical predicates from
-      // separate reads of the same table hit the same entry
-      Some(s"${entry.dataDir}|${entry.statsRoot}|$sv|${entry.bloomRoot}|$bv|" +
-        s"${entry.statsCols.mkString(",")}|${entry.bloomKey}|" +
+  private def proven(metaRoot: String, version: Long, cond: Expression)
+                    (compute: => Set[String]): Set[String] = {
+    // exprIds are fresh per reader instantiation — key on the
+    // id-stripped canonical form so identical predicates from
+    // separate reads of the same table hit the same entry
+    val key =
+      try Some(s"$metaRoot|$version|" +
         cond.canonicalized.toString.replaceAll("#\\d+", ""))
-    } catch { case _: Exception => None }
-
-  /** Canonical paths of files the metadata PROVES cannot match
-    * `cond`. Any failure (mis-registered roots, schema drift) logs
-    * and excludes nothing — pruning is an optimization, never a
-    * correctness dependency. */
-  private[graft] def provablyExcluded(spark: SparkSession, cond: Expression,
-                                      entry: GraftTables.Entry): Set[String] = {
-    val key = proofKey(spark, cond, entry)
+      catch { case _: Exception => None }
+    def run(): Set[String] = { proofComputations.incrementAndGet(): Unit; compute }
     key match {
-      case Some(k) => graft.util.EpochCache.getOrElseUpdate(Proofs, k)(
-        provablyExcludedUncached(spark, cond, entry))
-      case None => provablyExcludedUncached(spark, cond, entry)
+      case Some(k) => graft.util.EpochCache.getOrElseUpdate(Proofs, k)(run())
+      case None => run()
     }
   }
 
-  private def provablyExcludedUncached(spark: SparkSession, cond: Expression,
-                                       entry: GraftTables.Entry): Set[String] = {
-    proofComputations.incrementAndGet(): Unit
+  /** Canonical paths of indexed files whose bloom filter over column
+    * `c` (the index at `bloomRoot`) denies EVERY key `cond` probes on
+    * `c` — empty when `cond` probes no key there. Rows for files
+    * outside the scan exclude nothing from a listing they don't
+    * appear in. */
+  private[graft] def excludedByBloom(spark: SparkSession, cond: Expression,
+                                     c: String, bloomRoot: String): Set[String] = {
+    val keys = extractBounds(cond)._3.getOrElse(c, Nil)
+    if (keys.isEmpty) Set.empty
+    else proven(bloomRoot,
+        graft.sinks.VersionedTable.latestVersion(spark, bloomRoot), cond) {
+      val idx = graft.sources.FileBloomIndex.read(spark, bloomRoot)
+      val all = idx.select("path").collect()
+        .map(r => GraftTables.canon(r.getString(0))).toSet
+      val kept = graft.sources.FileBloomIndex.candidateFiles(idx, keys)
+        .collect().map(r => GraftTables.canon(r.getString(0))).toSet
+      all -- kept
+    }
+  }
+
+  /** Canonical paths of files the registered directory's manifest
+    * PROVES cannot match `cond`: envelope proofs over its entries,
+    * plus bloom proofs from each of its valid indexes on a probed
+    * column. Any failure (a missing manifest, schema drift) logs and
+    * excludes nothing — pruning is an optimization, never a
+    * correctness dependency. */
+  private[graft] def provablyExcluded(spark: SparkSession, cond: Expression,
+                                      entry: GraftTables.Entry): Set[String] = {
+    import graft.sinks.ManifestTable
     StatsPruneRule.inMetadataQuery.set(true)
     try {
-      var excluded = Set.empty[String]
-      // stats-envelope proofs: stats-covered files NOT in the sound
-      // candidate set provably miss the range conjunction
-      for (root <- entry.statsRoot) {
-        excluded ++= excludedByEnvelopes(spark, cond,
-          graft.sources.FileStats.readStats(spark, root), entry.statsCols)
+      val v = ManifestTable.latestVersion(spark, entry.root)
+      if (v < 0) Set.empty
+      else {
+        val envelopes = proven(entry.root, v, cond) {
+          excludedByEnvelopes(spark, cond, ManifestTable.manifest(spark, entry.root, v),
+            ManifestTable.statsCols(spark, entry.root, v))
+        }
+        val probed = extractBounds(cond)._3.keySet
+        val blooms =
+          if (probed.isEmpty) Nil
+          else ManifestTable.bloomsValid(spark, entry.root,
+            ManifestTable.tableSchema(spark, entry.root, v))
+            .filter { case (c, _) => probed.contains(c) }
+        blooms.foldLeft(envelopes) { case (ex, (c, br)) =>
+          ex ++ excludedByBloom(spark, cond, c, br) }
       }
-      // bloom proofs: indexed files whose bloom denies EVERY probe key
-      val (_, _, keys) = extractBounds(cond, entry.bloomKey)
-      for (root <- entry.bloomRoot if keys.nonEmpty) {
-        val idx = graft.sources.FileBloomIndex.read(spark, root)
-        val all = idx.select("path").collect()
-          .map(r => GraftTables.canon(r.getString(0))).toSet
-        val kept = graft.sources.FileBloomIndex.candidateFiles(idx, keys)
-          .collect().map(r => GraftTables.canon(r.getString(0))).toSet
-        excluded ++= all -- kept
-      }
-      excluded
     } catch {
       case e: Exception =>
         logWarning(s"graft stats pruning skipped for ${entry.dataDir}: $e")

@@ -514,53 +514,61 @@ object Relational extends QueryModule {
       .orderBy(col("purchase_id"))
   }
 
-  /** Data-skipping scan through file-level stats
-    * ([[graft.sources.FileStats]]): events are laid out range-
-    * partitioned by day (the [[graft.sinks.ParquetSink]] layout-writer
-    * shape), per-file min/max stats are collected in one grouped scan,
-    * and a 4-of-30-day range query reads ONLY the files whose envelope
-    * intersects the range — at 100 TB the open-file count, not just
-    * the row filter, is what drops. Pruning is sound (a file is
-    * dropped only when every row provably misses), so the oracle is
-    * the plain row filter over the raw table; OperatorsSpec asserts
-    * the skip actually happens. */
+  /** Adopt a plain parquet directory into a manifest table at `root`
+    * ([[graft.sinks.ManifestTable.adopt]] — per-file footer stats over
+    * `statsCols`, by reference) and register it, so plain reads of the
+    * directory prune at planning time. The layouts below re-land under
+    * fresh file names per invocation; each adopt drops the dead
+    * entries and describes the new files in one commit. */
+  private def adoptAndRegister(spark: SparkSession, lay: String, root: String,
+                               statsCols: Seq[String]): Unit = {
+    graft.sinks.ManifestTable.adopt(spark, lay, root, statsCols): Unit
+    graft.plans.GraftTables.register(lay, root)
+  }
+
+  /** Data-skipping scan through file-level stats: events are laid out
+    * range-partitioned by day (the [[graft.sinks.ParquetSink]]
+    * layout-writer shape), the directory is adopted (per-file min/max
+    * from parquet footers), and a 4-of-30-day range query reads ONLY
+    * the files whose envelope intersects the range — at 100 TB the
+    * open-file count, not just the row filter, is what drops. Pruning
+    * is sound (a file is dropped only when every row provably misses),
+    * so the oracle is the plain row filter over the raw table;
+    * OperatorsSpec asserts the skip actually happens. */
   def qPrunedScan(spark: SparkSession, dir: String): DataFrame = {
     val lay = graft.util.Scratch.dir("pruned_scan")
     Tables.events(spark, dir)
       .withColumn("d", to_date(col("ts")))
       .repartitionByRange(8, col("d"))
       .write.mode("overwrite").parquet(lay)
-    val stats = graft.sources.FileStats.collect(spark, lay, Seq("d"))
-    graft.sources.FileStats.readRange(spark, stats, "d",
+    adoptAndRegister(spark, lay, graft.util.Scratch.dir("pruned_scan_meta"),
+      Seq("d"))
+    spark.read.parquet(lay)
+      .filter(col("d").between(
         lit(java.sql.Date.valueOf("2024-01-10")),
-        lit(java.sql.Date.valueOf("2024-01-13")))
+        lit(java.sql.Date.valueOf("2024-01-13"))))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .orderBy(col("event_type"))
   }
 
   /** PLANNER-integrated data skipping (plans.StatsPruneRule): same
-    * layout and stats as [[qPrunedScan]], but the query itself is a
-    * PLAIN `spark.read.parquet(dir).filter(...)` — no readRange
-    * opt-in. The one-time [[graft.plans.GraftTables.register]] call
+    * layout as [[qPrunedScan]], a later window. The query itself is a
+    * PLAIN `spark.read.parquet(dir).filter(...)`; the adopt + register
     * is the table's metadata registration (the Delta/Iceberg
-    * ergonomics); the injected optimizer rule consults the committed
-    * stats epoch at planning time and swaps in a pruned file index.
-    * The oracle is the plain row filter — pruning must be invisible
-    * in results; PlanSpec asserts the file skip actually happens. */
+    * ergonomics), and the injected optimizer rule consults the
+    * adopted manifest at planning time and swaps in a pruned file
+    * index. The oracle is the plain row filter — pruning must be
+    * invisible in results; PlanSpec asserts the file skip actually
+    * happens. */
   def qPlannerPruned(spark: SparkSession, dir: String): DataFrame = {
     val lay = graft.util.Scratch.dir("planner_pruned")
     Tables.events(spark, dir)
       .withColumn("d", to_date(col("ts")))
       .repartitionByRange(8, col("d"))
       .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("planner_pruned_meta") + "/stats"
-    // full rebuild — the layout re-lands under fresh names per
-    // invocation, so the epoch must REPLACE (the q_bloom_lookup lesson)
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay, Seq("d")), root)
-    graft.plans.GraftTables.register(lay,
-      statsRoot = Some(root), statsCols = Seq("d"))
+    adoptAndRegister(spark, lay, graft.util.Scratch.dir("planner_pruned_meta"),
+      Seq("d"))
     spark.read.parquet(lay)
       .filter(col("d").between(
         lit(java.sql.Date.valueOf("2024-01-20")),
@@ -573,8 +581,8 @@ object Relational extends QueryModule {
   /** Planner-integrated pruning over an N-COLUMN Hilbert-clustered
     * layout ([[graft.sinks.ParquetSink.writeZOrdered]]): the layout
     * writer bounds every file's envelope on ALL THREE clustering
-    * columns, so a 3-D box predicate through the registered stats
-    * epoch prunes files on each conjunct at once — the end-to-end
+    * columns, so a 3-D box predicate through the adopted manifest
+    * prunes files on each conjunct at once — the end-to-end
     * composition of the curve layout, footerable per-file stats, and
     * the optimizer rule, with a plain `spark.read.parquet(...).filter`
     * as the whole user surface. Oracle: the identical row filter in
@@ -590,14 +598,8 @@ object Relational extends QueryModule {
       .select("event_id", "event_type", "user_id", "t", "cents", "value")
     graft.sinks.ParquetSink.writeZOrdered(
       ev, lay, Seq("t", "user_id", "cents"), numFiles = 24, bits = 0)
-    val root = graft.util.Scratch.dir("planner_hilbert_meta") + "/stats"
-    // full rebuild — the layout re-lands under fresh file names per
-    // invocation, so the stats epoch must REPLACE, never merge
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay,
-        Seq("t", "user_id", "cents")), root)
-    graft.plans.GraftTables.register(lay,
-      statsRoot = Some(root), statsCols = Seq("t", "user_id", "cents"))
+    adoptAndRegister(spark, lay, graft.util.Scratch.dir("planner_hilbert_meta"),
+      Seq("t", "user_id", "cents"))
     // the box must be non-empty at EVERY sf: the feed starts 2024-01-01
     // at all scales, and user ids start at 0 (sf0.001 has only 0..14),
     // so t anchors at the feed's start and user_id is an edge probe
@@ -639,24 +641,22 @@ object Relational extends QueryModule {
 
   /** Bloom-indexed point lookup (sources.FileBloomIndex): the corpus is
     * laid out hash-partitioned on doc_id (the layout where min/max
-    * envelopes prune NOTHING — every file spans the id range), a
-    * per-file Bloom index is built and committed, and the probe opens
-    * only files whose bloom admits a key. The oracle is the plain
-    * row filter — pruning must be invisible in results. */
+    * envelopes prune NOTHING — every file spans the id range), the
+    * directory is adopted and a per-file Bloom index built beside its
+    * manifest ([[graft.sinks.ManifestTable.buildBloom]] — only the
+    * files it lacks), and a plain IN probe opens only files whose
+    * bloom admits a key. The oracle is the plain row filter — pruning
+    * must be invisible in results. */
   def qBloomLookup(spark: SparkSession, dir: String): DataFrame = {
     val lay = graft.util.Scratch.dir("bloom_lookup")
     Tables.documents(spark, dir)
       .repartition(8, col("doc_id"))
       .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("bloom_lookup_idx") + "/index"
-    // commitFull, not a merge: the layout above re-lands under fresh
-    // part names every invocation, so a merged epoch would keep rows
-    // for the previous pass's deleted files and readKeys would fail
-    graft.sources.FileBloomIndex.commitFull(
-      graft.sources.FileBloomIndex.build(spark, lay, "doc_id"), root)
-    graft.sources.FileBloomIndex.readKeys(spark,
-        graft.sources.FileBloomIndex.read(spark, root), "doc_id",
-        BloomLookupKeys.map(lit(_)))
+    val root = graft.util.Scratch.dir("bloom_lookup_meta")
+    adoptAndRegister(spark, lay, root, Seq("doc_id"))
+    graft.sinks.ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+    spark.read.parquet(lay)
+      .filter(col("doc_id").isin(BloomLookupKeys: _*))
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy(col("doc_id"))
   }
@@ -801,44 +801,34 @@ object Relational extends QueryModule {
 
   /** Metadata-only table aggregates ([[graft.sources.FileStats
     * .tableSummary]]): COUNT(*)/MIN/MAX/null-count answered from the
-    * committed |files|-row stats epoch with ZERO data I/O — the
+    * adopted directory's |files|-row manifest with ZERO data I/O — the
     * Iceberg/Delta manifest-count ergonomics. The oracle computes the
     * same aggregates the expensive way (a full scan), pinning
-    * exactness of the metadata path. Stats epoch REPLACED per
-    * invocation (the layout re-lands under fresh names — the
-    * q_bloom_lookup lesson). */
+    * exactness of the metadata path. */
   def qMetaSummary(spark: SparkSession, dir: String): DataFrame = {
     val lay = graft.util.Scratch.dir("meta_summary")
     Tables.lineitem(spark, dir).repartition(8)
       .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("meta_summary_meta") + "/stats"
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay,
-        Seq("l_orderkey", "l_quantity")), root)
-    graft.sources.FileStats.tableSummary(
-      graft.sources.FileStats.readStats(spark, root),
-      Seq("l_orderkey", "l_quantity"))
+    val root = graft.util.Scratch.dir("meta_summary_meta")
+    val cols = Seq("l_orderkey", "l_quantity")
+    graft.sinks.ManifestTable.adopt(spark, lay, root, cols): Unit
+    graft.sources.FileStats.tableSummary(graft.sinks.ManifestTable.manifest(
+      spark, root, graft.sinks.ManifestTable.latestVersion(spark, root)), cols)
   }
 
   /** PLANNER-integrated metadata aggregates (plans.MetaAggRule): the
     * query is a plain `spark.read.parquet(dir).agg(count/min/max)` —
     * no tableSummary opt-in — and the injected rule collapses it to
-    * the committed stats epoch's answer at optimization time (zero
-    * data I/O; PlanSpec asserts the scan is gone). The oracle computes
-    * the same aggregates the expensive way; the rewrite fires only on
-    * proof that the stats cover the scan's exact live file set. */
+    * the adopted manifest's answer at optimization time (zero data
+    * I/O; PlanSpec asserts the scan is gone). The oracle computes the
+    * same aggregates the expensive way; the rewrite fires only on
+    * proof that the manifest covers the scan's exact live file set. */
   def qMetaCount(spark: SparkSession, dir: String): DataFrame = {
     val lay = graft.util.Scratch.dir("meta_count")
     Tables.lineitem(spark, dir).repartition(8)
       .write.mode("overwrite").parquet(lay)
-    val root = graft.util.Scratch.dir("meta_count_meta") + "/stats"
-    // full rebuild — the layout re-lands under fresh names per
-    // invocation, so the stats epoch must REPLACE, never merge
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, lay,
-        Seq("l_orderkey", "l_quantity")), root)
-    graft.plans.GraftTables.register(lay,
-      statsRoot = Some(root), statsCols = Seq("l_orderkey", "l_quantity"))
+    adoptAndRegister(spark, lay, graft.util.Scratch.dir("meta_count_meta"),
+      Seq("l_orderkey", "l_quantity"))
     spark.read.parquet(lay).agg(
       count(lit(1)).as("n_rows"),
       count(col("l_quantity")).as("n_qty"),
@@ -852,10 +842,9 @@ object Relational extends QueryModule {
     * .GraftTableProvider]]): a versioned table written through the
     * epoch commit protocol, a row-level DELETE folded in, then read
     * back with `spark.read.format("graft")` — the scan resolves the
-    * current epoch snapshot and prunes files against the committed
-    * stats epoch INSIDE the source (no session extension, no
-    * registration). Oracle: the delete + filter replayed in SQL —
-    * epoch resolution and pruning must be invisible in results. */
+    * current epoch snapshot (no session extension, no registration).
+    * Oracle: the delete + filter replayed in SQL — epoch resolution
+    * must be invisible in results. */
   def qGraftScan(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.util.Scratch.dir("graft_dsv2") + "/docs"
     graft.sinks.VersionedTable.write(
@@ -863,14 +852,7 @@ object Relational extends QueryModule {
     graft.sinks.VersionedTable.deleteWhere(spark, root,
       col("lang") === lit("en"))
     graft.sinks.VersionedTable.vacuum(spark, root, keep = 2)
-    val statsRoot = graft.util.Scratch.dir("graft_dsv2_meta") + "/stats"
-    val v = graft.sinks.VersionedTable.latestVersion(spark, root)
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, s"$root/epoch=$v",
-        Seq("doc_id")), statsRoot)
-    spark.read.format("graft")
-      .option("statsRoot", statsRoot).option("statsCols", "doc_id")
-      .load(root)
+    spark.read.format("graft").load(root)
       .filter(col("doc_id") < 200)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))

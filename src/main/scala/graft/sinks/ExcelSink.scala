@@ -19,7 +19,10 @@ import org.apache.spark.sql.DataFrame
   */
 object ExcelSink {
 
-  def write(tables: Map[String, DataFrame], outputPath: String): Unit = {
+  /** Write one sheet per table; returns each sheet's data-row count,
+    * keyed by table name (the rows were collected for the sheet
+    * anyway, so callers never re-run a table to count it). */
+  def write(tables: Map[String, DataFrame], outputPath: String): Map[String, Long] = {
     val names = tables.keys.toSeq.sorted
     val sheets = names.zipWithIndex.map { case (name, i) =>
       val df = tables(name)
@@ -38,6 +41,7 @@ object ExcelSink {
       put(zip, "xl/styles.xml", stylesXml)
       sheets.foreach(s => put(zip, s"xl/worksheets/sheet${s.index}.xml", sheetXml(s)))
     } finally zip.close()
+    sheets.map(s => s.name -> s.rows.length.toLong).toMap
   }
 
   private case class SheetData(name: String, index: Int, cols: Seq[String],

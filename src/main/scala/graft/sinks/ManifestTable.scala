@@ -225,9 +225,12 @@ object ManifestTable {
     * `seq` (a create's landing rows) coalesced to 0, which also makes
     * `seq` the one non-nullable column. Best-effort and conservative:
     * any missing column, over-bound size, or conversion surprise just
-    * skips the prime. */
+    * skips the prime. `key` is the epoch key the commit already
+    * computed for its schema prime — one stat + list per commit, not
+    * two. */
   private def primeManifestCaches(spark: SparkSession, root: String,
-                                  version: Long, rows: DataFrame): Unit =
+                                  version: Long, rows: DataFrame,
+                                  key: Option[VersionedTable.EpochKey]): Unit =
     try {
       val plan = rows.queryExecution.optimizedPlan
       LocalEpoch.localRows(plan, ManifestFullMaxRows).foreach { irows =>
@@ -244,7 +247,7 @@ object ManifestTable {
                 r.toSeq.updated(seqIdx, 0L))
             else r
           }
-          manifestKey(spark, root, version).foreach(
+          key.foreach(
             EpochCache.put(Manifests, _, Collected(sch, ext, full = true)))
         }
       }
@@ -909,12 +912,26 @@ object ManifestTable {
           .write.partitionBy("gb").parquet(dir)
       case None => df.write.parquet(dir)
     }
-    val sizes = graft.sources.FileManifest.listFiles(spark, dir)
-      .select(col("path"), col("size"))
-    if (sizes.isEmpty) // an empty frame writes no data files
+    val listed = graft.sources.FileManifest.listFiles(spark, dir)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    describeFiles(spark, listed, df.schema, stats, bucket.nonEmpty,
+      () => spark.read.parquet(dir))
+  }
+
+  /** Manifest rows (path, size, row_count, envelopes, dv_path, dv_rows,
+    * seq = NULL, bucket) for already-written parquet files given as
+    * (canonical path, size) — the landing-row assembly shared by
+    * [[landFiles]] (files it just wrote) and [[adopt]] (files a plain
+    * directory already holds). `scan` reads exactly those files; it
+    * serves the exact-stats fallback only. */
+  private def describeFiles(spark: SparkSession, files: Seq[(String, Long)],
+                            dataSchema: StructType, stats: Seq[String],
+                            bucketed: Boolean, scan: () => DataFrame)
+      : DataFrame = {
+    if (files.isEmpty) // an empty frame writes no data files
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
-        manifestSchema(df.schema, stats))
+        manifestSchema(dataSchema, stats))
     // stats come from parquet FOOTERS when every tracked column's type
     // records them — |files| metadata reads, NOT a second scan of the
     // data just written (the landing was already one full write; at
@@ -924,7 +941,7 @@ object ManifestTable {
     // can't-prove-anything (pruning keeps, touched-file search
     // rewrites) — sound either way.
     val footersOk = stats.nonEmpty &&
-      stats.forall(c => graft.sources.FooterStats.supported(df.schema(c).dataType))
+      stats.forall(c => graft.sources.FooterStats.supported(dataSchema(c).dataType))
     // DRIVER-SIDE landing-row assembly for small landings: under the
     // (conf'able) file-count bound the footer reads are a few KB each —
     // far below the scheduling cost of the footer job + the broadcast
@@ -937,27 +954,22 @@ object ManifestTable {
     // thousands of files — the distributed path is untouched.
     val localFooterMax = spark.conf.getOption(
       "spark.graft.landing.localFooterMaxFiles").map(_.toInt).getOrElse(64)
-    // ONE collect of (path, size) serves both footer branches (the
-    // listing is a LocalRelation, but collecting it three times was
-    // still redundant work per commit)
-    lazy val sizeByPath: Map[String, Long] =
-      sizes.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val sizeByPath: Map[String, Long] = files.toMap
     if (footersOk) {
-      val files = sizeByPath.keys.toSeq.sorted
-      if (files.size <= localFooterMax) {
-        val colTypes = stats.map(c => c -> df.schema(c).dataType)
+      val paths = sizeByPath.keys.toSeq.sorted
+      if (paths.size <= localFooterMax) {
+        val colTypes = stats.map(c => c -> dataSchema(c).dataType)
         val hconf = spark.sparkContext.hadoopConfiguration
-        val bucketOf: String => Any = bucket match {
-          case None => _ => null
-          case Some(_) => p =>
+        val bucketOf: String => Any =
+          if (!bucketed) _ => null
+          else p =>
             "/gb=(\\d+)/[^/]+$".r.findFirstMatchIn(p)
               .map(m => java.lang.Long.valueOf(m.group(1).toLong))
               .getOrElse(sys.error(
                 "bucketed landing produced a file outside a gb=N " +
                   s"directory: $p"))
-        }
         val outRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        files.foreach { p =>
+        paths.foreach { p =>
           val fr = graft.sources.FooterStats.fileRow(p, hconf, colTypes)
           if (fr.getLong(1) > 0L)
             outRows.add(org.apache.spark.sql.Row.fromSeq(
@@ -965,17 +977,22 @@ object ManifestTable {
                 (2 until fr.length).map(fr.get) ++
                 Seq[Any](null, 0L, null, bucketOf(p))))
         }
-        return spark.createDataFrame(outRows, manifestSchema(df.schema, stats))
+        return spark.createDataFrame(outRows, manifestSchema(dataSchema, stats))
       }
     }
     val collected =
       if (footersOk)
         graft.sources.FileStats.collectFooters(spark,
-          sizeByPath.keys.toSeq.sorted, df.schema, stats)
+          sizeByPath.keys.toSeq.sorted, dataSchema, stats)
       else if (stats.isEmpty)
-        spark.read.parquet(dir).groupBy(input_file_name().as("path"))
+        scan().groupBy(input_file_name().as("path"))
           .agg(count(lit(1)).as("row_count"))
-      else graft.sources.FileStats.collect(spark, dir, stats)
+      else graft.sources.FileStats.statsOf(scan(), stats)
+    val sizes = {
+      val spk = spark
+      import spk.implicits._
+      files.toDF("path", "size")
+    }
     // canonical path identity on both sides (listFiles emits
     // toUri.getPath; input_file_name emits a scheme'd URI; footer rows
     // carry the listing's own paths) — [[canonPathCol]]: a mismatch
@@ -994,7 +1011,7 @@ object ManifestTable {
       // loop stamps NULL seq with its own attempt's version
       .withColumn("seq", lit(null).cast("long"))
       .withColumn("bucket",
-        if (bucket.isEmpty) lit(null).cast("long")
+        if (!bucketed) lit(null).cast("long")
         else {
           // the bucket id reads off the directory component DIRECTLY
           // ABOVE the file name (the landing's own partitionBy dir) —
@@ -1114,9 +1131,9 @@ object ManifestTable {
       case None         => freshSchema(df.schema)
     }
     val rows = landFiles(df, root, statsCols, bucketAs = Some(bucketBy))
-    val v = VersionedTable.writeStaged(rows, manifestsRoot(root))(
+    val (v, key) = VersionedTable.writeStagedKeyed(rows, manifestsRoot(root))(
       stageSchema(spark, root, schema))
-    primeManifestCaches(spark, root, v, rows)
+    primeManifestCaches(spark, root, v, rows, key)
     v
   }
 
@@ -1706,7 +1723,8 @@ object ManifestTable {
                                     consReg: Long => Seq[(String, String)] =
                                       null,
                                     validateCons: Boolean = true,
-                                    ndvReg: Long => Map[String, Long] = null)
+                                    ndvReg: Long => Map[String, Long] = null,
+                                    adopting: Boolean = false)
                                    (next: Long => Option[(DataFrame, StructType)])
       : Option[Long] = {
     val eq: Long => Seq[EqEntry] =
@@ -1724,6 +1742,12 @@ object ManifestTable {
     while (attempt < maxAttempts) {
       val base = latestVersion(spark, root)
       require(base >= 0, s"manifest table at $root has no committed version")
+      if (!adopting) adoptedFrom(spark, root, base).foreach { dir =>
+        throw new UnsupportedOperationException(
+          s"manifest table at $root mirrors $dir: adopt() is its only " +
+            "writer — change the files under that directory, then adopt() " +
+            "again")
+      }
       val (rows0, schema) = next(base) match {
         case Some(rs) => rs
         case None     => return None
@@ -1751,14 +1775,14 @@ object ManifestTable {
       // version; a CAS retry re-stamps against its own base)
       val rows = rows0.withColumn("seq",
         coalesce(col("seq"), lit(base + 1)))
-      VersionedTable.tryCommitAs(rows, manifestsRoot(root), base,
+      VersionedTable.tryCommitAsKeyed(rows, manifestsRoot(root), base,
         dir => { stageSchema(spark, root, schema)(dir)
           stageEq(spark, root, eq(base))(dir)
           stageConstraints(spark, root, consSet)(dir)
           stageNdv(spark, root, ndv(base))(dir)
           extraStage(dir) }) match {
-        case Some(v) =>
-          primeManifestCaches(spark, root, v, rows)
+        case Some((v, key)) =>
+          primeManifestCaches(spark, root, v, rows, key)
           return Some(v)
         case None    => attempt += 1
       }
@@ -3530,7 +3554,7 @@ object ManifestTable {
     // the clone starts its own seq timeline: borrowed files reset to
     // seq 0 so the clone's future deletes order against ITS versions
     val cloneRows = manifest(spark, srcRoot, v).withColumn("seq", lit(0L))
-    val dv = VersionedTable.writeStaged(
+    val (dv, key) = VersionedTable.writeStagedKeyed(
       cloneRows,
       manifestsRoot(dstRoot))(dir => {
       stageSchema(spark, dstRoot, tableSchema(spark, srcRoot, v))(dir)
@@ -3541,8 +3565,95 @@ object ManifestTable {
       // so the source's NDV pass is exactly right for it
       stageNdv(spark, dstRoot, ndvAt(spark, srcRoot, v))(dir)
     })
-    primeManifestCaches(spark, dstRoot, dv, cloneRows)
+    primeManifestCaches(spark, dstRoot, dv, cloneRows, key)
     dv
+  }
+
+  /** ADOPT a plain parquet directory: make the manifest table at
+    * `root` mirror `dataDir`'s files BY REFERENCE — the Iceberg
+    * `add_files` / Delta `CONVERT TO DELTA` shape, and the one per-file
+    * metadata plane for plain directories ([[graft.plans.GraftTables
+    * .register]] names the result). Entries point at the directory's
+    * files the way [[cloneTo]]'s point at the source's, so no data
+    * moves, and [[vacuum]] — which sweeps only `root/data` — never
+    * touches them.
+    *
+    * One call lists `dataDir`, describes ONLY the files the current
+    * version lacks (footer stats over `statsCols`, the landing's own
+    * row assembly — cost ∝ new files), drops entries whose files are
+    * gone, and commits once through the manifest commit loop — or not
+    * at all when the listing matches (returns None). The first call
+    * creates the table with the schema of the directory's first file;
+    * `statsCols` are fixed from then on, like [[create]]'s.
+    *
+    * An adopted root has exactly ONE writer: this method. Appends and
+    * row-level ops (merge, delete, update, CDC, optimize) refuse —
+    * the next adopt would otherwise undo them. Files are identified
+    * by path: rewrite a file under a new name, never in place. */
+  def adopt(spark: SparkSession, dataDir: String, root: String,
+            statsCols: Seq[String]): Option[Long] = {
+    val listed = graft.sources.FileManifest.listFiles(spark, dataDir)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+    val dir = canon(dataDir)
+    def describe(files: Seq[(String, Long)], schema: StructType) =
+      describeFiles(spark, files, schema, statsCols, bucketed = false,
+        () => spark.read.schema(schema).parquet(files.map(_._1): _*))
+    if (!exists(spark, root)) {
+      require(listed.nonEmpty, s"adopt: $dataDir holds no parquet files")
+      val schema = spark.read.parquet(listed.head._1).schema
+      statsCols.foreach(c => require(schema.fieldNames.contains(c),
+        s"stats column $c is not a column of $dataDir"))
+      val rows = describe(listed, schema)
+      val (v, key) = VersionedTable.writeStagedKeyed(rows,
+        manifestsRoot(root)) { d =>
+        stageSchema(spark, root, schema)(d)
+        stageAdopted(spark, root, dir)(d)
+      }
+      primeManifestCaches(spark, root, v, rows, key)
+      return Some(v)
+    }
+    commitLoopEvolvingOpt(spark, root, extraStage = stageAdopted(spark, root, dir),
+      adopting = true) { base =>
+      val tracked = ManifestTable.statsCols(spark, root, base)
+      require(tracked.toSet == statsCols.toSet,
+        s"adopt: $root tracks ${tracked.mkString(",")}, not " +
+          statsCols.mkString(","))
+      require(adoptedFrom(spark, root, base).contains(dir),
+        s"adopt: $root is not an adoption of $dataDir")
+      val known = filesAt(spark, root, base).toSet
+      val fresh = listed.filterNot(f => known.contains(f._1))
+      val gone = known -- listed.map(_._1)
+      if (fresh.isEmpty && gone.isEmpty) None
+      else {
+        val schema = tableSchema(spark, root, base)
+        Some((manifest(spark, root, base)
+          .filter(!col("path").isin(gone.toSeq: _*))
+          .unionByName(describe(fresh, schema)), schema))
+      }
+    }
+  }
+
+  private val AdoptedSidecar = "_graft_adopted"
+
+  /** The directory an adopted version mirrors — None for a table whose
+    * files it owns. */
+  private[graft] def adoptedFrom(spark: SparkSession, root: String,
+                                 version: Long): Option[String] = {
+    val p = new Path(s"${manifestsRoot(root)}/epoch=$version", AdoptedSidecar)
+    val f = fs(spark, root)
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      try Some(new String(
+        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
+      finally in.close()
+    }
+  }
+
+  private def stageAdopted(spark: SparkSession, root: String,
+                           dataDir: String)(dir: String): Unit = {
+    val out = fs(spark, root).create(new Path(dir, AdoptedSidecar), true)
+    try out.write(dataDir.getBytes("UTF-8")) finally out.close()
   }
 
   // ------------------------------------------------- refs: branches & tags

@@ -300,10 +300,9 @@ object ParquetSink {
     * aside restored if the second rename fails — committed rows can
     * never be stranded invisible. Readers in the two-rename window see
     * the directory absent, never torn. After the swap, run
-    * [[graft.sources.MetadataMaintenance.tick]]: it delta-indexes the
-    * new files and reconciles away the dead paths, so a registered
-    * table resumes pruning without a stale-metadata window crashing or
-    * (worse) silently keeping everything. */
+    * [[ManifestTable.adopt]] (and [[ManifestTable.buildBloom]]): it
+    * describes the new files and drops the dead paths, so a registered
+    * directory resumes pruning. */
   def reclusterTable(spark: SparkSession, path: String, cols: Seq[String],
                      numFiles: Int, bits: Int = 0): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -332,8 +331,9 @@ object ParquetSink {
   /** INCREMENTAL curve optimize — the 100 TB form of
     * [[reclusterTable]]: rewrite ONLY the degraded files, cost ∝ the
     * degraded subset, never the table. Selection is metadata-only,
-    * from the committed per-file stats epoch (run a
-    * MetadataMaintenance tick first so appends are indexed): a file
+    * from the per-file entries of the directory's adopted manifest
+    * table at `manifestRoot` ([[ManifestTable.adopt]] first, so appends are
+    * described): a file
     * whose per-dimension envelope geomean exceeds `wideFactor` × the
     * MEDIAN file score is an offender. The median — not an absolute
     * bound like the ideal tile extent — because envelopes are
@@ -349,16 +349,17 @@ object ParquetSink {
     * an aside dir, new files move in, aside deleted — per-file
     * renames, so (as with [[compactTable]]) a reader in the window
     * may briefly miss the rewritten rows, never see them doubled or
-    * torn. Follow with another tick to index the new files and drop
-    * the dead paths. Stale stats rows (paths no longer live) are
+    * torn. Follow with another adopt to describe the new files and
+    * drop the dead paths. Entries for files no longer live are
     * ignored — they select nothing. */
   def reclusterIncremental(spark: SparkSession, dir: String,
-                           cols: Seq[String], statsRoot: String,
+                           cols: Seq[String], manifestRoot: String,
                            wideFactor: Double = 2.0): ReclusterReport = {
     require(cols.size >= 2, "reclusterIncremental needs >= 2 clustering columns")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stats = graft.sinks.VersionedTable.read(spark, statsRoot)
+    val stats = ManifestTable.manifest(spark, manifestRoot,
+        ManifestTable.latestVersion(spark, manifestRoot))
       .select(col("path") +: col("row_count") +:
         cols.flatMap(c => Seq(col(s"${c}_min").cast("double"),
           col(s"${c}_max").cast("double"))): _*)
@@ -367,9 +368,9 @@ object ParquetSink {
         (r.getString(0), r.getLong(1),
           cols.indices.map(i => (r.getDouble(2 + 2 * i), r.getDouble(3 + 2 * i))))
       }
-      // liveness: a stats row for a deleted path must select nothing
+      // liveness: an entry for a deleted path must select nothing
       .filter { case (p, _, _) =>
-        fs.exists(new org.apache.hadoop.fs.Path(new java.net.URI(p).getPath)) }
+        fs.exists(new org.apache.hadoop.fs.Path(p)) }
     if (stats.length < 2)
       return ReclusterReport(0, stats.length, 0L, 0)
     val spans = cols.indices.map { i =>
@@ -400,7 +401,7 @@ object ParquetSink {
       bits = 0)
     fs.mkdirs(aside): Unit
     offPaths.foreach { p =>
-      val src = new org.apache.hadoop.fs.Path(new java.net.URI(p).getPath)
+      val src = new org.apache.hadoop.fs.Path(p)
       require(fs.rename(src, new org.apache.hadoop.fs.Path(aside, src.getName)),
         s"reclusterIncremental: failed to set aside $src")
     }

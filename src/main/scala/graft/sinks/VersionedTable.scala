@@ -110,7 +110,15 @@ object VersionedTable {
     * so sidecar artifacts (e.g. an index's `_graft_build_params`)
     * commit atomically with the epoch they describe — a reader can
     * never resolve an epoch whose sidecar is missing or half-written. */
-  def writeStaged(df: DataFrame, root: String)(stage: String => Unit): Long = {
+  def writeStaged(df: DataFrame, root: String)(stage: String => Unit): Long =
+    writeStagedKeyed(df, root)(stage)._1
+
+  /** [[writeStaged]], also returning the published epoch's [[EpochKey]]
+    * (computed once for the schema prime) so a caller priming its own
+    * cache entry for the epoch reuses it. */
+  private[sinks] def writeStagedKeyed(df: DataFrame, root: String)
+                                     (stage: String => Unit)
+      : (Long, Option[EpochKey]) = {
     val spark = df.sparkSession
     // a blind full-epoch replace is a stream RESTART: stamp the reset
     // tombstone (unless the hook stamped its own id) so
@@ -137,8 +145,7 @@ object VersionedTable {
       }
     }
     bumpPointer(spark, root, next)
-    primeSchemaCache(spark, root, next, df.schema)
-    next
+    (next, primeSchemaCache(spark, root, next, df.schema))
   }
 
   /** Optimistic-concurrency commit: publish the staged rewrite ONLY as
@@ -149,15 +156,22 @@ object VersionedTable {
     * is the conflict check that makes read-modify-write commits
     * serializable rather than merely durable. */
   def tryCommitAs(df: DataFrame, root: String, expectedBase: Long,
-                  stage: String => Unit = _ => ()): Option[Long] = {
+                  stage: String => Unit = _ => ()): Option[Long] =
+    tryCommitAsKeyed(df, root, expectedBase, stage).map(_._1)
+
+  /** [[tryCommitAs]], also returning the published epoch's key (see
+    * [[writeStagedKeyed]]). */
+  private[sinks] def tryCommitAsKeyed(df: DataFrame, root: String,
+                                      expectedBase: Long,
+                                      stage: String => Unit)
+      : Option[(Long, Option[EpochKey])] = {
     val spark = df.sparkSession
     val stageDir = stageEpoch(df, root, stage)
     val want = expectedBase + 1
     claimEpoch(spark, root, stageDir, want) match {
       case Won =>
         bumpPointer(spark, root, want)
-        primeSchemaCache(spark, root, want, df.schema)
-        Some(want)
+        Some((want, primeSchemaCache(spark, root, want, df.schema)))
       case Lost =>
         fs(spark, root).delete(stageDir, true): Unit
         None
@@ -444,7 +458,7 @@ object VersionedTable {
       claimEpoch(spark, root, stageDir, next) match {
         case Won =>
           bumpPointer(spark, root, next)
-          primeSchemaCache(spark, root, next, df.schema)
+          primeSchemaCache(spark, root, next, df.schema): Unit
           return Some(next)
         case Lost         => next += 1
         case LostConsumed =>
@@ -767,14 +781,17 @@ object VersionedTable {
     * (`DataSource` applies `asNullable`), so the primed value is the
     * all-nullable rendering of the written schema — identical to what
     * inference would return for the parquet files this very frame
-    * wrote. Best-effort: a failed stat just leaves the lazy path. */
+    * wrote. Best-effort: a failed stat just leaves the lazy path.
+    * Returns the epoch's key (None when unstatable). */
   private def primeSchemaCache(spark: SparkSession, root: String,
                                version: Long,
                                schema: org.apache.spark.sql.types.StructType)
-      : Unit =
-    epochKey(spark, root,
-        new org.apache.hadoop.fs.Path(s"$root/epoch=$version")).foreach(k =>
-      EpochCache.put(EpochCache.Schemas, k, allNullable(schema)))
+      : Option[EpochKey] = {
+    val key = epochKey(spark, root,
+      new org.apache.hadoop.fs.Path(s"$root/epoch=$version"))
+    key.foreach(k => EpochCache.put(EpochCache.Schemas, k, allNullable(schema)))
+    key
+  }
 
   /** Every field (and nested struct/array/map element) nullable — what
     * a file-source read reports regardless of writer nullability. */

@@ -22,60 +22,39 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the build is one grouped aggregate per file batch
   * (map-side, bloom state `numBits/8` bytes per file); the index is
-  * one row per file (metadata-scale, like the stats table and the
-  * manifest) and commits through [[graft.sinks.VersionedTable]] epochs
-  * keyed by path, so index maintenance rides the same
-  * manifest-delta → upsert loop as [[FileStats]].
+  * one row per file (metadata-scale, like the manifest) and commits
+  * through [[graft.sinks.VersionedTable]] epochs keyed by path.
+  * [[graft.sinks.ManifestTable.buildBloom]] maintains one beside a
+  * manifest table (adopted directories included), indexing only the
+  * files it lacks.
   */
 object FileBloomIndex {
 
-  /** Build index rows (path, bloom, row_count) for a directory scan. */
-  def build(spark: SparkSession, dir: String, keyCol: String,
-            numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame =
-    buildOf(spark.read.parquet(dir), keyCol, numBits, numHashes)
-
-  /** Build for an explicit file batch ([[FileManifest.newFiles]]):
-    * cost ∝ the new files, not the table. */
+  /** Build index rows (path, bloom, row_count) for an explicit file
+    * batch: cost ∝ those files, not the table. */
   def buildFor(spark: SparkSession, files: Seq[String], keyCol: String,
-               numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame =
-    buildOf(spark.read.parquet(files: _*), keyCol, numBits, numHashes)
-
-  private def buildOf(df: DataFrame, keyCol: String,
-                      numBits: Int, numHashes: Int): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
-    df.groupBy(input_file_name().as("path"))
+               numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame = {
+    graft.functions.VectorExpressions.ensureRegistered(spark)
+    spark.read.parquet(files: _*).groupBy(input_file_name().as("path"))
       .agg(graft.functions.VectorExpressions
         .bloomBuild(xxhash64(col(keyCol)), numBits, numHashes).as("bloom"),
         count(lit(1)).as("row_count"))
   }
 
-  /** Commit a FULL rebuild ([[build]] over the whole directory):
-    * REPLACES the epoch, so rows from a previous layout generation
-    * cannot survive. This is the only sound commit for a rebuild —
-    * merging a rebuild by path keeps rows for files the rewrite
-    * deleted (overwrite re-lands under fresh part names), and
-    * [[readKeys]] would then try to open dead files. */
+  /** Commit a FULL build: REPLACES the epoch, so rows from a previous
+    * generation cannot survive. */
   def commitFull(index: DataFrame, root: String): Long =
     graft.sinks.VersionedTable.write(index, root)
 
-  /** Upsert a DELTA batch ([[buildFor]] over [[FileManifest.newFiles]])
-    * into the committed epoch: new files insert, a re-landed same-path
-    * file replaces its row; the first commit bootstraps the epoch.
-    * Merge-by-path is correct ONLY while the file set grows
-    * append-only — after any rewrite/compaction, run [[reconcile]]
-    * (or rebuild via [[commitFull]]) so dead paths are dropped. */
+  /** Upsert a DELTA batch ([[buildFor]] over files the index lacks)
+    * into the committed epoch: new files insert, a same-path row is
+    * replaced; the first commit bootstraps the epoch. Rows for files
+    * since deleted stay, and exclude nothing from a listing they do
+    * not appear in. */
   def commitDelta(index: DataFrame, root: String): Long =
     if (graft.sinks.VersionedTable.latestVersion(index.sparkSession, root) >= 0)
       graft.sinks.VersionedTable.merge(index, root, Seq("path"))
     else graft.sinks.VersionedTable.write(index, root)
-
-  /** Drop index rows whose file no longer exists under `dataDir` —
-    * the maintenance-tick step that keeps [[commitDelta]] sound across
-    * rewrites/compactions. Returns the committed version, None when
-    * the index is already clean. */
-  def reconcile(spark: SparkSession, root: String,
-                dataDir: String): Option[Long] =
-    PathMetadata.reconcile(spark, root, dataDir)
 
   def read(spark: SparkSession, root: String): DataFrame =
     graft.sinks.VersionedTable.read(spark, root)
@@ -87,27 +66,5 @@ object FileBloomIndex {
     val hits = keys.map(k => graft.functions.VectorExpressions
       .bloomMightContain(col("bloom"), xxhash64(k))).reduce(_ || _)
     index.filter(hits).select(col("path"))
-  }
-
-  /** Exactly the rows with `keyCol` IN keys, opening only candidate
-    * files. Same freshness contract as [[FileStats.readRange]]: the
-    * index must cover every live file, and every indexed file must be
-    * live — a stale index (rewritten layout, no [[reconcile]]) fails
-    * fast here with the contract named, because silently skipping a
-    * dead path could mask keys that moved to a not-yet-indexed file. */
-  def readKeys(spark: SparkSession, index: DataFrame, keyCol: String,
-               keys: Seq[Column]): DataFrame = {
-    val paths = candidateFiles(index, keys)
-      .collect().map(_.getString(0)).sorted // |files| rows: metadata scale
-    PathMetadata.requireLive(spark, paths.toIndexedSeq, "FileBloomIndex.readKeys")
-    val schema = PathMetadata.liveSchema(spark,
-      index.select("path").collect().map(_.getString(0)).toIndexedSeq,
-      "FileBloomIndex.readKeys")
-    val pruned =
-      if (paths.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else spark.read.schema(schema).parquet(paths.toIndexedSeq: _*)
-    pruned.filter(keys.map(k => col(keyCol) === k).reduce(_ || _))
   }
 }

@@ -1,25 +1,22 @@
 package graft.sources
 
-import graft.sinks.VersionedTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-file column statistics + data-skipping reads — the metadata
-  * layer that makes a 100 TB table scannable: one tiny row per FILE
-  * (min/max/null-count per tracked column + row count), so a range
-  * predicate can discard whole files before Spark ever opens them.
-  * This is the stats half of the lakehouse-table pattern (Delta/Iceberg
-  * file-level `minValues`/`maxValues`) on plain parquet directories,
-  * composing with the pieces this repo already has:
+/** Per-file column statistics — the metadata layer that makes a
+  * 100 TB table scannable: one tiny row per FILE (min/max/null-count
+  * per tracked column + row count), so a range predicate can discard
+  * whole files before Spark ever opens them. This is the stats half
+  * of the lakehouse-table pattern (Delta/Iceberg file-level
+  * `minValues`/`maxValues`); the rows ARE a manifest table's entries
+  * ([[graft.sinks.ManifestTable]] — for a plain directory, its
+  * `adopt`ed mirror), and the helpers here are pure functions over a
+  * frame of that shape:
   *
-  *   - [[FileManifest]] discovers which files are NEW per ingest epoch;
-  *   - [[collectFor]] scans ONLY those files for their stats (cost ∝
-  *     new data, never the table);
-  *   - [[commitStats]] upserts the rows into a
-  *     [[graft.sinks.VersionedTable]] keyed by path (always-readable
-  *     pointer flip, as-of history);
-  *   - [[readRange]] prunes against the stats table and reads only
-  *     surviving files, then applies the exact row predicate.
+  *   - [[collect]] / [[collectFor]] / [[collectFooters]] build the rows;
+  *   - [[candidateFilesAll]] is the sound prune set for a conjunction
+  *     of ranges;
+  *   - [[tableSummary]] answers whole-table aggregates from them.
   *
   * Pruning is SOUND, never assumed complete: a kept file may hold rows
   * outside the range (the row filter handles them) but no file holding
@@ -37,18 +34,17 @@ import org.apache.spark.sql.functions._
 object FileStats {
 
   /** Stats for every file in a parquet directory: one scan, grouped by
-    * `input_file_name()` — distributed, no per-file driver loop. Use
-    * [[collectFor]] + [[commitStats]] for incremental maintenance. */
+    * `input_file_name()` — distributed, no per-file driver loop. */
   def collect(spark: SparkSession, dir: String, cols: Seq[String]): DataFrame =
     statsOf(spark.read.parquet(dir), cols)
 
-  /** Stats for an explicit file list (the [[FileManifest.newFiles]]
-    * batch): cost ∝ the new files, not the table. */
+  /** Stats for an explicit file list: cost ∝ those files, not the
+    * table. */
   def collectFor(spark: SparkSession, files: Seq[String],
                  cols: Seq[String]): DataFrame =
     statsOf(spark.read.parquet(files: _*), cols)
 
-  private def statsOf(df: DataFrame, cols: Seq[String]): DataFrame = {
+  private[graft] def statsOf(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "track at least one column")
     val aggs = count(lit(1)).as("row_count") +: cols.flatMap { c =>
       Seq(min(col(c)).as(s"${c}_min"), max(col(c)).as(s"${c}_max"),
@@ -67,7 +63,7 @@ object FileStats {
     * of data volume.
     *
     * Honesty rules for writer-omitted stats (the reason
-    * [[candidateFiles]] is proof-based): if ANY row group of a file
+    * [[candidateFilesAll]] is proof-based): if ANY row group of a file
     * lacks usable stats for a column, that column's min/max/nulls are
     * emitted as NULL — "unknown", which pruning must keep — never as
     * a partial fold that would claim a narrower envelope than the
@@ -114,45 +110,15 @@ object FileStats {
     spark.createDataFrame(rows, statsSchema)
   }
 
-  /** Upsert a DELTA batch's stats rows into the versioned stats table
-    * (a re-landed same-path file's stats replace the old row — same
-    * (path) identity caveat as the manifest). Returns the committed
-    * version. Merge-by-path is correct ONLY while the file set grows
-    * append-only: after a rewrite/compaction (files re-land under NEW
-    * names), run [[reconcile]] — or rebuild via [[commitStatsFull]] —
-    * so stats rows for dead paths stop feeding pruning decisions. */
-  def commitStats(stats: DataFrame, root: String): Long =
-    if (VersionedTable.latestVersion(stats.sparkSession, root) < 0)
-      VersionedTable.write(stats, root)
-    else VersionedTable.merge(stats, root, Seq("path"))
-
-  /** Commit a FULL rebuild ([[collect]] over the whole directory):
-    * REPLACES the epoch so no previous layout's rows survive — the
-    * same rebuild-vs-delta split as [[FileBloomIndex.commitFull]]. */
-  def commitStatsFull(stats: DataFrame, root: String): Long =
-    VersionedTable.write(stats, root)
-
-  /** Drop stats rows whose file no longer exists under `dataDir` —
-    * the maintenance-tick step after [[graft.sinks.ParquetSink
-    * .compactTable]] or any overwrite re-land. Returns the committed
-    * version, None when the table is already clean. */
-  def reconcile(spark: SparkSession, root: String,
-                dataDir: String): Option[Long] =
-    PathMetadata.reconcile(spark, root, dataDir)
-
-  /** Pointer-resolved read of the current stats table. */
-  def readStats(spark: SparkSession, root: String): DataFrame =
-    VersionedTable.read(spark, root)
-
-  /** Table-level aggregates answered from the stats table ALONE —
+  /** Table-level aggregates answered from the stats rows ALONE —
     * zero data I/O, the Iceberg/Delta "COUNT(*) from the manifest"
     * ergonomics: Σ row_count is the exact table count, min of
     * per-file mins / max of per-file maxes the exact extrema, and
     * Σ per-file null counts the exact null count. Exactness holds
-    * whenever the stats cover exactly the live file set (the
-    * [[FileManifest]] + [[reconcile]] loop's invariant) and the rows
-    * were collected exactly ([[collect]] / [[collectFor]]). Footer
-    * stats keep the honesty rules instead: a writer-omitted column
+    * whenever the stats cover exactly the live file set (a manifest
+    * table's invariant) and the rows were collected exactly
+    * ([[collect]] / [[collectFor]]). Footer stats keep the honesty
+    * rules instead: a writer-omitted column
     * folds to NULL min/max — "unknown", never a narrower claim — and
     * NULL-aggregating min/max then skips that file, so on
     * footer-built stats treat a NULL summary cell as unknown (row
@@ -169,27 +135,18 @@ object FileStats {
     stats.agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Files whose [min,max] envelope for `c` intersects [lo,hi] —
-    * the sound-prune set for `c BETWEEN lo AND hi`. A file is dropped
-    * only on PROOF it cannot match: its envelope provably misses the
-    * range, or every row is null (a range predicate rejects NULL).
-    * NULL min/max with an unknown null count — footer stats a writer
-    * didn't record ([[collectFooters]]) — keeps the file: unknown is
-    * never treated as absent. The null-safe `<=>` makes each proof
-    * explicit rather than relying on three-valued filter semantics. */
-  def candidateFiles(stats: DataFrame, c: String,
-                     lo: Column, hi: Column): DataFrame = {
-    val misses  = (col(s"${c}_max") < lo) || (col(s"${c}_min") > hi)
-    val allNull = col(s"${c}_nulls") === col("row_count")
-    stats.filter(!(misses <=> lit(true)) && !(allNull <=> lit(true)))
-      .select(col("path"))
-  }
-
-  /** Conjunctive multi-range prune: files surviving EVERY per-column
-    * proof. On a Z-order layout ([[graft.sinks.ParquetSink]]) each
-    * interleaved dimension has a narrow envelope, so a 2-D range
-    * query prunes multiplicatively — the case single-column range
-    * layouts can't serve. */
+  /** Files whose [min,max] envelopes intersect EVERY [lo,hi] of
+    * `ranges` — the sound-prune set for a conjunction of BETWEENs. A
+    * file is dropped only on PROOF it cannot match: an envelope
+    * provably misses its range, or every row is null (a range
+    * predicate rejects NULL). NULL min/max with an unknown null count
+    * — footer stats a writer didn't record ([[collectFooters]]) —
+    * keeps the file: unknown is never treated as absent. The
+    * null-safe `<=>` makes each proof explicit rather than relying on
+    * three-valued filter semantics. On a Z-order layout
+    * ([[graft.sinks.ParquetSink]]) each interleaved dimension has a
+    * narrow envelope, so a 2-D range query prunes multiplicatively —
+    * the case single-column range layouts can't serve. */
   def candidateFilesAll(stats: DataFrame,
                         ranges: Seq[(String, Column, Column)]): DataFrame = {
     require(ranges.nonEmpty, "give at least one range")
@@ -199,33 +156,5 @@ object FileStats {
       !(misses <=> lit(true)) && !(allNull <=> lit(true))
     }.reduce(_ && _)
     stats.filter(keep).select(col("path"))
-  }
-
-  /** Exactly the rows of the table with `c` in [lo, hi], reading only
-    * files the stats cannot rule out. Result is independent of the
-    * stats' freshness ONLY if the stats cover every live file —
-    * maintain them through [[FileManifest]] commits. */
-  def readRange(spark: SparkSession, stats: DataFrame, c: String,
-                lo: Column, hi: Column): DataFrame =
-    readWhere(spark, stats, Seq((c, lo, hi)))
-
-  /** Multi-range variant of [[readRange]]: conjunction of BETWEENs,
-    * file set pruned per [[candidateFilesAll]]. */
-  def readWhere(spark: SparkSession, stats: DataFrame,
-                ranges: Seq[(String, Column, Column)]): DataFrame = {
-    val paths = candidateFilesAll(stats, ranges)
-      .collect().map(_.getString(0)).sorted // |files| rows: metadata scale
-    PathMetadata.requireLive(spark, paths.toIndexedSeq, "FileStats.readWhere")
-    val schema = PathMetadata.liveSchema(spark,
-      stats.select("path").collect().map(_.getString(0)).toIndexedSeq,
-      "FileStats.readWhere")
-    val pruned =
-      if (paths.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      else spark.read.schema(schema).parquet(paths: _*)
-    ranges.foldLeft(pruned) { case (df, (c, lo, hi)) =>
-      df.filter(col(c).between(lo, hi))
-    }
   }
 }

@@ -34,11 +34,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Properties files: location + table properties). Registration
   * therefore SURVIVES the session — the per-JVM
   * [[graft.plans.GraftTables.register]] map stays available for
-  * plain-parquet directories, but named tables carry their metadata
-  * roots as TABLE PROPERTIES (`statsRoot`/`statsCols`/`bloomRoot`/
-  * `bloomKey`), and manifest tables need none at all: their pruning
-  * stats live in the manifest itself. A fresh session that resolves
-  * the table by name prunes immediately (spec-pinned).
+  * plain-parquet directories, but manifest tables need no registration
+  * at all: their pruning stats live in the manifest itself. A fresh
+  * session that resolves the table by name prunes immediately
+  * (spec-pinned).
   *
   * Resolution delegates to [[GraftTableProvider]] — one code path for
   * snapshot pinning, version/timestamp travel, and in-source file

@@ -14,7 +14,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.plans.{GraftTables, StatsPruneRule}
+import graft.plans.StatsPruneRule
 
 /** DataSourceV2 table format over [[graft.sinks.VersionedTable]] —
   * the epoch table as a FIRST-CLASS Spark source:
@@ -22,9 +22,6 @@ import graft.plans.{GraftTables, StatsPruneRule}
   * {{{
   *   spark.read.format("graft").load(root)                        // current epoch
   *   spark.read.format("graft").option("versionAsOf", 3).load(root) // time travel
-  *   spark.read.format("graft")
-  *     .option("statsRoot", sr).option("statsCols", "d,user_id")
-  *     .load(root).filter(...)        // stats-pruned scan, no rule needed
   * }}}
   *
   * Three properties fall out of the epoch contract:
@@ -35,11 +32,11 @@ import graft.plans.{GraftTables, StatsPruneRule}
   *     can never observe a half-applied rewrite or a moved pointer.
   *   - TIME TRAVEL: `versionAsOf` reads any retained epoch (the
   *     `readVersion` API surfaced as reader syntax).
-  *   - DATA SKIPPING INSIDE THE SOURCE: the scan's file index
+  *   - DATA SKIPPING INSIDE THE SOURCE: a manifest table's file index
   *     receives the pushed data filters (the DSv2 `listFiles`
-  *     contract) and drops files the committed stats/bloom epochs
-  *     PROVE unmatching — the same proof engine as the planner rule
-  *     ([[StatsPruneRule.provablyExcluded]]), but running inside the
+  *     contract) and drops files the manifest envelopes and bloom
+  *     indexes PROVE unmatching — the same proof engine as the planner
+  *     rule ([[StatsPruneRule]]), but running inside the
   *     source, so it needs no session extension and composes with any
   *     plan shape that pushes filters. Parquet row-group pushdown,
   *     column pruning, and vectorized reading are inherited from the
@@ -619,8 +616,6 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
         // equality/IN probes envelopes can't (hash-distributed keys)
         val bloomEntries = graft.sinks.ManifestTable
           .bloomsValid(spark, root, physSchema)
-          .map { case (c, br) =>
-            GraftTables.Entry(root, None, Nil, Some(br), Some(c)) }
         // bucket-transform predicate pruning serves point/IN probes on
         // a bucketed key from metadata alone — NOT gated on the SPJ
         // conf (pruning costs nothing; only bucket-grained task
@@ -672,7 +667,7 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
           val physToLogical = dataSchema.fields.map(f =>
             (graft.sinks.ManifestTable.physicalFor(dataSchema, f.name),
               f.name)).toMap
-          val physAttrs = (cols ++ bloomEntries.flatMap(_.bloomKey) ++
+          val physAttrs = (cols ++ bloomEntries.map(_._1) ++
             graft.sinks.ManifestTable.bucketSpec(dataSchema)
               .map(_._1).getOrElse(Nil)).distinct
           val attrs = physAttrs.flatMap(physToLogical.get).distinct
@@ -843,13 +838,9 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
                 physSchema, options))), list)
         }
     }
-    // epoch-directory table: stats/bloom roots come from reader
-    // options or the per-JVM registry; no runtime file filtering
-    // (the proofs live in registered sidecar tables, consulted at
-    // static pushdown)
-    val index = new GraftStatsFileIndex(spark,
-      Seq(new Path(s"$root/epoch=$version")), dataSchema,
-      metadataEntry(options))
+    // epoch-directory table: a plain listing of the epoch, no pruning
+    val index = new InMemoryFileIndex(spark,
+      Seq(new Path(s"$root/epoch=$version")), Map.empty, Some(dataSchema))
     bucketed(
       mapped(ParquetScanBuilder(spark, index, physSchema, physSchema,
         options)))
@@ -865,78 +856,23 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
           .bucket(n, k)).toArray
       case _ => Array.empty
     }
-
-  /** Stats/bloom metadata roots: explicit reader options (mirroring
-    * [[GraftTables.register]]'s contract), or — when none are given —
-    * AUTO-DISCOVERED from the table's own `_stats` sub-table, the
-    * convention [[GraftTableWriter.writeWithStats]] maintains: tracked
-    * columns are read off the committed stats schema (`<c>_min`
-    * fields), so a zero-option `format("graft").load(root)` prunes
-    * with no registration at all. Sound under any staleness — the
-    * proof engine only ever EXCLUDES files the stats provably clear,
-    * and stale rows for dead files exclude nothing from a listing
-    * they don't appear in. */
-  private def metadataEntry(o: CaseInsensitiveStringMap): Option[GraftTables.Entry] = {
-    val statsRoot = Option(o.get("statsRoot"))
-    val statsCols = Option(o.get("statsCols"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val bloomRoot = Option(o.get("bloomRoot"))
-    val bloomKey = Option(o.get("bloomKey"))
-    require(statsRoot.isEmpty == statsCols.isEmpty,
-      "statsRoot and statsCols must be given together")
-    require(bloomRoot.isEmpty == bloomKey.isEmpty,
-      "bloomRoot and bloomKey must be given together")
-    if (statsRoot.nonEmpty || bloomRoot.nonEmpty)
-      Some(GraftTables.Entry(root, statsRoot, statsCols, bloomRoot, bloomKey))
-    else discoverStats()
-  }
-
-  private def discoverStats(): Option[GraftTables.Entry] = {
-    val sr = s"$root/${GraftTableWriter.StatsSub}"
-    if (graft.sinks.VersionedTable.latestVersion(spark, sr) < 0) None
-    else {
-      val cols = graft.sources.FileStats.readStats(spark, sr)
-        .schema.fieldNames.toSeq
-        .filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
-      if (cols.isEmpty) None
-      else Some(GraftTables.Entry(root, Some(sr), cols, None, None))
-    }
-  }
 }
 
-/** The write half of the convention: commit an epoch AND refresh its
-  * file statistics in one call, so readers of `format("graft")` prune
-  * with zero options. Stats commit as a FULL REBUILD over the new
-  * epoch's files (the rewrite-staleness rule: an epoch write re-lands
-  * everything, so merge-by-path must not be used), AFTER the data
-  * epoch is live — the window between the two commits is sound
-  * because stale stats can only under-prune, never mis-prune. */
-object GraftTableWriter {
-
-  private[v2] val StatsSub = "_stats"
-
-  /** [[graft.sinks.VersionedTable.write]] + stats refresh over the
-    * committed epoch. Returns the data epoch's version. */
-  def writeWithStats(df: org.apache.spark.sql.DataFrame, root: String,
-                     statsCols: Seq[String]): Long = {
-    require(statsCols.nonEmpty, "track at least one column")
-    val spark = df.sparkSession
-    val v = graft.sinks.VersionedTable.write(df, root)
-    graft.sources.FileStats.commitStatsFull(
-      graft.sources.FileStats.collect(spark, s"$root/epoch=$v", statsCols),
-      s"$root/$StatsSub")
-    v
-  }
-}
-
-/** The shared manifest-envelope proof, guarded against optimizer
-  * re-entry — used by both index flavors below. */
+/** The shared manifest-envelope and bloom proofs, guarded against
+  * optimizer re-entry; a failed proof excludes nothing. */
 private[v2] object GraftManifestProofs {
   def excluded(spark: SparkSession, cond: Expression,
                stats: org.apache.spark.sql.DataFrame,
-               cols: Seq[String]): Set[String] = {
+               cols: Seq[String]): Set[String] =
+    guarded(StatsPruneRule.excludedByEnvelopes(spark, cond, stats, cols))
+
+  def bloomExcluded(spark: SparkSession, cond: Expression,
+                    col: String, bloomRoot: String): Set[String] =
+    guarded(StatsPruneRule.excludedByBloom(spark, cond, col, bloomRoot))
+
+  private def guarded(proof: => Set[String]): Set[String] = {
     StatsPruneRule.inMetadataQuery.set(true)
-    try StatsPruneRule.excludedByEnvelopes(spark, cond, stats, cols)
+    try proof
     catch { case _: Exception => Set.empty[String] }
     finally StatsPruneRule.inMetadataQuery.set(false)
   }
@@ -962,7 +898,7 @@ final class GraftManifestFileIndex(
     filesAndSizes: Seq[(String, Long)], commitTsMs: Long,
     dataSchema: StructType,
     manifestStats: Option[(org.apache.spark.sql.DataFrame, Seq[String])],
-    bloomEntries: Seq[GraftTables.Entry] = Nil,
+    bloomEntries: Seq[(String, String)] = Nil,
     bucketPrune: Option[(Seq[String], Int, Map[String, Long])] = None,
     limitPrune: Option[(() => Option[Int], Map[String, Long])] = None,
     topNPrune: Option[(() => Option[GraftTopN],
@@ -1077,8 +1013,8 @@ final class GraftManifestFileIndex(
         manifestStats.map { case (stats, cols) =>
           GraftManifestProofs.excluded(sparkSession, cond, stats, cols)
         }.getOrElse(Set.empty) ++
-          bloomEntries.flatMap(e =>
-            StatsPruneRule.provablyExcluded(sparkSession, cond, e))
+          bloomEntries.flatMap { case (c, br) =>
+            GraftManifestProofs.bloomExcluded(sparkSession, cond, c, br) }
       }
     val buckets: Option[Set[Long]] =
       if (dataFilters.isEmpty) None else allowedBuckets(dataFilters)
@@ -1261,44 +1197,5 @@ private[v2] object GraftTopNOrder {
               java.nio.charset.StandardCharsets.UTF_8)) < 0))
       case _ => None
     }
-  }
-}
-
-/** File listing for one EPOCH directory that honors the DSv2
-  * data-filter contract: `listFiles` drops files the registered
-  * stats/bloom metadata PROVES cannot match the pushed conjuncts
-  * (manifest tables use [[GraftManifestFileIndex]] instead — their
-  * stats travel with the listing). Soundness is inherited from the
-  * shared proof engine — a file is excluded only on proof, so stale
-  * or absent metadata degrades to keep-the-file, never to wrong rows
-  * (Spark still applies the full predicate to surviving rows).
-  * Exposes the post-prune file count for tests. */
-final class GraftStatsFileIndex(
-    spark: SparkSession, roots: Seq[Path], dataSchema: StructType,
-    entry: Option[GraftTables.Entry])
-  extends InMemoryFileIndex(spark, roots, Map.empty, Some(dataSchema)) {
-
-  def this(spark: SparkSession, epochDir: Path, dataSchema: StructType,
-           entry: Option[GraftTables.Entry]) =
-    this(spark, Seq(epochDir), dataSchema, entry)
-
-  /** Files surviving the last `listFiles` (volatile test hook). */
-  @volatile var lastListedFiles: Int = -1
-
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val base = super.listFiles(partitionFilters, dataFilters)
-    val excluded: Set[String] =
-      if (dataFilters.isEmpty) Set.empty
-      else entry.map(e => StatsPruneRule.provablyExcluded(
-        spark, dataFilters.reduce(And), e)).getOrElse(Set.empty)
-    val pruned =
-      if (excluded.isEmpty) base
-      else base.map { pd =>
-        pd.copy(files = pd.files.filterNot(f =>
-          excluded.contains(f.getPath.toUri.getPath)))
-      }
-    lastListedFiles = pruned.map(_.files.length).sum
-    pruned
   }
 }

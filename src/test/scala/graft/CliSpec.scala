@@ -46,6 +46,18 @@ class CliSpec extends AnyFunSuite {
     assert(tableCounts("FactTimeslices") == 1)
     assert(tableCounts("StageOccupancy_Hourly") == 1)
     assert(new java.io.File(xlsx).length() > 0)
+    // the returned counts are the workbook's own data rows per sheet
+    val zip = new java.util.zip.ZipFile(xlsx)
+    val sheetRows = try {
+      def entry(n: String) = scala.io.Source.fromInputStream(
+        zip.getInputStream(zip.getEntry(n)), "UTF-8").mkString
+      "<sheet name=\"([^\"]+)\" sheetId=\"(\\d+)\"".r
+        .findAllMatchIn(entry("xl/workbook.xml")).map { m =>
+          m.group(1) -> ("<row ".r.findAllIn(
+            entry(s"xl/worksheets/sheet${m.group(2)}.xml")).length - 1L)
+        }.toMap
+    } finally zip.close()
+    assert(sheetRows == tableCounts)
 
     val dsId = Cli.pbiProvision(env, dataDir, "group-1", "TimeTracking")
     val totals = Cli.pbiRefresh(env, dataDir, "group-1", "TimeTracking")

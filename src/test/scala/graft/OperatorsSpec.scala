@@ -10,6 +10,24 @@ class OperatorsSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
+  /** Adopt `lay` into the manifest table at `root` (per-file stats over
+    * `cols`), register it for planner pruning, run `body`, unregister. */
+  private def adopted[T](lay: String, root: String, cols: Seq[String])
+                        (body: => T): T = {
+    sinks.ManifestTable.adopt(spark, lay, root, cols): Unit
+    plans.GraftTables.register(lay, root)
+    try body finally plans.GraftTables.unregister(lay)
+  }
+
+  /** Files the planned scan of `df` opens, after planner pruning. */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    physicalPlan(df).collectLeaves().collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location.inputFiles.length.toLong
+    }.sum
+  }
+
   test("quantile sketch: merged epochs are bit-equal to a single pass; estimates honor the error contract") {
     import operators.QuantileSketch
     val ev = sources.Tables.events(spark, sf)
@@ -1771,14 +1789,18 @@ class OperatorsSpec extends AnyFunSuite {
     assert(total >= 4, s"range layout should produce several files, got $total")
     val lo = lit(java.sql.Date.valueOf("2024-01-10"))
     val hi = lit(java.sql.Date.valueOf("2024-01-13"))
-    val kept = FileStats.candidateFiles(stats, "d", lo, hi).count()
+    val kept = FileStats.candidateFilesAll(stats, Seq(("d", lo, hi))).count()
     assert(kept < total,
       s"a 4-of-30-day range must skip files on a day-ranged layout ($kept/$total kept)")
-    val got = FileStats.readRange(spark, stats, "d", lo, hi)
-      .select("event_id").as[Long].collect().toSet
     val want = spark.read.parquet(lay).filter(col("d").between(lo, hi))
       .select("event_id").as[Long].collect().toSet
-    assert(got == want, "pruned read must equal the plain filtered scan")
+    adopted(lay, util.Scratch.dir("filestats_layout_meta"), Seq("d")) {
+      val pruned = spark.read.parquet(lay).filter(col("d").between(lo, hi))
+      assert(scannedFiles(pruned) == kept,
+        "the planner must open exactly the candidate files")
+      assert(pruned.select("event_id").as[Long].collect().toSet == want,
+        "pruned read must equal the plain filtered scan")
+    }
     assert(want.nonEmpty)
     stats.unpersist()
   }
@@ -1793,25 +1815,37 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("id", "v")
       .repartitionByRange(3, col("v"))
       .write.mode("overwrite").parquet(lay)
-    val stats = FileStats.collect(spark, lay, Seq("v"))
-    val got = FileStats.readRange(spark, stats, "v", lit(0), lit(100))
-      .select("id").as[Long].collect().toSet
+    val got = adopted(lay, util.Scratch.dir("filestats_nulls_meta"), Seq("v")) {
+      spark.read.parquet(lay).filter(col("v").between(0, 100))
+        .select("id").as[Long].collect().toSet
+    }
     assert(got == Set(3L, 4L, 5L, 6L),
       "whole-domain range must return every non-null row and no null row")
-    // incremental maintenance: stats committed file-batch by file-batch
-    // through the versioned table equal the one-shot collect
-    val root = util.Scratch.dir("filestats_epochs")
+    // incremental maintenance: a directory adopted file-batch by
+    // file-batch holds the same stats as the one-shot collect
+    val inc = util.Scratch.dir("filestats_epochs")
+    val root = util.Scratch.dir("filestats_epochs_meta")
     val files = new java.io.File(lay).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).map(_.getAbsolutePath).sorted
+      .filter(f => f.getName.endsWith(".parquet")).sorted
     assert(files.length >= 2)
     val (b1, b2) = files.splitAt(1)
-    FileStats.commitStats(FileStats.collectFor(spark, b1.toSeq, Seq("v")), root)
-    FileStats.commitStats(FileStats.collectFor(spark, b2.toSeq, Seq("v")), root)
-    val folded = FileStats.readStats(spark, root)
-      .orderBy("path").collect().toSeq
-    val oneShot = FileStats.collect(spark, lay, Seq("v"))
-      .orderBy("path").collect().toSeq
-    assert(folded == oneShot, "epoch-folded stats must equal the one-shot scan")
+    def land(fs: Seq[java.io.File]): Unit = fs.foreach { f =>
+      new java.io.File(inc).mkdirs()
+      java.nio.file.Files.copy(f.toPath, new java.io.File(inc, f.getName).toPath)
+    }
+    land(b1.toSeq)
+    sinks.ManifestTable.adopt(spark, inc, root, Seq("v")): Unit
+    land(b2.toSeq)
+    sinks.ManifestTable.adopt(spark, inc, root, Seq("v")): Unit
+    val statCols = Seq("path", "row_count", "v_min", "v_max", "v_nulls")
+    def canonical(df: org.apache.spark.sql.DataFrame) =
+      df.select(statCols.map(col): _*).collect().toSeq.map(r =>
+        new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath +: r.toSeq.tail)
+        .sortBy(_.head.toString)
+    val folded = canonical(sinks.ManifestTable.manifest(spark, root,
+      sinks.ManifestTable.latestVersion(spark, root)))
+    val oneShot = canonical(FileStats.collect(spark, inc, Seq("v")))
+    assert(folded == oneShot, "batch-adopted stats must equal the one-shot scan")
   }
 
   test("footer stats equal scan stats across every supported type; pruning agrees") {
@@ -1844,12 +1878,14 @@ class OperatorsSpec extends AnyFunSuite {
     val stats = FileStats.collectFooters(spark, files, schema, cols)
     val lo = lit(java.sql.Date.valueOf("2024-01-10"))
     val hi = lit(java.sql.Date.valueOf("2024-01-13"))
-    assert(FileStats.candidateFiles(stats, "d", lo, hi).count() < files.size,
+    assert(FileStats.candidateFilesAll(stats, Seq(("d", lo, hi))).count() < files.size,
       "footer envelopes must skip files on the day-ranged layout")
-    val got = FileStats.readRange(spark, stats, "d", lo, hi)
-      .select("event_id").as[Long].collect().toSet
     val want = spark.read.parquet(lay).filter(col("d").between(lo, hi))
       .select("event_id").as[Long].collect().toSet
+    val got = adopted(lay, util.Scratch.dir("footerstats_layout_meta"), Seq("d")) {
+      spark.read.parquet(lay).filter(col("d").between(lo, hi))
+        .select("event_id").as[Long].collect().toSet
+    }
     assert(got == want && want.nonEmpty)
   }
 
@@ -1875,13 +1911,17 @@ class OperatorsSpec extends AnyFunSuite {
     assert(kept2d < files.size && keptU < files.size && keptE < files.size,
       s"the Z-order layout must bound BOTH dimensions' envelopes " +
         s"($keptU, $keptE, 2d $kept2d of ${files.size})")
-    val got = FileStats.readWhere(spark, stats, Seq(uRange, eRange))
+    val box = col("user_id").between(3L, 6L) && col("event_id").between(200L, 450L)
+    val want = spark.read.parquet(lay).filter(box)
       .select("event_id").as[Long].collect().toSet
-    val want = spark.read.parquet(lay)
-      .filter(col("user_id").between(3L, 6L) &&
-        col("event_id").between(200L, 450L))
-      .select("event_id").as[Long].collect().toSet
-    assert(got == want && want.nonEmpty)
+    adopted(lay, util.Scratch.dir("footerstats_zorder_meta"),
+        Seq("user_id", "event_id")) {
+      val pruned = spark.read.parquet(lay).filter(box)
+      assert(scannedFiles(pruned) == kept2d,
+        "the planner must open exactly the 2-D candidate files")
+      assert(pruned.select("event_id").as[Long].collect().toSet == want)
+    }
+    assert(want.nonEmpty)
     stats.unpersist()
   }
 
@@ -1931,7 +1971,7 @@ class OperatorsSpec extends AnyFunSuite {
         StructField("path", StringType), StructField("row_count", LongType),
         StructField("v_min", IntegerType), StructField("v_max", IntegerType),
         StructField("v_nulls", LongType))))
-    assert(FileStats.candidateFiles(unknown, "v", lit(0), lit(10))
+    assert(FileStats.candidateFilesAll(unknown, Seq(("v", lit(0), lit(10))))
       .collect().map(_.getString(0)).toSeq == Seq("f1"))
   }
 
@@ -2048,46 +2088,48 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("manifest-driven maintenance loop: stats and bloom indexes follow landed files incrementally") {
-    import sources.{FileBloomIndex, FileManifest, FileStats}
+    import sinks.ManifestTable
     val land = util.Scratch.dir("maint_land")
-    val man = util.Scratch.dir("maint_man") + "/manifest"
-    val statsRoot = util.Scratch.dir("maint_stats") + "/stats"
-    val bloomRoot = util.Scratch.dir("maint_bloom") + "/bloom"
+    val root = util.Scratch.dir("maint_meta")
     val docs = sources.Tables.documents(spark, sf)
-    // one maintenance tick: discover → index ONLY the delta → commit
+    def files(): Set[String] =
+      if (!ManifestTable.exists(spark, root)) Set.empty
+      else ManifestTable.filesAt(spark, root,
+        ManifestTable.latestVersion(spark, root)).toSet
+    // one maintenance tick: adopt describes ONLY the new files, the
+    // bloom build indexes ONLY the files it lacks
     def tick(): Int = {
-      val nf = FileManifest.newFiles(spark, land, man)
-      val files = nf.select("path").collect().map(_.getString(0)).toSeq
-      if (files.nonEmpty) {
-        FileStats.commitStats(
-          FileStats.collectFor(spark, files, Seq("doc_id")), statsRoot)
-        FileBloomIndex.commitDelta(
-          FileBloomIndex.buildFor(spark, files, "doc_id"), bloomRoot)
-        FileManifest.commit(spark, man, nf)
-      }
-      files.size
+      val before = files()
+      ManifestTable.adopt(spark, land, root, Seq("doc_id")): Unit
+      ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+      (files() -- before).size
     }
     docs.filter(col("doc_id") < 100).repartition(3)
       .write.mode("append").parquet(land)
     val n1 = tick()
     assert(n1 >= 2, "wave 1 should land several files")
+    val v1 = ManifestTable.latestVersion(spark, root)
     assert(tick() == 0, "nothing new => nothing re-indexed")
+    assert(ManifestTable.latestVersion(spark, root) == v1,
+      "an idle tick commits nothing")
     docs.filter(col("doc_id") >= 100).repartition(3)
       .write.mode("append").parquet(land)
     val n2 = tick()
     assert(n2 >= 2, "wave 2 indexes only its own files")
     // the folded metadata covers every live file…
-    assert(FileStats.readStats(spark, statsRoot).count() == n1 + n2)
-    assert(FileBloomIndex.read(spark, bloomRoot).count() == n1 + n2)
+    assert(files().size == n1 + n2)
+    assert(sources.FileBloomIndex.read(spark,
+      ManifestTable.bloomRootFor(root, "doc_id")).count() == n1 + n2)
     // …and pruned reads through it stay exact across both waves
-    val gotRange = FileStats.readRange(spark,
-      FileStats.readStats(spark, statsRoot), "doc_id", lit(90L), lit(110L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotRange == (90L to 110L).toSet)
-    val gotKeys = FileBloomIndex.readKeys(spark,
-      FileBloomIndex.read(spark, bloomRoot), "doc_id", Seq(lit(5L), lit(150L)))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotKeys == Set(5L, 150L))
+    plans.GraftTables.register(land, root)
+    try {
+      val gotRange = spark.read.parquet(land).filter(col("doc_id").between(90L, 110L))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(gotRange == (90L to 110L).toSet)
+      val gotKeys = spark.read.parquet(land).filter(col("doc_id").isin(5L, 150L))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(gotKeys == Set(5L, 150L))
+    } finally plans.GraftTables.unregister(land)
   }
 
   test("file bloom index: point lookup opens only admitted files, never misses the true file") {
@@ -2095,7 +2137,8 @@ class OperatorsSpec extends AnyFunSuite {
     val docs = sources.Tables.documents(spark, sf)
     val lay = util.Scratch.dir("fbi_lay")
     docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
-    val idx = FileBloomIndex.build(spark, lay, "doc_id")
+    val idx = FileBloomIndex.buildFor(spark, sources.FileManifest.listFiles(spark, lay)
+      .select("path").as[String].collect().toSeq, "doc_id")
     val total = idx.count()
     assert(total >= 6, s"hash layout should spread over files, got $total")
     val cand = FileBloomIndex.candidateFiles(idx, Seq(lit(3L)))
@@ -2105,109 +2148,100 @@ class OperatorsSpec extends AnyFunSuite {
       .select(input_file_name()).head().getString(0)
     assert(cand.contains(trueFile), "no false negatives — ever")
     // pruned read == plain filter
-    val got = FileBloomIndex.readKeys(spark, idx, "doc_id",
-      Seq(lit(3L), lit(11L))).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
     val want = spark.read.parquet(lay)
       .filter(col("doc_id").isin(3L, 11L)).select("doc_id")
       .collect().map(_.getLong(0)).toSet
-    assert(got == want && got.nonEmpty)
-    // a key outside the table reads no rows (usually zero files)
-    assert(FileBloomIndex.readKeys(spark, idx, "doc_id",
-      Seq(lit(99999999L))).count() == 0)
+    val root = util.Scratch.dir("fbi_meta")
+    sinks.ManifestTable.adopt(spark, lay, root, Seq("doc_id")): Unit
+    sinks.ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+    plans.GraftTables.register(lay, root)
+    try {
+      val probe = spark.read.parquet(lay).filter(col("doc_id").isin(3L, 11L))
+      assert(scannedFiles(probe) < total, "the probe must open only admitted files")
+      val got = probe.select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(got == want && got.nonEmpty)
+      // a key outside the table reads no rows (usually zero files)
+      assert(spark.read.parquet(lay).filter(col("doc_id") === 99999999L)
+        .count() == 0)
+    } finally plans.GraftTables.unregister(lay)
   }
 
-  test("bloom index: full rebuild after a layout rewrite replaces the epoch — repeat passes stay exact; a stale delta-merge fails with the contract named, reconcile repairs it") {
-    import sources.{FileBloomIndex, FileManifest}
+  test("bloom index over an adopted directory: repeat layout rewrites stay exact; rows for dead files prune nothing") {
+    import sinks.ManifestTable
     val docs = sources.Tables.documents(spark, sf)
     val lay = util.Scratch.dir("fbi_rw_lay")
-    val root = util.Scratch.dir("fbi_rw_idx") + "/index"
+    val root = util.Scratch.dir("fbi_rw_meta")
     // the q_bloom_lookup shape: overwrite re-lands the layout under
-    // FRESH part names, then a full rebuild commits. Two passes in one
-    // JVM — the r7 crash was pass 2 opening pass 1's deleted files,
-    // because the rebuild was merged by path instead of replacing.
-    def pass(): Set[Long] = {
+    // FRESH part names, then adopt + bloom build. Two passes in one
+    // JVM: pass 2 must never open pass 1's deleted files
+    def pass(): (Set[Long], Long) = {
       docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
-      FileBloomIndex.commitFull(
-        FileBloomIndex.build(spark, lay, "doc_id"), root)
-      FileBloomIndex.readKeys(spark,
-          FileBloomIndex.read(spark, root), "doc_id", Seq(lit(7L), lit(21L)))
-        .select("doc_id").collect().map(_.getLong(0)).toSet
+      ManifestTable.adopt(spark, lay, root, Seq("doc_id")): Unit
+      ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+      val probe = spark.read.parquet(lay).filter(col("doc_id").isin(7L, 21L))
+      (probe.select("doc_id").collect().map(_.getLong(0)).toSet,
+        scannedFiles(probe))
     }
-    val first = pass()
-    val second = pass()
-    assert(first == Set(7L, 21L) && second == first)
-    // replace semantics: the epoch holds exactly the live files' rows
-    assert(FileBloomIndex.read(spark, root).count() ==
-      FileManifest.listFiles(spark, lay).count())
-    // pin the failure mode commitFull exists to prevent: merging a
-    // rebuild keeps the deleted files' rows, and the read path names
-    // the freshness contract instead of a raw PATH_NOT_FOUND
-    docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
-    FileBloomIndex.commitDelta(
-      FileBloomIndex.build(spark, lay, "doc_id"), root)
-    val ex = intercept[IllegalStateException] {
-      FileBloomIndex.readKeys(spark,
-        FileBloomIndex.read(spark, root), "doc_id", Seq(lit(7L))).collect()
-    }
-    assert(ex.getMessage.contains("stale") &&
-      ex.getMessage.contains("reconcile"))
-    // reconcile drops the dead rows; reads are exact again, and a
-    // second reconcile on the now-clean index commits nothing
-    assert(FileBloomIndex.reconcile(spark, root, lay).nonEmpty)
-    val repaired = FileBloomIndex.readKeys(spark,
-        FileBloomIndex.read(spark, root), "doc_id", Seq(lit(7L), lit(21L)))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(repaired == Set(7L, 21L))
-    assert(FileBloomIndex.reconcile(spark, root, lay).isEmpty)
+    plans.GraftTables.register(lay, root)
+    try {
+      val (first, opened1) = pass()
+      val (second, opened2) = pass()
+      assert(first == Set(7L, 21L) && second == first)
+      val live = sources.FileManifest.listFiles(spark, lay)
+        .select("path").as[String].collect().toSet
+      assert(opened1 < live.size && opened2 < live.size,
+        s"both passes must prune ($opened1, $opened2 of ${live.size})")
+      // the manifest holds exactly the live files; the bloom index
+      // keeps the first pass's dead rows, which exclude nothing
+      assert(ManifestTable.filesAt(spark, root,
+        ManifestTable.latestVersion(spark, root)).toSet == live)
+      assert(sources.FileBloomIndex.read(spark,
+        ManifestTable.bloomRootFor(root, "doc_id")).count() == 2L * live.size)
+    } finally plans.GraftTables.unregister(lay)
   }
 
   test("maintenance tick after compaction: new files delta-indexed, dead rows reconciled away, pruned reads exact") {
-    import sources.{FileBloomIndex, FileManifest, FileStats, MetadataMaintenance}
+    import sinks.ManifestTable
     val docs = sources.Tables.documents(spark, sf)
     val land = util.Scratch.dir("maint2_land")
-    val man = util.Scratch.dir("maint2_man") + "/manifest"
-    val statsRoot = util.Scratch.dir("maint2_stats") + "/stats"
-    val bloomRoot = util.Scratch.dir("maint2_bloom") + "/bloom"
-    def tick() = MetadataMaintenance.tick(spark, land, man,
-      statsRoot, Seq("doc_id"), bloomRoot, "doc_id")
+    val root = util.Scratch.dir("maint2_meta")
+    def tick(): Option[Long] = {
+      val v = ManifestTable.adopt(spark, land, root, Seq("doc_id"))
+      ManifestTable.buildBloom(spark, root, "doc_id"): Unit
+      v
+    }
+    def live(): Set[String] = sources.FileManifest.listFiles(spark, land)
+      .select("path").as[String].collect().toSet
     // land a fragmented partitioned layout (streaming-ingest shape)
     docs.repartition(6).write.partitionBy("lang").mode("append").parquet(land)
     val t1 = tick()
-    assert(t1.newFiles >= 6 && t1.statsReconciled.isEmpty &&
-      t1.bloomReconciled.isEmpty)
-    // compaction rewrites fragmented partition dirs under NEW paths
-    graft.sinks.ParquetSink.compactTable(spark, land,
-      maxFilesPerDir = 2, targetFilesPerDir = 1)
-    // before the tick the stats table references dead files — the
-    // read path must refuse, naming the contract, not prune wrongly
-    intercept[IllegalStateException] {
-      FileStats.readRange(spark, FileStats.readStats(spark, statsRoot),
-        "doc_id", lit(0L), lit(10000000L)).collect()
-    }
-    // one tick: compacted files surface as new (fresh paths), dead
-    // rows are reconciled out of both tables
-    val t2 = tick()
-    assert(t2.newFiles >= 1 && t2.statsReconciled.nonEmpty &&
-      t2.bloomReconciled.nonEmpty)
-    val live = FileManifest.listFiles(spark, land).count()
-    assert(FileStats.readStats(spark, statsRoot).count() == live)
-    assert(FileBloomIndex.read(spark, bloomRoot).count() == live)
-    // point and range reads are exact again and open no dead paths
-    val wantRange = docs.filter(col("doc_id").between(40L, 60L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val gotRange = FileStats.readRange(spark,
-        FileStats.readStats(spark, statsRoot), "doc_id", lit(40L), lit(60L))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotRange == wantRange)
-    val gotKeys = FileBloomIndex.readKeys(spark,
-        FileBloomIndex.read(spark, bloomRoot), "doc_id",
-        Seq(lit(5L), lit(42L)))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotKeys == Set(5L, 42L))
-    // an idle tick is a no-op everywhere
-    val t3 = tick()
-    assert(t3 == MetadataMaintenance.Tick(0, None, None))
+    assert(t1.nonEmpty && ManifestTable.filesAt(spark, root, t1.get).size >= 6)
+    plans.GraftTables.register(land, root)
+    try {
+      val wantRange = docs.filter(col("doc_id").between(40L, 60L))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      def gotRange(): Set[Long] = spark.read.parquet(land)
+        .filter(col("doc_id").between(40L, 60L))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      // compaction rewrites fragmented partition dirs under NEW paths
+      graft.sinks.ParquetSink.compactTable(spark, land,
+        maxFilesPerDir = 2, targetFilesPerDir = 1)
+      // before the tick the manifest names dead files and lacks the
+      // compacted ones: dead entries exclude nothing, unknown files are
+      // kept — reads stay exact
+      assert(gotRange() == wantRange)
+      // one tick: compacted files described, dead entries dropped
+      val t2 = tick()
+      assert(t2 == Some(t1.get + 1))
+      assert(ManifestTable.filesAt(spark, root, t2.get).toSet == live())
+      // point and range reads are exact and open no dead paths
+      assert(gotRange() == wantRange)
+      val gotKeys = spark.read.parquet(land).filter(col("doc_id").isin(5L, 42L))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(gotKeys == Set(5L, 42L))
+      // an idle tick is a no-op everywhere
+      assert(tick().isEmpty && ManifestTable.latestVersion(spark, root) == t2.get)
+    } finally plans.GraftTables.unregister(land)
   }
 
   test("drift: KS hits exact extremes; PSI terms vanish on identical epochs, localize a shift") {
@@ -2957,17 +2991,16 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("table summary from stats epoch: exact count/extrema/nulls with zero data reads") {
-    import sources.FileStats
+    import sinks.ManifestTable
     val dir = java.nio.file.Files
       .createTempDirectory("graft-meta-summary").toString
     val df = Seq[(java.lang.Long, java.lang.Double)](
       (1L, 2.0), (2L, null), (3L, -7.5), (null, 4.0), (5L, 9.25))
       .toDF("k", "v")
     df.repartition(3).write.mode("overwrite").parquet(s"$dir/t")
-    FileStats.commitStatsFull(
-      FileStats.collect(spark, s"$dir/t", Seq("k", "v")), s"$dir/stats")
-    val got = FileStats.tableSummary(
-      FileStats.readStats(spark, s"$dir/stats"), Seq("k", "v")).collect()(0)
+    val v = ManifestTable.adopt(spark, s"$dir/t", s"$dir/meta", Seq("k", "v")).get
+    val got = sources.FileStats.tableSummary(
+      ManifestTable.manifest(spark, s"$dir/meta", v), Seq("k", "v")).collect()(0)
     assert(got.getLong(got.fieldIndex("row_count")) == 5L)
     assert(got.getLong(got.fieldIndex("k_min")) == 1L)
     assert(got.getLong(got.fieldIndex("k_max")) == 5L)

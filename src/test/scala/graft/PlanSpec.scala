@@ -529,10 +529,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   /** Planner-integrated data skipping (plans.StatsPruneRule): once a
-    * directory's metadata roots are registered, a PLAIN
+    * directory is adopted and registered, a PLAIN
     * `spark.read.parquet(dir).filter(...)` must open fewer files than
-    * the directory holds — no readRange/readKeys opt-in — and return
-    * exactly the unpruned rows. */
+    * the directory holds — no API opt-in — and return exactly the
+    * unpruned rows. */
   test("registered table: plain filters prune files at planning time via stats and bloom epochs") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.FileSourceScanExec
@@ -547,16 +547,15 @@ class PlanSpec extends AnyFunSuite {
     val lay = util.Scratch.dir("rule_stats_lay")
     docs.repartitionByRange(8, col("doc_id"))
       .write.mode("overwrite").parquet(lay)
-    val statsRoot = util.Scratch.dir("rule_stats_meta") + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
+    val statsRoot = util.Scratch.dir("rule_stats_meta")
+    sinks.ManifestTable.adopt(spark, lay, statsRoot, Seq("doc_id")): Unit
     // hash layout on doc_id → envelopes prune nothing, blooms must
     val hashLay = util.Scratch.dir("rule_bloom_lay")
     docs.repartition(8, col("doc_id"))
       .write.mode("overwrite").parquet(hashLay)
-    val bloomRoot = util.Scratch.dir("rule_bloom_meta") + "/bloom"
-    sources.FileBloomIndex.commitFull(
-      sources.FileBloomIndex.build(spark, hashLay, "doc_id"), bloomRoot)
+    val bloomRoot = util.Scratch.dir("rule_bloom_meta")
+    sinks.ManifestTable.adopt(spark, hashLay, bloomRoot, Seq("doc_id")): Unit
+    sinks.ManifestTable.buildBloom(spark, bloomRoot, "doc_id"): Unit
     try {
       val want = docs.filter(col("doc_id").between(10L, 40L))
         .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -566,8 +565,7 @@ class PlanSpec extends AnyFunSuite {
       val totalFiles = scannedFiles(spark.read.parquet(lay).filter(lit(true)))
       assert(scannedFiles(before) == totalFiles,
         "without registration nothing should be pruned")
-      plans.GraftTables.register(lay,
-        statsRoot = Some(statsRoot), statsCols = Seq("doc_id"))
+      plans.GraftTables.register(lay, statsRoot)
       val after = spark.read.parquet(lay)
         .filter(col("doc_id").between(10L, 40L))
       assert(scannedFiles(after) < totalFiles,
@@ -575,8 +573,7 @@ class PlanSpec extends AnyFunSuite {
       assert(after.select("doc_id").collect().map(_.getLong(0)).toSet == want,
         "pruning must be invisible in results")
       // bloom: point lookups through a plain isin filter
-      plans.GraftTables.register(hashLay,
-        bloomRoot = Some(bloomRoot), bloomKey = Some("doc_id"))
+      plans.GraftTables.register(hashLay, bloomRoot)
       val probe = spark.read.parquet(hashLay)
         .filter(col("doc_id").isin(7L, 21L))
       val hashTotal = scannedFiles(spark.read.parquet(hashLay).filter(lit(true)))
@@ -585,7 +582,7 @@ class PlanSpec extends AnyFunSuite {
       assert(probe.select("doc_id").collect().map(_.getLong(0)).toSet ==
         Set(7L, 21L))
       // staleness degrades to keep, never to wrong rows: rewrite the
-      // layout (fresh file names) WITHOUT refreshing the stats epoch
+      // layout (fresh file names) WITHOUT adopting again
       docs.repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(lay)
       val stale = spark.read.parquet(lay)
@@ -654,17 +651,15 @@ class PlanSpec extends AnyFunSuite {
     val dims = Seq("t", "user_id", "cents")
     val lay = util.Scratch.dir("rule_hilbert_lay")
     sinks.ParquetSink.writeZOrdered(ev, lay, dims, numFiles = 64, bits = 0)
-    val statsRoot = util.Scratch.dir("rule_hilbert_meta") + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, dims), statsRoot)
+    val statsRoot = util.Scratch.dir("rule_hilbert_meta")
+    sinks.ManifestTable.adopt(spark, lay, statsRoot, dims): Unit
     def sameRows(probe: org.apache.spark.sql.DataFrame,
                  cond: org.apache.spark.sql.Column): Unit =
       assert(probe.select("event_id").collect().map(_.getLong(0)).toSet ==
         ev.filter(cond).select("event_id").collect().map(_.getLong(0)).toSet,
         "pruning must be invisible in results")
     try {
-      plans.GraftTables.register(lay,
-        statsRoot = Some(statsRoot), statsCols = dims)
+      plans.GraftTables.register(lay, statsRoot)
       val total = scannedFiles(spark.read.parquet(lay).filter(lit(true)))
       val q = dims.map(c =>
         c -> ev.stat.approxQuantile(c, Array(0.1, 0.4, 0.6), 0.001)).toMap
@@ -778,14 +773,12 @@ class PlanSpec extends AnyFunSuite {
       .repartitionByRange(4, col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
       .write.parquet(layB)
-    val (sA, sB) = (s"$base/statsA", s"$base/statsB")
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, layA, Seq("doc_id")), sA)
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, layB, Seq("doc_id")), sB)
+    val (sA, sB) = (s"$base/metaA", s"$base/metaB")
+    sinks.ManifestTable.adopt(spark, layA, sA, Seq("doc_id")): Unit
+    sinks.ManifestTable.adopt(spark, layB, sB, Seq("doc_id")): Unit
     try {
-      plans.GraftTables.register(layA, Some(sA), Seq("doc_id"))
-      plans.GraftTables.register(layB, Some(sB), Seq("doc_id"))
+      plans.GraftTables.register(layA, sA)
+      plans.GraftTables.register(layB, sB)
       val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
       // probes the low end of A and nothing of B: B's 4 files must all
       // prove out, and most of A's too
@@ -814,7 +807,7 @@ class PlanSpec extends AnyFunSuite {
 
   /** Version-keyed proofs in the epoch cache: planning a hot table twice must
     * compute the metadata proofs ONCE (the second identical query
-    * issues no metadata job), and a new stats commit must invalidate
+    * issues no metadata job), and a new adopt commit must invalidate
     * structurally (version in the key), with pruning still exact. */
   test("planning proof cache: second identical query recomputes nothing; a commit invalidates") {
     import org.apache.spark.sql.functions._
@@ -825,11 +818,10 @@ class PlanSpec extends AnyFunSuite {
     docs.repartitionByRange(4, col("doc_id"))
       .sortWithinPartitions(col("doc_id")).write.parquet(lay)
     val statsRoot = java.nio.file.Files
-      .createTempDirectory("graft-proofcache-meta").toString + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
+      .createTempDirectory("graft-proofcache-meta").toString + "/meta"
+    sinks.ManifestTable.adopt(spark, lay, statsRoot, Seq("doc_id")): Unit
     try {
-      plans.GraftTables.register(lay, Some(statsRoot), Seq("doc_id"))
+      plans.GraftTables.register(lay, statsRoot)
       val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
       def run(): Set[Long] = spark.read.parquet(lay)
         .filter(col("doc_id") <= lo + 2)
@@ -849,18 +841,17 @@ class PlanSpec extends AnyFunSuite {
       assert(run() == want)
       val c1b = plans.StatsPruneRule.proofComputations.get()
       assert(c1b > c1, "a cleared cache must recompute the proof")
-      // a fresh stats commit (new data appended, then rebuilt stats)
-      // bumps the epoch version: the cache key changes, the proof
+      // a fresh adopt commit (new data appended, then adopted) bumps
+      // the manifest version: the cache key changes, the proof
       // recomputes, and pruning stays exact over the grown table
       docs.filter(col("doc_id") === lo).withColumn("doc_id", col("doc_id") - 1)
         .repartition(1).write.mode("append").parquet(lay)
-      sources.FileStats.commitStatsFull(
-        sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
+      sinks.ManifestTable.adopt(spark, lay, statsRoot, Seq("doc_id")): Unit
       val c2 = plans.StatsPruneRule.proofComputations.get()
       val wantGrown = want + (lo - 1)
       assert(run() == wantGrown, "post-commit read must see the new row")
       assert(plans.StatsPruneRule.proofComputations.get() > c2,
-        "a stats commit must invalidate the cached proof")
+        "an adopt commit must invalidate the cached proof")
     } finally plans.GraftTables.unregister(lay)
   }
 
@@ -868,19 +859,36 @@ class PlanSpec extends AnyFunSuite {
     * COUNT/MIN/MAX over a registered directory must collapse to a
     * LocalRelation at optimization time — no file scan at all — and
     * the rewrite must refuse to fire (degrading to a correct scan)
-    * for filtered aggregates and for stats that no longer cover the
-    * live file set. */
+    * for filtered aggregates and for a manifest that no longer covers
+    * the live file set. */
   test("registered table: whole-table count/min/max answers from the stats epoch, no scan") {
     import org.apache.spark.sql.functions._
     val docs = sources.Tables.documents(spark, sf)
     val lay = util.Scratch.dir("rule_meta_agg_lay")
     docs.repartition(6).write.mode("overwrite").parquet(lay)
-    val statsRoot = util.Scratch.dir("rule_meta_agg_meta") + "/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
+    val statsRoot = util.Scratch.dir("rule_meta_agg_meta")
+    sinks.ManifestTable.adopt(spark, lay, statsRoot, Seq("doc_id")): Unit
+    // commit `entries` as the adopted root's next manifest version,
+    // carrying the current version's schema and adoption sidecars (the
+    // poisoned entries below mimic footers whose writer omitted stats)
+    val manifests = sinks.ManifestTable.manifestsRoot(statsRoot)
+    def commitEntries(entries: org.apache.spark.sql.DataFrame): Unit = {
+      val cur = new org.apache.hadoop.fs.Path(
+        s"$manifests/epoch=${sinks.ManifestTable.latestVersion(spark, statsRoot)}")
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = cur.getFileSystem(conf)
+      sinks.VersionedTable.writeStaged(entries, manifests) { dir =>
+        Seq("_graft_schema.json", "_graft_adopted").foreach(n =>
+          org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(cur, n),
+            fs, new org.apache.hadoop.fs.Path(dir, n), false, conf): Unit)
+      }: Unit
+    }
+    val exact = sinks.ManifestTable.manifest(spark, statsRoot,
+      sinks.ManifestTable.latestVersion(spark, statsRoot)).collect().toSeq
+    val exactSchema = sinks.ManifestTable.manifest(spark, statsRoot,
+      sinks.ManifestTable.latestVersion(spark, statsRoot)).schema
     try {
-      plans.GraftTables.register(lay,
-        statsRoot = Some(statsRoot), statsCols = Seq("doc_id"))
+      plans.GraftTables.register(lay, statsRoot)
       val agg = spark.read.parquet(lay).agg(
         count(lit(1)).as("n"), count(col("doc_id")).as("nn"),
         min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
@@ -914,7 +922,8 @@ class PlanSpec extends AnyFunSuite {
       // null-skipping fold would return a plausible wrong answer, so
       // any consulted unknown cell must force a scan; aggregates that
       // consult only row_count may still answer from metadata.
-      val poisoned = sources.FileStats.collect(spark, lay, Seq("doc_id"))
+      val poisoned = spark.createDataFrame(
+          java.util.Arrays.asList(exact: _*), exactSchema)
         .withColumn("_rn", row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col("path"))))
         .withColumn("doc_id_nulls",
@@ -927,7 +936,7 @@ class PlanSpec extends AnyFunSuite {
           when(col("_rn") === 1, lit(null).cast("long"))
             .otherwise(col("doc_id_max")))
         .drop("_rn")
-      sources.FileStats.commitStatsFull(poisoned, statsRoot)
+      commitEntries(poisoned)
       val unknownCnt = spark.read.parquet(lay)
         .agg(count(col("doc_id")).as("nn"))
       assert(unknownCnt.queryExecution.executedPlan.toString.contains("FileScan"),
@@ -947,11 +956,11 @@ class PlanSpec extends AnyFunSuite {
           "other columns must not disqualify it")
       assert(rowsOnly.collect()(0).getLong(0) == docs.count())
       // restore exact stats for the staleness case below
-      sources.FileStats.commitStatsFull(
-        sources.FileStats.collect(spark, lay, Seq("doc_id")), statsRoot)
+      commitEntries(spark.createDataFrame(
+        java.util.Arrays.asList(exact: _*), exactSchema))
       // staleness: rewrite the layout (different rows, fresh names)
-      // WITHOUT refreshing stats — coverage proof fails, the scan runs,
-      // and the answer reflects the LIVE data, not the stale epoch
+      // WITHOUT adopting again — coverage proof fails, the scan runs,
+      // and the answer reflects the LIVE data, not the stale manifest
       docs.filter(col("doc_id") < 20L).repartition(2)
         .write.mode("overwrite").parquet(lay)
       val stale = spark.read.parquet(lay).agg(count(lit(1)).as("n"))

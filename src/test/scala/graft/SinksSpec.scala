@@ -469,8 +469,8 @@ class SinksSpec extends AnyFunSuite {
   /** The OPTIMIZE loop: streaming-style appends degrade a curve
     * layout's skipping (each appended file spans ~the full domain of
     * every clustering column), reclusterTable restores it, and one
-    * MetadataMaintenance tick brings the stats epoch back in step —
-    * live files covered, dead paths dropped. */
+    * maintenance tick (adopt + bloom build) brings the directory's
+    * manifest back in step — live files covered, dead paths dropped. */
   test("reclusterTable restores box-query skipping after appends; tick refreshes metadata") {
     val ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
       .select(col("event_id"),
@@ -511,34 +511,35 @@ class SinksSpec extends AnyFunSuite {
       s"appended files should degrade skipping: clean=$clean degraded=$degraded")
     // metadata loop across the rewrite: tick before (indexes appended
     // files), recluster, tick after (indexes new layout, drops dead)
-    val man = s"$base/manifest"
-    val statsRoot = s"$base/meta/stats"
-    val bloomRoot = s"$base/meta/bloom"
-    sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id"): Unit
+    val meta = s"$base/meta"
+    def tick(): Option[Long] = {
+      val v = sinks.ManifestTable.adopt(spark, dir, meta, dims)
+      sinks.ManifestTable.buildBloom(spark, meta, "event_id"): Unit
+      v
+    }
+    val before = tick().get
     sinks.ParquetSink.reclusterTable(spark, dir, dims, 48)
     val restored = candidates()
     assert(restored <= clean + 4,
       s"recluster must restore skipping: clean=$clean restored=$restored " +
         s"(degraded was $degraded)")
     assert(rows() == allRows, "recluster must preserve every row")
-    val t = sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id")
-    assert(t.statsReconciled.nonEmpty && t.bloomReconciled.nonEmpty,
-      "tick after recluster must drop the dead pre-rewrite paths")
-    // the stats epoch now covers exactly the live files
+    val after = tick()
+    assert(after == Some(before + 1),
+      "tick after recluster must commit the new layout in one version")
+    val old = sinks.ManifestTable.filesAt(spark, meta, before).toSet
+    val indexed = sinks.ManifestTable.filesAt(spark, meta, after.get).toSet
+    assert((old & indexed).isEmpty, "the dead pre-rewrite paths must be dropped")
+    // the manifest now covers exactly the live files
     val live = new java.io.File(dir).listFiles()
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(_.getName).toSet
-    val indexed = sinks.VersionedTable.read(spark, statsRoot)
-      .select("path").collect()
-      .map(r => new java.io.File(r.getString(0)).getName).toSet
-    assert(indexed == live,
-      s"stats epoch must cover exactly the live files (${indexed.size} vs ${live.size})")
+    assert(indexed.map(p => new java.io.File(p).getName) == live,
+      s"manifest must cover exactly the live files (${indexed.size} vs ${live.size})")
   }
 
-  /** The incremental form: selection is metadata-only from the stats
-    * epoch, only the degraded (appended) files are rewritten — the
+  /** The incremental form: selection is metadata-only from the adopted
+    * manifest, only the degraded (appended) files are rewritten — the
     * clean curve files survive BY NAME, which is the cost-∝-degraded
     * proof — and skipping is restored. */
   test("reclusterIncremental rewrites only the degraded files and restores skipping") {
@@ -560,12 +561,9 @@ class SinksSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(dir))
     val appended = files() -- cleanFiles
     assert(appended.size == 4)
-    val man = s"$base/manifest"
-    val statsRoot = s"$base/meta/stats"
-    val bloomRoot = s"$base/meta/bloom"
-    sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id"): Unit
-    val rep = sinks.ParquetSink.reclusterIncremental(spark, dir, dims, statsRoot)
+    val meta = s"$base/meta"
+    sinks.ManifestTable.adopt(spark, dir, meta, dims): Unit
+    val rep = sinks.ParquetSink.reclusterIncremental(spark, dir, dims, meta)
     // exactly the appended (wide-envelope) files were rewritten
     assert(rep.rewrittenFiles == 4 && rep.keptFiles == cleanFiles.size,
       s"selection must be exactly the degraded files: $rep")
@@ -597,10 +595,97 @@ class SinksSpec extends AnyFunSuite {
     assert(candidates() <= cleanFiles.size / 2 + rep.newFiles,
       "box skipping must be restored after the incremental rewrite")
     // idempotence: a second pass finds nothing degraded
-    sources.MetadataMaintenance.tick(
-      spark, dir, man, statsRoot, dims, bloomRoot, "event_id"): Unit
-    val rep2 = sinks.ParquetSink.reclusterIncremental(spark, dir, dims, statsRoot)
+    sinks.ManifestTable.adopt(spark, dir, meta, dims): Unit
+    val rep2 = sinks.ParquetSink.reclusterIncremental(spark, dir, dims, meta)
     assert(rep2.rewrittenFiles == 0, s"second pass must be a no-op: $rep2")
+  }
+
+  /** ADOPT converges: after a compaction rewrites a plain directory
+    * under fresh names, ONE adopt commits exactly one version whose
+    * files are the live listing; an adopt with nothing changed commits
+    * nothing. */
+  test("adopt converges after compaction: one new version mirrors the live listing; an idle adopt commits nothing") {
+    import sinks.ManifestTable
+    val base = java.nio.file.Files.createTempDirectory("graft-adopt").toString
+    val (dir, root) = (s"$base/t", s"$base/meta")
+    val docs = sources.Tables.documents(spark, sf).select("doc_id", "lang")
+    docs.repartition(6).write.partitionBy("lang").parquet(dir)
+    def live(): Set[String] = sources.FileManifest.listFiles(spark, dir)
+      .select("path").as[String].collect().toSet
+    val v0 = ManifestTable.adopt(spark, dir, root, Seq("doc_id")).get
+    assert(ManifestTable.filesAt(spark, root, v0).toSet == live())
+    // adopted files are referenced, never owned: vacuum leaves them be
+    ManifestTable.vacuum(spark, root, keep = 1, ttlMs = 0L)
+    assert(ManifestTable.filesAt(spark, root, v0).toSet == live())
+    sinks.ParquetSink.compactTable(spark, dir, maxFilesPerDir = 2,
+      targetFilesPerDir = 1)
+    val v1 = ManifestTable.adopt(spark, dir, root, Seq("doc_id"))
+    assert(v1 == Some(v0 + 1), s"one adopt, one version: $v1")
+    assert(ManifestTable.filesAt(spark, root, v1.get).toSet == live())
+    assert(ManifestTable.manifest(spark, root, v1.get)
+      .agg(sum("row_count")).head().getLong(0) == docs.count())
+    assert(ManifestTable.adopt(spark, dir, root, Seq("doc_id")).isEmpty &&
+      ManifestTable.latestVersion(spark, root) == v1.get,
+      "an idle adopt must commit nothing")
+  }
+
+  /** Files landed after the last adopt have no entry: the planner never
+    * prunes them, and whole-table aggregates route to the scan until
+    * the next adopt covers them again. */
+  test("adopted directory: files landed after the last adopt are never pruned; metadata aggregates scan until the next adopt") {
+    import sinks.ManifestTable
+    val base = java.nio.file.Files.createTempDirectory("graft-adopt-late").toString
+    val (dir, root) = (s"$base/t", s"$base/meta")
+    val docs = sources.Tables.documents(spark, sf).select("doc_id", "n_chars")
+    docs.repartitionByRange(4, col("doc_id")).write.parquet(dir)
+    ManifestTable.adopt(spark, dir, root, Seq("doc_id")): Unit
+    plans.GraftTables.register(dir, root)
+    try {
+      val hi = docs.agg(max(col("doc_id"))).head().getLong(0)
+      // a late file whose keys lie above every adopted envelope
+      Seq((hi + 1000L, 1)).toDF("doc_id", "n_chars").coalesce(1)
+        .write.mode("append").parquet(dir)
+      val probe = spark.read.parquet(dir).filter(col("doc_id") > hi)
+      assert(probe.select("doc_id").as[Long].collect().toSeq == Seq(hi + 1000L),
+        "a file the manifest lacks must never be pruned")
+      def countPlan() = spark.read.parquet(dir).agg(count(lit(1)).as("n"))
+      val stale = countPlan()
+      assert(stale.queryExecution.executedPlan.toString.contains("FileScan"),
+        "an uncovered listing must route COUNT(*) to the scan")
+      assert(stale.head().getLong(0) == docs.count() + 1)
+      ManifestTable.adopt(spark, dir, root, Seq("doc_id")): Unit
+      val fresh = countPlan()
+      assert(fresh.queryExecution.executedPlan.toString.contains("LocalTableScan"),
+        "after the next adopt the manifest answers again")
+      assert(fresh.head().getLong(0) == docs.count() + 1)
+    } finally plans.GraftTables.unregister(dir)
+  }
+
+  /** An adopted root has ONE writer: adopt. Appends and row-level ops
+    * refuse (naming adopt), since the next adopt would undo them. */
+  test("adopted root refuses appends and row-level ops, naming adopt") {
+    import sinks.ManifestTable
+    val base = java.nio.file.Files.createTempDirectory("graft-adopt-ro").toString
+    val (dir, root) = (s"$base/t", s"$base/meta")
+    val docs = sources.Tables.documents(spark, sf).select("doc_id", "lang")
+    docs.repartition(2).write.parquet(dir)
+    val v = ManifestTable.adopt(spark, dir, root, Seq("doc_id")).get
+    val ops: Seq[(String, () => Any)] = Seq(
+      "merge" -> (() => ManifestTable.merge(docs.limit(1), root, Seq("doc_id"))),
+      "deleteWhere" -> (() => ManifestTable.deleteWhere(spark, root,
+        col("doc_id") < 5L)),
+      "updateWhere" -> (() => ManifestTable.updateWhere(spark, root,
+        col("doc_id") < 5L, Seq("lang" -> lit("xx")))),
+      "applyCdc" -> (() => ManifestTable.applyCdc(
+        docs.limit(1).withColumn("seq", lit(1L)).withColumn("op", lit("U")),
+        root, Seq("doc_id"))),
+      "optimize" -> (() => ManifestTable.optimize(spark, root, Seq("doc_id"))),
+      "write" -> (() => ManifestTable.write(docs.limit(1), root)))
+    ops.foreach { case (name, op) =>
+      val e = intercept[UnsupportedOperationException](op())
+      assert(e.getMessage.contains("adopt()"), s"$name: ${e.getMessage}")
+    }
+    assert(ManifestTable.latestVersion(spark, root) == v, "nothing committed")
   }
 
   test("Excel sink produces a valid xlsx with sorted styled sheets and null->''") {
@@ -753,48 +838,6 @@ class SinksSpec extends AnyFunSuite {
       "range-clustered files must carry narrower envelopes than the hash layout")
   }
 
-  test("graft DSv2 writeWithStats: zero-option reads prune via auto-discovered stats; time travel degrades soundly") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import org.apache.spark.sql.execution.datasources.FilePartition
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.sparkPlan.collect { case b: BatchScanExec =>
-        b.partitions.flatten.collect { case fp: FilePartition =>
-          fp.files.map(_.filePath.toString).toSeq }.flatten
-      }.flatten.distinct.size
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-auto").toString
-    val root = s"$base/t"
-    val docs = sources.Tables.documents(spark, sf)
-      .select("doc_id", "lang", "n_chars")
-    sources.v2.GraftTableWriter.writeWithStats(
-      docs.repartitionByRange(4, col("doc_id"))
-        .sortWithinPartitions(col("doc_id")), root, Seq("doc_id"))
-    val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
-    val want = docs.filter(col("doc_id") <= lo + 2)
-      .select("doc_id").as[Long].collect().toSet
-    // NO options, NO registration: the _stats convention alone prunes
-    val pruned = spark.read.format("graft").load(root)
-      .filter(col("doc_id") <= lo + 2)
-    assert(scannedFiles(pruned) < 4,
-      "auto-discovered stats must prune a zero-option read")
-    assert(pruned.select("doc_id").as[Long].collect().toSet == want)
-    // a second writeWithStats epoch refreshes the stats to ITS files
-    sources.v2.GraftTableWriter.writeWithStats(
-      docs.repartitionByRange(2, col("doc_id"))
-        .sortWithinPartitions(col("doc_id")), root, Seq("doc_id"))
-    val cur = spark.read.format("graft").load(root)
-      .filter(col("doc_id") <= lo + 2)
-    assert(scannedFiles(cur) < 2)
-    assert(cur.select("doc_id").as[Long].collect().toSet == want)
-    // time travel to epoch 0: the refreshed stats list none of its
-    // files, so nothing is excluded — full listing, exact rows
-    val old = spark.read.format("graft").option("versionAsOf", 0)
-      .load(root).filter(col("doc_id") <= lo + 2)
-    assert(scannedFiles(old) == 4,
-      "stats for another epoch must exclude nothing from this one")
-    assert(old.select("doc_id").as[Long].collect().toSet == want)
-  }
-
   test("graft DSv2 source inherits parquet aggregate pushdown (count/min/max from footers)") {
     val base = java.nio.file.Files
       .createTempDirectory("graft-dsv2-agg").toString
@@ -855,48 +898,39 @@ class SinksSpec extends AnyFunSuite {
       spark.read.format("graft").option("versionAsOf", 99).load(root)
     }
     assert(ex.getMessage.contains("no epoch 99"))
-    // in-source stats pruning: a fresh range layout + stats epoch;
-    // a pushed range filter must open fewer files than the epoch holds
+    // in-source stats pruning: a manifest table over a range layout
+    // carries its own envelopes; a pushed range filter must open fewer
+    // files than the version holds
     val root2 = s"$base/layout"
-    sinks.VersionedTable.write(
+    sinks.ManifestTable.create(
       docs.repartitionByRange(4, col("doc_id"))
-        .sortWithinPartitions(col("doc_id")), root2)
-    val statsRoot = s"$base/stats"
-    sources.FileStats.commitStatsFull(
-      sources.FileStats.collect(spark, s"$root2/epoch=0", Seq("doc_id")),
-      statsRoot)
+        .sortWithinPartitions(col("doc_id")), root2, Seq("doc_id"))
     def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.sparkPlan.collect { case b: BatchScanExec =>
         b.partitions.flatten.collect { case fp: FilePartition =>
           fp.files.map(_.filePath.toString).toSeq }.flatten
       }.flatten.distinct.size
     val lo = docs.agg(min(col("doc_id"))).head().getLong(0)
-    val pruned = spark.read.format("graft")
-      .option("statsRoot", statsRoot).option("statsCols", "doc_id")
-      .load(root2).filter(col("doc_id") <= lo + 2)
-    val full = spark.read.format("graft").load(root2)
-    assert(scannedFiles(full.filter(col("doc_id") <= lo + 2)) == 4,
-      "without metadata options every epoch file is listed")
+    val pruned = spark.read.format("graft").load(root2)
+      .filter(col("doc_id") <= lo + 2)
+    assert(scannedFiles(spark.read.format("graft").load(root2)) == 4,
+      "an unfiltered read lists every file of the version")
     assert(scannedFiles(pruned) < 4,
-      "pushed range filter must prune files against the stats epoch")
+      "pushed range filter must prune files against the manifest envelopes")
     assert(pruned.select("doc_id").as[Long].collect().toSet ==
       docs.filter(col("doc_id") <= lo + 2).select("doc_id")
         .as[Long].collect().toSet,
       "in-source pruning must be invisible in results")
-    // bloom options: equality/IN probes prune on a HASH layout, where
+    // bloom index: equality/IN probes prune on a HASH layout, where
     // every file's min/max envelope spans every probe
     val root3 = s"$base/hashlayout"
-    sinks.VersionedTable.write(
-      docs.repartition(4, col("doc_id")), root3)
-    val bloomRoot = s"$base/bloom"
-    sources.FileBloomIndex.commitFull(
-      sources.FileBloomIndex.build(spark, s"$root3/epoch=0", "doc_id"),
-      bloomRoot)
-    val probe = spark.read.format("graft")
-      .option("bloomRoot", bloomRoot).option("bloomKey", "doc_id")
-      .load(root3).filter(col("doc_id").isin(lo, lo + 1))
+    sinks.ManifestTable.create(
+      docs.repartition(4, col("doc_id")), root3, Seq("doc_id"))
+    sinks.ManifestTable.buildBloom(spark, root3, "doc_id"): Unit
+    val probe = spark.read.format("graft").load(root3)
+      .filter(col("doc_id").isin(lo, lo + 1))
     assert(scannedFiles(probe) < 4,
-      "pushed IN probe must prune files against the bloom epoch")
+      "pushed IN probe must prune files against the bloom index")
     assert(probe.select("doc_id").as[Long].collect().toSet ==
       Set(lo, lo + 1))
   }
