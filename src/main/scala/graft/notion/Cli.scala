@@ -2,7 +2,9 @@ package graft.notion
 
 import graft.sinks.{ExcelSink, JsonlSink}
 import graft.sinks.pbi.{PbiSpec, Refresh, Registry}
+import graft.util.Par
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** M6 — command dispatcher with the reference CLI's full 8-command
   * surface (src/cli/index.ts:410-435):
@@ -53,26 +55,32 @@ object Cli {
     }.toMap
     def raw(ds: String) = JsonlSink.read(env.spark, NotionSchemas.rawRecordSchema,
       dataDir, "raw", ds, dates(ds))
-    // cached: each dataset feeds the JSONL write, the quality report
-    // aggregation AND the returned counts — uncached, the raw read +
-    // from_json normalization would run three times per dataset
+    // cached: each dataset feeds the JSONL write and the quality report
+    // — uncached, the raw read + from_json normalization would run once
+    // per consumer
     val defs = Normalize.workflowDefinitions(raw("workflowDefinitions"), env.cfg).cache()
     val stages = Normalize.workflowStages(raw("workflowStages"), env.cfg).cache()
     val ts = Normalize.timeslices(raw("timeslices"), env.cfg).cache()
     val issues = Quality.allIssues(ts, stages, env.runDate).cache()
     try {
-      val clean = Quality.excludeTimeslices(ts)
-      val outDate = env.runDate
-      JsonlSink.write(defs, dataDir, "canon", "workflowDefinitions", outDate, singleFile = true)
-      JsonlSink.write(stages, dataDir, "canon", "workflowStages", outDate, singleFile = true)
-      JsonlSink.write(clean, dataDir, "canon", "timeslices", outDate, singleFile = true)
-      JsonlSink.write(issues, dataDir, "canon", "qualityIssues", outDate, singleFile = true)
-      val report = Quality.report(ts, issues, env.runDate)
+      // materialize the caches with full parallelism first: the first
+      // single-file write would otherwise build a cache inside its one
+      // coalesced task
+      val Seq(nDefs, nStages, _, nIssues) = Par.map(Seq(defs, stages, ts, issues))(_.count())
+      val outputs = Seq("workflowDefinitions" -> defs, "workflowStages" -> stages,
+        "timeslices" -> Quality.excludeTimeslices(ts), "qualityIssues" -> issues)
+      // the four writes and the report are independent reads of the caches
+      val writes: Seq[() => Option[Quality.RunQualityReport]] = outputs.map { case (ds, df) =>
+        () => { JsonlSink.write(df, dataDir, "canon", ds, env.runDate, singleFile = true); None }
+      }
+      val report = Par.map(writes :+ (() => Some(Quality.report(ts, issues, env.runDate))))(_())
+        .last.get
+      val excluded = report.timeslices_excluded_missing_workflow_definition
       env.log(s"[normalize] total=${report.timeslices_total} " +
-        s"excluded=${report.timeslices_excluded_missing_workflow_definition} " +
-        s"issues=${report.issues_total}")
-      Map("workflowDefinitions" -> defs.count(), "workflowStages" -> stages.count(),
-        "timeslices" -> clean.count(), "qualityIssues" -> issues.count())
+        s"excluded=$excluded issues=${report.issues_total}")
+      // the clean timeslices are exactly those with a workflow definition
+      Map("workflowDefinitions" -> nDefs, "workflowStages" -> nStages,
+        "timeslices" -> (report.timeslices_total - excluded), "qualityIssues" -> nIssues)
     } finally {
       defs.unpersist(); stages.unpersist(); ts.unpersist(); issues.unpersist()
     }
@@ -122,10 +130,11 @@ object Cli {
   def excelExport(env: Env, dataDir: String, outputPath: String): Map[String, Long] = {
     val (defs, stages, ts) = canonTables(env, dataDir)
     val tables = Derive.deriveAll(defs, stages, ts)
-    Derive.assertIntegrity(tables("FactTimeslices"), tables("DimStage"),
+    val checks = Derive.integrityChecks(tables("FactTimeslices"), tables("DimStage"),
       tables("DimWorkflow"), stages, defs)
     val counts = ExcelSink.write(tables.map { case (k, v) =>
-      k -> (if (v.columns.contains("attributes")) v.drop("attributes") else v) }, outputPath)
+      k -> (if (v.columns.contains("attributes")) v.drop("attributes") else v) },
+      outputPath, checks)
     counts.toSeq.sortBy(_._1).foreach { case (k, n) => env.log(s"[excel] $k rows=$n") }
     counts
   }
@@ -291,11 +300,14 @@ object Cli {
         s"Dataset '$datasetName' not found in registry; run pbi:provision first."))
     val (defs, stages, ts) = canonTables(env, dataDir)
     val tables = Derive.deriveAll(defs, stages, ts)
-    val rows = tables.map { case (name, df) =>
+    // collected side by side; the PBI push is driver-side by design (it
+    // posts through one client, in the spec's table order)
+    val names = tables.keys.toSeq
+    val rows = names.zip(Par.map(names) { name =>
+      val df = tables(name)
       val cols = df.columns.toSeq
-      name -> df.collect().toSeq.map(r =>
-        cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-    }
+      df.collect().toSeq.map(r => cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
+    }).toMap
     Refresh.executeWipeAndReload(env.client, groupId, datasetId, spec, rows,
       log = env.log)
   }
@@ -368,7 +380,7 @@ object Cli {
     // cli/index.ts:436-440: top-level failure → log.error + exit 1
     val code =
       try dispatch(env, args.toList)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         env.logger.error("command failed", Some(e.toString)); 1
       }
     spark.stop()

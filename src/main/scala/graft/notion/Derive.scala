@@ -1,5 +1,6 @@
 package graft.notion
 
+import graft.util.Par
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -162,16 +163,14 @@ object Derive {
   /** Resolve a canonical workflow id to (key, label) with the
     * reference's fallback chain (derive/index.ts:131-141).
     *
-    * Both lookup build sides consume the SAME narrow 4-column parsed
-    * intermediate, cached: the definitions' `page_title` is the heaviest
-    * normalize expression (a from_json parse per property), and without
-    * the shared cache each broadcast build would re-scan and re-parse
-    * it (Spark has no cross-branch CSE). Defs are a dimension table —
-    * bounded size — so the cache is a few narrow rows per definition. */
+    * Both lookup build sides read the same narrow 4-column projection
+    * of `defs`, uncached: the CLI derives from canon JSON, where
+    * `page_title` is a plain column, and a cache here would outlive the
+    * command in the session's CacheManager. */
   private def resolveWorkflow(df: DataFrame, canonId: Column, defs: DataFrame,
                               keyName: String, labelName: String): DataFrame = {
     val defsNarrow = pruned(defs, "workflow_definition_id", "source_page_id",
-      "page_title", "last_edited_time").cache()
+      "page_title", "last_edited_time")
     val lk = broadcast(wfLookup(defsNarrow))
     val lbl = broadcast(wfLabelByKey(defsNarrow))
     val withDef = df.join(lk, canonId === lk("wf_canon_id"), "left")
@@ -493,27 +492,33 @@ object Derive {
         edges.filter(col("edge_stage_n").isNull || col("edge_stage_n") =!= 1).count())
   }
 
-  /** J4-J6 integrity checks: throws with ≤10 samples on violation. */
+  /** J4-J6 integrity checks: throws with ≤10 samples on violation. The
+    * checks run side by side; with several violations the first below
+    * wins (stage keys of the fact, then DimWorkflow, then DimStage). */
   def assertIntegrity(fact: DataFrame, dimStageDf: DataFrame, dimWorkflowDf: DataFrame,
-                      stages: DataFrame, defs: DataFrame): Unit = {
+                      stages: DataFrame, defs: DataFrame): Unit =
+    Par.map(integrityChecks(fact, dimStageDf, dimWorkflowDf, stages, defs))(_())
+
+  /** The three checks of `assertIntegrity` as independent actions, in
+    * precedence order. */
+  def integrityChecks(fact: DataFrame, dimStageDf: DataFrame, dimWorkflowDf: DataFrame,
+                      stages: DataFrame, defs: DataFrame): Seq[() => Unit] = {
+    def check(keys: DataFrame, message: String): () => Unit = () => {
+      val bad = keys.limit(10).collect().map(_.getString(0))
+      if (bad.nonEmpty) throw new IllegalStateException(s"$message: ${bad.mkString(", ")}")
+    }
     val stageKeys = stages.select(col("source_page_id").as("k")).distinct()
     val factKeys = fact.select(explode(array(col("from_stage_key"), col("to_stage_key"))).as("k"))
       .filter(col("k").isNotNull && col("k") =!= "")
-    val missing = factKeys.join(broadcast(stageKeys), Seq("k"), "left_anti")
-      .distinct().limit(10).collect().map(_.getString(0))
-    if (missing.nonEmpty)
-      throw new IllegalStateException(
-        s"FactTimeslices references stage keys not present in workflowStages: ${missing.mkString(", ")}")
     val defKeys = defs.select(col("source_page_id").as("k")).distinct()
-    val illegalWf = dimWorkflowDf.select(col("workflow_definition_key").as("k"))
-      .join(broadcast(defKeys), Seq("k"), "left_anti").limit(10).collect().map(_.getString(0))
-    if (illegalWf.nonEmpty)
-      throw new IllegalStateException(
-        s"DimWorkflow contains keys not present in workflowDefinitions: ${illegalWf.mkString(", ")}")
-    val illegalStage = dimStageDf.select(col("stage_key").as("k"))
-      .join(broadcast(stageKeys), Seq("k"), "left_anti").limit(10).collect().map(_.getString(0))
-    if (illegalStage.nonEmpty)
-      throw new IllegalStateException(
-        s"DimStage contains keys not present in workflowStages: ${illegalStage.mkString(", ")}")
+    Seq(
+      check(factKeys.join(broadcast(stageKeys), Seq("k"), "left_anti").distinct(),
+        "FactTimeslices references stage keys not present in workflowStages"),
+      check(dimWorkflowDf.select(col("workflow_definition_key").as("k"))
+        .join(broadcast(defKeys), Seq("k"), "left_anti"),
+        "DimWorkflow contains keys not present in workflowDefinitions"),
+      check(dimStageDf.select(col("stage_key").as("k"))
+        .join(broadcast(stageKeys), Seq("k"), "left_anti"),
+        "DimStage contains keys not present in workflowStages"))
   }
 }

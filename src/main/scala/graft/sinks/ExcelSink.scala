@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.io.FileOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import graft.util.Par
 import org.apache.spark.sql.DataFrame
 
 /** K2 — Excel workbook sink (src/sinks/excel/index.ts:9-69) written as
@@ -14,22 +15,30 @@ import org.apache.spark.sql.DataFrame
   * tables still get an (empty) sheet.
   *
   * Driver-side by design: derived tables are dimension-sized (≪10⁶
-  * rows). The 100 TB path is the parquet/JSONL sinks; Excel is a human
-  * hand-off format.
+  * rows), and a sheet holds at most `MaxRows` data rows. The 100 TB
+  * path is the parquet/JSONL sinks; Excel is a human hand-off format.
   */
 object ExcelSink {
 
+  /** Data rows one sheet can hold: the format's 1,048,576 rows less
+    * the header row. */
+  val MaxRows = 1048575
+
   /** Write one sheet per table; returns each sheet's data-row count,
     * keyed by table name (the rows were collected for the sheet
-    * anyway, so callers never re-run a table to count it). */
-  def write(tables: Map[String, DataFrame], outputPath: String): Map[String, Long] = {
+    * anyway, so callers never re-run a table to count it).
+    *
+    * `checks` (e.g. integrity checks) and the sheet collects run side
+    * by side; the workbook is opened only once all of them succeeded,
+    * and a failing check wins over a failing collect (checks first in
+    * `Par.map`'s input order). A table with more than `MaxRows` rows
+    * fails the write: no sheet is silently cut. */
+  def write(tables: Map[String, DataFrame], outputPath: String,
+            checks: Seq[() => Unit] = Nil): Map[String, Long] = {
     val names = tables.keys.toSeq.sorted
-    val sheets = names.zipWithIndex.map { case (name, i) =>
-      val df = tables(name)
-      val cols = df.columns.toSeq
-      val rows = df.collect().map(r => cols.indices.map(j => Option(r.get(j))))
-      SheetData(name, i + 1, cols, rows.toSeq)
-    }
+    val actions: Seq[() => Option[SheetData]] = checks.map(c => () => { c(); None }) ++
+      names.zipWithIndex.map { case (name, i) => () => Some(collectSheet(name, i + 1, tables(name))) }
+    val sheets = Par.map(actions)(_()).flatten
     val parent = new java.io.File(outputPath).getParentFile
     if (parent != null) parent.mkdirs()
     val zip = new ZipOutputStream(new FileOutputStream(outputPath))
@@ -46,6 +55,17 @@ object ExcelSink {
 
   private case class SheetData(name: String, index: Int, cols: Seq[String],
                                rows: Seq[Seq[Option[Any]]])
+
+  /** Collects at most one row past the limit, so an oversized table
+    * fails without being collected whole. */
+  private def collectSheet(name: String, index: Int, df: DataFrame): SheetData = {
+    val rows = df.limit(MaxRows + 1).collect()
+    if (rows.length > MaxRows)
+      throw new IllegalStateException(
+        s"Table $name has more than $MaxRows data rows, the limit of one Excel sheet")
+    val cols = df.columns.toSeq
+    SheetData(name, index, cols, rows.toSeq.map(r => cols.indices.map(j => Option(r.get(j)))))
+  }
 
   private def put(zip: ZipOutputStream, path: String, content: String): Unit = {
     zip.putNextEntry(new ZipEntry(path))

@@ -11,6 +11,13 @@ import org.apache.spark.sql.functions._
   * byte-layout parity with the reference's one-file-per-partition form
   * (small canon outputs only — never at 100 TB, where the parallel
   * multi-part write is the point).
+  *
+  * `coalesce(1)` is a narrow dependency, so it also collapses an
+  * unmaterialized upstream into that one task: a scan + parse (or a
+  * cache being built) runs serially over every input partition. Cache
+  * and materialize the input first (e.g. a parallel `count()`) when it
+  * is not trivially small; `coalesce(1)` then reads the materialized
+  * partitions in order.
   */
 object JsonlSink {
 

@@ -3,6 +3,7 @@ package graft
 import graft.notion._
 import graft.sinks.pbi.Refresh
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end CLI flows over a staged raw data dir: normalize →
   * excel:export → pbi:provision → pbi:refresh, entirely offline
@@ -65,6 +66,89 @@ class CliSpec extends AnyFunSuite {
     assert(totals.totalRowsPosted ==
       tableCounts.values.sum, "every derived row posted")
     assert(client.tableRows(s"group-1/$dsId/FactTimeslices").size == 1)
+  }
+
+  test("normalize, excel:export and pbi:refresh leave no cached relation in the session") {
+    spark.sharedState.cacheManager.clearCache()
+    val dataDir = stageRawData()
+    val env = Cli.Env(spark, NotionFixtures.cfg, runDate = "2026-08-12", log = _ => ())
+    Cli.normalize(env, dataDir)
+    Cli.excelExport(env, dataDir, s"$dataDir/out.xlsx")
+    Cli.pbiProvision(env, dataDir, "group-1", "TimeTracking")
+    Cli.pbiRefresh(env, dataDir, "group-1", "TimeTracking")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a command's caches must not outlive it: a later command would silently reuse them")
+  }
+
+  private def xlsxEntries(path: String): Map[String, Seq[Byte]] = {
+    val zip = new java.util.zip.ZipFile(path)
+    try zip.entries().asScala.map(_.getName).filter(_.startsWith("xl/worksheets/sheet"))
+      .map(n => n -> zip.getInputStream(zip.getEntry(n)).readAllBytes().toSeq).toMap
+    finally zip.close()
+  }
+
+  test("excel:export run twice on the same canon writes byte-identical sheets") {
+    val dataDir = stageRawData()
+    val env = Cli.Env(spark, NotionFixtures.cfg, runDate = "2026-08-12", log = _ => ())
+    Cli.normalize(env, dataDir)
+    Cli.excelExport(env, dataDir, s"$dataDir/a.xlsx")
+    Cli.excelExport(env, dataDir, s"$dataDir/b.xlsx")
+    val a = xlsxEntries(s"$dataDir/a.xlsx")
+    assert(a.size == 7)
+    assert(a == xlsxEntries(s"$dataDir/b.xlsx"))
+  }
+
+  /** excel:export's integrity checks over crafted tables, where each
+    * check can be broken on its own; returns the failure's message
+    * after asserting that no workbook was written. */
+  private def exportFailure(factKey: String = "s1", workflowKey: String = "w1",
+                            stageKey: String = "s1"): String = {
+    import spark.implicits._
+    val fact = Seq((factKey, Option.empty[String])).toDF("from_stage_key", "to_stage_key")
+    val dimWorkflow = Seq(workflowKey).toDF("workflow_definition_key")
+    val dimStage = Seq(stageKey).toDF("stage_key")
+    val checks = Derive.integrityChecks(fact, dimStage, dimWorkflow,
+      stages = Seq("s1").toDF("source_page_id"), defs = Seq("w1").toDF("source_page_id"))
+    val path = java.nio.file.Files.createTempDirectory("graft-integrity").toString + "/out.xlsx"
+    val e = intercept[IllegalStateException](sinks.ExcelSink.write(Map(
+      "FactTimeslices" -> fact, "DimWorkflow" -> dimWorkflow, "DimStage" -> dimStage),
+      path, checks))
+    assert(!new java.io.File(path).exists(), "no workbook on a failed check")
+    e.getMessage
+  }
+
+  test("excel:export integrity: fact stage keys missing from workflowStages fail, no file") {
+    assert(exportFailure(factKey = "s9") ==
+      "FactTimeslices references stage keys not present in workflowStages: s9")
+  }
+
+  test("excel:export integrity: DimWorkflow keys missing from workflowDefinitions fail, no file") {
+    assert(exportFailure(workflowKey = "w9") ==
+      "DimWorkflow contains keys not present in workflowDefinitions: w9")
+  }
+
+  test("excel:export integrity: DimStage keys missing from workflowStages fail, no file") {
+    assert(exportFailure(stageKey = "s8") ==
+      "DimStage contains keys not present in workflowStages: s8")
+  }
+
+  test("excel:export integrity: with several violations the fact check's message wins") {
+    assert(exportFailure(factKey = "s9", stageKey = "s8") ==
+      "FactTimeslices references stage keys not present in workflowStages: s9")
+    assert(exportFailure(factKey = "s9", workflowKey = "w9", stageKey = "s8") ==
+      "FactTimeslices references stage keys not present in workflowStages: s9")
+    assert(exportFailure(workflowKey = "w9", stageKey = "s8") ==
+      "DimWorkflow contains keys not present in workflowDefinitions: w9")
+  }
+
+  test("excel:export refuses a table past the sheet row limit, naming it, and writes no file") {
+    val path = java.nio.file.Files.createTempDirectory("graft-xlsx-limit").toString + "/out.xlsx"
+    assert(sinks.ExcelSink.MaxRows == 1048575, "1,048,576 sheet rows less the header")
+    val e = intercept[IllegalStateException](sinks.ExcelSink.write(Map(
+      "Small" -> spark.range(3).toDF("n"),
+      "Big" -> spark.range(1048576).toDF("n")), path))
+    assert(e.getMessage.contains("Big") && e.getMessage.contains("1048575"), e.getMessage)
+    assert(!new java.io.File(path).exists())
   }
 
   test("normalize fails fast when a dataset has no raw partition") {
