@@ -2,8 +2,8 @@ package graft.notion
 
 import graft.sinks.{ExcelSink, JsonlSink}
 import graft.sinks.pbi.{PbiSpec, Refresh, Registry}
-import graft.util.Par
-import org.apache.spark.sql.SparkSession
+import graft.util.{Broadcasts, Par}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
 /** M6 — command dispatcher with the reference CLI's full 8-command
@@ -98,15 +98,21 @@ object Cli {
     env.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
     NotionSchemas.rawRecordSchema)
 
-  private def canonTables(env: Env, dataDir: String) = {
+  /** Runs `f` over the canon tables, cached for its duration: each
+    * derived table reads them several times, and uncached every read is
+    * a JSON scan of its own. The caches are dropped before returning,
+    * so none outlives the command. */
+  private def withCanonTables[T](env: Env, dataDir: String)(
+      f: (DataFrame, DataFrame, DataFrame) => T): T = {
     val empty = emptyRaw(env)
     val defs = canonDataset(env, dataDir, "workflowDefinitions",
-      Normalize.workflowDefinitions(empty, env.cfg).schema)
+      Normalize.workflowDefinitions(empty, env.cfg).schema).cache()
     val stages = canonDataset(env, dataDir, "workflowStages",
-      Normalize.workflowStages(empty, env.cfg).schema)
+      Normalize.workflowStages(empty, env.cfg).schema).cache()
     val ts = canonDataset(env, dataDir, "timeslices",
-      Normalize.timeslices(empty, env.cfg).schema)
-    (defs, stages, ts)
+      Normalize.timeslices(empty, env.cfg).schema).cache()
+    try f(defs, stages, ts)
+    finally Seq(defs, stages, ts).foreach(_.unpersist(blocking = true))
   }
 
   /** `validate:coverage`
@@ -128,13 +134,14 @@ object Cli {
 
   /** `excel:export` (cli/index.ts:219-273). */
   def excelExport(env: Env, dataDir: String, outputPath: String): Map[String, Long] = {
-    val (defs, stages, ts) = canonTables(env, dataDir)
-    val tables = Derive.deriveAll(defs, stages, ts)
-    val checks = Derive.integrityChecks(tables("FactTimeslices"), tables("DimStage"),
-      tables("DimWorkflow"), stages, defs)
-    val counts = ExcelSink.write(tables.map { case (k, v) =>
-      k -> (if (v.columns.contains("attributes")) v.drop("attributes") else v) },
-      outputPath, checks)
+    val counts = withCanonTables(env, dataDir) { (defs, stages, ts) =>
+      val tables = Derive.deriveAll(defs, stages, ts)
+      val checks = Derive.integrityChecks(tables("FactTimeslices"), tables("DimStage"),
+        tables("DimWorkflow"), stages, defs)
+      ExcelSink.write(tables.map { case (k, v) =>
+        k -> (if (v.columns.contains("attributes")) v.drop("attributes") else v) },
+        outputPath, checks)
+    }
     counts.toSeq.sortBy(_._1).foreach { case (k, n) => env.log(s"[excel] $k rows=$n") }
     counts
   }
@@ -298,16 +305,18 @@ object Cli {
       Registry.load(dataDir), groupId, datasetName).getOrElse(
       throw new IllegalStateException(
         s"Dataset '$datasetName' not found in registry; run pbi:provision first."))
-    val (defs, stages, ts) = canonTables(env, dataDir)
-    val tables = Derive.deriveAll(defs, stages, ts)
     // collected side by side; the PBI push is driver-side by design (it
     // posts through one client, in the spec's table order)
-    val names = tables.keys.toSeq
-    val rows = names.zip(Par.map(names) { name =>
-      val df = tables(name)
-      val cols = df.columns.toSeq
-      df.collect().toSeq.map(r => cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-    }).toMap
+    val rows = withCanonTables(env, dataDir) { (defs, stages, ts) =>
+      val tables = Derive.deriveAll(defs, stages, ts)
+      val names = tables.keys.toSeq
+      names.zip(Par.map(names) { name =>
+        val df = tables(name)
+        val cols = df.columns.toSeq
+        Broadcasts.collect(df).toSeq.map(r =>
+          cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
+      }).toMap
+    }
     Refresh.executeWipeAndReload(env.client, groupId, datasetId, spec, rows,
       log = env.log)
   }

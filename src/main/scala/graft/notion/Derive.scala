@@ -1,6 +1,6 @@
 package graft.notion
 
-import graft.util.Par
+import graft.util.{Broadcasts, Par}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -164,9 +164,9 @@ object Derive {
     * reference's fallback chain (derive/index.ts:131-141).
     *
     * Both lookup build sides read the same narrow 4-column projection
-    * of `defs`, uncached: the CLI derives from canon JSON, where
-    * `page_title` is a plain column, and a cache here would outlive the
-    * command in the session's CacheManager. */
+    * of `defs`, uncached: a cache here would outlive the command in the
+    * session's CacheManager. The CLI caches the canon tables themselves
+    * for one command, where `page_title` is a plain column. */
   private def resolveWorkflow(df: DataFrame, canonId: Column, defs: DataFrame,
                               keyName: String, labelName: String): DataFrame = {
     val defsNarrow = pruned(defs, "workflow_definition_id", "source_page_id",
@@ -504,7 +504,7 @@ object Derive {
   def integrityChecks(fact: DataFrame, dimStageDf: DataFrame, dimWorkflowDf: DataFrame,
                       stages: DataFrame, defs: DataFrame): Seq[() => Unit] = {
     def check(keys: DataFrame, message: String): () => Unit = () => {
-      val bad = keys.limit(10).collect().map(_.getString(0))
+      val bad = Broadcasts.collect(keys.limit(10)).map(_.getString(0))
       if (bad.nonEmpty) throw new IllegalStateException(s"$message: ${bad.mkString(", ")}")
     }
     val stageKeys = stages.select(col("source_page_id").as("k")).distinct()

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.io.FileOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import graft.util.Par
+import graft.util.{Broadcasts, Par}
 import org.apache.spark.sql.DataFrame
 
 /** K2 — Excel workbook sink (src/sinks/excel/index.ts:9-69) written as
@@ -59,7 +59,7 @@ object ExcelSink {
   /** Collects at most one row past the limit, so an oversized table
     * fails without being collected whole. */
   private def collectSheet(name: String, index: Int, df: DataFrame): SheetData = {
-    val rows = df.limit(MaxRows + 1).collect()
+    val rows = Broadcasts.collect(df.limit(MaxRows + 1))
     if (rows.length > MaxRows)
       throw new IllegalStateException(
         s"Table $name has more than $MaxRows data rows, the limit of one Excel sheet")

@@ -34,6 +34,12 @@ object GraftSqlShims {
   def isUtf8Binary(st: org.apache.spark.sql.types.StringType): Boolean =
     st.isUTF8BinaryCollation
 
+  /** Destroy a broadcast and return only once the block manager has
+    * dropped its blocks (the public `destroy()` does not wait;
+    * `destroy(blocking)` is private[spark]). */
+  def destroyNow(b: org.apache.spark.broadcast.Broadcast[_]): Unit =
+    b.destroy(blocking = true)
+
   /** DataFrame over an already-analyzed logical plan. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
