@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Measurement harness (guide §1): run named queries with a listener
   * that attributes wall time to Spark JOBS (call site + description),
@@ -61,7 +62,10 @@ object Profile {
     // warmup
     try SparkEntry.queries("q1_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) =>
+      // a failed warmup leaves session startup in the first query's
+      // wall — say so instead of timing it silently
+      System.err.println(s"[profile] warmup q1_agg failed: $e") }
     spark.catalog.clearCache()
     spark.sparkContext.addSparkListener(listener)
     names.foreach { name =>

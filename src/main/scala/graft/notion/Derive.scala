@@ -116,7 +116,7 @@ object Derive {
     * shuffles EVERY row and then sorts — the wrong cost at scale, and
     * three extra sort/codegen stages on the fixture-sized parity path. */
   private def lastWins(df: DataFrame, key: String): DataFrame = {
-    val row = struct(df.columns.map(col): _*)
+    val row = struct(df.columns.toSeq.map(col): _*)
     // tiebreak hash over the hashable columns only (maps — `attributes`
     // — are not hashable in Spark; rows differing ONLY in a map column
     // tie arbitrarily, exactly as the previous window form did)
@@ -127,7 +127,8 @@ object Derive {
       case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
       case _ => true
     }
-    val hcols = df.schema.fields.filter(f => hashable(f.dataType)).map(f => col(f.name))
+    val hcols = df.schema.fields.toSeq.filter(f => hashable(f.dataType))
+      .map(f => col(f.name))
     val ord = struct(coalesce(col("last_edited_time"), lit("")),
       xxhash64(hcols: _*))
     df.groupBy(col(key))

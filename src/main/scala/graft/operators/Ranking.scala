@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sinks.ManifestTable
 
 /** Corpus relevance ranking — BM25 (Robertson/Sparck Jones) for a
   * bag-of-terms query, the standard lexical scorer for retrieval and
@@ -76,15 +77,16 @@ object Ranking {
       .limit(k)
   }
 
-  /** Build and commit a persisted INVERTED INDEX for the corpus:
-    * `root/postings` holds (tok, doc_id, tf) range-clustered and
-    * sorted by token — so a query's term probe prunes whole files and
-    * row groups via parquet min/max on `tok` — and `root/doclen`
-    * holds (doc_id, dl). Both commit as VersionedTable epochs (atomic
-    * flip, as-of readable, CAS multi-writer safe). Build cost: one
-    * tokenize pass + two aggregates, ~the cost of ONE corpus-scan
-    * query — after which every query stops paying the tokenize.
-    * Returns (postings version, doclen version). */
+  /** Build and commit a persisted INVERTED INDEX for the corpus as
+    * two [[graft.sinks.ManifestTable]]s: `root/postings` holds
+    * (tok, doc_id, tf) range-clustered and sorted by token — so a
+    * query's term probe prunes whole files by the manifest's `tok`
+    * envelopes and row groups by parquet min/max — and `root/doclen`
+    * holds (doc_id, dl). Both are versioned (atomic commit, as-of
+    * readable, CAS multi-writer safe). Build cost: one tokenize pass +
+    * two aggregates, ~the cost of ONE corpus-scan query — after which
+    * every query stops paying the tokenize. Fails if an index already
+    * exists at `root`. Returns (postings version, doclen version). */
   def buildInvertedIndex(docs: DataFrame, idCol: String, textCol: String,
                          root: String, numFiles: Int = 16): (Long, Long) = {
     val toks = docs.select(col(idCol).as("doc_id"),
@@ -94,24 +96,25 @@ object Ranking {
       .repartitionByRange(numFiles, col("tok"))
       .sortWithinPartitions(col("tok"), col("doc_id"))
     val doclen = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val pv = graft.sinks.VersionedTable.write(postings, s"$root/postings")
-    val dv = graft.sinks.VersionedTable.write(doclen, s"$root/doclen")
-    (pv, dv)
+    (ManifestTable.create(postings, s"$root/postings", PostingsStats),
+      ManifestTable.create(doclen, s"$root/doclen", Seq("doc_id")))
   }
+
+  private val PostingsStats = Seq("tok", "doc_id")
 
   /** Fold a DOCUMENT BATCH into a committed inverted index without
     * rebuilding it: new docs insert their postings, re-landed doc ids
-    * REPLACE theirs entirely (merge keyed by doc_id, so tokens the new
-    * text no longer contains cannot survive as stale postings — the
-    * same rewrite-staleness class as [[graft.sources.FileBloomIndex]]'s
-    * path merge, closed the same way). Cost ∝ the batch tokenize plus
-    * one index-sized epoch rewrite — never the corpus; this is how the
-    * index rides an ingest loop ([[graft.sources.FileManifest]] delta →
-    * upsert) instead of paying a full [[buildInvertedIndex]] per epoch.
-    * doclen/avgdl move with the same commit, so BM25 scores through the
-    * updated index equal a fresh full build's (spec + gate assert
-    * row-identity). Bootstraps the epochs when the index is new.
-    * Returns (postings version, doclen version). */
+    * REPLACE theirs entirely ([[graft.sinks.ManifestTable.merge]] keyed
+    * by doc_id, so tokens the new text no longer contains cannot
+    * survive as stale postings). Cost ∝ the batch tokenize plus the
+    * index files whose doc_id envelopes the batch touches — never the
+    * corpus; this is how the index rides an ingest loop
+    * ([[graft.sources.FileManifest]] delta → upsert) instead of paying
+    * a full [[buildInvertedIndex]] per epoch. doclen/avgdl move with
+    * the same batch, so BM25 scores through the updated index equal a
+    * fresh full build's (spec + gate assert row-identity). Creates the
+    * index when it is new. Returns (postings version, doclen
+    * version). */
   def upsertIndexedDocs(docs: DataFrame, idCol: String, textCol: String,
                         root: String): (Long, Long) = {
     val toks = docs.select(col(idCol).as("doc_id"),
@@ -121,11 +124,12 @@ object Ranking {
       .select(col("tok"), col("doc_id"), col("tf"))
     val doclen = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
     val spark = docs.sparkSession
-    def commit(df: DataFrame, sub: String): Long =
-      if (graft.sinks.VersionedTable.latestVersion(spark, s"$root/$sub") < 0)
-        graft.sinks.VersionedTable.write(df, s"$root/$sub")
-      else graft.sinks.VersionedTable.merge(df, s"$root/$sub", Seq("doc_id"))
-    (commit(postings, "postings"), commit(doclen, "doclen"))
+    def commit(df: DataFrame, sub: String, stats: Seq[String]): Long =
+      if (!ManifestTable.exists(spark, s"$root/$sub"))
+        ManifestTable.create(df, s"$root/$sub", stats)
+      else ManifestTable.merge(df, s"$root/$sub", Seq("doc_id"))
+    (commit(postings, "postings", PostingsStats),
+      commit(doclen, "doclen", Seq("doc_id")))
   }
 
   /** One manifest-driven index-ingest tick — the retrieval twin of
@@ -135,7 +139,7 @@ object Ranking {
     * their documents into the index with [[upsertIndexedDocs]], and
     * commit the manifest so a crashed tick re-offers the same files
     * (the upsert is doc_id-keyed, so the retry is idempotent). Cost ∝
-    * newly landed data + one index-sized rewrite — the corpus under
+    * newly landed data + the touched index files — the corpus under
     * `landingDir` is never rescanned. Returns the number of files
     * ingested (0 = clean no-op tick). Run [[optimizeIndex]] on the
     * same cadence as compaction to keep the postings token-clustered. */
@@ -151,16 +155,17 @@ object Ranking {
     files.size
   }
 
-  /** Re-cluster the postings epoch by token. Delta merges keep the
-    * index CORRECT but interleave each batch's postings across the
-    * epoch's files, eroding the token-clustered layout the term-probe
-    * pushdown prunes against — the small-file/clustering decay every
-    * log-structured index has. One index-sized sort + epoch commit
-    * restores it; run it on the maintenance tick, amortized across
-    * many delta merges. Returns the committed postings version. */
+  /** Re-cluster the postings by token. Delta merges keep the index
+    * CORRECT but land each batch's postings in new files whose `tok`
+    * envelopes span the vocabulary, eroding the token-clustered layout
+    * the term probe prunes against — the small-file/clustering decay
+    * every log-structured index has. One index-sized
+    * [[graft.sinks.ManifestTable.optimize]] restores it; run it on the
+    * maintenance tick, amortized across many delta merges. Returns the
+    * committed postings version. */
   def optimizeIndex(spark: org.apache.spark.sql.SparkSession, root: String,
                     numFiles: Int = 16): Long =
-    graft.sinks.VersionedTable.optimize(spark, s"$root/postings",
+    ManifestTable.optimize(spark, s"$root/postings",
       sortCols = Seq("tok", "doc_id"), numFiles = numFiles)
 
   /** BM25 top-k THROUGH the persisted index — row-identical to
@@ -176,8 +181,8 @@ object Ranking {
                       k1: Double = 1.2, b: Double = 0.75,
                       requireAllTerms: Boolean = false): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopKIndexed needs at least one query term")
-    val postings = graft.sinks.VersionedTable.read(spark, s"$root/postings")
-    val dl = graft.sinks.VersionedTable.read(spark, s"$root/doclen")
+    val postings = ManifestTable.read(spark, s"$root/postings")
+    val dl = ManifestTable.read(spark, s"$root/doclen")
     val stats = dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
     val tf = postings.filter(col("tok").isInCollection(queryTerms))
       .select(col("doc_id"), col("tok"), col("tf"))

@@ -496,18 +496,17 @@ object LlmOps extends QueryModule {
       "doc_id", "text", Bm25Terms, k = 20, requireAllTerms = true)
 
   /** BM25 through the PERSISTED inverted index
-    * ([[graft.operators.Ranking.buildInvertedIndex]]): build commits
-    * token-clustered postings + doc-length epochs, then the query runs
-    * index-only — no tokenize, no text scan, term probe pushed into
-    * the postings files. Shares q_bm25's oracle verbatim: same scoring
-    * tail, same op order, so the two paths must hash-match. Old
-    * epochs vacuumed so repeated gate runs don't accumulate. */
+    * ([[graft.operators.Ranking.buildInvertedIndex]]): build creates
+    * token-clustered postings + doc-length manifest tables, then the
+    * query runs index-only — no tokenize, no text scan, term probe
+    * pushed into the postings files. Shares q_bm25's oracle verbatim:
+    * same scoring tail, same op order, so the two paths must
+    * hash-match. The index lives in a wiped scratch dir, so repeated
+    * gate runs rebuild instead of accumulating. */
   def qBm25Indexed(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.Scratch.dir("bm25_index")
+    val root = graft.util.Scratch.freshDir("bm25_index")
     graft.operators.Ranking.buildInvertedIndex(
       Tables.documents(spark, dir), "doc_id", "text", root)
-    graft.sinks.VersionedTable.vacuum(spark, s"$root/postings", keep = 1)
-    graft.sinks.VersionedTable.vacuum(spark, s"$root/doclen", keep = 1)
     graft.operators.Ranking.bm25TopKIndexed(spark, root, Bm25Terms, k = 20)
   }
 
@@ -1245,7 +1244,7 @@ object LlmOps extends QueryModule {
     * token clustering. Oracle: q_bm25's full-corpus SQL verbatim —
     * the delta path must be row-identical to a from-scratch index. */
   def qBm25Incremental(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.Scratch.dir("bm25_inc_index")
+    val root = graft.util.Scratch.freshDir("bm25_inc_index")
     val d = Tables.documents(spark, dir)
     val stale = d.filter(col("doc_id") % 11 =!= 0)
       .withColumn("text",
@@ -1255,8 +1254,6 @@ object LlmOps extends QueryModule {
     val batch = d.filter(col("doc_id") % 11 === 0 || col("doc_id") % 7 === 0)
     graft.operators.Ranking.upsertIndexedDocs(batch, "doc_id", "text", root)
     graft.operators.Ranking.optimizeIndex(spark, root)
-    graft.sinks.VersionedTable.vacuum(spark, s"$root/postings", keep = 1)
-    graft.sinks.VersionedTable.vacuum(spark, s"$root/doclen", keep = 1)
     graft.operators.Ranking.bm25TopKIndexed(spark, root, Bm25Terms, k = 20)
   }
 

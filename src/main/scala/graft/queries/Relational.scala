@@ -839,19 +839,21 @@ object Relational extends QueryModule {
   }
 
   /** The DataSourceV2 table format ([[graft.sources.v2
-    * .GraftTableProvider]]): a versioned table written through the
-    * epoch commit protocol, a row-level DELETE folded in, then read
-    * back with `spark.read.format("graft")` — the scan resolves the
-    * current epoch snapshot (no session extension, no registration).
-    * Oracle: the delete + filter replayed in SQL — epoch resolution
-    * must be invisible in results. */
+    * .GraftTableProvider]]): a manifest table created over a doc_id
+    * range layout, a row-level DELETE folded in
+    * ([[graft.sinks.ManifestTable.deleteWhere]]), old versions
+    * vacuumed, then read back with `spark.read.format("graft")` — the
+    * scan resolves the current version's snapshot (no session
+    * extension, no registration). Oracle: the delete + filter replayed
+    * in SQL — version resolution must be invisible in results. */
   def qGraftScan(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.Scratch.dir("graft_dsv2") + "/docs"
-    graft.sinks.VersionedTable.write(
-      Tables.documents(spark, dir).repartitionByRange(4, col("doc_id")), root)
-    graft.sinks.VersionedTable.deleteWhere(spark, root,
+    val root = graft.util.Scratch.freshDir("graft_dsv2") + "/docs"
+    graft.sinks.ManifestTable.create(
+      Tables.documents(spark, dir).repartitionByRange(4, col("doc_id")),
+      root, Seq("doc_id")): Unit
+    graft.sinks.ManifestTable.deleteWhere(spark, root,
       col("lang") === lit("en"))
-    graft.sinks.VersionedTable.vacuum(spark, root, keep = 2)
+    graft.sinks.ManifestTable.vacuum(spark, root, keep = 2)
     spark.read.format("graft").load(root)
       .filter(col("doc_id") < 200)
       .groupBy(col("lang"))

@@ -1899,10 +1899,13 @@ object ManifestTable {
 
   /** Row-level MERGE (upsert by key), file-granular: only the files
     * whose key envelopes intersect the batch are rewritten; every
-    * other file carries into the next manifest BY REFERENCE. Same
-    * semantics as [[VersionedTable.merge]] (matched keys replaced,
-    * unmatched insert, strict schema, in-batch duplicate keys are the
-    * caller's contract). Returns the committed version. */
+    * other file carries into the next manifest BY REFERENCE. SQL
+    * `MERGE … WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`
+    * semantics: matched keys are replaced, unmatched keys insert,
+    * `updates` carries the table's full schema, and duplicate keys
+    * WITHIN `updates` are the caller's contract to resolve first
+    * (both rows would land — dedupe with last-wins upstream). Returns
+    * the committed version. */
   def merge(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
     merge(updates, root, keyCols, evolveSchema = false)
 
@@ -1915,7 +1918,10 @@ object ManifestTable {
     * path. A batch may carry NEW columns (existing rows read NULL
     * there) or OMIT existing ones (the update rows land NULL); the
     * next version's schema is base-order ++ new columns. The default
-    * stays strict ([[VersionedTable.merge]]'s rationale verbatim). */
+    * stays strict: a silently-widened schema in a pipeline that did
+    * not opt in is a bug surfacing as an error, not a version with
+    * surprise columns. Key columns must exist on both sides either
+    * way. */
   def merge(updates: DataFrame, root: String, keyCols: Seq[String],
             evolveSchema: Boolean): Long = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
@@ -1931,9 +1937,15 @@ object ManifestTable {
     }
   }
 
-  /** CDC fold, file-granular: [[VersionedTable.applyCdc]] semantics
-    * (highest-seq change per key wins in-batch; D removes, others
-    * upsert) at cost ∝ touched files + batch. */
+  /** Fold one CDC batch (Debezium shape: key columns + a monotone
+    * per-key `seqCol` + an `opCol` marker + the full row payload) as
+    * ONE commit, file-granular. Within the batch the highest-`seqCol`
+    * change per key wins (a key inserted then deleted in the same
+    * batch nets to absent); the winner applies MERGE-style: `op = 'D'`
+    * removes the key, any other op upserts the payload (`I`/`U` are
+    * synonyms). Folding batches one at a time in sequence order equals
+    * one fold of their union. `(key, seqCol)` pairs must be unique
+    * within a batch. Cost ∝ touched files + batch. */
   def applyCdc(changes: DataFrame, root: String, keyCols: Seq[String],
                seqCol: String = "seq", opCol: String = "op"): Long = {
     require(keyCols.nonEmpty, "applyCdc requires at least one key column")
@@ -4209,47 +4221,6 @@ object ManifestTable {
       keyCols, fromVersion, toVersion)
   }
 
-  /** Durable incremental consumption — [[VersionedTable
-    * .consumeChanges]] for the manifest format, with the same
-    * contract (offset in a tiny epoch table at `consumerRoot`,
-    * at-least-once across crashes, bootstrap-as-inserts, fail-fast
-    * past vacuumed history) but the manifest grain: every non-
-    * bootstrap batch is a FILE-SET-DELTA diff ([[changesBetween]]) —
-    * cost ∝ files changed since the last acknowledged version, never
-    * ∝ table. */
-  def consumeChanges(spark: SparkSession, root: String, consumerRoot: String,
-                     keyCols: Seq[String]): Option[VersionedTable.ChangeBatch] = {
-    val cur = latestVersion(spark, root)
-    require(cur >= 0, s"manifest table at $root has no committed version")
-    val last =
-      if (VersionedTable.latestVersion(spark, consumerRoot) < 0) -1L
-      else VersionedTable.read(spark, consumerRoot).head().getLong(0)
-    if (last == cur) return None
-    require(last < cur,
-      s"consumer offset $last is ahead of the table's current version $cur")
-    val changes =
-      if (last < 0) {
-        val b = readVersion(spark, root, cur)
-        val payload = b.columns.filterNot(keyCols.contains).toSeq
-        b.select(keyCols.map(col) ++ payload.map(col) :+
-          lit("I").as("op") :+ lit(cur).as("seq"): _*)
-      } else {
-        require(versions(spark, root).contains(last),
-          s"consumer lagged past retention: version $last of $root was " +
-            "vacuumed — re-bootstrap the consumer (drop its offset " +
-            "table)" + VersionedTable.CrashedSweepHint)
-        changesBetween(spark, root, last, cur, keyCols)
-      }
-    Some(VersionedTable.ChangeBatch(changes, last, cur, () => {
-      VersionedTable.write(
-        spark.range(1).select(lit(cur).as("version")), consumerRoot)
-      VersionedTable.vacuum(spark, consumerRoot, keep = 2)
-    }))
-  }
-
-  /** OPTIMIZE: re-lay the CURRENT rows as a fresh file set (compaction
-    * or re-clustering); content identical, all files replaced — the
-    * one operation that is legitimately cost ∝ table. */
   /** Strip a bucket claim from every field — the inverse of
     * [[withBucketSpec]], preserving all other metadata (frozen
     * physical names in particular: the re-lay's files are new, but
@@ -4316,6 +4287,9 @@ object ManifestTable {
     }
   }
 
+  /** OPTIMIZE: re-lay the CURRENT rows as a fresh file set (compaction
+    * or re-clustering); content identical, all files replaced — the
+    * one operation that is legitimately cost ∝ table. */
   def optimize(spark: SparkSession, root: String,
                sortCols: Seq[String] = Nil, numFiles: Int = 16,
                hilbert: Boolean = false): Long = {

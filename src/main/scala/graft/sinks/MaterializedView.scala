@@ -590,9 +590,9 @@ object MaterializedView {
           "no joined relation carries")
       val probe =
         try baseDf.select(expr(e).as(k))
-        catch { case ex: Throwable => throw new IllegalArgumentException(
+        catch { case NonFatal(ex) => throw new IllegalArgumentException(
           s"expression key $k = `$e` does not resolve against the " +
-            s"base alone: ${ex.getMessage}") }
+            s"base alone: ${ex.getMessage}", ex) }
       require(probe.queryExecution.analyzed.expressions
         .forall(_.deterministic),
         s"expression key $k = `$e` is non-deterministic — the " +

@@ -1,7 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, not, struct, when}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, struct, when}
 import graft.util.EpochCache
 
 /** Always-readable versioned table — the epoch-flip pattern the
@@ -30,16 +30,25 @@ import graft.util.EpochCache
   * `max(pointer, committed directories)`, so a writer that loses the
   * (benign) pointer-update race can never hide a newer epoch.
   *
-  * Blind appends ([[write]]) always succeed — racing writers serialize
+  * Blind writes ([[write]]) always succeed — racing writers serialize
   * onto distinct consecutive versions, none lost. Read-modify-write
-  * commits ([[merge]], [[applyCdc]], [[deleteWhere]]) are
-  * SERIALIZABLE via [[tryCommitAs]]: the rewrite is computed against
-  * base version B and committed only as B+1; if another writer claimed
-  * B+1 first, the claim fails and the operation recomputes against the
-  * new current epoch — the lost-update anomaly (two rewrites both
-  * based on B, the second silently discarding the first) cannot
-  * commit. Same caveat as everywhere in this package: object stores
-  * without atomic rename need an external commit coordinator.
+  * commits ([[ManifestTable]]'s manifest swaps, the bloom index's keyed
+  * upsert through [[rewriteLoop]]) are SERIALIZABLE via
+  * [[tryCommitAs]]: the rewrite is computed against base version B and
+  * committed only as B+1; if another writer claimed B+1 first, the
+  * claim fails and the operation recomputes against the new current
+  * epoch — the lost-update anomaly (two rewrites both based on B, the
+  * second silently discarding the first) cannot commit. Same caveat as
+  * everywhere in this package: object stores without atomic rename
+  * need an external commit coordinator.
+  *
+  * Every epoch is a full snapshot, so this format has no row-level
+  * DML: MERGE / DELETE / CDC fold / OPTIMIZE and row appends live in
+  * [[ManifestTable]], whose versions are file lists over immutable
+  * data files (cost ∝ touched files, not ∝ table). Epoch tables keep
+  * what whole-snapshot writers and the manifest's own `_manifests`
+  * log need: snapshot commits, as-of reads, stream-batch markers, the
+  * derived change feed ([[changesBetween]]) and [[vacuum]].
   *
   * Old epochs are retained for as-of reads ([[readVersion]]) until
   * [[vacuum]] drops all but the newest k.
@@ -480,68 +489,8 @@ object VersionedTable {
     try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Row-level MERGE (upsert by key): commit a next epoch holding the
-    * current rows whose key has NO match in `updates`, plus every
-    * `updates` row — matched keys are replaced, unmatched keys insert
-    * (the SQL `MERGE … WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`
-    * shape). One key anti-join + one epoch rewrite: cost ∝ table size
-    * — the GDPR-delete / late-correction path no longer costs a
-    * pipeline re-run, and readers of the old epoch are undisturbed.
-    * `updates` must carry the table's full schema; duplicate keys
-    * WITHIN `updates` are the caller's contract to resolve first
-    * (both rows land in the epoch, like MERGE's multi-match error but
-    * unchecked — dedupe with last-wins upstream). Returns the
-    * committed version. */
-  def merge(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
-    merge(updates, root, keyCols, evolveSchema = false)
-
-  /** MERGE with optional additive schema evolution: with `evolveSchema`
-    * a batch may carry NEW columns (existing rows take NULL there) or
-    * OMIT existing ones (the update rows take NULL) — the next epoch's
-    * schema is the union, which is how an epoch table absorbs an
-    * upstream contract change without a stop-the-world backfill. The
-    * default stays strict: a silently-widened schema in a pipeline
-    * that didn't opt in is a bug surfacing as an analysis error, not an
-    * epoch with surprise columns. Key columns must exist on both sides
-    * either way. */
-  def merge(updates: DataFrame, root: String, keyCols: Seq[String],
-            evolveSchema: Boolean): Long = {
-    require(keyCols.nonEmpty, "merge requires at least one key column")
-    val spark = updates.sparkSession
-    require(keyCols.forall(updates.columns.contains),
-      s"update batch is missing key columns: ${keyCols.filterNot(updates.columns.contains).mkString(", ")}")
-    rewriteLoop(spark, root) { base =>
-      val cur = readVersion(spark, root, base)
-      val keep = cur.join(
-        updates.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-      // the USING-style anti-join moves key columns first; re-project to
-      // the base epoch's column order (evolved-in columns append) so a
-      // merge never churns the table's positional schema — positional
-      // readers (union, exceptAll, parquet field ids) stay stable
-      val merged = keep.unionByName(updates, allowMissingColumns = evolveSchema)
-      val order = cur.columns ++ merged.columns.filterNot(cur.columns.contains)
-      merged.select(order.map(col): _*)
-    }
-  }
-
-  /** Row-APPEND as a serialized read-modify-write: the next epoch is
-    * current ∪ batch, committed through the CAS loop — racing appends
-    * each incorporate their predecessor, so none is lost (a blind
-    * [[write]] of a precomputed union would retry only the VERSION
-    * NUMBER on conflict, silently dropping the other writer's rows).
-    * This is the INSERT INTO bridge for epoch tables; cost ∝ table
-    * (every epoch is a full snapshot — the documented grain;
-    * [[ManifestTable.write]] is the file-list-cost alternative).
-    * Creates the table when absent. Returns the committed version. */
-  def append(df: DataFrame, root: String): Long = {
-    val spark = df.sparkSession
-    if (latestVersion(spark, root) < 0) write(df, root)
-    else rewriteLoop(spark, root) { base =>
-      readVersion(spark, root, base).unionByName(df)
-    }
-  }
-
-  /** Optimistic retry loop shared by the read-modify-write commits:
+  /** Optimistic retry loop for a read-modify-write commit (the keyed
+    * bloom-index upsert, [[graft.sources.FileBloomIndex.commitDelta]]):
     * pin the current version as the base, compute the rewrite AGAINST
     * THAT EPOCH (readVersion, not read — the plan must not silently
     * re-resolve to a newer epoch between planning and commit), and
@@ -550,7 +499,7 @@ object VersionedTable {
     * rewrite incorporated its predecessor — the lost-update anomaly
     * cannot commit. Bounded attempts: under sustained contention the
     * caller should serialize writers instead of spinning here. */
-  private def rewriteLoop(spark: SparkSession, root: String,
+  private[graft] def rewriteLoop(spark: SparkSession, root: String,
                           maxAttempts: Int = 12)
                          (rewrite: Long => DataFrame): Long = {
     var attempt = 0
@@ -566,57 +515,6 @@ object VersionedTable {
       s"$maxAttempts times — serialize the writers or shard the table")
   }
 
-  /** Fold one CDC batch (a change stream in the Debezium shape: key
-    * columns + a monotone per-key sequence + an op marker + the full
-    * row payload) into the table as ONE epoch commit. Within the
-    * batch, the highest-`seqCol` change per key wins (in-batch
-    * collapse — a key inserted then deleted in the same batch nets to
-    * absent); the winner then applies MERGE-style: `op = 'D'` removes
-    * the key, any other op upserts the payload (`I`/`U` are synonyms,
-    * like Debezium's `c`/`u` — the table can't tell a late insert from
-    * an update and must not care). Folding batches one at a time in
-    * sequence order equals one fold of their union, and the spec pins
-    * that equivalence.
-    *
-    * Plan shape: one key-partitioned window over the BATCH (cost ∝
-    * batch), one key anti-join + epoch rewrite (cost ∝ table) — the
-    * copy-on-write table pattern; amortize via batch size, and vacuum
-    * bounds retained history. `(key, seqCol)` pairs must be unique
-    * within a batch — equal sequences per key make the winner
-    * nondeterministic. Returns the committed version. */
-  def applyCdc(changes: DataFrame, root: String, keyCols: Seq[String],
-               seqCol: String = "seq", opCol: String = "op"): Long = {
-    require(keyCols.nonEmpty, "applyCdc requires at least one key column")
-    val spark = changes.sparkSession
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-    val winners = changes
-      .withColumn("_graft_rn",
-        org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("_graft_rn") === 1).drop("_graft_rn")
-    rewriteLoop(spark, root) { base =>
-      val cur = readVersion(spark, root, base)
-      val keep = cur.join(
-        winners.select(keyCols.map(col): _*), keyCols, "left_anti")
-      // same column-order preservation as merge: the anti-join's key-
-      // first output must not leak into the committed epoch's schema
-      keep.unionByName(
-        winners.filter(not(col(opCol) === lit("D"))).drop(opCol, seqCol))
-        .select(cur.columns.map(col): _*)
-    }
-  }
-
-  /** Row-level DELETE: commit a next epoch WITHOUT the rows matching
-    * `cond` (SQL DELETE semantics — rows where `cond` is NULL are
-    * kept). Deleted rows remain as-of-readable in prior epochs until
-    * [[vacuum]] drops them: deletion-for-compliance is therefore
-    * delete-then-vacuum, and the spec pins that lineage. Returns the
-    * committed version. */
-  def deleteWhere(spark: SparkSession, root: String, cond: Column): Long =
-    rewriteLoop(spark, root) { base =>
-      readVersion(spark, root, base).filter(not(coalesce(cond, lit(false))))
-    }
-
   /** CHANGE FEED between two committed epochs — the Delta
     * `table_changes` analog, derived rather than logged: one
     * Debezium-shaped row per key whose content differs between
@@ -625,14 +523,15 @@ object VersionedTable {
     * differs, NULL-safely) — carrying the AFTER payload for I/U and
     * the BEFORE payload for D, plus `seq` = `toVersion` (monotone per
     * key across successive feeds, so feeds pipe straight into
-    * [[applyCdc]] on a downstream table; the round trip
+    * [[ManifestTable.applyCdc]] on a downstream table; the round trip
     * `applyCdc(changesBetween(v0, v1))` onto the v0 state rebuilds v1
-    * exactly — spec-pinned). This is what an incremental consumer
-    * reads instead of diffing whole snapshots itself.
+    * exactly — spec-pinned). This is what the streaming change feed
+    * ([[graft.sources.v2.GraftChangeFeedTable]]) serves per batch over
+    * an epoch-directory table.
     *
-    * Contract: the table is KEYED at both epochs (one row per key —
-    * the [[merge]]/[[applyCdc]] invariant; duplicate keys would fan
-    * out the join), and the schema did not evolve between them.
+    * Contract: the table is KEYED at both epochs (one row per key;
+    * duplicate keys would fan out the join), and the schema did not
+    * evolve between them.
     * Scale shape: two epoch scans + ONE key-partitioned full-outer
     * join; payloads compare as structs (no per-column join churn),
     * unchanged keys drop before anything else happens. */
@@ -669,67 +568,6 @@ object VersionedTable {
           .when(col("_cf_b").isNull, lit("D"))
           .otherwise(lit("U")).as("op") :+
         lit(toVersion).as("seq"): _*)
-  }
-
-  /** OPTIMIZE: re-lay the current epoch's rows as a fresh epoch —
-    * small-file compaction (no sort columns) or re-clustering (range
-    * partition + sort, so per-file envelopes narrow and stats/DSv2
-    * pruning bites again). Readers of the old epoch are undisturbed;
-    * the content is identical by construction (one scan + one epoch
-    * commit, cost ∝ table). Returns the committed version. */
-  def optimize(spark: SparkSession, root: String,
-               sortCols: Seq[String] = Nil, numFiles: Int = 16): Long = {
-    require(numFiles >= 1, "numFiles must be >= 1")
-    val cur = read(spark, root)
-    val laid =
-      if (sortCols.isEmpty) cur.repartition(numFiles)
-      else cur.repartitionByRange(numFiles, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    write(laid, root)
-  }
-
-  /** Durable INCREMENTAL CONSUMPTION of a table's change feed — the
-    * subscription API over [[changesBetween]]: the consumer's
-    * last-acknowledged version persists in its own tiny epoch table
-    * at `consumerRoot` (crash-safe through the same commit protocol),
-    * so each call returns exactly the changes since the previous
-    * ACKNOWLEDGED call — at-least-once across crashes (an unacked
-    * batch is re-delivered; the I/U/D rows are idempotent to re-apply
-    * through [[applyCdc]]). First consumption bootstraps: the whole
-    * current epoch as 'I' rows. Returns None when the consumer is
-    * already caught up; call `commit()` on the returned batch AFTER
-    * durably applying it. Fails fast (naming retention) when the
-    * consumer lagged past a vacuumed epoch — re-bootstrap then. */
-  final case class ChangeBatch(changes: DataFrame, fromVersion: Long,
-                               toVersion: Long, commit: () => Unit)
-
-  def consumeChanges(spark: SparkSession, root: String, consumerRoot: String,
-                     keyCols: Seq[String]): Option[ChangeBatch] = {
-    val cur = latestVersion(spark, root)
-    require(cur >= 0, s"versioned table at $root has no committed epoch")
-    val last =
-      if (latestVersion(spark, consumerRoot) < 0) -1L
-      else read(spark, consumerRoot).head().getLong(0)
-    if (last == cur) return None
-    require(last < cur,
-      s"consumer offset $last is ahead of the table's current epoch $cur")
-    val changes =
-      if (last < 0) {
-        val b = readVersion(spark, root, cur)
-        val payload = b.columns.filterNot(keyCols.contains).toSeq
-        b.select(keyCols.map(col) ++ payload.map(col) :+
-          lit("I").as("op") :+ lit(cur).as("seq"): _*)
-      } else {
-        require(versions(spark, root).contains(last),
-          s"consumer lagged past retention: epoch $last of $root was " +
-            "vacuumed — re-bootstrap the consumer (drop its offset " +
-            "table)" + CrashedSweepHint)
-        changesBetween(spark, root, last, cur, keyCols)
-      }
-    Some(ChangeBatch(changes, last, cur, () => {
-      write(spark.range(1).select(lit(cur).as("version")), consumerRoot)
-      vacuum(spark, consumerRoot, keep = 2)
-    }))
   }
 
   /** Read the current epoch (pointer-resolved). */

@@ -23,10 +23,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: the build is one grouped aggregate per file batch
   * (map-side, bloom state `numBits/8` bytes per file); the index is
   * one row per file (metadata-scale, like the manifest) and commits
-  * through [[graft.sinks.VersionedTable]] epochs keyed by path.
-  * [[graft.sinks.ManifestTable.buildBloom]] maintains one beside a
-  * manifest table (adopted directories included), indexing only the
-  * files it lacks.
+  * as [[graft.sinks.VersionedTable]] epochs: a full build replaces
+  * the epoch, a delta upserts by path through the epoch table's
+  * read-modify-write CAS loop. [[graft.sinks.ManifestTable.buildBloom]]
+  * maintains one beside a manifest table (adopted directories
+  * included), indexing only the files it lacks.
   */
 object FileBloomIndex {
 
@@ -48,13 +49,19 @@ object FileBloomIndex {
 
   /** Upsert a DELTA batch ([[buildFor]] over files the index lacks)
     * into the committed epoch: new files insert, a same-path row is
-    * replaced; the first commit bootstraps the epoch. Rows for files
-    * since deleted stay, and exclude nothing from a listing they do
-    * not appear in. */
+    * replaced. The index must exist ([[commitFull]] bootstraps it).
+    * Rows for files since deleted stay, and exclude nothing from a
+    * listing they do not appear in. Racing deltas serialize through
+    * the CAS loop, so neither is lost. Cost ∝ the index (one epoch
+    * rewrite of |files| rows). */
   def commitDelta(index: DataFrame, root: String): Long =
-    if (graft.sinks.VersionedTable.latestVersion(index.sparkSession, root) >= 0)
-      graft.sinks.VersionedTable.merge(index, root, Seq("path"))
-    else graft.sinks.VersionedTable.write(index, root)
+    graft.sinks.VersionedTable.rewriteLoop(index.sparkSession, root) { base =>
+      val cur = graft.sinks.VersionedTable
+        .readVersion(index.sparkSession, root, base)
+      cur.join(index.select(col("path")).distinct(), Seq("path"), "left_anti")
+        .unionByName(index)
+        .select(cur.columns.toIndexedSeq.map(col): _*)
+    }
 
   def read(spark: SparkSession, root: String): DataFrame =
     graft.sinks.VersionedTable.read(spark, root)

@@ -26,19 +26,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * ([[graft.sinks.VersionedTable.changesBetween]] /
   * [[graft.sinks.ManifestTable.changesBetween]]): key columns +
   * payload + `op` (I/U/D) + `seq` = v₁. The FIRST batch(es) bootstrap
-  * — the whole table at the stream's starting version as 'I' rows
-  * (the [[graft.sinks.VersionedTable.consumeChanges]] contract, now
-  * with Structured Streaming's checkpoint as the durable consumer
-  * offset). Piped into `applyCdc` on a downstream table this is the
-  * medallion hop, and it is REPLAY-IDEMPOTENT: a restart re-plans the
-  * same (v₀, v₁] from the checkpoint, versions are immutable, and the
-  * diff is deterministic, so the re-delivered batch folds to the same
-  * content.
+  * — the whole table at the stream's starting version as 'I' rows.
+  * This is the engine's one change consumer: Structured Streaming's
+  * checkpoint is the durable consumer offset (at-least-once across
+  * crashes, an unacknowledged batch re-plans). Piped into
+  * [[graft.sinks.ManifestTable.applyCdc]] on a downstream table this
+  * is the medallion hop, and it is REPLAY-IDEMPOTENT: a restart
+  * re-plans the same (v₀, v₁] from the checkpoint, versions are
+  * immutable, and the diff is deterministic, so the re-delivered
+  * batch folds to the same content.
   *
   * Contract: the table is KEYED (one row per key at every version —
   * the merge/applyCdc invariant) and `keyCols` names its key. A
-  * stream that lagged past vacuumed history fails fast on the missing
-  * version — re-bootstrap with a fresh checkpoint.
+  * stream that lagged past vacuumed history fails fast naming
+  * retention — re-bootstrap with a fresh checkpoint.
   *
   * Scale shape:
   *   - BOOTSTRAP: served DIRECTLY from the resolved version's own
@@ -249,10 +250,12 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
     if (isManifest) graft.sinks.ManifestTable.latestVersion(spark, root)
     else graft.sinks.VersionedTable.latestVersion(spark, root)
 
+  private def retainedVersions: Seq[Long] =
+    if (isManifest) graft.sinks.ManifestTable.versions(spark, root)
+    else graft.sinks.VersionedTable.versions(spark, root)
+
   private def oldestRetained: Long =
-    (if (isManifest) graft.sinks.ManifestTable.versions(spark, root)
-     else graft.sinks.VersionedTable.versions(spark, root))
-      .headOption.getOrElse(currentVersion)
+    retainedVersions.headOption.getOrElse(currentVersion)
 
   private def changes(from: Long, to: Long): DataFrame =
     if (isManifest)
@@ -338,9 +341,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
       require(v <= currentVersion + 1L,
         s"startingVersion $v names an uncommitted future version of " +
           s"$root (latest is $currentVersion)")
-      require((if (isManifest) graft.sinks.ManifestTable.versions(spark, root)
-               else graft.sinks.VersionedTable.versions(spark, root))
-          .contains(v - 1L),
+      require(retainedVersions.contains(v - 1L),
         s"startingVersion $v of $root needs version ${v - 1L} retained " +
           "(the diff reads its state) but it was vacuumed — " +
           "re-bootstrap without the option, or start later" +
@@ -594,6 +595,12 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
     val dirPath = new Path(dir)
     val f = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(new Path(dirPath, "_SUCCESS"))) {
+      // the diff reads `from`'s state: a stream whose checkpoint names
+      // a vacuumed version must say so, not fail on a missing file
+      require(retainedVersions.contains(from),
+        s"change-feed stream lagged past retention: version $from of " +
+          s"$root was vacuumed — restart with a fresh checkpoint to " +
+          "re-bootstrap" + graft.sinks.VersionedTable.CrashedSweepHint)
       if (f.exists(dirPath)) f.delete(dirPath, true): Unit
       batchDf(from, to).write.parquet(dir)
     }

@@ -43,9 +43,10 @@ import graft.plans.StatsPruneRule
   *     built-in parquet scan this source delegates to — the engine's
   *     own strengths are reused, not reimplemented.
   *
-  * Read-only by design: writes go through the [[graft.sinks
-  * .VersionedTable]] commit protocol (CAS epoch claim + pointer
-  * cache), which a blind DSv2 append could not honor.
+  * Writes bridge into each format's OWN commit protocol (see
+  * [[GraftTable.newWriteBuilder]]): row appends need the manifest
+  * format; an epoch-directory table takes only whole-table
+  * overwrites.
   */
 class GraftTableProvider extends TableProvider with DataSourceRegister
   with org.apache.spark.sql.sources.StreamSinkProvider {
@@ -510,9 +511,12 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
   /** Writes bridge through V1 (`InsertableRelation`) into the table
     * formats' OWN commit protocols — an INSERT INTO / writeTo.append
     * is a real CAS-committed version, never a blind directory write.
-    * Manifest tables append at file-list cost; epoch tables append as
-    * a full next epoch (their documented grain). `overwrite = true`
-    * (TRUNCATE) replaces content, history stays time-travelable. */
+    * Manifest tables append at file-list cost. Epoch tables have no
+    * row-level writes (every epoch is a full snapshot): an append
+    * REFUSES, naming the manifest format, the same way the change
+    * feed's append mode refuses them. `overwrite = true` (TRUNCATE)
+    * replaces content on either format — on an epoch table it commits
+    * the next epoch — and history stays time-travelable. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -549,15 +553,14 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
                 else if (autoMerge)
                   graft.sinks.ManifestTable.writeMergeSchema(data, root): Unit
                 else graft.sinks.ManifestTable.write(data, root): Unit
-              } else {
-                // append must go through the SERIALIZED CAS loop — a
-                // precomputed union committed blindly would survive a
-                // conflict with only its version retried, dropping the
-                // racing writer's rows
-                if (replace)
-                  graft.sinks.VersionedTable.write(data, root): Unit
-                else graft.sinks.VersionedTable.append(data, root): Unit
-              }
+              } else if (replace)
+                graft.sinks.VersionedTable.write(data, root): Unit
+              else throw new UnsupportedOperationException(
+                s"$name is an epoch-directory table: every epoch is a " +
+                  "full snapshot, so it takes whole-table overwrites " +
+                  "only — row appends need the manifest format " +
+                  "(graft.sinks.ManifestTable.create the table, then " +
+                  "INSERT INTO / append)")
             }
         }
     }

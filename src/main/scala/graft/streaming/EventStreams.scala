@@ -543,17 +543,17 @@ object EventStreams {
 
   /** Streaming maintenance of the persisted INVERTED INDEX
     * ([[graft.operators.Ranking.buildInvertedIndex]]): each arriving
-    * document micro-batch folds into the committed postings/doclen
-    * epochs via [[graft.operators.Ranking.upsertIndexedDocs]] — new
+    * document micro-batch folds into the postings/doclen manifest
+    * tables via [[graft.operators.Ranking.upsertIndexedDocs]] — new
     * doc ids insert, re-delivered or corrected ids REPLACE their rows
     * — and every `optimizeEvery` batches the postings re-cluster by
     * token so the term-probe pushdown layout survives the
     * log-structured merges. Per-batch cost ∝ the batch tokenize plus
-    * one index-sized epoch rewrite, never the corpus: the live-search
-    * ingestion shape. Replay-safe WITHOUT a batch sidecar: the merge
-    * is keyed by doc_id, so a re-delivered batch recommits an epoch
-    * with identical content (idempotent by construction — a redundant
-    * epoch, bounded by vacuum, not a wrong one). BM25 through the
+    * the index files the batch's doc ids touch, never the corpus: the
+    * live-search ingestion shape. Replay-safe WITHOUT a batch sidecar:
+    * the merge is keyed by doc_id, so a re-delivered batch recommits
+    * identical content (idempotent by construction — a redundant
+    * version, bounded by vacuum, not a wrong one). BM25 through the
     * maintained index equals a from-scratch build on the same docs
     * (StreamingSpec). */
   def invertedIndexStream(docs: DataFrame, root: String,

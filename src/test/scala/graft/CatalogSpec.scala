@@ -96,6 +96,35 @@ class CatalogSpec extends AnyFunSuite {
     } finally sinks.VersionedTable.commitClock = prev
   }
 
+  test("epoch-directory table refuses DSv2 and SQL appends naming ManifestTable; overwrite commits the next epoch") {
+    warehouse: Unit
+    val loc = java.nio.file.Files
+      .createTempDirectory("graft-catalog-epoch").toString + "/t"
+    sinks.VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), loc)
+    spark.sql(s"CREATE TABLE graftc.db.epochs USING graft LOCATION '$loc'")
+    def causes(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" <- ")
+    // every epoch is a full snapshot: a row append has no grain here
+    val viaWriter = intercept[Exception] {
+      Seq((2L, "b")).toDF("k", "v")
+        .write.format("graft").mode("append").save(loc)
+    }
+    assert(causes(viaWriter).contains("ManifestTable"), causes(viaWriter))
+    val viaSql = intercept[Exception] {
+      spark.sql("INSERT INTO graftc.db.epochs VALUES (3, 'c')")
+    }
+    assert(causes(viaSql).contains("ManifestTable"), causes(viaSql))
+    assert(sinks.VersionedTable.latestVersion(spark, loc) == 0L,
+      "a refused append must commit nothing")
+    // a whole-table overwrite is the epoch grain: the next epoch
+    Seq((4L, "d")).toDF("k", "v")
+      .write.format("graft").mode("overwrite").save(loc)
+    assert(sinks.VersionedTable.latestVersion(spark, loc) == 1L)
+    assert(spark.sql("SELECT k FROM graftc.db.epochs").collect()
+      .map(_.getLong(0)).toSeq == Seq(4L))
+  }
+
   test("a fresh session resolves by name and still prunes — no per-JVM registration involved") {
     warehouse: Unit
     val docs = sources.Tables.documents(spark, sf)

@@ -68,6 +68,32 @@ class CliSpec extends AnyFunSuite {
     assert(client.tableRows(s"group-1/$dsId/FactTimeslices").size == 1)
   }
 
+  test("normalize writes canon qualityIssues in Quality.allIssues union order: timeslice rules, then the stage rule") {
+    val dataDir = stageRawData()
+    // a second stage without a label fires STAGE_MISSING_LABEL_OR_NUMBER
+    // beside the fixture's MISSING_WORKFLOW_DEFINITION timeslice
+    val stageNoLabel = NotionFixtures.stageJson
+      .replace("22222222-2222-2222-2222-222222222222",
+        "33333333-3333-3333-3333-333333333333")
+      .replace("\"stage_label\": {", "\"stage_label_zzz\": {")
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dataDir/raw/workflowStages/2026-08-12/records.jsonl"),
+      Seq(NotionFixtures.stageJson, stageNoLabel).mkString("\n").getBytes("UTF-8"))
+    val env = Cli.Env(spark, NotionFixtures.cfg, runDate = "2026-08-12", log = _ => ())
+    assert(Cli.normalize(env, dataDir)("qualityIssues") == 2)
+    val dir = new java.io.File(
+      sinks.JsonlSink.datasetDir(dataDir, "canon", "qualityIssues", "2026-08-12"))
+    val files = dir.listFiles().filter(f => f.getName.startsWith("part-") &&
+      f.length() > 0)
+    assert(files.length == 1, s"one canon file, got ${files.map(_.getName).toSeq}")
+    val rules = java.nio.file.Files.readAllLines(files.head.toPath).asScala.toSeq
+      .filter(_.nonEmpty)
+      .map(l => "\"rule\":\"([A-Z_]+)\"".r.findFirstMatchIn(l).get.group(1))
+      .toSeq
+    assert(rules == Seq("MISSING_WORKFLOW_DEFINITION",
+      "STAGE_MISSING_LABEL_OR_NUMBER"), s"canon order: $rules")
+  }
+
   test("normalize, excel:export and pbi:refresh leave no cached relation in the session") {
     spark.sharedState.cacheManager.clearCache()
     val dataDir = stageRawData()

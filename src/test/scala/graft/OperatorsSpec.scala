@@ -3058,9 +3058,9 @@ class OperatorsSpec extends AnyFunSuite {
     Ranking.optimizeIndex(spark, s"$dir/inc", numFiles = 2)
     Ranking.buildInvertedIndex(docs, "doc_id", "text", s"$dir/full")
     def rows(root: String, sub: String) =
-      sinks.VersionedTable.read(spark, s"$root/$sub")
-    // merge must not churn the epoch's positional schema (the USING-
-    // anti-join's key-first output leaked into committed epochs before)
+      sinks.ManifestTable.read(spark, s"$root/$sub")
+    // merge must not churn the table's positional schema (a USING
+    // anti-join's key-first output must not leak into committed files)
     assert(rows(s"$dir/inc", "postings").columns.toSeq ==
       Seq("tok", "doc_id", "tf"))
     // postings and doclen row-sets identical to the from-scratch build
@@ -3127,11 +3127,11 @@ class OperatorsSpec extends AnyFunSuite {
       "doc_id", "text")
     assert(n1 == 2, s"first tick must ingest the landed files, got $n1")
     // clean tick: nothing new, nothing rewritten
-    val v0 = sinks.VersionedTable.latestVersion(spark, s"$root/postings")
+    val v0 = sinks.ManifestTable.latestVersion(spark, s"$root/postings")
     assert(Ranking.indexIngestTick(spark, landing, manifest, root,
       "doc_id", "text") == 0)
-    assert(sinks.VersionedTable.latestVersion(spark, s"$root/postings") == v0,
-      "a no-op tick must not commit a new epoch")
+    assert(sinks.ManifestTable.latestVersion(spark, s"$root/postings") == v0,
+      "a no-op tick must not commit a new version")
     // wave 2 lands; only its files are read, index now covers the union
     wave2.repartition(1).write.mode("append").parquet(landing)
     assert(Ranking.indexIngestTick(spark, landing, manifest, root,
@@ -3140,7 +3140,7 @@ class OperatorsSpec extends AnyFunSuite {
     val fullRoot = s"$base/full"
     Ranking.buildInvertedIndex(docs, "doc_id", "text", fullRoot)
     def rows(r: String, sub: String) =
-      sinks.VersionedTable.read(spark, s"$r/$sub")
+      sinks.ManifestTable.read(spark, s"$r/$sub")
     assert(rows(root, "postings").exceptAll(rows(fullRoot, "postings")).isEmpty
       && rows(fullRoot, "postings").exceptAll(rows(root, "postings")).isEmpty,
       "tick-maintained postings must equal the from-scratch build")

@@ -100,33 +100,37 @@ class SinksSpec extends AnyFunSuite {
     assert(v2 == 2L)
   }
 
-  test("versioned table merge/delete: row-level upsert fold; delete-then-vacuum purges lineage") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vtm").toString + "/t"
-    sinks.VersionedTable.write(
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), root)
+  test("manifest merge/delete: row-level upsert fold; delete-then-vacuum purges lineage") {
+    import sinks.ManifestTable
+    val root = java.nio.file.Files.createTempDirectory("graft-mtm").toString + "/t"
+    ManifestTable.create(
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), root, Seq("k"))
     // merge: k=2 matched (update), k=9 unmatched (insert)
-    val vm = sinks.VersionedTable.merge(
+    val vm = ManifestTable.merge(
       Seq((2L, "B2"), (9L, "new")).toDF("k", "v"), root, Seq("k"))
     assert(vm == 1L)
-    def cur() = sinks.VersionedTable.read(spark, root)
+    def cur() = ManifestTable.read(spark, root)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     assert(cur() == Seq((1L, "a"), (2L, "B2"), (3L, "c"), (9L, "new")))
-    // a single-row delete costs ONE epoch rewrite, never a rebuild of
-    // upstream state; NULL-cond rows are kept (SQL DELETE semantics)
-    val vd = sinks.VersionedTable.deleteWhere(spark, root,
+    // a single-row delete is one commit, never a rebuild of upstream
+    // state; NULL-cond rows are kept (SQL DELETE semantics)
+    val vd = ManifestTable.deleteWhere(spark, root,
       when(col("k") === 3L, lit(true)).otherwise(
         when(col("k") === 9L, lit(null)).otherwise(lit(false))
           .cast("boolean")))
     assert(vd == 2L)
     assert(cur() == Seq((1L, "a"), (2L, "B2"), (9L, "new")))
     // lineage: the deleted row is still as-of-readable pre-vacuum...
-    assert(sinks.VersionedTable.readVersion(spark, root, 1)
+    assert(ManifestTable.readVersion(spark, root, 1)
       .filter(col("k") === 3L).count() == 1,
-      "pre-vacuum, the deleted row must remain in the prior epoch")
+      "pre-vacuum, the deleted row must remain in the prior version")
     // ...and delete-then-vacuum is the compliance path that purges it
-    sinks.VersionedTable.vacuum(spark, root, keep = 1)
-    assert(sinks.VersionedTable.versions(spark, root) == Seq(2L))
+    ManifestTable.vacuum(spark, root, keep = 1, ttlMs = 0L)
+    assert(ManifestTable.versions(spark, root) == Seq(2L))
     assert(cur() == Seq((1L, "a"), (2L, "B2"), (9L, "new")))
+    intercept[Exception] {
+      ManifestTable.readVersion(spark, root, 1).collect()
+    }
   }
 
   test("versioned table: racing blind writers all commit durable distinct epochs, pointer converges") {
@@ -164,21 +168,23 @@ class SinksSpec extends AnyFunSuite {
 
   test("versioned table: racing merges serialize — neither update is lost") {
     val root = java.nio.file.Files.createTempDirectory("graft-vtrm").toString + "/t"
-    sinks.VersionedTable.write(
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), root)
+    // the epoch table's one keyed upsert: the bloom index's delta
+    // commit, keyed by path, through the read-modify-write CAS loop
+    def idx(rows: (String, Long)*) =
+      rows.map { case (p, n) => (p, Array(n.toByte), n) }
+        .toDF("path", "bloom", "row_count")
+    sources.FileBloomIndex.commitFull(idx(("a", 1L), ("b", 2L), ("c", 3L)), root)
     // the classic lost-update shape: both merges read base version 0,
     // touch DISJOINT keys, and race the commit. Without the conflict
     // check the loser's rewrite (computed against epoch 0) would
     // overwrite the winner's epoch, silently discarding its update.
     val gate = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val futs = Seq(
-      Seq((1L, "A!")), Seq((3L, "C!"))
-    ).map { up =>
+    val futs = Seq(("a", 10L), ("c", 30L)).map { up =>
       pool.submit(new java.util.concurrent.Callable[Long] {
         def call(): Long = {
           gate.await()
-          sinks.VersionedTable.merge(up.toDF("k", "v"), root, Seq("k"))
+          sources.FileBloomIndex.commitDelta(idx(up), root)
         }
       })
     }
@@ -186,15 +192,15 @@ class SinksSpec extends AnyFunSuite {
     val got = futs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).sorted
     pool.shutdown()
     assert(got == Seq(1L, 2L), s"claimed versions: $got")
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.select("path", "row_count").as[(String, Long)].collect().sortBy(_._1).toSeq
     // serializable outcome: the final epoch holds BOTH updates
-    assert(sinks.VersionedTable.read(spark, root)
-      .as[(Long, String)].collect().sortBy(_._1).toSeq ==
-      Seq((1L, "A!"), (2L, "b"), (3L, "C!")))
+    assert(counts(sources.FileBloomIndex.read(spark, root)) ==
+      Seq(("a", 10L), ("b", 2L), ("c", 30L)))
     // and the intermediate epoch is exactly one of the two serial orders
-    val mid = sinks.VersionedTable.readVersion(spark, root, 1)
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(mid == Seq((1L, "A!"), (2L, "b"), (3L, "c")) ||
-           mid == Seq((1L, "a"), (2L, "b"), (3L, "C!")), s"epoch 1: $mid")
+    val mid = counts(sinks.VersionedTable.readVersion(spark, root, 1))
+    assert(mid == Seq(("a", 10L), ("b", 2L), ("c", 3L)) ||
+           mid == Seq(("a", 1L), ("b", 2L), ("c", 30L)), s"epoch 1: $mid")
   }
 
   test("versioned table writeBatch: a replayed batch id is a no-op, the next id commits") {
@@ -219,42 +225,11 @@ class SinksSpec extends AnyFunSuite {
     assert(sinks.VersionedTable.lastAppliedBatch(spark, root) == -1L)
   }
 
-  test("versioned table merge with schema evolution: union schema, strict mode refuses") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vtse").toString + "/t"
-    sinks.VersionedTable.write(
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
-    // strict default: a batch with a surprise column is an error, not
-    // a silently-widened epoch
-    intercept[org.apache.spark.sql.AnalysisException] {
-      sinks.VersionedTable.merge(
-        Seq((2L, "B", 7L)).toDF("k", "v", "w"), root, Seq("k"))
-    }
-    // opted-in: new column joins the schema, untouched rows take NULL
-    sinks.VersionedTable.merge(
-      Seq((2L, "B", 7L), (3L, "c", 8L)).toDF("k", "v", "w"), root,
-      Seq("k"), evolveSchema = true)
-    val rows = sinks.VersionedTable.read(spark, root)
-      .select("k", "v", "w").collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2))))
-      .sortBy(_._1).toSeq
-    assert(rows == Seq((1L, "a", None), (2L, "B", Some(7L)),
-      (3L, "c", Some(8L))))
-    // a later batch may OMIT the evolved column: its rows take NULL
-    sinks.VersionedTable.merge(
-      Seq((4L, "d")).toDF("k", "v"), root, Seq("k"), evolveSchema = true)
-    assert(sinks.VersionedTable.read(spark, root)
-      .filter(col("k") === 4L).select("w").head().isNullAt(0))
-    // key columns can never be absent, evolved or not
-    intercept[IllegalArgumentException] {
-      sinks.VersionedTable.merge(
-        Seq(("x")).toDF("v"), root, Seq("k"), evolveSchema = true)
-    }
-  }
-
-  test("versioned table applyCdc: sequential batch folds == one-shot; in-batch collapse") {
-    def seed(root: String) = sinks.VersionedTable.write(
-      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v"), root)
+  test("manifest applyCdc: sequential batch folds == one-shot; in-batch collapse") {
+    import sinks.ManifestTable
+    def seed(root: String) = ManifestTable.create(
+      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("k", "v"), root,
+      Seq("k"))
     def cdc(rows: (Long, String, String, Long)*) =
       rows.toDF("k", "v", "op", "seq")
     // batch 1: update k=2, insert k=5, and k=6 inserted-then-deleted
@@ -268,13 +243,13 @@ class SinksSpec extends AnyFunSuite {
     val rootSeq = java.nio.file.Files.createTempDirectory("graft-cdc1")
       .toString + "/t"
     seed(rootSeq)
-    sinks.VersionedTable.applyCdc(b1, rootSeq, Seq("k"))
-    sinks.VersionedTable.applyCdc(b2, rootSeq, Seq("k"))
+    ManifestTable.applyCdc(b1, rootSeq, Seq("k"))
+    ManifestTable.applyCdc(b2, rootSeq, Seq("k"))
     val rootOne = java.nio.file.Files.createTempDirectory("graft-cdc2")
       .toString + "/t"
     seed(rootOne)
-    sinks.VersionedTable.applyCdc(b1.unionByName(b2), rootOne, Seq("k"))
-    def state(root: String) = sinks.VersionedTable.read(spark, root)
+    ManifestTable.applyCdc(b1.unionByName(b2), rootOne, Seq("k"))
+    def state(root: String) = ManifestTable.read(spark, root)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     val expected =
       Seq((2L, "B2"), (3L, "C2"), (4L, "d"), (5L, "e"))
@@ -282,8 +257,8 @@ class SinksSpec extends AnyFunSuite {
       s"sequential folds diverged: ${state(rootSeq)}")
     assert(state(rootOne) == expected,
       s"one-shot union fold diverged: ${state(rootOne)}")
-    // pre-fold epochs keep the CDC'd-away rows for as-of reads
-    assert(sinks.VersionedTable.readVersion(spark, rootSeq, 0)
+    // pre-fold versions keep the CDC'd-away rows for as-of reads
+    assert(ManifestTable.readVersion(spark, rootSeq, 0)
       .filter(col("k") === 1L).count() == 1)
   }
 
@@ -760,78 +735,105 @@ class SinksSpec extends AnyFunSuite {
     assert(cf.select("seq").distinct().as[Long].collect().toSeq == Seq(v1))
     // round trip: feed applied onto the v0 state rebuilds v1 exactly
     val root2 = s"$base/mirror"
-    sinks.VersionedTable.write(a, root2)
-    sinks.VersionedTable.applyCdc(cf, root2, Seq("id"))
-    val rebuilt = sinks.VersionedTable.read(spark, root2)
+    sinks.ManifestTable.create(a, root2, Seq("id"))
+    sinks.ManifestTable.applyCdc(cf, root2, Seq("id"))
+    val rebuilt = sinks.ManifestTable.read(spark, root2)
       .as[(Long, String)].collect().toSet
     assert(rebuilt == b.as[(Long, String)].collect().toSet,
       "applyCdc(changesBetween(v0, v1)) onto v0 must rebuild v1")
   }
 
+  /** One `Trigger.AvailableNow` run of the change-feed stream
+    * (`readStream.format("graft")`) over `root` from checkpoint `ckpt`;
+    * `sink` sees every batch. The checkpoint is the consumer's durable
+    * offset. */
+  private def feedRun(root: String, key: String, ckpt: String)
+                     (sink: org.apache.spark.sql.DataFrame => Unit): Unit = {
+    val q = spark.readStream.format("graft").option("keyCols", key)
+      .load(root)
+      .writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        sink(df) }
+      .start()
+    try q.awaitTermination() finally q.stop()
+  }
+
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" <- ")
+
   test("change-feed consumer: durable offsets, bootstrap as inserts, exact deltas, retention fail-fast") {
+    import sinks.{ManifestTable, VersionedTable}
     val base = java.nio.file.Files
       .createTempDirectory("graft-consume").toString
     val root = s"$base/t"
-    val consumer = s"$base/offsets"
+    val ckpt = s"$base/ckpt"
     val mirror = s"$base/mirror"
-    sinks.VersionedTable.write(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root)
-    // bootstrap: whole current epoch as inserts; nothing before commit
-    val b0 = sinks.VersionedTable
-      .consumeChanges(spark, root, consumer, Seq("id")).get
-    assert(b0.changes.select("id", "op", "v").as[(Long, String, String)]
-      .collect().toSet == Set((1L, "I", "a"), (2L, "I", "b")))
-    // un-acked: the same batch is re-delivered (at-least-once)
-    assert(sinks.VersionedTable
-      .consumeChanges(spark, root, consumer, Seq("id")).get
-      .toVersion == b0.toVersion)
-    sinks.VersionedTable.write(b0.changes.drop("op", "seq"), mirror)
-    b0.commit()
-    // caught up → None
-    assert(sinks.VersionedTable
-      .consumeChanges(spark, root, consumer, Seq("id")).isEmpty)
-    // two commits later: ONE batch carries the collapsed delta
-    sinks.VersionedTable.merge(
-      Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), root, Seq("id"))
-    sinks.VersionedTable.deleteWhere(spark, root, col("id") === 1L)
-    val b1 = sinks.VersionedTable
-      .consumeChanges(spark, root, consumer, Seq("id")).get
-    assert(b1.changes.select("id", "op", "v").as[(Long, String, String)]
-      .collect().toSet == Set((1L, "D", "a"), (2L, "U", "b2"), (3L, "I", "c")))
-    sinks.VersionedTable.applyCdc(b1.changes, mirror, Seq("id"))
-    b1.commit()
-    // the consumer's applied mirror equals the source's current state
-    assert(sinks.VersionedTable.read(spark, mirror)
-      .as[(Long, String)].collect().toSet ==
-      sinks.VersionedTable.read(spark, root)
-        .as[(Long, String)].collect().toSet)
-    // lag past retention: vacuum away the acked epoch → fail fast
-    sinks.VersionedTable.write(Seq((9L, "z")).toDF("id", "v"), root)
-    sinks.VersionedTable.vacuum(spark, root, keep = 1)
-    val ex = intercept[IllegalArgumentException] {
-      sinks.VersionedTable.consumeChanges(spark, root, consumer, Seq("id"))
+    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root)
+    val seen = scala.collection.mutable.ArrayBuffer
+      .empty[Set[(Long, String, String)]]
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "op", "v").as[(Long, String, String)].collect().toSet
+    // the consumer: record the batch, then fold it into the mirror
+    def consume(): Unit = feedRun(root, "id", ckpt) { df =>
+      seen += rows(df)
+      if (!ManifestTable.exists(spark, mirror))
+        ManifestTable.create(df.filter(col("op") =!= "D").drop("op", "seq"),
+          mirror, Seq("id")): Unit
+      else ManifestTable.applyCdc(df, mirror, Seq("id")): Unit
     }
-    assert(ex.getMessage.contains("lagged past retention"))
+    // a consumer that fails BEFORE acknowledging: its offset stays put
+    val failed = intercept[Exception] {
+      feedRun(root, "id", ckpt) { df =>
+        seen += rows(df); sys.error("consumer crashed mid-batch") }
+    }
+    assert(causes(failed).contains("consumer crashed mid-batch"))
+    // bootstrap: the whole current epoch as inserts, re-delivered
+    // after the crash (at-least-once)
+    consume()
+    val bootstrap = Set((1L, "I", "a"), (2L, "I", "b"))
+    assert(seen.toSeq == Seq(bootstrap, bootstrap), s"got $seen")
+    // caught up → no batch
+    consume()
+    assert(seen.size == 2, "a caught-up consumer must get no batch")
+    // two commits later: ONE batch carries the collapsed delta
+    VersionedTable.write(
+      Seq((1L, "a"), (2L, "b2"), (3L, "c")).toDF("id", "v"), root)
+    VersionedTable.write(Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), root)
+    consume()
+    assert(seen.size == 3 && seen.last ==
+      Set((1L, "D", "a"), (2L, "U", "b2"), (3L, "I", "c")), s"got $seen")
+    // the consumer's applied mirror equals the source's current state
+    assert(ManifestTable.read(spark, mirror)
+      .as[(Long, String)].collect().toSet ==
+      VersionedTable.read(spark, root).as[(Long, String)].collect().toSet)
+    // lag past retention: vacuum away the acked epoch → fail fast
+    VersionedTable.write(Seq((9L, "z")).toDF("id", "v"), root)
+    VersionedTable.vacuum(spark, root, keep = 1)
+    val ex = intercept[Exception] { consume() }
+    assert(causes(ex).contains("lagged past retention"), causes(ex))
   }
 
   test("optimize: re-clustered epoch is content-identical and narrows per-file envelopes") {
+    import sinks.ManifestTable
     val base = java.nio.file.Files
       .createTempDirectory("graft-optimize").toString
     val root = s"$base/t"
     val docs = sources.Tables.documents(spark, sf)
       .select("doc_id", "lang", "n_chars")
     // hash layout: every file's doc_id envelope spans ~the full domain
-    sinks.VersionedTable.write(docs.repartition(4, col("lang")), root)
-    val v0 = sinks.VersionedTable.latestVersion(spark, root)
-    val v1 = sinks.VersionedTable.optimize(spark, root,
+    ManifestTable.create(docs.repartition(4, col("lang")), root, Seq("doc_id"))
+    val v0 = ManifestTable.latestVersion(spark, root)
+    val v1 = ManifestTable.optimize(spark, root,
       sortCols = Seq("doc_id"), numFiles = 4)
     assert(v1 == v0 + 1)
-    val before = sinks.VersionedTable.readVersion(spark, root, v0)
-    val after = sinks.VersionedTable.readVersion(spark, root, v1)
+    val before = ManifestTable.readVersion(spark, root, v0)
+    val after = ManifestTable.readVersion(spark, root, v1)
     assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty,
       "optimize must not change content")
-    def spans(v: Long): Seq[Long] = sources.FileStats
-      .collect(spark, s"$root/epoch=$v", Seq("doc_id"))
+    def spans(v: Long): Seq[Long] = ManifestTable.manifest(spark, root, v)
       .select(col("doc_id_max") - col("doc_id_min"))
       .as[Long].collect().toSeq
     assert(spans(v1).max < spans(v0).max,
@@ -878,7 +880,8 @@ class SinksSpec extends AnyFunSuite {
       .select("doc_id", "lang", "n_chars")
     sinks.VersionedTable.write(
       docs.repartitionByRange(4, col("doc_id")), root)
-    sinks.VersionedTable.deleteWhere(spark, root, col("lang") === "en")
+    sinks.VersionedTable.write(docs.filter(col("lang") =!= "en")
+      .repartitionByRange(4, col("doc_id")), root)
     val nAll = docs.count()
     val nNoEn = docs.filter(col("lang") =!= "en").count()
     // current epoch reflects the delete; versionAsOf reads history
@@ -888,7 +891,8 @@ class SinksSpec extends AnyFunSuite {
     // snapshot isolation: a resolved reader is pinned to its epoch —
     // a commit landing AFTER load() must not change what it reads
     val snap = spark.read.format("graft").load(root)
-    sinks.VersionedTable.deleteWhere(spark, root, col("lang") === "de")
+    sinks.VersionedTable.write(
+      docs.filter(col("lang") =!= "en" && col("lang") =!= "de"), root)
     assert(snap.count() == nNoEn,
       "a resolved snapshot must not observe later commits")
     assert(spark.read.format("graft").load(root).count() ==
@@ -1177,35 +1181,38 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("manifest change-feed consumer: durable offsets over file-set-delta diffs") {
-    import sinks.{ManifestTable, VersionedTable}
+    import sinks.ManifestTable
     val base = java.nio.file.Files
       .createTempDirectory("graft-manifest-consume").toString
-    val root = s"$base/t"; val consumer = s"$base/consumer"
+    val root = s"$base/t"; val ckpt = s"$base/ckpt"
     ManifestTable.create(
       spark.range(0, 40).select(col("id").as("k"), (col("id") * 2).as("v"))
         .repartitionByRange(4, col("k")).sortWithinPartitions(col("k")),
       root, Seq("k"))
-    // bootstrap: the whole current version as inserts
-    val b0 = ManifestTable.consumeChanges(spark, root, consumer, Seq("k")).get
-    assert(b0.fromVersion == -1L && b0.toVersion == 0L)
-    assert(b0.changes.count() == 40 &&
-      b0.changes.filter(col("op") =!= "I").count() == 0)
-    b0.commit()
-    assert(ManifestTable.consumeChanges(spark, root, consumer, Seq("k")).isEmpty,
-      "caught-up consumer gets None")
+    val seen = scala.collection.mutable.ArrayBuffer
+      .empty[Seq[(Long, String, Long)]]
+    def consume(): Unit = feedRun(root, "k", ckpt) { df =>
+      seen += df.select("k", "op", "seq").as[(Long, String, Long)]
+        .collect().toSeq }
+    // bootstrap: the whole current version as inserts, stamped v0
+    consume()
+    assert(seen.size == 1 && seen.head.size == 40 &&
+      seen.head.forall(r => r._2 == "I" && r._3 == 0L))
+    consume()
+    assert(seen.size == 1, "caught-up consumer gets no batch")
     // two commits collapse into one delta batch, file-granular
     ManifestTable.merge(
       spark.range(0, 3).select(col("id").as("k"), lit(-1L).as("v")),
       root, Seq("k"))
     ManifestTable.deleteWhere(spark, root, col("k") === 39L)
-    val b1 = ManifestTable.consumeChanges(spark, root, consumer, Seq("k")).get
-    assert(b1.fromVersion == 0L && b1.toVersion == 2L)
-    val got = b1.changes.collect()
-      .map(r => (r.getAs[Long]("k"), r.getAs[String]("op"))).toSet
+    consume()
+    assert(seen.size == 2)
+    val got = seen.last.map(r => (r._1, r._2)).toSet
     assert(got == Set((0L, "U"), (1L, "U"), (2L, "U"), (39L, "D")),
       s"collapsed delta mismatch: $got")
-    b1.commit()
-    assert(ManifestTable.consumeChanges(spark, root, consumer, Seq("k")).isEmpty)
+    assert(seen.last.forall(_._3 == 2L), "the delta is stamped v2")
+    consume()
+    assert(seen.size == 2)
   }
 
   test("claim verification: a degenerate-rename loser is detected by the epoch's claim marker and its garbage swept") {
@@ -1240,27 +1247,6 @@ class SinksSpec extends AnyFunSuite {
     // the epoch stays perfectly readable throughout
     assert(sinks.VersionedTable.read(spark, root)
       .collect().map(_.getLong(0)).toSeq == Seq(1L))
-  }
-
-  test("versioned table append: racing appends serialize through the CAS loop — no lost rows") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-vt-append").toString + "/t"
-    sinks.VersionedTable.write(Seq((0L, "seed")).toDF("k", "v"), root)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val futs = (1 to 4).map { i =>
-        pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = sinks.VersionedTable.append(
-            Seq((i.toLong, s"a$i")).toDF("k", "v"), root)
-        })
-      }
-      futs.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
-      val ks = sinks.VersionedTable.read(spark, root)
-        .collect().map(_.getLong(0)).toSet
-      assert(ks == Set(0L, 1L, 2L, 3L, 4L),
-        s"every racing append must survive (a blind write of a " +
-          s"precomputed union would drop rows), got $ks")
-    } finally pool.shutdown()
   }
 
   test("manifest bloom index: equality probes prune a hash layout; delta build indexes only new files") {
@@ -1554,9 +1540,12 @@ class SinksSpec extends AnyFunSuite {
       .createTempDirectory("graft-vt-carry").toString + "/t"
     assert(sinks.VersionedTable.writeBatch(
       Seq((1L, "a")).toDF("k", "v"), root, 3L).contains(0L))
-    // merge commits through the read-modify-write loop — the marker
+    // a keyed merge through the read-modify-write loop — the marker
     // must carry into its epoch, not reset to -1
-    sinks.VersionedTable.merge(Seq((1L, "A")).toDF("k", "v"), root, Seq("k"))
+    sinks.VersionedTable.rewriteLoop(spark, root) { base =>
+      sinks.VersionedTable.readVersion(spark, root, base)
+        .filter(col("k") =!= 1L).unionByName(Seq((1L, "A")).toDF("k", "v"))
+    }
     assert(sinks.VersionedTable.lastAppliedBatch(spark, root) == 3L)
     assert(sinks.VersionedTable.writeBatch(
       Seq((9L, "z")).toDF("k", "v"), root, 3L).isEmpty)
@@ -1605,6 +1594,11 @@ class SinksSpec extends AnyFunSuite {
     assert(ManifestTable.readVersion(spark, root, 0)
       .schema.fieldNames.toSeq == Seq("k", "v"))
     assert(v2 == v1 + 1)
+    // key columns can never be absent, evolved or not
+    intercept[IllegalArgumentException] {
+      ManifestTable.merge(
+        Seq("x").toDF("v"), root, Seq("k"), evolveSchema = true)
+    }
   }
 
   test("manifest incremental optimize: rewrites only degraded files, clean files survive by name, second pass no-op") {

@@ -694,7 +694,7 @@ class StreamingSpec extends AnyFunSuite {
     val fullRoot = s"$base/full"
     operators.Ranking.buildInvertedIndex(docs, "doc_id", "text", fullRoot)
     def rows(r: String, sub: String) =
-      sinks.VersionedTable.read(spark, s"$r/$sub")
+      sinks.ManifestTable.read(spark, s"$r/$sub")
     assert(rows(root, "postings").exceptAll(rows(fullRoot, "postings")).isEmpty
       && rows(fullRoot, "postings").exceptAll(rows(root, "postings")).isEmpty,
       "stream-maintained postings must equal the from-scratch build")
@@ -716,8 +716,9 @@ class StreamingSpec extends AnyFunSuite {
       .createTempDirectory("graft-cfs-throttle").toString
     val src = s"$base/src"; val dst = s"$base/dst"
     sinks.VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), src)
-    sinks.VersionedTable.merge(Seq((2L, "b")).toDF("k", "v"), src, Seq("k"))
-    sinks.VersionedTable.merge(Seq((3L, "c")).toDF("k", "v"), src, Seq("k"))
+    sinks.VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), src)
+    sinks.VersionedTable.write(
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), src)
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = spark.readStream.format("graft")
       .option("keyCols", "k").option("maxVersionsPerTrigger", 1)
@@ -727,16 +728,17 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", s"$base/ckpt")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         batches.incrementAndGet(): Unit
-        if (sinks.VersionedTable.latestVersion(spark, dst) < 0)
-          sinks.VersionedTable.write(
-            df.filter(col("op") =!= "D").drop("op", "seq"), dst): Unit
-        else sinks.VersionedTable.applyCdc(df, dst, Seq("k")): Unit
+        if (!sinks.ManifestTable.exists(spark, dst))
+          sinks.ManifestTable.create(
+            df.filter(col("op") =!= "D").drop("op", "seq"), dst,
+            Seq("k")): Unit
+        else sinks.ManifestTable.applyCdc(df, dst, Seq("k")): Unit
       }
       .start()
     q.awaitTermination()
     assert(batches.get() == 3,
       s"3 versions at 1/trigger must arrive as 3 batches, got ${batches.get()}")
-    val got = sinks.VersionedTable.read(spark, dst)
+    val got = sinks.ManifestTable.read(spark, dst)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "a", 2L -> "b", 3L -> "c"))
     // committed deltas are swept from the checkpoint scratch — a
@@ -759,14 +761,15 @@ class StreamingSpec extends AnyFunSuite {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", s"$base/ckpt2")
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (sinks.VersionedTable.latestVersion(spark, dst2) < 0)
-          sinks.VersionedTable.write(
-            df.filter(col("op") =!= "D").drop("op", "seq"), dst2): Unit
-        else sinks.VersionedTable.applyCdc(df, dst2, Seq("k")): Unit
+        if (!sinks.ManifestTable.exists(spark, dst2))
+          sinks.ManifestTable.create(
+            df.filter(col("op") =!= "D").drop("op", "seq"), dst2,
+            Seq("k")): Unit
+        else sinks.ManifestTable.applyCdc(df, dst2, Seq("k")): Unit
       }
       .start()
     q2.awaitTermination()
-    assert(sinks.VersionedTable.read(spark, dst2)
+    assert(sinks.ManifestTable.read(spark, dst2)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap == got,
       "a post-vacuum fresh stream must bootstrap from retained history")
   }
@@ -800,17 +803,18 @@ class StreamingSpec extends AnyFunSuite {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .option("checkpointLocation", ckpt)
           .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-            if (sinks.VersionedTable.latestVersion(spark, dst) < 0)
-              sinks.VersionedTable.write(
-                df.filter(col("op") =!= "D").drop("op", "seq"), dst): Unit
+            if (!sinks.ManifestTable.exists(spark, dst))
+              sinks.ManifestTable.create(
+                df.filter(col("op") =!= "D").drop("op", "seq"), dst,
+                Seq("doc_id")): Unit
             else
-              sinks.VersionedTable.applyCdc(df, dst, Seq("doc_id")): Unit
+              sinks.ManifestTable.applyCdc(df, dst, Seq("doc_id")): Unit
           }
           .start()
         q.awaitTermination()
       }
       def same(tag: String): Unit = {
-        val s = srcNow; val d = sinks.VersionedTable.read(spark, dst)
+        val s = srcNow; val d = sinks.ManifestTable.read(spark, dst)
         assert(d.exceptAll(s).isEmpty && s.exceptAll(d).isEmpty,
           s"[$layout/$tag] downstream must equal the source")
       }
@@ -823,17 +827,20 @@ class StreamingSpec extends AnyFunSuite {
         sinks.ManifestTable.merge(upd, src, Seq("doc_id"))
         sinks.ManifestTable.deleteWhere(spark, src, col("doc_id") === k + 3)
       } else {
-        sinks.VersionedTable.merge(upd, src, Seq("doc_id"))
-        sinks.VersionedTable.deleteWhere(spark, src, col("doc_id") === k + 3)
+        // epoch tables commit whole snapshots: the same two changes
+        val upserted = docs.filter(col("doc_id") =!= k).unionByName(upd)
+        sinks.VersionedTable.write(upserted, src)
+        sinks.VersionedTable.write(
+          upserted.filter(col("doc_id") =!= k + 3), src)
       }
       hop(); same("incremental")
-      assert(sinks.VersionedTable.read(spark, dst)
+      assert(sinks.ManifestTable.read(spark, dst)
         .filter(col("doc_id") === k).select(col("lang"))
         .head().getString(0) == "zz")
       // restart with no new commits: nothing re-delivered, content fixed
-      val versionsBefore = sinks.VersionedTable.versions(spark, dst).size
+      val versionsBefore = sinks.ManifestTable.versions(spark, dst).size
       hop(); same("restart")
-      assert(sinks.VersionedTable.versions(spark, dst).size == versionsBefore,
+      assert(sinks.ManifestTable.versions(spark, dst).size == versionsBefore,
         s"[$layout] an up-to-date restart must deliver no batch")
       // the bootstrap batch was served from the snapshot's own files —
       // no full-table copy may appear under the checkpoint scratch
@@ -1315,9 +1322,10 @@ class StreamingSpec extends AnyFunSuite {
           // every bootstrap row is an insert stamped with the version
           if (df.filter(col("op") =!= "I" || col("seq") =!= 0).count() > 0)
             badBatches.incrementAndGet(): Unit
-          if (sinks.VersionedTable.latestVersion(spark, dst) < 0)
-            sinks.VersionedTable.write(df.drop("op", "seq"), dst): Unit
-          else sinks.VersionedTable.append(df.drop("op", "seq"), dst): Unit
+          if (!sinks.ManifestTable.exists(spark, dst))
+            sinks.ManifestTable.create(df.drop("op", "seq"), dst,
+              Seq("doc_id")): Unit
+          else sinks.ManifestTable.write(df.drop("op", "seq"), dst): Unit
         }
         .start()
       q.awaitTermination()
@@ -1327,7 +1335,7 @@ class StreamingSpec extends AnyFunSuite {
           s"$expectBatches batches, got ${batches.get()}")
       assert(badBatches.get() == 0,
         s"[$layout] bootstrap rows must all be op='I', seq=0")
-      val d = sinks.VersionedTable.read(spark, dst)
+      val d = sinks.ManifestTable.read(spark, dst)
       assert(d.exceptAll(docs).isEmpty && docs.exceptAll(d).isEmpty,
         s"[$layout] sliced bootstrap must reassemble the exact table")
       // zero-copy: the feed scratch was never created for the bootstrap
