@@ -7,8 +7,13 @@ Mimics the driver: for every query dumped by graft.Verify, run the
 oracle SQL in DuckDB over the same parquet tables, sort columns by
 name, sort rows, and compare cell-by-cell. Reports schema and value
 diffs per query. (Driver-side tooling only — not part of the library.)
+
+With SPARK_GRAFT_ONLY set (the comma-separated query list graft.Verify
+also reads), only those queries are scored: a named query with no
+output, or a name the oracle does not know, still fails. Unset, every
+query in oracle_sql.json is scored.
 """
-import sys, json, glob, math
+import sys, os, json, glob, math
 
 import duckdb
 
@@ -44,6 +49,13 @@ def main(sf_dir, out_dir):
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    if only:
+        names = {n for n in only.split(",") if n}
+        for name in sorted(names - oracle.keys()):
+            print(f"FAIL {name}: not an oracle query")
+            n_fail += 1
+        oracle = {n: q for n, q in oracle.items() if n in names}
     for name, sql in sorted(oracle.items()):
         pdirs = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not pdirs:

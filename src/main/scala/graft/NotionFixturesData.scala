@@ -102,7 +102,7 @@ object NotionFixturesData {
 
   def readRaw(spark: org.apache.spark.sql.SparkSession, lines: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.schema(NotionSchemas.rawRecordSchema).json(lines.toDS)
+    spark.read.schema(NotionSchemas.rawRecordSchema).json(lines.toDS())
   }
 }
 

@@ -582,7 +582,15 @@ object Dedup {
     require(params.length == 1,
       s"minhash index at $path: expected exactly one build-params row, " +
         s"got ${params.length}")
-    val (fp, storedCap) = (params(0).getString(0), params(0).getLong(1))
+    checkBuildParams(path, params(0).getString(0), params(0).getLong(1),
+      maxShinglesPerDoc)
+    spark.read.parquet(path)
+  }
+
+  /** The build-params check [[loadMinhashIndex]] and
+    * [[loadMinhashIndexVersioned]] share. */
+  private def checkBuildParams(path: String, fp: String, storedCap: Long,
+                               maxShinglesPerDoc: Option[Int]): Unit = {
     val expectCap = maxShinglesPerDoc.map(_.toLong).getOrElse(-1L)
     if (fp != minhashConstantsFingerprint)
       throw new IllegalStateException(
@@ -596,7 +604,6 @@ object Dedup {
           s"expects ${if (expectCap < 0) "None" else expectCap} — " +
           "index-vs-rescan equality requires identical caps; rebuild " +
           "the index or match the cap")
-    spark.read.parquet(path)
   }
 
   /** Append a delta batch to a persisted MinHash index WITHOUT
@@ -637,27 +644,37 @@ object Dedup {
 
   /** Always-readable persisted index: [[saveMinhashIndex]] on a
     * [[graft.sinks.VersionedTable]] root — each rebuild lands in a
-    * fresh `epoch=N` directory (build-params sidecar staged INSIDE the
-    * epoch, committed by the same pointer flip), so a reader holding
+    * fresh `epoch=N` directory whose commit record carries the build
+    * params (committed by the same pointer flip), so a reader holding
     * the previous epoch keeps scanning immutable files through any
     * rebuild. This is the seam [[saveMinhashIndex]]'s doc-comment
     * prescribes; returns the committed version. */
   def saveMinhashIndexVersioned(corpus: DataFrame, idCol: String,
                                 textCol: String, root: String,
                                 maxShinglesPerDoc: Option[Int] = None): Long =
-    graft.sinks.VersionedTable.writeStaged(
-      buildMinhashIndex(corpus, idCol, textCol, maxShinglesPerDoc), root) {
-      dir => writeBuildParams(corpus.sparkSession, dir, maxShinglesPerDoc)
-    }
+    graft.sinks.VersionedTable.write(
+      buildMinhashIndex(corpus, idCol, textCol, maxShinglesPerDoc), root,
+      buildParams(maxShinglesPerDoc))
 
-  /** Pointer-resolved [[loadMinhashIndex]] of the current epoch of a
-    * [[saveMinhashIndexVersioned]] root (same sidecar fail-fast). */
+  /** The build params as a versioned epoch's record metadata. */
+  private def buildParams(maxShinglesPerDoc: Option[Int])
+      : com.fasterxml.jackson.databind.JsonNode =
+    com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
+      .put("constants_fp", minhashConstantsFingerprint)
+      .put("max_shingles", maxShinglesPerDoc.map(_.toLong).getOrElse(-1L))
+
+  /** Pointer-resolved read of the current epoch of a
+    * [[saveMinhashIndexVersioned]] root, with [[loadMinhashIndex]]'s
+    * build-params fail-fast against the epoch's record. */
   def loadMinhashIndexVersioned(spark: org.apache.spark.sql.SparkSession,
                                 root: String,
                                 maxShinglesPerDoc: Option[Int] = None): DataFrame = {
     val v = graft.sinks.VersionedTable.latestVersion(spark, root)
     require(v >= 0, s"versioned minhash index at $root has no committed epoch")
-    loadMinhashIndex(spark, s"$root/epoch=$v", maxShinglesPerDoc)
+    val p = graft.sinks.VersionedTable.record(spark, root, v).meta
+    checkBuildParams(s"$root/epoch=$v", p.path("constants_fp").asText,
+      p.path("max_shingles").asLong(-1L), maxShinglesPerDoc)
+    graft.sinks.VersionedTable.readVersion(spark, root, v)
   }
 
   /** [[mergeMinhashIndex]] as an epoch fold on a versioned root: read
@@ -669,10 +686,9 @@ object Dedup {
                                  idCol: String, textCol: String,
                                  maxShinglesPerDoc: Option[Int] = None): Long = {
     val old = loadMinhashIndexVersioned(spark, root, maxShinglesPerDoc)
-    graft.sinks.VersionedTable.writeStaged(
-      mergedIndexRows(old, delta, idCol, textCol, maxShinglesPerDoc), root) {
-      dir => writeBuildParams(spark, dir, maxShinglesPerDoc)
-    }
+    graft.sinks.VersionedTable.write(
+      mergedIndexRows(old, delta, idCol, textCol, maxShinglesPerDoc), root,
+      buildParams(maxShinglesPerDoc))
   }
 
   /** [[minhashLshPairsAcross]] against a persisted corpus index instead

@@ -159,7 +159,7 @@ object Scd2 {
         (col("h.effective_to").isNull ||
           col(s"f.$tsCol") < col("h.effective_to"))
     f.join(h, contained, "left")
-      .select(facts.columns.map(c => col(s"f.$c")) ++
+      .select(facts.columns.toIndexedSeq.map(c => col(s"f.$c")) ++
         history.columns.filterNot(_ == idCol).map(c => col(s"h.$c")): _*)
   }
 }

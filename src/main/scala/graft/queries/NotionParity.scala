@@ -19,7 +19,7 @@ object NotionParity extends QueryModule {
 
   private def rawDf(spark: SparkSession, lines: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.schema(NotionSchemas.rawRecordSchema).json(lines.toDS)
+    spark.read.schema(NotionSchemas.rawRecordSchema).json(lines.toDS())
   }
 
   /** Normalized timeslice projection — exact values pinned by

@@ -357,7 +357,7 @@ object Relational extends QueryModule {
     val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) =>
       (pid, acc + c)
     }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
-    val offDf = spark.createDataFrame(offsets).toDF("pid", "off")
+    val offDf = spark.createDataFrame(offsets.toIndexedSeq).toDF("pid", "off")
     val byPid = Window.partitionBy(col("pid")).orderBy(col("v"), col("tie"))
     // NTILE's front-loaded remainder: first rem buckets get base+1 rows.
     val base = n / k
@@ -1161,7 +1161,7 @@ object Relational extends QueryModule {
   }
 
   /** SQL additive schema evolution end-to-end: `ALTER TABLE ADD
-    * COLUMN` widens the sidecar with zero data rewrites, pre-existing
+    * COLUMN` widens the schema with zero data rewrites, pre-existing
     * rows read NULL for the evolved column, and post-evolution
     * inserts carry it — the oracle reconstructs exactly that union. */
   def qEvolveSql(spark: SparkSession, dir: String): DataFrame = {
@@ -1259,7 +1259,7 @@ object Relational extends QueryModule {
     * compiles) both updates matched rows and brings the column in;
     * then a `writeMergeSchema` API append adds a second new column
     * while DROPPING lang from its batch — the absent column fills
-    * NULL and the sidecar's nullability relaxes in the same
+    * NULL and the schema's nullability relaxes in the same
     * evolution. Every evolution is metadata-only; the oracle
     * reconstructs all four row classes relationally. */
   def qAutoMerge(spark: SparkSession, dir: String): DataFrame = {

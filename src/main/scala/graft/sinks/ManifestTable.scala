@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import com.fasterxml.jackson.databind.JsonNode
 import graft.util.EpochCache
 
 /** Manifest-based table format — epochs as FILE LISTS, not physical
@@ -29,9 +30,11 @@ import graft.util.EpochCache
   *     rename claims, serializable read-modify-write via
   *     `tryCommitAs`, pointer cache, commit timestamps
   *     ([[VersionedTable.versionAtTimestamp]] works verbatim), vacuum
-  *     of old manifests. The table schema rides as a JSON sidecar
-  *     inside each manifest epoch (atomic with it), so empty tables
-  *     and column order survive.
+  *     of old manifests. The table's own metadata — schema, pending
+  *     equality deletes, CHECK constraints, NDV statistics, adopted
+  *     directory — is one [[Meta]] value riding in each manifest
+  *     epoch's commit record (atomic with it), so empty tables and
+  *     column order survive.
   *
   * The manifest rows are deliberately the [[graft.sources.FileStats]]
   * shape: the stats ARE the manifest, one commit, never out of sync
@@ -68,10 +71,6 @@ import graft.util.EpochCache
 object ManifestTable {
 
   private val ManifestsSub = "_manifests"
-  private val SchemaSidecar = "_graft_schema.json"
-  private val EqSidecar = "_graft_eqdeletes.tsv"
-  private val ConstraintsSidecar = "_graft_constraints.tsv"
-  private val NdvSidecar = "_graft_ndv.tsv"
   private val DvSub = "_dv"
   private val EqSub = "_eq"
 
@@ -379,107 +378,78 @@ object ManifestTable {
   private[graft] final case class EqEntry(path: String, seq: Long,
                                           keys: Seq[String])
 
-  /** The pending equality deletes committed with `version` — read off
-    * the epoch's registry sidecar; absent sidecar = none (every
-    * pre-eq epoch). */
-  private[graft] def eqDeletes(spark: SparkSession, root: String,
-                               version: Long): Seq[EqEntry] = {
-    val p = new Path(s"${manifestsRoot(root)}/epoch=$version", EqSidecar)
-    val f = fs(spark, root)
-    if (!f.exists(p)) return Nil
-    val in = f.open(p)
-    val txt = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    txt.split('\n').filter(_.nonEmpty).toSeq.map { line =>
-      val parts = line.split('\t')
-      EqEntry(parts(1), parts(0).toLong, parts(2).split(',').toSeq)
+  /** A version's table metadata, committed in its manifest epoch's
+    * [[VersionedTable.Commit]] record:
+    *   - `schema`: the table schema (logical names; physical names and
+    *     bucket claims ride in field metadata);
+    *   - `eq`: the PENDING equality deletes — applied at read until a
+    *     commit materializes them (every commit that starts from the
+    *     effective view, [[effectiveManifest]], commits `eq = Nil`);
+    *   - `constraints`: CHECK invariants, (name, boolean SQL) — every
+    *     landing of new or transformed rows validates against them
+    *     before its commit, so a version's data always satisfies its
+    *     version's constraints;
+    *   - `ndv`: approximate per-column DISTINCT counts from the last
+    *     [[analyzeTable]], PHYSICAL-keyed (stable under RENAME COLUMN)
+    *     and carried like any ANALYZE statistic; absent columns make
+    *     the planner fall back to its defaults, never a wrong number;
+    *   - `adopted`: the directory an [[adopt]]ed table mirrors.
+    * Commits carry the base's Meta forward unless they decide a field. */
+  private[graft] final case class Meta(
+      schema: StructType,
+      eq: Seq[EqEntry] = Nil,
+      constraints: Seq[(String, String)] = Nil,
+      ndv: Map[String, Long] = Map.empty,
+      adopted: Option[String] = None)
+
+  private def encodeMeta(m: Meta): JsonNode = {
+    val n = VersionedTable.mapper.createObjectNode()
+    n.set[JsonNode]("schema", VersionedTable.mapper.readTree(m.schema.json))
+    val eq = n.putArray("eq")
+    m.eq.foreach { e =>
+      val keys = eq.addObject().put("path", e.path).put("seq", e.seq)
+        .putArray("keys")
+      e.keys.foreach(keys.add(_): Unit)
     }
+    val cons = n.putObject("constraints")
+    m.constraints.foreach { case (c, e) => cons.put(c, e) }
+    val ndv = n.putObject("ndv")
+    m.ndv.toSeq.sortBy(_._1).foreach { case (c, d) => ndv.put(c, d) }
+    m.adopted.foreach(n.put("adopted", _))
+    n
   }
 
-  /** Registry sidecar writer for a manifest epoch's staging hook —
-    * nothing written when empty (absence IS the empty registry). */
-  private def stageEq(spark: SparkSession, root: String,
-                      entries: Seq[EqEntry])(dir: String): Unit = {
-    if (entries.isEmpty) return
-    val f = fs(spark, root)
-    val out = f.create(new Path(dir, EqSidecar), true)
-    try out.write(entries.map(e =>
-      s"${e.seq}\t${e.path}\t${e.keys.mkString(",")}")
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+  /** The [[Meta]] committed with `version`. */
+  private[graft] def metaAt(spark: SparkSession, root: String,
+                            version: Long): Meta =
+    decodeMeta(root, version,
+      VersionedTable.record(spark, manifestsRoot(root), version).meta)
+
+  /** Fails loudly, naming the version, when its record carries none. */
+  private def decodeMeta(root: String, version: Long, n: JsonNode): Meta = {
+    require(n.has("schema"),
+      s"manifest epoch $version of $root carries no table metadata")
+    def fields(o: JsonNode) =
+      o.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
+    Meta(
+      org.apache.spark.sql.types.DataType.fromJson(n.get("schema").toString)
+        .asInstanceOf[StructType],
+      n.path("eq").asScala.toSeq.map(e => EqEntry(e.get("path").asText,
+        e.get("seq").asLong, e.path("keys").asScala.toSeq.map(_.asText))),
+      fields(n.path("constraints")).map { case (c, e) => c -> e.asText },
+      fields(n.path("ndv")).map { case (c, d) => c -> d.asLong }.toMap,
+      Option(n.get("adopted")).map(_.asText))
   }
 
-  /** The table's CHECK constraints committed with `version` — (name,
-    * boolean SQL expression) pairs off the epoch's sidecar; absent
-    * sidecar = none. Constraints are table INVARIANTS: every landing
-    * of new or transformed rows validates against them before its
-    * commit ([[landFiles]]), so a version's data always satisfies its
-    * version's constraints. */
+  /** The table's CHECK constraints committed with `version`. */
   private[graft] def constraintsAt(spark: SparkSession, root: String,
-                                   version: Long): Seq[(String, String)] = {
-    val p = new Path(s"${manifestsRoot(root)}/epoch=$version",
-      ConstraintsSidecar)
-    val f = fs(spark, root)
-    if (!f.exists(p)) return Nil
-    val in = f.open(p)
-    val txt = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    txt.split('\n').filter(_.nonEmpty).toSeq.map { line =>
-      val i = line.indexOf('\t')
-      (line.substring(0, i), line.substring(i + 1))
-    }
-  }
-
-  /** Constraints sidecar writer for the staging hook — absence IS the
-    * empty set. */
-  private def stageConstraints(spark: SparkSession, root: String,
-                               cons: Seq[(String, String)])
-                              (dir: String): Unit = {
-    if (cons.isEmpty) return
-    val f = fs(spark, root)
-    val out = f.create(new Path(dir, ConstraintsSidecar), true)
-    try out.write(cons.map { case (n, e) => s"$n\t$e" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Approximate per-column DISTINCT counts from the last
-    * [[analyzeTable]] pass — PHYSICAL-keyed (stable under RENAME
-    * COLUMN), carried forward commit to commit like any ANALYZE
-    * statistic (they go stale as the table moves; re-run on the
-    * maintenance tick). Absence is the empty map: the planner falls
-    * back to its own defaults, never to a wrong number. */
-  private[graft] def ndvAt(spark: SparkSession, root: String,
-                           version: Long): Map[String, Long] = {
-    val p = new Path(s"${manifestsRoot(root)}/epoch=$version", NdvSidecar)
-    val f = fs(spark, root)
-    if (!f.exists(p)) return Map.empty
-    val in = f.open(p)
-    val txt = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    txt.split('\n').filter(_.nonEmpty).map { line =>
-      val i = line.indexOf('\t')
-      (line.substring(0, i), line.substring(i + 1).toLong)
-    }.toMap
-  }
-
-  private def stageNdv(spark: SparkSession, root: String,
-                       ndv: Map[String, Long])(dir: String): Unit = {
-    if (ndv.isEmpty) return
-    val f = fs(spark, root)
-    val out = f.create(new Path(dir, NdvSidecar), true)
-    try out.write(ndv.toSeq.sortBy(_._1)
-      .map { case (c, n) => s"$c\t$n" }.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+                                   version: Long): Seq[(String, String)] =
+    metaAt(spark, root, version).constraints
 
   /** ANALYZE: one distributed pass computing approximate distinct
     * counts (HLL, `approx_count_distinct`) for `columns` (default:
     * every atomic-typed column), committed as a metadata-only version
-    * whose sidecar every later commit carries forward. This is the
+    * whose [[Meta]] `ndv` every later commit carries forward. This is the
     * number COST-BASED join planning runs on (min/max/nullCount
     * already come exact from the manifest's own envelopes — NDV is
     * the one statistic that needs a data pass): with
@@ -508,9 +478,9 @@ object ManifestTable {
       .head()
     val ndv = cols.map(c =>
       physicalFor(schema, c) -> row.getAs[Long](c)).toMap
-    commitLoopEvolving(spark, root, ndvReg = _ => ndv) { base =>
-      (manifest(spark, root, base), tableSchema(spark, root, base))
-    }
+    commitLoop(spark, root) { (base, meta) =>
+      Some((manifest(spark, root, base), meta.copy(ndv = ndv)))
+    }.get
   }
 
   /** Top-level column names a constraint expression references —
@@ -558,10 +528,10 @@ object ManifestTable {
     * normal metadata-only version. From then on every commit that
     * lands rows — append, overwrite, MERGE, UPDATE, CDC, streaming
     * batches — validates them BEFORE committing
-    * ([[commitLoopEvolvingOpt]]): a violating batch refuses with
-    * nothing committed, the Delta CHECK-constraint contract. Cost at
-    * scale: one extra read of each commit's OWN batch (never the
-    * table), and the registry rides the existing sidecar staging. */
+    * ([[commitLoop]]): a violating batch refuses with nothing
+    * committed, the Delta CHECK-constraint contract. Cost at scale:
+    * one extra read of each commit's OWN batch (never the table), and
+    * the registry rides in the version's [[Meta]]. */
   def addConstraint(spark: SparkSession, root: String, name: String,
                     exprSql: String): Long =
     addConstraints(spark, root, Seq((name, exprSql)))
@@ -580,16 +550,13 @@ object ManifestTable {
     cons.foreach { case (name, exprSql) =>
       require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
         s"constraint name '$name' must be an identifier " +
-          "([A-Za-z_][A-Za-z0-9_]*)")
-      require(!exprSql.exists(c => c == '\n' || c == '\t'),
-        "constraint expressions must not contain newlines or tabs") }
+          "([A-Za-z_][A-Za-z0-9_]*)") }
     require(cons.map(_._1).distinct.length == cons.length,
       s"duplicate constraint names in one set: " +
         cons.map(_._1).mkString(", "))
-    commitLoop(spark, root,
-      consReg = base => constraintsAt(spark, root, base) ++ cons) { base =>
-      val existing = constraintsAt(spark, root, base)
-      val schema = tableSchema(spark, root, base)
+    commitLoop(spark, root) { (base, meta) =>
+      val existing = meta.constraints
+      val schema = meta.schema
       cons.foreach { case (name, exprSql) =>
         require(!existing.exists(_._1 == name),
           s"constraint $name already exists on $root")
@@ -612,8 +579,9 @@ object ManifestTable {
           broken.map { case (n, e) => s"$n ($e)" }.mkString(", ") +
           ": existing rows violate them")
       }
-      manifest(spark, root, base)
-    }
+      Some((manifest(spark, root, base),
+        meta.copy(constraints = existing ++ cons)))
+    }.get
   }
 
   /** SET/DROP a column's CURRENT default — metadata-only, affecting
@@ -624,8 +592,8 @@ object ManifestTable {
     * Spark's own fold before anything commits. */
   def setColumnDefault(spark: SparkSession, root: String, name: String,
                        default: Option[String]): Long =
-    commitLoopEvolving(spark, root) { base =>
-      val schema = tableSchema(spark, root, base)
+    commitLoop(spark, root) { (base, meta) =>
+      val schema = meta.schema
       require(schema.fieldNames.contains(name),
         s"column $name does not exist")
       val keys = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
@@ -655,8 +623,8 @@ object ManifestTable {
           }
         }
       })
-      (manifest(spark, root, base), next)
-    }
+      Some((manifest(spark, root, base), meta.copy(schema = next)))
+    }.get
 
   /** DROP CONSTRAINT — metadata-only removal of one named invariant;
     * refuses an unknown name (a silently-ignored typo would leave the
@@ -666,14 +634,12 @@ object ManifestTable {
     * abstains with None) instead of the loser throwing. */
   def dropConstraint(spark: SparkSession, root: String, name: String,
                      ifExists: Boolean = false): Option[Long] =
-    commitLoopEvolvingOpt(spark, root,
-      consReg = base => constraintsAt(spark, root, base)
-        .filterNot(_._1 == name)) { base =>
-      if (!constraintsAt(spark, root, base).exists(_._1 == name)) {
+    commitLoop(spark, root) { (base, meta) =>
+      if (!meta.constraints.exists(_._1 == name)) {
         if (ifExists) None
         else sys.error(s"constraint $name does not exist on $root")
       } else Some((manifest(spark, root, base),
-        tableSchema(spark, root, base)))
+        meta.copy(constraints = meta.constraints.filterNot(_._1 == name))))
     }
 
   /** Tracked stats columns, read off the manifest's own schema. */
@@ -682,25 +648,15 @@ object ManifestTable {
       .filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
 
   /** The table schema committed with `version`'s manifest. */
-  def tableSchema(spark: SparkSession, root: String, version: Long): StructType = {
-    val p = new Path(s"${manifestsRoot(root)}/epoch=$version", SchemaSidecar)
-    val f = fs(spark, root)
-    require(f.exists(p),
-      s"manifest epoch $version of $root has no schema sidecar")
-    val in = f.open(p)
-    val json = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-    finally in.close()
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[StructType]
-  }
+  def tableSchema(spark: SparkSession, root: String, version: Long): StructType =
+    metaAt(spark, root, version).schema
 
   // ------------------------------------------------- column mapping
   //
   // RENAME COLUMN is metadata-only via Delta-style name mapping: a
   // field's PHYSICAL name — the name data files and manifest stat
   // columns actually carry — is frozen at birth and recorded in the
-  // schema sidecar's field metadata under `graft.physical` the first
+  // committed schema's field metadata under `graft.physical` the first
   // time it diverges from the logical name. Unmapped tables (no
   // rename ever) have physical == logical everywhere and every
   // mapping helper is the identity — existing tables stay readable
@@ -870,7 +826,7 @@ object ManifestTable {
     val spark = df.sparkSession
     val dir = s"$root/data/${java.util.UUID.randomUUID().toString}"
     // a bucketed table's EVERY landing routes rows to their hash
-    // bucket (the spec is frozen in the schema sidecar, so appends,
+    // bucket (the spec is frozen in the committed schema, so appends,
     // rewrites, and re-lays all preserve the layout): bucket ids
     // become `gb=<b>` partition directories — one repartition by the
     // bucket id first puts each bucket wholly in one task, so a
@@ -1030,7 +986,7 @@ object ManifestTable {
   /** Strip the column-mapping metadata off a schema that came from
     * READING a mapped table — a NEW table built from that schema
     * (CTAS/RTAS) writes fresh files under the logical names, so a
-    * carried-over mapping would point its sidecar at physical names
+    * carried-over mapping would point its schema at physical names
     * its own files never had. Recurses to EVERY nesting level:
     * nested-evolved struct members carry their frozen physical names
     * inside the dataType, and a top-level-only strip would leave the
@@ -1064,7 +1020,7 @@ object ManifestTable {
   /** Content replace that may also REPLACE THE SCHEMA — the RTAS /
     * overwriteSchema shape: land the batch and commit (batch rows,
     * batch schema) as the next version. Prior versions stay readable
-    * under their own sidecars; tracked stats carry forward for
+    * under their own schemas; tracked stats carry forward for
     * columns the new schema still names; the stream replay marker
     * resets exactly like [[overwrite]] (a full replace is a stream
     * restart). */
@@ -1082,15 +1038,13 @@ object ManifestTable {
     // the content they applied to; the REPLACED table definition also
     // starts constraint-free (the old invariants may reference
     // columns the new schema lacks — RTAS re-declares, not inherits)
-    commitLoopEvolving(spark, root, extraStage =
-      VersionedTable.stampBatch(spark, manifestsRoot(root), -1L),
-      eqReg = _ => Nil, consReg = _ => Nil) { _ =>
-      (rows, schema)
-    }
+    commitLoop(spark, root, batch = Some(-1L)) { (_, meta) =>
+      Some((rows, meta.copy(schema = schema, eq = Nil, constraints = Nil)))
+    }.get
   }
 
   /** Conform an append batch to the table schema: order by the
-    * sidecar's column order, CAST each column to its declared type
+    * schema's column order, CAST each column to its declared type
     * (the Delta-style implicit safe cast), and RENAME to the field's
     * physical name — a same-name/compatible batch lands with the
     * table's exact physical types under the stable physical column
@@ -1103,14 +1057,6 @@ object ManifestTable {
     df.select(schema.fields.toIndexedSeq.map(f =>
       col(f.name).cast(relaxedType(physicalType(f.dataType)))
         .as(physicalName(f))): _*)
-
-  /** Schema sidecar writer for a manifest epoch's staging hook. */
-  private def stageSchema(spark: SparkSession, root: String,
-                          schema: StructType)(dir: String): Unit = {
-    val f = fs(spark, root)
-    val out = f.create(new Path(dir, SchemaSidecar), true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
-  }
 
   /** Create the table with its first rows and the FIXED set of
     * tracked stats columns. Fails if the table already exists.
@@ -1131,8 +1077,8 @@ object ManifestTable {
       case None         => freshSchema(df.schema)
     }
     val rows = landFiles(df, root, statsCols, bucketAs = Some(bucketBy))
-    val (v, key) = VersionedTable.writeStagedKeyed(rows, manifestsRoot(root))(
-      stageSchema(spark, root, schema))
+    val (v, key) = VersionedTable.writeKeyed(rows, manifestsRoot(root),
+      encodeMeta(Meta(schema)))
     primeManifestCaches(spark, root, v, rows, key)
     v
   }
@@ -1149,9 +1095,9 @@ object ManifestTable {
       s"append schema ${df.columns.sorted.mkString(",")} != table " +
         s"schema ${schema.fieldNames.sorted.mkString(",")}")
     val rows = landFiles(conform(df, schema), root, statsCols(spark, root, v))
-    commitLoop(spark, root) { base =>
-      manifest(spark, root, base).unionByName(rows)
-    }
+    commitLoop(spark, root) { (base, meta) =>
+      Some((manifest(spark, root, base).unionByName(rows), meta))
+    }.get
   }
 
   /** WRITE-SIDE SCHEMA EVOLUTION — the Delta `mergeSchema` shape: one
@@ -1235,7 +1181,7 @@ object ManifestTable {
       // drop a declared invariant as an append side effect
       refuseMissingNonNullable(missingNonNullable(schema, incoming, cs))
       // a non-nullable slot the batch carries NULLABLE may land NULLs
-      // — the sidecar's nullability RELAXES in the same evolution
+      // — the schema's nullability RELAXES in the same evolution
       // (the present-on-both-sides OR-merge), or every later read
       // plans non-null slots over null bytes
       val relaxes = nullRelaxes(schema, incoming, cs)
@@ -1243,7 +1189,7 @@ object ManifestTable {
           relaxes.isEmpty) return committed.toSeq
       // metadata carried in from READING another table (frozen
       // physical names, bucket claims) must not leak into this
-      // table's sidecar
+      // table's schema
       val addList = freshSchema(StructType(adds)).fields.toSeq
       try {
         if (widens.nonEmpty) validateWidens(spark, root, widens)
@@ -1255,7 +1201,7 @@ object ManifestTable {
             "bucketed tables reserve the column name 'gb' for the " +
               "bucket directory layout"))
         if (nestedAdds.nonEmpty) {
-          val eqKeys = eqDeletes(spark, root, v).flatMap(_.keys).toSet
+          val eqKeys = metaAt(spark, root, v).eq.flatMap(_.keys).toSet
           nestedAdds.map(_._1).distinct.foreach(p =>
             require(!eqKeys.contains(p),
               s"column $p keys pending equality deletes — run compactEq() " +
@@ -1271,10 +1217,10 @@ object ManifestTable {
             Nil)
         }
         if (relaxes.nonEmpty)
-          committed += commitLoopEvolving(spark, root) { base =>
-            (manifest(spark, root, base),
-              relaxNullability(tableSchema(spark, root, base), relaxes))
-          }
+          committed += commitLoop(spark, root) { (base, meta) =>
+            Some((manifest(spark, root, base),
+              meta.copy(schema = relaxNullability(meta.schema, relaxes))))
+          }.get
         return committed.toSeq
       } catch {
         case _: IllegalArgumentException if attempt < 3 =>
@@ -1605,11 +1551,9 @@ object ManifestTable {
     // tombstone so the replay marker does not carry into the table's
     // new life — the strict-discipline error message tells users to
     // overwrite() exactly to re-point a fresh-checkpoint stream here
-    commitLoopEvolving(spark, root, extraStage =
-      VersionedTable.stampBatch(spark, manifestsRoot(root), -1L),
-      eqReg = _ => Nil) { base =>
-      (rows, tableSchema(spark, root, base))
-    }
+    commitLoop(spark, root, batch = Some(-1L)) { (_, meta) =>
+      Some((rows, meta.copy(eq = Nil)))
+    }.get
   }
 
   /** Stream-idempotent append — [[VersionedTable.writeBatch]] for the
@@ -1636,7 +1580,7 @@ object ManifestTable {
     * Returns true for the no-op replay; throws on the mismatch. */
   private def isReplay(spark: SparkSession, root: String,
                        batchId: Long): Boolean = {
-    val last = VersionedTable.lastAppliedBatch(spark, manifestsRoot(root))
+    val last = lastAppliedBatch(spark, root)
     require(batchId >= last,
       s"batch id $batchId is BELOW the table's replay marker $last — " +
         "this stream's checkpoint does not match the table's history " +
@@ -1664,91 +1608,48 @@ object ManifestTable {
       // recommit the batch onto the winner's manifest, double-applying
       // it. A mid-loop replay detection abandons the landed files —
       // unreferenced, vacuum's TTL sweep collects them.
-      commitLoopEvolvingOpt(spark, root, extraStage =
-        VersionedTable.stampBatch(spark, manifestsRoot(root), batchId)) {
-        base =>
-          if (isReplay(spark, root, batchId)) None
-          else Some((manifest(spark, root, base).unionByName(rows),
-            tableSchema(spark, root, base)))
+      commitLoop(spark, root, batch = Some(batchId)) { (base, meta) =>
+        if (isReplay(spark, root, batchId)) None
+        else Some((manifest(spark, root, base).unionByName(rows), meta))
       }
     }
   }
 
-  /** Optimistic manifest-swap loop — the [[VersionedTable]] rewrite
-    * loop over manifests: compute the next manifest AGAINST a pinned
-    * base version, commit only as base+1; on conflict recompute. The
-    * schema sidecar re-stages each attempt. */
+  /** The one manifest commit loop — the [[VersionedTable]] rewrite
+    * loop over manifests: compute the next manifest AND its [[Meta]]
+    * against a pinned base version, commit only as base+1; on conflict
+    * recompute. `next(base, meta)` receives the base's Meta; returning
+    * it unchanged CARRIES schema, pending equality deletes,
+    * constraints, NDV and adoption forward — correct for commits that
+    * neither read nor rewrite rows (appends, evolution, renames).
+    * Commits that START FROM THE EFFECTIVE VIEW ([[effectiveManifest]]
+    * — every row-level op, optimize, compaction) return `eq = Nil`:
+    * their manifest already materialized the deletes as vectors, so
+    * carrying the registry would re-apply them. `next` may ABSTAIN
+    * (None) after seeing the freshly resolved base — [[writeBatch]]'s
+    * per-attempt replay re-check — which ends the loop with no commit.
+    * `batch` stamps the stream replay marker (-1: a restart); None
+    * carries the base's. An adopted base refuses unless `adopting`. */
   private def commitLoop(spark: SparkSession, root: String,
-                         maxAttempts: Int = 12,
-                         eqReg: Long => Seq[EqEntry] = null,
-                         consReg: Long => Seq[(String, String)] = null,
-                         validateCons: Boolean = true)
-                        (next: Long => DataFrame): Long =
-    commitLoopEvolving(spark, root, maxAttempts, eqReg = eqReg,
-      consReg = consReg, validateCons = validateCons)(base =>
-      (next(base), tableSchema(spark, root, base)))
-
-  /** [[commitLoop]] where the next version may also commit a WIDER
-    * schema sidecar (additive evolution — schema-on-read serves old
-    * files' missing columns as NULL, so no data rewrites) and extra
-    * staged sidecars (the batch-id replay marker). */
-  private def commitLoopEvolving(spark: SparkSession, root: String,
-                                 maxAttempts: Int = 12,
-                                 extraStage: String => Unit = _ => (),
-                                 eqReg: Long => Seq[EqEntry] = null,
-                                 consReg: Long => Seq[(String, String)] = null,
-                                 validateCons: Boolean = true,
-                                 ndvReg: Long => Map[String, Long] = null)
-                                (next: Long => (DataFrame, StructType)): Long =
-    commitLoopEvolvingOpt(spark, root, maxAttempts, extraStage, eqReg,
-      consReg, validateCons, ndvReg)(base => Some(next(base))).get
-
-  /** [[commitLoopEvolving]] where an attempt may ABSTAIN (None) after
-    * seeing the freshly resolved base — the hook [[writeBatch]]'s
-    * per-attempt replay re-check needs: a None from `next` ends the
-    * loop with no commit.
-    *
-    * `eqReg` decides the next version's equality-delete registry from
-    * the attempt's base: null (the default) CARRIES the base's pending
-    * deletes forward — correct for commits that neither read nor
-    * rewrite rows (appends, evolution, renames). Commits that START
-    * FROM THE EFFECTIVE VIEW ([[effectiveManifest]] — every row-level
-    * op, optimize, compaction) pass `_ => Nil`: their manifest already
-    * materialized the deletes as vectors, so carrying the registry
-    * would re-apply them. */
-  private def commitLoopEvolvingOpt(spark: SparkSession, root: String,
-                                    maxAttempts: Int = 12,
-                                    extraStage: String => Unit = _ => (),
-                                    eqReg: Long => Seq[EqEntry] = null,
-                                    consReg: Long => Seq[(String, String)] =
-                                      null,
-                                    validateCons: Boolean = true,
-                                    ndvReg: Long => Map[String, Long] = null,
-                                    adopting: Boolean = false)
-                                   (next: Long => Option[(DataFrame, StructType)])
+                         batch: Option[Long] = None,
+                         validateCons: Boolean = true,
+                         adopting: Boolean = false)
+                        (next: (Long, Meta) => Option[(DataFrame, Meta)])
       : Option[Long] = {
-    val eq: Long => Seq[EqEntry] =
-      if (eqReg != null) eqReg else base => eqDeletes(spark, root, base)
-    // constraints are table invariants: every commit CARRIES them
-    // unless add/drop/restore explicitly decides the next set
-    val cons: Long => Seq[(String, String)] =
-      if (consReg != null) consReg
-      else base => constraintsAt(spark, root, base)
-    // ANALYZE statistics carry like constraints (stale-but-useful is
-    // the ANALYZE contract); only analyzeTable re-decides the set
-    val ndv: Long => Map[String, Long] =
-      if (ndvReg != null) ndvReg else base => ndvAt(spark, root, base)
+    val maxAttempts = 12
     var attempt = 0
     while (attempt < maxAttempts) {
       val base = latestVersion(spark, root)
       require(base >= 0, s"manifest table at $root has no committed version")
-      if (!adopting) adoptedFrom(spark, root, base).foreach { dir =>
+      val rec = VersionedTable.record(spark, manifestsRoot(root), base)
+      val meta = decodeMeta(root, base, rec.meta)
+      if (!adopting) meta.adopted.foreach { dir =>
         throw new UnsupportedOperationException(
           s"manifest table at $root mirrors $dir: adopt() is its only " +
             "writer — change the files under that directory, then adopt() " +
             "again")
       }
-      val (rows0, schema) = next(base) match {
+      val (rows0, out) = next(base, meta) match {
         case Some(rs) => rs
         case None     => return None
       }
@@ -1763,28 +1664,23 @@ object ManifestTable {
       // row-preserving relayouts (optimize/compaction), whose extra
       // full read would double their cost for rows that cannot have
       // changed.
-      val consSet = cons(base) // once per attempt: validation + staging
-      if (validateCons && consSet.nonEmpty) {
+      if (validateCons && out.constraints.nonEmpty) {
         val fresh = rows0.filter(col("seq").isNull)
           .select(col("path")).collect().map(_.getString(0)).toSeq
         if (fresh.nonEmpty)
-          validateConstraints(spark, fresh, schema, consSet)
+          validateConstraints(spark, fresh, out.schema, out.constraints)
       }
       // freshly landed rows carry NULL seq — stamp them with THIS
       // attempt's target version (carried rows keep their added-at
       // version; a CAS retry re-stamps against its own base)
       val rows = rows0.withColumn("seq",
         coalesce(col("seq"), lit(base + 1)))
-      VersionedTable.tryCommitAsKeyed(rows, manifestsRoot(root), base,
-        dir => { stageSchema(spark, root, schema)(dir)
-          stageEq(spark, root, eq(base))(dir)
-          stageConstraints(spark, root, consSet)(dir)
-          stageNdv(spark, root, ndv(base))(dir)
-          extraStage(dir) }) match {
+      VersionedTable.tryCommitAs(rows, manifestsRoot(root), base,
+          encodeMeta(out), batch.getOrElse(rec.batch)) match {
         case Some((v, key)) =>
           primeManifestCaches(spark, root, v, rows, key)
           return Some(v)
-        case None    => attempt += 1
+        case None => attempt += 1
       }
     }
     sys.error(s"manifest table at $root: commit lost the race " +
@@ -1912,7 +1808,7 @@ object ManifestTable {
   /** MERGE with optional ADDITIVE schema evolution — and here the
     * manifest representation earns its keep: an evolved-in column
     * needs NO data rewrite at all for untouched files, because the
-    * next manifest just commits a WIDER schema sidecar and
+    * next manifest just commits a WIDER schema and
     * schema-on-read serves the old files' missing column as NULL.
     * Only the key-touched files rewrite, exactly as in the strict
     * path. A batch may carry NEW columns (existing rows read NULL
@@ -1998,9 +1894,9 @@ object ManifestTable {
                             (rewrite: (DataFrame, DataFrame) => DataFrame): Long =
     // starts from the EFFECTIVE view, so the commit also materializes
     // any pending equality deletes — registry staged empty
-    commitLoopEvolving(spark, root, eqReg = _ => Nil) { base =>
+    commitLoop(spark, root) { (base, meta) =>
       val (m, effSt) = effectiveManifest(spark, root, base)
-      val baseSchema = tableSchema(spark, root, base)
+      val baseSchema = meta.schema
       val stats = statsCols(spark, root, base)
       val dvByPath: Map[String, (Option[String], Long)] =
         effSt.map(s => s._1 -> ((s._2, s._3))).toMap
@@ -2032,8 +1928,9 @@ object ManifestTable {
       val replacement = rewrite(touchedRows, batch)
         .select(cols.map(col): _*)
       val newRows = landFiles(physSelect(replacement, schema), root, stats)
-      (m.filter(!col("path").isin(touched: _*)).unionByName(newRows), schema)
-    }
+      Some((m.filter(!col("path").isin(touched: _*)).unionByName(newRows),
+        meta.copy(schema = schema, eq = Nil)))
+    }.get
 
   /** Row-level DELETE, file-granular: the predicate's range conjuncts
     * run through the shared envelope-proof engine against the
@@ -2057,7 +1954,7 @@ object ManifestTable {
   /** ADDITIVE schema evolution as a standalone commit — `ALTER TABLE
     * ADD COLUMN` for the manifest format: the next version reuses the
     * CURRENT manifest verbatim (every data file carries BY REFERENCE,
-    * zero data I/O) and commits a WIDER schema sidecar; schema-on-read
+    * zero data I/O) and commits a WIDER schema; schema-on-read
     * serves the new columns as NULL for every existing row. New
     * columns must be nullable for exactly that reason. Returns the
     * committed version. */
@@ -2079,11 +1976,11 @@ object ManifestTable {
       s"new column ${f.name} must be nullable — existing rows read NULL"))
     require(adds.map(_.name).distinct.length == adds.length,
       s"duplicate new column names: ${adds.map(_.name).mkString(", ")} — " +
-        "a sidecar with repeated fields would poison every later read")
+        "a schema with repeated fields would poison every later read")
     require(adds.map(_.name).toSet.intersect(drops.toSet).isEmpty,
       "a column cannot be both added and dropped in one change set")
-    commitLoopEvolving(spark, root) { base =>
-      val schema = tableSchema(spark, root, base)
+    commitLoop(spark, root) { (base, meta) =>
+      val schema = meta.schema
       adds.foreach(f => require(!schema.fieldNames.contains(f.name),
         s"column ${f.name} already exists"))
       drops.foreach(n => require(schema.fieldNames.contains(n),
@@ -2097,10 +1994,10 @@ object ManifestTable {
           "(CALL optimize_table with buckets) to change the layout " +
           "first"))
       drops.foreach(n =>
-        require(!eqDeletes(spark, root, base).exists(_.keys.contains(n)),
+        require(!meta.eq.exists(_.keys.contains(n)),
           s"column $n keys pending equality deletes — run compactEq() " +
             "(or any row-level op / maintenance tick) before dropping it"))
-      drops.foreach(n => constraintsAt(spark, root, base).foreach {
+      drops.foreach(n => meta.constraints.foreach {
         case (cn, e) => require(!constraintRefs(spark, e).contains(n),
           s"column $n is referenced by constraint $cn ($e) — drop the " +
             "constraint before dropping the column") })
@@ -2143,8 +2040,8 @@ object ManifestTable {
         val pc = physicalFor(schema, c)
         Seq(s"${pc}_min", s"${pc}_max", s"${pc}_nulls")
       }.filter(m.columns.contains)
-      (m.drop(statDrop: _*), next)
-    }
+      Some((m.drop(statDrop: _*), meta.copy(schema = next)))
+    }.get
   }
 
   /** The physical column NAMES any of `files` carries — executor-side
@@ -2184,7 +2081,7 @@ object ManifestTable {
 
   /** `ALTER TABLE DROP COLUMN` — the inverse evolution, equally
     * metadata-only: the next version reuses the current manifest's
-    * FILES verbatim under a NARROWER sidecar (schema-on-read by name
+    * FILES verbatim under a NARROWER schema (schema-on-read by name
     * simply stops projecting the column — zero data I/O), and the
     * dropped columns' stat triplets leave the manifest rows so no
     * future landing, proof, or maintenance references a column the
@@ -2198,28 +2095,28 @@ object ManifestTable {
 
   /** `ALTER TABLE RENAME COLUMN` — METADATA-ONLY via the name
     * mapping: the next version commits the SAME manifest under a
-    * sidecar whose field carries the new logical name and (frozen in
+    * schema whose field carries the new logical name and (frozen in
     * field metadata) its original PHYSICAL name, which is what data
     * files, manifest stat columns, and bloom index roots keep using.
     * Zero data I/O, stats and indexes stay valid, time travel reads
-    * pre-rename versions under their own sidecars' old names. A
+    * pre-rename versions under their own schemas' old names. A
     * rename BACK to the physical name drops the mapping entry. */
   def renameColumn(spark: SparkSession, root: String,
                    from: String, to: String): Long = {
     require(from != to, "rename requires two different names")
-    commitLoopEvolving(spark, root) { base =>
-      val schema = tableSchema(spark, root, base)
+    commitLoop(spark, root) { (base, meta) =>
+      val schema = meta.schema
       require(schema.fieldNames.contains(from),
         s"column $from does not exist")
       // pending equality deletes name their key columns LOGICALLY (in
       // the registry and inside the delete files themselves) — a
       // rename would orphan them and break every later read
-      require(!eqDeletes(spark, root, base).exists(_.keys.contains(from)),
+      require(!meta.eq.exists(_.keys.contains(from)),
         s"column $from keys pending equality deletes — run compactEq() " +
           "(or any row-level op / maintenance tick) before renaming it")
       // constraint expressions are stored as SQL text over LOGICAL
       // names — a rename would silently break them at the next landing
-      constraintsAt(spark, root, base).foreach { case (n, e) =>
+      meta.constraints.foreach { case (n, e) =>
         require(!constraintRefs(spark, e).contains(from),
           s"column $from is referenced by constraint $n ($e) — drop " +
             "the constraint (and re-add it under the new name) first") }
@@ -2237,8 +2134,8 @@ object ManifestTable {
           f.copy(name = to, metadata = md)
         }
       })
-      (manifest(spark, root, base), next)
-    }
+      Some((manifest(spark, root, base), meta.copy(schema = next)))
+    }.get
   }
 
   /** Navigate `parent` (logical names, structs at every step) and
@@ -2283,7 +2180,7 @@ object ManifestTable {
     * top-level [[renameColumn]] machinery one level down: the
     * member's physical name freezes in ITS OWN field metadata, data
     * files never rewrite, prior versions read under their own
-    * sidecars. `path` is the full logical path (e.g. Seq("s", "a")).
+    * schemas. `path` is the full logical path (e.g. Seq("s", "a")).
     * A struct that keys pending equality deletes refuses (the delete
     * files carry its values under the old member names — struct
     * equality would stop resolving). */
@@ -2292,10 +2189,9 @@ object ManifestTable {
     require(path.nonEmpty, "rename requires a column path")
     if (path.length == 1) return renameColumn(spark, root, path.head, to)
     require(path.last != to, "rename requires two different names")
-    commitLoopEvolving(spark, root) { base =>
-      val schema = tableSchema(spark, root, base)
-      require(!eqDeletes(spark, root, base).exists(
-          _.keys.contains(path.head)),
+    commitLoop(spark, root) { (base, meta) =>
+      val schema = meta.schema
+      require(!meta.eq.exists(_.keys.contains(path.head)),
         s"column ${path.head} keys pending equality deletes — run " +
           "compactEq() (or any row-level op / maintenance tick) before " +
           "renaming inside it")
@@ -2326,8 +2222,8 @@ object ManifestTable {
           }
         })
       }
-      (manifest(spark, root, base), next)
-    }
+      Some((manifest(spark, root, base), meta.copy(schema = next)))
+    }.get
   }
 
   /** ADD/DROP members of a NESTED struct column as ONE metadata-only
@@ -2353,10 +2249,9 @@ object ManifestTable {
       s"duplicate new field names: ${adds.map(_.name).mkString(", ")}")
     require(adds.map(_.name).toSet.intersect(drops.toSet).isEmpty,
       "a field cannot be both added and dropped in one change set")
-    commitLoopEvolving(spark, root) { base =>
-      val schema = tableSchema(spark, root, base)
-      require(!eqDeletes(spark, root, base).exists(
-          _.keys.contains(parent.head)),
+    commitLoop(spark, root) { (base, meta) =>
+      val schema = meta.schema
+      require(!meta.eq.exists(_.keys.contains(parent.head)),
         s"column ${parent.head} keys pending equality deletes — run " +
           "compactEq() (or any row-level op / maintenance tick) before " +
           "altering inside it")
@@ -2393,8 +2288,8 @@ object ManifestTable {
         StructType(st.fields.filterNot(f => drops.contains(f.name)) ++
           adds2)
       }
-      (manifest(spark, root, base), next)
-    }
+      Some((manifest(spark, root, base), meta.copy(schema = next)))
+    }.get
   }
 
   /** Lossless primitive WIDENINGS the vectorized parquet reader
@@ -2471,8 +2366,8 @@ object ManifestTable {
       widens: Seq[(Seq[String], org.apache.spark.sql.types.DataType)])
       : Unit = {
     val base = latestVersion(spark, root)
-    val schema = tableSchema(spark, root, base)
-    val eqKeys = eqDeletes(spark, root, base).flatMap(_.keys).toSet
+    val meta = metaAt(spark, root, base)
+    val (schema, eqKeys) = (meta.schema, meta.eq.flatMap(_.keys).toSet)
     widens.foreach {
       case (Seq(n), t) => validateWiden(schema, eqKeys, n, t)
       case (path, t) =>
@@ -2482,7 +2377,7 @@ object ManifestTable {
 
   /** ALTER COLUMN TYPE — WIDENING only, metadata-only (the Delta
     * type-widening shape): the next version reuses the current
-    * manifest's files verbatim under the WIDER sidecar type; old
+    * manifest's files verbatim under the WIDER schema type; old
     * files keep their narrow parquet pages and the vectorized reader
     * upcasts per file, new landings conform to the wide type, and the
     * manifest's stat triplets for the column cast in the same commit
@@ -2502,10 +2397,9 @@ object ManifestTable {
   def widenColumnType(spark: SparkSession, root: String, name: String,
                       to: org.apache.spark.sql.types.DataType): Long = {
     var physName: String = null
-    val v = commitLoopEvolving(spark, root) { base =>
-      val schema = tableSchema(spark, root, base)
-      validateWiden(schema,
-        eqDeletes(spark, root, base).flatMap(_.keys).toSet, name, to)
+    val v = commitLoop(spark, root) { (base, meta) =>
+      val schema = meta.schema
+      validateWiden(schema, meta.eq.flatMap(_.keys).toSet, name, to)
       val phys = physicalFor(schema, name)
       physName = phys
       val m = manifest(spark, root, base)
@@ -2513,9 +2407,9 @@ object ManifestTable {
         if (!m.columns.contains(s"${phys}_min")) m
         else m.withColumn(s"${phys}_min", col(s"${phys}_min").cast(to))
           .withColumn(s"${phys}_max", col(s"${phys}_max").cast(to))
-      (m2, StructType(schema.fields.map(x =>
-        if (x.name != name) x else x.copy(dataType = to))))
-    }
+      Some((m2, meta.copy(schema = StructType(schema.fields.map(x =>
+        if (x.name != name) x else x.copy(dataType = to))))))
+    }.get
     // post-commit cleanup only — correctness comes from the read-side
     // type check ([[blooms]] filters a mismatched build-time type)
     val bp = new Path(bloomRootFor(root, physName))
@@ -2536,12 +2430,11 @@ object ManifestTable {
     require(path.nonEmpty, "widen requires a column path")
     if (path.length == 1)
       return widenColumnType(spark, root, path.head, to)
-    commitLoopEvolving(spark, root) { base =>
-      val schema = tableSchema(spark, root, base)
-      val next = validateNestedWiden(schema,
-        eqDeletes(spark, root, base).flatMap(_.keys).toSet, path, to)
-      (manifest(spark, root, base), next)
-    }
+    commitLoop(spark, root) { (base, meta) =>
+      val next = validateNestedWiden(meta.schema,
+        meta.eq.flatMap(_.keys).toSet, path, to)
+      Some((manifest(spark, root, base), meta.copy(schema = next)))
+    }.get
   }
 
   // ------------------------------------------------- deletion vectors
@@ -2678,9 +2571,9 @@ object ManifestTable {
     * half dead; [[optimize]] purges all. Sidecars are attempt-unique
     * and swept by [[vacuum]] once unreferenced. */
   def deleteWhereMor(spark: SparkSession, root: String, cond: Column): Long =
-    commitLoop(spark, root, eqReg = _ => Nil) { base =>
+    commitLoop(spark, root) { (base, meta) =>
       val (m, states) = effectiveManifest(spark, root, base)
-      val schema = tableSchema(spark, root, base)
+      val schema = meta.schema
       val stats = statsCols(spark, root, base)
       val resolvedCond = toPhysicalExpr(
         resolveCond(spark, cond, schema), schema)
@@ -2697,8 +2590,7 @@ object ManifestTable {
         else m.filter(!col("path").isin(dropped.toSeq: _*))
       val touched = states.filterNot(s =>
         excluded.contains(s._1) || dropped.contains(s._1))
-      if (touched.isEmpty) kept
-      else {
+      val next = if (touched.isEmpty) kept else {
         // file positions of the rows the predicate matches — raw read
         // (existing DVs included: re-matching an already-deleted row
         // re-sets an already-set bit, which is what makes the merge
@@ -2714,7 +2606,8 @@ object ManifestTable {
         vectorPositions(spark, root, kept, states, touched, matched)
           .getOrElse(kept)
       }
-    }
+      Some((next, meta.copy(eq = Nil)))
+    }.get
 
   /** The deletion-vector bitset writer shared by the merge-on-read
     * commits ([[vectorPositions]]) and the equality-delete read-side
@@ -2820,7 +2713,7 @@ object ManifestTable {
     * aggregates) must route to the scan while true. */
   private[graft] def hasPendingEq(spark: SparkSession, root: String,
                                   version: Long): Boolean =
-    eqDeletes(spark, root, version).nonEmpty
+    metaAt(spark, root, version).eq.nonEmpty
 
   /** Per-file effective DV state of one version: path → (dv sidecar,
     * deleted rows, file rows) with any pending equality deletes
@@ -2829,7 +2722,7 @@ object ManifestTable {
   private[graft] def effectiveStates(spark: SparkSession, root: String,
                                      version: Long)
       : Seq[(String, Option[String], Long, Long)] = {
-    val entries = eqDeletes(spark, root, version)
+    val entries = metaAt(spark, root, version).eq
     if (entries.isEmpty) return dvStates(spark, root, version)
     val key = (canon(root), version)
     // re-validate EVERY scratch sidecar: committed vectors are
@@ -2886,7 +2779,7 @@ object ManifestTable {
     * [[compactEq]]). */
   private[graft] def eqProbes(spark: SparkSession, root: String,
                               version: Long): Option[Seq[EqProbe]] = {
-    val entries = eqDeletes(spark, root, version)
+    val entries = metaAt(spark, root, version).eq
     if (entries.isEmpty) return Some(Nil)
     val key = (canon(root), version)
     val maxBytes = spark.conf
@@ -2995,7 +2888,7 @@ object ManifestTable {
                                 version: Long)
       : (DataFrame, Seq[(String, Option[String], Long, Long)]) = {
     val m = manifest(spark, root, version)
-    if (eqDeletes(spark, root, version).isEmpty)
+    if (metaAt(spark, root, version).eq.isEmpty)
       return (m, dvStates(spark, root, version))
     val states = effectiveStates(spark, root, version)
     val spk = spark
@@ -3198,12 +3091,7 @@ object ManifestTable {
       .write.parquet(eqDir)
     lazy val landed = rows.map(r => landFiles(conform(r, schema), root,
       statsCols(spark, root, v)))
-    commitLoopEvolvingOpt(spark, root,
-      extraStage = batchId
-        .map(id => VersionedTable.stampBatch(spark, manifestsRoot(root), id) _)
-        .getOrElse((_: String) => ()),
-      eqReg = base => eqDeletes(spark, root, base) :+
-        EqEntry(canon(eqDir), base + 1, keyCols)) { base =>
+    commitLoop(spark, root, batch = batchId) { (base, meta) =>
       if (batchId.exists(isReplay(spark, root, _))) None
       else {
         val m = manifest(spark, root, base)
@@ -3212,7 +3100,8 @@ object ManifestTable {
             .select(m.columns.toIndexedSeq.map(col): _*)
           case None => m
         }
-        Some((next, tableSchema(spark, root, base)))
+        Some((next, meta.copy(eq =
+          meta.eq :+ EqEntry(canon(eqDir), base + 1, keyCols))))
       }
     }
   }
@@ -3229,10 +3118,9 @@ object ManifestTable {
     val v = latestVersion(spark, root)
     require(v >= 0, s"manifest table at $root has no committed version")
     if (!hasPendingEq(spark, root, v)) return None
-    commitLoopEvolvingOpt(spark, root, eqReg = _ => Nil) { base =>
-      if (!hasPendingEq(spark, root, base)) None
-      else Some((effectiveManifest(spark, root, base)._1,
-        tableSchema(spark, root, base)))
+    commitLoop(spark, root) { (base, meta) =>
+      if (meta.eq.isEmpty) None
+      else Some((effectiveManifest(spark, root, base)._1, meta.copy(eq = Nil)))
     }
   }
 
@@ -3253,9 +3141,9 @@ object ManifestTable {
   def updateWhereMor(spark: SparkSession, root: String, cond: Column,
                      sets: Seq[(String, Column)]): Long = {
     require(sets.nonEmpty, "updateWhereMor requires at least one assignment")
-    commitLoop(spark, root, eqReg = _ => Nil) { base =>
+    commitLoop(spark, root) { (base, meta) =>
       val (m, states) = effectiveManifest(spark, root, base)
-      val schema = tableSchema(spark, root, base)
+      val schema = meta.schema
       val stats = statsCols(spark, root, base)
       sets.foreach { case (c, _) =>
         require(schema.fieldNames.contains(c),
@@ -3265,8 +3153,7 @@ object ManifestTable {
       val excluded = graft.plans.StatsPruneRule.excludedByEnvelopes(
         spark, resolvedCond, m, stats)
       val touched = states.filterNot(s => excluded.contains(s._1))
-      if (touched.isEmpty) m
-      else {
+      val next = if (touched.isEmpty) m else {
         // LIVE rows only: positions kept through the DV anti-join, so
         // an existing vector's rows can neither re-vector nor re-land.
         // The matched frame feeds TWO jobs (positions → vectors,
@@ -3291,7 +3178,8 @@ object ManifestTable {
           }
         } finally matched.unpersist(): Unit
       }
-    }
+      Some((next, meta.copy(eq = Nil)))
+    }.get
   }
 
   /** MERGE-ON-READ keyed MERGE — [[merge]] at the deletion-vector
@@ -3312,7 +3200,7 @@ object ManifestTable {
     * `evolveSchema` contract on the vector grain, where the manifest
     * representation's no-rewrite property is total: untouched files
     * never rewrote anyway, and here even the MATCHED files keep their
-    * bytes — evolution costs exactly the wider sidecar plus the
+    * bytes — evolution costs exactly the wider schema plus the
     * landed batch. A batch may carry NEW columns (existing rows read
     * NULL) or OMIT existing ones (landed rows read NULL there). */
   def mergeMor(updates: DataFrame, root: String, keyCols: Seq[String],
@@ -3346,7 +3234,7 @@ object ManifestTable {
     if (batchId.exists(isReplay(spark, root, _))) return None
     val baseSchema = tableSchema(spark, root, v)
     // the batch's GENUINELY new columns — the only fields an attempt
-    // may widen a sidecar by (re-adding every entry-schema field would
+    // may widen a schema by (re-adding every entry-schema field would
     // silently resurrect a column a concurrent dropColumns removed)
     val batchNewFields =
       if (!evolveSchema) {
@@ -3368,23 +3256,21 @@ object ManifestTable {
     val keys = padded.select(keyCols.map(col): _*).distinct()
     // immutable landed files are reusable across CAS retry attempts
     lazy val landed = landFiles(batch, root, statsCols(spark, root, v))
-    commitLoopEvolvingOpt(spark, root, extraStage = batchId
-      .map(id => VersionedTable.stampBatch(spark, manifestsRoot(root), id) _)
-      .getOrElse((_: String) => ()), eqReg = _ => Nil) { base =>
+    commitLoop(spark, root, batch = batchId) { (base, meta) =>
       if (batchId.exists(isReplay(spark, root, _))) None
       else {
         val (m, states) = effectiveManifest(spark, root, base)
         val touched = touchedPaths(spark, root, m, keys, keyCols,
-          tableSchema(spark, root, base)).toSet
+          meta.schema).toSet
         val touchedStates = states.filter(s => touched.contains(s._1))
         val live = readFilesDvPos(spark, schema,
           touchedStates.map(s => (s._1, s._2)), touchedStates.map(_._3).sum)
         val positions = live.join(keys, keyCols, "left_semi")
           .select(col("_p"), col("_i"))
-        // the attempt's schema is ITS base's sidecar widened by the
+        // the attempt's schema is ITS base's schema widened by the
         // BATCH's new columns only — a conflicting writer's evolution
         // (or column drop) is preserved, never clobbered
-        val b = tableSchema(spark, root, base)
+        val b = meta.schema
         val attemptSchema = StructType(b.fields ++
           batchNewFields.filterNot(f => b.fieldNames.contains(f.name)))
         // allowMissingColumns absorbs a base that gained stats columns
@@ -3396,7 +3282,7 @@ object ManifestTable {
             positions)
           .getOrElse(m).unionByName(landed, allowMissingColumns = true)
           .select(m.columns.toIndexedSeq.map(col): _*)
-        Some((next, attemptSchema))
+        Some((next, meta.copy(schema = attemptSchema, eq = Nil)))
       }
     }
   }
@@ -3423,20 +3309,20 @@ object ManifestTable {
       winners.filter(not(col(opCol) === lit("D"))).drop(opCol, seqCol),
       schema)
     lazy val landed = landFiles(upserts, root, statsCols(spark, root, v))
-    commitLoop(spark, root, eqReg = _ => Nil) { base =>
+    commitLoop(spark, root) { (base, meta) =>
       val (m, states) = effectiveManifest(spark, root, base)
       val touched = touchedPaths(spark, root, m, keys, keyCols,
-        tableSchema(spark, root, base)).toSet
+        meta.schema).toSet
       val touchedStates = states.filter(s => touched.contains(s._1))
       val live = readFilesDvPos(spark, schema,
         touchedStates.map(s => (s._1, s._2)), touchedStates.map(_._3).sum)
       val positions = live.join(keys, keyCols, "left_semi")
         .select(col("_p"), col("_i"))
       // allowMissingColumns + base-column pinning: see [[mergeMorCore]]
-      vectorPositions(spark, root, m, states, touchedStates, positions)
+      Some((vectorPositions(spark, root, m, states, touchedStates, positions)
         .getOrElse(m).unionByName(landed, allowMissingColumns = true)
-        .select(m.columns.toIndexedSeq.map(col): _*)
-    }
+        .select(m.columns.toIndexedSeq.map(col): _*), meta.copy(eq = Nil)))
+    }.get
   }
 
   /** [[readFilesDv]] keeping each row's (file, position) as `_p`/`_i`
@@ -3486,8 +3372,8 @@ object ManifestTable {
   /** RESTORE to a retained version — `RESTORE TABLE t TO VERSION AS OF
     * v` as a METADATA-ONLY commit: the next version's manifest is the
     * target version's manifest VERBATIM (every data file carries BY
-    * REFERENCE, zero data I/O) under the target version's schema
-    * sidecar, so the restore is itself a normal, time-travelable,
+    * REFERENCE, zero data I/O) under the target version's
+    * Meta, so the restore is itself a normal, time-travelable,
     * CAS-serialized commit — history is never rewritten, and the
     * restored files are re-referenced by a RETAINED manifest, which is
     * exactly what keeps the refcount-aware [[vacuum]] off them. Cost:
@@ -3496,16 +3382,13 @@ object ManifestTable {
     * pre-delete version undoes the delete; restoring to a version
     * with pending deletes restores them pending. */
   def restore(spark: SparkSession, root: String, version: Long): Long = {
-    commitLoopEvolving(spark, root,
-      eqReg = _ => eqDeletes(spark, root, version),
-      consReg = _ => constraintsAt(spark, root, version),
-      ndvReg = _ => ndvAt(spark, root, version)) { base =>
+    commitLoop(spark, root) { (base, _) =>
       require(versions(spark, root).contains(version),
         s"manifest table at $root has no retained version $version " +
           "(vacuumed or never committed) — nothing to restore to")
       require(version != base, s"version $version is already current")
-      (manifest(spark, root, version), tableSchema(spark, root, version))
-    }
+      Some((manifest(spark, root, version), metaAt(spark, root, version)))
+    }.get
   }
 
   private object RestoreAborted extends Exception
@@ -3521,15 +3404,12 @@ object ManifestTable {
                                       version: Long,
                                       expectedCurrent: Long)
       : Option[Long] =
-    try Some(commitLoopEvolving(spark, root,
-      eqReg = _ => eqDeletes(spark, root, version),
-      consReg = _ => constraintsAt(spark, root, version),
-      ndvReg = _ => ndvAt(spark, root, version)) { base =>
+    try commitLoop(spark, root) { (base, _) =>
       if (base != expectedCurrent) throw RestoreAborted
       require(versions(spark, root).contains(version),
         s"manifest table at $root has no retained version $version")
-      (manifest(spark, root, version), tableSchema(spark, root, version))
-    })
+      Some((manifest(spark, root, version), metaAt(spark, root, version)))
+    }
     catch { case RestoreAborted => None }
 
   /** SHALLOW CLONE — a new manifest table at `dstRoot` whose first
@@ -3566,17 +3446,13 @@ object ManifestTable {
     // the clone starts its own seq timeline: borrowed files reset to
     // seq 0 so the clone's future deletes order against ITS versions
     val cloneRows = manifest(spark, srcRoot, v).withColumn("seq", lit(0L))
-    val (dv, key) = VersionedTable.writeStagedKeyed(
-      cloneRows,
-      manifestsRoot(dstRoot))(dir => {
-      stageSchema(spark, dstRoot, tableSchema(spark, srcRoot, v))(dir)
-      // the clone inherits the source's invariants — its future
-      // writes enforce the same contract the source's did
-      stageConstraints(spark, dstRoot, constraintsAt(spark, srcRoot, v))(dir)
-      // ANALYZE stats transfer: the clone's content IS the source's,
-      // so the source's NDV pass is exactly right for it
-      stageNdv(spark, dstRoot, ndvAt(spark, srcRoot, v))(dir)
-    })
+    // the clone inherits the source's invariants (its future writes
+    // enforce the same contract the source's did) and its ANALYZE
+    // stats (the clone's content IS the source's)
+    val src = metaAt(spark, srcRoot, v)
+    val (dv, key) = VersionedTable.writeKeyed(cloneRows,
+      manifestsRoot(dstRoot), encodeMeta(Meta(src.schema,
+        constraints = src.constraints, ndv = src.ndv)))
     primeManifestCaches(spark, dstRoot, dv, cloneRows, key)
     dv
   }
@@ -3616,56 +3492,26 @@ object ManifestTable {
       statsCols.foreach(c => require(schema.fieldNames.contains(c),
         s"stats column $c is not a column of $dataDir"))
       val rows = describe(listed, schema)
-      val (v, key) = VersionedTable.writeStagedKeyed(rows,
-        manifestsRoot(root)) { d =>
-        stageSchema(spark, root, schema)(d)
-        stageAdopted(spark, root, dir)(d)
-      }
+      val (v, key) = VersionedTable.writeKeyed(rows, manifestsRoot(root),
+        encodeMeta(Meta(schema, adopted = Some(dir))))
       primeManifestCaches(spark, root, v, rows, key)
       return Some(v)
     }
-    commitLoopEvolvingOpt(spark, root, extraStage = stageAdopted(spark, root, dir),
-      adopting = true) { base =>
+    commitLoop(spark, root, adopting = true) { (base, meta) =>
       val tracked = ManifestTable.statsCols(spark, root, base)
       require(tracked.toSet == statsCols.toSet,
         s"adopt: $root tracks ${tracked.mkString(",")}, not " +
           statsCols.mkString(","))
-      require(adoptedFrom(spark, root, base).contains(dir),
+      require(meta.adopted.contains(dir),
         s"adopt: $root is not an adoption of $dataDir")
       val known = filesAt(spark, root, base).toSet
       val fresh = listed.filterNot(f => known.contains(f._1))
       val gone = known -- listed.map(_._1)
       if (fresh.isEmpty && gone.isEmpty) None
-      else {
-        val schema = tableSchema(spark, root, base)
-        Some((manifest(spark, root, base)
-          .filter(!col("path").isin(gone.toSeq: _*))
-          .unionByName(describe(fresh, schema)), schema))
-      }
+      else Some((manifest(spark, root, base)
+        .filter(!col("path").isin(gone.toSeq: _*))
+        .unionByName(describe(fresh, meta.schema)), meta))
     }
-  }
-
-  private val AdoptedSidecar = "_graft_adopted"
-
-  /** The directory an adopted version mirrors — None for a table whose
-    * files it owns. */
-  private[graft] def adoptedFrom(spark: SparkSession, root: String,
-                                 version: Long): Option[String] = {
-    val p = new Path(s"${manifestsRoot(root)}/epoch=$version", AdoptedSidecar)
-    val f = fs(spark, root)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-      finally in.close()
-    }
-  }
-
-  private def stageAdopted(spark: SparkSession, root: String,
-                           dataDir: String)(dir: String): Unit = {
-    val out = fs(spark, root).create(new Path(dir, AdoptedSidecar), true)
-    try out.write(dataDir.getBytes("UTF-8")) finally out.close()
   }
 
   // ------------------------------------------------- refs: branches & tags
@@ -3868,7 +3714,7 @@ object ManifestTable {
       def sideify(m: DataFrame, st: String, rw: String) =
         m.select(col("path"),
           struct(col("size"), col("dv_path")).as(st),
-          struct(m.columns.map(col): _*).as(rw))
+          struct(m.columns.toIndexedSeq.map(col): _*).as(rw))
       val j = sideify(manifest(spark, root, base), "sm", "rm")
         .join(sideify(manifest(spark, bRoot, bv), "sb", "rb"),
           Seq("path"), "full_outer")
@@ -3920,27 +3766,22 @@ object ManifestTable {
         s"both main (v$base0 -> v$base) and branch $name changed " +
           s"the $what registry since the fork — align one side " +
           "before a merge publish")
-    val published = commitLoopEvolving(spark, root,
-      eqReg = _ => Nil,
-      consReg = base =>
-        if (base == base0) constraintsAt(spark, bRoot, bv)
-        else pick("constraint", constraintsAt(spark, root, base0),
-          constraintsAt(spark, bRoot, bv),
-          constraintsAt(spark, root, base), base),
-      ndvReg = base =>
-        if (base == base0) ndvAt(spark, bRoot, bv)
-        else {
+    val published = commitLoop(spark, root) { (base, metaM) =>
+      val metaB = metaAt(spark, bRoot, bv)
+      if (base == base0)
+        Some((manifest(spark, bRoot, bv).withColumn("seq", lit(0L)),
+          metaB.copy(eq = Nil)))
+      else {
+        val meta0 = metaAt(spark, root, base0)
+        val (rows, schema) = threeWay(base)
+        Some((rows, Meta(schema,
+          constraints = pick("constraint", meta0.constraints,
+            metaB.constraints, metaM.constraints, base),
           // advisory statistics: prefer whichever side re-analyzed,
           // main winning when both did — never a refusal
-          val n0 = ndvAt(spark, root, base0)
-          val nM = ndvAt(spark, root, base)
-          if (nM == n0) ndvAt(spark, bRoot, bv) else nM
-        }) { base =>
-      if (base == base0)
-        (manifest(spark, bRoot, bv).withColumn("seq", lit(0L)),
-          tableSchema(spark, bRoot, bv))
-      else threeWay(base)
-    }
+          ndv = if (metaM.ndv == meta0.ndv) metaB.ndv else metaM.ndv)))
+      }
+    }.get
     // after a MERGE publish the branch must REBASE onto the merged
     // result before its ref advances: leaving the branch manifest at
     // its pre-merge state while the ref says "forked at published"
@@ -3952,13 +3793,8 @@ object ManifestTable {
     if (mergedCommit && latestVersion(spark, root) == published &&
         readRef(spark, root, name).contains(BranchRef(base0))) {
       val pm = manifest(spark, root, published)
-      val ps = tableSchema(spark, root, published)
-      commitLoopEvolving(spark, bRoot,
-        eqReg = _ => Nil,
-        consReg = _ => constraintsAt(spark, root, published),
-        ndvReg = _ => ndvAt(spark, root, published)) { _ =>
-        (pm, ps)
-      }: Unit
+      val pMeta = metaAt(spark, root, published).copy(eq = Nil)
+      commitLoop(spark, bRoot)((_, _) => Some((pm, pMeta))): Unit
     }
     rewriteRef(spark, root, name, s"branch $published")
     published
@@ -4088,10 +3924,9 @@ object ManifestTable {
                            dropWholeMatches: Boolean = false,
                            validateCons: Boolean = true)
                           (transform: (DataFrame, Column) => DataFrame): Long =
-    commitLoop(spark, root, eqReg = _ => Nil,
-      validateCons = validateCons) { base =>
+    commitLoop(spark, root, validateCons = validateCons) { (base, meta) =>
       val (m, states) = effectiveManifest(spark, root, base)
-      val schema = tableSchema(spark, root, base)
+      val schema = meta.schema
       val stats = statsCols(spark, root, base)
       val resolvedCond = toPhysicalExpr(
         resolveCond(spark, cond, schema), schema)
@@ -4114,12 +3949,10 @@ object ManifestTable {
       val kept =
         if (dropped.isEmpty) m
         else m.filter(!col("path").isin(dropped.toSeq: _*))
-      if (touchedStates.isEmpty)
-        // nothing to rewrite: a fully-aligned op commits metadata (and
-        // the replaceWhere batch) alone — an empty landing would still
-        // write a 0-row parquet file
-        if (extraRows == null) kept else kept.unionByName(extraRows())
-      else {
+      // nothing to rewrite: a fully-aligned op commits metadata (and
+      // the replaceWhere batch) alone — an empty landing would still
+      // write a 0-row parquet file
+      val next = if (touchedStates.isEmpty) kept else {
         // touched reads apply the files' deletion vectors (a raw read
         // would resurrect deleted rows into the rewrite)
         val touchedRows = readFilesDv(spark, schema,
@@ -4127,11 +3960,11 @@ object ManifestTable {
         val newRows = landFiles(physSelect(
           transform(touchedRows, coalesce(cond, lit(false))), schema),
           root, stats)
-        val next = kept.filter(!col("path").isin(touched: _*))
-          .unionByName(newRows)
-        if (extraRows == null) next else next.unionByName(extraRows())
+        kept.filter(!col("path").isin(touched: _*)).unionByName(newRows)
       }
-    }
+      Some((if (extraRows == null) next else next.unionByName(extraRows()),
+        meta.copy(eq = Nil)))
+    }.get
 
   /** File-set delta between two versions — (removed, added) data-file
     * paths, from COMMITTED METADATA alone (two manifest reads, zero
@@ -4253,9 +4086,8 @@ object ManifestTable {
                sortCols: Seq[String] = Nil,
                numFiles: Int = 16): Long = {
     require(numFiles >= 1, "numFiles must be >= 1")
-    commitLoopEvolving(spark, root, eqReg = _ => Nil,
-      validateCons = false) { base =>
-      val schema = tableSchema(spark, root, base)
+    commitLoop(spark, root, validateCons = false) { (base, meta) =>
+      val schema = meta.schema
       val next = bucketBy match {
         case Some((k, n)) => withBucketSpec(clearBucketSpec(schema), k, n)
         case None         => clearBucketSpec(schema)
@@ -4283,8 +4115,8 @@ object ManifestTable {
       val rows = landFiles(physSelect(laid, schema), root,
         statsCols(spark, root, base), bucketAs = Some(physKeys),
         sortWithin = sortCols.map(c => physicalName(schema(c))))
-      (rows, next)
-    }
+      Some((rows, meta.copy(schema = next, eq = Nil)))
+    }.get
   }
 
   /** OPTIMIZE: re-lay the CURRENT rows as a fresh file set (compaction
@@ -4301,11 +4133,11 @@ object ManifestTable {
     // under an empty registry; rows are preserved, not introduced —
     // constraint re-validation would double the re-lay's read cost
     // for rows that cannot have changed
-    commitLoop(spark, root, eqReg = _ => Nil, validateCons = false) { base =>
+    commitLoop(spark, root, validateCons = false) { (base, meta) =>
       // re-lay BASE's rows (not a floating `current` — a conflict
       // recomputes against the new base, so no commit is ever lost)
       val cur = readVersion(spark, root, base)
-      val schema = tableSchema(spark, root, base)
+      val schema = meta.schema
       val bucketed = bucketSpec(schema).isDefined
       // a curve layout cannot survive the bucketed landing's cell
       // shuffle (and no in-bucket order re-establishes it) — a silent
@@ -4325,12 +4157,13 @@ object ManifestTable {
         else if (sortCols.isEmpty) cur.repartition(numFiles)
         else cur.repartitionByRange(numFiles, sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)
-      landFiles(physSelect(laid, schema), root,
+      Some((landFiles(physSelect(laid, schema), root,
         statsCols(spark, root, base),
         sortWithin =
           if (hilbert) Nil
-          else sortCols.map(c => physicalName(schema(c))))
-    }
+          else sortCols.map(c => physicalName(schema(c)))),
+        meta.copy(eq = Nil)))
+    }.get
   }
 
   /** INCREMENTAL optimize — maintenance cost ∝ the DEGRADED subset,
@@ -4452,19 +4285,18 @@ object ManifestTable {
       return None
     // row-preserving re-lay: skip constraint re-validation (see
     // optimize)
-    Some(commitLoop(spark, root, eqReg = _ => Nil,
-      validateCons = false) { b =>
+    commitLoop(spark, root, validateCons = false) { (b, meta) =>
       // recompute against the CURRENT base on conflict: a selected
       // file may have been rewritten away — re-intersect with b's
       // manifest so only still-live files rewrite. Schema and stats
       // are ALSO re-read per attempt (not the pre-loop pins): a
-      // concurrent evolveSchema merge widens the sidecar, and reading
+      // concurrent evolveSchema merge widens the schema, and reading
       // touched files with the stale narrower schema would silently
       // drop the evolved column's values from the rewritten files
-      // while the commit still stamps the wider sidecar — data loss.
+      // while the commit still stamps the wider schema — data loss.
       // The EFFECTIVE view: a re-lay that read raw would resurrect
       // pending equality deletes into the fresh files
-      val curSchema = tableSchema(spark, root, b)
+      val curSchema = meta.schema
       val curStats = statsCols(spark, root, b)
       val (mb, liveStates) = effectiveManifest(spark, root, b)
       val live = liveStates.map(_._1).toSet
@@ -4490,12 +4322,13 @@ object ManifestTable {
         else if (sortCols.isEmpty) rowsIn.repartition(nFiles)
         else rowsIn.repartitionByRange(nFiles, sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)
-      mb.filter(!col("path").isin(todo: _*))
+      Some((mb.filter(!col("path").isin(todo: _*))
         .unionByName(landFiles(physSelect(laid, curSchema), root, curStats,
           sortWithin =
             if (hilbert) Nil
-            else sortCols.map(c => physicalName(curSchema(c)))))
-    })
+            else sortCols.map(c => physicalName(curSchema(c))))),
+        meta.copy(eq = Nil)))
+    }
   }
 
   /** Per-file BLOOM index on `keyCol` — point-lookup pruning for the
@@ -4528,11 +4361,12 @@ object ManifestTable {
     val curType = schemaV(keyCol).dataType.catalogString
     // a pre-widen index hashes the NARROW type — its bits can never
     // serve wide probes; rebuild from scratch under the current type.
-    // A MISSING marker counts as a mismatch too: delta-appending
-    // wide-hashed rows onto unknown-typed bits and then stamping the
-    // result would legitimize a poisoned index forever
-    if (VersionedTable.latestVersion(spark, br) >= 0 &&
-        !bloomTypeMarker(spark, br).contains(curType))
+    // An index whose records name no type counts as a mismatch too:
+    // delta-appending wide-hashed rows onto unknown-typed bits would
+    // legitimize a poisoned index forever
+    val bv = VersionedTable.latestVersion(spark, br)
+    if (bv >= 0 &&
+        !graft.sources.FileBloomIndex.keyType(spark, br, bv).contains(curType))
       fs(spark, root).delete(new Path(br), true): Unit
     val live = filesAt(spark, root, v)
     val todo =
@@ -4548,68 +4382,32 @@ object ManifestTable {
     if (todo.isEmpty) return None
     val idx = graft.sources.FileBloomIndex.buildFor(spark, todo, physCol,
       numBits, numHashes)
-    val committed =
+    // the key type rides in the index epoch's own record — atomic
+    // with the bits it describes
+    Some(
       if (VersionedTable.latestVersion(spark, br) < 0)
-        graft.sources.FileBloomIndex.commitFull(idx, br)
-      else graft.sources.FileBloomIndex.commitDelta(idx, br)
-    writeBloomTypeMarker(spark, br, curType)
-    Some(committed)
+        graft.sources.FileBloomIndex.commitFull(idx, br, curType)
+      else graft.sources.FileBloomIndex.commitDelta(idx, br, curType))
   }
 
   private[graft] def bloomRootFor(root: String, c: String): String =
     s"$root/_bloom_$c"
 
-  /** The key TYPE a bloom index was built against (xxhash64 is
-    * type-sensitive — a wide probe's hash never matches bits built
-    * from narrow values, so a post-widen index would FALSELY exclude
-    * files). Consumers skip a mismatched index ([[bloomsValid]]);
-    * missing marker = pre-widening legacy, necessarily matching. */
-  /** Markers cached per (index root, index version): a rebuild bumps
-    * the index's version, so an entry can never serve a different
-    * generation's type — the planning hot path then pays the two
-    * marker round-trips once per index generation, not per scan. */
-  private val BloomTypes =
-    new EpochCache.Kind[Option[String]](_ => 64L)
-
-  private def bloomTypeMarker(spark: SparkSession,
-                              bloomRoot: String): Option[String] = {
-    val p = new Path(bloomRoot, "_graft_keytype")
-    val f = fs(spark, bloomRoot)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-        Some(new String(buf.toByteArray, "UTF-8").trim)
-      } finally in.close()
-    }
-  }
-
-  private def writeBloomTypeMarker(spark: SparkSession, bloomRoot: String,
-                                   t: String): Unit = {
-    val out = fs(spark, bloomRoot)
-      .create(new Path(bloomRoot, "_graft_keytype"), true)
-    try out.write(t.getBytes("UTF-8")) finally out.close()
-  }
-
   /** [[blooms]] restricted to indexes whose build-time key type still
     * matches the schema's — the read-side half of type widening's
-    * bloom contract. A MISSING marker is treated as a MISMATCH
-    * (fail-safe): an unmarked index may predate a widen whose
-    * post-commit sweep did not land, and consulting it would FALSELY
-    * exclude files — it stops serving until the next [[buildBloom]]
-    * (the maintenance tick) rebuilds and stamps it. */
+    * bloom contract. xxhash64 is type-sensitive: a wide probe's hash
+    * never matches bits built from narrow values, so a post-widen
+    * index would FALSELY exclude files. An index epoch whose record
+    * names no type is a MISMATCH (fail-safe): it stops serving until
+    * the next [[buildBloom]] (the maintenance tick) rebuilds it. */
   private[graft] def bloomsValid(spark: SparkSession, root: String,
                                  schema: StructType)
       : Seq[(String, String)] =
     blooms(spark, root).filter { case (pc, br) =>
-      val v = VersionedTable.latestVersion(spark, br)
-      val marker = EpochCache.getOrElseUpdate(BloomTypes, (canon(br), v))(
-        bloomTypeMarker(spark, br))
+      val built = graft.sources.FileBloomIndex.keyType(spark, br,
+        VersionedTable.latestVersion(spark, br))
       schema.fields.find(f => physicalName(f) == pc)
-        .map(_.dataType.catalogString)
-        .exists(t => marker.contains(t))
+        .exists(f => built.contains(f.dataType.catalogString))
     }
 
   /** Committed bloom indexes beside this table: (column, index root). */
@@ -4733,7 +4531,7 @@ object ManifestTable {
     // equality-delete KEY files refcount like vectors: live while any
     // retained version's registry names their directory
     val eqReferenced = versions(spark, root)
-      .flatMap(v => eqDeletes(spark, root, v).map(e => canon(e.path))).toSet
+      .flatMap(v => metaAt(spark, root, v).eq.map(e => canon(e.path))).toSet
     val eqBase = new Path(eqRoot(root))
     if (f.exists(eqBase)) {
       f.listStatus(eqBase).filter(_.isDirectory).foreach { d =>

@@ -397,7 +397,7 @@ object ParquetSink {
       root.getParent, "." + root.getName + ".recl-inc-tmp")
     val aside = new org.apache.hadoop.fs.Path(
       root.getParent, "." + root.getName + ".recl-inc-old")
-    writeZOrdered(spark.read.parquet(offPaths: _*), tmp.toString, cols, nNew,
+    writeZOrdered(spark.read.parquet(offPaths.toIndexedSeq: _*), tmp.toString, cols, nNew,
       bits = 0)
     fs.mkdirs(aside): Unit
     offPaths.foreach { p =>

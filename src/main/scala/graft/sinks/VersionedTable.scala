@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, struct, when}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.NullNode
 import graft.util.EpochCache
 
 /** Always-readable versioned table — the epoch-flip pattern the
@@ -22,8 +24,8 @@ import graft.util.EpochCache
   * the version number; a loser retries with the next number. On
   * filesystems whose no-overwrite rename is only check-then-act (the
   * local one), the rename is merely the claim ATTEMPT and ownership
-  * is verified through a claim marker — see [[claimEpoch]]. Because
-  * the rename is the publish step, an `epoch=N` directory exists ONLY
+  * is verified through the epoch's commit record — see
+  * [[claimEpoch]]. Because the rename is the publish step, an `epoch=N` directory exists ONLY
   * fully written: a crashed writer leaves at worst an orphaned
   * `.stage-*` directory that [[vacuum]] sweeps. The `_LATEST` pointer
   * is a monotone CACHE of the newest committed version — readers take
@@ -52,11 +54,53 @@ import graft.util.EpochCache
   *
   * Old epochs are retained for as-of reads ([[readVersion]]) until
   * [[vacuum]] drops all but the newest k.
+  *
+  * Each epoch's metadata is ONE file, its [[Commit]] record
+  * `_graft_commit.json`, staged last, right before the publishing
+  * rename — so it commits atomically with the data it describes.
   */
 object VersionedTable {
 
   private val Pointer = "_LATEST"
-  private val TsSidecar = "_graft_commit_ts"
+  private val RecordFile = "_graft_commit.json"
+
+  private[sinks] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val NoMeta: JsonNode = NullNode.instance
+
+  /** The one metadata record of an epoch:
+    *   - `claim`: the unique name of the stage that became the epoch —
+    *     [[verifyClaim]] decides ownership of a published epoch by it;
+    *   - `tsMs`: the commit timestamp ([[versionAtTimestamp]]);
+    *   - `batch`: the stream replay marker ([[lastAppliedBatch]]), -1
+    *     when none — every commit carries its base's unless it stamps
+    *     its own, and a blind full replace resets it;
+    *   - `meta`: the owner's object — a manifest table's schema and
+    *     registries, a bloom index's key type, an index's build
+    *     params — JSON null when the owner has none. */
+  final case class Commit(claim: String, tsMs: Long, batch: Long,
+                          meta: JsonNode)
+
+  /** The commit record of a retained epoch — one file read, decoded by
+    * the one decoder; a missing, unreadable or malformed record fails
+    * loudly, naming the epoch. Not cached: keying a cache entry by the
+    * epoch's identity ([[EpochKey]]) costs a stat and a listing, more
+    * than the one read it would save. */
+  def record(spark: SparkSession, root: String, version: Long): Commit = {
+    def fail(why: String, cause: Throwable) = throw new IllegalStateException(
+      s"epoch $version of $root has no valid commit record " +
+        s"($RecordFile): $why", cause)
+    val n =
+      try {
+        val in = fs(spark, root).open(
+          new org.apache.hadoop.fs.Path(s"$root/epoch=$version", RecordFile))
+        try mapper.readTree(in) finally in.close()
+      } catch { case e: java.io.IOException => fail(e.toString, e) }
+    if (n == null || !n.path("claim").isTextual ||
+        !n.path("ts").isIntegralNumber || !n.path("batch").isIntegralNumber)
+      fail("missing claim/ts/batch", null)
+    Commit(n.get("claim").asText, n.get("ts").asLong, n.get("batch").asLong,
+      Option(n.get("meta")).getOrElse(NoMeta))
+  }
 
   /** Commit-timestamp clock — injectable so time-travel tests run on a
     * logical clock ([[graft.util.Clock]], the repo-wide discipline);
@@ -110,37 +154,22 @@ object VersionedTable {
     * version. The CAS rename of the staged directory is the COMMIT: a
     * crash before it leaves the table at the previous version with an
     * orphaned staging directory, never a half-visible epoch. Safe
-    * under concurrent writers — each lands on its own version. */
-  def write(df: DataFrame, root: String): Long =
-    writeStaged(df, root)(_ => ())
+    * under concurrent writers — each lands on its own version. `meta`
+    * rides in the epoch's [[Commit]] record, so an owner's metadata
+    * (e.g. an index's build params) commits atomically with the epoch
+    * it describes. A blind full-epoch replace is a stream RESTART: its
+    * record resets the replay marker to -1. */
+  def write(df: DataFrame, root: String, meta: JsonNode = NoMeta): Long =
+    writeKeyed(df, root, meta)._1
 
-  /** [[write]] with a staging hook: `stage(stageDir)` runs after the
-    * epoch's data is fully written but BEFORE the publishing rename,
-    * so sidecar artifacts (e.g. an index's `_graft_build_params`)
-    * commit atomically with the epoch they describe — a reader can
-    * never resolve an epoch whose sidecar is missing or half-written. */
-  def writeStaged(df: DataFrame, root: String)(stage: String => Unit): Long =
-    writeStagedKeyed(df, root)(stage)._1
-
-  /** [[writeStaged]], also returning the published epoch's [[EpochKey]]
-    * (computed once for the schema prime) so a caller priming its own
+  /** [[write]], also returning the published epoch's [[EpochKey]]
+    * (computed once for the cache primes) so a caller priming its own
     * cache entry for the epoch reuses it. */
-  private[sinks] def writeStagedKeyed(df: DataFrame, root: String)
-                                     (stage: String => Unit)
+  private[sinks] def writeKeyed(df: DataFrame, root: String,
+                                meta: JsonNode)
       : (Long, Option[EpochKey]) = {
     val spark = df.sparkSession
-    // a blind full-epoch replace is a stream RESTART: stamp the reset
-    // tombstone (unless the hook stamped its own id) so
-    // [[lastAppliedBatch]]'s newest-stamped-epoch walk does not
-    // resurrect a marker from an earlier life of the table — the
-    // documented "overwrite to restart the stream" path depends on it
-    val resetStage: String => Unit = dir => {
-      stage(dir)
-      if (!fs(spark, root).exists(
-          new org.apache.hadoop.fs.Path(dir, BatchSidecar)))
-        stampBatch(spark, root, -1L)(dir)
-    }
-    var stageDir = stageEpoch(df, root, resetStage)
+    var stageDir = stageEpoch(df, root, meta, -1L)
     var next = latestVersion(spark, root) + 1
     var won = false
     while (!won) {
@@ -150,11 +179,10 @@ object VersionedTable {
         case LostConsumed =>
           // the degenerate-rename loser's stage was consumed (see
           // [[claimEpoch]]) — re-stage and try the next number
-          stageDir = stageEpoch(df, root, resetStage); next += 1
+          stageDir = stageEpoch(df, root, meta, -1L); next += 1
       }
     }
-    bumpPointer(spark, root, next)
-    (next, primeSchemaCache(spark, root, next, df.schema))
+    (next, publish(spark, root, next, df.schema))
   }
 
   /** Optimistic-concurrency commit: publish the staged rewrite ONLY as
@@ -163,34 +191,28 @@ object VersionedTable {
     * the table moved past the base this rewrite was computed from; the
     * caller recomputes against the new current epoch and retries. This
     * is the conflict check that makes read-modify-write commits
-    * serializable rather than merely durable. */
-  def tryCommitAs(df: DataFrame, root: String, expectedBase: Long,
-                  stage: String => Unit = _ => ()): Option[Long] =
-    tryCommitAsKeyed(df, root, expectedBase, stage).map(_._1)
-
-  /** [[tryCommitAs]], also returning the published epoch's key (see
-    * [[writeStagedKeyed]]). */
-  private[sinks] def tryCommitAsKeyed(df: DataFrame, root: String,
-                                      expectedBase: Long,
-                                      stage: String => Unit)
+    * serializable rather than merely durable. `batch` is the new
+    * record's replay marker: the caller carries the base record's
+    * (EXACTLY-ONCE carry-forward — a maintenance tick or batch merge
+    * interleaved between micro-batches must not reset the marker, or a
+    * crash-redelivered batch would apply twice) or stamps its own. */
+  private[sinks] def tryCommitAs(df: DataFrame, root: String,
+                                 expectedBase: Long,
+                                 meta: JsonNode,
+                                 batch: Long)
       : Option[(Long, Option[EpochKey])] = {
     val spark = df.sparkSession
-    val stageDir = stageEpoch(df, root, stage)
+    val stageDir = stageEpoch(df, root, meta, batch)
     val want = expectedBase + 1
     claimEpoch(spark, root, stageDir, want) match {
       case Won =>
-        bumpPointer(spark, root, want)
-        Some((want, primeSchemaCache(spark, root, want, df.schema)))
+        Some((want, publish(spark, root, want, df.schema)))
       case Lost =>
         fs(spark, root).delete(stageDir, true): Unit
         None
       case LostConsumed => None // stage already gone (see claimEpoch)
     }
   }
-
-  /** Land `df` (plus sidecars) in a hidden staging directory readers
-    * and [[versions]] never resolve. */
-  private val ClaimMarker = "_graft_claim"
 
   /** Row bound under which a metadata-scale epoch whose rows the
     * driver ALREADY holds (LocalRelation / union-of-LocalRelations
@@ -204,8 +226,12 @@ object VersionedTable {
     spark.conf.getOption("spark.graft.commit.localStageMaxRows")
       .map(_.toInt).getOrElse(65536)
 
+  /** Land `df` and its [[Commit]] record in a hidden staging directory
+    * readers and [[versions]] never resolve. The record is written
+    * last; its claim is the stage's own unique name. */
   private def stageEpoch(df: DataFrame, root: String,
-                         stage: String => Unit): org.apache.hadoop.fs.Path = {
+                         meta: JsonNode,
+                         batch: Long): org.apache.hadoop.fs.Path = {
     val name = s".stage-${java.util.UUID.randomUUID().toString}"
     val spark = df.sparkSession
     val wroteLocal =
@@ -239,39 +265,12 @@ object VersionedTable {
       }
     if (!wroteLocal)
       df.write.mode("overwrite").parquet(s"$root/$name")
-    stage(s"$root/$name")
-    val f = fs(df.sparkSession, root)
-    // EXACTLY-ONCE CARRY-FORWARD: a non-stream commit (maintenance
-    // tick, batch merge, optimize) must not reset the stream replay
-    // marker — [[lastAppliedBatch]] reads the newest STAMPED epoch, so
-    // every epoch carries the table's high-water batch id forward
-    // unless the stage hook stamped its own (the writeBatch paths do).
-    // Without this, a crash-redelivered micro-batch landing after an
-    // interleaved non-stream commit would be applied twice.
-    if (!f.exists(
-        new org.apache.hadoop.fs.Path(s"$root/$name", BatchSidecar))) {
-      val carried = lastAppliedBatch(df.sparkSession, root)
-      // ALWAYS stamp (the -1 "never streamed" answer included):
-      // lastAppliedBatch walks newest→oldest until it finds a stamped
-      // epoch, so a never-streamed table with thousands of retained
-      // versions would otherwise pay that full walk — one exists()
-      // per version — on EVERY commit; the tombstone makes the next
-      // walk O(1) and -1 is already the documented reset value
-      stampBatch(df.sparkSession, root, carried)(s"$root/$name")
-    }
-    // the claim marker: this stage's own (unique) directory name —
-    // [[claimEpoch]] verifies after a "successful" publish rename
-    // that the published epoch actually carries OUR marker
-    val mk = f.create(
-      new org.apache.hadoop.fs.Path(s"$root/$name", ClaimMarker), true)
-    try mk.write(name.getBytes("UTF-8")) finally mk.close()
-    // commit timestamp, stamped last (right before the publishing
-    // rename) so [[versionAtTimestamp]] time travel works with no
-    // out-of-band bookkeeping
-    val out = f.create(
-      new org.apache.hadoop.fs.Path(s"$root/$name", TsSidecar), true)
-    try out.write(commitClock.nowMs().toString.getBytes("UTF-8"))
-    finally out.close()
+    val rec = mapper.createObjectNode().put("claim", name)
+      .put("ts", commitClock.nowMs()).put("batch", batch)
+    rec.set[JsonNode]("meta", meta)
+    val out = fs(spark, root).create(
+      new org.apache.hadoop.fs.Path(s"$root/$name", RecordFile), true)
+    try out.write(mapper.writeValueAsBytes(rec)) finally out.close()
     new org.apache.hadoop.fs.Path(root, name)
   }
 
@@ -296,8 +295,8 @@ object VersionedTable {
     * epoch, and both writers would believe they claimed the version
     * (a silent lost update; observed once under a 4-writer race).
     * The rename is therefore only the CLAIM ATTEMPT; ownership is
-    * decided by [[verifyClaim]] reading the published epoch's claim
-    * marker back. A detected degenerate loser deletes its copied-in
+    * decided by [[verifyClaim]] reading the published epoch's record
+    * back. A detected degenerate loser deletes its copied-in
     * garbage and reports its stage consumed. */
   private def claimEpoch(spark: SparkSession, root: String,
                          stageDir: org.apache.hadoop.fs.Path,
@@ -318,37 +317,26 @@ object VersionedTable {
     }
   }
 
-  /** Decide ownership of a published `epoch=version` by its claim
-    * marker: ours → [[Won]]; someone else's (or unreadable) → we are
-    * the degenerate-rename loser — our stage was copied INSIDE the
+  /** Decide ownership of a published `epoch=version` by its record's
+    * claim: ours → [[Won]]; someone else's → we are the
+    * degenerate-rename loser — our stage was copied INSIDE the
     * winner's epoch as a hidden subdirectory (invisible to readers,
-    * but garbage), so delete it and report [[LostConsumed]]. Epochs
-    * published by pre-marker writers never reach here: the marker is
-    * staged before every rename this code performs. */
+    * but garbage), so delete it and report [[LostConsumed]]. */
   private[graft] def verifyClaim(spark: SparkSession, root: String,
                                  version: Long, stageName: String): Claim = {
     val f = fs(spark, root)
     val dst = new org.apache.hadoop.fs.Path(root, s"epoch=$version")
-    val marker = new org.apache.hadoop.fs.Path(dst, ClaimMarker)
-    // an UNREADABLE marker must not be mistaken for a foreign one: a
+    // an UNREADABLE record must not be mistaken for a foreign one: a
     // writer whose rename genuinely won but whose read-back hiccuped
     // would otherwise report LostConsumed and re-commit its snapshot
-    // — the exact double-apply the marker exists to prevent. Retry
+    // — the exact double-apply the claim exists to prevent. Retry
     // briefly, then fail LOUDLY: ownership of a published epoch must
     // never be guessed.
     var attempt = 0
     while (attempt < 5) {
       val owner =
-        try {
-          if (!f.exists(marker)) None
-          else {
-            val in = f.open(marker)
-            try Some(new String(
-              org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-              .trim)
-            finally in.close()
-          }
-        } catch { case _: java.io.IOException => None }
+        try Some(record(spark, root, version).claim)
+        catch { case _: IllegalStateException => None }
       owner match {
         case Some(o) if o == stageName => return Won
         case Some(_) => // definitively someone else's epoch
@@ -359,7 +347,7 @@ object VersionedTable {
           if (attempt < 5) Thread.sleep(50L << attempt)
       }
     }
-    sys.error(s"epoch $version of $root has no readable claim marker — " +
+    sys.error(s"epoch $version of $root has no readable commit record — " +
       "cannot decide ownership of the published epoch (filesystem " +
       "anomaly); refusing to guess, since assuming a loss would " +
       "double-commit this snapshot")
@@ -398,38 +386,17 @@ object VersionedTable {
     }
   }
 
-  /** Stream-batch idempotence marker: the id of the micro-batch that
-    * produced an epoch, committed as a sidecar INSIDE that epoch (via
-    * the [[writeStaged]] hook, so marker and state are atomic). Spark's
-    * foreachBatch RE-DELIVERS the last micro-batch after a restart;
-    * without the marker a fold-style sink (incrementalAggStream,
-    * topKStream) would double-apply it. */
-  private val BatchSidecar = "_graft_stream_batch"
-
-  /** The table's high-water stream batch id, -1 when no epoch was ever
-    * batch-stamped. Walks epochs newest→oldest and returns the FIRST
-    * sidecar found: [[stageEpoch]] carries the marker forward into
-    * every commit, so the newest stamped epoch holds the maximum —
-    * and for histories whose interleaved non-stream commits (a
-    * maintenance tick, a batch merge) predate the carry-forward, the
-    * walk still reaches the stamped epoch below them instead of
-    * resetting to -1, which would re-apply a crash-redelivered
-    * micro-batch. Cost: one exists() per epoch until the first hit —
-    * post-carry-forward that is the latest epoch. */
+  /** The table's stream replay marker — the id of the micro-batch that
+    * produced the current epoch, carried forward by every later
+    * read-modify-write commit; -1 when none (never streamed, or reset
+    * by a blind full replace). Spark's foreachBatch RE-DELIVERS the
+    * last micro-batch after a restart; without the marker a fold-style
+    * sink (incrementalAggStream, topKStream) would double-apply it.
+    * One record read: the carry-forward puts the maximum in the
+    * newest epoch. */
   def lastAppliedBatch(spark: SparkSession, root: String): Long = {
-    val f = fs(spark, root)
-    if (!f.exists(new org.apache.hadoop.fs.Path(root))) return -1L
-    versions(spark, root).reverse.foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/epoch=$v", BatchSidecar)
-      if (f.exists(p)) {
-        val in = f.open(p)
-        try return new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          "UTF-8").trim.toLong
-        finally in.close()
-      }
-    }
-    -1L
+    val v = latestVersion(spark, root)
+    if (v < 0) -1L else record(spark, root, v).batch
   }
 
   /** [[write]] stamped with the producing batch id — and a no-op
@@ -450,14 +417,14 @@ object VersionedTable {
     val spark = df.sparkSession
     if (batchId <= lastAppliedBatch(spark, root)) return None
     // stage ONCE; the claim loop walks version numbers like
-    // [[writeStaged]] (an append always succeeds under contention —
+    // [[writeKeyed]] (an append always succeeds under contention —
     // re-staging the whole batch per lost claim, or capping attempts,
     // would regress both). The marker re-check happens AFTER `next`
     // was resolved each iteration: a same-batch twin either stamped
     // the marker at a version this check reads (→ None), or claims
     // `next` first (→ our claim loses, the next iteration re-checks)
     // — the TOCTOU window of a check-then-blind-claim is closed.
-    var stageDir = stageEpoch(df, root, stampBatch(spark, root, batchId))
+    var stageDir = stageEpoch(df, root, NoMeta, batchId)
     var next = latestVersion(spark, root) + 1
     while (true) {
       if (batchId <= lastAppliedBatch(spark, root)) {
@@ -466,27 +433,15 @@ object VersionedTable {
       }
       claimEpoch(spark, root, stageDir, next) match {
         case Won =>
-          bumpPointer(spark, root, next)
-          primeSchemaCache(spark, root, next, df.schema): Unit
+          publish(spark, root, next, df.schema): Unit
           return Some(next)
         case Lost         => next += 1
         case LostConsumed =>
-          stageDir = stageEpoch(df, root, stampBatch(spark, root, batchId))
+          stageDir = stageEpoch(df, root, NoMeta, batchId)
           next += 1
       }
     }
     sys.error("unreachable")
-  }
-
-  /** Write the batch-id sidecar into a staging dir — shared with
-    * [[ManifestTable.writeBatch]], whose epochs live in the manifest
-    * VersionedTable but carry the same replay marker. */
-  private[sinks] def stampBatch(spark: SparkSession, root: String,
-                                batchId: Long)(dir: String): Unit = {
-    val f = fs(spark, root)
-    val out = f.create(
-      new org.apache.hadoop.fs.Path(dir, BatchSidecar), true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
   }
 
   /** Optimistic retry loop for a read-modify-write commit (the keyed
@@ -500,15 +455,17 @@ object VersionedTable {
     * cannot commit. Bounded attempts: under sustained contention the
     * caller should serialize writers instead of spinning here. */
   private[graft] def rewriteLoop(spark: SparkSession, root: String,
-                          maxAttempts: Int = 12)
-                         (rewrite: Long => DataFrame): Long = {
+                                 meta: JsonNode = NoMeta,
+                                 maxAttempts: Int = 12)
+                                (rewrite: Long => DataFrame): Long = {
     var attempt = 0
     while (attempt < maxAttempts) {
       val base = latestVersion(spark, root)
       require(base >= 0, s"versioned table at $root has no committed epoch")
-      tryCommitAs(rewrite(base), root, base) match {
-        case Some(v) => return v
-        case None    => attempt += 1
+      tryCommitAs(rewrite(base), root, base, meta,
+        record(spark, root, base).batch) match {
+        case Some((v, _)) => return v
+        case None         => attempt += 1
       }
     }
     sys.error(s"versioned table at $root: rewrite lost the commit race " +
@@ -611,23 +568,23 @@ object VersionedTable {
       Some(EpochKey(dir.toUri.toString, st.getModificationTime, fp, bytes))
     } catch { case _: java.io.IOException => None }
 
-  /** Prime the epoch-schema entry for a JUST-PUBLISHED epoch from the
-    * written frame's own schema, so even the FIRST read of a new
-    * version skips the footer-inference job ([[readEpoch]] only helps
-    * re-reads; every commit's read-back paid one inference job per
-    * fresh epoch). File-source relations force every column nullable
+  /** Publish a just-claimed epoch: bump the pointer and prime its
+    * epoch-schema entry from the written frame's own schema, so even
+    * the FIRST read of a new version skips the footer-inference job
+    * ([[readEpoch]] only helps re-reads; every commit's read-back paid
+    * one inference job per fresh epoch). File-source relations force every column nullable
     * (`DataSource` applies `asNullable`), so the primed value is the
     * all-nullable rendering of the written schema — identical to what
     * inference would return for the parquet files this very frame
     * wrote. Best-effort: a failed stat just leaves the lazy path.
     * Returns the epoch's key (None when unstatable). */
-  private def primeSchemaCache(spark: SparkSession, root: String,
-                               version: Long,
-                               schema: org.apache.spark.sql.types.StructType)
+  private def publish(spark: SparkSession, root: String, version: Long,
+                      schema: org.apache.spark.sql.types.StructType)
       : Option[EpochKey] = {
+    bumpPointer(spark, root, version)
     val key = epochKey(spark, root,
       new org.apache.hadoop.fs.Path(s"$root/epoch=$version"))
-    key.foreach(k => EpochCache.put(EpochCache.Schemas, k, allNullable(schema)))
+    key.foreach(EpochCache.put(EpochCache.Schemas, _, allNullable(schema)))
     key
   }
 
@@ -664,21 +621,9 @@ object VersionedTable {
       : DataFrame =
     EpochCache.readParquet(spark, s"$root/epoch=$version", key)
 
-  /** Raw commit stamp of one epoch (ms), None for epochs committed
-    * before stamping existed. */
-  def commitTimestamp(spark: SparkSession, root: String,
-                      version: Long): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/epoch=$version", TsSidecar)
-    val f = fs(spark, root)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        "UTF-8").trim.toLong)
-      finally in.close()
-    }
-  }
+  /** Raw commit stamp of one epoch (ms). */
+  def commitTimestamp(spark: SparkSession, root: String, version: Long): Long =
+    record(spark, root, version).tsMs
 
   /** (version, effective commit ts) for every retained epoch, in
     * version order. Effective = RUNNING MAX of the raw stamps: racing
@@ -686,15 +631,11 @@ object VersionedTable {
     * microscopically out of order vs version numbers — the running
     * max restores the invariant time travel needs (later version ⇒
     * not-earlier timestamp; Delta normalizes its log the same way).
-    * Every retained epoch must be stamped — an unstamped (pre-upgrade)
-    * epoch fails fast, naming `versionAsOf` as the fallback. */
+    * An epoch without a valid record fails fast, naming it. */
   def commitTimestamps(spark: SparkSession, root: String): Seq[(Long, Long)] = {
     var running = Long.MinValue
     versions(spark, root).map { v =>
-      val raw = commitTimestamp(spark, root, v).getOrElse(sys.error(
-        s"epoch $v of $root has no commit timestamp (committed before " +
-          "stamping) — time travel by version (versionAsOf) instead"))
-      running = math.max(running, raw)
+      running = math.max(running, commitTimestamp(spark, root, v))
       v -> running
     }
   }

@@ -43,9 +43,11 @@ object FileBloomIndex {
   }
 
   /** Commit a FULL build: REPLACES the epoch, so rows from a previous
-    * generation cannot survive. */
-  def commitFull(index: DataFrame, root: String): Long =
-    graft.sinks.VersionedTable.write(index, root)
+    * generation cannot survive. `keyType` — the catalog string of the
+    * key column's type the bits hash — rides in the epoch's record. */
+  def commitFull(index: DataFrame, root: String, keyType: String): Long =
+    graft.sinks.VersionedTable.write(index, root,
+      com.fasterxml.jackson.databind.node.TextNode.valueOf(keyType))
 
   /** Upsert a DELTA batch ([[buildFor]] over files the index lacks)
     * into the committed epoch: new files insert, a same-path row is
@@ -54,14 +56,22 @@ object FileBloomIndex {
     * listing they do not appear in. Racing deltas serialize through
     * the CAS loop, so neither is lost. Cost ∝ the index (one epoch
     * rewrite of |files| rows). */
-  def commitDelta(index: DataFrame, root: String): Long =
-    graft.sinks.VersionedTable.rewriteLoop(index.sparkSession, root) { base =>
+  def commitDelta(index: DataFrame, root: String, keyType: String): Long =
+    graft.sinks.VersionedTable.rewriteLoop(index.sparkSession, root,
+      com.fasterxml.jackson.databind.node.TextNode.valueOf(keyType)) { base =>
       val cur = graft.sinks.VersionedTable
         .readVersion(index.sparkSession, root, base)
       cur.join(index.select(col("path")).distinct(), Seq("path"), "left_anti")
         .unionByName(index)
         .select(cur.columns.toIndexedSeq.map(col): _*)
     }
+
+  /** The key type index epoch `version` was built against; None when
+    * its record names none. */
+  def keyType(spark: SparkSession, root: String,
+              version: Long): Option[String] =
+    Option(graft.sinks.VersionedTable.record(spark, root, version).meta
+      .textValue)
 
   def read(spark: SparkSession, root: String): DataFrame =
     graft.sinks.VersionedTable.read(spark, root)

@@ -566,7 +566,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         props.remove(rm.property): Unit
       case add: TableChange.AddColumn =>
         // ALTER TABLE ADD COLUMN: additive evolution is one empty-
-        // batch sidecar-widening commit on the manifest format — no
+        // batch schema-widening commit on the manifest format — no
         // data rewrites, old rows read NULL (top-level and nested
         // struct members alike). Strict-mode surprise columns in
         // APPENDS stay refused; only this declared DDL widens the

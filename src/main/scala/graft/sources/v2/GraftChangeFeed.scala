@@ -477,7 +477,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
         val index =
           if (isManifest) {
             val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
-              graft.sinks.ManifestTable.manifestsRoot(root), v).getOrElse(0L)
+              graft.sinks.ManifestTable.manifestsRoot(root), v)
             new GraftManifestFileIndex(spark, root, pairs, ts,
               readSchema, None)
           } else
@@ -633,12 +633,12 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
     // path — [[checkReadCompatible]]); skipChangeCommits does NOT
     // skip schema changes: every later file carries the new type
     var prev = state(from)
-    var prevEq = graft.sinks.ManifestTable.eqDeletes(spark, root, from)
+    var prevEq = graft.sinks.ManifestTable.metaAt(spark, root, from).eq
     val added = Seq.newBuilder[(String, Long)]
     (from + 1L to to).foreach { v =>
       checkReadCompatible(v)
       val cur = state(v)
-      val curEq = graft.sinks.ManifestTable.eqDeletes(spark, root, v)
+      val curEq = graft.sinks.ManifestTable.metaAt(spark, root, v).eq
       val removed = prev.keySet.diff(cur.keySet)
       val dvChanged = cur.exists { case (p, (_, dv)) =>
         prev.get(p).exists(_._2 != dv) }
@@ -666,7 +666,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
     if (files.isEmpty) return Array.empty
     val readSchema = graft.sinks.ManifestTable.toPhysical(dataSchema)
     val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
-      graft.sinks.ManifestTable.manifestsRoot(root), to).getOrElse(0L)
+      graft.sinks.ManifestTable.manifestsRoot(root), to)
     val index = new GraftManifestFileIndex(spark, root, files, ts,
       readSchema, None)
     val batch = ParquetScanBuilder(spark, index, readSchema, readSchema,

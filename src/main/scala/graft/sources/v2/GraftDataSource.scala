@@ -614,7 +614,6 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
         val cols = graft.sinks.ManifestTable.statsCols(spark, root, version)
         val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
           graft.sinks.ManifestTable.manifestsRoot(root), version)
-          .getOrElse(0L)
         // auto-discovered per-column bloom indexes serve the
         // equality/IN probes envelopes can't (hash-distributed keys)
         val bloomEntries = graft.sinks.ManifestTable
@@ -687,8 +686,8 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
             // .analyzeTable]]): the join-cardinality driver CBO has no
             // other source for; physical-keyed, may cover columns the
             // envelopes don't track (and vice versa)
-            val ndvMap = graft.sinks.ManifestTable.ndvAt(
-              spark, root, version)
+            val ndvMap = graft.sinks.ManifestTable.metaAt(
+              spark, root, version).ndv
             val statCols = (cols ++ ndvMap.keys.filter(
               physToLogical.contains)).distinct
             if (statCols.isEmpty) Map.empty

@@ -5,8 +5,7 @@ import org.apache.spark.sql.types.StructType
 
 /** The driver's one cache over IMMUTABLE metadata: committed epochs
   * and their schemas, input-file schemas, equality-delete resolutions
-  * and probe plans, bloom key-type markers, pruning proofs and MV
-  * rewrite candidates. Each of those costs a Spark job or a few
+  * and probe plans, pruning proofs and MV rewrite candidates. Each of those costs a Spark job or a few
   * filesystem round-trips to recompute and never changes once written.
   *
   * Every entry is keyed by an identity the CALLER derives from the

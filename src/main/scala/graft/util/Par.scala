@@ -22,13 +22,21 @@ object Par {
   def map[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     if (xs.isEmpty) Seq.empty
     else {
-      val pool = Executors.newFixedThreadPool(xs.size)
+      // awaitTermination returns once the workers finish their tasks,
+      // which can be before their threads have exited: join them too
+      val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+      val pool = Executors.newFixedThreadPool(xs.size, (r: Runnable) => {
+        val t = Executors.defaultThreadFactory().newThread(r)
+        threads.add(t)
+        t
+      })
       val results = try {
         xs.map(x => pool.submit(new Callable[B] { def call(): B = f(x) }))
           .map(fu => Try(fu.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
       } finally {
         pool.shutdown()
         pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        threads.forEach(_.join())
       }
       results.map(_.get)
     }

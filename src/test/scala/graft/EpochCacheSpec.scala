@@ -63,7 +63,7 @@ class EpochCacheSpec extends AnyFunSuite {
       def read(root: String): Seq[String] = {
         fresh()
         val df = ManifestTable.read(spark, root)
-        exact(df.select(df.columns.sorted.map(col): _*).collect().toSeq)
+        exact(df.select(df.columns.sorted.toIndexedSeq.map(col): _*).collect().toSeq)
       }
       def step(body: => Unit): Seq[Seq[String]] = {
         fresh(); body

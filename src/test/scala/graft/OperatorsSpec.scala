@@ -1868,7 +1868,7 @@ class OperatorsSpec extends AnyFunSuite {
       }.sortBy(_._1).toSeq
     val fromFooters = normalized(
       FileStats.collectFooters(spark, files, schema, cols)
-        .select("path", FileStats.collect(spark, lay, cols).columns.drop(1): _*))
+        .select("path", FileStats.collect(spark, lay, cols).columns.drop(1).toIndexedSeq: _*))
     val fromScan = normalized(FileStats.collect(spark, lay, cols))
     assert(fromFooters.map(_._1) == fromScan.map(_._1))
     fromFooters.zip(fromScan).foreach { case ((p, f), (_, s)) =>

@@ -869,20 +869,14 @@ class PlanSpec extends AnyFunSuite {
     val statsRoot = util.Scratch.dir("rule_meta_agg_meta")
     sinks.ManifestTable.adopt(spark, lay, statsRoot, Seq("doc_id")): Unit
     // commit `entries` as the adopted root's next manifest version,
-    // carrying the current version's schema and adoption sidecars (the
-    // poisoned entries below mimic footers whose writer omitted stats)
+    // carrying the current version's table metadata (schema and
+    // adopted directory) in its record (the poisoned entries below
+    // mimic footers whose writer omitted stats)
     val manifests = sinks.ManifestTable.manifestsRoot(statsRoot)
-    def commitEntries(entries: org.apache.spark.sql.DataFrame): Unit = {
-      val cur = new org.apache.hadoop.fs.Path(
-        s"$manifests/epoch=${sinks.ManifestTable.latestVersion(spark, statsRoot)}")
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = cur.getFileSystem(conf)
-      sinks.VersionedTable.writeStaged(entries, manifests) { dir =>
-        Seq("_graft_schema.json", "_graft_adopted").foreach(n =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(cur, n),
-            fs, new org.apache.hadoop.fs.Path(dir, n), false, conf): Unit)
-      }: Unit
-    }
+    def commitEntries(entries: org.apache.spark.sql.DataFrame): Unit =
+      sinks.VersionedTable.write(entries, manifests,
+        sinks.VersionedTable.record(spark, manifests,
+          sinks.ManifestTable.latestVersion(spark, statsRoot)).meta): Unit
     val exact = sinks.ManifestTable.manifest(spark, statsRoot,
       sinks.ManifestTable.latestVersion(spark, statsRoot)).collect().toSeq
     val exactSchema = sinks.ManifestTable.manifest(spark, statsRoot,

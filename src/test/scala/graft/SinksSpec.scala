@@ -173,7 +173,8 @@ class SinksSpec extends AnyFunSuite {
     def idx(rows: (String, Long)*) =
       rows.map { case (p, n) => (p, Array(n.toByte), n) }
         .toDF("path", "bloom", "row_count")
-    sources.FileBloomIndex.commitFull(idx(("a", 1L), ("b", 2L), ("c", 3L)), root)
+    sources.FileBloomIndex.commitFull(idx(("a", 1L), ("b", 2L), ("c", 3L)),
+      root, "string")
     // the classic lost-update shape: both merges read base version 0,
     // touch DISJOINT keys, and race the commit. Without the conflict
     // check the loser's rewrite (computed against epoch 0) would
@@ -184,7 +185,7 @@ class SinksSpec extends AnyFunSuite {
       pool.submit(new java.util.concurrent.Callable[Long] {
         def call(): Long = {
           gate.await()
-          sources.FileBloomIndex.commitDelta(idx(up), root)
+          sources.FileBloomIndex.commitDelta(idx(up), root, "string")
         }
       })
     }
@@ -1221,26 +1222,26 @@ class SinksSpec extends AnyFunSuite {
     // to copy-INTO — in the race window a loser's stage can land as a
     // hidden subdirectory inside the winner's published epoch while
     // the rename reports success. Ownership is therefore decided by
-    // the claim marker, not the rename's return.
+    // the claim in the epoch's commit record, not the rename's return.
     val root = java.nio.file.Files
       .createTempDirectory("graft-vt-claim").toString + "/t"
     sinks.VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), root)
     val epoch = new java.io.File(s"$root/epoch=0")
     assert(epoch.isDirectory)
-    // simulate the fallback's outcome: the loser's stage copied inside
-    // the winner's epoch
+    // simulate the fallback's outcome: the loser's stage — its own
+    // record included — copied inside the winner's epoch
     val loserName = ".stage-loser-1234"
     val garbage = new java.io.File(epoch, loserName)
     assert(garbage.mkdir())
-    val w = new java.io.FileWriter(new java.io.File(garbage, "_graft_claim"))
-    w.write(loserName); w.close()
+    val w = new java.io.FileWriter(new java.io.File(garbage, "_graft_commit.json"))
+    w.write(s"""{"claim":"$loserName","ts":0,"batch":-1,"meta":null}""")
+    w.close()
     val claim = sinks.VersionedTable.verifyClaim(spark, root, 0, loserName)
     assert(claim == sinks.VersionedTable.LostConsumed,
-      s"the loser must detect the foreign marker, got $claim")
+      s"the loser must detect the foreign record, got $claim")
     assert(!garbage.exists(), "the loser must sweep its copied-in stage")
-    // the true owner (whose name the epoch's marker carries) verifies Won
-    val owner = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(epoch, "_graft_claim").toPath), "UTF-8").trim
+    // the true owner (whose name the epoch's record carries) verifies Won
+    val owner = sinks.VersionedTable.record(spark, root, 0).claim
     assert(owner.startsWith(".stage-"))
     assert(sinks.VersionedTable.verifyClaim(spark, root, 0, owner) ==
       sinks.VersionedTable.Won)

@@ -1027,7 +1027,7 @@ class StreamingSpec extends AnyFunSuite {
     // startingTimestamp: resolve to the earliest commit at-or-after
     // v2's stamp — stream v2 and the later append only
     val ts2 = graft.sinks.VersionedTable.commitTimestamp(spark,
-      ManifestTable.manifestsRoot(src), 2L).get
+      ManifestTable.manifestsRoot(src), 2L)
     drain(s"$base/ts", s"$base/ckpt-ts",
       Map("startingTimestamp" -> ts2.toString))
     assert(ks(spark.read.format("graft").load(s"$base/ts")) ==
