@@ -31,7 +31,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // planner-integrated data skipping: plain filters over directories
     // registered with graft.plans.GraftTables prune files against
-    // their adopted manifest and bloom indexes at optimization time
+    // their adopted manifest's envelopes and bloom bits at
+    // optimization time
     ext.injectOptimizerRule(session => graft.plans.StatsPruneRule(session))
     // metadata-only whole-table aggregates: COUNT/MIN/MAX over a
     // manifest table or a registered directory collapse to the

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.StructType
   * .adopt]] mirrors a directory's files in a manifest table and a
   * one-time [[GraftTables.register]] names it, a plain
   * `spark.read.parquet(dir).filter(...)` prunes files at PLANNING time
-  * with no API opt-in, from the manifest's per-file envelopes and the
-  * table's bloom indexes ([[graft.sinks.ManifestTable.buildBloom]]).
+  * with no API opt-in, from the manifest's per-file envelopes and
+  * bloom bits ([[graft.sinks.ManifestTable.buildBloom]]).
   *
   * Soundness is exclusion-by-proof over the scan's OWN listing: a
   * file is dropped only when a manifest entry for that exact file
@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.StructType
   * so a kept-but-unmatching file costs I/O, never wrong rows.
   *
   * Scale shape: the planning-time cost is metadata-scale queries over
-  * the |files|-row manifest (and bloom index) per registered scan —
-  * the same listing-order cost Delta pays against its log,
+  * the |files|-row manifest per registered scan — the same
+  * listing-order cost Delta pays against its log,
   * independent of data volume. The pruned index DELEGATES to the
   * original file index, so directory-partition pruning, schema, and
   * locality compose unchanged.
@@ -96,9 +96,9 @@ final class GraftPrunedFileIndex(delegate: FileIndex,
 }
 
 /** The optimizer rule: for a Filter directly over a registered
-  * parquet scan, consult its manifest and bloom indexes and replace
-  * the relation's file index with a pruned delegate. Injected by
-  * [[graft.GraftExtensions]]; runs inside the operator-optimization
+  * parquet scan, consult its manifest's envelopes and bloom bits and
+  * replace the relation's file index with a pruned delegate. Injected
+  * by [[graft.GraftExtensions]]; runs inside the operator-optimization
   * fixed point, so the marker class above keeps it one-shot per scan
   * and the metadata queries it issues (which re-enter the optimizer
   * on an unregistered scan) terminate trivially. */
@@ -376,12 +376,12 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
   /** VERSION-KEYED proofs: the planning-time metadata queries
     * (collects per registered scan) are re-issued for every plan of a
     * hot table, so identical proofs memoize. The key carries the
-    * CURRENT VERSION of the metadata proven against (the manifest, or
-    * the bloom index — one cheap FS resolution each, no Spark job)
-    * plus the canonicalized predicate — a commit bumps the version,
-    * which changes the key, so staleness is structural: a cached
-    * entry can only ever be served for the exact epoch it was proven
-    * against (Delta caches its snapshot state the same way). Entries
+    * CURRENT VERSION of the manifest proven against (one cheap FS
+    * resolution, no Spark job) plus the canonicalized predicate — a
+    * commit bumps the version, which changes the key, so staleness is
+    * structural: a cached entry can only ever be served for the exact
+    * epoch it was proven against (Delta caches its snapshot state the
+    * same way). Entries
     * live in [[graft.util.EpochCache]]; an unresolvable predicate
     * simply skips the cache. The second identical query on an
     * unchanged table issues ZERO metadata jobs (PlanSpec-counted). */
@@ -409,32 +409,41 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Canonical paths of indexed files whose bloom filter over column
-    * `c` (the index at `bloomRoot`) denies EVERY key `cond` probes on
-    * `c` — empty when `cond` probes no key there. Rows for files
-    * outside the scan exclude nothing from a listing they don't
-    * appear in. */
+  /** Canonical paths of files whose bloom bits in manifest `m` (the
+    * `<column>_bloom` cells [[graft.sinks.ManifestTable.buildBloom]]
+    * fills) deny EVERY key `cond` probes on some column — empty when
+    * `cond` probes no column with bits. A NULL cell (the file is not
+    * indexed) proves nothing. */
   private[graft] def excludedByBloom(spark: SparkSession, cond: Expression,
-                                     c: String, bloomRoot: String): Set[String] = {
-    val keys = extractBounds(cond)._3.getOrElse(c, Nil)
-    if (keys.isEmpty) Set.empty
-    else proven(bloomRoot,
-        graft.sinks.VersionedTable.latestVersion(spark, bloomRoot), cond) {
-      val idx = graft.sources.FileBloomIndex.read(spark, bloomRoot)
-      val all = idx.select("path").collect()
+                                     m: DataFrame): Set[String] = {
+    import graft.sinks.ManifestTable.bloomCol
+    val denials = extractBounds(cond)._3.toSeq.collect {
+      case (c, keys) if m.columns.contains(bloomCol(c)) =>
+        val bits = org.apache.spark.sql.functions.col(bloomCol(c))
+        bits.isNotNull &&
+          !graft.sources.FileBloomIndex.mightContain(bits, keys)
+    }
+    if (denials.isEmpty) Set.empty
+    else {
+      graft.functions.VectorExpressions.ensureRegistered(spark)
+      m.filter(denials.reduce(_ || _)).select("path").collect()
         .map(r => GraftTables.canon(r.getString(0))).toSet
-      val kept = graft.sources.FileBloomIndex.candidateFiles(idx, keys)
-        .collect().map(r => GraftTables.canon(r.getString(0))).toSet
-      all -- kept
     }
   }
 
+  /** Canonical paths of files one manifest PROVES cannot match `cond`:
+    * its envelope proofs over `statsCols` plus its bloom proofs. */
+  private[graft] def excludedByManifest(spark: SparkSession, cond: Expression,
+                                        m: DataFrame,
+                                        statsCols: Seq[String]): Set[String] =
+    excludedByEnvelopes(spark, cond, m, statsCols) ++
+      excludedByBloom(spark, cond, m)
+
   /** Canonical paths of files the registered directory's manifest
-    * PROVES cannot match `cond`: envelope proofs over its entries,
-    * plus bloom proofs from each of its valid indexes on a probed
-    * column. Any failure (a missing manifest, schema drift) logs and
-    * excludes nothing — pruning is an optimization, never a
-    * correctness dependency. */
+    * PROVES cannot match `cond` ([[excludedByManifest]]), memoized per
+    * (root, version, predicate). Any failure (a missing manifest,
+    * schema drift) logs and excludes nothing — pruning is an
+    * optimization, never a correctness dependency. */
   private[graft] def provablyExcluded(spark: SparkSession, cond: Expression,
                                       entry: GraftTables.Entry): Set[String] = {
     import graft.sinks.ManifestTable
@@ -442,19 +451,10 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     try {
       val v = ManifestTable.latestVersion(spark, entry.root)
       if (v < 0) Set.empty
-      else {
-        val envelopes = proven(entry.root, v, cond) {
-          excludedByEnvelopes(spark, cond, ManifestTable.manifest(spark, entry.root, v),
-            ManifestTable.statsCols(spark, entry.root, v))
-        }
-        val probed = extractBounds(cond)._3.keySet
-        val blooms =
-          if (probed.isEmpty) Nil
-          else ManifestTable.bloomsValid(spark, entry.root,
-            ManifestTable.tableSchema(spark, entry.root, v))
-            .filter { case (c, _) => probed.contains(c) }
-        blooms.foldLeft(envelopes) { case (ex, (c, br)) =>
-          ex ++ excludedByBloom(spark, cond, c, br) }
+      else proven(entry.root, v, cond) {
+        excludedByManifest(spark, cond,
+          ManifestTable.manifest(spark, entry.root, v),
+          ManifestTable.statsCols(spark, entry.root, v))
       }
     } catch {
       case e: Exception =>

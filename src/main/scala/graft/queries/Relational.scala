@@ -642,10 +642,10 @@ object Relational extends QueryModule {
   /** Bloom-indexed point lookup (sources.FileBloomIndex): the corpus is
     * laid out hash-partitioned on doc_id (the layout where min/max
     * envelopes prune NOTHING — every file spans the id range), the
-    * directory is adopted and a per-file Bloom index built beside its
-    * manifest ([[graft.sinks.ManifestTable.buildBloom]] — only the
-    * files it lacks), and a plain IN probe opens only files whose
-    * bloom admits a key. The oracle is the plain row filter — pruning
+    * directory is adopted and per-file Bloom bits built into its
+    * manifest entries ([[graft.sinks.ManifestTable.buildBloom]] — only
+    * the files that lack them), and a plain IN probe opens only files
+    * whose bloom admits a key. The oracle is the plain row filter — pruning
     * must be invisible in results. */
   def qBloomLookup(spark: SparkSession, dir: String): DataFrame = {
     val lay = graft.util.Scratch.dir("bloom_lookup")

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BinaryType, StructType}
 import com.fasterxml.jackson.databind.JsonNode
 import graft.util.EpochCache
 
@@ -89,8 +89,8 @@ object ManifestTable {
     * this file relies on: scheme AND authority dropped in two steps
     * ("hdfs://nn:8020/t/x" → "/t/x", "file:/tmp/x" → "/tmp/x" — a
     * single scheme-strip would leave "/nn:8020/…"). One definition,
-    * shared by the landing join and the bloom refinement, so the two
-    * sides of a path comparison can never desynchronize. */
+    * shared by the landing join and the deletion-vector reads, so the
+    * two sides of a path comparison can never desynchronize. */
   private def canonPathCol(c: Column): Column =
     regexp_replace(
       regexp_replace(c, "^[a-zA-Z0-9+.-]+://[^/]*", ""),
@@ -178,8 +178,18 @@ object ManifestTable {
   private final case class Collected(schema: StructType,
                                      rows: Seq[org.apache.spark.sql.Row],
                                      full: Boolean)
-  private val Manifests = new EpochCache.Kind[Collected](c =>
-    256L + 32L * c.rows.length * c.schema.length)
+  /** A cell weighs 32 bytes, except a binary one (a file's bloom
+    * bits — [[buildBloom]]), which weighs its length: at 16 KiB a
+    * cell, counting bits as 32 bytes would let the budget retain
+    * hundreds of times what it claims to bound. */
+  private val Manifests = new EpochCache.Kind[Collected]({ c =>
+    val bins = c.schema.fields.indices
+      .filter(c.schema(_).dataType == BinaryType)
+    256L + 32L * c.rows.length * (c.schema.length - bins.length) +
+      c.rows.iterator.map(r => bins.iterator.map(i =>
+        if (r.isNullAt(i)) 32L
+        else r.getAs[Array[Byte]](i).length.toLong).sum).sum
+  })
 
   /** The cached collection of one epoch; on a miss, a fresh one — full
     * width under the byte gate, else (only when `narrowOnMiss`) the
@@ -1096,7 +1106,7 @@ object ManifestTable {
         s"schema ${schema.fieldNames.sorted.mkString(",")}")
     val rows = landFiles(conform(df, schema), root, statsCols(spark, root, v))
     commitLoop(spark, root) { (base, meta) =>
-      Some((manifest(spark, root, base).unionByName(rows), meta))
+      Some((withLanded(manifest(spark, root, base), rows), meta))
     }.get
   }
 
@@ -1610,10 +1620,19 @@ object ManifestTable {
       // unreferenced, vacuum's TTL sweep collects them.
       commitLoop(spark, root, batch = Some(batchId)) { (base, meta) =>
         if (isReplay(spark, root, batchId)) None
-        else Some((manifest(spark, root, base).unionByName(rows), meta))
+        else Some((withLanded(manifest(spark, root, base), rows), meta))
       }
     }
   }
+
+  /** Carried entries `m` plus freshly landed ones. Landed entries lack
+    * the bloom columns (NULL: not indexed yet, see [[buildBloom]]) and
+    * any stats column a racing evolution added (NULL: unknown,
+    * conservative); the projection pins `m`'s column set, so stats a
+    * racing drop removed never union back in. */
+  private def withLanded(m: DataFrame, landed: DataFrame): DataFrame =
+    m.unionByName(landed, allowMissingColumns = true)
+      .select(m.columns.toIndexedSeq.map(col): _*)
 
   /** The one manifest commit loop — the [[VersionedTable]] rewrite
     * loop over manifests: compute the next manifest AND its [[Meta]]
@@ -1694,7 +1713,7 @@ object ManifestTable {
     * column, NULL cells) degrade to touched. One metadata-scale
     * broadcast join: |files| × |distinct batch keys| envelope checks,
     * distributed. */
-  private def touchedPaths(spark: SparkSession, root: String,
+  private def touchedPaths(spark: SparkSession,
                            m: DataFrame, keys: DataFrame,
                            keyCols: Seq[String],
                            dataSchema: StructType): Seq[String] = {
@@ -1720,60 +1739,54 @@ object ManifestTable {
           .select(col("path")).distinct()
           .collect().map(_.getString(0)).sorted.toSeq
       }
-    bloomRefine(spark, root, byEnvelope, keys, keyCols, dataSchema)
+    bloomRefine(spark, m, byEnvelope, keys, keyCols, dataSchema)
   }
 
-  /** Intersect the envelope-touched set with per-file BLOOM membership
-    * where a committed `_bloom_<keyCol>` index covers a key column —
-    * the case envelopes cannot serve: on a hash-distributed key every
-    * file's [min,max] spans every probe, so the envelope search
-    * honestly degrades to rewriting the whole table; the blooms the
-    * reads already consult ([[buildBloom]]) answer the same
-    * point-membership question for the touched-file search, making
-    * point-key merges file-granular on hash layouts too.
+  /** Intersect the envelope-touched set with the per-file BLOOM bits
+    * `m` carries for a key column — the case envelopes cannot serve:
+    * on a hash-distributed key every file's [min,max] spans every
+    * probe, so the envelope search honestly degrades to rewriting the
+    * whole table; the bits the reads already consult ([[buildBloom]])
+    * answer the same point-membership question for the touched-file
+    * search, making point-key merges file-granular on hash layouts
+    * too.
     *
     * Soundness: blooms have no false negatives, so dropping a no-hit
-    * INDEXED file can never lose a matched key; files the index does
-    * not cover (appended after the last [[buildBloom]] call, or the
-    * whole table when no index exists) stay conservatively touched.
-    * Cost: one broadcast of the touched files' bloom rows × |distinct
-    * batch keys| membership probes per indexed key column. */
-  private def bloomRefine(spark: SparkSession, root: String,
+    * file can never lose a matched key; files without bits (landed
+    * after the last [[buildBloom]] call, or every file when none was
+    * built) stay conservatively touched. Cost: one broadcast of the
+    * distinct batch key hashes × the touched files' bits, per indexed
+    * key column. */
+  private def bloomRefine(spark: SparkSession, m: DataFrame,
                           envelopeTouched: Seq[String], keys: DataFrame,
                           keyCols: Seq[String],
                           dataSchema: StructType): Seq[String] = {
-    // bloom index roots are keyed by PHYSICAL column name (they index
-    // file bytes, which rename never rewrites) — translate before the
-    // lookup, keep the LOGICAL name for probing the keys frame
-    val physToLogical = keyCols.map(k =>
-      physicalFor(dataSchema, k) -> k).toMap
-    val indexed = bloomsValid(spark, root, dataSchema).collect {
-      case (pc, br) if physToLogical.contains(pc) =>
-        (physToLogical(pc), br) }
+    // bloom columns are keyed by PHYSICAL column name (the bits index
+    // file bytes, which rename never rewrites); the keys frame is
+    // probed by the LOGICAL name
+    val indexed = keyCols.map(k => k -> bloomCol(physicalFor(dataSchema, k)))
+      .filter { case (_, bc) => m.columns.contains(bc) }
     if (indexed.isEmpty || envelopeTouched.isEmpty) return envelopeTouched
     graft.functions.VectorExpressions.ensureRegistered(spark)
-    // ONE pass for ALL indexed key columns (a composite key used to
-    // pay one serial semi-join + probe-join pair PER column): the
-    // indexes union tagged by column, each column's distinct key
-    // HASHES union likewise, then one semi join restricts to the
-    // touched set, one probe join finds the hits, and one anti join
-    // yields every (column, path) a covering index proves key-free —
-    // those paths drop. Conventions carried over verbatim: index rows
-    // carry input_file_name URIs vs the manifest's canonical paths
-    // (the shared [[canonPathCol]] strip); the touched-set
-    // restriction is a broadcast SEMI JOIN, not an isin() (an In with
-    // 100k literal children would blow up the driver); probes cast to
-    // the TABLE's column type (the index hashed stored values — a
-    // narrower-typed key would hash differently; NULL keys probe
-    // nothing); and the DISTINCT KEYS broadcast, never the bloom rows
-    // (numBits/8 bytes × 100k files would be GBs).
+    // ONE pass for ALL indexed key columns (a composite key would
+    // otherwise pay one serial semi-join + probe-join pair PER
+    // column): the touched files' bits union tagged by column, each
+    // column's distinct key HASHES union likewise, then one probe
+    // join finds the hits and one anti join yields every (column,
+    // path) whose bits prove it key-free — those paths drop. The
+    // touched-set restriction is a broadcast SEMI JOIN, not an isin()
+    // (an In with 100k literal children would blow up the driver);
+    // probes cast to the TABLE's column type (the bits hash stored
+    // values under the schema's type — a narrower-typed key would
+    // hash differently; NULL keys probe nothing); and the DISTINCT
+    // KEYS broadcast, never the bits (numBits/8 bytes × 100k files
+    // would be GBs).
     val spk = spark
     import spk.implicits._
     val touchedDf = envelopeTouched.toDF("path")
-    val idxAll = indexed.map { case (c, br) =>
-      graft.sources.FileBloomIndex.read(spark, br)
-        .withColumn("path", canonPathCol(col("path")))
-        .select(lit(c).as("c"), col("path"), col("bloom"))
+    val idxAll = indexed.map { case (c, bc) =>
+      m.filter(col(bc).isNotNull)
+        .select(lit(c).as("c"), col("path"), col(bc).as("bloom"))
     }.reduce(_ unionByName _)
       .join(broadcast(touchedDf), Seq("path"), "left_semi")
     val keyHashes = indexed.map { case (c, _) =>
@@ -1877,7 +1890,7 @@ object ManifestTable {
     val schema = tableSchema(spark, root, base)
     val dvByPath: Map[String, (Option[String], Long)] =
       states.map(s => s._1 -> ((s._2, s._3))).toMap
-    val touched = touchedPaths(spark, root, m, keys, keyCols, schema)
+    val touched = touchedPaths(spark, m, keys, keyCols, schema)
     readFilesDv(spark, schema, touched.map(p => (p, dvByPath(p)._1)),
       touched.map(p => dvByPath(p)._2).sum)
   }
@@ -1916,7 +1929,7 @@ object ManifestTable {
             .map(_.copy(nullable = true)))
       val cols = schema.fieldNames.toSeq
       val keys = batch.select(keyCols.map(col): _*).distinct()
-      val touched = touchedPaths(spark, root, m, keys, keyCols, baseSchema)
+      val touched = touchedPaths(spark, m, keys, keyCols, baseSchema)
       // touched files read WITH their deletion vectors applied — a
       // rewrite that read raw would resurrect deleted rows; the
       // rewritten files then carry no vector (the rewrite purges it)
@@ -1928,7 +1941,7 @@ object ManifestTable {
       val replacement = rewrite(touchedRows, batch)
         .select(cols.map(col): _*)
       val newRows = landFiles(physSelect(replacement, schema), root, stats)
-      Some((m.filter(!col("path").isin(touched: _*)).unionByName(newRows),
+      Some((withLanded(m.filter(!col("path").isin(touched: _*)), newRows),
         meta.copy(schema = schema, eq = Nil)))
     }.get
 
@@ -2035,10 +2048,11 @@ object ManifestTable {
       val next = StructType(
         schema.fields.filterNot(f => drops.contains(f.name)) ++ adds2)
       val m = manifest(spark, root, base)
-      // stat triplets are keyed by the dropped fields' PHYSICAL names
+      // stat triplets and bloom bits are keyed by the dropped fields'
+      // PHYSICAL names
       val statDrop = drops.flatMap { c =>
         val pc = physicalFor(schema, c)
-        Seq(s"${pc}_min", s"${pc}_max", s"${pc}_nulls")
+        Seq(s"${pc}_min", s"${pc}_max", s"${pc}_nulls", bloomCol(pc))
       }.filter(m.columns.contains)
       Some((m.drop(statDrop: _*), meta.copy(schema = next)))
     }.get
@@ -2083,10 +2097,9 @@ object ManifestTable {
     * metadata-only: the next version reuses the current manifest's
     * FILES verbatim under a NARROWER schema (schema-on-read by name
     * simply stops projecting the column — zero data I/O), and the
-    * dropped columns' stat triplets leave the manifest rows so no
-    * future landing, proof, or maintenance references a column the
-    * schema lost. A lingering `_bloom_<col>` index is inert (no valid
-    * predicate can name the column). Re-ADDING a dropped name while
+    * dropped columns' stat triplets and bloom bits leave the manifest
+    * rows so no future landing, proof, or maintenance references a
+    * column the schema lost. Re-ADDING a dropped name while
     * live files still carry it maps the new column to a FRESH
     * physical name — see [[alterColumns]]'s resurrection guard. */
   def dropColumns(spark: SparkSession, root: String,
@@ -2097,7 +2110,7 @@ object ManifestTable {
     * mapping: the next version commits the SAME manifest under a
     * schema whose field carries the new logical name and (frozen in
     * field metadata) its original PHYSICAL name, which is what data
-    * files, manifest stat columns, and bloom index roots keep using.
+    * files, manifest stat columns, and bloom bits keep using.
     * Zero data I/O, stats and indexes stay valid, time travel reads
     * pre-rename versions under their own schemas' old names. A
     * rename BACK to the physical name drops the mapping entry. */
@@ -2385,24 +2398,18 @@ object ManifestTable {
     * refuses (the layout's hash is type-sensitive — hash(5: int)
     * ≠ hash(5L)); a column keying PENDING equality deletes refuses
     * (the key files carry narrow-typed tuples — compact first); and
-    * the column's bloom index, if any, stops serving — the index
-    * records its build-time key type and consumers skip a mismatched
-    * one (xxhash64 of the wide probe value would never match the
-    * narrow-hashed bits, so a stale index would FALSELY exclude
-    * files), with the directory swept AFTER the successful commit (a
-    * FAILED widen must not destroy a still-valid index, and a racing
-    * narrow rebuild is neutralized by the type check rather than a
-    * delete-vs-build race). Narrowing and non-primitive changes
+    * the column's bloom bits drop in the same commit (xxhash64 of a
+    * wide probe value never matches narrow-hashed bits, so stale bits
+    * would FALSELY exclude files; the next [[buildBloom]] re-indexes
+    * under the wide type). Narrowing and non-primitive changes
     * refuse — they would need per-file rewrites. Top-level only. */
   def widenColumnType(spark: SparkSession, root: String, name: String,
-                      to: org.apache.spark.sql.types.DataType): Long = {
-    var physName: String = null
-    val v = commitLoop(spark, root) { (base, meta) =>
+                      to: org.apache.spark.sql.types.DataType): Long =
+    commitLoop(spark, root) { (base, meta) =>
       val schema = meta.schema
       validateWiden(schema, meta.eq.flatMap(_.keys).toSet, name, to)
       val phys = physicalFor(schema, name)
-      physName = phys
-      val m = manifest(spark, root, base)
+      val m = manifest(spark, root, base).drop(bloomCol(phys))
       val m2 =
         if (!m.columns.contains(s"${phys}_min")) m
         else m.withColumn(s"${phys}_min", col(s"${phys}_min").cast(to))
@@ -2410,19 +2417,14 @@ object ManifestTable {
       Some((m2, meta.copy(schema = StructType(schema.fields.map(x =>
         if (x.name != name) x else x.copy(dataType = to))))))
     }.get
-    // post-commit cleanup only — correctness comes from the read-side
-    // type check ([[blooms]] filters a mismatched build-time type)
-    val bp = new Path(bloomRootFor(root, physName))
-    if (fs(spark, root).exists(bp)) fs(spark, root).delete(bp, true): Unit
-    v
-  }
 
   /** [[widenColumnType]] for a NESTED struct member (dotted path) —
-    * strictly simpler than top level: stat triplets, bloom indexes,
-    * and bucket keys are all top-level concerns, so a nested widen is
-    * pure schema surgery (the vectorized reader upcasts the narrow
-    * leaf pages per file exactly as at top level). A struct keying
-    * pending equality deletes refuses like every nested evolution. */
+    * strictly simpler than top level: stat triplets and bucket keys
+    * are top-level concerns, so a nested widen is schema surgery (the
+    * vectorized reader upcasts the narrow leaf pages per file exactly
+    * as at top level) plus dropping any bloom bits on the enclosing
+    * column, whose hashed type it changes. A struct keying pending
+    * equality deletes refuses like every nested evolution. */
   def widenColumnTypePath(spark: SparkSession, root: String,
                           path: Seq[String],
                           to: org.apache.spark.sql.types.DataType)
@@ -2433,7 +2435,9 @@ object ManifestTable {
     commitLoop(spark, root) { (base, meta) =>
       val next = validateNestedWiden(meta.schema,
         meta.eq.flatMap(_.keys).toSet, path, to)
-      Some((manifest(spark, root, base), meta.copy(schema = next)))
+      Some((manifest(spark, root, base)
+        .drop(bloomCol(physicalFor(meta.schema, path.head))),
+        meta.copy(schema = next)))
     }.get
   }
 
@@ -2814,7 +2818,7 @@ object ManifestTable {
           entries.groupBy(_.keys).map { case (keyCols, es) =>
             val keysDf = spark.read.parquet(es.map(_.path): _*)
               .select(keyCols.map(col): _*).distinct()
-            keyCols -> touchedPaths(spark, root, m, keysDf, keyCols,
+            keyCols -> touchedPaths(spark, m, keysDf, keyCols,
               schema).toSet
           }
         Some(entries.map { e =>
@@ -2936,7 +2940,7 @@ object ManifestTable {
           spark.read.parquet(e.path)
             .select(keyCols.map(col) :+ lit(e.seq).as("_eq_seq"): _*))
           .reduce(_ unionByName _)
-        val touched = touchedPaths(spark, root, mCand,
+        val touched = touchedPaths(spark, mCand,
           keysDf.select(keyCols.map(col): _*).distinct(), keyCols, schema)
           .toSet
         val tStates = cand.filter(s => touched.contains(s._1))
@@ -3096,8 +3100,7 @@ object ManifestTable {
       else {
         val m = manifest(spark, root, base)
         val next = landed match {
-          case Some(l) => m.unionByName(l, allowMissingColumns = true)
-            .select(m.columns.toIndexedSeq.map(col): _*)
+          case Some(l) => withLanded(m, l)
           case None => m
         }
         Some((next, meta.copy(eq =
@@ -3173,7 +3176,7 @@ object ManifestTable {
             matched.select(col("_p"), col("_i"))) match {
             case None       => m // nothing matched — nothing lands either
             case Some(next) =>
-              next.unionByName(
+              withLanded(next,
                 landFiles(physSelect(updated, schema), root, stats))
           }
         } finally matched.unpersist(): Unit
@@ -3260,7 +3263,7 @@ object ManifestTable {
       if (batchId.exists(isReplay(spark, root, _))) None
       else {
         val (m, states) = effectiveManifest(spark, root, base)
-        val touched = touchedPaths(spark, root, m, keys, keyCols,
+        val touched = touchedPaths(spark, m, keys, keyCols,
           meta.schema).toSet
         val touchedStates = states.filter(s => touched.contains(s._1))
         val live = readFilesDvPos(spark, schema,
@@ -3273,15 +3276,8 @@ object ManifestTable {
         val b = meta.schema
         val attemptSchema = StructType(b.fields ++
           batchNewFields.filterNot(f => b.fieldNames.contains(f.name)))
-        // allowMissingColumns absorbs a base that gained stats columns
-        // (concurrent evolution — the batch's absent cells surface as
-        // NULL = unknown, conservative); the final projection pins the
-        // BASE manifest's column set, so stat triplets a concurrent
-        // dropColumns removed can never union back in
-        val next = vectorPositions(spark, root, m, states, touchedStates,
-            positions)
-          .getOrElse(m).unionByName(landed, allowMissingColumns = true)
-          .select(m.columns.toIndexedSeq.map(col): _*)
+        val next = withLanded(vectorPositions(spark, root, m, states,
+          touchedStates, positions).getOrElse(m), landed)
         Some((next, meta.copy(schema = attemptSchema, eq = Nil)))
       }
     }
@@ -3311,17 +3307,16 @@ object ManifestTable {
     lazy val landed = landFiles(upserts, root, statsCols(spark, root, v))
     commitLoop(spark, root) { (base, meta) =>
       val (m, states) = effectiveManifest(spark, root, base)
-      val touched = touchedPaths(spark, root, m, keys, keyCols,
+      val touched = touchedPaths(spark, m, keys, keyCols,
         meta.schema).toSet
       val touchedStates = states.filter(s => touched.contains(s._1))
       val live = readFilesDvPos(spark, schema,
         touchedStates.map(s => (s._1, s._2)), touchedStates.map(_._3).sum)
       val positions = live.join(keys, keyCols, "left_semi")
         .select(col("_p"), col("_i"))
-      // allowMissingColumns + base-column pinning: see [[mergeMorCore]]
-      Some((vectorPositions(spark, root, m, states, touchedStates, positions)
-        .getOrElse(m).unionByName(landed, allowMissingColumns = true)
-        .select(m.columns.toIndexedSeq.map(col): _*), meta.copy(eq = Nil)))
+      Some((withLanded(vectorPositions(spark, root, m, states,
+        touchedStates, positions).getOrElse(m), landed),
+        meta.copy(eq = Nil)))
     }.get
   }
 
@@ -3508,9 +3503,9 @@ object ManifestTable {
       val fresh = listed.filterNot(f => known.contains(f._1))
       val gone = known -- listed.map(_._1)
       if (fresh.isEmpty && gone.isEmpty) None
-      else Some((manifest(spark, root, base)
-        .filter(!col("path").isin(gone.toSeq: _*))
-        .unionByName(describe(fresh, meta.schema)), meta))
+      else Some((withLanded(manifest(spark, root, base)
+        .filter(!col("path").isin(gone.toSeq: _*)),
+        describe(fresh, meta.schema)), meta))
     }
   }
 
@@ -3709,14 +3704,28 @@ object ManifestTable {
           s"both main (v$base0 -> v$base) and branch $name (at " +
             s"v$bv) evolved the schema since the fork — align one " +
             "side before a merge publish")
+      // both sides' entries take one column set: a column one side
+      // lacks (bloom bits it never built) reads NULL there, and bits
+      // of a column whose type differs between the sides drop — they
+      // hash the other side's type
+      val (mM, mB) = (manifest(spark, root, base), manifest(spark, bRoot, bv))
+      val stale = sM.fields.filter(f => sB.fields.exists(g =>
+        physicalName(g) == physicalName(f) && g.dataType != f.dataType))
+        .map(f => bloomCol(physicalName(f))).toSet
+      val entryCols = (mM.columns ++ mB.columns).distinct
+        .filterNot(stale.contains).toIndexedSeq
+      def aligned(m: DataFrame, other: DataFrame) =
+        m.select(entryCols.map(c =>
+          if (m.columns.contains(c)) col(c)
+          else lit(null).cast(other.schema(c).dataType).as(c)): _*)
       // per-path state: presence + (size, dv sidecar) — any row-level
       // change to a file changes exactly this
       def sideify(m: DataFrame, st: String, rw: String) =
         m.select(col("path"),
           struct(col("size"), col("dv_path")).as(st),
           struct(m.columns.toIndexedSeq.map(col): _*).as(rw))
-      val j = sideify(manifest(spark, root, base), "sm", "rm")
-        .join(sideify(manifest(spark, bRoot, bv), "sb", "rb"),
+      val j = sideify(aligned(mM, mB), "sm", "rm")
+        .join(sideify(aligned(mB, mM), "sb", "rb"),
           Seq("path"), "full_outer")
         .join(manifest(spark, root, base0).select(col("path"),
           struct(col("size"), col("dv_path")).as("s0")),
@@ -3960,9 +3969,9 @@ object ManifestTable {
         val newRows = landFiles(physSelect(
           transform(touchedRows, coalesce(cond, lit(false))), schema),
           root, stats)
-        kept.filter(!col("path").isin(touched: _*)).unionByName(newRows)
+        withLanded(kept.filter(!col("path").isin(touched: _*)), newRows)
       }
-      Some((if (extraRows == null) next else next.unionByName(extraRows()),
+      Some((if (extraRows == null) next else withLanded(next, extraRows()),
         meta.copy(eq = Nil)))
     }.get
 
@@ -4322,8 +4331,8 @@ object ManifestTable {
         else if (sortCols.isEmpty) rowsIn.repartition(nFiles)
         else rowsIn.repartitionByRange(nFiles, sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)
-      Some((mb.filter(!col("path").isin(todo: _*))
-        .unionByName(landFiles(physSelect(laid, curSchema), root, curStats,
+      Some((withLanded(mb.filter(!col("path").isin(todo: _*)),
+        landFiles(physSelect(laid, curSchema), root, curStats,
           sortWithin =
             if (hilbert) Nil
             else sortCols.map(c => physicalName(curSchema(c))))),
@@ -4331,96 +4340,72 @@ object ManifestTable {
     }
   }
 
-  /** Per-file BLOOM index on `keyCol` — point-lookup pruning for the
+  /** Per-file BLOOM bits on `keyCol` — point-lookup pruning for the
     * case envelopes cannot serve: a hash-distributed key's min/max
     * spans every file, so `key = x` probes open the whole table
-    * unless a membership structure answers per file. The index lives
-    * beside the table (`root/_bloom_<col>`, a [[graft.sources
-    * .FileBloomIndex]] epoch table) and `format("graft")` reads
-    * consult it automatically for equality/IN conjuncts — no reader
-    * options ([[blooms]] discovery).
+    * unless a membership structure answers per file. The bits live in
+    * the manifest entries, as the nullable binary column
+    * `<physical column>_bloom` ([[bloomCol]]); NULL means the file is
+    * not indexed and is never pruned by bloom. Carried entries keep
+    * their bits, landed entries start NULL, and a commit that changes
+    * the column's type drops them — so vacuum, clones, branches,
+    * restore and time travel need no bloom code, and a version's bits
+    * always hash its own schema's type. `format("graft")` reads, the
+    * registered-directory rule and the keyed row-level ops consult
+    * them for equality/IN probes — no reader options.
     *
-    * INCREMENTAL by construction: each call indexes only the current
-    * version's files missing from the committed index (cost ∝ new
-    * files — manifest data files are immutable and never re-land
-    * under an old name, so merge-by-path delta commits are exactly
-    * sound here); rows for vacuumed files exclude nothing from a
-    * listing they don't appear in. Returns the committed index
-    * version, None when every live file is already indexed. */
+    * INCREMENTAL: one ordinary commit fills bits for the live files
+    * that have none (cost ∝ those files; a CAS retry rebuilds them
+    * under its new base). Adopted roots accept it: it changes no file
+    * set. Returns the committed version, None when every live file
+    * already has bits.
+    *
+    * Size: a file's bits weigh numBits/8 bytes (16 KiB at the
+    * default) in EVERY later version's manifest, and every later
+    * commit rewrites them with the entry. A bloomed manifest over
+    * ~500 files passes the 8 MiB full-width cache gate
+    * ([[ManifestFullMaxBytes]]), so its commits stage through a Spark
+    * write instead of a driver-local one. */
   def buildBloom(spark: SparkSession, root: String, keyCol: String,
-                 numBits: Int = 1 << 17, numHashes: Int = 5): Option[Long] = {
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"manifest table at $root has no committed version")
-    val schemaV = tableSchema(spark, root, v)
-    require(schemaV.fieldNames.contains(keyCol),
-      s"$keyCol is not a table column")
-    // the index reads (and is named by) the column's PHYSICAL name —
-    // stable under RENAME COLUMN, matching what data files carry
-    val physCol = physicalFor(schemaV, keyCol)
-    val br = bloomRootFor(root, physCol)
-    val curType = schemaV(keyCol).dataType.catalogString
-    // a pre-widen index hashes the NARROW type — its bits can never
-    // serve wide probes; rebuild from scratch under the current type.
-    // An index whose records name no type counts as a mismatch too:
-    // delta-appending wide-hashed rows onto unknown-typed bits would
-    // legitimize a poisoned index forever
-    val bv = VersionedTable.latestVersion(spark, br)
-    if (bv >= 0 &&
-        !graft.sources.FileBloomIndex.keyType(spark, br, bv).contains(curType))
-      fs(spark, root).delete(new Path(br), true): Unit
-    val live = filesAt(spark, root, v)
-    val todo =
-      if (VersionedTable.latestVersion(spark, br) < 0) live
-      else {
-        // index rows carry input_file_name URIs; the manifest carries
-        // canonical paths — compare canonical on both sides
-        val indexed = graft.sources.FileBloomIndex.read(spark, br)
-          .select(col("path")).collect()
-          .map(r => canon(r.getString(0))).toSet
-        live.filterNot(indexed.contains)
-      }
-    if (todo.isEmpty) return None
-    val idx = graft.sources.FileBloomIndex.buildFor(spark, todo, physCol,
-      numBits, numHashes)
-    // the key type rides in the index epoch's own record — atomic
-    // with the bits it describes
-    Some(
-      if (VersionedTable.latestVersion(spark, br) < 0)
-        graft.sources.FileBloomIndex.commitFull(idx, br, curType)
-      else graft.sources.FileBloomIndex.commitDelta(idx, br, curType))
-  }
-
-  private[graft] def bloomRootFor(root: String, c: String): String =
-    s"$root/_bloom_$c"
-
-  /** [[blooms]] restricted to indexes whose build-time key type still
-    * matches the schema's — the read-side half of type widening's
-    * bloom contract. xxhash64 is type-sensitive: a wide probe's hash
-    * never matches bits built from narrow values, so a post-widen
-    * index would FALSELY exclude files. An index epoch whose record
-    * names no type is a MISMATCH (fail-safe): it stops serving until
-    * the next [[buildBloom]] (the maintenance tick) rebuilds it. */
-  private[graft] def bloomsValid(spark: SparkSession, root: String,
-                                 schema: StructType)
-      : Seq[(String, String)] =
-    blooms(spark, root).filter { case (pc, br) =>
-      val built = graft.sources.FileBloomIndex.keyType(spark, br,
-        VersionedTable.latestVersion(spark, br))
-      schema.fields.find(f => physicalName(f) == pc)
-        .exists(f => built.contains(f.dataType.catalogString))
+                 numBits: Int = 1 << 17, numHashes: Int = 5): Option[Long] =
+    // row-preserving: no CHECK re-validation
+    commitLoop(spark, root, validateCons = false, adopting = true) {
+      (base, meta) =>
+        require(meta.schema.fieldNames.contains(keyCol),
+          s"$keyCol is not a table column")
+        // the bits read (and are named by) the column's PHYSICAL name —
+        // stable under RENAME COLUMN, matching what data files carry.
+        // Every attempt builds under ITS base's type: bits of a type a
+        // racing widen replaced must never commit
+        val key = meta.schema(keyCol)
+        val physCol = physicalName(key)
+        val bc = bloomCol(physCol)
+        val m0 = manifest(spark, root, base)
+        val m =
+          if (m0.columns.contains(bc)) m0
+          else m0.withColumn(bc, lit(null).cast(BinaryType))
+        val todo = m.filter(col(bc).isNull).select(col("path")).collect()
+          .map(_.getString(0)).toSeq
+        if (todo.isEmpty) None
+        else {
+          val bits = graft.sources.FileBloomIndex.buildFor(spark, todo,
+              key.copy(name = physCol, dataType = physicalType(key.dataType)),
+              numBits, numHashes)
+            // filter rows carry input_file_name URIs; entries carry
+            // canonical paths
+            .select(canonPathCol(col("path")).as("path"),
+              col("bloom").as("_bits"))
+          // a shuffle join: the bits (numBits/8 bytes a file) reach the
+          // staged manifest without passing through the driver
+          Some((m.join(bits.hint("merge"), Seq("path"), "left")
+            .withColumn(bc, coalesce(col(bc), col("_bits")))
+            .select(m.columns.toIndexedSeq.map(col): _*), meta))
+        }
     }
 
-  /** Committed bloom indexes beside this table: (column, index root). */
-  private[graft] def blooms(spark: SparkSession,
-                            root: String): Seq[(String, String)] = {
-    val f = fs(spark, root)
-    val p = new Path(root)
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("_bloom_")).toSeq
-      .map(n => n.stripPrefix("_bloom_") -> s"$root/$n")
-      .filter { case (_, r) => VersionedTable.latestVersion(spark, r) >= 0 }
-  }
+  /** The manifest column holding the bloom bits of physical column
+    * `physCol` ([[buildBloom]]). */
+  private[graft] def bloomCol(physCol: String): String = s"${physCol}_bloom"
 
   /** Table HISTORY — the DESCRIBE HISTORY/DETAIL ergonomics: one row
     * per retained version with its commit timestamp (running-max

@@ -34,8 +34,7 @@ import graft.util.EpochCache
   *
   * Blind writes ([[write]]) always succeed — racing writers serialize
   * onto distinct consecutive versions, none lost. Read-modify-write
-  * commits ([[ManifestTable]]'s manifest swaps, the bloom index's keyed
-  * upsert through [[rewriteLoop]]) are SERIALIZABLE via
+  * commits ([[ManifestTable]]'s manifest swaps) are SERIALIZABLE via
   * [[tryCommitAs]]: the rewrite is computed against base version B and
   * committed only as B+1; if another writer claimed B+1 first, the
   * claim fails and the operation recomputes against the new current
@@ -75,8 +74,7 @@ object VersionedTable {
     *     when none — every commit carries its base's unless it stamps
     *     its own, and a blind full replace resets it;
     *   - `meta`: the owner's object — a manifest table's schema and
-    *     registries, a bloom index's key type, an index's build
-    *     params — JSON null when the owner has none. */
+    *     registries — JSON null when the owner has none. */
   final case class Commit(claim: String, tsMs: Long, batch: Long,
                           meta: JsonNode)
 
@@ -156,9 +154,9 @@ object VersionedTable {
     * orphaned staging directory, never a half-visible epoch. Safe
     * under concurrent writers — each lands on its own version. `meta`
     * rides in the epoch's [[Commit]] record, so an owner's metadata
-    * (e.g. an index's build params) commits atomically with the epoch
-    * it describes. A blind full-epoch replace is a stream RESTART: its
-    * record resets the replay marker to -1. */
+    * commits atomically with the epoch it describes. A blind
+    * full-epoch replace is a stream RESTART: its record resets the
+    * replay marker to -1. */
   def write(df: DataFrame, root: String, meta: JsonNode = NoMeta): Long =
     writeKeyed(df, root, meta)._1
 
@@ -442,34 +440,6 @@ object VersionedTable {
       }
     }
     sys.error("unreachable")
-  }
-
-  /** Optimistic retry loop for a read-modify-write commit (the keyed
-    * bloom-index upsert, [[graft.sources.FileBloomIndex.commitDelta]]):
-    * pin the current version as the base, compute the rewrite AGAINST
-    * THAT EPOCH (readVersion, not read — the plan must not silently
-    * re-resolve to a newer epoch between planning and commit), and
-    * publish only as base+1. A conflict (someone else claimed base+1)
-    * recomputes against the new current epoch, so every committed
-    * rewrite incorporated its predecessor — the lost-update anomaly
-    * cannot commit. Bounded attempts: under sustained contention the
-    * caller should serialize writers instead of spinning here. */
-  private[graft] def rewriteLoop(spark: SparkSession, root: String,
-                                 meta: JsonNode = NoMeta,
-                                 maxAttempts: Int = 12)
-                                (rewrite: Long => DataFrame): Long = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion(spark, root)
-      require(base >= 0, s"versioned table at $root has no committed epoch")
-      tryCommitAs(rewrite(base), root, base, meta,
-        record(spark, root, base).batch) match {
-        case Some((v, _)) => return v
-        case None         => attempt += 1
-      }
-    }
-    sys.error(s"versioned table at $root: rewrite lost the commit race " +
-      s"$maxAttempts times — serialize the writers or shard the table")
   }
 
   /** CHANGE FEED between two committed epochs — the Delta

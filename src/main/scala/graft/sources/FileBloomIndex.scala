@@ -2,8 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Per-file Bloom membership indexes — the EQUALITY complement of
+/** Per-file Bloom membership filters — the EQUALITY complement of
   * [[FileStats]]' min/max envelopes. A range predicate prunes files by
   * envelope, but an equality probe on a high-cardinality key (doc id,
   * fingerprint, uuid) almost never excludes a file by range on an
@@ -21,67 +22,37 @@ import org.apache.spark.sql.functions._
   * select them anyway.
   *
   * Scale shape: the build is one grouped aggregate per file batch
-  * (map-side, bloom state `numBits/8` bytes per file); the index is
-  * one row per file (metadata-scale, like the manifest) and commits
-  * as [[graft.sinks.VersionedTable]] epochs: a full build replaces
-  * the epoch, a delta upserts by path through the epoch table's
-  * read-modify-write CAS loop. [[graft.sinks.ManifestTable.buildBloom]]
-  * maintains one beside a manifest table (adopted directories
-  * included), indexing only the files it lacks.
+  * (map-side, bloom state `numBits/8` bytes per file). The bits live
+  * in the manifest entries of a [[graft.sinks.ManifestTable]]
+  * ([[graft.sinks.ManifestTable.buildBloom]] fills them for the files
+  * that have none), so they version, vacuum, clone and time-travel
+  * with the file list they describe.
   */
 object FileBloomIndex {
 
-  /** Build index rows (path, bloom, row_count) for an explicit file
-    * batch: cost ∝ those files, not the table. */
-  def buildFor(spark: SparkSession, files: Seq[String], keyCol: String,
+  /** Build filter rows (path, bloom, row_count) for an explicit file
+    * batch: cost ∝ those files, not the table. `key` is read with its
+    * declared type, so files written under a narrower type (before a
+    * widening) hash the values a probe of the declared type hashes. */
+  def buildFor(spark: SparkSession, files: Seq[String], key: StructField,
                numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame = {
     graft.functions.VectorExpressions.ensureRegistered(spark)
-    spark.read.parquet(files: _*).groupBy(input_file_name().as("path"))
+    spark.read.schema(StructType(Seq(key))).parquet(files: _*)
+      .groupBy(input_file_name().as("path"))
       .agg(graft.functions.VectorExpressions
-        .bloomBuild(xxhash64(col(keyCol)), numBits, numHashes).as("bloom"),
+        .bloomBuild(xxhash64(col(key.name)), numBits, numHashes).as("bloom"),
         count(lit(1)).as("row_count"))
   }
 
-  /** Commit a FULL build: REPLACES the epoch, so rows from a previous
-    * generation cannot survive. `keyType` — the catalog string of the
-    * key column's type the bits hash — rides in the epoch's record. */
-  def commitFull(index: DataFrame, root: String, keyType: String): Long =
-    graft.sinks.VersionedTable.write(index, root,
-      com.fasterxml.jackson.databind.node.TextNode.valueOf(keyType))
-
-  /** Upsert a DELTA batch ([[buildFor]] over files the index lacks)
-    * into the committed epoch: new files insert, a same-path row is
-    * replaced. The index must exist ([[commitFull]] bootstraps it).
-    * Rows for files since deleted stay, and exclude nothing from a
-    * listing they do not appear in. Racing deltas serialize through
-    * the CAS loop, so neither is lost. Cost ∝ the index (one epoch
-    * rewrite of |files| rows). */
-  def commitDelta(index: DataFrame, root: String, keyType: String): Long =
-    graft.sinks.VersionedTable.rewriteLoop(index.sparkSession, root,
-      com.fasterxml.jackson.databind.node.TextNode.valueOf(keyType)) { base =>
-      val cur = graft.sinks.VersionedTable
-        .readVersion(index.sparkSession, root, base)
-      cur.join(index.select(col("path")).distinct(), Seq("path"), "left_anti")
-        .unionByName(index)
-        .select(cur.columns.toIndexedSeq.map(col): _*)
-    }
-
-  /** The key type index epoch `version` was built against; None when
-    * its record names none. */
-  def keyType(spark: SparkSession, root: String,
-              version: Long): Option[String] =
-    Option(graft.sinks.VersionedTable.record(spark, root, version).meta
-      .textValue)
-
-  def read(spark: SparkSession, root: String): DataFrame =
-    graft.sinks.VersionedTable.read(spark, root)
+  /** Whether the filter `bits` might hold any of the probe keys. */
+  private[graft] def mightContain(bits: Column, keys: Seq[Column]): Column = {
+    require(keys.nonEmpty, "probe at least one key")
+    keys.map(k => graft.functions.VectorExpressions
+      .bloomMightContain(bits, xxhash64(k))).reduce(_ || _)
+  }
 
   /** Files that MIGHT contain any of the probe keys (no false
     * negatives; fpp-bounded false positives). */
-  def candidateFiles(index: DataFrame, keys: Seq[Column]): DataFrame = {
-    require(keys.nonEmpty, "probe at least one key")
-    val hits = keys.map(k => graft.functions.VectorExpressions
-      .bloomMightContain(col("bloom"), xxhash64(k))).reduce(_ || _)
-    index.filter(hits).select(col("path"))
-  }
+  def candidateFiles(index: DataFrame, keys: Seq[Column]): DataFrame =
+    index.filter(mightContain(col("bloom"), keys)).select(col("path"))
 }

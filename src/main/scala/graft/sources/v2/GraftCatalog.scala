@@ -683,7 +683,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "RENAME COLUMN is supported on manifest-format tables only")
       renames.foreach { case (from, to) =>
         // metadata-only via the name mapping — data files, manifest
-        // stat columns, and bloom index roots keep the frozen
+        // stat columns, and bloom bits keep the frozen
         // PHYSICAL name, so nothing rewrites and pruning stays live
         graft.sinks.ManifestTable.renameColumn(spark, loc, from, to): Unit
         // the maintenance/stat declarations follow the LOGICAL name
@@ -803,8 +803,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * [[graft.sinks.ManifestTable.cloneTo]] into a managed location,
     * descriptor copied with the location re-pointed — the clone
     * inherits the source's declared maintenance policy (clusterBy,
-    * bloomIndex) but none of its built indexes. Returns the clone's
-    * location. */
+    * bloomIndex) and, with its manifest entries, their bloom bits.
+    * Returns the clone's location. */
   private[v2] def cloneRegistered(srcName: String, dstName: String): String = {
     val srcLoc = locationOf(srcName)
     require(graft.sinks.ManifestTable.exists(spark, srcLoc),

@@ -34,8 +34,8 @@ import graft.plans.StatsPruneRule
   *     `readVersion` API surfaced as reader syntax).
   *   - DATA SKIPPING INSIDE THE SOURCE: a manifest table's file index
   *     receives the pushed data filters (the DSv2 `listFiles`
-  *     contract) and drops files the manifest envelopes and bloom
-  *     indexes PROVE unmatching — the same proof engine as the planner
+  *     contract) and drops files the manifest's envelopes and bloom
+  *     bits PROVE unmatching — the same proof engine as the planner
   *     rule ([[StatsPruneRule]]), but running inside the
   *     source, so it needs no session extension and composes with any
   *     plan shape that pushes filters. Parquet row-group pushdown,
@@ -614,10 +614,6 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
         val cols = graft.sinks.ManifestTable.statsCols(spark, root, version)
         val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
           graft.sinks.ManifestTable.manifestsRoot(root), version)
-        // auto-discovered per-column bloom indexes serve the
-        // equality/IN probes envelopes can't (hash-distributed keys)
-        val bloomEntries = graft.sinks.ManifestTable
-          .bloomsValid(spark, root, physSchema)
         // bucket-transform predicate pruning serves point/IN probes on
         // a bucketed key from metadata alone — NOT gated on the SPJ
         // conf (pruning costs nothing; only bucket-grained task
@@ -651,8 +647,7 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
         def subIndex(files: Seq[(String, Long)],
                      exactRowsByPath: Map[String, Long] = Map.empty) =
           new GraftManifestFileIndex(spark, root, files, ts, physSchema,
-            if (cols.isEmpty) None else Some((m, cols)), bloomEntries,
-            bucketPrune,
+            Some((m, cols)), bucketPrune,
             if (exactRowsByPath.isEmpty) None
             else Some((() => limitCell.get, exactRowsByPath)),
             if (exactRowsByPath.isEmpty) None
@@ -669,7 +664,11 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
           val physToLogical = dataSchema.fields.map(f =>
             (graft.sinks.ManifestTable.physicalFor(dataSchema, f.name),
               f.name)).toMap
-          val physAttrs = (cols ++ bloomEntries.map(_._1) ++
+          // bloom bits serve the equality/IN probes envelopes can't
+          // (hash-distributed keys)
+          val blooms = physToLogical.keys.filter(c =>
+            m.columns.contains(graft.sinks.ManifestTable.bloomCol(c)))
+          val physAttrs = (cols ++ blooms ++
             graft.sinks.ManifestTable.bucketSpec(dataSchema)
               .map(_._1).getOrElse(Nil)).distinct
           val attrs = physAttrs.flatMap(physToLogical.get).distinct
@@ -861,22 +860,19 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
 }
 
 /** The shared manifest-envelope and bloom proofs, guarded against
-  * optimizer re-entry; a failed proof excludes nothing. */
-private[v2] object GraftManifestProofs {
-  def excluded(spark: SparkSession, cond: Expression,
-               stats: org.apache.spark.sql.DataFrame,
-               cols: Seq[String]): Set[String] =
-    guarded(StatsPruneRule.excludedByEnvelopes(spark, cond, stats, cols))
-
-  def bloomExcluded(spark: SparkSession, cond: Expression,
-                    col: String, bloomRoot: String): Set[String] =
-    guarded(StatsPruneRule.excludedByBloom(spark, cond, col, bloomRoot))
-
-  private def guarded(proof: => Set[String]): Set[String] = {
+  * optimizer re-entry; a failed proof logs and excludes nothing. */
+private[v2] object GraftManifestProofs
+    extends org.apache.spark.internal.Logging {
+  def excluded(spark: SparkSession, root: String, cond: Expression,
+               manifest: org.apache.spark.sql.DataFrame,
+               statsCols: Seq[String]): Set[String] = {
     StatsPruneRule.inMetadataQuery.set(true)
-    try proof
-    catch { case _: Exception => Set.empty[String] }
-    finally StatsPruneRule.inMetadataQuery.set(false)
+    try StatsPruneRule.excludedByManifest(spark, cond, manifest, statsCols)
+    catch {
+      case e: Exception =>
+        logWarning(s"graft manifest pruning skipped for $root: $e")
+        Set.empty[String]
+    } finally StatsPruneRule.inMetadataQuery.set(false)
   }
 }
 
@@ -891,16 +887,15 @@ final case class GraftTopN(physCol: String, ascending: Boolean,
   * (the Delta TahoeFileIndex shape): paths and sizes come from the
   * manifest rows, the modification timestamp from the version's
   * commit stamp, and pushed data filters prune against the manifest's
-  * own envelopes. At 100k+ files the stat-per-file a generic
-  * InMemoryFileIndex issues is the dominant planning cost; here
+  * own envelopes and bloom bits. At 100k+ files the stat-per-file a
+  * generic InMemoryFileIndex issues is the dominant planning cost; here
   * planning touches only the |files|-row manifest that was read to
   * resolve the version anyway. */
 final class GraftManifestFileIndex(
     sparkSession: SparkSession, root: String,
     filesAndSizes: Seq[(String, Long)], commitTsMs: Long,
     dataSchema: StructType,
-    manifestStats: Option[(org.apache.spark.sql.DataFrame, Seq[String])],
-    bloomEntries: Seq[(String, String)] = Nil,
+    manifest: Option[(org.apache.spark.sql.DataFrame, Seq[String])],
     bucketPrune: Option[(Seq[String], Int, Map[String, Long])] = None,
     limitPrune: Option[(() => Option[Int], Map[String, Long])] = None,
     topNPrune: Option[(() => Option[GraftTopN],
@@ -1012,11 +1007,9 @@ final class GraftManifestFileIndex(
       if (dataFilters.isEmpty) Set.empty
       else {
         val cond = dataFilters.reduce(And)
-        manifestStats.map { case (stats, cols) =>
-          GraftManifestProofs.excluded(sparkSession, cond, stats, cols)
-        }.getOrElse(Set.empty) ++
-          bloomEntries.flatMap { case (c, br) =>
-            GraftManifestProofs.bloomExcluded(sparkSession, cond, c, br) }
+        manifest.map { case (m, cols) =>
+          GraftManifestProofs.excluded(sparkSession, root, cond, m, cols)
+        }.getOrElse(Set.empty)
       }
     val buckets: Option[Set[Long]] =
       if (dataFilters.isEmpty) None else allowedBuckets(dataFilters)

@@ -28,7 +28,10 @@ import org.apache.spark.sql.graft.GraftSqlShims
   *     restored (the no-op proof a scheduled tick relies on);
   *   - [[graft.sinks.ManifestTable.buildBloom]] for each `bloomIndex`
   *     column — incremental by construction (only unindexed files),
-  *     None when every live file is indexed.
+  *     None when every live file is indexed. Each build that fills
+  *     bits is its own manifest version, and `keepVersions` counts it:
+  *     with `keepVersions` = 2, a tick that re-clusters and then builds
+  *     one column keeps just those two versions, not the pre-tick one.
   *
   * Returns (optimize result, bloom results) — all None means the tick
   * found nothing to do. Manifest-format tables only: epoch tables'

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
 /** RUNTIME FILE FILTERING (dynamic "partition" pruning at the FILE
   * grain — the Iceberg `SparkBatchQueryScan` shape): the scan declares
   * the columns the manifest can prove things about (tracked stats
-  * envelopes, bloom indexes, bucket keys), and Spark's dynamic-pruning
+  * envelopes, bloom bits, bucket keys), and Spark's dynamic-pruning
   * planner feeds it the BUILD side's join-key values at runtime —
   * a `dim.filter(...) ⋈ fact` join then reads only the fact files
   * whose envelopes/blooms/buckets can hold the surviving keys, files

@@ -936,10 +936,17 @@ class CatalogSpec extends AnyFunSuite {
         (col("id") % 50).cast("float").as("v")),
       loc, Seq("k"))
     // a bloom on the to-be-widened column: its bits hash int values —
-    // it must DROP with the widen, or wide probes would falsely
+    // they must DROP with the widen, or wide probes would falsely
     // exclude files
+    val bk = sinks.ManifestTable.bloomCol("k")
+    def bits(v: Long): Option[Long] = {
+      val m = sinks.ManifestTable.manifest(spark, loc, v)
+      if (!m.columns.contains(bk)) None
+      else Some(m.filter(col(bk).isNotNull).count())
+    }
     sinks.ManifestTable.buildBloom(spark, root = loc, keyCol = "k")
-    assert(sinks.ManifestTable.blooms(spark, loc).exists(_._1 == "k"))
+    assert(bits(sinks.ManifestTable.latestVersion(spark, loc)) ==
+      Some(sinks.ManifestTable.filesAt(spark, loc, 0).size.toLong))
     spark.sql(s"CREATE TABLE graftc.db.widen USING graft LOCATION '$loc'")
     val files0 = sinks.ManifestTable.filesAt(spark, loc, 0)
     spark.sql("ALTER TABLE graftc.db.widen ALTER COLUMN k TYPE BIGINT")
@@ -947,8 +954,8 @@ class CatalogSpec extends AnyFunSuite {
     val v2 = sinks.ManifestTable.latestVersion(spark, loc)
     assert(sinks.ManifestTable.filesAt(spark, loc, v2) == files0,
       "widening must rewrite nothing")
-    assert(!sinks.ManifestTable.blooms(spark, loc).exists(_._1 == "k"),
-      "the narrow-hashed bloom index must drop with the widen")
+    assert(bits(v2).isEmpty,
+      "the narrow-hashed bloom bits must drop with the widen")
     // old int32 pages upcast per file; a post-widen insert lands wide
     spark.sql("INSERT INTO graftc.db.widen " +
       "SELECT 5000000000, CAST(1.5 AS DOUBLE)")
@@ -958,6 +965,15 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.sql(
       "SELECT count(*) FROM graftc.db.widen WHERE k = 5000000000")
       .head().getLong(0) == 1L)
+    // a rebuild indexes every live file — narrow pages upcast to the
+    // wide type they are probed with — and bloom-pruned probes stay exact
+    assert(sinks.ManifestTable.buildBloom(spark, loc, "k").nonEmpty)
+    val v3 = sinks.ManifestTable.latestVersion(spark, loc)
+    assert(bits(v3) ==
+      Some(sinks.ManifestTable.filesAt(spark, loc, v3).size.toLong))
+    Seq(7L, 999L, 5000000000L).foreach(k => assert(spark.sql(
+      s"SELECT count(*) FROM graftc.db.widen WHERE k = $k")
+      .head().getLong(0) == 1L, s"k = $k"))
     // time travel reads the old version under its own (narrow) type
     assert(spark.sql("SELECT k FROM graftc.db.widen VERSION AS OF 0 " +
       "WHERE k = 7").schema("k").dataType ==

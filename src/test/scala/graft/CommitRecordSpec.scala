@@ -67,9 +67,10 @@ class CommitRecordSpec extends AnyFunSuite {
     assert(VersionedTable.writeBatch(Seq((2L, "b")).toDF("k", "s"), plain, 0L)
       .nonEmpty)
 
-    val bloom = ManifestTable.bloomRootFor(root, "k")
+    // the bloom build is one more manifest epoch: no side table
+    assert(!new java.io.File(root).list().exists(_.contains("bloom")))
     val roots = Seq(ManifestTable.manifestsRoot(root),
-      ManifestTable.manifestsRoot(adopted), bloom, plain)
+      ManifestTable.manifestsRoot(adopted), plain)
     roots.foreach { r =>
       val epochs = new java.io.File(r).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
@@ -90,8 +91,8 @@ class CommitRecordSpec extends AnyFunSuite {
     assert(ManifestTable.metaAt(spark, adopted,
       ManifestTable.latestVersion(spark, adopted)).adopted
       .contains(new org.apache.hadoop.fs.Path(lay).toUri.getPath))
-    assert(sources.FileBloomIndex.keyType(spark, bloom,
-      VersionedTable.latestVersion(spark, bloom)).contains("bigint"))
+    assert(ManifestTable.manifest(spark, root, cur)
+      .filter(col(ManifestTable.bloomCol("k")).isNull).count() == 0L)
     assert(VersionedTable.lastAppliedBatch(spark, plain) == 0L)
     def snapshot() = roots.flatMap(r => VersionedTable.versions(spark, r)
       .map(v => (r, v) -> VersionedTable.record(spark, r, v))) ++

@@ -193,6 +193,22 @@ class EpochCacheSpec extends AnyFunSuite {
     assert(EpochCache.retainedBytes <= EpochCache.BudgetBytes)
   }
 
+  test("a bloomed manifest entry weighs at least its bits: binary cells count by their length") {
+    val root = s"${tmp("graft-cache-bloom")}/t"
+    ManifestTable.create(spark.range(0, 400).select(col("id").as("k"))
+      .repartition(4), root, Seq("k"))
+    val v = ManifestTable.buildBloom(spark, root, "k").get
+    val bits = ManifestTable.manifest(spark, root, v)
+      .select(col(ManifestTable.bloomCol("k"))).as[Array[Byte]].collect()
+      .map(_.length.toLong).sum
+    assert(bits >= 4L * ((1 << 17) / 8), s"bits: $bits")
+    EpochCache.clear()
+    // one accessor read caches the epoch's full-width entry
+    assert(ManifestTable.filesAt(spark, root, v).size == 4)
+    assert(EpochCache.retainedBytes >= bits,
+      s"retained ${EpochCache.retainedBytes} bytes for $bits bytes of bits")
+  }
+
   test("driver-staged epochs carry the footer codec a task-staged epoch does, and reject the codecs the task path rejects") {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile

@@ -2118,8 +2118,10 @@ class OperatorsSpec extends AnyFunSuite {
     assert(n2 >= 2, "wave 2 indexes only its own files")
     // the folded metadata covers every live file…
     assert(files().size == n1 + n2)
-    assert(sources.FileBloomIndex.read(spark,
-      ManifestTable.bloomRootFor(root, "doc_id")).count() == n1 + n2)
+    assert(ManifestTable.manifest(spark, root,
+        ManifestTable.latestVersion(spark, root))
+      .filter(col(ManifestTable.bloomCol("doc_id")).isNotNull)
+      .count() == n1 + n2)
     // …and pruned reads through it stay exact across both waves
     plans.GraftTables.register(land, root)
     try {
@@ -2138,7 +2140,9 @@ class OperatorsSpec extends AnyFunSuite {
     val lay = util.Scratch.dir("fbi_lay")
     docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
     val idx = FileBloomIndex.buildFor(spark, sources.FileManifest.listFiles(spark, lay)
-      .select("path").as[String].collect().toSeq, "doc_id")
+      .select("path").as[String].collect().toSeq,
+      org.apache.spark.sql.types.StructField("doc_id",
+        org.apache.spark.sql.types.LongType))
     val total = idx.count()
     assert(total >= 6, s"hash layout should spread over files, got $total")
     val cand = FileBloomIndex.candidateFiles(idx, Seq(lit(3L)))
@@ -2191,12 +2195,13 @@ class OperatorsSpec extends AnyFunSuite {
         .select("path").as[String].collect().toSet
       assert(opened1 < live.size && opened2 < live.size,
         s"both passes must prune ($opened1, $opened2 of ${live.size})")
-      // the manifest holds exactly the live files; the bloom index
-      // keeps the first pass's dead rows, which exclude nothing
-      assert(ManifestTable.filesAt(spark, root,
-        ManifestTable.latestVersion(spark, root)).toSet == live)
-      assert(sources.FileBloomIndex.read(spark,
-        ManifestTable.bloomRootFor(root, "doc_id")).count() == 2L * live.size)
+      // the manifest holds exactly the live files, each with bits;
+      // the first pass's dead files left with their entries
+      val m = ManifestTable.manifest(spark, root,
+        ManifestTable.latestVersion(spark, root))
+      assert(m.select("path").as[String].collect().toSet == live)
+      assert(m.filter(col(ManifestTable.bloomCol("doc_id")).isNotNull)
+        .count() == live.size.toLong)
     } finally plans.GraftTables.unregister(lay)
   }
 
@@ -2205,10 +2210,11 @@ class OperatorsSpec extends AnyFunSuite {
     val docs = sources.Tables.documents(spark, sf)
     val land = util.Scratch.dir("maint2_land")
     val root = util.Scratch.dir("maint2_meta")
+    // the tick's head version: the bloom build's commit over the
+    // adopt's, or the adopt's alone; None when neither committed
     def tick(): Option[Long] = {
       val v = ManifestTable.adopt(spark, land, root, Seq("doc_id"))
-      ManifestTable.buildBloom(spark, root, "doc_id"): Unit
-      v
+      ManifestTable.buildBloom(spark, root, "doc_id").orElse(v)
     }
     def live(): Set[String] = sources.FileManifest.listFiles(spark, land)
       .select("path").as[String].collect().toSet
@@ -2230,9 +2236,10 @@ class OperatorsSpec extends AnyFunSuite {
       // compacted ones: dead entries exclude nothing, unknown files are
       // kept — reads stay exact
       assert(gotRange() == wantRange)
-      // one tick: compacted files described, dead entries dropped
+      // one tick: compacted files described and dead entries dropped
+      // in one commit, the compacted files' bits built in a second
       val t2 = tick()
-      assert(t2 == Some(t1.get + 1))
+      assert(t2 == Some(t1.get + 2))
       assert(ManifestTable.filesAt(spark, root, t2.get).toSet == live())
       // point and range reads are exact and open no dead paths
       assert(gotRange() == wantRange)

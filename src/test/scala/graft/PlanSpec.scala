@@ -556,6 +556,8 @@ class PlanSpec extends AnyFunSuite {
     val bloomRoot = util.Scratch.dir("rule_bloom_meta")
     sinks.ManifestTable.adopt(spark, hashLay, bloomRoot, Seq("doc_id")): Unit
     sinks.ManifestTable.buildBloom(spark, bloomRoot, "doc_id"): Unit
+    // the bits ride in the adopted manifest's entries — no side table
+    assert(!new java.io.File(bloomRoot).list().exists(_.contains("bloom")))
     try {
       val want = docs.filter(col("doc_id").between(10L, 40L))
         .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -167,41 +167,49 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("versioned table: racing merges serialize — neither update is lost") {
+    import sinks.ManifestTable
     val root = java.nio.file.Files.createTempDirectory("graft-vtrm").toString + "/t"
-    // the epoch table's one keyed upsert: the bloom index's delta
-    // commit, keyed by path, through the read-modify-write CAS loop
-    def idx(rows: (String, Long)*) =
-      rows.map { case (p, n) => (p, Array(n.toByte), n) }
-        .toDF("path", "bloom", "row_count")
-    sources.FileBloomIndex.commitFull(idx(("a", 1L), ("b", 2L), ("c", 3L)),
-      root, "string")
-    // the classic lost-update shape: both merges read base version 0,
-    // touch DISJOINT keys, and race the commit. Without the conflict
-    // check the loser's rewrite (computed against epoch 0) would
-    // overwrite the winner's epoch, silently discarding its update.
+    ManifestTable.create(Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      .repartition(2), root, Seq("k"))
+    val files0 = ManifestTable.filesAt(spark, root, 0).toSet
+    val bc = ManifestTable.bloomCol("k")
+    // the classic lost-update shape on the manifest log (an epoch
+    // table): a bloom build and an append both read base version 0
+    // and race the commit. Without the conflict check the loser's
+    // manifest (computed against version 0) would bury the winner's
+    // — the appended file or the built bits silently lost.
     val gate = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val futs = Seq(("a", 10L), ("c", 30L)).map { up =>
+    val futs = Seq(
+      () => ManifestTable.buildBloom(spark, root, "k").get,
+      () => ManifestTable.write(Seq((3L, "c")).toDF("k", "v"), root)
+    ).map { op =>
       pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = {
-          gate.await()
-          sources.FileBloomIndex.commitDelta(idx(up), root, "string")
-        }
+        def call(): Long = { gate.await(); op() }
       })
     }
     gate.countDown()
     val got = futs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).sorted
     pool.shutdown()
     assert(got == Seq(1L, 2L), s"claimed versions: $got")
-    def counts(df: org.apache.spark.sql.DataFrame) =
-      df.select("path", "row_count").as[(String, Long)].collect().sortBy(_._1).toSeq
-    // serializable outcome: the final epoch holds BOTH updates
-    assert(counts(sources.FileBloomIndex.read(spark, root)) ==
-      Seq(("a", 10L), ("b", 2L), ("c", 30L)))
-    // and the intermediate epoch is exactly one of the two serial orders
-    val mid = counts(sinks.VersionedTable.readVersion(spark, root, 1))
-    assert(mid == Seq(("a", 10L), ("b", 2L), ("c", 3L)) ||
-           mid == Seq(("a", 1L), ("b", 2L), ("c", 30L)), s"epoch 1: $mid")
+    def state(v: Long): (Set[String], Set[String]) = {
+      val m = ManifestTable.manifest(spark, root, v)
+      (m.select("path").as[String].collect().toSet,
+        if (!m.columns.contains(bc)) Set.empty[String]
+        else m.filter(col(bc).isNotNull).select("path").as[String]
+          .collect().toSet)
+    }
+    // serializable outcome: the final version holds BOTH commits — the
+    // appended file and bits on every file the build saw
+    val (files2, bits2) = state(2)
+    assert(files2.size == files0.size + 1 && files0.subsetOf(files2))
+    assert(files0.subsetOf(bits2), s"bits lost: $bits2")
+    assert(ManifestTable.read(spark, root).count() == 3L)
+    // and the intermediate version is exactly one of the two serial
+    // orders: append first (no bits yet) or build first (no new file)
+    val mid = state(1)
+    assert(mid == ((files2, Set.empty[String])) || mid == ((files0, files0)),
+      s"version 1: $mid")
   }
 
   test("versioned table writeBatch: a replayed batch id is a no-op, the next id commits") {
@@ -493,7 +501,9 @@ class SinksSpec extends AnyFunSuite {
       sinks.ManifestTable.buildBloom(spark, meta, "event_id"): Unit
       v
     }
-    val before = tick().get
+    // the tick's head: the adopt's version plus the bloom build's
+    assert(tick().nonEmpty)
+    val before = sinks.ManifestTable.latestVersion(spark, meta)
     sinks.ParquetSink.reclusterTable(spark, dir, dims, 48)
     val restored = candidates()
     assert(restored <= clean + 4,
@@ -1287,15 +1297,142 @@ class SinksSpec extends AnyFunSuite {
       .withColumn("lang", lit("zz")).coalesce(1), root)
     assert(probe.count() == 2, "the unindexed appended file must be read")
     // the next build indexes ONLY the new file
-    val before = sources.FileBloomIndex.read(spark,
-      ManifestTable.bloomRootFor(root, "doc_id")).count()
+    def indexed(): Long = ManifestTable.manifest(spark, root,
+        ManifestTable.latestVersion(spark, root))
+      .filter(col(ManifestTable.bloomCol("doc_id")).isNotNull).count()
+    val before = indexed()
     assert(ManifestTable.buildBloom(spark, root, "doc_id").nonEmpty)
-    val after = sources.FileBloomIndex.read(spark,
-      ManifestTable.bloomRootFor(root, "doc_id")).count()
+    val after = indexed()
     assert(after == before + 1,
-      s"delta build must add exactly the new file's row ($before -> $after)")
+      s"delta build must add exactly the new file's bits ($before -> $after)")
     assert(probe.count() == 2)
     assert(scannedFiles(probe) < 7)
+  }
+
+  /** Files a graft scan plans — the bloom tests' pruning evidence. */
+  private def graftScannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    df.queryExecution.sparkPlan.collect { case b: BatchScanExec =>
+      b.partitions.flatten.collect { case fp: FilePartition =>
+        fp.files.map(_.filePath.toString).toSeq }.flatten
+    }.flatten.distinct.size
+  }
+
+  /** A bloomed HASH layout on doc_id (every file's envelope spans the
+    * domain) and a mid-domain key only the bits can prune. */
+  private def bloomedHashTable(name: String): (String, Long) = {
+    val root = java.nio.file.Files.createTempDirectory(name).toString + "/t"
+    val docs = sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    sinks.ManifestTable.create(docs.repartition(6, col("doc_id")), root,
+      Seq("doc_id"))
+    assert(sinks.ManifestTable.buildBloom(spark, root, "doc_id").nonEmpty)
+    val ids = docs.select(col("doc_id")).as[Long].collect().sorted
+    (root, ids(ids.length / 2))
+  }
+
+  test("manifest bloom bits live and die with manifest versions: vacuum leaves none behind; time travel prunes with its own version's bits") {
+    import sinks.ManifestTable
+    val (root, mid) = bloomedHashTable("graft-bloom-life")
+    def probe(v: Long) = spark.read.format("graft")
+      .option("versionAsOf", v.toString).load(root)
+      .filter(col("doc_id") === mid)
+    val tagged = ManifestTable.latestVersion(spark, root)
+    ManifestTable.createTag(spark, root, "pin", Some(tagged)): Unit
+    // rounds of re-lay (fresh unindexed files) + build + vacuum
+    (1 to 2).foreach { _ =>
+      ManifestTable.optimize(spark, root, numFiles = 6): Unit
+      assert(ManifestTable.buildBloom(spark, root, "doc_id").nonEmpty)
+      ManifestTable.vacuum(spark, root, keep = 1, ttlMs = 0L)
+    }
+    val latest = ManifestTable.latestVersion(spark, root)
+    assert(ManifestTable.versions(spark, root) == Seq(tagged, latest))
+    // no bloom data outside the retained manifests: no side table, and
+    // the manifest log holds exactly the retained epochs
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    val stray = walk(new java.io.File(root)).map(_.getName)
+      .filter(_.contains("bloom"))
+    assert(stray.isEmpty, s"bloom data outside the manifests: $stray")
+    val epochs = new java.io.File(ManifestTable.manifestsRoot(root))
+      .list().filter(_.startsWith("epoch=")).sorted.toSeq
+    assert(epochs == Seq(tagged, latest).map(v => s"epoch=$v"))
+    // each retained version prunes the probe with its OWN bits — the
+    // tagged version's files are long compacted away from the head
+    assert(ManifestTable.filesAt(spark, root, tagged).toSet
+      .intersect(ManifestTable.filesAt(spark, root, latest).toSet).isEmpty)
+    Seq(tagged, latest).foreach { v =>
+      assert(graftScannedFiles(probe(v)) <
+        ManifestTable.filesAt(spark, root, v).size, s"version $v")
+      assert(probe(v).select(col("doc_id")).as[Long].collect().toSeq ==
+        Seq(mid))
+    }
+  }
+
+  test("manifest bloom bits carry into branches and clones: both prune a point probe like the source") {
+    import sinks.ManifestTable
+    val (root, mid) = bloomedHashTable("graft-bloom-refs")
+    ManifestTable.createBranch(spark, root, "audit"): Unit
+    val clone = s"$root-clone"
+    ManifestTable.cloneTo(spark, root, clone): Unit
+    Seq(root, ManifestTable.branchRoot(root, "audit"), clone).foreach { r =>
+      val probe = spark.read.format("graft").load(r)
+        .filter(col("doc_id") === mid)
+      val files = ManifestTable.filesAt(spark, r,
+        ManifestTable.latestVersion(spark, r)).size
+      assert(graftScannedFiles(probe) < files, s"$r must prune by bloom")
+      assert(probe.select(col("doc_id")).as[Long].collect().toSeq == Seq(mid))
+    }
+  }
+
+  test("manifest bloom build racing a widen: the retry rebuilds under the wide type, point probes stay exact") {
+    import sinks.ManifestTable
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-bloom-widen").toString + "/t"
+    // a hash layout on an INT key: every envelope spans the domain, so
+    // only the bits can prune a point probe
+    ManifestTable.create(spark.range(6000)
+        .select(col("id").cast("int").as("k"), (col("id") % 7).as("v"))
+        .repartition(6, col("k")), root, Seq("k"))
+    val files = ManifestTable.filesAt(spark, root, 0).size
+    val bc = ManifestTable.bloomCol("k")
+    // the build's first attempt is held at its first data-file read —
+    // after it resolved base 0 and its INT key type — while a widen to
+    // BIGINT commits version 1 (and drops the column's bits)
+    val gate = GateFs.arm(p => p.toUri.getPath.startsWith(s"$root/data/") &&
+      p.getName.endsWith(".parquet"))
+    val confs = Seq("fs.file.impl" -> classOf[GateFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val build = pool.submit(new java.util.concurrent.Callable[Option[Long]] {
+        def call(): Option[Long] = ManifestTable.buildBloom(spark, root, "k")
+      })
+      assert(gate.reached.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "the build never read a data file")
+      assert(ManifestTable.widenColumnType(spark, root, "k",
+        org.apache.spark.sql.types.LongType) == 1L)
+      gate.release.countDown()
+      // the held attempt loses the CAS; its retry re-reads the wide
+      // schema and must hash BIGINT values, never commit INT bits
+      assert(build.get(120, java.util.concurrent.TimeUnit.SECONDS)
+        .contains(2L))
+    } finally {
+      gate.release.countDown()
+      pool.shutdown()
+      confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    val m = ManifestTable.manifest(spark, root, 2)
+    assert(m.filter(col(bc).isNotNull).count() == files.toLong,
+      "the retry must index every live file")
+    Seq(0L, 2999L, 5999L).foreach { k =>
+      val probe = spark.read.format("graft").load(root).filter(col("k") === k)
+      assert(graftScannedFiles(probe) < files, s"k = $k must prune by bloom")
+      assert(probe.select(col("k")).as[Long].collect().toSeq == Seq(k),
+        s"k = $k: bits of the wrong type exclude its file")
+    }
   }
 
   test("manifest change feed: the diff scans ONLY the files changed between the versions — never the table") {
@@ -1386,11 +1523,11 @@ class SinksSpec extends AnyFunSuite {
         "the bloom exists to fix")
     // with the committed bloom, a 1-key merge carries almost all
     // files by reference (bounded false positives may add a file)
-    assert(ManifestTable.buildBloom(spark, root, "doc_id").nonEmpty)
-    val files1 = ManifestTable.filesAt(spark, root, 1)
+    val v1 = ManifestTable.buildBloom(spark, root, "doc_id").get
+    val files1 = ManifestTable.filesAt(spark, root, v1)
     val mid2 = ids(ids.length / 3)
-    ManifestTable.merge(upd(mid2, "bb"), root, Seq("doc_id"))
-    val files2 = ManifestTable.filesAt(spark, root, 2)
+    val v2 = ManifestTable.merge(upd(mid2, "bb"), root, Seq("doc_id"))
+    val files2 = ManifestTable.filesAt(spark, root, v2)
     val carried = files2.toSet.intersect(files1.toSet)
     assert(carried.size >= files1.size - 2,
       s"bloom-assisted 1-key merge must carry nearly every file; " +
@@ -1404,12 +1541,12 @@ class SinksSpec extends AnyFunSuite {
     // an UNINDEXED appended file is conservatively rewritten: odd ids
     // live only in the new file, inside every old file's envelope and
     // absent from every bloom — the merge must still find them
-    ManifestTable.write(odd.coalesce(1), root)
-    val appended = ManifestTable.filesAt(spark, root, 3).toSet --
-      ManifestTable.filesAt(spark, root, 2).toSet
+    val v3 = ManifestTable.write(odd.coalesce(1), root)
+    val appended = ManifestTable.filesAt(spark, root, v3).toSet --
+      files2.toSet
     val oddK = odd.agg(min(col("doc_id"))).head().getLong(0)
-    ManifestTable.merge(upd(oddK, "cc"), root, Seq("doc_id"))
-    val files4 = ManifestTable.filesAt(spark, root, 4).toSet
+    val v4 = ManifestTable.merge(upd(oddK, "cc"), root, Seq("doc_id"))
+    val files4 = ManifestTable.filesAt(spark, root, v4).toSet
     assert(appended.forall(p => !files4.contains(p)),
       "the unindexed appended file holds the key and must be rewritten")
     assert(ManifestTable.read(spark, root)
@@ -1537,21 +1674,21 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("versioned table replay marker survives an interleaved merge") {
+    import sinks.ManifestTable
     val root = java.nio.file.Files
       .createTempDirectory("graft-vt-carry").toString + "/t"
-    assert(sinks.VersionedTable.writeBatch(
-      Seq((1L, "a")).toDF("k", "v"), root, 3L).contains(0L))
-    // a keyed merge through the read-modify-write loop — the marker
-    // must carry into its epoch, not reset to -1
-    sinks.VersionedTable.rewriteLoop(spark, root) { base =>
-      sinks.VersionedTable.readVersion(spark, root, base)
-        .filter(col("k") =!= 1L).unionByName(Seq((1L, "A")).toDF("k", "v"))
-    }
-    assert(sinks.VersionedTable.lastAppliedBatch(spark, root) == 3L)
-    assert(sinks.VersionedTable.writeBatch(
+    ManifestTable.create(Seq((1L, "a")).toDF("k", "v"), root, Seq("k"))
+    assert(ManifestTable.writeBatch(
+      Seq((2L, "b")).toDF("k", "v"), root, 3L).nonEmpty)
+    // read-modify-write commits on the manifest log — a keyed merge
+    // and a bloom build — must carry the marker, not reset it to -1
+    ManifestTable.merge(Seq((1L, "A")).toDF("k", "v"), root, Seq("k"))
+    assert(ManifestTable.buildBloom(spark, root, "k").nonEmpty)
+    assert(ManifestTable.lastAppliedBatch(spark, root) == 3L)
+    assert(ManifestTable.writeBatch(
       Seq((9L, "z")).toDF("k", "v"), root, 3L).isEmpty)
-    assert(sinks.VersionedTable.read(spark, root)
-      .as[(Long, String)].collect().toSeq.sorted == Seq((1L, "A")))
+    assert(ManifestTable.read(spark, root).as[(Long, String)].collect()
+      .toSeq.sorted == Seq((1L, "A"), (2L, "b")))
   }
 
   test("manifest merge schema evolution: wider sidecar, NO untouched-file rewrites, strict mode refuses") {
