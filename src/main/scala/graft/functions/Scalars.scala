@@ -1,7 +1,12 @@
 package graft.functions
 
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShims
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Scalar Column-function library — the reference's private TS helper
   * functions (SURVEY §2.3, P12-P29) re-expressed as pure Catalyst
@@ -30,17 +35,43 @@ object Scalars {
 
   val LaTz = "America/Los_Angeles"
 
+  /** Lowercase a string column exactly as Spark's default `lower` does
+    * for UTF8_BINARY strings (`CollationAwareUTF8String.toLowerCase`):
+    * an all-ASCII value maps byte-wise, anything else goes through ICU's
+    * root-locale `UCharacter.toLowerCase` over its valid-UTF-8 decoding.
+    * That is the locale-independent mapping of JS `toLowerCase`, which
+    * the reference's ids and sort keys depend on.
+    *
+    * Why not `lower`: the first `lower` in a JVM runs the static
+    * initializer of `CollationAwareUTF8String`, which builds a
+    * title-case lookup table over all of Unicode (~1.6 s on one thread,
+    * held on the heap for the life of the process) that lowercasing
+    * never reads. Each CLI command is its own JVM and would pay it.
+    *
+    * This pins the ICU mapping: it does not read
+    * `spark.sql.icu.caseMappings.enabled`. A string in any other
+    * collation fails analysis (DATATYPE_MISMATCH) rather than being
+    * lowercased under different rules. */
+  def lowerCase(c: Column): Column =
+    GraftSqlShims.column(StaticInvoke(Scalars.getClass, StringType,
+      "lowerUtf8", Seq(GraftSqlShims.expression(c)), Seq(StringType)))
+
+  /** Kernel of [[lowerCase]], called from generated code. */
+  def lowerUtf8(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(UCharacter.toLowerCase(s.toValidString))
+
   /** P12 — `prefix + "_" + lower(id without '-')`; null id → `prefix_unknown`. */
   def stableEntityId(prefix: String, id: Column): Column =
     when(id.isNull, lit(s"${prefix}_unknown"))
-      .otherwise(concat(lit(prefix), lit("_"), lower(regexp_replace(id, "-", ""))))
+      .otherwise(concat(lit(prefix), lit("_"), lowerCase(regexp_replace(id, "-", ""))))
 
   /** P14 — trim; empty → null. */
   def normalizeNullableString(c: Column): Column = nullif(trim(c), lit(""))
 
   /** P15 — join trimmed parts (null → "") with '|', lowercase. */
   def sortKey(parts: Column*): Column =
-    lower(concat_ws("|", parts.map(p => coalesce(trim(p), lit(""))): _*))
+    lowerCase(concat_ws("|", parts.map(p => coalesce(trim(p), lit(""))): _*))
 
   /** P16 — SHA-256 hex digest. */
   def sha256Hex(c: Column): Column = sha2(c.cast("string"), 256)
@@ -55,9 +86,10 @@ object Scalars {
     * Patterns are UNANCHORED substring searches, matching the
     * reference's regex.exec semantics (derive/index.ts:345-364). */
   def toUuidMaybe(c: Column): Column = {
-    val hyphenated = regexp_extract(lower(c),
+    val lowered = lowerCase(c)
+    val hyphenated = regexp_extract(lowered,
       "([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})", 1)
-    val compact = regexp_extract(lower(c), "([0-9a-f]{32})", 1)
+    val compact = regexp_extract(lowered, "([0-9a-f]{32})", 1)
     val rehyph = concat_ws("-",
       substring(compact, 1, 8), substring(compact, 9, 4),
       substring(compact, 13, 4), substring(compact, 17, 4),

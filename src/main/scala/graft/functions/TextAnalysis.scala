@@ -161,7 +161,7 @@ object TextAnalysis {
     * SQL, and locale-dependent case folding is not. */
   def normalizeText(text: Column): Column =
     trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9\\s]", " "), "\\s+", " "))
+      regexp_replace(Scalars.lowerCase(text), "[^a-z0-9\\s]", " "), "\\s+", " "))
 
   // ---- PII detection / redaction ----------------------------------
   // Patterns restricted to the Java-regex ∩ RE2 common subset (char

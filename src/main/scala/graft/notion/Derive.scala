@@ -1,5 +1,6 @@
 package graft.notion
 
+import graft.functions.Scalars
 import graft.util.{Broadcasts, Par}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -34,24 +35,7 @@ object Derive {
     "#0EAFFF", "#51A9FF", "#6DA4FF", "#829EFF", "#9398FF", "#A491FF",
     "#B688FF", "#CA7BFF", "#E365FF", "#FF41F7", "#FF56D2", "#FF61B7")
 
-  // -- scalar parity helpers (P18-P29, derive/index.ts:309-376,645-714) --
-
-  /** P18 toUuidMaybe — UNANCHORED search, matching the reference's
-    * regex.exec semantics (derive/index.ts:345-364). */
-  def uuidMaybe(c: Column): Column = {
-    val lower0 = lower(c)
-    val hyph = regexp_extract(lower0,
-      "([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})", 1)
-    val compact = regexp_extract(lower0, "([0-9a-f]{32})", 1)
-    val rehyph = concat_ws("-",
-      substring(compact, 1, 8), substring(compact, 9, 4),
-      substring(compact, 13, 4), substring(compact, 17, 4),
-      substring(compact, 21, 12))
-    when(c.isNull, lit(null).cast("string"))
-      .when(hyph =!= "", hyph)
-      .when(compact =!= "", rehyph)
-      .otherwise(lit(null).cast("string"))
-  }
+  // -- scalar parity helpers (P19-P29, derive/index.ts:309-376,645-714) --
 
   private val OleEpochMs = -2209161600000L
 
@@ -92,9 +76,9 @@ object Derive {
     * round/cast would throw on NaN/Infinity; reference returns 1/null,
     * derive/index.ts:331-343). */
   def stageNumber(n: Column): Column =
-    graft.functions.Scalars.normalizeStageNumber(n)
+    Scalars.normalizeStageNumber(n)
   def stageNumberOrNull(n: Column): Column =
-    graft.functions.Scalars.normalizeStageNumberOrNull(n)
+    Scalars.normalizeStageNumberOrNull(n)
 
   /** P29 assignStageColorHex over the reference palette. */
   def colorHex(key: Column): Column =
@@ -175,7 +159,8 @@ object Derive {
     val lk = broadcast(wfLookup(defsNarrow))
     val lbl = broadcast(wfLabelByKey(defsNarrow))
     val withDef = df.join(lk, canonId === lk("wf_canon_id"), "left")
-    val key = coalesce(col("wf_key"), uuidMaybe(canonId), lit("workflow_definition_unknown"))
+    val key = coalesce(col("wf_key"), Scalars.toUuidMaybe(canonId),
+      lit("workflow_definition_unknown"))
     withDef.withColumn("_wfkey", key)
       .join(lbl, col("_wfkey") === lbl("lbl_key"), "left")
       .withColumn(keyName, col("_wfkey"))
@@ -204,7 +189,8 @@ object Derive {
       .join(toLk, col("to_step_id") === col("to_canon_id"), "left")
       .select(
         coalesce(col("page_title"), col("timeslice_id")).as("Name"),
-        coalesce(uuidMaybe(col("from_event_id")), col("from_event_id")).as("From Event"),
+        coalesce(Scalars.toUuidMaybe(col("from_event_id")), col("from_event_id"))
+          .as("From Event"),
         col("from_status").as("From Status"),
         col("from_stage_n").as("From Step N"),
         col("from_task_name").as("From Task Name"),
@@ -214,7 +200,8 @@ object Derive {
         when(col("duration_seconds").isNotNull,
           round(col("duration_seconds") / lit(60.0)).cast("long")).as("Minutes Diff"),
         coalesce(col("page_title"), col("timeslice_id")).as("Slice Label"),
-        coalesce(uuidMaybe(col("to_event_id")), col("to_event_id")).as("To Event"),
+        coalesce(Scalars.toUuidMaybe(col("to_event_id")), col("to_event_id"))
+          .as("To Event"),
         col("to_status").as("To Status"),
         col("to_stage_n").as("To Step N"),
         col("to_task_name").as("To Task Name"),
@@ -222,7 +209,8 @@ object Derive {
         pbiSerial(col("ended_at")).as("To Time"),
         col("to_stage_label").as("To Workflow Step"),
         col("_wf_label").as("Workflow Definition"),
-        coalesce(uuidMaybe(col("workflow_record_id")), col("workflow_record_id")).as("Workflow Record"),
+        coalesce(Scalars.toUuidMaybe(col("workflow_record_id")), col("workflow_record_id"))
+          .as("Workflow Record"),
         col("workflow_type").as("Workflow Type"),
         normIso(toDateTimeRaw).as("To DateTime"),
         laDayIso(toDateTimeRaw).as("To Date"),

@@ -31,7 +31,7 @@ object Normalize {
 
   /** Parse each configured property's rawValue ONCE into a named struct
     * column, then let the extractors reference the parsed attribute.
-    * Without this every extractor embeds its own from_json(payloadSchema)
+    * Without this every extractor embeds its own `parsed` (JSON-to-struct)
     * tree — Catalyst's CollapseProject will not re-inline a non-cheap
     * expression referenced more than once, so multiply-used payloads
     * (e.g. started/ended dates) parse once per row, and the analyzed
@@ -61,10 +61,6 @@ object Normalize {
     when(n.isNull, lit(null).cast("string"))
       .when(n === floor(n) && abs(n) < 1e15, n.cast("long").cast("string"))
       .otherwise(n.cast("string"))
-
-  /** P15 sortKey with JS number rendering (rules.ts:34-39). */
-  private def sortKeyParts(parts: Column*): Column =
-    lower(concat_ws("|", parts.map(p => coalesce(trim(p), lit(""))): _*))
 
   /** P17 computeDurationSeconds on ISO strings (timeslice.ts:219-229).
     * try_to_timestamp: the reference's Date.parse returns NaN (→ null
@@ -174,7 +170,8 @@ object Normalize {
       col("databaseId").as("source_database_id"),
       stageNumber.as("stage_number"),
       stageLabel.as("stage_label"),
-      sortKeyParts(wfId, jsNumberString(stageNumber), stageLabel, col("pageId")).as("sort_key"),
+      Scalars.sortKey(wfId, jsNumberString(stageNumber), stageLabel, col("pageId"))
+        .as("sort_key"),
       metaCreated.as("created_time"),
       col("lastEditedTime").as("last_edited_time"),
       metaUrl.as("page_url"),

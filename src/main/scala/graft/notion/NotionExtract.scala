@@ -1,7 +1,9 @@
 package graft.notion
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShims
 
 /** Notion payload extractors (SURVEY §2.3 P2-P11) as pure Column
   * expressions over the parsed payload union — higher-order array
@@ -12,9 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object NotionExtract {
 
-  /** Parse a rawValue JSON string against the closed payload union. */
+  /** Parse a rawValue JSON string against the closed payload union;
+    * ragged or malformed JSON decodes to null fields. This is the expression
+    * `from_json(rawValue, payloadSchema)` resolves to (same options,
+    * time zone from the session), built directly: `from_json` ships the
+    * schema as a SQL string that the function registry re-parses, DDL
+    * parser first, for every call — about 20 times per normalize plan. */
   def parsed(rawValue: Column): Column =
-    from_json(rawValue, NotionSchemas.payloadSchema)
+    GraftSqlShims.column(JsonToStructs(NotionSchemas.payloadSchema, Map.empty,
+      GraftSqlShims.expression(rawValue)))
 
   private def nonEmpty(c: Column): Column = c.isNotNull && c =!= ""
 

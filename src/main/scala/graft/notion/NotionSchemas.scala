@@ -8,8 +8,9 @@ import org.apache.spark.sql.types._
   * (src/ingress/rawRecord.ts:3-18): an envelope plus a property-ID-keyed
   * map whose `rawValue` carries the untouched Notion payload. We keep
   * `rawValue` as a JSON *string* in the raw layer (schema-free fidelity)
-  * and parse it on demand with `from_json` against the closed payload
-  * union below — ragged payloads become nulls, never errors.
+  * and decode it on demand with `NotionExtract.parsed` (a JSON-to-struct
+  * expression) against the closed payload union below — ragged payloads
+  * become nulls, never errors.
   */
 object NotionSchemas {
 

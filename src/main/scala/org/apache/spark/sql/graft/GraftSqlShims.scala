@@ -4,21 +4,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Two-method bridge to `private[sql]` Spark internals that the SQL
-  * row-level command rule ([[graft.plans.GraftRowLevelSqlRule]])
-  * needs and Spark 4 exposes no public equivalent for:
+/** Bridge to `private[sql]` Spark internals that Spark 4 exposes no
+  * public equivalent for, among them:
   *
-  *   - wrapping a Catalyst [[Expression]] back into a [[Column]]
+  *   - crossing between a Catalyst [[Expression]] and a [[Column]]
   *     (`Column.expr`/`new Column(expr)` are gone in Spark 4;
-  *     `classic.ExpressionUtils.column` is the blessed internal), and
+  *     `classic.ExpressionUtils` is the blessed internal), so the SQL
+  *     row-level command rule ([[graft.plans.GraftRowLevelSqlRule]])
+  *     and Column helpers built on Catalyst expressions can use them;
   *   - turning an analyzed [[LogicalPlan]] (a MERGE statement's
   *     source relation) into a [[DataFrame]]
-  *     (`classic.Dataset.ofRows`).
+  *     (`classic.Dataset.ofRows`);
+  *   - the collation, broadcast, streaming and catalog hooks below.
   *
   * Living inside the `org.apache.spark.sql` namespace is the
   * established ecosystem pattern for exactly this seam (Delta Lake
   * and Iceberg ship such shims the same way); everything else in this
-  * repo stays under `graft.*`. Both entry points are stable across
+  * repo stays under `graft.*`. These entry points are stable across
   * the 4.x line.
   */
 object GraftSqlShims {
@@ -26,6 +28,12 @@ object GraftSqlShims {
   /** Wrap a (possibly unresolved) expression as a user-facing Column. */
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** A Column as an expression. The Column's tree is converted when the
+    * enclosing plan is analyzed, so lambda variables and unresolved
+    * names inside it stay valid. */
+  def expression(c: Column): Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
   /** Whether a string column's collation is the default UTF8_BINARY —
     * the one whose sort IS the unsigned UTF-8 byte order parquet

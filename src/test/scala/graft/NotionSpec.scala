@@ -142,6 +142,60 @@ class NotionSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("parsed decodes exactly what from_json(payloadSchema) decodes, malformed JSON to nulls") {
+    import spark.implicits._
+    val fixturePayloads = readRaw(spark, Seq(timesliceJson, stageJson, defJson, dbJson))
+      .select(explode(map_values(col("properties"))).as("p"))
+      .select(col("p.rawValue")).as[String].collect().toSeq
+    val malformed = Seq("{\"type\":", "not json", "", "{\"type\":\"date\",}")
+    val ragged = Seq("[1,2]", "42", "null", "{}", """{"type":"date","date":"x"}""",
+      """{"type":"relation","relation":{"id":"a"}}""", """{"number":3.5,"type":"number"}""",
+      """{"type":"rollup","rollup":{"type":"array","array":[7,{"type":"date"}]}}""")
+    val inputs = fixturePayloads ++ malformed ++ ragged :+ null
+    val df = inputs.toDF("raw").repartition(1)
+    val direct = df.select(col("raw"), NotionExtract.parsed(col("raw")).as("p"))
+    val viaRegistry = df.select(col("raw"),
+      from_json(col("raw"), NotionSchemas.payloadSchema).as("p"))
+    assert(direct.schema == viaRegistry.schema)
+    val got = direct.collect().map(r => r.getString(0) -> r.get(1)).toMap
+    val want = viaRegistry.collect().map(r => r.getString(0) -> r.get(1)).toMap
+    assert(got.size == inputs.distinct.size && got == want)
+    // PERMISSIVE decoding: a malformed payload is null or a struct of
+    // nulls, so every extractor over it yields null
+    malformed.foreach { m =>
+      val r = got(m).asInstanceOf[org.apache.spark.sql.Row]
+      assert(r == null || (0 until r.length).forall(r.isNullAt), s"'$m' decoded to $r")
+    }
+    assert(got(null) == null)
+    assert(fixturePayloads.forall(got(_) != null))
+  }
+
+  test("normalize and derive plans call neither the registry's from_json nor lower") {
+    // a child session whose function registry lacks both names: a plan
+    // that resolves either by name fails to analyze here, which is the
+    // per-plan schema re-parse and the collation-class lowercase
+    val s = spark.newSession()
+    Seq("from_json", "lower").foreach(f =>
+      assert(s.sessionState.functionRegistry.dropFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f))))
+    Seq(from_json(col("pageId"), NotionSchemas.payloadSchema), lower(col("pageId")))
+      .foreach(c => intercept[org.apache.spark.sql.AnalysisException](
+        readRaw(s, Seq(defJson)).select(c)))
+    val d = Normalize.workflowDefinitions(readRaw(s, Seq(defJson)), cfg)
+    val st = Normalize.workflowStages(readRaw(s, Seq(stageJson)), cfg)
+    val t = Normalize.timeslices(readRaw(s, Seq(timesliceJson, dbJson)), cfg)
+    val star = Derive.deriveAll(d, st, t)
+    val plans = Seq(d, st, t) ++ star.values
+    plans.foreach { df =>
+      val lowers = df.queryExecution.analyzed.collectWithSubqueries { case p =>
+        p.expressions.flatMap(_.collect {
+          case l: org.apache.spark.sql.catalyst.expressions.Lower => l })
+      }.flatten
+      assert(lowers.isEmpty, df.queryExecution.analyzed.treeString)
+    }
+    assert(star("FactTimeslices").count() == 1)
+  }
+
   test("derive produces the 7-table star schema with parity semantics") {
     val tables = Derive.deriveAll(defs, stages, ts)
     assert(tables.keySet == Derive.ExpectedTables.toSet)

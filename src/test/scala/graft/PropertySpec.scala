@@ -81,6 +81,38 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("Scalars.lowerCase is byte-identical to Spark's lower, interpreted and codegen'd") {
+    // inputs travel as UTF-8 hex so the invalid sequence C3 28 reaches
+    // both functions as the same bytes; results compare as hex too
+    val texts = Seq("Hello WORLD 123", "ÀÉÎÕÜ Ça Øre", "ΟΔΟΣ", "\u0130", "\u212A",
+      "\u1E9E\u00DF", "")
+    val hexes = texts.map(_.getBytes("UTF-8").map("%02X".format(_)).mkString) ++
+      Seq("C328", null)
+    val src = hexes.toDF("h").select(unhex(col("h")).cast("string").as("s"))
+    // a projection over a local relation is folded by interpreted eval;
+    // behind a shuffle it runs in generated code
+    for (df <- Seq(src, src.repartition(1))) {
+      val rows = df.select(col("s"), hex(functions.Scalars.lowerCase(col("s"))),
+        hex(lower(col("s")))).collect()
+      assert(rows.length == hexes.size)
+      rows.foreach(r => assert(r.get(1) == r.get(2), s"input ${r.get(0)}"))
+    }
+    val sigma = Seq("ΟΔΟΣ").toDF("s").repartition(1)
+      .select(functions.Scalars.lowerCase(col("s"))).head().getString(0)
+    assert(sigma == "\u03BF\u03B4\u03BF\u03C2") // final sigma: ς, not σ
+  }
+
+  test("Scalars.lowerUtf8 matches Spark's UTF8_BINARY lowercase on every code point") {
+    import org.apache.spark.sql.catalyst.util.CollationAwareUTF8String
+    import org.apache.spark.unsafe.types.UTF8String
+    val diffs = (0 to Character.MAX_CODE_POINT).iterator
+      .filterNot(cp => cp >= Character.MIN_SURROGATE && cp <= Character.MAX_SURROGATE)
+      .map(cp => UTF8String.fromString(new String(Character.toChars(cp)) + "X"))
+      .filter(u => functions.Scalars.lowerUtf8(u) != CollationAwareUTF8String.toLowerCase(u))
+      .take(5).toList
+    assert(diffs.isEmpty, s"first differing inputs: $diffs")
+  }
+
   test("malformed date strings yield null everywhere, never throw (ANSI Date.parse-NaN parity)") {
     // the reference's Date.parse returns NaN on garbage → every derived
     // value is null; under ANSI a bare to_timestamp would throw instead
