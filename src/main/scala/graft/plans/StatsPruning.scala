@@ -373,15 +373,14 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** VERSION-KEYED proofs: the planning-time metadata queries
+  /** EPOCH-KEYED proofs: the planning-time metadata queries
     * (collects per registered scan) are re-issued for every plan of a
     * hot table, so identical proofs memoize. The key carries the
-    * CURRENT VERSION of the manifest proven against (one cheap FS
-    * resolution, no Spark job) plus the canonicalized predicate — a
-    * commit bumps the version, which changes the key, so staleness is
-    * structural: a cached entry can only ever be served for the exact
-    * epoch it was proven against (Delta caches its snapshot state the
-    * same way). Entries
+    * CURRENT manifest epoch's key (one commit-record read, no Spark
+    * job) plus the canonicalized predicate — a commit, or a re-created
+    * root, changes the epoch's claim, so staleness is structural: a
+    * cached entry can only ever be served for the exact epoch it was
+    * proven against (Delta caches its snapshot state the same way). Entries
     * live in [[graft.util.EpochCache]]; an unresolvable predicate
     * simply skips the cache. The second identical query on an
     * unchanged table issues ZERO metadata jobs (PlanSpec-counted). */
@@ -393,14 +392,14 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     * hit must leave this untouched. */
   private[graft] val proofComputations = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def proven(metaRoot: String, version: Long, cond: Expression)
+  private def proven(epoch: graft.sinks.VersionedTable.EpochKey, cond: Expression)
                     (compute: => Set[String]): Set[String] = {
     // exprIds are fresh per reader instantiation — key on the
     // id-stripped canonical form so identical predicates from
     // separate reads of the same table hit the same entry
     val key =
-      try Some(s"$metaRoot|$version|" +
-        cond.canonicalized.toString.replaceAll("#\\d+", ""))
+      try Some((epoch,
+        cond.canonicalized.toString.replaceAll("#\\d+", "")))
       catch { case _: Exception => None }
     def run(): Set[String] = { proofComputations.incrementAndGet(): Unit; compute }
     key match {
@@ -441,7 +440,7 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
 
   /** Canonical paths of files the registered directory's manifest
     * PROVES cannot match `cond` ([[excludedByManifest]]), memoized per
-    * (root, version, predicate). Any failure (a missing manifest,
+    * (manifest epoch, predicate). Any failure (a missing manifest,
     * schema drift) logs and excludes nothing — pruning is an
     * optimization, never a correctness dependency. */
   private[graft] def provablyExcluded(spark: SparkSession, cond: Expression,
@@ -451,10 +450,12 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     try {
       val v = ManifestTable.latestVersion(spark, entry.root)
       if (v < 0) Set.empty
-      else proven(entry.root, v, cond) {
-        excludedByManifest(spark, cond,
-          ManifestTable.manifest(spark, entry.root, v),
-          ManifestTable.statsCols(spark, entry.root, v))
+      else {
+        val rec = ManifestTable.recordAt(spark, entry.root, v)
+        proven(rec.key, cond) {
+          excludedByManifest(spark, cond, ManifestTable.manifest(spark, rec),
+            ManifestTable.statsCols(spark, rec))
+        }
       }
     } catch {
       case e: Exception =>

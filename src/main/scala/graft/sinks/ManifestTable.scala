@@ -68,7 +68,7 @@ import graft.util.EpochCache
   * untracked columns have no envelopes, so they can't narrow K and
   * can't prune reads.
   */
-object ManifestTable {
+object ManifestTable extends org.apache.spark.internal.Logging {
 
   private val ManifestsSub = "_manifests"
   private val DvSub = "_dv"
@@ -120,24 +120,26 @@ object ManifestTable {
     * equality deletes apply by (a delete at seq s kills matching rows
     * only in files with seq < s); legacy files' seq 0 makes them
     * subject to every later delete, which is exactly their age. */
-  def manifest(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val key = manifestKey(spark, root, version)
-    collected(spark, root, version, key, narrowOnMiss = false) match {
+  def manifest(spark: SparkSession, root: String, version: Long): DataFrame =
+    manifest(spark, recordAt(spark, root, version))
+
+  /** [[manifest]] of an epoch whose record the caller already read. */
+  private[graft] def manifest(spark: SparkSession,
+                              rec: VersionedTable.Commit): DataFrame =
+    collected(spark, rec, narrowOnMiss = false) match {
       case Some(c) if c.full => spark.createDataFrame(c.rows.asJava, c.schema)
-      case _                 => manifestFromFiles(spark, root, version, key)
+      case _                 => manifestFromFiles(spark, rec.key)
     }
-  }
 
-  private def manifestKey(spark: SparkSession, root: String,
-                          version: Long): Option[VersionedTable.EpochKey] =
-    VersionedTable.epochKey(spark, root,
-      new Path(s"${manifestsRoot(root)}/epoch=$version"))
+  /** The commit record of manifest epoch `version` — one read, which
+    * also names the key of every cache entry over the epoch. */
+  private[graft] def recordAt(spark: SparkSession, root: String,
+                              version: Long): VersionedTable.Commit =
+    VersionedTable.record(spark, manifestsRoot(root), version)
 
-  private def manifestFromFiles(spark: SparkSession, root: String,
-                                version: Long,
-                                key: Option[VersionedTable.EpochKey])
-      : DataFrame = {
-    var m = VersionedTable.readEpoch(spark, manifestsRoot(root), version, key)
+  private def manifestFromFiles(spark: SparkSession,
+                                key: VersionedTable.EpochKey): DataFrame = {
+    var m = EpochCache.readParquet(spark, key.dir, key)
     if (!m.columns.contains("dv_path"))
       m = m.withColumn("dv_path", lit(null).cast("string"))
     if (!m.columns.contains("dv_rows"))
@@ -164,8 +166,9 @@ object ManifestTable {
     * One entry per epoch in [[graft.util.EpochCache]], keyed by its
     * [[VersionedTable.EpochKey]]. Full-width rows (stats included) are
     * the driver-memory hazard the round-14 ADVICE named, so an epoch
-    * keeps them only when its parquet is ≤ [[ManifestFullMaxBytes]]
-    * AND ≤ [[ManifestFullMaxRows]] rows; a larger epoch of up to
+    * keeps them only when its parquet — the byte total its commit
+    * record carries — is ≤ [[ManifestFullMaxBytes]] AND ≤
+    * [[ManifestFullMaxRows]] rows; a larger epoch of up to
     * [[LocalizeMaxRows]] rows keeps just the narrow accessor columns
     * (its [[manifest]] stays the parquet-backed frame). Accessors read
     * columns by name, so either width serves them. */
@@ -194,14 +197,13 @@ object ManifestTable {
   /** The cached collection of one epoch; on a miss, a fresh one — full
     * width under the byte gate, else (only when `narrowOnMiss`) the
     * narrow columns — cached when within the row bounds above. */
-  private def collected(spark: SparkSession, root: String, version: Long,
-                        key: Option[VersionedTable.EpochKey],
+  private def collected(spark: SparkSession, rec: VersionedTable.Commit,
                         narrowOnMiss: Boolean): Option[Collected] =
-    key.flatMap(EpochCache.get(Manifests, _)).orElse {
-      val small = key.exists(_.bytes <= ManifestFullMaxBytes)
+    EpochCache.get(Manifests, rec.key).orElse {
+      val small = rec.bytes <= ManifestFullMaxBytes
       if (!small && !narrowOnMiss) None
       else {
-        val m = manifestFromFiles(spark, root, version, key)
+        val m = manifestFromFiles(spark, rec.key)
         val c =
           if (!small) {
             val n = m.select(manifestAccessorCols.map(col): _*)
@@ -218,7 +220,7 @@ object ManifestTable {
             }
           }
         if (c.full || c.rows.length <= LocalizeMaxRows)
-          key.foreach(EpochCache.put(Manifests, _, c))
+          EpochCache.put(Manifests, rec.key, c)
         Some(c)
       }
     }
@@ -233,13 +235,12 @@ object ManifestTable {
     * normalization [[manifest]] applies to committed rows — NULL
     * `seq` (a create's landing rows) coalesced to 0, which also makes
     * `seq` the one non-nullable column. Best-effort and conservative:
-    * any missing column, over-bound size, or conversion surprise just
-    * skips the prime. `key` is the epoch key the commit already
-    * computed for its schema prime — one stat + list per commit, not
-    * two. */
+    * any missing column or over-bound size skips the prime, and a
+    * conversion failure skips it with a warning. `key` is the one the
+    * commit's publish built from its claim. */
   private def primeManifestCaches(spark: SparkSession, root: String,
                                   version: Long, rows: DataFrame,
-                                  key: Option[VersionedTable.EpochKey]): Unit =
+                                  key: VersionedTable.EpochKey): Unit =
     try {
       val plan = rows.queryExecution.optimizedPlan
       LocalEpoch.localRows(plan, ManifestFullMaxRows).foreach { irows =>
@@ -256,20 +257,27 @@ object ManifestTable {
                 r.toSeq.updated(seqIdx, 0L))
             else r
           }
-          key.foreach(
-            EpochCache.put(Manifests, _, Collected(sch, ext, full = true)))
+          EpochCache.put(Manifests, key, Collected(sch, ext, full = true))
         }
       }
-    } catch { case e: Throwable if scala.util.control.NonFatal(e) => () }
+    } catch {
+      case e: Throwable if scala.util.control.NonFatal(e) =>
+        logWarning(s"graft manifest cache prime skipped for $root " +
+          s"version $version: $e")
+    }
 
   /** The normalized manifest of one version as collected rows carrying
     * at least the narrow accessor columns (read them by name), served
     * from the one cached entry per epoch. */
   private[graft] def manifestCollected(spark: SparkSession, root: String,
                                        version: Long)
+      : (StructType, Seq[org.apache.spark.sql.Row]) =
+    manifestCollected(spark, recordAt(spark, root, version))
+
+  private def manifestCollected(spark: SparkSession,
+                                rec: VersionedTable.Commit)
       : (StructType, Seq[org.apache.spark.sql.Row]) = {
-    val c = collected(spark, root, version,
-      manifestKey(spark, root, version), narrowOnMiss = true).get
+    val c = collected(spark, rec, narrowOnMiss = true).get
     (c.schema, c.rows)
   }
 
@@ -432,13 +440,14 @@ object ManifestTable {
   /** The [[Meta]] committed with `version`. */
   private[graft] def metaAt(spark: SparkSession, root: String,
                             version: Long): Meta =
-    decodeMeta(root, version,
-      VersionedTable.record(spark, manifestsRoot(root), version).meta)
+    metaOf(recordAt(spark, root, version))
 
-  /** Fails loudly, naming the version, when its record carries none. */
-  private def decodeMeta(root: String, version: Long, n: JsonNode): Meta = {
+  /** The [[Meta]] a manifest epoch's record carries; fails loudly,
+    * naming the epoch, when it carries none. */
+  private def metaOf(rec: VersionedTable.Commit): Meta = {
+    val n = rec.meta
     require(n.has("schema"),
-      s"manifest epoch $version of $root carries no table metadata")
+      s"manifest epoch ${rec.key.dir} carries no table metadata")
     def fields(o: JsonNode) =
       o.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
     Meta(
@@ -654,7 +663,11 @@ object ManifestTable {
 
   /** Tracked stats columns, read off the manifest's own schema. */
   def statsCols(spark: SparkSession, root: String, version: Long): Seq[String] =
-    manifest(spark, root, version).schema.fieldNames.toSeq
+    statsCols(spark, recordAt(spark, root, version))
+
+  private[graft] def statsCols(spark: SparkSession,
+                               rec: VersionedTable.Commit): Seq[String] =
+    manifest(spark, rec).schema.fieldNames.toSeq
       .filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
 
   /** The table schema committed with `version`'s manifest. */
@@ -1660,8 +1673,8 @@ object ManifestTable {
     while (attempt < maxAttempts) {
       val base = latestVersion(spark, root)
       require(base >= 0, s"manifest table at $root has no committed version")
-      val rec = VersionedTable.record(spark, manifestsRoot(root), base)
-      val meta = decodeMeta(root, base, rec.meta)
+      val rec = recordAt(spark, root, base)
+      val meta = metaOf(rec)
       if (!adopting) meta.adopted.foreach { dir =>
         throw new UnsupportedOperationException(
           s"manifest table at $root mirrors $dir: adopt() is its only " +
@@ -2541,9 +2554,9 @@ object ManifestTable {
 
   /** Per-file DV state of one manifest: path → (dv sidecar, dv rows,
     * file rows) — one metadata-scale collect. */
-  private def dvStates(spark: SparkSession, root: String, version: Long)
+  private def dvStates(spark: SparkSession, rec: VersionedTable.Commit)
       : Seq[(String, Option[String], Long, Long)] = {
-    val (schema, rows) = manifestCollected(spark, root, version)
+    val (schema, rows) = manifestCollected(spark, rec)
     val Seq(ip, id, iv, ir) = Seq("path", "dv_path", "dv_rows",
       "row_count").map(schema.fieldIndex)
     rows.map(r => (r.getString(ip), Option(r.getString(id)),
@@ -2696,16 +2709,16 @@ object ManifestTable {
   // Read-side materialization of pending equality deletes: the keys a
   // [[mergeEq]] committed resolve into ORDINARY deletion vectors over
   // the envelope/bloom-touched file subset, written once per version
-  // into attempt-unique scratch under `_dv` and cached per (root,
-  // version) — so every DV-aware consumer (the DSv2 scan, the
+  // into attempt-unique scratch under `_dv` and cached per manifest
+  // epoch — so every DV-aware consumer (the DSv2 scan, the
   // internal readers, the change feed) serves equality deletes with
   // zero new read machinery. The resolution job is exactly the
   // matched-positions scan [[mergeMor]] would have run at WRITE time,
   // deferred to the first read and paid once; [[compactEq]] / the
   // first row-level op / the maintenance tick make it durable.
 
-  /** Resolved equality deletes per (root, version). Entries are
-    * immutable per version; scratch sidecars are TTL-swept by
+  /** Resolved equality deletes per manifest epoch. Entries are
+    * immutable per epoch; scratch sidecars are TTL-swept by
     * [[vacuum]] when no manifest adopted them, so a hit re-validates
     * its sidecars before being trusted. */
   private val EqResolutions =
@@ -2725,10 +2738,14 @@ object ManifestTable {
     * this is exactly the manifest's own [[dvStates]]. */
   private[graft] def effectiveStates(spark: SparkSession, root: String,
                                      version: Long)
+      : Seq[(String, Option[String], Long, Long)] =
+    effectiveStates(spark, root, recordAt(spark, root, version))
+
+  private def effectiveStates(spark: SparkSession, root: String,
+                              rec: VersionedTable.Commit)
       : Seq[(String, Option[String], Long, Long)] = {
-    val entries = metaAt(spark, root, version).eq
-    if (entries.isEmpty) return dvStates(spark, root, version)
-    val key = (canon(root), version)
+    val entries = metaOf(rec).eq
+    if (entries.isEmpty) return dvStates(spark, rec)
     // re-validate EVERY scratch sidecar: committed vectors are
     // refcount-durable, but unadopted eqres scratch is what the
     // vacuum TTL sweeps out from under a long-lived cache entry —
@@ -2737,14 +2754,13 @@ object ManifestTable {
     // read then fails until the JVM restarts). Scratch sidecars are
     // few — one per eq-touched file — so each gets its own exists();
     // any miss evicts and recomputes instead of failing the read.
-    EpochCache.get(EqResolutions, key).filter { hit =>
+    EpochCache.get(EqResolutions, rec.key).filter { hit =>
       val scratch = hit.collect {
         case (_, Some(dv), _, _) if dv.contains("/eqres-") => dv }
       scratch.forall(dv => fs(spark, root).exists(new Path(dv)))
     }.getOrElse {
-      val resolved = resolveEq(spark, root, version,
-        manifest(spark, root, version), entries)
-      EpochCache.put(EqResolutions, key, resolved) // replaces a stale hit
+      val resolved = resolveEq(spark, root, rec, entries)
+      EpochCache.put(EqResolutions, rec.key, resolved) // replaces a stale hit
       resolved
     }
   }
@@ -2759,7 +2775,7 @@ object ManifestTable {
                                           keys: Set[Seq[Any]],
                                           touched: Set[String])
 
-  /** Probe plans per (root, version) — entries are a few key sets
+  /** Probe plans per manifest epoch — entries are a few key sets
     * plus touched-path sets, all metadata-scale; key files are
     * immutable and registry-refcounted (vacuum keeps referenced
     * ones), so entries never go stale. Each entry carries the
@@ -2783,21 +2799,22 @@ object ManifestTable {
     * [[compactEq]]). */
   private[graft] def eqProbes(spark: SparkSession, root: String,
                               version: Long): Option[Seq[EqProbe]] = {
-    val entries = metaAt(spark, root, version).eq
+    val rec = recordAt(spark, root, version)
+    val meta = metaOf(rec)
+    val entries = meta.eq
     if (entries.isEmpty) return Some(Nil)
-    val key = (canon(root), version)
     val maxBytes = spark.conf
       .get("spark.graft.eq.maxProbeBytes", (64L << 20).toString).toLong
-    EpochCache.get(EqProbePlans, key) match {
+    EpochCache.get(EqProbePlans, rec.key) match {
       case Some((bytes, plan)) if bytes <= maxBytes => return Some(plan)
       case Some(_) =>
         // a LOWERED guard evicts an oversized cached plan (and its
         // heap-held key tuples) instead of pinning the old decision
-        EpochCache.remove(EqProbePlans, key)
+        EpochCache.remove(EqProbePlans, rec.key)
         return None
       case None =>
     }
-    val schema = tableSchema(spark, root, version)
+    val schema = meta.schema
     val f = fs(spark, root)
     // lazy: an unsupported key type short-circuits WITHOUT the
     // per-entry FS walk (its None is deliberately never cached, so a
@@ -2810,7 +2827,7 @@ object ManifestTable {
         graft.sources.v2.GraftEqProbe.supported(schema(k).dataType)))
       if (!supported || keyBytes > maxBytes) None
       else {
-        val m = manifest(spark, root, version)
+        val m = manifest(spark, rec)
         // touched subsets per key-column group (entries of one
         // streaming ingest share keys — one proof serves them all);
         // per-file applicability then narrows by seq in the planner
@@ -2851,7 +2868,7 @@ object ManifestTable {
     // cached None would pin this version to the scratch path for the
     // JVM's life even after the conf is raised (the None computation
     // is a registry read + per-entry FS length — cheap to redo)
-    computed.foreach(plan => EpochCache.put(EqProbePlans, key, (keyBytes, plan)))
+    computed.foreach(plan => EpochCache.put(EqProbePlans, rec.key, (keyBytes, plan)))
     computed
   }
 
@@ -2875,10 +2892,11 @@ object ManifestTable {
   private[graft] def effectiveFiles(spark: SparkSession, root: String,
                                     version: Long)
       : Seq[(String, Long, Option[String], Long)] = {
-    val (schema, rows) = manifestCollected(spark, root, version)
+    val rec = recordAt(spark, root, version)
+    val (schema, rows) = manifestCollected(spark, rec)
     val (ip, is) = (schema.fieldIndex("path"), schema.fieldIndex("size"))
     val sizes = rows.map(r => r.getString(ip) -> r.getLong(is)).toMap
-    effectiveStates(spark, root, version).map(s =>
+    effectiveStates(spark, root, rec).map(s =>
       (s._1, sizes(s._1), s._2, s._3))
   }
 
@@ -2891,10 +2909,10 @@ object ManifestTable {
   private def effectiveManifest(spark: SparkSession, root: String,
                                 version: Long)
       : (DataFrame, Seq[(String, Option[String], Long, Long)]) = {
-    val m = manifest(spark, root, version)
-    if (metaAt(spark, root, version).eq.isEmpty)
-      return (m, dvStates(spark, root, version))
-    val states = effectiveStates(spark, root, version)
+    val rec = recordAt(spark, root, version)
+    val m = manifest(spark, rec)
+    if (metaOf(rec).eq.isEmpty) return (m, dvStates(spark, rec))
+    val states = effectiveStates(spark, root, rec)
     val spk = spark
     import spk.implicits._
     val stDf = states.map(s => (s._1, s._2.orNull, s._3))
@@ -2917,15 +2935,16 @@ object ManifestTable {
     * ORDERING predicate (delete seq > file seq — a delete never kills
     * rows that landed at or after it). Matched positions OR into the
     * files' existing vectors via [[writeVectors]]. */
-  private def resolveEq(spark: SparkSession, root: String, version: Long,
-                        m: DataFrame, entries: Seq[EqEntry])
+  private def resolveEq(spark: SparkSession, root: String,
+                        rec: VersionedTable.Commit, entries: Seq[EqEntry])
       : Seq[(String, Option[String], Long, Long)] = {
     val spk = spark
     import spk.implicits._
-    val raw = dvStates(spark, root, version)
-    val schema = tableSchema(spark, root, version)
+    val m = manifest(spark, rec)
+    val raw = dvStates(spark, rec)
+    val schema = metaOf(rec).schema
     val seqByPath: Map[String, Long] = {
-      val (ms, rows) = manifestCollected(spark, root, version)
+      val (ms, rows) = manifestCollected(spark, rec)
       val (ip, iq) = (ms.fieldIndex("path"), ms.fieldIndex("seq"))
       rows.map(r => r.getString(ip) -> r.getLong(iq)).toMap
     }
@@ -4224,7 +4243,7 @@ object ManifestTable {
     val widthExpr =
       if (widthCols.isEmpty) lit(null).cast("double")
       else widthCols.map { c =>
-        log(greatest(
+        org.apache.spark.sql.functions.log(greatest(
           col(s"${c}_max").cast("double") - col(s"${c}_min").cast("double"),
           lit(1e-12)))
       }.reduce(_ + _) / widthCols.size
@@ -4384,8 +4403,8 @@ object ManifestTable {
         val m =
           if (m0.columns.contains(bc)) m0
           else m0.withColumn(bc, lit(null).cast(BinaryType))
-        val todo = m.filter(col(bc).isNull).select(col("path")).collect()
-          .map(_.getString(0)).toSeq
+        val todo = m.filter(col(bc).isNull).select(col("path"), col("size"))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
         if (todo.isEmpty) None
         else {
           val bits = graft.sources.FileBloomIndex.buildFor(spark, todo,

@@ -66,23 +66,34 @@ object VersionedTable {
   private[sinks] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val NoMeta: JsonNode = NullNode.instance
 
+  /** Identity of a committed epoch — the key of every cache over it
+    * ([[graft.util.EpochCache]]): the epoch directory `dir` and the
+    * `claim` its [[Commit]] record names, the unique name of the stage
+    * that became the epoch. [[verifyClaim]] decides ownership of a
+    * published epoch by the same claim, and a root dropped and
+    * re-created at the same path keys its new epochs apart. */
+  final case class EpochKey(root: String, version: Long, claim: String) {
+    def dir: String = s"$root/epoch=$version"
+  }
+
   /** The one metadata record of an epoch:
-    *   - `claim`: the unique name of the stage that became the epoch —
-    *     [[verifyClaim]] decides ownership of a published epoch by it;
+    *   - `key`: the epoch and its claim;
     *   - `tsMs`: the commit timestamp ([[versionAtTimestamp]]);
     *   - `batch`: the stream replay marker ([[lastAppliedBatch]]), -1
     *     when none — every commit carries its base's unless it stamps
     *     its own, and a blind full replace resets it;
+    *   - `bytes`: the epoch's data-file byte total, taken once at stage
+    *     time — the size gate of the collected-manifest cache;
     *   - `meta`: the owner's object — a manifest table's schema and
     *     registries — JSON null when the owner has none. */
-  final case class Commit(claim: String, tsMs: Long, batch: Long,
-                          meta: JsonNode)
+  final case class Commit(key: EpochKey, tsMs: Long, batch: Long,
+                          bytes: Long, meta: JsonNode)
 
   /** The commit record of a retained epoch — one file read, decoded by
     * the one decoder; a missing, unreadable or malformed record fails
-    * loudly, naming the epoch. Not cached: keying a cache entry by the
-    * epoch's identity ([[EpochKey]]) costs a stat and a listing, more
-    * than the one read it would save. */
+    * loudly, naming the epoch. Not cached: the record names the
+    * epoch's identity, so every cache over the epoch keys on what this
+    * one read returns. */
   def record(spark: SparkSession, root: String, version: Long): Commit = {
     def fail(why: String, cause: Throwable) = throw new IllegalStateException(
       s"epoch $version of $root has no valid commit record " +
@@ -94,9 +105,10 @@ object VersionedTable {
         try mapper.readTree(in) finally in.close()
       } catch { case e: java.io.IOException => fail(e.toString, e) }
     if (n == null || !n.path("claim").isTextual ||
-        !n.path("ts").isIntegralNumber || !n.path("batch").isIntegralNumber)
-      fail("missing claim/ts/batch", null)
-    Commit(n.get("claim").asText, n.get("ts").asLong, n.get("batch").asLong,
+        !Seq("ts", "batch", "bytes").forall(n.path(_).isIntegralNumber))
+      fail("missing claim/ts/batch/bytes", null)
+    Commit(EpochKey(root, version, n.get("claim").asText), n.get("ts").asLong,
+      n.get("batch").asLong, n.get("bytes").asLong,
       Option(n.get("meta")).getOrElse(NoMeta))
   }
 
@@ -160,27 +172,25 @@ object VersionedTable {
   def write(df: DataFrame, root: String, meta: JsonNode = NoMeta): Long =
     writeKeyed(df, root, meta)._1
 
-  /** [[write]], also returning the published epoch's [[EpochKey]]
-    * (computed once for the cache primes) so a caller priming its own
-    * cache entry for the epoch reuses it. */
+  /** [[write]], also returning the published epoch's [[EpochKey]] so a
+    * caller priming its own cache entry for the epoch reuses it. */
   private[sinks] def writeKeyed(df: DataFrame, root: String,
-                                meta: JsonNode)
-      : (Long, Option[EpochKey]) = {
+                                meta: JsonNode): (Long, EpochKey) = {
     val spark = df.sparkSession
-    var stageDir = stageEpoch(df, root, meta, -1L)
+    var claim = stageEpoch(df, root, meta, -1L)
     var next = latestVersion(spark, root) + 1
     var won = false
     while (!won) {
-      claimEpoch(spark, root, stageDir, next) match {
+      claimEpoch(spark, root, claim, next) match {
         case Won          => won = true
         case Lost         => next += 1
         case LostConsumed =>
           // the degenerate-rename loser's stage was consumed (see
           // [[claimEpoch]]) — re-stage and try the next number
-          stageDir = stageEpoch(df, root, meta, -1L); next += 1
+          claim = stageEpoch(df, root, meta, -1L); next += 1
       }
     }
-    (next, publish(spark, root, next, df.schema))
+    (next, publish(spark, root, next, df.schema, claim))
   }
 
   /** Optimistic-concurrency commit: publish the staged rewrite ONLY as
@@ -197,16 +207,16 @@ object VersionedTable {
   private[sinks] def tryCommitAs(df: DataFrame, root: String,
                                  expectedBase: Long,
                                  meta: JsonNode,
-                                 batch: Long)
-      : Option[(Long, Option[EpochKey])] = {
+                                 batch: Long): Option[(Long, EpochKey)] = {
     val spark = df.sparkSession
-    val stageDir = stageEpoch(df, root, meta, batch)
+    val claim = stageEpoch(df, root, meta, batch)
     val want = expectedBase + 1
-    claimEpoch(spark, root, stageDir, want) match {
+    claimEpoch(spark, root, claim, want) match {
       case Won =>
-        Some((want, publish(spark, root, want, df.schema)))
+        Some((want, publish(spark, root, want, df.schema, claim)))
       case Lost =>
-        fs(spark, root).delete(stageDir, true): Unit
+        fs(spark, root).delete(new org.apache.hadoop.fs.Path(root, claim),
+          true): Unit
         None
       case LostConsumed => None // stage already gone (see claimEpoch)
     }
@@ -225,14 +235,17 @@ object VersionedTable {
       .map(_.toInt).getOrElse(65536)
 
   /** Land `df` and its [[Commit]] record in a hidden staging directory
-    * readers and [[versions]] never resolve. The record is written
-    * last; its claim is the stage's own unique name. */
+    * readers and [[versions]] never resolve, and return the claim: the
+    * stage's own unique name, `root/<claim>`. The record is written
+    * last, with the data files' byte total — the local stage's one file
+    * length, or one listing after a Spark write. */
   private def stageEpoch(df: DataFrame, root: String,
-                         meta: JsonNode,
-                         batch: Long): org.apache.hadoop.fs.Path = {
+                         meta: JsonNode, batch: Long): String = {
     val name = s".stage-${java.util.UUID.randomUUID().toString}"
+    val dir = new org.apache.hadoop.fs.Path(root, name)
     val spark = df.sparkSession
-    val wroteLocal =
+    val f = fs(spark, root)
+    val localBytes =
       try {
         LocalEpoch.localRows(df.queryExecution.optimizedPlan,
           localStageMaxRows(spark)) match {
@@ -243,33 +256,31 @@ object VersionedTable {
               if df.queryExecution.optimizedPlan.schema.fields
                 .map(f => (f.name, f.dataType)).toSeq ==
                 df.schema.fields.map(f => (f.name, f.dataType)).toSeq =>
-            val dir = new org.apache.hadoop.fs.Path(s"$root/$name")
-            val f = fs(spark, root)
+            val file = new org.apache.hadoop.fs.Path(dir,
+              s"part-00000-${java.util.UUID.randomUUID()}.parquet")
             f.mkdirs(dir): Unit
-            LocalEpoch.writeParquet(spark,
-              new org.apache.hadoop.fs.Path(dir,
-                s"part-00000-${java.util.UUID.randomUUID()}.parquet"),
+            LocalEpoch.writeParquet(spark, file,
               df.queryExecution.optimizedPlan.schema, rows)
-            true
-          case _ => false
+            Some(f.getFileStatus(file).getLen)
+          case _ => None
         }
       } catch {
         case e: Throwable if scala.util.control.NonFatal(e) =>
           // a torn local stage must not poison the fallback write
-          try fs(spark, root).delete(
-            new org.apache.hadoop.fs.Path(s"$root/$name"), true): Unit
+          try f.delete(dir, true): Unit
           catch { case _: java.io.IOException => () }
-          false
+          None
       }
-    if (!wroteLocal)
-      df.write.mode("overwrite").parquet(s"$root/$name")
+    val bytes = localBytes.getOrElse {
+      df.write.mode("overwrite").parquet(dir.toString)
+      f.listStatus(dir).map(_.getLen).sum
+    }
     val rec = mapper.createObjectNode().put("claim", name)
-      .put("ts", commitClock.nowMs()).put("batch", batch)
+      .put("ts", commitClock.nowMs()).put("batch", batch).put("bytes", bytes)
     rec.set[JsonNode]("meta", meta)
-    val out = fs(spark, root).create(
-      new org.apache.hadoop.fs.Path(s"$root/$name", RecordFile), true)
+    val out = f.create(new org.apache.hadoop.fs.Path(dir, RecordFile), true)
     try out.write(mapper.writeValueAsBytes(rec)) finally out.close()
-    new org.apache.hadoop.fs.Path(root, name)
+    name
   }
 
   private[graft] sealed trait Claim
@@ -296,22 +307,22 @@ object VersionedTable {
     * decided by [[verifyClaim]] reading the published epoch's record
     * back. A detected degenerate loser deletes its copied-in
     * garbage and reports its stage consumed. */
-  private def claimEpoch(spark: SparkSession, root: String,
-                         stageDir: org.apache.hadoop.fs.Path,
+  private def claimEpoch(spark: SparkSession, root: String, claim: String,
                          version: Long): Claim = {
+    val stageDir = new org.apache.hadoop.fs.Path(root, claim)
     val dst = new org.apache.hadoop.fs.Path(root, s"epoch=$version")
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       dst.toUri, spark.sparkContext.hadoopConfiguration)
     try {
       fc.rename(stageDir, dst)
-      verifyClaim(spark, root, version, stageDir.getName)
+      verifyClaim(spark, root, version, claim)
     } catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => Lost
       case _: java.io.IOException if fs(spark, root).exists(dst) =>
         // lost the race mid-rename; if our stage survived we can
         // retry cheaply, else the failed rename half-consumed it
         if (fs(spark, root).exists(stageDir)) Lost
-        else verifyClaim(spark, root, version, stageDir.getName)
+        else verifyClaim(spark, root, version, claim)
     }
   }
 
@@ -333,7 +344,7 @@ object VersionedTable {
     var attempt = 0
     while (attempt < 5) {
       val owner =
-        try Some(record(spark, root, version).claim)
+        try Some(record(spark, root, version).key.claim)
         catch { case _: IllegalStateException => None }
       owner match {
         case Some(o) if o == stageName => return Won
@@ -422,20 +433,21 @@ object VersionedTable {
     // the marker at a version this check reads (→ None), or claims
     // `next` first (→ our claim loses, the next iteration re-checks)
     // — the TOCTOU window of a check-then-blind-claim is closed.
-    var stageDir = stageEpoch(df, root, NoMeta, batchId)
+    var claim = stageEpoch(df, root, NoMeta, batchId)
     var next = latestVersion(spark, root) + 1
     while (true) {
       if (batchId <= lastAppliedBatch(spark, root)) {
-        fs(spark, root).delete(stageDir, true): Unit
+        fs(spark, root).delete(new org.apache.hadoop.fs.Path(root, claim),
+          true): Unit
         return None
       }
-      claimEpoch(spark, root, stageDir, next) match {
+      claimEpoch(spark, root, claim, next) match {
         case Won =>
-          publish(spark, root, next, df.schema): Unit
+          publish(spark, root, next, df.schema, claim): Unit
           return Some(next)
         case Lost         => next += 1
         case LostConsumed =>
-          stageDir = stageEpoch(df, root, NoMeta, batchId)
+          claim = stageEpoch(df, root, NoMeta, batchId)
           next += 1
       }
     }
@@ -504,57 +516,22 @@ object VersionedTable {
     readVersion(spark, root, v)
   }
 
-  /** Identity of an immutable epoch directory — the key of every
-    * cache over it ([[graft.util.EpochCache]]). A committed `epoch=N`
-    * directory never changes (the publishing rename is the commit;
-    * only vacuum removes it), but mtime alone does not identify it: a
-    * rename preserves the stage dir's mtime and filesystem mtime
-    * granularity can be a full second, so a root dropped and
-    * re-created at the same path within one tick could serve stale
-    * entries. The fingerprint (a hash of the child file names and
-    * lengths from one listStatus) closes that window: a re-created
-    * epoch writes differently-named part files. `bytes` is the
-    * children's total length from the same listing — the size gate
-    * the collected-manifest cache localizes by. */
-  private[sinks] final case class EpochKey(uri: String, mtime: Long,
-                                           fingerprint: Long, bytes: Long)
-
-  /** [[EpochKey]] of an epoch directory; None when it is unstatable
-    * (callers then use the uncached path). One getFileStatus + one
-    * listStatus — far below the Spark job the caches skip. */
-  private[sinks] def epochKey(spark: SparkSession, root: String,
-                              dir: org.apache.hadoop.fs.Path)
-      : Option[EpochKey] =
-    try {
-      val f = fs(spark, root)
-      val st = f.getFileStatus(dir)
-      var fp = 1125899906842597L
-      var bytes = 0L
-      f.listStatus(dir).sortBy(_.getPath.getName).foreach { c =>
-        fp = fp * 31 + c.getPath.getName.hashCode
-        fp = fp * 31 + c.getLen
-        bytes += c.getLen
-      }
-      Some(EpochKey(dir.toUri.toString, st.getModificationTime, fp, bytes))
-    } catch { case _: java.io.IOException => None }
-
   /** Publish a just-claimed epoch: bump the pointer and prime its
     * epoch-schema entry from the written frame's own schema, so even
     * the FIRST read of a new version skips the footer-inference job
-    * ([[readEpoch]] only helps re-reads; every commit's read-back paid
+    * (the cache alone only helps re-reads; every commit's read-back paid
     * one inference job per fresh epoch). File-source relations force every column nullable
     * (`DataSource` applies `asNullable`), so the primed value is the
     * all-nullable rendering of the written schema — identical to what
     * inference would return for the parquet files this very frame
-    * wrote. Best-effort: a failed stat just leaves the lazy path.
-    * Returns the epoch's key (None when unstatable). */
+    * wrote. The key comes from the claim [[verifyClaim]] just read
+    * back, with no filesystem call. Returns it. */
   private def publish(spark: SparkSession, root: String, version: Long,
-                      schema: org.apache.spark.sql.types.StructType)
-      : Option[EpochKey] = {
+                      schema: org.apache.spark.sql.types.StructType,
+                      claim: String): EpochKey = {
     bumpPointer(spark, root, version)
-    val key = epochKey(spark, root,
-      new org.apache.hadoop.fs.Path(s"$root/epoch=$version"))
-    key.foreach(EpochCache.put(EpochCache.Schemas, _, allNullable(schema)))
+    val key = EpochKey(root, version, claim)
+    EpochCache.put(EpochCache.Schemas, key, allNullable(schema))
     key
   }
 
@@ -577,19 +554,14 @@ object VersionedTable {
     nt(s).asInstanceOf[StructType]
   }
 
-  /** As-of read of a retained epoch. */
-  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
-    readEpoch(spark, root, version, epochKey(spark, root,
-      new org.apache.hadoop.fs.Path(s"$root/epoch=$version")))
-
-  /** [[readVersion]] under an already-computed key. The epoch's parquet
-    * schema is inferred ONCE per [[EpochKey]] (footer inference was the
-    * single largest job population in the table-format query family —
-    * 118 one-task jobs in one MV-refresh query). */
-  private[sinks] def readEpoch(spark: SparkSession, root: String,
-                               version: Long, key: Option[EpochKey])
-      : DataFrame =
-    EpochCache.readParquet(spark, s"$root/epoch=$version", key)
+  /** As-of read of a retained epoch. Its parquet schema is inferred
+    * ONCE per [[EpochKey]] (footer inference was the single largest job
+    * population in the table-format query family — 118 one-task jobs
+    * in one MV-refresh query). */
+  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
+    val key = record(spark, root, version).key
+    EpochCache.readParquet(spark, key.dir, key)
+  }
 
   /** Raw commit stamp of one epoch (ms). */
   def commitTimestamp(spark: SparkSession, root: String, version: Long): Long =

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Per-file Bloom membership filters — the EQUALITY complement of
@@ -31,13 +33,21 @@ import org.apache.spark.sql.types.{StructField, StructType}
 object FileBloomIndex {
 
   /** Build filter rows (path, bloom, row_count) for an explicit file
-    * batch: cost ∝ those files, not the table. `key` is read with its
-    * declared type, so files written under a narrower type (before a
-    * widening) hash the values a probe of the declared type hashes. */
-  def buildFor(spark: SparkSession, files: Seq[String], key: StructField,
-               numBits: Int = 1 << 17, numHashes: Int = 5): DataFrame = {
+    * batch of (path, size) pairs: cost ∝ those files, not the table.
+    * The pairs are the scan's listing: a path list handed to
+    * `spark.read.parquet` starts a listing job past 32 paths. `key` is
+    * read with its declared type, so files written under a narrower
+    * type (before a widening) hash the values a probe of the declared
+    * type hashes. */
+  def buildFor(spark: SparkSession, files: Seq[(String, Long)],
+               key: StructField, numBits: Int = 1 << 17,
+               numHashes: Int = 5): DataFrame = {
     graft.functions.VectorExpressions.ensureRegistered(spark)
-    spark.read.schema(StructType(Seq(key))).parquet(files: _*)
+    val schema = StructType(Seq(key))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+        new graft.sources.v2.GraftManifestFileIndex(spark, "", files, 0L,
+          schema, None),
+        StructType(Nil), schema, None, new ParquetFileFormat, Map.empty)(spark))
       .groupBy(input_file_name().as("path"))
       .agg(graft.functions.VectorExpressions
         .bloomBuild(xxhash64(col(key.name)), numBits, numHashes).as("bloom"),

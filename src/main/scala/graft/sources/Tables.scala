@@ -26,14 +26,11 @@ object Tables {
     * (mtime, length) and re-infers. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val key =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p)
-        Some((path, st.getModificationTime, st.getLen))
-      } catch { case _: java.io.IOException => None }
-    graft.util.EpochCache.readParquet(spark, path, key)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p)
+    graft.util.EpochCache.readParquet(spark, path,
+      (path, st.getModificationTime, st.getLen))
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

@@ -476,8 +476,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
           else dataSchema
         val index =
           if (isManifest) {
-            val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
-              graft.sinks.ManifestTable.manifestsRoot(root), v)
+            val ts = graft.sinks.ManifestTable.recordAt(spark, root, v).tsMs
             new GraftManifestFileIndex(spark, root, pairs, ts,
               readSchema, None)
           } else
@@ -665,8 +664,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
     val files = added.result()
     if (files.isEmpty) return Array.empty
     val readSchema = graft.sinks.ManifestTable.toPhysical(dataSchema)
-    val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
-      graft.sinks.ManifestTable.manifestsRoot(root), to)
+    val ts = graft.sinks.ManifestTable.recordAt(spark, root, to).tsMs
     val index = new GraftManifestFileIndex(spark, root, files, ts,
       readSchema, None)
     val batch = ParquetScanBuilder(spark, index, readSchema, readSchema,

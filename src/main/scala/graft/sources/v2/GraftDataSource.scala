@@ -610,10 +610,10 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
         // timestamp all come from committed metadata, so the scan
         // plans with ZERO filesystem calls (the Delta log-backed-index
         // shape) — at 100k files an InMemoryFileIndex would stat each.
-        val m = graft.sinks.ManifestTable.manifest(spark, root, version)
-        val cols = graft.sinks.ManifestTable.statsCols(spark, root, version)
-        val ts = graft.sinks.VersionedTable.commitTimestamp(spark,
-          graft.sinks.ManifestTable.manifestsRoot(root), version)
+        val rec = graft.sinks.ManifestTable.recordAt(spark, root, version)
+        val m = graft.sinks.ManifestTable.manifest(spark, rec)
+        val cols = graft.sinks.ManifestTable.statsCols(spark, rec)
+        val ts = rec.tsMs
         // bucket-transform predicate pruning serves point/IN probes on
         // a bucketed key from metadata alone — NOT gated on the SPJ
         // conf (pruning costs nothing; only bucket-grained task

@@ -9,10 +9,12 @@ import org.apache.spark.sql.types.StructType
   * filesystem round-trips to recompute and never changes once written.
   *
   * Every entry is keyed by an identity the CALLER derives from the
-  * thing itself — an epoch's (uri, mtime, child fingerprint), a file's
-  * (path, mtime, length), an index's (root, version), a view's (root,
-  * spec text), a proof's (roots, versions, predicate) — so an entry can
-  * only be served for the exact object it was computed from. Nothing
+  * thing itself — an epoch's (uri, claim) from its commit record,
+  * which also keys what is computed from one epoch (its schema,
+  * collected manifest, equality-delete resolutions and probe plans,
+  * and, with the predicate, its pruning proofs), a file's (path,
+  * mtime, length), a view's (root, spec text) — so an entry can only
+  * be served for the exact object it was computed from. Nothing
   * is invalidated by hand; eviction only costs the recomputation, so a
   * miss is always correct and the cache is purely an optimization.
   * Checks that guard a hit against outside change (a swept scratch
@@ -85,17 +87,16 @@ object EpochCache {
   /** Inferred parquet schemas — of epoch directories and input files. */
   val Schemas = new Kind[StructType](s => 64L + 128L * s.length)
 
-  /** `spark.read.parquet(path)` with its schema inferred once per `key`
-    * (None: uncached): a hit re-reads with `.schema(s)`, skipping the
-    * footer-reading Spark job schema inference launches, and returns a
-    * frame identical to an uncached read. */
-  def readParquet(spark: SparkSession, path: String,
-                  key: Option[Any]): DataFrame =
-    key.flatMap(get(Schemas, _)) match {
+  /** `spark.read.parquet(path)` with its schema inferred once per `key`:
+    * a hit re-reads with `.schema(s)`, skipping the footer-reading
+    * Spark job schema inference launches, and returns a frame
+    * identical to an uncached read. */
+  def readParquet(spark: SparkSession, path: String, key: Any): DataFrame =
+    get(Schemas, key) match {
       case Some(s) => spark.read.schema(s).parquet(path)
       case None =>
         val df = spark.read.parquet(path)
-        key.foreach(put(Schemas, _, df.schema))
+        put(Schemas, key, df.schema)
         df
     }
 }

@@ -21,19 +21,20 @@ class EpochCacheSpec extends AnyFunSuite {
   private def fsOf(p: String) = new Path(p)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Spark jobs started while `body` runs. Listener events arrive in
-    * order, so once a trailing barrier job's start is seen every
-    * earlier job has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Descriptions (null when unset) of the Spark jobs started while
+    * `body` runs. Listener events arrive in order, so once a trailing
+    * barrier job's start is seen every earlier job has been counted. */
+  private def jobDescriptionsDuring(body: => Unit): Seq[String] = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val barrier = new java.util.concurrent.CountDownLatch(1)
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            j.properties.getProperty("spark.job.description") == "barrier")
-          barrier.countDown()
-        else started.incrementAndGet(): Unit
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (d.contains("barrier")) barrier.countDown()
+        else started.add(d): Unit
+      }
     }
     spark.sparkContext.addSparkListener(l)
     try {
@@ -42,9 +43,11 @@ class EpochCacheSpec extends AnyFunSuite {
       try spark.sparkContext.parallelize(1 to 1, 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(barrier.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      started.get()
+      started.toArray.toSeq.map(_.asInstanceOf[Option[String]].orNull)
     } finally spark.sparkContext.removeSparkListener(l)
   }
+
+  private def jobsDuring(body: => Unit): Int = jobDescriptionsDuring(body).size
 
   /** Rows as exact strings: doubles by raw bits (NaN vs -0.0 vs 0.0),
     * binaries by content — what `Row.equals` would blur. */
@@ -136,7 +139,7 @@ class EpochCacheSpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, dst).count() == 6L)
   }
 
-  test("a re-created table whose epoch keeps the old mtime never serves the old rows: the fingerprint keys the cache") {
+  test("a re-created table whose epoch keeps the old mtime never serves the old rows: the commit record's claim keys the cache") {
     val root = s"${tmp("graft-cache-stale")}/t"
     ManifestTable.create(spark.range(0, 5).select(col("id").as("k")), root, Seq("k"))
     def keys(): Set[Long] =
@@ -151,6 +154,71 @@ class EpochCacheSpec extends AnyFunSuite {
     assert(f.getFileStatus(epoch).getModificationTime == oldMtime)
     assert(keys() == (100L until 105L).toSet,
       "the re-created epoch must read its own rows")
+  }
+
+  test("a root dropped and re-created with pending equality deletes at the same version reads the new table's rows, through the probe and the materializing path") {
+    val root = s"${tmp("graft-cache-stale-eq")}/t"
+    val key = "spark.graft.eq.materializeOnRead"
+    def rows(): Seq[(Long, String)] =
+      ManifestTable.read(spark, root).as[(Long, String)].collect().toSeq.sorted
+    def bothPaths(): Seq[Seq[(Long, String)]] =
+      Seq("false", "true").map { m =>
+        spark.conf.set(key, m)
+        try rows() finally spark.conf.unset(key)
+      }
+    def table(ks: Seq[Long], upsert: (Long, String)): Long = {
+      ManifestTable.create(ks.map(k => (k, s"a$k")).toDF("k", "v")
+        .repartition(2), root, Seq("k"))
+      ManifestTable.mergeEq(Seq(upsert).toDF("k", "v"), root, Seq("k"))
+    }
+    // the old table's delete key matches no row: its resolution writes
+    // no scratch vector, so only the key can tell the tables apart
+    assert(table(0L until 5L, (50L, "x")) == 1L)
+    val old = (0L until 5L).map(k => (k, s"a$k")) :+ ((50L, "x"))
+    assert(bothPaths() == Seq(old, old)) // warm: probe plan and resolution
+    assert(fsOf(root).delete(new Path(root), true))
+    assert(table(10L until 15L, (12L, "y")) == 1L)
+    val fresh = Seq((10L, "a10"), (11L, "a11"), (12L, "y"), (13L, "a13"),
+      (14L, "a14"))
+    assert(bothPaths() == Seq(fresh, fresh),
+      "the re-created version must read its own rows and deletes")
+  }
+
+  test("warm explicit-version manifest accessors never list: filesAt, manifest and statsCols at a fixed version") {
+    val dir = tmp("graft-cache-nolist")
+    ManifestTable.create(spark.range(0, 40).select(col("id").as("k"),
+      (col("id") % 3).as("g")).repartition(3), s"$dir/t", Seq("k", "g"))
+    ManifestTable.write(spark.range(40, 45).select(col("id").as("k"),
+      lit(1L).as("g")), s"$dir/t")
+    // the same on-disk table, reached through the counting scheme
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFs].getName)
+    val root = s"counting://$dir/t"
+    def access(): Unit = (0L to 1L).foreach { v =>
+      assert(ManifestTable.filesAt(spark, root, v).nonEmpty)
+      assert(ManifestTable.manifest(spark, root, v).columns.contains("k_min"))
+      assert(ManifestTable.statsCols(spark, root, v) == Seq("k", "g"))
+    }
+    access() // warm
+    CountingFs.listCalls.set(0L)
+    access()
+    assert(CountingFs.listCalls.get() == 0L,
+      s"warm accessors listed ${CountingFs.listCalls.get()} times")
+  }
+
+  test("buildBloom over more than 32 files reads them through the manifest's (path, size) listing: no listing job") {
+    val root = s"${tmp("graft-bloom-nolist")}/t"
+    ManifestTable.create(spark.range(0, 400).select(col("id").as("k"))
+      .repartition(40), root, Seq("k"))
+    assert(ManifestTable.filesAt(spark, root, 0L).size == 40)
+    var v: Option[Long] = None
+    val listings = jobDescriptionsDuring {
+      v = ManifestTable.buildBloom(spark, root, "k")
+    }.filter(d => d != null && d.startsWith("Listing leaf files"))
+    assert(listings.isEmpty, s"listing jobs: $listings")
+    val bits = ManifestTable.manifest(spark, root, v.get)
+      .select(col(ManifestTable.bloomCol("k"))).as[Array[Byte]].collect()
+    assert(bits.length == 40 && bits.forall(_ != null))
   }
 
   test("the byte budget holds: filling past it evicts least-recently-used entries, and evicted epochs re-read identically") {

@@ -2140,7 +2140,7 @@ class OperatorsSpec extends AnyFunSuite {
     val lay = util.Scratch.dir("fbi_lay")
     docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(lay)
     val idx = FileBloomIndex.buildFor(spark, sources.FileManifest.listFiles(spark, lay)
-      .select("path").as[String].collect().toSeq,
+      .select("path", "size").as[(String, Long)].collect().toSeq,
       org.apache.spark.sql.types.StructField("doc_id",
         org.apache.spark.sql.types.LongType))
     val total = idx.count()

@@ -1251,7 +1251,7 @@ class SinksSpec extends AnyFunSuite {
       s"the loser must detect the foreign record, got $claim")
     assert(!garbage.exists(), "the loser must sweep its copied-in stage")
     // the true owner (whose name the epoch's record carries) verifies Won
-    val owner = sinks.VersionedTable.record(spark, root, 0).claim
+    val owner = sinks.VersionedTable.record(spark, root, 0).key.claim
     assert(owner.startsWith(".stage-"))
     assert(sinks.VersionedTable.verifyClaim(spark, root, 0, owner) ==
       sinks.VersionedTable.Won)
