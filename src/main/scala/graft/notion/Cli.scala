@@ -2,8 +2,9 @@ package graft.notion
 
 import graft.sinks.{ExcelSink, JsonlSink}
 import graft.sinks.pbi.{PbiSpec, Refresh, Registry}
-import graft.util.{Broadcasts, Par}
+import graft.util.Par
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.util.control.NonFatal
 
 /** M6 — command dispatcher with the reference CLI's full 8-command
@@ -87,7 +88,7 @@ object Cli {
   }
 
   private def canonDataset(env: Env, dataDir: String, ds: String,
-                           schema: org.apache.spark.sql.types.StructType) = {
+                           schema: StructType) = {
     val date = JsonlSink.latestDate(env.spark, dataDir, "canon", ds).getOrElse(
       throw new IllegalStateException(s"No canon data found for dataset: $ds"))
     env.spark.read.schema(schema).json(JsonlSink.datasetDir(dataDir, "canon", ds, date))
@@ -98,19 +99,21 @@ object Cli {
     env.spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
     NotionSchemas.rawRecordSchema)
 
-  /** Runs `f` over the canon tables, cached for its duration: each
-    * derived table reads them several times, and uncached every read is
-    * a JSON scan of its own. The caches are dropped before returning,
-    * so none outlives the command. */
+  /** Runs `f` over the canon tables, cached for its duration: the
+    * derived star reads them several times, and uncached every read is
+    * a JSON scan of its own. The read is narrow: each table is read and
+    * cached without its `attributes` map (every raw property value),
+    * which no derived table outputs. The caches are dropped before
+    * returning, so none outlives the command. */
   private def withCanonTables[T](env: Env, dataDir: String)(
       f: (DataFrame, DataFrame, DataFrame) => T): T = {
     val empty = emptyRaw(env)
-    val defs = canonDataset(env, dataDir, "workflowDefinitions",
-      Normalize.workflowDefinitions(empty, env.cfg).schema).cache()
-    val stages = canonDataset(env, dataDir, "workflowStages",
-      Normalize.workflowStages(empty, env.cfg).schema).cache()
-    val ts = canonDataset(env, dataDir, "timeslices",
-      Normalize.timeslices(empty, env.cfg).schema).cache()
+    def read(ds: String, builder: DataFrame => DataFrame) =
+      canonDataset(env, dataDir, ds, StructType(
+        builder(empty).schema.filterNot(_.name == "attributes"))).cache()
+    val defs = read("workflowDefinitions", Normalize.workflowDefinitions(_, env.cfg))
+    val stages = read("workflowStages", Normalize.workflowStages(_, env.cfg))
+    val ts = read("timeslices", Normalize.timeslices(_, env.cfg))
     try f(defs, stages, ts)
     finally Seq(defs, stages, ts).foreach(_.unpersist(blocking = true))
   }
@@ -132,15 +135,15 @@ object Cli {
     r
   }
 
-  /** `excel:export` (cli/index.ts:219-273). */
+  /** `excel:export` (cli/index.ts:219-273): the star is derived once,
+    * no table collected past one sheet's row limit; the integrity checks
+    * and the sheets then read the collected tables. */
   def excelExport(env: Env, dataDir: String, outputPath: String): Map[String, Long] = {
     val counts = withCanonTables(env, dataDir) { (defs, stages, ts) =>
-      val tables = Derive.deriveAll(defs, stages, ts)
+      val tables = Derive.deriveAll(defs, stages, ts, maxRows = Some(ExcelSink.MaxRows))
       val checks = Derive.integrityChecks(tables("FactTimeslices"), tables("DimStage"),
         tables("DimWorkflow"), stages, defs)
-      ExcelSink.write(tables.map { case (k, v) =>
-        k -> (if (v.columns.contains("attributes")) v.drop("attributes") else v) },
-        outputPath, checks)
+      ExcelSink.write(tables, outputPath, checks)
     }
     counts.toSeq.sortBy(_._1).foreach { case (k, n) => env.log(s"[excel] $k rows=$n") }
     counts
@@ -305,17 +308,15 @@ object Cli {
       Registry.load(dataDir), groupId, datasetName).getOrElse(
       throw new IllegalStateException(
         s"Dataset '$datasetName' not found in registry; run pbi:provision first."))
-    // collected side by side; the PBI push is driver-side by design (it
-    // posts through one client, in the spec's table order)
+    // the derived tables are already collected, so reading their rows
+    // starts no job; the PBI push is driver-side by design (it posts
+    // through one client, in the spec's table order)
     val rows = withCanonTables(env, dataDir) { (defs, stages, ts) =>
-      val tables = Derive.deriveAll(defs, stages, ts)
-      val names = tables.keys.toSeq
-      names.zip(Par.map(names) { name =>
-        val df = tables(name)
+      Derive.deriveAll(defs, stages, ts).map { case (name, df) =>
         val cols = df.columns.toSeq
-        Broadcasts.collect(df).toSeq.map(r =>
+        name -> df.collect().toSeq.map(r =>
           cols.zipWithIndex.map { case (c, i) => c -> r.get(i) }.toMap)
-      }).toMap
+      }
     }
     Refresh.executeWipeAndReload(env.client, groupId, datasetId, spec, rows,
       log = env.log)

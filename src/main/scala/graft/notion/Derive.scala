@@ -15,6 +15,11 @@ import org.apache.spark.sql.functions._
   * become left_anti counts (J4-J6); key-set unions become full-outer
   * joins (J9/A10). The fact table never shuffles for dimension lookups —
   * all dims broadcast.
+  *
+  * The per-table builders each carry their whole lineage, lookups
+  * included. [[deriveAll]] instead computes every shared piece once, in
+  * dependency order, and hands back tables backed by their collected
+  * rows.
   */
 object Derive {
 
@@ -145,19 +150,27 @@ object Derive {
       "source_page_id").select(col("source_page_id").as("lbl_key"),
       coalesce(col("page_title"), col("source_page_id")).as("lbl_label"))
 
-  /** Resolve a canonical workflow id to (key, label) with the
-    * reference's fallback chain (derive/index.ts:131-141).
+  /** The three build sides the tables resolve through: the stage
+    * winners and the two workflow-definition lookups.
     *
-    * Both lookup build sides read the same narrow 4-column projection
-    * of `defs`, uncached: a cache here would outlive the command in the
+    * Both definition lookups read the same narrow 4-column projection of
+    * `defs`, uncached: a cache here would outlive the command in the
     * session's CacheManager. The CLI caches the canon tables themselves
     * for one command, where `page_title` is a plain column. */
-  private def resolveWorkflow(df: DataFrame, canonId: Column, defs: DataFrame,
-                              keyName: String, labelName: String): DataFrame = {
+  private case class Lookups(stages: DataFrame, wf: DataFrame, wfLabel: DataFrame)
+
+  private def lookups(defs: DataFrame, stages: DataFrame): Lookups = {
     val defsNarrow = pruned(defs, "workflow_definition_id", "source_page_id",
       "page_title", "last_edited_time")
-    val lk = broadcast(wfLookup(defsNarrow))
-    val lbl = broadcast(wfLabelByKey(defsNarrow))
+    Lookups(stageWinners(stages), wfLookup(defsNarrow), wfLabelByKey(defsNarrow))
+  }
+
+  /** Resolve a canonical workflow id to (key, label) with the
+    * reference's fallback chain (derive/index.ts:131-141). */
+  private def resolveWorkflow(df: DataFrame, canonId: Column, lookups: Lookups,
+                              keyName: String, labelName: String): DataFrame = {
+    val lk = broadcast(lookups.wf)
+    val lbl = broadcast(lookups.wfLabel)
     val withDef = df.join(lk, canonId === lk("wf_canon_id"), "left")
     val key = coalesce(col("wf_key"), Scalars.toUuidMaybe(canonId),
       lit("workflow_definition_unknown"))
@@ -168,9 +181,16 @@ object Derive {
       .drop("wf_canon_id", "wf_key", "wf_title", "lbl_key", "lbl_label", "_wfkey")
   }
 
-  /** Stage lookup (J2 build side): canonical stage id → key + meta. */
-  private def stageLookup(stages: DataFrame, prefix: String): DataFrame =
-    lastWins(stages, "workflow_stage_id").select(
+  /** The last-wins stage row per canonical stage id, narrowed to the
+    * four columns a stage lookup reads. */
+  private def stageWinners(stages: DataFrame): DataFrame =
+    lastWins(stages, "workflow_stage_id").select(col("workflow_stage_id"),
+      col("source_page_id"), col("stage_number"), col("stage_label"))
+
+  /** Stage lookup (J2 build side): canonical stage id → key + meta,
+    * under the column prefix of one join. */
+  private def stageLookup(winners: DataFrame, prefix: String): DataFrame =
+    winners.select(
       col("workflow_stage_id").as(s"${prefix}_canon_id"),
       col("source_page_id").as(s"${prefix}_stage_key"),
       stageNumberOrNull(col("stage_number")).as(s"${prefix}_stage_n"),
@@ -179,12 +199,15 @@ object Derive {
   // -- the seven tables ----------------------------------------------
 
   /** FactTimeslices (derive/index.ts:131-182): 24 columns. */
-  def factTimeslices(ts: DataFrame, defs: DataFrame, stages: DataFrame): DataFrame = {
-    val fromLk = broadcast(stageLookup(stages, "from"))
-    val toLk = broadcast(stageLookup(stages, "to"))
+  def factTimeslices(ts: DataFrame, defs: DataFrame, stages: DataFrame): DataFrame =
+    factFrom(ts, lookups(defs, stages))
+
+  private def factFrom(ts: DataFrame, lookups: Lookups): DataFrame = {
+    val fromLk = broadcast(stageLookup(lookups.stages, "from"))
+    val toLk = broadcast(stageLookup(lookups.stages, "to"))
     val toDateTimeRaw = coalesce(col("ended_at"), col("started_at"),
       col("last_edited_time"), col("created_time"))
-    resolveWorkflow(ts, col("workflow_definition_id"), defs, "_wf_key", "_wf_label")
+    resolveWorkflow(ts, col("workflow_definition_id"), lookups, "_wf_key", "_wf_label")
       .join(fromLk, col("from_step_id") === col("from_canon_id"), "left")
       .join(toLk, col("to_step_id") === col("to_canon_id"), "left")
       .select(
@@ -220,13 +243,16 @@ object Derive {
 
   /** DimStage (derive/index.ts:184-207,216-218): last-wins per stage key,
     * sorted by key. */
-  def dimStage(stages: DataFrame, defs: DataFrame): DataFrame = {
+  def dimStage(stages: DataFrame, defs: DataFrame): DataFrame =
+    dimStageFrom(stages, lookups(defs, stages))
+
+  private def dimStageFrom(stages: DataFrame, lookups: Lookups): DataFrame = {
     val n = stageNumber(col("stage_number"))
     val s = pruned(stages, "workflow_definition_id", "source_page_id",
       "stage_number", "stage_label", "last_edited_time")
     // last-wins BEFORE the projection (last_edited_time is still in
     // scope) — dropDuplicates alone keeps an arbitrary row per key
-    lastWins(resolveWorkflow(s, col("workflow_definition_id"), defs,
+    lastWins(resolveWorkflow(s, col("workflow_definition_id"), lookups,
       "workflow_definition_key", "workflow_definition"), "source_page_id")
       .select(
         col("source_page_id").as("stage_key"),
@@ -295,8 +321,8 @@ object Derive {
     * from-stage key + valid [start,end]; `workflow_record` is the
     * timeslice source_page_id. Second value of the pair counts skipped
     * missing/invalid intervals. */
-  def stageIntervals(ts: DataFrame, stages: DataFrame): (DataFrame, DataFrame) = {
-    val lk = broadcast(stageLookup(stages, "occ"))
+  private def stageIntervals(ts: DataFrame, winners: DataFrame): (DataFrame, DataFrame) = {
+    val lk = broadcast(stageLookup(winners, "occ"))
     val withBounds = ts
       .join(lk, col("from_step_id") === col("occ_canon_id"))
       .select(col("occ_stage_key").as("stage_key"),
@@ -315,8 +341,12 @@ object Derive {
   /** StageOccupancy_Hourly (derive/index.ts:452-530): J8 containment via
     * hour explode + COUNT(DISTINCT workflow_record); zero rows omitted. */
   def stageOccupancyHourly(ts: DataFrame, stages: DataFrame, dimStageDf: DataFrame,
-                           frames: DataFrame): DataFrame = {
-    val (valid, _) = stageIntervals(ts, stages)
+                           frames: DataFrame): DataFrame =
+    occupancyFrom(ts, stageWinners(stages), dimStageDf, frames)
+
+  private def occupancyFrom(ts: DataFrame, winners: DataFrame, dimStageDf: DataFrame,
+                            frames: DataFrame): DataFrame = {
+    val (valid, _) = stageIntervals(ts, winners)
     val firstH = (ceil(col("start_ms") / lit(3600000.0)) * HourMs).cast("long")
     val lastH = (floor(col("end_ms") / lit(3600000.0)) * HourMs).cast("long")
     val spine = frames.agg(min(unix_millis(try_to_timestamp(col("frame_datetime")))).as("f0"),
@@ -366,8 +396,12 @@ object Derive {
     * (+ stage-1 entry edges) full-outer merged with the occupancy daily
     * rollup; all-zero rows dropped; sorted by (day, stage). */
   def stageThroughputDaily(ts: DataFrame, stages: DataFrame, dimStageDf: DataFrame,
-                           occupancyHourly: DataFrame): DataFrame = {
-    val fromLk = broadcast(stageLookup(stages, "thr"))
+                           occupancyHourly: DataFrame): DataFrame =
+    throughputFrom(ts, stageWinners(stages), dimStageDf, occupancyHourly)
+
+  private def throughputFrom(ts: DataFrame, winners: DataFrame, dimStageDf: DataFrame,
+                             occupancyHourly: DataFrame): DataFrame = {
+    val fromLk = broadcast(stageLookup(winners, "thr"))
     val withFrom = ts.join(fromLk, col("from_step_id") === col("thr_canon_id"), "left")
 
     val entries = withFrom.filter(col("thr_stage_key").isNotNull)
@@ -382,7 +416,7 @@ object Derive {
       .agg(count(lit(1)).as("exit_count"))
 
     // stage-1 entry edges (derive/index.ts:571-591)
-    val toLk = broadcast(stageLookup(stages, "edge"))
+    val toLk = broadcast(stageLookup(winners, "edge"))
     val edges = ts.filter(col("from_step_id").isNull && col("to_step_id").isNotNull)
       .join(toLk, col("to_step_id") === col("edge_canon_id"))
       .filter(col("edge_stage_n") === 1)
@@ -435,20 +469,51 @@ object Derive {
       .orderBy(col("bucket_day"), col("stage_key"))
   }
 
-  /** Full derive DAG → the 7-table map (I6 table-set contract). */
-  def deriveAll(defs: DataFrame, stages: DataFrame, ts: DataFrame): Map[String, DataFrame] = {
-    val fact = factTimeslices(ts, defs, stages)
-    val dStage = dimStage(stages, defs)
-    val frames = dimPlaybackFrame(ts)
-    val occupancy = stageOccupancyHourly(ts, stages, dStage, frames)
+  /** Full derive DAG → the 7-table map (I6 table-set contract), with
+    * each shared piece computed once. Four waves run in dependency
+    * order; a wave's actions run side by side, and each result is
+    * collected once and becomes a LocalRelation with the same schema and
+    * row order, which the later waves build on:
+    *  1. the three lookups (stage, workflow definition, label by key);
+    *     the five prefixed stage lookups are selects over the one stage
+    *     lookup;
+    *  2. FactTimeslices, DimStage, DimWorkflow and DimPlaybackFrame;
+    *  3. DimDate over the fact, StageOccupancy_Hourly over DimStage and
+    *     the frames;
+    *  4. StageThroughput_Daily over the occupancy.
+    *
+    * The returned tables are materialized: collecting one is a local
+    * scan that starts no job. They hold the rows of a star the callers
+    * collect whole anyway.
+    *
+    * `maxRows` bounds what is collected of each table (lookups are not
+    * bounded: a broadcast collects them whole in any case). A table past
+    * it is collected to `maxRows + 1` rows only and is returned as its
+    * lazy plan, so its consumer's own bounded collect refuses it and
+    * the integrity checks still see every row. */
+  def deriveAll(defs: DataFrame, stages: DataFrame, ts: DataFrame,
+                maxRows: Option[Int] = None): Map[String, DataFrame] = {
+    def wave(dfs: Seq[DataFrame], bound: Option[Int]): Seq[DataFrame] = Par.map(dfs) { df =>
+      val rows = Broadcasts.collect(bound.fold(df)(n => df.limit(n + 1)))
+      if (bound.exists(rows.length > _)) df
+      else df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    }
+    val lk = lookups(defs, stages)
+    val Seq(stageLk, wfLk, labelLk) = wave(Seq(lk.stages, lk.wf, lk.wfLabel), None)
+    val local = Lookups(stageLk, wfLk, labelLk)
+    val Seq(fact, dStage, dWorkflow, frames) = wave(Seq(factFrom(ts, local),
+      dimStageFrom(stages, local), dimWorkflow(defs), dimPlaybackFrame(ts)), maxRows)
+    val Seq(dDate, occupancy) = wave(Seq(dimDate(fact),
+      occupancyFrom(ts, stageLk, dStage, frames)), maxRows)
+    val Seq(throughput) = wave(Seq(throughputFrom(ts, stageLk, dStage, occupancy)), maxRows)
     val tables = Map(
       "FactTimeslices" -> fact,
-      "DimWorkflow" -> dimWorkflow(defs),
+      "DimWorkflow" -> dWorkflow,
       "DimStage" -> dStage,
-      "DimDate" -> dimDate(fact),
+      "DimDate" -> dDate,
       "DimPlaybackFrame" -> frames,
       "StageOccupancy_Hourly" -> occupancy,
-      "StageThroughput_Daily" -> stageThroughputDaily(ts, stages, dStage, occupancy))
+      "StageThroughput_Daily" -> throughput)
     require(tables.keySet == ExpectedTables.toSet, "derive table-set contract violated")
     tables
   }
@@ -464,8 +529,9 @@ object Derive {
     nonStage1EntryEdgeObserved: Long)
 
   def counters(ts: DataFrame, stages: DataFrame): DeriveCounters = {
-    val (_, skipped) = stageIntervals(ts, stages)
-    val toLk = broadcast(stageLookup(stages, "edge"))
+    val winners = stageWinners(stages)
+    val (_, skipped) = stageIntervals(ts, winners)
+    val toLk = broadcast(stageLookup(winners, "edge"))
     val edges = ts.filter(col("from_step_id").isNull && col("to_step_id").isNotNull)
       .join(toLk, col("to_step_id") === col("edge_canon_id"))
     val stage1 = edges.filter(col("edge_stage_n") === 1)

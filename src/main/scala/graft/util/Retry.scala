@@ -1,5 +1,7 @@
 package graft.util
 
+import scala.util.control.NonFatal
+
 /** I1 — retry with backoff (src/lib/retry.ts):
   *  - 429: honor `retry-after` (seconds or HTTP-date), else exponential
   *    backoff capped at maxDelayMs;
@@ -55,7 +57,10 @@ object Retry {
     case _ => RetryDecision(shouldRetry = false, 0L)
   }
 
-  /** Run `op` with retries; clock injectable for deterministic tests. */
+  /** Run `op` with retries; clock injectable for deterministic tests.
+    * Only non-fatal errors are considered for a retry: a fatal one (a
+    * VirtualMachineError such as OutOfMemoryError, a LinkageError, or an
+    * interrupt) propagates at once, without a decision or a sleep. */
   def retry[T](options: RetryOptions, clock: Clock = SystemClock,
                jitter: () => Long = () => scala.util.Random.nextInt(201).toLong)
               (op: () => T): T = {
@@ -63,7 +68,7 @@ object Retry {
     while (true) {
       try return op()
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           if (attempt >= options.maxRetries) throw e
           val d = defaultDecision(e, attempt, options, clock.nowMs(), jitter)
           if (!d.shouldRetry) throw e

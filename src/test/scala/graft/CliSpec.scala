@@ -124,6 +124,39 @@ class CliSpec extends AnyFunSuite {
     assert(a == xlsxEntries(s"$dataDir/b.xlsx"))
   }
 
+  test("excel:export derives the star once: one stage lookup, then only the checks start jobs") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
+    val dataDir = stageRawData()
+    Cli.normalize(Cli.Env(spark, NotionFixtures.cfg, runDate = "2026-08-12", log = _ => ()),
+      dataDir)
+    val session = spark.newSession()
+    val log = new QueryLog(session)
+    Cli.excelExport(Cli.Env(session, NotionFixtures.cfg, runDate = "2026-08-12", log = _ => ()),
+      dataDir, s"$dataDir/out.xlsx")
+    val executed = log.drain()
+    def stageLookup(qe: QueryExecution) = qe.optimizedPlan.find {
+      case a: Aggregate => a.groupingExpressions.exists {
+        case r: AttributeReference => r.name == "workflow_stage_id"
+        case _ => false
+      }
+      case _ => false
+    }.isDefined
+    def check(qe: QueryExecution) = qe.analyzed.find {
+      case j: Join => j.joinType == LeftAnti
+      case _ => false
+    }.isDefined
+    def startsJobs(qe: QueryExecution) = !qe.executedPlan.isInstanceOf[LocalTableScanExec]
+    assert(executed.count(stageLookup) == 1, "workflowStages aggregated by workflow_stage_id once")
+    val (derive, rest) = executed.splitAt(executed.indexWhere(check))
+    assert(rest.count(check) == 3)
+    assert(derive.count(startsJobs) <= 7 + 3, s"${derive.count(startsJobs)} derive actions")
+    assert(rest.forall(qe => check(qe) || !startsJobs(qe)),
+      "the sheet collects read the collected tables")
+  }
+
   /** excel:export's integrity checks over crafted tables, where each
     * check can be broken on its own; returns the failure's message
     * after asserting that no workbook was written. */

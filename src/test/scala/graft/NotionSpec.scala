@@ -17,6 +17,30 @@ object NotionFixtures {
   val dbJson = NotionFixturesData.dbJson
   def readRaw(spark: org.apache.spark.sql.SparkSession, lines: Seq[String]) =
     NotionFixturesData.readRaw(spark, lines)
+
+  // -- a star fixture for the last-wins and entry-edge paths ---------
+
+  private val stage1Page = "44444444-4444-4444-4444-444444444444"
+  /** The fixture stage twice under one key, tied on last_edited_time,
+    * plus a stage-1 stage. */
+  val starStageJson: Seq[String] = Seq(stageJson,
+    stageJson.replace("Approved", "Approved again"),
+    stageJson.replace("22222222-2222-2222-2222-222222222222", stage1Page)
+      .replace("""\"number\":3}""", """\"number\":1}""").replace("Approved", "Intake"))
+  /** The fixture definition twice under one key, tied on last_edited_time. */
+  val starDefJson: Seq[String] = Seq(defJson, defJson.replace("My Workflow", "My Workflow v2"))
+  /** A slice leaving the fixture stage for the stage-1 stage over three
+    * hours, a stage-1 entry edge (no from step), and one slice whose
+    * steps resolve to no stage. */
+  val starTimesliceJson: Seq[String] = Seq(
+    timesliceJson.replace("bbbbbbbb-bbbb-bbbb-bbbb-bbbbbbbbbbbb", "22222222-2222-2222-2222-222222222222")
+      .replace("cccccccc-cccc-cccc-cccc-cccccccccccc", stage1Page)
+      .replace("2026-02-01T12:05:00.000Z", "2026-02-01T14:30:00.000Z"),
+    timesliceJson.replace("12345678-1234-1234-1234-1234567890ab", "77777777-7777-7777-7777-777777777777")
+      .replace("\"rel_from_step\": {", "\"rel_from_step_gone\": {")
+      .replace("cccccccc-cccc-cccc-cccc-cccccccccccc", stage1Page),
+    timesliceJson.replace("12345678-1234-1234-1234-1234567890ab", "88888888-8888-8888-8888-888888888888"),
+    dbJson)
 }
 
 class NotionSpec extends AnyFunSuite {
@@ -184,14 +208,27 @@ class NotionSpec extends AnyFunSuite {
     val d = Normalize.workflowDefinitions(readRaw(s, Seq(defJson)), cfg)
     val st = Normalize.workflowStages(readRaw(s, Seq(stageJson)), cfg)
     val t = Normalize.timeslices(readRaw(s, Seq(timesliceJson, dbJson)), cfg)
+    val log = new QueryLog(s)
     val star = Derive.deriveAll(d, st, t)
-    val plans = Seq(d, st, t) ++ star.values
-    plans.foreach { df =>
-      val lowers = df.queryExecution.analyzed.collectWithSubqueries { case p =>
+    val executed = log.drain()
+    // deriveAll's tables are collected LocalRelations with empty plans,
+    // so the guard reads the per-table builders' plans and every plan
+    // the derivation executed (its ten wave actions)
+    assert(executed.size == 10, executed.map(_.analyzed.nodeName))
+    val fact = Derive.factTimeslices(t, d, st)
+    val dStage = Derive.dimStage(st, d)
+    val frames = Derive.dimPlaybackFrame(t)
+    val occupancy = Derive.stageOccupancyHourly(t, st, dStage, frames)
+    val builders = Seq(fact, dStage, Derive.dimWorkflow(d), Derive.dimDate(fact), frames,
+      occupancy, Derive.stageThroughputDaily(t, st, dStage, occupancy))
+    val plans = (Seq(d, st, t) ++ builders).map(_.queryExecution.analyzed) ++
+      executed.map(_.analyzed)
+    plans.foreach { plan =>
+      val lowers = plan.collectWithSubqueries { case p =>
         p.expressions.flatMap(_.collect {
           case l: org.apache.spark.sql.catalyst.expressions.Lower => l })
       }.flatten
-      assert(lowers.isEmpty, df.queryExecution.analyzed.treeString)
+      assert(lowers.isEmpty, plan.treeString)
     }
     assert(star("FactTimeslices").count() == 1)
   }
@@ -245,6 +282,44 @@ class NotionSpec extends AnyFunSuite {
 
     Derive.assertIntegrity(tables("FactTimeslices"), tables("DimStage"),
       tables("DimWorkflow"), stages, defs)
+  }
+
+  test("deriveAll's materialized star equals the per-table builders row for row") {
+    val d = Normalize.workflowDefinitions(readRaw(spark, starDefJson), cfg)
+    val st = Normalize.workflowStages(readRaw(spark, starStageJson), cfg)
+    val t = Normalize.timeslices(readRaw(spark, starTimesliceJson), cfg)
+    val fact = Derive.factTimeslices(t, d, st)
+    val dStage = Derive.dimStage(st, d)
+    val frames = Derive.dimPlaybackFrame(t)
+    val occupancy = Derive.stageOccupancyHourly(t, st, dStage, frames)
+    val builders = Map(
+      "FactTimeslices" -> fact,
+      "DimWorkflow" -> Derive.dimWorkflow(d),
+      "DimStage" -> dStage,
+      "DimDate" -> Derive.dimDate(fact),
+      "DimPlaybackFrame" -> frames,
+      "StageOccupancy_Hourly" -> occupancy,
+      "StageThroughput_Daily" -> Derive.stageThroughputDaily(t, st, dStage, occupancy))
+    val star = Derive.deriveAll(d, st, t)
+    assert(star.keySet == builders.keySet)
+    val got = Derive.ExpectedTables.map { name =>
+      val (derived, built) = (star(name), builders(name))
+      assert(derived.schema == built.schema, name)
+      val rows = derived.collect().toSeq
+      assert(rows == built.collect().toSeq, name)
+      name -> rows
+    }.toMap
+    // the fixture reaches the paths it is there for: the duplicate keys
+    // collapse, and the stage-1 entry edge is counted
+    assert(got("FactTimeslices").length == 3)
+    assert(got("DimStage").length == 2 && got("DimWorkflow").length == 1)
+    assert(got("StageOccupancy_Hourly").length == 3)
+    assert(Derive.counters(t, st).entryEdgeCounted == 1)
+    // under a 2-row bound the fact (3 rows) stays its lazy plan and
+    // DimStage (2 rows) is collected; both read the same rows
+    val bounded = Derive.deriveAll(d, st, t, maxRows = Some(2))
+    assert(bounded("FactTimeslices").collect().toSeq == got("FactTimeslices"))
+    assert(bounded("DimStage").collect().toSeq == got("DimStage"))
   }
 
   test("occupancy + throughput derive from resolvable stage intervals") {

@@ -125,6 +125,22 @@ class PbiSubsystemSpec extends AnyFunSuite {
     assert(clock.sleeps == Seq(507L, 1007L, 2007L))
   }
 
+  test("a fatal error propagates at once, without a retry or a sleep") {
+    val clock = new LogicalClock
+    Seq[Throwable](new StackOverflowError("deep"), new InterruptedException("stop"))
+      .foreach { fatal =>
+        var calls = 0
+        val e = intercept[Throwable] {
+          Retry.retry(Retry.RetryOptions(maxRetries = 5), clock, () => 0L) { () =>
+            calls += 1
+            throw fatal
+          }
+        }
+        assert((e eq fatal) && calls == 1)
+      }
+    assert(clock.sleeps.isEmpty)
+  }
+
   test("429 retry-after HTTP-date is honored relative to now") {
     val clock = new LogicalClock(start = 1700000000000L)
     val when = java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME.format(
