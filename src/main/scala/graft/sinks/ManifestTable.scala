@@ -45,19 +45,15 @@ import graft.util.EpochCache
   * reads decides which files a MERGE/DELETE/CDC batch must rewrite.
   *
   * Scale shape per operation (T = table files, B = batch, K = files
-  * whose tracked-column envelopes intersect the batch's keys):
+  * whose tracked-column envelopes the batch's keys or the predicate
+  * can touch):
   *   - [[write]] (append): lands B, commits manifest ∪ B — cost ∝ B.
-  *   - [[merge]] / [[applyCdc]]: ONE metadata-scale envelope join to
-  *     find K, one scan+rewrite of K ∪ B, manifest swap — cost ∝
-  *     K + B, never T. On a key-clustered layout ([[optimize]] with
-  *     the key as sort column) K ≈ touched keys / keys-per-file; on a
-  *     random layout K degrades toward T honestly.
-  *   - [[deleteWhere]]: envelope proofs over the predicate select K;
-  *     non-range predicates degrade to K = T (documented, sound).
-  *   - [[deleteWhereMor]]: same selection, but touched files keep
-  *     their bytes and gain a DELETION-VECTOR sidecar (bitset of dead
-  *     row positions) — cost ∝ touched-file scan + deleted bits,
-  *     nothing rewritten; reads apply vectors in the scan.
+  *   - row-level ops ([[rowDelta]]): one metadata-scale proof finds
+  *     K; K is rewritten, or its matched positions vectored, or
+  *     nothing is read at all (equality deletes) — cost ∝ K + B, never
+  *     T. On a key-clustered layout ([[optimize]] with the key as sort
+  *     column) K ≈ touched keys / keys-per-file; on a random layout or
+  *     a non-range predicate K degrades toward T, honestly.
   *   - [[vacuum]]: refcount-aware — a data file is deleted only when
   *     NO retained manifest references it (and it is older than the
   *     staging TTL, so a concurrent writer's just-landed files are
@@ -381,13 +377,9 @@ object ManifestTable extends org.apache.spark.internal.Logging {
 
   // ------------------------------------------------ equality deletes
   //
-  // The Iceberg-v2 streaming-upsert grain: a keyed merge can commit
-  // the BATCH'S KEYS as an equality-delete file instead of scanning
-  // the target for matched positions — write cost O(batch), zero
-  // target reads. The deletes are applied at read (resolved into
-  // ordinary deletion vectors over the envelope/bloom-touched subset,
-  // cached per version) and materialized durably by [[compactEq]] /
-  // the first row-level op / the maintenance tick.
+  // The keys a row-level op retires at the equality-delete grain
+  // ([[rowDelta]]) apply at read until [[compactEq]], a later
+  // row-level op or the maintenance tick materializes them.
 
   /** One pending equality delete: `path` holds the delete's key rows
     * (a parquet directory under `_eq/`), `seq` the version it
@@ -497,8 +489,8 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       .head()
     val ndv = cols.map(c =>
       physicalFor(schema, c) -> row.getAs[Long](c)).toMap
-    commitLoop(spark, root) { (base, meta) =>
-      Some((manifest(spark, root, base), meta.copy(ndv = ndv)))
+    commitLoop(spark, root) { (rec, meta) =>
+      Some((manifest(spark, rec), meta.copy(ndv = ndv)))
     }.get
   }
 
@@ -520,11 +512,11 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * explicit `c IS NOT NULL` constraint). A refusal commits
     * NOTHING; the already-landed files stay unreferenced until
     * vacuum's TTL sweep, the same contract as a failed CTAS. */
-  private def validateConstraints(spark: SparkSession, files: Seq[String],
+  private def validateConstraints(spark: SparkSession,
+                                  files: Seq[(String, Long)],
                                   schema: StructType,
                                   cons: Seq[(String, String)]): Unit = {
-    val logical = spark.read.schema(toPhysical(schema))
-      .parquet(files: _*)
+    val logical = scanFiles(spark, toPhysical(schema), files)
       .select(schema.fields.toIndexedSeq.map(f =>
         col(physicalName(f)).as(f.name)): _*)
     val flagged = logical.select(cons.map { case (n, e) =>
@@ -573,7 +565,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     require(cons.map(_._1).distinct.length == cons.length,
       s"duplicate constraint names in one set: " +
         cons.map(_._1).mkString(", "))
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val existing = meta.constraints
       val schema = meta.schema
       cons.foreach { case (name, exprSql) =>
@@ -589,7 +581,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
           s"constraint $name must not contain subqueries")
       }
       val flags = cons.map { case (n, e) => (expr(e) <=> lit(false)).as(n) }
-      val bad = readVersion(spark, root, base).select(flags: _*)
+      val bad = readVersion(spark, root, rec.key.version).select(flags: _*)
         .filter(cons.map(c => col(c._1)).reduce(_ || _))
         .limit(1).collect()
       bad.headOption.foreach { r =>
@@ -598,7 +590,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
           broken.map { case (n, e) => s"$n ($e)" }.mkString(", ") +
           ": existing rows violate them")
       }
-      Some((manifest(spark, root, base),
+      Some((manifest(spark, rec),
         meta.copy(constraints = existing ++ cons)))
     }.get
   }
@@ -611,7 +603,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * Spark's own fold before anything commits. */
   def setColumnDefault(spark: SparkSession, root: String, name: String,
                        default: Option[String]): Long =
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val schema = meta.schema
       require(schema.fieldNames.contains(name),
         s"column $name does not exist")
@@ -642,7 +634,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
           }
         }
       })
-      Some((manifest(spark, root, base), meta.copy(schema = next)))
+      Some((manifest(spark, rec), meta.copy(schema = next)))
     }.get
 
   /** DROP CONSTRAINT — metadata-only removal of one named invariant;
@@ -653,11 +645,11 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * abstains with None) instead of the loser throwing. */
   def dropConstraint(spark: SparkSession, root: String, name: String,
                      ifExists: Boolean = false): Option[Long] =
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       if (!meta.constraints.exists(_._1 == name)) {
         if (ifExists) None
         else sys.error(s"constraint $name does not exist on $root")
-      } else Some((manifest(spark, root, base),
+      } else Some((manifest(spark, rec),
         meta.copy(constraints = meta.constraints.filterNot(_._1 == name))))
     }
 
@@ -667,8 +659,10 @@ object ManifestTable extends org.apache.spark.internal.Logging {
 
   private[graft] def statsCols(spark: SparkSession,
                                rec: VersionedTable.Commit): Seq[String] =
-    manifest(spark, rec).schema.fieldNames.toSeq
-      .filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
+    statsOf(manifest(spark, rec))
+
+  private def statsOf(m: DataFrame): Seq[String] =
+    m.columns.toSeq.filter(_.endsWith("_min")).map(_.stripSuffix("_min"))
 
   /** The table schema committed with `version`'s manifest. */
   def tableSchema(spark: SparkSession, root: String, version: Long): StructType =
@@ -785,11 +779,12 @@ object ManifestTable extends org.apache.spark.internal.Logging {
 
   /** Data-file paths of one version (driver-side: |files| strings —
     * metadata scale, the same bound every manifest read has). */
-  def filesAt(spark: SparkSession, root: String, version: Long): Seq[String] = {
-    val (schema, rows) = manifestCollected(spark, root, version)
-    val i = schema.fieldIndex("path")
-    rows.map(_.getString(i)).sorted
-  }
+  def filesAt(spark: SparkSession, root: String, version: Long): Seq[String] =
+    filesAt(spark, recordAt(spark, root, version))
+
+  private def filesAt(spark: SparkSession,
+                      rec: VersionedTable.Commit): Seq[String] =
+    entries(spark, rec).map(_.path)
 
   /** Read one version: the manifest's files, with the committed
     * schema. An empty manifest reads as an empty frame.
@@ -1106,22 +1101,14 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     v
   }
 
-  /** Append commit: land the batch, commit current-manifest ∪ batch.
+  /** Append commit — a change set that retires nothing
+    * ([[rowDelta]]): land the batch, commit current-manifest ∪ batch.
     * Racing appends serialize through the manifest CAS — both batches
-    * survive (the rewrite loop unions against whatever base won). */
-  def write(df: DataFrame, root: String): Long = {
-    val spark = df.sparkSession
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"manifest table at $root does not exist — create() first")
-    val schema = tableSchema(spark, root, v)
-    require(df.columns.sorted.sameElements(schema.fieldNames.sorted),
-      s"append schema ${df.columns.sorted.mkString(",")} != table " +
-        s"schema ${schema.fieldNames.sorted.mkString(",")}")
-    val rows = landFiles(conform(df, schema), root, statsCols(spark, root, v))
-    commitLoop(spark, root) { (base, meta) =>
-      Some((withLanded(manifest(spark, root, base), rows), meta))
-    }.get
-  }
+    * survive. Pending equality deletes stay pending; the batch's rows
+    * are newer than them. */
+  def write(df: DataFrame, root: String): Long =
+    rowDelta(df.sparkSession, root, ChangeSet(None, Batch(df)),
+      CopyOnWrite).get
 
   /** WRITE-SIDE SCHEMA EVOLUTION — the Delta `mergeSchema` shape: one
     * append both EVOLVES the table and lands the batch. The incoming
@@ -1240,8 +1227,8 @@ object ManifestTable extends org.apache.spark.internal.Logging {
             Nil)
         }
         if (relaxes.nonEmpty)
-          committed += commitLoop(spark, root) { (base, meta) =>
-            Some((manifest(spark, root, base),
+          committed += commitLoop(spark, root) { (rec, meta) =>
+            Some((manifest(spark, rec),
               meta.copy(schema = relaxNullability(meta.schema, relaxes))))
           }.get
         return committed.toSeq
@@ -1579,13 +1566,6 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     }.get
   }
 
-  /** Stream-idempotent append — [[VersionedTable.writeBatch]] for the
-    * manifest format: the producing micro-batch id commits atomically
-    * with the manifest version, and a batch id at or below the
-    * current version's marker is a no-op — which is exactly the
-    * foreachBatch redelivery case after a restart. Cost ∝ batch (the
-    * manifest-append grain), so a streaming ingest into a 100 TB
-    * table stays per-batch work. Returns None on a detected replay. */
   /** The table's stream replay marker — the highest batch id a
     * [[writeBatch]]/[[mergeMorBatch]] commit stamped (-1 when none).
     * Lets a sink skip per-batch work it can prove is a replay before
@@ -1593,17 +1573,15 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   def lastAppliedBatch(spark: SparkSession, root: String): Long =
     VersionedTable.lastAppliedBatch(spark, manifestsRoot(root))
 
-  /** Strict replay discipline shared by the batch-stamped commits
-    * ([[writeBatch]], [[mergeMorBatch]]): an id EQUAL to the marker is
+  /** Strict replay discipline of the batch-stamped commits
+    * ([[rowDelta]]) against the marker `last`: an id EQUAL to it is
     * the redelivered micro-batch (no-op — the exactly-once case); an
     * id BELOW it cannot come from the same checkpoint (offsets are
     * monotone per checkpoint), so it is a DIFFERENT query's stream
     * aimed at this table — and silently swallowing its batches as
     * "replays" until its ids catch up would be wholesale data loss.
     * Returns true for the no-op replay; throws on the mismatch. */
-  private def isReplay(spark: SparkSession, root: String,
-                       batchId: Long): Boolean = {
-    val last = lastAppliedBatch(spark, root)
+  private def isReplay(batchId: Long, last: Long): Boolean = {
     require(batchId >= last,
       s"batch id $batchId is BELOW the table's replay marker $last — " +
         "this stream's checkpoint does not match the table's history " +
@@ -1612,31 +1590,16 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     batchId == last
   }
 
-  def writeBatch(df: DataFrame, root: String, batchId: Long): Option[Long] = {
-    val spark = df.sparkSession
-    if (isReplay(spark, root, batchId))
-      None
-    else {
-      val v = latestVersion(spark, root)
-      require(v >= 0, s"manifest table at $root does not exist — create() first")
-      val schema = tableSchema(spark, root, v)
-      require(df.columns.sorted.sameElements(schema.fieldNames.sorted),
-        s"append schema ${df.columns.sorted.mkString(",")} != table " +
-          s"schema ${schema.fieldNames.sorted.mkString(",")}")
-      val rows = landFiles(conform(df, schema), root, statsCols(spark, root, v))
-      // the replay marker is RE-CHECKED against every attempt's fresh
-      // base: the pre-loop check alone is a TOCTOU — a zombie driver
-      // racing its restarted successor (both carrying the same batch
-      // id) would have both pass it, and the CAS loser's retry would
-      // recommit the batch onto the winner's manifest, double-applying
-      // it. A mid-loop replay detection abandons the landed files —
-      // unreferenced, vacuum's TTL sweep collects them.
-      commitLoop(spark, root, batch = Some(batchId)) { (base, meta) =>
-        if (isReplay(spark, root, batchId)) None
-        else Some((withLanded(manifest(spark, root, base), rows), meta))
-      }
-    }
-  }
+  /** Stream-idempotent append — [[VersionedTable.writeBatch]] for the
+    * manifest format: the producing micro-batch id commits atomically
+    * with the manifest version, and a batch id at or below the
+    * current version's marker is a no-op — which is exactly the
+    * foreachBatch redelivery case after a restart. Cost ∝ batch (the
+    * manifest-append grain), so a streaming ingest into a 100 TB
+    * table stays per-batch work. Returns None on a detected replay. */
+  def writeBatch(df: DataFrame, root: String, batchId: Long): Option[Long] =
+    rowDelta(df.sparkSession, root,
+      ChangeSet(None, Batch(df), batchId = Some(batchId)), CopyOnWrite)
 
   /** Carried entries `m` plus freshly landed ones. Landed entries lack
     * the bloom columns (NULL: not indexed yet, see [[buildBloom]]) and
@@ -1650,7 +1613,8 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   /** The one manifest commit loop — the [[VersionedTable]] rewrite
     * loop over manifests: compute the next manifest AND its [[Meta]]
     * against a pinned base version, commit only as base+1; on conflict
-    * recompute. `next(base, meta)` receives the base's Meta; returning
+    * recompute. `next(rec, meta)` receives the base's commit record
+    * (its version is `rec.key.version`) and its Meta; returning
     * it unchanged CARRIES schema, pending equality deletes,
     * constraints, NDV and adoption forward — correct for commits that
     * neither read nor rewrite rows (appends, evolution, renames).
@@ -1666,7 +1630,8 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                          batch: Option[Long] = None,
                          validateCons: Boolean = true,
                          adopting: Boolean = false)
-                        (next: (Long, Meta) => Option[(DataFrame, Meta)])
+                        (next: (VersionedTable.Commit, Meta) =>
+                          Option[(DataFrame, Meta)])
       : Option[Long] = {
     val maxAttempts = 12
     var attempt = 0
@@ -1681,7 +1646,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
             "writer — change the files under that directory, then adopt() " +
             "again")
       }
-      val (rows0, out) = next(base, meta) match {
+      val (rows0, out) = next(rec, meta) match {
         case Some(rs) => rs
         case None     => return None
       }
@@ -1698,7 +1663,8 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       // changed.
       if (validateCons && out.constraints.nonEmpty) {
         val fresh = rows0.filter(col("seq").isNull)
-          .select(col("path")).collect().map(_.getString(0)).toSeq
+          .select(col("path"), col("size")).collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq
         if (fresh.nonEmpty)
           validateConstraints(spark, fresh, out.schema, out.constraints)
       }
@@ -1819,163 +1785,451 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     envelopeTouched.filterNot(excluded.contains)
   }
 
-  /** Row-level MERGE (upsert by key), file-granular: only the files
-    * whose key envelopes intersect the batch are rewritten; every
-    * other file carries into the next manifest BY REFERENCE. SQL
-    * `MERGE … WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`
-    * semantics: matched keys are replaced, unmatched keys insert,
-    * `updates` carries the table's full schema, and duplicate keys
-    * WITHIN `updates` are the caller's contract to resolve first
-    * (both rows would land — dedupe with last-wins upstream). Returns
-    * the committed version. */
-  def merge(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
-    merge(updates, root, keyCols, evolveSchema = false)
+  // ------------------------------------------------------ row deltas
+  //
+  // Every row-level op is ONE CHANGE SET — rows to retire (by key or by
+  // predicate) and rows to land — committed by [[rowDelta]], which
+  // encodes the retirement at one of three grains (Iceberg's
+  // `RowDelta`, https://iceberg.apache.org/spec/#row-level-deletes;
+  // Delta's deletion vectors are the position encoding):
+  //   - COPY-ON-WRITE: the touched files' survivors are rewritten.
+  //     Writes pay the touched bytes, reads nothing;
+  //   - DELETION VECTORS: the touched files keep their bytes, and the
+  //     matched positions OR into a bitset sidecar per file. Writes pay
+  //     the touched-file scan, reads skip the positions;
+  //   - EQUALITY DELETES (keys only): the keys land as a key file named
+  //     in the version's [[Meta]]; nothing reads the target, and reads
+  //     resolve the keys ([[eqProbes]], [[resolveEq]]).
+  // The grains retire the same rows, so they read back the same table.
+  // Cost ∝ touched files + batch (∝ batch for equality deletes), never
+  // the table — but untracked columns have no envelopes, so their
+  // predicates touch every file.
 
-  /** MERGE with optional ADDITIVE schema evolution — and here the
-    * manifest representation earns its keep: an evolved-in column
-    * needs NO data rewrite at all for untouched files, because the
-    * next manifest just commits a WIDER schema and
-    * schema-on-read serves the old files' missing column as NULL.
-    * Only the key-touched files rewrite, exactly as in the strict
-    * path. A batch may carry NEW columns (existing rows read NULL
-    * there) or OMIT existing ones (the update rows land NULL); the
-    * next version's schema is base-order ++ new columns. The default
-    * stays strict: a silently-widened schema in a pipeline that did
-    * not opt in is a bug surfacing as an error, not a version with
-    * surprise columns. Key columns must exist on both sides either
-    * way. */
-  def merge(updates: DataFrame, root: String, keyCols: Seq[String],
-            evolveSchema: Boolean): Long = {
-    require(keyCols.nonEmpty, "merge requires at least one key column")
-    val spark = updates.sparkSession
-    require(keyCols.forall(updates.columns.contains),
-      s"update batch is missing key columns: " +
-        keyCols.filterNot(updates.columns.contains).mkString(", "))
-    rewriteTouched(spark, root, updates, keyCols, evolveSchema) {
-      (touchedRows, upd) =>
-        touchedRows.join(upd.select(keyCols.map(col): _*).distinct(),
-            keyCols, "left_anti")
-          .unionByName(upd, allowMissingColumns = evolveSchema)
+  /** The rows a change set retires: those whose `keyCols` match a row
+    * of `keys`, or those where `cond` is TRUE (NULL keeps the row, as
+    * in SQL). `dropWhole` lets provably all-matching files leave unread
+    * ([[predicateFiles]]) — DELETE-shaped sets only. */
+  private sealed trait Retire
+  private final case class ByKeys(keys: DataFrame, keyCols: Seq[String])
+      extends Retire
+  private final case class ByPredicate(cond: Column, dropWhole: Boolean)
+      extends Retire
+
+  /** The rows a change set lands: none; `rows` (landed once for every
+    * CAS attempt); or the matched rows with `sets` assigned (values
+    * CAST to the declared types, pre-update values on the right). */
+  private sealed trait Land
+  private case object NoRows extends Land
+  private final case class Batch(rows: DataFrame) extends Land
+  private final case class Assign(sets: Seq[(String, Column)]) extends Land
+
+  /** One row-level change. `evolve`: the batch may add columns (older
+    * rows read NULL there) and omit some (its rows land NULL there);
+    * else its columns must equal the table's. `batchId` stamps the
+    * stream replay marker; a replayed id commits nothing. A set that
+    * retires nothing is an append. */
+  private final case class ChangeSet(retire: Option[Retire], land: Land,
+                                     evolve: Boolean = false,
+                                     batchId: Option[Long] = None)
+
+  private sealed trait Grain
+  private case object CopyOnWrite extends Grain
+  private case object Vectors extends Grain
+  private case object EqDeletes extends Grain
+
+  /** Commit one change set at `grain`. Each CAS attempt, against its
+    * pinned base: the replay guard; then, except for equality deletes
+    * (which append an [[EqEntry]] for the key file), [[retire]] over
+    * the base's effective view; then the batch, under the base's schema
+    * widened by the batch's new columns only (a racing writer's
+    * evolution or drop is kept). The batch and the key file land once
+    * for every attempt. None only for a replayed `batchId`. */
+  private def rowDelta(spark: SparkSession, root: String, cs: ChangeSet,
+                       grain: Grain): Option[Long] = {
+    // a replayed id is a no-op before any work; the commit loop
+    // re-checks it against every attempt's base
+    if (cs.batchId.exists(isReplay(_, lastAppliedBatch(spark, root))))
+      return None
+    val v = latestVersion(spark, root)
+    require(v >= 0, s"manifest table at $root does not exist — create() first")
+    val schema0 = tableSchema(spark, root, v)
+    cs.retire match {
+      case Some(ByKeys(keys, keyCols)) =>
+        require(keyCols.nonEmpty,
+          "a keyed row-level op requires at least one key column")
+        // the key must be REAL in every mode: an evolving batch missing
+        // a key column would null-fill it and land unmatchable rows
+        require(keyCols.forall(keys.columns.contains),
+          s"merge batch is missing key columns: " +
+            keyCols.filterNot(keys.columns.contains).mkString(", "))
+      case Some(ByPredicate(_, _)) =>
+        require(grain != EqDeletes, "equality deletes retire keys only")
+      case None =>
+    }
+    // the batch's GENUINELY new columns, the only fields an attempt may
+    // widen its base by; NULLABLE whatever the batch says, since every
+    // older file lacks them and the reader enforces nullability
+    val (newFields, batch) = cs.land match {
+      case Batch(rows) =>
+        if (!cs.evolve)
+          require(rows.columns.sorted.sameElements(schema0.fieldNames.sorted),
+            s"batch schema ${rows.columns.sorted.mkString(",")} != table " +
+              s"schema ${schema0.fieldNames.sorted.mkString(",")}")
+        val fresh = rows.schema.fields.toSeq
+          .filterNot(f => schema0.fieldNames.contains(f.name))
+          .map(_.copy(nullable = true))
+        val wide = StructType(schema0.fields ++ fresh)
+        val padded = wide.fieldNames.filterNot(rows.columns.contains)
+          .foldLeft(rows)((df, c) =>
+            df.withColumn(c, lit(null).cast(wide(c).dataType)))
+        (fresh, Some((padded, wide)))
+      case _ => (Nil, None)
+    }
+    (cs.retire, batch) match {
+      case (Some(ByPredicate(cond, _)), Some((rows, _))) =>
+        // landing rows in place of a predicate's region REPLACES it: a
+        // landed row outside the region would survive the next replace
+        require(rows.filter(!coalesce(cond, lit(false))).limit(1).count() == 0L,
+          "replaceWhere batch contains rows NOT matching the predicate — " +
+            "the operation replaces the predicate's region, so every " +
+            "inserted row must satisfy it (use write() to append outside it)")
+      case _ =>
+    }
+    lazy val landed = batch.map { case (rows, wide) =>
+      landFiles(conform(rows, wide), root, statsCols(spark, root, v)) }
+    // the delete's key file: the distinct keys CAST to the table's
+    // declared types (resolution compares against conformed stored
+    // values — a narrower-typed batch key must not miss)
+    lazy val keyFile: String = {
+      val Some(ByKeys(keys, keyCols)) = cs.retire: @unchecked
+      val dir = s"${eqRoot(root)}/${java.util.UUID.randomUUID()}"
+      keys.select(keyCols.toIndexedSeq.map(c =>
+        col(c).cast(schema0(c).dataType).as(c)): _*).distinct()
+        .write.parquet(dir)
+      canon(dir)
+    }
+    commitLoop(spark, root, batch = cs.batchId,
+        validateCons = cs.land != NoRows) { (rec, meta) =>
+      // a zombie driver racing its restarted successor passes the check
+      // above; re-checked per attempt, the CAS loser's retry never
+      // double-applies the batch (its landing awaits vacuum's TTL)
+      if (cs.batchId.exists(isReplay(_, rec.batch))) None
+      else {
+        val base = rec.key.version
+        val schema = StructType(meta.schema.fields ++
+          newFields.filterNot(f => meta.schema.fieldNames.contains(f.name)))
+        val (next, eq) = (grain, cs.retire) match {
+          case (_, None) => (manifest(spark, rec), meta.eq)
+          case (EqDeletes, Some(ByKeys(_, keyCols))) =>
+            (manifest(spark, rec),
+              meta.eq :+ EqEntry(keyFile, base + 1, keyCols))
+          case (_, Some(r)) =>
+            (retire(spark, root, rec, r, cs.land, grain, schema), Nil)
+        }
+        Some((landed.fold(next)(withLanded(next, _)),
+          meta.copy(schema = schema, eq = eq)))
+      }
     }
   }
 
-  /** Fold one CDC batch (Debezium shape: key columns + a monotone
-    * per-key `seqCol` + an `opCol` marker + the full row payload) as
-    * ONE commit, file-granular. Within the batch the highest-`seqCol`
-    * change per key wins (a key inserted then deleted in the same
-    * batch nets to absent); the winner applies MERGE-style: `op = 'D'`
-    * removes the key, any other op upserts the payload (`I`/`U` are
-    * synonyms). Folding batches one at a time in sequence order equals
-    * one fold of their union. `(key, seqCol)` pairs must be unique
-    * within a batch. Cost ∝ touched files + batch. */
-  def applyCdc(changes: DataFrame, root: String, keyCols: Seq[String],
-               seqCol: String = "seq", opCol: String = "op"): Long = {
-    require(keyCols.nonEmpty, "applyCdc requires at least one key column")
-    val spark = changes.sparkSession
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-    val winners = changes
-      .withColumn("_graft_rn", row_number().over(w))
-      .filter(col("_graft_rn") === 1).drop("_graft_rn")
-    rewriteTouched(spark, root, winners, keyCols) { (touchedRows, win) =>
-      touchedRows.join(win.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(
-          win.filter(not(col(opCol) === lit("D"))).drop(opCol, seqCol))
+  /** The next manifest with `r`'s rows retired from `rec`'s EFFECTIVE
+    * view ([[effectiveManifest]]: pending equality deletes materialize
+    * too) and an [[Assign]]'s updated rows landed: the touched files
+    * ([[keyedFiles]], [[predicateFiles]]) read once ([[readFilesDv]]),
+    * then their survivors rewritten or their matches vectored. */
+  private def retire(spark: SparkSession, root: String,
+                     rec: VersionedTable.Commit, r: Retire, land: Land,
+                     grain: Grain, schema: StructType): DataFrame = {
+    val (m, files) = effectiveManifest(spark, root, rec)
+    val stats = statsOf(m)
+    val (dropped, touched) = r match {
+      case ByKeys(keys, keyCols) =>
+        (Set.empty[String], keyedFiles(spark, m, files, keys, keyCols, schema))
+      case ByPredicate(cond, dropWhole) =>
+        predicateFiles(spark, m, files, cond, schema, dropWhole)
+    }
+    val kept = m.filter(!col("path").isin(dropped.toSeq: _*))
+    // nothing to read: an aligned op commits metadata (and its batch)
+    // alone — an empty landing would still write a 0-row file
+    if (touched.isEmpty) return kept
+    val sets = land match {
+      case Assign(s) =>
+        s.foreach { case (c, _) => require(schema.fieldNames.contains(c),
+          s"assignment target $c is not a table column") }
+        Some(s)
+      case _ => None
+    }
+    def assigned(df: DataFrame, matched: Column): DataFrame =
+      df.select(schema.fields.toIndexedSeq.map { f =>
+        sets.get.find(_._1 == f.name) match {
+          case Some((_, v)) =>
+            when(matched, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+          case None => col(f.name)
+        }
+      }: _*)
+    grain match {
+      case CopyOnWrite =>
+        // touched reads apply the files' vectors (a raw read would
+        // resurrect deleted rows into the rewrite); the rewritten files
+        // carry none
+        val live = readFilesDv(spark, schema, touched.map(_.file),
+          touched.map(_.dvRows).sum)
+        val rewritten = r match {
+          case ByKeys(keys, keyCols) =>
+            live.join(keys.select(keyCols.map(col): _*).distinct(), keyCols,
+              "left_anti")
+          case ByPredicate(cond, _) =>
+            val matched = coalesce(cond, lit(false))
+            if (sets.isDefined) assigned(live, matched) else live.filter(!matched)
+        }
+        withLanded(kept.filter(!col("path").isin(touched.map(_.path): _*)),
+          landFiles(physSelect(rewritten, schema), root, stats))
+      case _ =>
+        // a retirement may re-match rows a vector already deleted:
+        // re-setting a set bit changes nothing, so only an UPDATE —
+        // whose matched rows land again — reads through the vectors
+        val live = readFilesDv(spark, schema,
+          touched.map(f => if (sets.isDefined) f.file else (f.path, f.size, None)),
+          if (sets.isDefined) touched.map(_.dvRows).sum else 0L,
+          positions = true)
+        val matched = r match {
+          case ByKeys(keys, keyCols) =>
+            // the change's own delete, applied at its commit seq — which
+            // every base file predates
+            keyedMatches(live, touched, keys.select(keyCols.map(col) :+
+              lit(rec.key.version + 1).as("_eq_seq"): _*), keyCols)
+          case ByPredicate(cond, _) => live.filter(coalesce(cond, lit(false)))
+        }
+        // an UPDATE's matched rows feed two jobs (positions → vectors,
+        // values → landed copies): scan the touched files once
+        if (sets.isDefined) matched.persist()
+        try {
+          val dvDir = s"${dvRoot(root)}/${java.util.UUID.randomUUID()}"
+          val left = files.filterNot(f => dropped(f.path))
+          val after = withVectors(spark, dvDir, left,
+            matched.select(col("_p"), col("_i")))
+          if (after == left) kept // nothing matched — nothing lands either
+          else {
+            val next = withStates(m, after)
+            if (sets.isEmpty) next
+            else withLanded(next, landFiles(physSelect(
+              assigned(matched, lit(true)), schema), root, stats))
+          }
+        } finally if (sets.isDefined) matched.unpersist(): Unit
     }
   }
 
-  /** LIVE rows of the files a batch of keys can possibly touch — the
-    * same envelope/bloom selection the keyed row-level ops use,
-    * exposed for callers (the SQL MERGE compiler) that must JOIN
-    * against current target values before computing their batch: a
-    * target row matching a source key can only live in a touched
-    * file, so the join scans those instead of the table. Reads the
-    * LATEST version outside any commit loop — callers get snapshot
-    * isolation; the subsequent keyed commit serializes via CAS. */
+  /** The `files` a batch of keys can touch ([[touchedPaths]]). */
+  private def keyedFiles(spark: SparkSession, m: DataFrame,
+                         files: Seq[Entry], keys: DataFrame,
+                         keyCols: Seq[String],
+                         schema: StructType): Seq[Entry] = {
+    val touched = touchedPaths(spark, m, keys, keyCols, schema).toSet
+    files.filter(f => touched.contains(f.path))
+  }
+
+  /** `(dropped, touched)` of `files` for a predicate, by proof over
+    * `m`'s envelopes: provably unmatching files are in neither
+    * ([[graft.plans.StatsPruneRule.excludedByEnvelopes]]); with
+    * `dropWhole`, provably ALL-matching ones are `dropped`
+    * ([[graft.plans.StatsPruneRule.wholeFileMatched]] — raw envelopes
+    * bound the live rows, so it holds under vectors). */
+  private def predicateFiles(spark: SparkSession, m: DataFrame,
+                             files: Seq[Entry], cond: Column,
+                             schema: StructType, dropWhole: Boolean)
+      : (Set[String], Seq[Entry]) = {
+    val stats = statsOf(m)
+    val resolved = toPhysicalExpr(resolveCond(spark, cond, schema), schema)
+    val excluded = graft.plans.StatsPruneRule.excludedByEnvelopes(
+      spark, resolved, m, stats)
+    val dropped =
+      if (!dropWhole) Set.empty[String]
+      else graft.plans.StatsPruneRule.wholeFileMatched(resolved, m, stats) --
+        excluded
+    (dropped, files.filterNot(f => excluded(f.path) || dropped(f.path)))
+  }
+
+  /** The keyed match: every row of `live` (read with positions from
+    * `files`) whose key equals a row of `keys` carrying a LARGER
+    * `_eq_seq` than the row's file — a delete at seq s kills only rows
+    * of files added before it. NULL keys match nothing (SQL
+    * equality). */
+  private def keyedMatches(live: DataFrame, files: Seq[Entry],
+                           keys: DataFrame,
+                           keyCols: Seq[String]): DataFrame = {
+    val spk = live.sparkSession
+    import spk.implicits._
+    val fileSeq = files.map(f => (f.path, f.seq)).toDF("_p", "_fseq")
+    // key side renamed — the live side carries the same logical names
+    val ek = keys.select(keyCols.toIndexedSeq
+      .map(c => col(c).as(s"_ek_$c")) :+ col("_eq_seq"): _*)
+    live.join(broadcast(fileSeq), Seq("_p"))
+      .join(ek, keyCols.map(c => col(c) === col(s"_ek_$c")).reduce(_ && _) &&
+        col("_eq_seq") > col("_fseq"), "left_semi")
+      .drop("_fseq")
+  }
+
+  /** LIVE rows of the files a batch of keys can touch — the keyed
+    * ops' own selection, for callers (the SQL MERGE compiler) that
+    * JOIN against current target values first. Reads the latest
+    * version outside any commit loop; the keyed commit that follows
+    * serializes via CAS. */
   private[graft] def readTouchedRows(spark: SparkSession, root: String,
                                      keys: DataFrame,
                                      keyCols: Seq[String]): DataFrame = {
     val base = latestVersion(spark, root)
     require(base >= 0, s"manifest table at $root does not exist")
+    val rec = recordAt(spark, root, base)
     // the EFFECTIVE view — pending equality deletes applied, so a
     // matched target row a prior mergeEq already replaced never joins
-    val (m, states) = effectiveManifest(spark, root, base)
-    val schema = tableSchema(spark, root, base)
-    val dvByPath: Map[String, (Option[String], Long)] =
-      states.map(s => s._1 -> ((s._2, s._3))).toMap
-    val touched = touchedPaths(spark, m, keys, keyCols, schema)
-    readFilesDv(spark, schema, touched.map(p => (p, dvByPath(p)._1)),
-      touched.map(p => dvByPath(p)._2).sum)
+    val (m, files) = effectiveManifest(spark, root, rec)
+    val schema = metaOf(rec).schema
+    val touched = keyedFiles(spark, m, files, keys, keyCols, schema)
+    readFilesDv(spark, schema, touched.map(_.file), touched.map(_.dvRows).sum)
   }
 
-  /** Shared core of the keyed row-level ops: pin a base manifest,
-    * find the touched files, read ONLY them, apply `rewrite`
-    * (touched-rows, batch) → replacement rows, land those as new
-    * files, and commit (base-manifest − touched) ∪ new-rows as
-    * base+1. Conflicts recompute from scratch against the new base —
-    * including the touched-file set, which may differ. */
-  private def rewriteTouched(spark: SparkSession, root: String,
-                             batch: DataFrame, keyCols: Seq[String],
-                             evolve: Boolean = false)
-                            (rewrite: (DataFrame, DataFrame) => DataFrame): Long =
-    // starts from the EFFECTIVE view, so the commit also materializes
-    // any pending equality deletes — registry staged empty
-    commitLoop(spark, root) { (base, meta) =>
-      val (m, effSt) = effectiveManifest(spark, root, base)
-      val baseSchema = meta.schema
-      val stats = statsCols(spark, root, base)
-      val dvByPath: Map[String, (Option[String], Long)] =
-        effSt.map(s => s._1 -> ((s._2, s._3))).toMap
-      // additive evolution: the next version's schema is base-order ++
-      // the batch's new columns; touched files read through the NEW
-      // schema (absent columns surface as NULL — parquet by-name).
-      // Evolved-in columns commit NULLABLE regardless of the batch's
-      // nullability: every pre-evolution file lacks them, so untouched
-      // rows READ null — and the vectorized reader enforces the
-      // declared nullability per file (a non-nullable missing column
-      // is a read error, not a null)
-      val schema =
-        if (!evolve) baseSchema
-        else StructType(baseSchema.fields ++
-          batch.schema.fields.filterNot(f =>
-            baseSchema.fieldNames.contains(f.name))
-            .map(_.copy(nullable = true)))
-      val cols = schema.fieldNames.toSeq
-      val keys = batch.select(keyCols.map(col): _*).distinct()
-      val touched = touchedPaths(spark, m, keys, keyCols, baseSchema)
-      // touched files read WITH their deletion vectors applied — a
-      // rewrite that read raw would resurrect deleted rows; the
-      // rewritten files then carry no vector (the rewrite purges it)
-      val touchedRows = readFilesDv(spark, schema,
-        touched.map(p => (p, dvByPath(p)._1)),
-        touched.map(p => dvByPath(p)._2).sum)
-      // the batch keeps its op/seq-style control columns — each op's
-      // rewrite consumes them; the final projection normalizes order
-      val replacement = rewrite(touchedRows, batch)
-        .select(cols.map(col): _*)
-      val newRows = landFiles(physSelect(replacement, schema), root, stats)
-      Some((withLanded(m.filter(!col("path").isin(touched: _*)), newRows),
-        meta.copy(schema = schema, eq = Nil)))
-    }.get
+  /** Upsert by key — SQL `MERGE … WHEN MATCHED UPDATE / WHEN NOT
+    * MATCHED INSERT`: `updates`' keys retire, `updates` lands. Duplicate
+    * keys within `updates` are the caller's to resolve (both would
+    * land). */
+  private def upsert(updates: DataFrame, keyCols: Seq[String],
+                     evolve: Boolean = false,
+                     batchId: Option[Long] = None): ChangeSet =
+    ChangeSet(Some(ByKeys(updates, keyCols)), Batch(updates), evolve, batchId)
 
-  /** Row-level DELETE, file-granular: the predicate's range conjuncts
-    * run through the shared envelope-proof engine against the
-    * manifest's own stats — provably-unmatching files carry forward
-    * untouched, provably ALL-MATCHING files DROP from the manifest by
-    * reference ([[graft.plans.StatsPruneRule.wholeFileMatched]] — the
-    * metadata-only retention-delete grain: `ts < cutoff` on a
-    * time-clustered table removes whole files with ZERO data I/O);
-    * only the boundary files between the two proofs are rewritten,
-    * with SQL DELETE semantics (NULL predicate keeps the row). A
-    * predicate with no provable range shape degrades to rewriting
-    * every file — sound, at the old whole-table cost. */
+  /** Fold one CDC batch (key columns + a monotone per-key `seqCol` + an
+    * `opCol` + the row payload) as one commit: per key the highest
+    * `seqCol` wins, every winner's key retires, and each winner whose
+    * op is not 'D' lands — `I`, `U` and NULL upsert. Folding batches in
+    * sequence order equals one fold of their union; `(key, seqCol)`
+    * must be unique within a batch. */
+  private def foldCdc(changes: DataFrame, root: String,
+                      keyCols: Seq[String], seqCol: String, opCol: String,
+                      grain: Grain): Long = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
+    // read by the touched-file search, the retirement and the landing:
+    // never recompute the window over the source between them
+    val winners = changes
+      .withColumn("_graft_rn", row_number().over(w))
+      .filter(col("_graft_rn") === 1).drop("_graft_rn")
+      .persist()
+    try rowDelta(changes.sparkSession, root, ChangeSet(
+        Some(ByKeys(winners, keyCols)),
+        Batch(winners.filter(!(col(opCol) <=> lit("D"))).drop(opCol, seqCol))),
+      grain).get
+    finally winners.unpersist(): Unit
+  }
+
+  // The public row-level ops: one change set each, committed by
+  // [[rowDelta]] at the grain the name picks. Each returns the committed
+  // version.
+
+  /** [[upsert]], copy-on-write. */
+  def merge(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
+    merge(updates, root, keyCols, evolveSchema = false)
+
+  /** [[upsert]], copy-on-write, with optional additive schema evolution
+    * ([[ChangeSet]] `evolve`; untouched files carry by reference under
+    * the wider schema). Strict by default: a silently widened schema is
+    * a bug surfacing as an error. */
+  def merge(updates: DataFrame, root: String, keyCols: Seq[String],
+            evolveSchema: Boolean): Long =
+    rowDelta(updates.sparkSession, root, upsert(updates, keyCols,
+      evolveSchema), CopyOnWrite).get
+
+  /** [[foldCdc]], copy-on-write. */
+  def applyCdc(changes: DataFrame, root: String, keyCols: Seq[String],
+               seqCol: String = "seq", opCol: String = "op"): Long =
+    foldCdc(changes, root, keyCols, seqCol, opCol, CopyOnWrite)
+
+  /** SQL DELETE, copy-on-write: provably all-matching files drop by
+    * reference ([[predicateFiles]]), boundary files are rewritten. */
   def deleteWhere(spark: SparkSession, root: String, cond: Column): Long =
-    // validateCons = false: a pure row filter cannot introduce a
-    // CHECK violation — every surviving row already satisfied the
-    // live set (replaceWhere keeps validation: its batch is new rows)
-    rewriteWhere(spark, root, cond, dropWholeMatches = true,
-      validateCons = false)(
-      (touchedRows, matched) => touchedRows.filter(not(matched)))
+    rowDelta(spark, root, ChangeSet(Some(ByPredicate(cond, dropWhole = true)),
+      NoRows), CopyOnWrite).get
+
+  /** SQL UPDATE, copy-on-write: rows where `cond` is true take `sets`. */
+  def updateWhere(spark: SparkSession, root: String, cond: Column,
+                  sets: Seq[(String, Column)]): Long = {
+    require(sets.nonEmpty, "updateWhere requires at least one assignment")
+    rowDelta(spark, root, ChangeSet(Some(ByPredicate(cond, dropWhole = false)),
+      Assign(sets)), CopyOnWrite).get
+  }
+
+  /** Atomic predicate-region swap — Delta's `replaceWhere`: one commit
+    * deletes every row matching `cond` and lands `df`, whose rows must
+    * all satisfy `cond` (checked before anything lands). A predicate
+    * aligned with the file layout reads nothing of the old region. */
+  def replaceWhere(df: DataFrame, root: String, cond: Column): Long =
+    rowDelta(df.sparkSession, root, ChangeSet(
+      Some(ByPredicate(cond, dropWhole = true)), Batch(df)), CopyOnWrite).get
+
+  /** [[upsert]] at the deletion-vector grain. */
+  def mergeMor(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
+    mergeMor(updates, root, keyCols, evolveSchema = false)
+
+  /** [[upsert]] at the deletion-vector grain with [[merge]]'s
+    * `evolveSchema`: even matched files keep their bytes. */
+  def mergeMor(updates: DataFrame, root: String, keyCols: Seq[String],
+               evolveSchema: Boolean): Long =
+    rowDelta(updates.sparkSession, root, upsert(updates, keyCols,
+      evolveSchema), Vectors).get
+
+  /** Stream-idempotent [[mergeMor]]: the micro-batch id commits with the
+    * version and a replayed id is a no-op (None) — the keyed streaming
+    * sink is exactly-once, with no phantom change-feed versions. */
+  def mergeMorBatch(updates: DataFrame, root: String, keyCols: Seq[String],
+                    batchId: Long): Option[Long] =
+    rowDelta(updates.sparkSession, root,
+      upsert(updates, keyCols, batchId = Some(batchId)), Vectors)
+
+  /** [[foldCdc]] at the deletion-vector grain. */
+  def applyCdcMor(changes: DataFrame, root: String, keyCols: Seq[String],
+                  seqCol: String = "seq", opCol: String = "op"): Long =
+    foldCdc(changes, root, keyCols, seqCol, opCol, Vectors)
+
+  /** [[deleteWhere]] at the deletion-vector grain. A file whose vector
+    * covers every row drops; [[optimizeIncremental]] purges the vectors
+    * of half-dead files, [[optimize]] all. */
+  def deleteWhereMor(spark: SparkSession, root: String, cond: Column): Long =
+    rowDelta(spark, root, ChangeSet(Some(ByPredicate(cond, dropWhole = true)),
+      NoRows), Vectors).get
+
+  /** [[updateWhere]] at the deletion-vector grain: the matched LIVE
+    * rows' copies land, so an update never resurrects a deleted row. */
+  def updateWhereMor(spark: SparkSession, root: String, cond: Column,
+                     sets: Seq[(String, Column)]): Long = {
+    require(sets.nonEmpty, "updateWhereMor requires at least one assignment")
+    rowDelta(spark, root, ChangeSet(Some(ByPredicate(cond, dropWhole = false)),
+      Assign(sets)), Vectors).get
+  }
+
+  /** [[upsert]] at the equality-delete grain — Iceberg v2's streaming
+    * upsert, zero target reads. Duplicate keys within the batch BOTH
+    * survive (same-seq rows are exempt from the batch's own delete). */
+  def mergeEq(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
+    rowDelta(updates.sparkSession, root, upsert(updates, keyCols),
+      EqDeletes).get
+
+  /** Stream-idempotent [[mergeEq]] ([[mergeMorBatch]]'s contract). */
+  def mergeEqBatch(updates: DataFrame, root: String, keyCols: Seq[String],
+                   batchId: Long): Option[Long] =
+    rowDelta(updates.sparkSession, root,
+      upsert(updates, keyCols, batchId = Some(batchId)), EqDeletes)
+
+  /** [[foldCdc]] at the equality-delete grain: an upsert's replacement
+    * lands at its delete's own seq, exempt from it. */
+  def applyCdcEq(changes: DataFrame, root: String, keyCols: Seq[String],
+                 seqCol: String = "seq", opCol: String = "op"): Long =
+    foldCdc(changes, root, keyCols, seqCol, opCol, EqDeletes)
+
+  /** Delete by key at the equality-delete grain — the `WHEN MATCHED
+    * THEN DELETE`-only MERGE, cost O(keys). */
+  def deleteByKeyEq(keys: DataFrame, root: String,
+                    keyCols: Seq[String]): Long =
+    rowDelta(keys.sparkSession, root, ChangeSet(Some(ByKeys(keys, keyCols)),
+      NoRows), EqDeletes).get
 
   /** ADDITIVE schema evolution as a standalone commit — `ALTER TABLE
     * ADD COLUMN` for the manifest format: the next version reuses the
@@ -2005,7 +2259,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         "a schema with repeated fields would poison every later read")
     require(adds.map(_.name).toSet.intersect(drops.toSet).isEmpty,
       "a column cannot be both added and dropped in one change set")
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val schema = meta.schema
       adds.foreach(f => require(!schema.fieldNames.contains(f.name),
         s"column ${f.name} already exists"))
@@ -2046,7 +2300,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
           // the conflict, and the new column simply maps to a FRESH
           // physical name: old files' stale bytes stay invisible, no
           // optimize() required, nothing refused.
-          val liveNames = physicalColumns(spark, filesAt(spark, root, base))
+          val liveNames = physicalColumns(spark, filesAt(spark, rec))
           val taken = schema.fields.map(physicalName).toSet
           adds.map { f =>
             if (!liveNames.contains(f.name) && !taken.contains(f.name)) f
@@ -2060,7 +2314,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         }
       val next = StructType(
         schema.fields.filterNot(f => drops.contains(f.name)) ++ adds2)
-      val m = manifest(spark, root, base)
+      val m = manifest(spark, rec)
       // stat triplets and bloom bits are keyed by the dropped fields'
       // PHYSICAL names
       val statDrop = drops.flatMap { c =>
@@ -2130,7 +2384,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   def renameColumn(spark: SparkSession, root: String,
                    from: String, to: String): Long = {
     require(from != to, "rename requires two different names")
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val schema = meta.schema
       require(schema.fieldNames.contains(from),
         s"column $from does not exist")
@@ -2160,7 +2414,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
           f.copy(name = to, metadata = md)
         }
       })
-      Some((manifest(spark, root, base), meta.copy(schema = next)))
+      Some((manifest(spark, rec), meta.copy(schema = next)))
     }.get
   }
 
@@ -2215,7 +2469,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     require(path.nonEmpty, "rename requires a column path")
     if (path.length == 1) return renameColumn(spark, root, path.head, to)
     require(path.last != to, "rename requires two different names")
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val schema = meta.schema
       require(!meta.eq.exists(_.keys.contains(path.head)),
         s"column ${path.head} keys pending equality deletes — run " +
@@ -2225,7 +2479,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       // touching ANY part of this top-level column blocks renames
       // inside it (conservative: refs track the head, the only name
       // the registry can see without a full analysis)
-      constraintsAt(spark, root, base).foreach { case (n, e) =>
+      meta.constraints.foreach { case (n, e) =>
         require(!constraintRefs(spark, e).contains(path.head),
           s"column ${path.head} is referenced by constraint $n ($e) — " +
             "drop the constraint (and re-add it under the new name) " +
@@ -2248,7 +2502,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
           }
         })
       }
-      Some((manifest(spark, root, base), meta.copy(schema = next)))
+      Some((manifest(spark, rec), meta.copy(schema = next)))
     }.get
   }
 
@@ -2275,7 +2529,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       s"duplicate new field names: ${adds.map(_.name).mkString(", ")}")
     require(adds.map(_.name).toSet.intersect(drops.toSet).isEmpty,
       "a field cannot be both added and dropped in one change set")
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val schema = meta.schema
       require(!meta.eq.exists(_.keys.contains(parent.head)),
         s"column ${parent.head} keys pending equality deletes — run " +
@@ -2285,14 +2539,14 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       // drops under it (a dropped member would brick every later
       // landing's validation with an analysis error, not a refusal)
       if (drops.nonEmpty)
-        constraintsAt(spark, root, base).foreach { case (n, e) =>
+        meta.constraints.foreach { case (n, e) =>
           require(!constraintRefs(spark, e).contains(parent.head),
             s"column ${parent.head} is referenced by constraint $n " +
               s"($e) — drop the constraint before altering inside it") }
       val physParent = physicalPath(schema, parent)
       val liveNames =
         if (adds.isEmpty) Set.empty[String]
-        else physicalColumns(spark, filesAt(spark, root, base))
+        else physicalColumns(spark, filesAt(spark, rec))
       val next = mapStructAt(schema, parent, "ALTER COLUMN") { st =>
         drops.foreach(n => require(st.fieldNames.contains(n),
           s"field ${parent.mkString(".")}.$n does not exist"))
@@ -2314,7 +2568,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         StructType(st.fields.filterNot(f => drops.contains(f.name)) ++
           adds2)
       }
-      Some((manifest(spark, root, base), meta.copy(schema = next)))
+      Some((manifest(spark, rec), meta.copy(schema = next)))
     }.get
   }
 
@@ -2418,11 +2672,11 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * refuse — they would need per-file rewrites. Top-level only. */
   def widenColumnType(spark: SparkSession, root: String, name: String,
                       to: org.apache.spark.sql.types.DataType): Long =
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val schema = meta.schema
       validateWiden(schema, meta.eq.flatMap(_.keys).toSet, name, to)
       val phys = physicalFor(schema, name)
-      val m = manifest(spark, root, base).drop(bloomCol(phys))
+      val m = manifest(spark, rec).drop(bloomCol(phys))
       val m2 =
         if (!m.columns.contains(s"${phys}_min")) m
         else m.withColumn(s"${phys}_min", col(s"${phys}_min").cast(to))
@@ -2445,10 +2699,10 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     require(path.nonEmpty, "widen requires a column path")
     if (path.length == 1)
       return widenColumnType(spark, root, path.head, to)
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       val next = validateNestedWiden(meta.schema,
         meta.eq.flatMap(_.keys).toSet, path, to)
-      Some((manifest(spark, root, base)
+      Some((manifest(spark, rec)
         .drop(bloomCol(physicalFor(meta.schema, path.head))),
         meta.copy(schema = next)))
     }.get
@@ -2474,7 +2728,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   }
 
   /** Expand (data file → DV sidecar) pairs into deleted
-    * (`_dv_file`, `_dv_idx`) rows — on EXECUTORS: each task reads its
+    * (`_p` file, `_i` position) rows — on EXECUTORS: each task reads its
     * sidecars and walks the set bits; the driver never loads a bitset. */
   private def dvRowsDf(spark: SparkSession,
                        pairs: Seq[(String, String)]): DataFrame = {
@@ -2493,27 +2747,26 @@ object ManifestTable extends org.apache.spark.internal.Logging {
             val out = (p, i.toLong); i = bits.nextSetBit(i + 1); out
           }
         }
-      }.toDF("_dv_file", "_dv_idx")
+      }.toDF("_p", "_i")
   }
 
-  /** Read a file subset WITH its deletion vectors applied — the
-    * DataFrame-level reader every INTERNAL consumer of file contents
-    * rides (rewrite cores, change-feed diffs, incremental optimize;
-    * user-facing reads apply DVs inside the DSv2 scan instead, see
-    * [[graft.sources.v2.GraftTable]]). Clean files read verbatim;
-    * DV-bearing files read with their file position (`_metadata
-    * .row_index`) and anti-join the expanded deleted rows — cost ∝
-    * subset + deleted rows in it. `totalDvRows` (from the manifest)
-    * picks the join strategy: small DV sets broadcast, large ones
-    * shuffle — never a blind broadcast of an unbounded side. */
+  /** Read a file subset WITH its deletion vectors applied — the one
+    * reader every INTERNAL consumer of file contents rides (the
+    * row-level core, change-feed diffs, incremental optimize;
+    * user-facing reads apply vectors inside the DSv2 scan, see
+    * [[graft.sources.v2.GraftTable]]). `files` are (path, size,
+    * vector), planned by [[scanFiles]] with no listing — a path list
+    * handed to `spark.read.parquet` starts a listing job past 32
+    * paths. Clean files read verbatim; vectored files read with their
+    * row positions and anti-join the expanded deleted rows, cost ∝
+    * subset + deleted rows in it (`totalDvRows`, from the manifest,
+    * picks the join strategy). `positions` keeps each
+    * row's (file, position) as `_p`/`_i` — for consumers that vector
+    * the rows they select. */
   private[graft] def readFilesDv(spark: SparkSession, schema: StructType,
-                                 files: Seq[(String, Option[String])],
-                                 totalDvRows: Long): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    val clean = files.collect { case (p, None) => p }
-    val dvd = files.collect { case (p, Some(dv)) => (p, dv) }
+                                 files: Seq[(String, Long, Option[String])],
+                                 totalDvRows: Long,
+                                 positions: Boolean = false): DataFrame = {
     // files carry PHYSICAL column names; readers hand back logical
     // (nested mappings rename back through a positional struct cast)
     val toLogical = schema.fields.toIndexedSeq.map { f =>
@@ -2521,116 +2774,79 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       (if (typeHasMapping(f.dataType)) c.cast(relaxedType(f.dataType))
        else c).as(f.name)
     }
-    val cleanDf =
-      if (clean.isEmpty) None
-      else Some(spark.read.schema(toPhysical(schema)).parquet(clean: _*)
-        .select(toLogical: _*))
+    val pos = Seq(canonPathCol(col("_metadata.file_path")).as("_p"),
+      col("_metadata.row_index").as("_i"))
+    def scan(fs: Seq[(String, Long, Option[String])], withPos: Boolean) =
+      scanFiles(spark, toPhysical(schema), fs.map(f => (f._1, f._2)))
+        .select(toLogical ++ (if (withPos) pos else Nil): _*)
+    val (clean, dvd) = files.partition(_._3.isEmpty)
+    val cleanDf = if (clean.isEmpty) None else Some(scan(clean, positions))
     val dvDf =
       if (dvd.isEmpty) None
       else {
-        val raw = spark.read.schema(toPhysical(schema))
-          .parquet(dvd.map(_._1): _*)
-          .withColumn("_dv_file", canonPathCol(col("_metadata.file_path")))
-          .withColumn("_dv_idx", col("_metadata.row_index"))
-        val dels0 = dvRowsDf(spark, dvd)
-        val dels = dvJoinSide(dels0, dvd, totalDvRows)
-        Some(raw.join(dels, Seq("_dv_file", "_dv_idx"), "left_anti")
-          .select(toLogical: _*))
+        val pairs = dvd.map(f => (f._1, f._3.get))
+        // BROADCAST the deleted rows only while their serialized size
+        // (each repeats its path + a long) stays under 64 MB — a row
+        // count alone would broadcast hundreds of MB of paths on a mass
+        // delete; anything larger shuffles
+        val maxPath = pairs.map(_._1.length).max
+        val dels = dvRowsDf(spark, pairs)
+        val live = scan(dvd, withPos = true).join(
+          if (totalDvRows * (maxPath + 16L) <= (64L << 20)) broadcast(dels)
+          else dels.hint("shuffle_hash"), Seq("_p", "_i"), "left_anti")
+        Some(if (positions) live else live.drop("_p", "_i"))
       }
-    (cleanDf.toSeq ++ dvDf.toSeq).reduce(_ unionByName _)
+    (cleanDf.toSeq ++ dvDf.toSeq).reduceOption(_ unionByName _).getOrElse {
+      val empty = spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+      if (!positions) empty
+      else empty.withColumn("_p", lit(null).cast("string"))
+        .withColumn("_i", lit(null).cast("long"))
+    }
   }
 
-  /** Join-strategy pick for the expanded deleted-rows side: BROADCAST
-    * only when the estimated serialized size (each row repeats its
-    * file-path string + a long) stays under 64 MB — a row-count
-    * threshold alone would happily broadcast hundreds of MB of
-    * repeated path strings on a mass delete; anything larger shuffles. */
-  private def dvJoinSide(dels: DataFrame, dvd: Seq[(String, String)],
-                         totalDvRows: Long): DataFrame = {
-    val maxPath = dvd.map(_._1.length).foldLeft(0)(math.max)
-    if (totalDvRows * (maxPath + 16L) <= (64L << 20)) broadcast(dels)
-    else dels.hint("shuffle_hash")
+  /** Parquet files given as (path, size), read under `schema` made
+    * all-nullable (as `spark.read.schema` does: a declared NOT NULL
+    * must not let the optimizer fold away a check on the bytes) — the
+    * scan plans from the list through a [[graft.sources.v2
+    * .GraftManifestFileIndex]]: no listing, no stat, whatever the
+    * count. */
+  private def scanFiles(spark: SparkSession, schema: StructType,
+                        files: Seq[(String, Long)]): DataFrame = {
+    val readSchema = VersionedTable.allNullable(schema)
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        new graft.sources.v2.GraftManifestFileIndex(spark, "", files, 0L,
+          readSchema, None),
+        StructType(Nil), readSchema, None,
+        new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** Per-file DV state of one manifest: path → (dv sidecar, dv rows,
-    * file rows) — one metadata-scale collect. */
-  private def dvStates(spark: SparkSession, rec: VersionedTable.Commit)
-      : Seq[(String, Option[String], Long, Long)] = {
+  /** One data file of a manifest version as the row-level core reads
+    * it: size, added-at `seq`, deletion vector, row counts. */
+  private final case class Entry(path: String, size: Long, seq: Long,
+                                 dv: Option[String], dvRows: Long,
+                                 rows: Long) {
+    def state: (String, Option[String], Long, Long) = (path, dv, dvRows, rows)
+    def file: (String, Long, Option[String]) = (path, size, dv)
+  }
+
+  /** The entries of one manifest version, sorted by path — one
+    * metadata-scale read of the epoch's cached collection. */
+  private def entries(spark: SparkSession,
+                      rec: VersionedTable.Commit): Seq[Entry] = {
     val (schema, rows) = manifestCollected(spark, rec)
-    val Seq(ip, id, iv, ir) = Seq("path", "dv_path", "dv_rows",
-      "row_count").map(schema.fieldIndex)
-    rows.map(r => (r.getString(ip), Option(r.getString(id)),
-      r.getLong(iv), r.getLong(ir))).sortBy(_._1)
+    val Seq(ip, is, iq, id, iv, ir) = Seq("path", "size", "seq", "dv_path",
+      "dv_rows", "row_count").map(schema.fieldIndex)
+    rows.map(r => Entry(r.getString(ip), r.getLong(is), r.getLong(iq),
+      Option(r.getString(id)), r.getLong(iv), r.getLong(ir))).sortBy(_.path)
   }
 
-  /** MERGE-ON-READ row-level DELETE — the point-delete grain a 100 TB
-    * table needs: instead of REWRITING every touched file (the
-    * [[deleteWhere]] copy-on-write grain, cost ∝ touched bytes), the
-    * commit writes one tiny DELETION-VECTOR sidecar per touched file —
-    * a bitset of deleted row positions, ≤ rowCount/8 bytes — and the
-    * next manifest points the surviving files at their vectors. Cost ∝
-    * touched-file SCAN + deleted-row BITS; the data files themselves
-    * carry forward BY REFERENCE (the Delta/Iceberg position-delete
-    * grain).
-    *
-    * Semantics are identical to [[deleteWhere]] (SQL DELETE: a NULL
-    * predicate keeps the row), proven by the shared oracle gate.
-    * Every read path applies the vectors: user-facing scans inside
-    * the DSv2 source, internal readers through [[readFilesDv]], the
-    * change feed by treating a DV change as remove+add of the file's
-    * state. Envelopes and blooms of a DV-bearing file become
-    * CONSERVATIVE (supersets of the live rows) — sound for pruning
-    * and touched-file search; metadata aggregates keep COUNT(*) exact
-    * (live = row_count − dv_rows) and route MIN/MAX to the scan.
-    * A repeated delete MERGES vectors (old ∪ new — idempotent); a
-    * file whose vector covers every row drops from the manifest
-    * entirely. [[optimizeIncremental]] purges vectors once a file is
-    * half dead; [[optimize]] purges all. Sidecars are attempt-unique
-    * and swept by [[vacuum]] once unreferenced. */
-  def deleteWhereMor(spark: SparkSession, root: String, cond: Column): Long =
-    commitLoop(spark, root) { (base, meta) =>
-      val (m, states) = effectiveManifest(spark, root, base)
-      val schema = meta.schema
-      val stats = statsCols(spark, root, base)
-      val resolvedCond = toPhysicalExpr(
-        resolveCond(spark, cond, schema), schema)
-      val excluded = graft.plans.StatsPruneRule.excludedByEnvelopes(
-        spark, resolvedCond, m, stats)
-      // provably ALL-MATCHING files drop from the manifest directly —
-      // no position scan, no vector sidecar (the metadata-only grain,
-      // same proof as [[deleteWhere]]'s; raw envelopes are supersets
-      // of the live rows, so a DV-bearing file's proof still holds)
-      val dropped = graft.plans.StatsPruneRule.wholeFileMatched(
-        resolvedCond, m, stats) -- excluded
-      val kept =
-        if (dropped.isEmpty) m
-        else m.filter(!col("path").isin(dropped.toSeq: _*))
-      val touched = states.filterNot(s =>
-        excluded.contains(s._1) || dropped.contains(s._1))
-      val next = if (touched.isEmpty) kept else {
-        // file positions of the rows the predicate matches — raw read
-        // (existing DVs included: re-matching an already-deleted row
-        // re-sets an already-set bit, which is what makes the merge
-        // idempotent); physical names read, logical handed to `cond`
-        val matched = spark.read.schema(toPhysical(schema))
-          .parquet(touched.map(_._1): _*)
-          .select(canonPathCol(col("_metadata.file_path")).as("_p") +:
-            col("_metadata.row_index").as("_i") +:
-            schema.fields.toIndexedSeq.map(f =>
-              col(physicalName(f)).as(f.name)): _*)
-          .filter(coalesce(cond, lit(false)))
-          .select(col("_p"), col("_i"))
-        vectorPositions(spark, root, kept, states, touched, matched)
-          .getOrElse(kept)
-      }
-      Some((next, meta.copy(eq = Nil)))
-    }.get
-
-  /** The deletion-vector bitset writer shared by the merge-on-read
-    * commits ([[vectorPositions]]) and the equality-delete read-side
-    * resolution ([[resolveEq]]): one writer task per hash bucket of
-    * files builds each file's bitset from its (file, position) rows —
-    * existing vectors OR-ed in via `oldDv` — and writes an
+  /** The deletion-vector bitset writer behind [[withVectors]]: one
+    * writer task per hash bucket of files builds each file's bitset
+    * from its (file, position) rows — existing vectors OR-ed in via
+    * `oldDv` — and writes an
     * ATTEMPT-UNIQUE sidecar under `dvDir` (a killed speculative twin
     * can never tear the file the winning attempt's returned row
     * names). The collect is metadata-scale: (file, sidecar, total
@@ -2671,51 +2887,48 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       }.collect().toSeq
   }
 
-  /** Shared commit core of the merge-on-read ops: given the matched
-    * (file, position) rows of one base manifest, write the merged
-    * vectors ([[writeVectors]]) and return the next manifest —
-    * existing vectors OR-ed in, fully-covered files dropped,
-    * untouched rows verbatim. None when nothing matched (the caller
-    * commits the base unchanged). */
-  private def vectorPositions(spark: SparkSession, root: String,
-                              m: DataFrame,
-                              states: Seq[(String, Option[String], Long, Long)],
-                              touched: Seq[(String, Option[String], Long, Long)],
-                              positions: DataFrame): Option[DataFrame] = {
-    val spk = spark
-    import spk.implicits._
-    val dvDir = s"${dvRoot(root)}/${java.util.UUID.randomUUID().toString}"
-    val oldDv: Map[String, String] =
-      touched.collect { case (p, Some(dv), _, _) => p -> dv }.toMap
-    val newEntries = writeVectors(spark, dvDir, oldDv, positions)
-    if (newEntries.isEmpty) None
-    else {
-      val rowsByPath = states.map(s => s._1 -> s._4).toMap
-      val dead = newEntries.collect {
-        case (p, _, n) if n >= rowsByPath(p) => p }
-      val upd = newEntries.filterNot(e => dead.contains(e._1))
-        .toDF("path", "_new_dv", "_new_rows")
-      Some(m.filter(!col("path").isin(dead: _*))
-        .join(broadcast(upd), Seq("path"), "left")
-        .withColumn("dv_path", coalesce(col("_new_dv"), col("dv_path")))
-        .withColumn("dv_rows",
-          coalesce(col("_new_rows"), col("dv_rows")))
-        .drop("_new_dv", "_new_rows"))
+  /** Retire `positions` (`_p`, `_i`) of `files` — the vector encoding
+    * shared by the row-level core and the equality-delete resolution:
+    * [[writeVectors]] writes each named file's merged vector under
+    * `dvDir`, and the result is `files` with their new states (a file
+    * whose vector covers every row drops). Equal to `files` when no
+    * position matched. */
+  private def withVectors(spark: SparkSession, dvDir: String,
+                          files: Seq[Entry],
+                          positions: DataFrame): Seq[Entry] = {
+    val written = writeVectors(spark, dvDir,
+      files.flatMap(f => f.dv.map(f.path -> _)).toMap, positions)
+      .map(w => w._1 -> w).toMap
+    files.flatMap { f =>
+      written.get(f.path) match {
+        case None                         => Some(f)
+        case Some((_, _, n)) if n >= f.rows => None // fully dead
+        case Some((_, dv, n))             => Some(f.copy(dv = Some(dv), dvRows = n))
+      }
     }
+  }
+
+  /** `m` restricted to `files`, each entry carrying its file's vector
+    * state — the manifest of a view whose vectors changed (files absent
+    * from `files` leave). */
+  private def withStates(m: DataFrame, files: Seq[Entry]): DataFrame = {
+    val spk = m.sparkSession
+    import spk.implicits._
+    val st = files.map(f => (f.path, f.dv.orNull, f.dvRows))
+      .toDF("path", "_e_dv", "_e_rows")
+    m.join(broadcast(st), Seq("path"), "inner")
+      .withColumn("dv_path", col("_e_dv"))
+      .withColumn("dv_rows", col("_e_rows"))
+      .select(m.columns.toIndexedSeq.map(col): _*)
   }
 
   // ------------------------------------- equality-delete resolution
   //
-  // Read-side materialization of pending equality deletes: the keys a
-  // [[mergeEq]] committed resolve into ORDINARY deletion vectors over
-  // the envelope/bloom-touched file subset, written once per version
-  // into attempt-unique scratch under `_dv` and cached per manifest
-  // epoch — so every DV-aware consumer (the DSv2 scan, the
-  // internal readers, the change feed) serves equality deletes with
-  // zero new read machinery. The resolution job is exactly the
-  // matched-positions scan [[mergeMor]] would have run at WRITE time,
-  // deferred to the first read and paid once; [[compactEq]] / the
-  // first row-level op / the maintenance tick make it durable.
+  // Pending equality deletes resolve into ORDINARY deletion vectors
+  // over the envelope/bloom-touched files — the keyed match a vector
+  // commit runs at write time ([[keyedMatches]]), deferred to the
+  // first read — written once into attempt-unique scratch under `_dv`
+  // and cached per epoch, so every vector-aware reader serves them.
 
   /** Resolved equality deletes per manifest epoch. Entries are
     * immutable per epoch; scratch sidecars are TTL-swept by
@@ -2735,7 +2948,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   /** Per-file effective DV state of one version: path → (dv sidecar,
     * deleted rows, file rows) with any pending equality deletes
     * RESOLVED in (fully-dead files dropped). Without pending deletes
-    * this is exactly the manifest's own [[dvStates]]. */
+    * this is exactly the manifest's own states. */
   private[graft] def effectiveStates(spark: SparkSession, root: String,
                                      version: Long)
       : Seq[(String, Option[String], Long, Long)] =
@@ -2744,8 +2957,8 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   private def effectiveStates(spark: SparkSession, root: String,
                               rec: VersionedTable.Commit)
       : Seq[(String, Option[String], Long, Long)] = {
-    val entries = metaOf(rec).eq
-    if (entries.isEmpty) return dvStates(spark, rec)
+    val pending = metaOf(rec).eq
+    if (pending.isEmpty) return entries(spark, rec).map(_.state)
     // re-validate EVERY scratch sidecar: committed vectors are
     // refcount-durable, but unadopted eqres scratch is what the
     // vacuum TTL sweeps out from under a long-lived cache entry —
@@ -2759,7 +2972,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         case (_, Some(dv), _, _) if dv.contains("/eqres-") => dv }
       scratch.forall(dv => fs(spark, root).exists(new Path(dv)))
     }.getOrElse {
-      val resolved = resolveEq(spark, root, rec, entries)
+      val resolved = resolveEq(spark, root, rec, pending)
       EpochCache.put(EqResolutions, rec.key, resolved) // replaces a stale hit
       resolved
     }
@@ -2893,239 +3106,63 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                                     version: Long)
       : Seq[(String, Long, Option[String], Long)] = {
     val rec = recordAt(spark, root, version)
-    val (schema, rows) = manifestCollected(spark, rec)
-    val (ip, is) = (schema.fieldIndex("path"), schema.fieldIndex("size"))
-    val sizes = rows.map(r => r.getString(ip) -> r.getLong(is)).toMap
-    effectiveStates(spark, root, rec).map(s =>
-      (s._1, sizes(s._1), s._2, s._3))
+    val size = entries(spark, rec).map(e => e.path -> e.size).toMap
+    effectiveStates(spark, root, rec).map(s => (s._1, size(s._1), s._2, s._3))
   }
 
   /** The EFFECTIVE manifest of one version — pending equality deletes
     * materialized as deletion vectors on its rows (dead files
-    * dropped), plus the states. Row-level ops START FROM THIS VIEW:
-    * their commit then carries the materialized vectors and stages an
-    * EMPTY registry (`_ => Nil`), folding the compaction into their
-    * own CAS commit for free. */
+    * dropped) — with its entries. Row-level ops START FROM THIS VIEW:
+    * their commit then carries the materialized vectors under an EMPTY
+    * registry, folding the compaction into their own CAS commit. */
   private def effectiveManifest(spark: SparkSession, root: String,
-                                version: Long)
-      : (DataFrame, Seq[(String, Option[String], Long, Long)]) = {
-    val rec = recordAt(spark, root, version)
+                                rec: VersionedTable.Commit)
+      : (DataFrame, Seq[Entry]) = {
     val m = manifest(spark, rec)
-    if (metaOf(rec).eq.isEmpty) return (m, dvStates(spark, rec))
-    val states = effectiveStates(spark, root, rec)
-    val spk = spark
-    import spk.implicits._
-    val stDf = states.map(s => (s._1, s._2.orNull, s._3))
-      .toDF("path", "_e_dv", "_e_rows")
-    // inner join drops fully-dead files; effective vectors replace
-    val em = m.join(broadcast(stDf), Seq("path"), "inner")
-      .withColumn("dv_path", col("_e_dv"))
-      .withColumn("dv_rows", col("_e_rows"))
-      .drop("_e_dv", "_e_rows")
-      .select(m.columns.toIndexedSeq.map(col): _*)
-    (em, states)
+    val files = entries(spark, rec)
+    if (metaOf(rec).eq.isEmpty) return (m, files)
+    val states = effectiveStates(spark, root, rec).map(s => s._1 -> s).toMap
+    val live = files.flatMap(f => states.get(f.path).map(s =>
+      f.copy(dv = s._2, dvRows = s._3)))
+    (withStates(m, live), live)
   }
 
   /** The resolution job itself — cost ∝ the envelope/bloom-TOUCHED
     * subset of files OLDER than the deletes, never the table: per key
-    * set, the pending delete files union (each key row tagged with
-    * its delete's seq), candidate files (file seq < some delete's
-    * seq) narrow through the shared [[touchedPaths]] proofs, and one
-    * scan of the survivors semi-joins the broadcast keys under the
-    * ORDERING predicate (delete seq > file seq — a delete never kills
-    * rows that landed at or after it). Matched positions OR into the
-    * files' existing vectors via [[writeVectors]]. */
+    * set, the pending delete files union (each key row tagged with its
+    * delete's seq), candidate files (file seq < some delete's seq)
+    * narrow through the shared [[touchedPaths]] proofs, and the keyed
+    * match ([[keyedMatches]]) over them feeds [[withVectors]]. */
   private def resolveEq(spark: SparkSession, root: String,
-                        rec: VersionedTable.Commit, entries: Seq[EqEntry])
+                        rec: VersionedTable.Commit, pending: Seq[EqEntry])
       : Seq[(String, Option[String], Long, Long)] = {
-    val spk = spark
-    import spk.implicits._
-    val m = manifest(spark, rec)
-    val raw = dvStates(spark, rec)
-    val schema = metaOf(rec).schema
-    val seqByPath: Map[String, Long] = {
-      val (ms, rows) = manifestCollected(spark, rec)
-      val (ip, iq) = (ms.fieldIndex("path"), ms.fieldIndex("seq"))
-      rows.map(r => r.getString(ip) -> r.getLong(iq)).toMap
-    }
-    val maxSeq = entries.map(_.seq).max
-    val cand = raw.filter(s => seqByPath(s._1) < maxSeq)
-    if (cand.isEmpty) return raw
-    val candDf = cand.map(_._1).toDF("path")
-    val mCand = m.join(broadcast(candDf), Seq("path"), "left_semi")
-    val perGroup = entries.groupBy(_.keys).toSeq.flatMap {
-      case (keyCols, es) =>
-        val keysDf = es.map(e =>
-          spark.read.parquet(e.path)
-            .select(keyCols.map(col) :+ lit(e.seq).as("_eq_seq"): _*))
-          .reduce(_ unionByName _)
-        val touched = touchedPaths(spark, mCand,
-          keysDf.select(keyCols.map(col): _*).distinct(), keyCols, schema)
-          .toSet
-        val tStates = cand.filter(s => touched.contains(s._1))
-        if (tStates.isEmpty) None
-        else {
-          val live = readFilesDvPos(spark, schema,
-            tStates.map(s => (s._1, s._2)), tStates.map(_._3).sum)
-          val seqDf = tStates.map(s => (s._1, seqByPath(s._1)))
-            .toDF("_p", "_fseq")
-          // delete-side keys renamed — the live side carries the same
-          // logical names; NULL keys never match (SQL equality), the
-          // documented probe-nothing convention
-          val ek = keysDf.select(keyCols.toIndexedSeq
-            .map(c => col(c).as(s"_ek_$c")) :+ col("_eq_seq"): _*)
-          val positions = live.join(broadcast(seqDf), Seq("_p"))
-            .join(broadcast(ek),
-              keyCols.map(c => col(c) === col(s"_ek_$c"))
-                .reduce(_ && _) && col("_eq_seq") > col("_fseq"),
-              "left_semi")
-            .select(col("_p"), col("_i"))
-          Some((positions, tStates))
-        }
-    }
-    if (perGroup.isEmpty) return raw
-    val positions = perGroup.map(_._1).reduce(_ unionByName _)
-    val oldDv: Map[String, String] = perGroup.flatMap(_._2).collect {
-      case (p, Some(dv), _, _) => p -> dv }.toMap
-    val dvDir = s"${dvRoot(root)}/eqres-${java.util.UUID.randomUUID()}"
-    val newEntries = writeVectors(spark, dvDir, oldDv, positions)
-    if (newEntries.isEmpty) return raw
-    val upd = newEntries.map(e => e._1 -> ((e._2, e._3))).toMap
-    raw.flatMap { case s @ (p, _, _, rc) =>
-      upd.get(p) match {
-        case None               => Some(s)
-        case Some((_, n)) if n >= rc => None // fully dead
-        case Some((ndv, n))     => Some((p, Some(ndv), n, rc))
-      }
-    }
-  }
-
-  /** MERGE by key at the EQUALITY-DELETE grain — the streaming keyed
-    * ingest shape (Iceberg v2's upsert): the batch lands as fresh
-    * files and its DISTINCT KEYS commit as an equality-delete file,
-    * with ZERO reads of the target — write cost O(batch), where even
-    * [[mergeMor]] scans the envelope/bloom-touched files per batch.
-    * Matched old rows die AT READ TIME: the delete applies to every
-    * file ADDED BEFORE it (manifest `seq` ordering), resolved into
-    * ordinary deletion vectors over the touched subset on first read
-    * (cached per version) and materialized durably by [[compactEq]],
-    * any row-level op, or the maintenance tick. Same strict-schema
-    * upsert semantics as [[mergeMor]]; in-batch duplicate keys are
-    * the caller's contract (BOTH would survive — same-seq rows are
-    * exempt from the batch's own delete). */
-  def mergeEq(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
-    mergeEqCore(updates, root, keyCols, batchId = None).get
-
-  /** Stream-idempotent [[mergeEq]] — [[mergeMorBatch]]'s exactly-once
-    * contract (the producing micro-batch id commits atomically with
-    * the version; a replayed id is a no-op) at the zero-target-read
-    * grain. */
-  def mergeEqBatch(updates: DataFrame, root: String, keyCols: Seq[String],
-                   batchId: Long): Option[Long] =
-    mergeEqCore(updates, root, keyCols, batchId = Some(batchId))
-
-  private def mergeEqCore(updates: DataFrame, root: String,
-                          keyCols: Seq[String],
-                          batchId: Option[Long]): Option[Long] = {
-    require(keyCols.nonEmpty, "mergeEq requires at least one key column")
-    require(keyCols.forall(updates.columns.contains),
-      s"merge batch is missing key columns: " +
-        keyCols.filterNot(updates.columns.contains).mkString(", "))
-    val spark = updates.sparkSession
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"manifest table at $root does not exist — create() first")
-    val schema = tableSchema(spark, root, v)
-    require(updates.columns.sorted.sameElements(schema.fieldNames.sorted),
-      s"merge batch schema ${updates.columns.sorted.mkString(",")} != " +
-        s"table schema ${schema.fieldNames.sorted.mkString(",")}")
-    eqCommit(spark, root, keyCols,
-      updates.select(keyCols.toIndexedSeq.map(col): _*),
-      Some(updates), batchId)
-  }
-
-  /** CDC fold at the EQUALITY-DELETE grain — [[applyCdc]] semantics
-    * (highest-seq change per key wins in-batch; D removes, others
-    * upsert) with ZERO reads of the target: EVERY winner's key
-    * commits as the delete file (a D's row dies outright; an upsert's
-    * old row dies and its replacement lands at the same seq, exempt
-    * from its own delete), and only the non-D winners land as fresh
-    * files — write cost O(batch) where even [[applyCdcMor]] scans the
-    * touched files per batch. The third CDC grain, same answer. */
-  def applyCdcEq(changes: DataFrame, root: String, keyCols: Seq[String],
-                 seqCol: String = "seq", opCol: String = "op"): Long = {
-    require(keyCols.nonEmpty, "applyCdcEq requires at least one key column")
-    val spark = changes.sparkSession
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"manifest table at $root does not exist — create() first")
-    val schema = tableSchema(spark, root, v)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-    val winners = changes
-      .withColumn("_graft_rn", row_number().over(w))
-      .filter(col("_graft_rn") === 1).drop("_graft_rn")
-      // evaluated twice below (keys + upserts) — never recompute a
-      // window over the source between them
-      .persist()
-    try {
-      val upserts = conform(
-        winners.filter(not(col(opCol) === lit("D"))).drop(opCol, seqCol),
-        schema)
-      eqCommit(spark, root, keyCols,
-        winners.select(keyCols.toIndexedSeq.map(col): _*),
-        Some(upserts), batchId = None).get
-    } finally winners.unpersist(): Unit
-  }
-
-  /** DELETE BY KEY at the equality-delete grain — every target row
-    * whose key appears in `keys` dies, with ZERO reads of the target
-    * (the `WHEN MATCHED THEN DELETE`-only MERGE, cost O(keys)). */
-  def deleteByKeyEq(keys: DataFrame, root: String,
-                    keyCols: Seq[String]): Long = {
-    require(keyCols.nonEmpty, "deleteByKeyEq requires at least one key column")
-    require(keyCols.forall(keys.columns.contains),
-      s"key batch is missing key columns: " +
-        keyCols.filterNot(keys.columns.contains).mkString(", "))
-    val spark = keys.sparkSession
-    require(latestVersion(spark, root) >= 0,
-      s"manifest table at $root does not exist — create() first")
-    eqCommit(spark, root, keyCols,
-      keys.select(keyCols.toIndexedSeq.map(col): _*), None,
-      batchId = None).get
-  }
-
-  /** Shared commit of one equality-delete batch: `keys0` land as the
-    * delete's immutable key file, `rows` (when present) as fresh data
-    * files — nothing reads the target; matched old rows die AT READ
-    * TIME (per-task probes, or resolution on the compaction path). */
-  private def eqCommit(spark: SparkSession, root: String,
-                       keyCols: Seq[String], keys0: DataFrame,
-                       rows: Option[DataFrame],
-                       batchId: Option[Long]): Option[Long] = {
-    val v = latestVersion(spark, root)
-    if (batchId.exists(isReplay(spark, root, _))) return None
-    val schema = tableSchema(spark, root, v)
-    // the delete's key file: the batch's distinct keys CAST to the
-    // table's declared types (resolution compares against conformed
-    // stored values — a narrower-typed batch key must not miss),
-    // written once, immutable, reusable across CAS retries
-    val eqDir = s"${eqRoot(root)}/${java.util.UUID.randomUUID()}"
-    keys0.select(keyCols.toIndexedSeq.map(c =>
-      col(c).cast(schema(c).dataType).as(c)): _*).distinct()
-      .write.parquet(eqDir)
-    lazy val landed = rows.map(r => landFiles(conform(r, schema), root,
-      statsCols(spark, root, v)))
-    commitLoop(spark, root, batch = batchId) { (base, meta) =>
-      if (batchId.exists(isReplay(spark, root, _))) None
+    val files = entries(spark, rec)
+    val maxSeq = pending.map(_.seq).max
+    val cand = files.filter(_.seq < maxSeq)
+    val positions =
+      if (cand.isEmpty) Nil
       else {
-        val m = manifest(spark, root, base)
-        val next = landed match {
-          case Some(l) => withLanded(m, l)
-          case None => m
+        val spk = spark
+        import spk.implicits._
+        val schema = metaOf(rec).schema
+        val mCand = manifest(spark, rec)
+          .join(broadcast(cand.map(_.path).toDF("path")), Seq("path"), "left_semi")
+        pending.groupBy(_.keys).toSeq.flatMap { case (keyCols, es) =>
+          val keysDf = es.map(e => spark.read.parquet(e.path)
+              .select(keyCols.map(col) :+ lit(e.seq).as("_eq_seq"): _*))
+            .reduce(_ unionByName _)
+          val touched = keyedFiles(spark, mCand, cand, keysDf, keyCols, schema)
+          // raw reads (a re-matched dead row re-sets a set bit); the
+          // delete keys broadcast, where a write-time batch may not
+          if (touched.isEmpty) None
+          else Some(keyedMatches(readFilesDv(spark, schema,
+            touched.map(f => (f.path, f.size, None)), 0L, positions = true),
+            touched, broadcast(keysDf), keyCols).select(col("_p"), col("_i")))
         }
-        Some((next, meta.copy(eq =
-          meta.eq :+ EqEntry(canon(eqDir), base + 1, keyCols))))
       }
-    }
+    if (positions.isEmpty) files.map(_.state)
+    else withVectors(spark, s"${dvRoot(root)}/eqres-${java.util.UUID.randomUUID()}",
+      files, positions.reduce(_ unionByName _)).map(_.state)
   }
 
   /** Materialize every pending equality delete as deletion vectors in
@@ -3140,234 +3177,9 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     val v = latestVersion(spark, root)
     require(v >= 0, s"manifest table at $root has no committed version")
     if (!hasPendingEq(spark, root, v)) return None
-    commitLoop(spark, root) { (base, meta) =>
+    commitLoop(spark, root) { (rec, meta) =>
       if (meta.eq.isEmpty) None
-      else Some((effectiveManifest(spark, root, base)._1, meta.copy(eq = Nil)))
-    }
-  }
-
-  /** MERGE-ON-READ row-level UPDATE — [[deleteWhereMor]]'s sibling,
-    * the Delta DV-update shape: the matched LIVE rows' old positions
-    * join their files' deletion vectors, and their UPDATED COPIES land
-    * as fresh appended files — cost ∝ MATCHED rows + touched-file
-    * scan, zero untouched bytes rewritten (copy-on-write
-    * [[updateWhere]] rewrites every touched file whole). Semantics are
-    * SQL UPDATE exactly: rows where `cond` is true take the
-    * assignments (values safe-CAST to the declared types, pre-update
-    * values visible on the right-hand side); false/NULL rows are
-    * untouched. Rows an existing vector already deleted are NOT
-    * matched (they are not live — an update must never resurrect).
-    * The matched set derives twice from one deterministic frame
-    * (positions → vectors, values → landed copies) — immutable files
-    * + a row-local predicate make the two derivations identical. */
-  def updateWhereMor(spark: SparkSession, root: String, cond: Column,
-                     sets: Seq[(String, Column)]): Long = {
-    require(sets.nonEmpty, "updateWhereMor requires at least one assignment")
-    commitLoop(spark, root) { (base, meta) =>
-      val (m, states) = effectiveManifest(spark, root, base)
-      val schema = meta.schema
-      val stats = statsCols(spark, root, base)
-      sets.foreach { case (c, _) =>
-        require(schema.fieldNames.contains(c),
-          s"assignment target $c is not a table column") }
-      val resolvedCond = toPhysicalExpr(
-        resolveCond(spark, cond, schema), schema)
-      val excluded = graft.plans.StatsPruneRule.excludedByEnvelopes(
-        spark, resolvedCond, m, stats)
-      val touched = states.filterNot(s => excluded.contains(s._1))
-      val next = if (touched.isEmpty) m else {
-        // LIVE rows only: positions kept through the DV anti-join, so
-        // an existing vector's rows can neither re-vector nor re-land.
-        // The matched frame feeds TWO jobs (positions → vectors,
-        // values → landed copies) — cache it so the touched files scan
-        // once, not twice (the op's advertised cost bound)
-        val live = readFilesDvPos(spark, schema,
-          touched.map(s => (s._1, s._2)), touched.map(_._3).sum)
-        val matched = live.filter(coalesce(cond, lit(false))).persist()
-        try {
-          val updated = matched.select(schema.fields.toIndexedSeq.map { f =>
-            sets.find(_._1 == f.name) match {
-              case Some((_, v)) => v.cast(f.dataType).as(f.name)
-              case None         => col(f.name)
-            }
-          }: _*)
-          vectorPositions(spark, root, m, states, touched,
-            matched.select(col("_p"), col("_i"))) match {
-            case None       => m // nothing matched — nothing lands either
-            case Some(next) =>
-              withLanded(next,
-                landFiles(physSelect(updated, schema), root, stats))
-          }
-        } finally matched.unpersist(): Unit
-      }
-      Some((next, meta.copy(eq = Nil)))
-    }.get
-  }
-
-  /** MERGE-ON-READ keyed MERGE — [[merge]] at the deletion-vector
-    * grain: the batch's matched keys VECTOR their old positions
-    * (touched files keep their bytes) and the whole batch lands as
-    * fresh appended files — cost ∝ BATCH + matched rows + one scan of
-    * the envelope/bloom-touched files, where copy-on-write [[merge]]
-    * REWRITES those files whole. Same semantics (matched keys
-    * replaced, unmatched insert, strict schema, in-batch duplicate
-    * keys are the caller's contract), proven on the shared oracle
-    * algebra. The read-side tax is the vectored files' position-skip
-    * scans until maintenance purges them — the same deferral
-    * [[deleteWhereMor]] documents. */
-  def mergeMor(updates: DataFrame, root: String, keyCols: Seq[String]): Long =
-    mergeMor(updates, root, keyCols, evolveSchema = false)
-
-  /** [[mergeMor]] with ADDITIVE schema evolution — [[merge]]'s
-    * `evolveSchema` contract on the vector grain, where the manifest
-    * representation's no-rewrite property is total: untouched files
-    * never rewrote anyway, and here even the MATCHED files keep their
-    * bytes — evolution costs exactly the wider schema plus the
-    * landed batch. A batch may carry NEW columns (existing rows read
-    * NULL) or OMIT existing ones (landed rows read NULL there). */
-  def mergeMor(updates: DataFrame, root: String, keyCols: Seq[String],
-               evolveSchema: Boolean): Long =
-    mergeMorCore(updates, root, keyCols, evolveSchema, batchId = None).get
-
-  /** Stream-idempotent [[mergeMor]] — the [[writeBatch]] contract at
-    * the keyed grain: the producing micro-batch id commits atomically
-    * with the version, a replayed id is a no-op (None), so the keyed
-    * streaming sink is EXACTLY-ONCE rather than merely
-    * idempotent-by-value (a value-idempotent replay still commits an
-    * extra version whose change feed would show phantom deltas). */
-  def mergeMorBatch(updates: DataFrame, root: String, keyCols: Seq[String],
-                    batchId: Long): Option[Long] =
-    mergeMorCore(updates, root, keyCols, evolveSchema = false,
-      batchId = Some(batchId))
-
-  private def mergeMorCore(updates: DataFrame, root: String,
-                           keyCols: Seq[String], evolveSchema: Boolean,
-                           batchId: Option[Long]): Option[Long] = {
-    require(keyCols.nonEmpty, "mergeMor requires at least one key column")
-    // the key must be REAL in every mode: an evolving batch missing a
-    // key column would null-fill it and land unmatchable null-keyed
-    // rows — a silent bad insert, never an upsert
-    require(keyCols.forall(updates.columns.contains),
-      s"merge batch is missing key columns: " +
-        keyCols.filterNot(updates.columns.contains).mkString(", "))
-    val spark = updates.sparkSession
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"manifest table at $root does not exist — create() first")
-    if (batchId.exists(isReplay(spark, root, _))) return None
-    val baseSchema = tableSchema(spark, root, v)
-    // the batch's GENUINELY new columns — the only fields an attempt
-    // may widen a schema by (re-adding every entry-schema field would
-    // silently resurrect a column a concurrent dropColumns removed)
-    val batchNewFields =
-      if (!evolveSchema) {
-        require(
-          updates.columns.sorted.sameElements(baseSchema.fieldNames.sorted),
-          s"merge batch schema ${updates.columns.sorted.mkString(",")} != " +
-            s"table schema ${baseSchema.fieldNames.sorted.mkString(",")}")
-        Array.empty[org.apache.spark.sql.types.StructField]
-      } else updates.schema.fields.filterNot(f =>
-        baseSchema.fieldNames.contains(f.name)).map(_.copy(nullable = true))
-    val schema = StructType(baseSchema.fields ++ batchNewFields)
-    // keys come off the LOGICAL-named frame (conform renames to the
-    // physical landing names, which the key joins must not see)
-    val padded =
-      schema.fieldNames.filterNot(updates.columns.contains).toSeq
-        .foldLeft(updates)((df, c) =>
-          df.withColumn(c, lit(null).cast(schema(c).dataType)))
-    val batch = conform(padded, schema)
-    val keys = padded.select(keyCols.map(col): _*).distinct()
-    // immutable landed files are reusable across CAS retry attempts
-    lazy val landed = landFiles(batch, root, statsCols(spark, root, v))
-    commitLoop(spark, root, batch = batchId) { (base, meta) =>
-      if (batchId.exists(isReplay(spark, root, _))) None
-      else {
-        val (m, states) = effectiveManifest(spark, root, base)
-        val touched = touchedPaths(spark, m, keys, keyCols,
-          meta.schema).toSet
-        val touchedStates = states.filter(s => touched.contains(s._1))
-        val live = readFilesDvPos(spark, schema,
-          touchedStates.map(s => (s._1, s._2)), touchedStates.map(_._3).sum)
-        val positions = live.join(keys, keyCols, "left_semi")
-          .select(col("_p"), col("_i"))
-        // the attempt's schema is ITS base's schema widened by the
-        // BATCH's new columns only — a conflicting writer's evolution
-        // (or column drop) is preserved, never clobbered
-        val b = meta.schema
-        val attemptSchema = StructType(b.fields ++
-          batchNewFields.filterNot(f => b.fieldNames.contains(f.name)))
-        val next = withLanded(vectorPositions(spark, root, m, states,
-          touchedStates, positions).getOrElse(m), landed)
-        Some((next, meta.copy(schema = attemptSchema, eq = Nil)))
-      }
-    }
-  }
-
-  /** MERGE-ON-READ CDC fold — [[applyCdc]] at the deletion-vector
-    * grain: every winning key's old position vectors, the non-D
-    * winners land as appended files. Cost ∝ batch + matched rows;
-    * semantics identical (highest-seq change per key wins in-batch,
-    * D removes, others upsert). */
-  def applyCdcMor(changes: DataFrame, root: String, keyCols: Seq[String],
-                  seqCol: String = "seq", opCol: String = "op"): Long = {
-    require(keyCols.nonEmpty, "applyCdcMor requires at least one key column")
-    val spark = changes.sparkSession
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"manifest table at $root does not exist — create() first")
-    val schema = tableSchema(spark, root, v)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)
-    val winners = changes
-      .withColumn("_graft_rn", row_number().over(w))
-      .filter(col("_graft_rn") === 1).drop("_graft_rn")
-    val keys = winners.select(keyCols.map(col): _*).distinct()
-    val upserts = conform(
-      winners.filter(not(col(opCol) === lit("D"))).drop(opCol, seqCol),
-      schema)
-    lazy val landed = landFiles(upserts, root, statsCols(spark, root, v))
-    commitLoop(spark, root) { (base, meta) =>
-      val (m, states) = effectiveManifest(spark, root, base)
-      val touched = touchedPaths(spark, m, keys, keyCols,
-        meta.schema).toSet
-      val touchedStates = states.filter(s => touched.contains(s._1))
-      val live = readFilesDvPos(spark, schema,
-        touchedStates.map(s => (s._1, s._2)), touchedStates.map(_._3).sum)
-      val positions = live.join(keys, keyCols, "left_semi")
-        .select(col("_p"), col("_i"))
-      Some((withLanded(vectorPositions(spark, root, m, states,
-        touchedStates, positions).getOrElse(m), landed),
-        meta.copy(eq = Nil)))
-    }.get
-  }
-
-  /** [[readFilesDv]] keeping each row's (file, position) as `_p`/`_i`
-    * — for consumers that must VECTOR the rows they select
-    * ([[updateWhereMor]], the keyed merge-on-read ops). Both branches
-    * read positions; DV-bearing files anti-join their vectors so only
-    * LIVE rows surface. */
-  private def readFilesDvPos(spark: SparkSession, schema: StructType,
-                             files: Seq[(String, Option[String])],
-                             totalDvRows: Long): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        .withColumn("_p", lit(null).cast("string"))
-        .withColumn("_i", lit(null).cast("long"))
-    val withPos = spark.read.schema(toPhysical(schema))
-      .parquet(files.map(_._1): _*)
-      .select(schema.fields.toIndexedSeq.map { f =>
-        val c = col(physicalName(f))
-        (if (typeHasMapping(f.dataType)) c.cast(relaxedType(f.dataType))
-         else c).as(f.name)
-      } :+
-        canonPathCol(col("_metadata.file_path")).as("_p") :+
-        col("_metadata.row_index").as("_i"): _*)
-    val dvd = files.collect { case (p, Some(dv)) => (p, dv) }
-    if (dvd.isEmpty) withPos
-    else {
-      val dels0 = dvRowsDf(spark, dvd)
-        .withColumnRenamed("_dv_file", "_p").withColumnRenamed("_dv_idx", "_i")
-      withPos.join(dvJoinSide(dels0, dvd, totalDvRows),
-        Seq("_p", "_i"), "left_anti")
+      else Some((effectiveManifest(spark, root, rec)._1, meta.copy(eq = Nil)))
     }
   }
 
@@ -3396,11 +3208,12 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * pre-delete version undoes the delete; restoring to a version
     * with pending deletes restores them pending. */
   def restore(spark: SparkSession, root: String, version: Long): Long = {
-    commitLoop(spark, root) { (base, _) =>
+    commitLoop(spark, root) { (rec, _) =>
       require(versions(spark, root).contains(version),
         s"manifest table at $root has no retained version $version " +
           "(vacuumed or never committed) — nothing to restore to")
-      require(version != base, s"version $version is already current")
+      require(version != rec.key.version,
+        s"version $version is already current")
       Some((manifest(spark, root, version), metaAt(spark, root, version)))
     }.get
   }
@@ -3418,8 +3231,8 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                                       version: Long,
                                       expectedCurrent: Long)
       : Option[Long] =
-    try commitLoop(spark, root) { (base, _) =>
-      if (base != expectedCurrent) throw RestoreAborted
+    try commitLoop(spark, root) { (rec, _) =>
+      if (rec.key.version != expectedCurrent) throw RestoreAborted
       require(versions(spark, root).contains(version),
         s"manifest table at $root has no retained version $version")
       Some((manifest(spark, root, version), metaAt(spark, root, version)))
@@ -3499,7 +3312,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     val dir = canon(dataDir)
     def describe(files: Seq[(String, Long)], schema: StructType) =
       describeFiles(spark, files, schema, statsCols, bucketed = false,
-        () => spark.read.schema(schema).parquet(files.map(_._1): _*))
+        () => scanFiles(spark, schema, files))
     if (!exists(spark, root)) {
       require(listed.nonEmpty, s"adopt: $dataDir holds no parquet files")
       val schema = spark.read.parquet(listed.head._1).schema
@@ -3511,18 +3324,18 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       primeManifestCaches(spark, root, v, rows, key)
       return Some(v)
     }
-    commitLoop(spark, root, adopting = true) { (base, meta) =>
-      val tracked = ManifestTable.statsCols(spark, root, base)
+    commitLoop(spark, root, adopting = true) { (rec, meta) =>
+      val tracked = ManifestTable.statsCols(spark, rec)
       require(tracked.toSet == statsCols.toSet,
         s"adopt: $root tracks ${tracked.mkString(",")}, not " +
           statsCols.mkString(","))
       require(meta.adopted.contains(dir),
         s"adopt: $root is not an adoption of $dataDir")
-      val known = filesAt(spark, root, base).toSet
+      val known = filesAt(spark, rec).toSet
       val fresh = listed.filterNot(f => known.contains(f._1))
       val gone = known -- listed.map(_._1)
       if (fresh.isEmpty && gone.isEmpty) None
-      else Some((withLanded(manifest(spark, root, base)
+      else Some((withLanded(manifest(spark, rec)
         .filter(!col("path").isin(gone.toSeq: _*)),
         describe(fresh, meta.schema)), meta))
     }
@@ -3700,7 +3513,9 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     // fast-forward already leaves main == branch content; syncing
     // after every FF would add a pointless branch commit per publish)
     @volatile var mergedCommit = false
-    def threeWay(base: Long): (DataFrame, StructType) = {
+    def threeWay(rec: VersionedTable.Commit, metaM: Meta)
+        : (DataFrame, StructType) = {
+      val base = rec.key.version
       mergedCommit = true
       require(merge,
         s"main moved from $base0 to $base since branch $name forked — " +
@@ -3708,14 +3523,14 @@ object ManifestTable extends org.apache.spark.internal.Logging {
           "from the current head and re-apply its changes, or " +
           "publish with merge = true to three-way merge disjoint " +
           "file changes")
-      require(!hasPendingEq(spark, root, base),
+      require(metaM.eq.isEmpty,
         s"main at $root has pending equality deletes — run " +
           "compactEq() (or any row-level op / maintenance tick) on " +
           "main before a merge publish")
       // schema: at most ONE side may have evolved since the fork
       val s0 = tableSchema(spark, root, base0)
       val sB = tableSchema(spark, bRoot, bv)
-      val sM = tableSchema(spark, root, base)
+      val sM = metaM.schema
       val mergedSchema =
         if (sB == s0) sM
         else if (sM == s0 || sB == sM) sB
@@ -3727,7 +3542,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       // lacks (bloom bits it never built) reads NULL there, and bits
       // of a column whose type differs between the sides drop — they
       // hash the other side's type
-      val (mM, mB) = (manifest(spark, root, base), manifest(spark, bRoot, bv))
+      val (mM, mB) = (manifest(spark, rec), manifest(spark, bRoot, bv))
       val stale = sM.fields.filter(f => sB.fields.exists(g =>
         physicalName(g) == physicalName(f) && g.dataType != f.dataType))
         .map(f => bloomCol(physicalName(f))).toSet
@@ -3764,7 +3579,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         .filter(branchTouched && !(col("sb") <=> col("sm")))
         .limit(1).count() > 0
       if (!unabsorbed)
-        (manifest(spark, root, base).withColumn("seq", lit(0L)),
+        (mM.withColumn("seq", lit(0L)),
           mergedSchema)
       else {
         // any path BOTH sides touched is a conflict — equal present
@@ -3794,14 +3609,15 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         s"both main (v$base0 -> v$base) and branch $name changed " +
           s"the $what registry since the fork — align one side " +
           "before a merge publish")
-    val published = commitLoop(spark, root) { (base, metaM) =>
+    val published = commitLoop(spark, root) { (rec, metaM) =>
+      val base = rec.key.version
       val metaB = metaAt(spark, bRoot, bv)
       if (base == base0)
         Some((manifest(spark, bRoot, bv).withColumn("seq", lit(0L)),
           metaB.copy(eq = Nil)))
       else {
         val meta0 = metaAt(spark, root, base0)
-        val (rows, schema) = threeWay(base)
+        val (rows, schema) = threeWay(rec, metaM)
         Some((rows, Meta(schema,
           constraints = pick("constraint", meta0.constraints,
             metaB.constraints, metaM.constraints, base),
@@ -3877,123 +3693,6 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     walk(p): Unit
   }
 
-  /** Atomic predicate-scoped overwrite — Delta's `replaceWhere`: ONE
-    * commit that deletes every row matching `cond` and inserts `df`,
-    * so readers see either the old region or the new one, never a
-    * half-swapped mix (the idempotent-backfill primitive: re-running a
-    * partition rebuild converges instead of duplicating). `df`'s rows
-    * must all satisfy `cond` — the constraint that makes the operation
-    * a REPLACEMENT of the predicate region; violations fail before
-    * anything lands. Cost ∝ touched files + batch: the predicate's
-    * range conjuncts select touched files by envelope proof exactly as
-    * [[deleteWhere]]; untouched files carry BY REFERENCE. */
-  def replaceWhere(df: DataFrame, root: String, cond: Column): Long = {
-    val spark = df.sparkSession
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"manifest table at $root does not exist — create() first")
-    val schema = tableSchema(spark, root, v)
-    require(df.columns.sorted.sameElements(schema.fieldNames.sorted),
-      s"replaceWhere schema ${df.columns.sorted.mkString(",")} != table " +
-        s"schema ${schema.fieldNames.sorted.mkString(",")}")
-    val batch = conform(df, schema)
-    val violations = batch.filter(!coalesce(cond, lit(false))).limit(1).count()
-    require(violations == 0L,
-      "replaceWhere batch contains rows NOT matching the predicate — " +
-        "the operation replaces the predicate's region, so every " +
-        "inserted row must satisfy it (use write() to append outside it)")
-    // land the batch ONCE — immutable files are reusable across CAS
-    // retry attempts; only the manifest swap recomputes on conflict
-    lazy val batchRows = landFiles(batch, root, statsCols(spark, root, v))
-    // whole-matched files drop by reference: a replaceWhere whose
-    // predicate aligns with the file layout (the partition-overwrite
-    // shape) is drop + insert — zero reads of the replaced region
-    rewriteWhere(spark, root, cond, extraRows = () => batchRows,
-      dropWholeMatches = true)(
-      (touchedRows, matched) => touchedRows.filter(not(matched)))
-  }
-
-  /** Row-level UPDATE, file-granular: same envelope-proof selection as
-    * [[deleteWhere]] (provably-unmatching files carry forward BY
-    * REFERENCE), with SQL UPDATE semantics on the rewritten files —
-    * rows where `cond` is true take the assignments (values CAST to
-    * the column's declared type, the Delta-style safe cast), rows
-    * where it is false or NULL are kept verbatim. Assignment values
-    * may reference any table column (pre-update values, as SQL
-    * requires). A predicate with no provable range shape degrades to
-    * rewriting every file — sound, at the old whole-table cost. */
-  def updateWhere(spark: SparkSession, root: String, cond: Column,
-                  sets: Seq[(String, Column)]): Long = {
-    require(sets.nonEmpty, "updateWhere requires at least one assignment")
-    rewriteWhere(spark, root, cond) { (touchedRows, matched) =>
-      val schema = touchedRows.schema
-      sets.foreach { case (c, _) =>
-        require(schema.fieldNames.contains(c),
-          s"assignment target $c is not a table column") }
-      touchedRows.select(schema.fields.toIndexedSeq.map { f =>
-        sets.find(_._1 == f.name) match {
-          case Some((_, v)) =>
-            when(matched, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    }
-  }
-
-  /** Shared core of the PREDICATE row-level ops (DELETE/UPDATE): pin
-    * a base manifest, resolve the user predicate against the table
-    * schema (plan-only), select the touched files by envelope proof
-    * (provably-unmatching files carry forward BY REFERENCE), read
-    * ONLY them, apply `transform(touchedRows, matchedCond)` — where
-    * `matchedCond` is the predicate with SQL's NULL-means-unmatched
-    * already folded in — land the result, and commit the swap.
-    * Conflicts recompute from scratch against the new base. */
-  private def rewriteWhere(spark: SparkSession, root: String, cond: Column,
-                           extraRows: () => DataFrame = null,
-                           dropWholeMatches: Boolean = false,
-                           validateCons: Boolean = true)
-                          (transform: (DataFrame, Column) => DataFrame): Long =
-    commitLoop(spark, root, validateCons = validateCons) { (base, meta) =>
-      val (m, states) = effectiveManifest(spark, root, base)
-      val schema = meta.schema
-      val stats = statsCols(spark, root, base)
-      val resolvedCond = toPhysicalExpr(
-        resolveCond(spark, cond, schema), schema)
-      val excluded = graft.plans.StatsPruneRule.excludedByEnvelopes(
-        spark, resolvedCond, m, stats)
-      // DELETE-shaped callers opt in: a file whose envelope proves
-      // EVERY row matches leaves the manifest BY REFERENCE — no read,
-      // no rewrite (the metadata-only retention-delete / partition-
-      // overwrite grain; vacuum reclaims the bytes on its tick). Raw
-      // envelopes are supersets of the live rows, so the proof holds
-      // under deletion vectors too. UPDATE must never take this path:
-      // its matched rows are transformed, not removed.
-      val dropped =
-        if (!dropWholeMatches) Set.empty[String]
-        else graft.plans.StatsPruneRule.wholeFileMatched(
-          resolvedCond, m, stats) -- excluded
-      val touchedStates = states.filterNot(s =>
-        excluded.contains(s._1) || dropped.contains(s._1))
-      val touched = touchedStates.map(_._1)
-      val kept =
-        if (dropped.isEmpty) m
-        else m.filter(!col("path").isin(dropped.toSeq: _*))
-      // nothing to rewrite: a fully-aligned op commits metadata (and
-      // the replaceWhere batch) alone — an empty landing would still
-      // write a 0-row parquet file
-      val next = if (touchedStates.isEmpty) kept else {
-        // touched reads apply the files' deletion vectors (a raw read
-        // would resurrect deleted rows into the rewrite)
-        val touchedRows = readFilesDv(spark, schema,
-          touchedStates.map(s => (s._1, s._2)), touchedStates.map(_._3).sum)
-        val newRows = landFiles(physSelect(
-          transform(touchedRows, coalesce(cond, lit(false))), schema),
-          root, stats)
-        withLanded(kept.filter(!col("path").isin(touched: _*)), newRows)
-      }
-      Some((if (extraRows == null) next else withLanded(next, extraRows()),
-        meta.copy(eq = Nil)))
-    }.get
-
   /** File-set delta between two versions — (removed, added) data-file
     * paths, from COMMITTED METADATA alone (two manifest reads, zero
     * data I/O). Files present in both manifests are immutable and
@@ -4011,19 +3710,18 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * with a CHANGED vector has different effective rows on the two
     * sides — it must enter both scan subsets (from-side read with the
     * old vector, to-side with the new) so the key diff surfaces the
-    * newly deleted rows as D. Entries carry (path, dv, dv_rows). */
+    * newly deleted rows as D. Entries carry (path, size, dv, dv_rows)
+    * — [[effectiveFiles]]' shape, which [[readFilesDv]] reads. */
   private[graft] def changedFileStates(spark: SparkSession, root: String,
                                        fromVersion: Long, toVersion: Long)
-      : (Seq[(String, Option[String], Long)],
-         Seq[(String, Option[String], Long)]) = {
+      : (Seq[(String, Long, Option[String], Long)],
+         Seq[(String, Long, Option[String], Long)]) = {
     // EFFECTIVE states on both sides: a pending equality delete
     // changes a file's effective rows exactly like a vector commit,
     // so the feed must see it as remove+add of the file's state (the
     // cached resolution keeps repeated diffs metadata-cheap)
-    def states(v: Long) =
-      effectiveStates(spark, root, v).map(s => (s._1, s._2, s._3))
-    val a = states(fromVersion)
-    val b = states(toVersion)
+    val a = effectiveFiles(spark, root, fromVersion)
+    val b = effectiveFiles(spark, root, toVersion)
     // a file's identity is its EFFECTIVE CONTENT, not its sidecar's
     // NAME: resolution scratch paths are JVM-unique, so a pending
     // version resolved here diffed against the same deletes compacted
@@ -4037,9 +3735,9 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     val conf = spark.sparkContext.hadoopConfiguration
     def bits(dv: Option[String]): java.util.BitSet =
       dv.map(readDvBits(conf, _)).getOrElse(new java.util.BitSet())
-    def sameContent(x: (String, Option[String], Long),
-                    y: (String, Option[String], Long)): Boolean =
-      x._2 == y._2 || (x._3 == y._3 && bits(x._2) == bits(y._2))
+    def sameContent(x: (String, Long, Option[String], Long),
+                    y: (String, Long, Option[String], Long)): Boolean =
+      x._3 == y._3 || (x._4 == y._4 && bits(x._3) == bits(y._3))
     val bByPath = b.map(s => s._1 -> s).toMap
     val aByPath = a.map(s => s._1 -> s).toMap
     (a.filter(s => !bByPath.get(s._1).exists(sameContent(s, _)))
@@ -4073,10 +3771,10 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     require(keyCols.nonEmpty, "changesBetween requires key columns")
     val (removed, added) =
       changedFileStates(spark, root, fromVersion, toVersion)
-    def subset(states: Seq[(String, Option[String], Long)],
+    def subset(states: Seq[(String, Long, Option[String], Long)],
                version: Long): DataFrame =
       readFilesDv(spark, tableSchema(spark, root, version),
-        states.map(s => (s._1, s._2)), states.map(_._3).sum)
+        states.map(s => (s._1, s._2, s._3)), states.map(_._4).sum)
     VersionedTable.diffKeyed(
       subset(removed, fromVersion), subset(added, toVersion),
       keyCols, fromVersion, toVersion)
@@ -4114,7 +3812,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                sortCols: Seq[String] = Nil,
                numFiles: Int = 16): Long = {
     require(numFiles >= 1, "numFiles must be >= 1")
-    commitLoop(spark, root, validateCons = false) { (base, meta) =>
+    commitLoop(spark, root, validateCons = false) { (rec, meta) =>
       val schema = meta.schema
       val next = bucketBy match {
         case Some((k, n)) => withBucketSpec(clearBucketSpec(schema), k, n)
@@ -4126,7 +3824,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         (ks.mkString(","), n) }
       sortCols.foreach(c => require(schema.fieldNames.contains(c),
         s"sort column $c is not a table column"))
-      val cur = readVersion(spark, root, base)
+      val cur = readVersion(spark, root, rec.key.version)
       // optional IN-BUCKET clustering in the same pass: the grid
       // shuffle routes rows to cells, the per-cell sort lays them —
       // one rewrite instead of rebucket-then-optimize twice. A
@@ -4141,7 +3839,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
             .sortWithinPartitions(sortCols.map(col): _*)
         else cur.repartition(numFiles)
       val rows = landFiles(physSelect(laid, schema), root,
-        statsCols(spark, root, base), bucketAs = Some(physKeys),
+        statsCols(spark, rec), bucketAs = Some(physKeys),
         sortWithin = sortCols.map(c => physicalName(schema(c))))
       Some((rows, meta.copy(schema = next, eq = Nil)))
     }.get
@@ -4161,10 +3859,10 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     // under an empty registry; rows are preserved, not introduced —
     // constraint re-validation would double the re-lay's read cost
     // for rows that cannot have changed
-    commitLoop(spark, root, validateCons = false) { (base, meta) =>
+    commitLoop(spark, root, validateCons = false) { (rec, meta) =>
       // re-lay BASE's rows (not a floating `current` — a conflict
       // recomputes against the new base, so no commit is ever lost)
-      val cur = readVersion(spark, root, base)
+      val cur = readVersion(spark, root, rec.key.version)
       val schema = meta.schema
       val bucketed = bucketSpec(schema).isDefined
       // a curve layout cannot survive the bucketed landing's cell
@@ -4186,7 +3884,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         else cur.repartitionByRange(numFiles, sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)
       Some((landFiles(physSelect(laid, schema), root,
-        statsCols(spark, root, base),
+        statsCols(spark, rec),
         sortWithin =
           if (hilbert) Nil
           else sortCols.map(c => physicalName(schema(c)))),
@@ -4313,9 +4011,9 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       return None
     // row-preserving re-lay: skip constraint re-validation (see
     // optimize)
-    commitLoop(spark, root, validateCons = false) { (b, meta) =>
+    commitLoop(spark, root, validateCons = false) { (rec, meta) =>
       // recompute against the CURRENT base on conflict: a selected
-      // file may have been rewritten away — re-intersect with b's
+      // file may have been rewritten away — re-intersect with its
       // manifest so only still-live files rewrite. Schema and stats
       // are ALSO re-read per attempt (not the pre-loop pins): a
       // concurrent evolveSchema merge widens the schema, and reading
@@ -4325,15 +4023,13 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       // The EFFECTIVE view: a re-lay that read raw would resurrect
       // pending equality deletes into the fresh files
       val curSchema = meta.schema
-      val curStats = statsCols(spark, root, b)
-      val (mb, liveStates) = effectiveManifest(spark, root, b)
-      val live = liveStates.map(_._1).toSet
-      val dvAt = liveStates.map(s => s._1 -> ((s._2, s._3))).toMap
-      val todo = selectedSeq.filter(live.contains)
+      val (mb, live) = effectiveManifest(spark, root, rec)
+      val curStats = statsOf(mb)
+      val todo = live.filter(f => selected.contains(f.path))
       // re-lay reads apply the selected files' deletion vectors — the
       // rewrite is also the purge (output files carry no vector)
-      val rowsIn = readFilesDv(spark, curSchema,
-        todo.map(p => (p, dvAt(p)._1)), todo.map(p => dvAt(p)._2).sum)
+      val rowsIn = readFilesDv(spark, curSchema, todo.map(_.file),
+        todo.map(_.dvRows).sum)
       // a BUCKETED table's landing reshuffles by cell: skip the
       // pre-sort it would destroy and re-lay inside each cell via
       // sortWithin instead (the same fix optimize/rebucket carry);
@@ -4350,7 +4046,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         else if (sortCols.isEmpty) rowsIn.repartition(nFiles)
         else rowsIn.repartitionByRange(nFiles, sortCols.map(col): _*)
           .sortWithinPartitions(sortCols.map(col): _*)
-      Some((withLanded(mb.filter(!col("path").isin(todo: _*)),
+      Some((withLanded(mb.filter(!col("path").isin(todo.map(_.path): _*)),
         landFiles(physSelect(laid, curSchema), root, curStats,
           sortWithin =
             if (hilbert) Nil
@@ -4389,7 +4085,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                  numBits: Int = 1 << 17, numHashes: Int = 5): Option[Long] =
     // row-preserving: no CHECK re-validation
     commitLoop(spark, root, validateCons = false, adopting = true) {
-      (base, meta) =>
+      (rec, meta) =>
         require(meta.schema.fieldNames.contains(keyCol),
           s"$keyCol is not a table column")
         // the bits read (and are named by) the column's PHYSICAL name —
@@ -4399,7 +4095,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         val key = meta.schema(keyCol)
         val physCol = physicalName(key)
         val bc = bloomCol(physCol)
-        val m0 = manifest(spark, root, base)
+        val m0 = manifest(spark, rec)
         val m =
           if (m0.columns.contains(bc)) m0
           else m0.withColumn(bc, lit(null).cast(BinaryType))

@@ -673,12 +673,12 @@ object MaterializedView {
       if (from == to) return (None, None)
       val (removed, added) = ManifestTable.changedFileStates(
         spark, root, from, to)
-      def rowsOf(states: Seq[(String, Option[String], Long)], v: Long) =
+      def rowsOf(states: Seq[(String, Long, Option[String], Long)], v: Long) =
         if (states.isEmpty) None
         else Some((ManifestTable.readFilesDv(spark,
           ManifestTable.tableSchema(spark, root, v),
-          states.map(s => (s._1, s._2)), states.map(_._3).sum),
-          states.map(_._3).sum))
+          states.map(s => (s._1, s._2, s._3)), states.map(_._4).sum),
+          states.map(_._4).sum))
       (rowsOf(removed, from), rowsOf(added, to))
     }
     val (remF, addF) = changedRows(spec.baseRoot, spec.lastVersion, vNow)

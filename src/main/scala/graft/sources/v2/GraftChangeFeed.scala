@@ -497,7 +497,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
         if (!f.exists(new Path(dirPath, "_SUCCESS"))) {
           if (f.exists(dirPath)) f.delete(dirPath, true): Unit
           graft.sinks.ManifestTable.readFilesDv(spark, dataSchema,
-            dvd.map(x => (x._1, x._3)), dvd.map(_._4).sum)
+            dvd.map(x => (x._1, x._2, x._3)), dvd.map(_._4).sum)
             .write.parquet(dir)
         }
         val index = new InMemoryFileIndex(spark, Seq(dirPath),

@@ -19,3 +19,18 @@ class CountingFs extends RawLocalFileSystem {
 object CountingFs {
   val listCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 }
+
+/** The `file:` filesystem counting its `listStatus` calls — installed
+  * as ONE session's `fs.file.impl` (with `fs.file.impl.disable.cache`)
+  * so that session's scans list through it while every other session
+  * keeps the plain local filesystem. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(p: Path): Array[FileStatus] = {
+    CountingLocalFs.listCalls.incrementAndGet(): Unit
+    super.listStatus(p)
+  }
+}
+
+object CountingLocalFs {
+  val listCalls = new java.util.concurrent.atomic.AtomicLong(0L)
+}

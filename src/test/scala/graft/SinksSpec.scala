@@ -3655,4 +3655,158 @@ class SinksSpec extends AnyFunSuite {
     // retention fail-fast contract stays conservative
     assert(!VersionedTable.versions(spark, root).contains(0L))
   }
+
+  test("three grains, one change: a seeded op sequence reads back identically at copy-on-write, deletion-vector and equality-delete grain, after compactEq and after optimize") {
+    import sinks.ManifestTable
+    val base = java.nio.file.Files.createTempDirectory("graft-grains").toString
+    val rnd = new scala.util.Random(20261020L)
+    val grains = Seq("cow", "dv", "eq")
+    val roots = grains.map(g => g -> s"$base/$g").toMap
+    val init = (0L until 300L).map(k => (k, k % 11, s"s$k"))
+    grains.foreach(g => ManifestTable.create(init.toDF("k", "v", "s")
+      .repartitionByRange(4, col("k")).sortWithinPartitions(col("k")),
+      roots(g), Seq("k")))
+    // the reference: the table as a key → (v, s) map
+    var model = init.map(r => r._1 -> ((r._2, r._3))).toMap
+    def check(when: String, gs: Seq[String] = grains): Unit = gs.foreach { g =>
+      val got = ManifestTable.read(spark, roots(g)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq.sorted
+      val want = model.toSeq.map { case (k, (v, s)) => (k, v, s) }.sorted
+      val (extra, missing) = (got.diff(want), want.diff(got))
+      assert(extra.isEmpty && missing.isEmpty, s"$g grain $when: " +
+        s"extra ${extra.take(5)}, missing ${missing.take(5)}")
+    }
+    def keys(n: Int) = Seq.fill(n)(rnd.nextInt(400).toLong).distinct
+    // every op kind twice, in a seeded order; the equality-delete table
+    // takes the key-shaped ops at its own grain and the predicate ops
+    // at the vector grain
+    rnd.shuffle(Seq.fill(2)(0 to 4).flatten).zipWithIndex.foreach {
+      case (0, i) => // keyed upsert
+        val rows = keys(20).map(k => (k, rnd.nextInt(1000).toLong, s"m$i"))
+        val df = rows.toDF("k", "v", "s")
+        ManifestTable.merge(df, roots("cow"), Seq("k"))
+        ManifestTable.mergeMor(df, roots("dv"), Seq("k"))
+        ManifestTable.mergeEq(df, roots("eq"), Seq("k"))
+        model ++= rows.map(r => r._1 -> ((r._2, r._3)))
+      case (1, i) => // CDC batch: repeated keys, every op kind, NULL op
+        val ops = Seq("I", "U", "D", null)
+        val rows = Seq.fill(25)(rnd.nextInt(400).toLong).zipWithIndex.map {
+          case (k, j) => (k, rnd.nextInt(1000).toLong, s"c$i",
+            ops(rnd.nextInt(ops.size)), j.toLong) }
+        val df = rows.toDF("k", "v", "s", "op", "seq")
+        ManifestTable.applyCdc(df, roots("cow"), Seq("k"))
+        ManifestTable.applyCdcMor(df, roots("dv"), Seq("k"))
+        ManifestTable.applyCdcEq(df, roots("eq"), Seq("k"))
+        rows.groupBy(_._1).values.map(_.maxBy(_._5)).foreach { w =>
+          model = if (w._4 == "D") model - w._1
+            else model + (w._1 -> ((w._2, w._3))) }
+      case (2, _) => // delete by key
+        val ks = keys(15)
+        ManifestTable.deleteWhere(spark, roots("cow"), col("k").isin(ks: _*))
+        ManifestTable.deleteWhereMor(spark, roots("dv"), col("k").isin(ks: _*))
+        ManifestTable.deleteByKeyEq(ks.toDF("k"), roots("eq"), Seq("k"))
+        model --= ks
+      case (3, _) => // delete by predicate: a range, or a non-range shape
+        val (cond, hit): (org.apache.spark.sql.Column, (Long, Long) => Boolean) =
+          if (rnd.nextBoolean()) {
+            val lo = rnd.nextInt(380).toLong
+            (col("k").between(lo, lo + 20), (k, _) => k >= lo && k <= lo + 20)
+          } else {
+            val r = rnd.nextInt(7).toLong
+            (col("v") % 7 === r, (_, v) => v % 7 == r)
+          }
+        ManifestTable.deleteWhere(spark, roots("cow"), cond)
+        Seq("dv", "eq").foreach(g =>
+          ManifestTable.deleteWhereMor(spark, roots(g), cond))
+        model = model.filterNot { case (k, (v, _)) => hit(k, v) }
+      case (_, i) => // update by predicate
+        val lo = rnd.nextInt(360).toLong
+        val cond = col("k").between(lo, lo + 40)
+        val sets = Seq("v" -> (col("v") + 1000L), "s" -> concat(col("s"), lit(s"u$i")))
+        ManifestTable.updateWhere(spark, roots("cow"), cond, sets)
+        Seq("dv", "eq").foreach(g =>
+          ManifestTable.updateWhereMor(spark, roots(g), cond, sets))
+        model = model.map { case (k, (v, s)) =>
+          if (k >= lo && k <= lo + 40) k -> ((v + 1000L, s + s"u$i"))
+          else k -> ((v, s)) }
+    }
+    check("after the op sequence")
+    ManifestTable.compactEq(spark, roots("eq"))
+    check("after compactEq", Seq("eq"))
+    grains.foreach(g => ManifestTable.optimize(spark, roots(g), Seq("k"), numFiles = 3))
+    check("after optimize")
+  }
+
+  test("CDC: a NULL op upserts at every grain — the key never retires without its row") {
+    import sinks.ManifestTable
+    val base = java.nio.file.Files.createTempDirectory("graft-cdc-null").toString
+    val changes = Seq[(Long, Long, String, Long)]((2L, 21L, null, 1L),
+      (3L, 0L, "D", 1L), (4L, 40L, null, 1L)).toDF("k", "v", "op", "seq")
+    Seq[(String, (String) => Long)](
+      "cow" -> (ManifestTable.applyCdc(changes, _, Seq("k"))),
+      "dv" -> (ManifestTable.applyCdcMor(changes, _, Seq("k"))),
+      "eq" -> (ManifestTable.applyCdcEq(changes, _, Seq("k")))).foreach {
+      case (g, fold) =>
+        val root = s"$base/$g"
+        ManifestTable.create(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"),
+          root, Seq("k"))
+        fold(root)
+        val got = ManifestTable.read(spark, root).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == Map(1L -> 10L, 2L -> 21L, 4L -> 40L), s"$g grain: $got")
+    }
+  }
+
+  test("row-level ops read touched files from the manifest: past 32 files no listing job starts, and listStatus calls do not grow with the touched count") {
+    import sinks.ManifestTable
+    // one session lists through the counting filesystem; the shared one
+    // and its other suites are untouched
+    val s = spark.newSession()
+    s.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    s.conf.set("fs.file.impl.disable.cache", "true")
+    val base = java.nio.file.Files.createTempDirectory("graft-nolist").toString
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).foreach { d =>
+          if (d == s"barrier $base") barrier.countDown()
+          else if (d.startsWith("Listing leaf files") && d.contains(base))
+            listings.add(d): Unit
+        }
+    }
+    // every op touches every file: `v` is untracked, the keys span all
+    def listCalls(nFiles: Int): Long = {
+      val root = s"$base/t$nFiles"
+      ManifestTable.create(s.range(nFiles * 10L)
+        .select(col("id").as("k"), (col("id") % 3).as("v"))
+        .repartitionByRange(nFiles, col("k")), root, Seq("k"))
+      assert(ManifestTable.filesAt(s, root, 0L).size == nFiles)
+      CountingLocalFs.listCalls.set(0L)
+      ManifestTable.deleteWhereMor(s, root, col("v") === 1L)
+      ManifestTable.mergeMor(s.range(0L, nFiles * 10L, 10L)
+        .select(col("id").as("k"), lit(7L).as("v")), root, Seq("k"))
+      ManifestTable.deleteWhere(s, root, col("v") === 2L)
+      val calls = CountingLocalFs.listCalls.get()
+      assert(ManifestTable.read(s, root).count() ==
+        (0L until nFiles * 10L).count(k => k % 10 == 0 || k % 3 == 0))
+      calls
+    }
+    spark.sparkContext.addSparkListener(l)
+    val (c40, c80) =
+      try {
+        val r = (listCalls(40), listCalls(80))
+        // events arrive in order: once the barrier's start is seen,
+        // every earlier job has been recorded
+        s.sparkContext.setJobDescription(s"barrier $base")
+        try s.sparkContext.parallelize(1 to 1, 1).count()
+        finally s.sparkContext.setJobDescription(null)
+        assert(barrier.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        r
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(listings.isEmpty, s"listing jobs started: ${listings.toArray.toSeq}")
+    assert(c80 == c40, s"listStatus calls grew with the files: $c40 at 40, $c80 at 80")
+  }
 }
