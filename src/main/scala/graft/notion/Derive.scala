@@ -95,9 +95,12 @@ object Derive {
   /** Last-wins per key: the reference's `Map.set` builds keep the LAST
     * row per key in input order (derive/index.ts:110-116,196); Spark has
     * no input order, so the deterministic proxy is latest
-    * last_edited_time (nulls last, row-hash tiebreak for a total order).
-    * Prevents duplicate canonical keys from both multiplying join probes
-    * and yielding an arbitrary surviving row.
+    * last_edited_time (nulls last, then a hash of the [[TieCols]] the
+    * frame carries, for a total order). Every lookup of one entity
+    * projects the same tie columns, so on a last_edited_time tie the
+    * fact, DimStage and DimWorkflow all keep the SAME row. Prevents
+    * duplicate canonical keys from both multiplying join probes and
+    * yielding an arbitrary surviving row.
     *
     * Shaped as an argmax hash aggregate (`max_by`), not a row_number
     * window: partial aggregation combines map-side so only one candidate
@@ -106,24 +109,18 @@ object Derive {
     * three extra sort/codegen stages on the fixture-sized parity path. */
   private def lastWins(df: DataFrame, key: String): DataFrame = {
     val row = struct(df.columns.toSeq.map(col): _*)
-    // tiebreak hash over the hashable columns only (maps — `attributes`
-    // — are not hashable in Spark; rows differing ONLY in a map column
-    // tie arbitrarily, exactly as the previous window form did)
-    def hashable(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case s: org.apache.spark.sql.types.StructType =>
-        s.fields.forall(f => hashable(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-      case _ => true
-    }
-    val hcols = df.schema.fields.toSeq.filter(f => hashable(f.dataType))
-      .map(f => col(f.name))
     val ord = struct(coalesce(col("last_edited_time"), lit("")),
-      xxhash64(hcols: _*))
+      xxhash64(TieCols.filter(df.columns.contains).map(col): _*))
     df.groupBy(col(key))
       .agg(max_by(row, ord).as("_row"))
       .select(col("_row.*"))
   }
+
+  /** The tie-break columns of [[lastWins]]: a definition's key and
+    * title, a stage's key, number and label — the columns its lookups
+    * carry, so rows differing in any of them never tie. */
+  private val TieCols =
+    Seq("source_page_id", "page_title", "stage_number", "stage_label")
 
   /** Explicit early pruning of a normalize output: the record builders
     * project ~25 parsed-payload expression trees (from_json over the
@@ -184,7 +181,9 @@ object Derive {
   /** The last-wins stage row per canonical stage id, narrowed to the
     * four columns a stage lookup reads. */
   private def stageWinners(stages: DataFrame): DataFrame =
-    lastWins(stages, "workflow_stage_id").select(col("workflow_stage_id"),
+    lastWins(pruned(stages, "workflow_stage_id", "source_page_id",
+        "stage_number", "stage_label", "last_edited_time"),
+      "workflow_stage_id").select(col("workflow_stage_id"),
       col("source_page_id"), col("stage_number"), col("stage_label"))
 
   /** Stage lookup (J2 build side): canonical stage id → key + meta,
@@ -266,11 +265,15 @@ object Derive {
       .orderBy(col("stage_key"))
   }
 
-  /** DimWorkflow (derive/index.ts:209-214): last-wins per key, sorted. */
+  /** DimWorkflow (derive/index.ts:209-214): last-wins per key, sorted —
+    * the label-by-key lookup itself, so its label is the one the fact
+    * and DimStage resolve. */
   def dimWorkflow(defs: DataFrame): DataFrame =
-    lastWins(defs, "source_page_id")
-      .select(col("source_page_id").as("workflow_definition_key"),
-        coalesce(col("page_title"), col("source_page_id")).as("workflow_definition"))
+    dimWorkflowFrom(wfLabelByKey(defs))
+
+  private def dimWorkflowFrom(labelByKey: DataFrame): DataFrame =
+    labelByKey.select(col("lbl_key").as("workflow_definition_key"),
+      col("lbl_label").as("workflow_definition"))
       .orderBy(col("workflow_definition_key"))
 
   /** DimDate (derive/index.ts:378-414): UTC daily spine over fact
@@ -502,7 +505,8 @@ object Derive {
     val Seq(stageLk, wfLk, labelLk) = wave(Seq(lk.stages, lk.wf, lk.wfLabel), None)
     val local = Lookups(stageLk, wfLk, labelLk)
     val Seq(fact, dStage, dWorkflow, frames) = wave(Seq(factFrom(ts, local),
-      dimStageFrom(stages, local), dimWorkflow(defs), dimPlaybackFrame(ts)), maxRows)
+      dimStageFrom(stages, local), dimWorkflowFrom(labelLk), dimPlaybackFrame(ts)),
+      maxRows)
     val Seq(dDate, occupancy) = wave(Seq(dimDate(fact),
       occupancyFrom(ts, stageLk, dStage, frames)), maxRows)
     val Seq(throughput) = wave(Seq(throughputFrom(ts, stageLk, dStage, occupancy)), maxRows)

@@ -128,8 +128,8 @@ object Bpe {
   def learn(docs: DataFrame, textCol: String, numMerges: Int): BpeModel =
     learn(wordCounts(docs, textCol), numMerges)
 
-  /** Persist a trained model as two [[graft.sinks.VersionedTable]]
-    * epochs — `root/merges` (rank, lsym, rsym) and `root/vocab`
+  /** Persist a trained model as two [[graft.sinks.ManifestTable.save]]
+    * versions — `root/merges` (rank, lsym, rsym) and `root/vocab`
     * (word, n, syms) — so training runs ONCE per corpus epoch and
     * every later batch/stream encodes against the stored vocab (the
     * same train-once/apply-many shape as the MinHash and PQ model
@@ -140,8 +140,8 @@ object Bpe {
   def saveModel(model: BpeModel, root: String): (Long, Long) = {
     val spark = model.vocab.sparkSession
     import spark.implicits._
-    val vv = graft.sinks.VersionedTable.write(model.vocab, s"$root/vocab")
-    val mv = graft.sinks.VersionedTable.write(
+    val vv = graft.sinks.ManifestTable.save(model.vocab, s"$root/vocab")
+    val mv = graft.sinks.ManifestTable.save(
       model.merges.zipWithIndex
         .map { case ((l, r), i) => (i, l, r) }
         .toDF("rank", "lsym", "rsym"), s"$root/merges")
@@ -152,13 +152,13 @@ object Bpe {
     * |merges| rows — metadata scale), vocab lazy. */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
                 root: String): BpeModel = {
-    val merges = graft.sinks.VersionedTable
+    val merges = graft.sinks.ManifestTable
       .read(spark, s"$root/merges")
       .orderBy(col("rank"))
       .select(col("lsym"), col("rsym"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     BpeModel(merges,
-      graft.sinks.VersionedTable.read(spark, s"$root/vocab"))
+      graft.sinks.ManifestTable.read(spark, s"$root/vocab"))
   }
 
   /** Bounded nesting for merge-rule folds: each [[mergeOnce]] is a

@@ -372,7 +372,7 @@ object CorpusQuality {
     *
     * Scale shape: reference counts are two vocab-bounded map-side-
     * combined aggregates (the model IS two tables — persist them via
-    * [[graft.sinks.VersionedTable]] to train once and score many);
+    * [[graft.sinks.ManifestTable.save]] to train once and score many);
     * scoring is two token-keyed LEFT joins onto the target's bigram
     * stream + one doc-keyed aggregate — the TF-IDF cost silhouette,
     * nothing all-pairs. */

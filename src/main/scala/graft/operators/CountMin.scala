@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   *   - MERGE across epochs/partitions is bucket-wise addition (union +
   *     re-aggregate), order-independent and BIT-EQUAL to a single
   *     pass — pinned in the gate itself;
-  *   - PERSISTENCE is any table sink ([[graft.sinks.VersionedTable]]
-  *     epochs in the gate);
+  *   - PERSISTENCE is any table sink (two [[graft.sinks.ManifestTable]]
+  *     versions in the gate);
   *   - the hash is the repo-wide md5-derived [[Dedup.hash32]], so a
   *     DuckDB oracle reproduces the ENTIRE sketch — collisions and
   *     all — making estimates exactly checkable, not just bounded.

@@ -546,7 +546,7 @@ object Dedup {
     * Overwrite is parquet delete-then-write, NOT atomic: a rebuild must
     * not race concurrent readers of the same path. For an always-readable
     * index use [[saveMinhashIndexVersioned]], which commits each rebuild
-    * as a fresh epoch behind an atomically-flipped pointer. */
+    * as one manifest-table version. */
   def saveMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
                        path: String,
                        maxShinglesPerDoc: Option[Int] = None): Unit = {
@@ -642,53 +642,61 @@ object Dedup {
         Seq("doc_id"), "left_anti")
       .unionByName(buildMinhashIndex(delta, idCol, textCol, maxShinglesPerDoc))
 
-  /** Always-readable persisted index: [[saveMinhashIndex]] on a
-    * [[graft.sinks.VersionedTable]] root — each rebuild lands in a
-    * fresh `epoch=N` directory whose commit record carries the build
-    * params (committed by the same pointer flip), so a reader holding
-    * the previous epoch keeps scanning immutable files through any
-    * rebuild. This is the seam [[saveMinhashIndex]]'s doc-comment
-    * prescribes; returns the committed version. */
+  /** Always-readable persisted index: [[saveMinhashIndex]] as a
+    * [[graft.sinks.ManifestTable.save]] version — each rebuild commits
+    * a new version whose schema carries the build params (field
+    * metadata of `doc_id`, committed with the version), so a reader
+    * holding the previous version keeps scanning immutable files
+    * through any rebuild. This is the seam [[saveMinhashIndex]]'s
+    * doc-comment prescribes; returns the committed version. */
   def saveMinhashIndexVersioned(corpus: DataFrame, idCol: String,
                                 textCol: String, root: String,
                                 maxShinglesPerDoc: Option[Int] = None): Long =
-    graft.sinks.VersionedTable.write(
-      buildMinhashIndex(corpus, idCol, textCol, maxShinglesPerDoc), root,
-      buildParams(maxShinglesPerDoc))
+    graft.sinks.ManifestTable.save(withBuildParams(
+      buildMinhashIndex(corpus, idCol, textCol, maxShinglesPerDoc),
+      maxShinglesPerDoc), root)
 
-  /** The build params as a versioned epoch's record metadata. */
-  private def buildParams(maxShinglesPerDoc: Option[Int])
-      : com.fasterxml.jackson.databind.JsonNode =
-    com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
-      .put("constants_fp", minhashConstantsFingerprint)
-      .put("max_shingles", maxShinglesPerDoc.map(_.toLong).getOrElse(-1L))
+  private val FpKey = "graft.minhash.constants_fp"
+  private val CapKey = "graft.minhash.max_shingles"
 
-  /** Pointer-resolved read of the current epoch of a
-    * [[saveMinhashIndexVersioned]] root, with [[loadMinhashIndex]]'s
-    * build-params fail-fast against the epoch's record. */
+  /** `index` with the build params as `doc_id`'s field metadata. */
+  private def withBuildParams(index: DataFrame,
+                              maxShinglesPerDoc: Option[Int]): DataFrame =
+    index.withMetadata("doc_id",
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putString(FpKey, minhashConstantsFingerprint)
+        .putLong(CapKey, maxShinglesPerDoc.map(_.toLong).getOrElse(-1L))
+        .build())
+
+  /** The current version of a [[saveMinhashIndexVersioned]] root, with
+    * [[loadMinhashIndex]]'s build-params fail-fast against the params
+    * its schema carries. */
   def loadMinhashIndexVersioned(spark: org.apache.spark.sql.SparkSession,
                                 root: String,
                                 maxShinglesPerDoc: Option[Int] = None): DataFrame = {
-    val v = graft.sinks.VersionedTable.latestVersion(spark, root)
-    require(v >= 0, s"versioned minhash index at $root has no committed epoch")
-    val p = graft.sinks.VersionedTable.record(spark, root, v).meta
-    checkBuildParams(s"$root/epoch=$v", p.path("constants_fp").asText,
-      p.path("max_shingles").asLong(-1L), maxShinglesPerDoc)
-    graft.sinks.VersionedTable.readVersion(spark, root, v)
+    val v = graft.sinks.ManifestTable.latestVersion(spark, root)
+    require(v >= 0, s"versioned minhash index at $root has no committed version")
+    val p = graft.sinks.ManifestTable.tableSchema(spark, root, v)("doc_id")
+      .metadata
+    require(p.contains(FpKey) && p.contains(CapKey),
+      s"minhash index at $root (version $v) carries no build params")
+    checkBuildParams(s"$root (version $v)", p.getString(FpKey),
+      p.getLong(CapKey), maxShinglesPerDoc)
+    graft.sinks.ManifestTable.readVersion(spark, root, v)
   }
 
-  /** [[mergeMinhashIndex]] as an epoch fold on a versioned root: read
-    * the current epoch, union with the delta's rows, commit as the next
-    * epoch. Readers of the old epoch are undisturbed; cost ∝ delta +
-    * one pruned scan of the old epoch. Returns the committed version. */
+  /** [[mergeMinhashIndex]] as a new version of a versioned root: read the
+    * current version, union with the delta's rows, commit. Readers of
+    * the old version are undisturbed; cost ∝ delta + one pruned scan of
+    * the old version. Returns the committed version. */
   def mergeMinhashIndexVersioned(spark: org.apache.spark.sql.SparkSession,
                                  root: String, delta: DataFrame,
                                  idCol: String, textCol: String,
                                  maxShinglesPerDoc: Option[Int] = None): Long = {
     val old = loadMinhashIndexVersioned(spark, root, maxShinglesPerDoc)
-    graft.sinks.VersionedTable.write(
-      mergedIndexRows(old, delta, idCol, textCol, maxShinglesPerDoc), root,
-      buildParams(maxShinglesPerDoc))
+    graft.sinks.ManifestTable.save(withBuildParams(
+      mergedIndexRows(old, delta, idCol, textCol, maxShinglesPerDoc),
+      maxShinglesPerDoc), root)
   }
 
   /** [[minhashLshPairsAcross]] against a persisted corpus index instead

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
   * pattern for a 100 TB fact table: keep a small (|keys|-row)
   * count/sum state table and fold CDC-style deltas into it, so a
   * day's ingest costs ∝ |delta| + |touched keys|, never a re-scan of
-  * the full fact history. Complements [[graft.sinks.VersionedTable]]
-  * (which owns the committed-epoch storage of exactly such state
-  * tables) and `Sketches`/`QuantileSketch` (the same fold discipline
-  * for distinct counts and quantiles).
+  * the full fact history. Complements [[graft.sinks.ManifestTable]]
+  * (whose keyed commits store exactly such state tables —
+  * [[graft.streaming.EventStreams.incrementalAggStream]]) and
+  * `Sketches`/`QuantileSketch` (the same fold discipline for distinct
+  * counts and quantiles).
   *
   * Maintained aggregates: COUNT and SUM — the natively retractable
   * pair (a delete subtracts exactly what its insert added; AVG =

@@ -58,18 +58,18 @@ object Sketches {
     sketches.select(col("bucket_day"),
       hll_sketch_estimate(col("sketch")).as("approx"))
 
-  /** [[saveSketches]] as a [[graft.sinks.VersionedTable]] epoch commit:
+  /** [[saveSketches]] as a [[graft.sinks.ManifestTable.save]] commit:
     * the rolled-up sketch table (the FOLD of all ingest epochs so far)
     * is what downstream consumers read, and it must stay readable
     * while the next fold replaces it — parquet overwrite is not
-    * atomic, the pointer flip is. Returns the committed version.
+    * atomic, the manifest commit is. Returns the committed version.
     * The typical cycle: `commitSketches(mergeEpochs(readSketches(root),
     * dailySketches(newDay)), root)` — cost ∝ |groups|·4 KB, never the
     * history. */
   def commitSketches(sketches: DataFrame, root: String): Long =
-    graft.sinks.VersionedTable.write(sketches, root)
+    graft.sinks.ManifestTable.save(sketches, root)
 
-  /** Pointer-resolved read of the current committed sketch fold. */
+  /** Read of the current committed sketch fold. */
   def readSketches(spark: SparkSession, root: String): DataFrame =
-    graft.sinks.VersionedTable.read(spark, root)
+    graft.sinks.ManifestTable.read(spark, root)
 }

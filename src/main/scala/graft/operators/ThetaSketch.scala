@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * column algebra (`array_union` + sort + slice — exact by the bottom-k
   * invariant); multi-epoch folds are one [[graft.functions
   * .KmvUnionAgg]] pass. Persistence commits through
-  * [[graft.sinks.VersionedTable]] so readers survive re-folds.
+  * [[graft.sinks.ManifestTable]] so readers survive re-folds.
   */
 object ThetaSketch {
 
@@ -88,12 +88,12 @@ object ThetaSketch {
   def unionEstimate(a: Column, b: Column, k: Int): Column =
     estimate(slice(array_sort(array_union(a, b)), 1, k), k)
 
-  /** Commit a sketch fold as a [[graft.sinks.VersionedTable]] epoch —
-    * always readable through re-folds. */
+  /** Commit a sketch fold as one [[graft.sinks.ManifestTable.save]]
+    * version — always readable through re-folds. */
   def commitSketches(sketches: DataFrame, root: String): Long =
-    graft.sinks.VersionedTable.write(sketches, root)
+    graft.sinks.ManifestTable.save(sketches, root)
 
-  /** Pointer-resolved read of the committed fold. */
+  /** Read of the committed fold. */
   def readSketches(spark: SparkSession, root: String): DataFrame =
-    graft.sinks.VersionedTable.read(spark, root)
+    graft.sinks.ManifestTable.read(spark, root)
 }

@@ -133,7 +133,8 @@ case class MetaAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
       d.table match {
         case t: graft.sources.v2.GraftTable =>
-          t.manifestInfo.map { case (root, v) => new MetaSource(root, v) }
+          val (root, v) = t.manifestInfo
+          Some(new MetaSource(root, v))
         case _ => None
       }
     case Project(exprs, child) if exprs.forall(_.isInstanceOf[AttributeReference]) =>

@@ -98,7 +98,7 @@ case class GraftSchemaMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case g: graft.sources.v2.GraftCatalog =>
         val ident = Identifier.of(ns, name)
         try g.loadTable(ident) match {
-          case t: graft.sources.v2.GraftTable if t.manifestBacked =>
+          case t: graft.sources.v2.GraftTable if t.writable =>
             Some((plugin, ident, t))
           case _ => None
         } catch { case _: Exception => None }

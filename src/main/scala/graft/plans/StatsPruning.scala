@@ -392,7 +392,7 @@ object StatsPruneRule extends org.apache.spark.internal.Logging {
     * hit must leave this untouched. */
   private[graft] val proofComputations = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def proven(epoch: graft.sinks.VersionedTable.EpochKey, cond: Expression)
+  private def proven(epoch: graft.sinks.EpochKey, cond: Expression)
                     (compute: => Set[String]): Set[String] = {
     // exprIds are fresh per reader instantiation — key on the
     // id-stripped canonical form so identical predicates from

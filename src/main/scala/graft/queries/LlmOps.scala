@@ -109,17 +109,16 @@ object LlmOps extends QueryModule {
   }
 
   /** [[qDedupIncremental]] through the PERSISTED MinHash index — the
-    * VERSIONED path: the stored-corpus side is committed as an epoch
-    * with [[Dedup.saveMinhashIndexVersioned]] (always-readable pointer
-    * flip) and resolved back through the pointer
-    * ([[Dedup.loadMinhashIndexVersioned]], validating the build-params
-    * sidecar) instead of being re-shingled — the plan a real
+    * VERSIONED path: the stored-corpus side is committed as a table
+    * version with [[Dedup.saveMinhashIndexVersioned]] and read back
+    * ([[Dedup.loadMinhashIndexVersioned]], validating the build params
+    * the version carries) instead of being re-shingled — the plan a real
     * incremental dedup runs per batch at 100 TB. Output contract is
     * identical to the rescan variant (OperatorsSpec proves the two
     * bit-equal), so this gate shares q_dedup_incremental's oracle. */
   def qDedupIncrementalIdx(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir)
-    val idxRoot = graft.util.Scratch.dir("mh_index")
+    val idxRoot = graft.util.Scratch.freshDir("mh_index")
     Dedup.saveMinhashIndexVersioned(
       d.filter(col("doc_id") % IncrementalBatchMod =!= IncrementalBatchRem),
       "doc_id", "text", idxRoot)
@@ -455,28 +454,28 @@ object LlmOps extends QueryModule {
   val CmProbes: Seq[String] =
     Seq("vector", "stream", "hash", "the", "zzzz-absent")
 
-  /** Count-Min point-frequency estimates through the epoch
+  /** Count-Min point-frequency estimates through the table
     * persistence path: the corpus sketched in two independent halves,
-    * committed as two epochs, folded bucket-wise, then probed — the
+    * committed as two versions, folded bucket-wise, then probed — the
     * single-pass oracle pins merge == one-shot AND every estimate's
     * exact value (collisions included, since the hash is the repo's
     * md5-derived hash32 the oracle replicates). */
   def qCountMin(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.CountMin
-    val root = graft.util.Scratch.dir("count_min") + "/cm"
+    val root = graft.util.Scratch.freshDir("count_min") + "/cm"
     val d = Tables.documents(spark, dir)
     def toks(p: org.apache.spark.sql.Column) = d.filter(p)
       .select(explode(split(col("text"), " ")).as("tok"))
-    val v0 = graft.sinks.VersionedTable.write(
+    val v0 = graft.sinks.ManifestTable.create(
       CountMin.sketch(toks(col("doc_id") % 2 === 0), "tok", CmWidth, CmDepth),
-      root)
-    val v1 = graft.sinks.VersionedTable.write(
+      root, Nil)
+    val v1 = graft.sinks.ManifestTable.overwrite(
       CountMin.sketch(toks(col("doc_id") % 2 =!= 0), "tok", CmWidth, CmDepth),
       root)
-    graft.sinks.VersionedTable.vacuum(spark, root, keep = 2)
+    graft.sinks.ManifestTable.vacuum(spark, root, keep = 2)
     val sk = CountMin.mergeSketches(Seq(
-      graft.sinks.VersionedTable.readVersion(spark, root, v0),
-      graft.sinks.VersionedTable.readVersion(spark, root, v1)))
+      graft.sinks.ManifestTable.readVersion(spark, root, v0),
+      graft.sinks.ManifestTable.readVersion(spark, root, v1)))
     val probes = spark.createDataFrame(CmProbes.map(Tuple1(_))).toDF("item")
     val est = CountMin.estimates(sk, probes, "item", CmWidth, CmDepth)
     val tc = toks(lit(true)).groupBy(col("tok").as("item"))
@@ -1257,23 +1256,23 @@ object LlmOps extends QueryModule {
     graft.operators.Ranking.bm25TopKIndexed(spark, root, Bm25Terms, k = 20)
   }
 
-  /** CHANGE FEED between table epochs ([[graft.sinks.VersionedTable
-    * .changesBetween]]): epoch A is a stale state (every 11th doc
-    * missing, every 7th doc's n_chars off by one), epoch B the
+  /** CHANGE FEED between table versions ([[graft.sinks.ManifestTable
+    * .changesBetween]]): version A is a stale state (every 11th doc
+    * missing, every 7th doc's n_chars off by one), version B the
     * current one (English docs dropped); the feed must emit exactly
     * the I/U/D delta an incremental consumer would apply. Oracle: the
     * same two states reconstructed in SQL and full-outer diffed. */
   def qChangeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.Scratch.dir("change_feed") + "/t"
+    val root = graft.util.Scratch.freshDir("change_feed") + "/t"
     val d = Tables.documents(spark, dir).select("doc_id", "lang", "n_chars")
     val a = d.filter(col("doc_id") % 11 =!= 0)
       .withColumn("n_chars", when(col("doc_id") % 7 === 0,
         col("n_chars") + 1).otherwise(col("n_chars")))
     val b = d.filter(col("lang") =!= "en")
-    val v0 = graft.sinks.VersionedTable.write(a, root)
-    val v1 = graft.sinks.VersionedTable.write(b, root)
-    graft.sinks.VersionedTable.vacuum(spark, root, keep = 2)
-    graft.sinks.VersionedTable
+    val v0 = graft.sinks.ManifestTable.create(a, root, Nil)
+    val v1 = graft.sinks.ManifestTable.overwrite(b, root)
+    graft.sinks.ManifestTable.vacuum(spark, root, keep = 2)
+    graft.sinks.ManifestTable
       .changesBetween(spark, root, v0, v1, Seq("doc_id"))
       .select(col("doc_id"), col("op"), col("lang"), col("n_chars"))
       .orderBy(col("doc_id"))

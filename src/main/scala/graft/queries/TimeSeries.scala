@@ -252,7 +252,7 @@ object TimeSeries extends QueryModule {
     * per-event-type sketches of distinct user-DAYS (~1.6k per type at
     * sf0.01 — past the k=512 saturation point, so the gate exercises
     * real estimation, not the exact small-set mode), built as two
-    * hash-split ingest epochs committed through VersionedTable, folded,
+    * hash-split ingest epochs committed as two table versions, folded,
     * then pairwise intersection/union estimates checked against exact
     * counts with bounded-relative-error flags. KMV estimates are
     * deterministic per input set (bottom-k of a fixed hash), so the
@@ -266,14 +266,14 @@ object TimeSeries extends QueryModule {
     val ev = Tables.events(spark, dir).select(col("event_type"),
       concat(col("user_id").cast("string"), lit("-"),
         date_format(col("ts"), "yyyyMMdd")).as("ud"))
-    val root = graft.util.Scratch.dir("theta") + "/sk"
+    val root = graft.util.Scratch.freshDir("theta") + "/sk"
     val split = pmod(xxhash64(col("ud")), lit(2))
-    graft.sinks.VersionedTable.write(
+    ThetaSketch.commitSketches(
       ThetaSketch.sketchBy(ev.filter(split === 0), "event_type", "ud",
         ThetaK), root)
-    graft.sinks.VersionedTable.write(
+    ThetaSketch.commitSketches(
       ThetaSketch.mergeEpochs(
-        graft.sinks.VersionedTable.read(spark, root),
+        ThetaSketch.readSketches(spark, root),
         ThetaSketch.sketchBy(ev.filter(split === 1), "event_type", "ud",
           ThetaK),
         "event_type", ThetaK), root)

@@ -9,11 +9,9 @@ import org.apache.spark.sql.types.{BinaryType, StructType}
 import com.fasterxml.jackson.databind.JsonNode
 import graft.util.EpochCache
 
-/** Manifest-based table format — epochs as FILE LISTS, not physical
-  * copies. [[VersionedTable]] commits every epoch as a full `epoch=N`
-  * directory: simple and right for metadata-scale tables (stats,
-  * offsets, indexes), but at 100 TB a 1-row delete would copy 100 TB.
-  * This table commits an epoch as a MANIFEST — a tiny parquet of
+/** The table format — versions as FILE LISTS, not physical copies (at
+  * 100 TB a 1-row delete must not copy 100 TB). Every version is a
+  * MANIFEST — a tiny parquet of
   * (path, size, row_count, per-tracked-column min/max/null-count) —
   * so untouched data files carry forward BY REFERENCE and row-level
   * operations rewrite only the files their keys can possibly touch:
@@ -25,12 +23,12 @@ import graft.util.EpochCache
   *     data file is INVISIBLE until some manifest references it, so
   *     landing is not a commit and a crashed writer leaks at worst an
   *     unreferenced directory ([[vacuum]] sweeps it by TTL).
-  *   - `_manifests/` — a [[VersionedTable]] whose epoch N IS this
-  *     table's version N. All commit machinery is inherited: CAS
-  *     rename claims, serializable read-modify-write via
-  *     `tryCommitAs`, pointer cache, commit timestamps
-  *     ([[VersionedTable.versionAtTimestamp]] works verbatim), vacuum
-  *     of old manifests. The table's own metadata — schema, pending
+  *   - `_manifests/` — the table's one metadata log
+  *     ([[VersionedTable]], private to this package), whose epoch N IS
+  *     this table's version N: CAS rename claims, serializable
+  *     read-modify-write, pointer cache, commit timestamps, vacuum of
+  *     old manifests (the Iceberg shape: one metadata log per table,
+  *     its metadata plain files under it). The table's own metadata — schema, pending
   *     equality deletes, CHECK constraints, NDV statistics, adopted
   *     directory — is one [[Meta]] value riding in each manifest
   *     epoch's commit record (atomic with it), so empty tables and
@@ -92,10 +90,40 @@ object ManifestTable extends org.apache.spark.internal.Logging {
       regexp_replace(c, "^[a-zA-Z0-9+.-]+://[^/]*", ""),
       "^[a-zA-Z0-9+.-]+:(?=/)", "")
 
-  /** Whether `root` holds a manifest table (vs a plain directory or a
-    * [[VersionedTable]]). */
+  /** Whether `root` holds a manifest table. */
   def exists(spark: SparkSession, root: String): Boolean =
     VersionedTable.latestVersion(spark, manifestsRoot(root)) >= 0
+
+  /** Refuse `root` when it is a bare epoch-directory log — a manifest's
+    * `_manifests/` log, or a table written in the retired epoch-directory
+    * format — rather than a table: the one message every table entry
+    * point (the `graft` source, the catalog) gives such a root. */
+  private[graft] def refuseEpochLog(spark: SparkSession, root: String): Unit =
+    if (VersionedTable.latestVersion(spark, root) >= 0)
+      throw new UnsupportedOperationException(
+        s"$root is an epoch-directory log, not a table: graft tables are " +
+          "ManifestTable roots — create one with " +
+          "graft.sinks.ManifestTable.create and write the rows into it")
+
+  /** Commit-timestamp clock of every commit — injectable so time-travel
+    * tests run on a logical clock ([[graft.util.Clock]], the repo-wide
+    * discipline); production leaves the default. Each version is stamped
+    * immediately before its publishing rename, so the stamp commits
+    * atomically with the version it describes. */
+  @volatile private[graft] var commitClock: graft.util.Clock =
+    graft.util.SystemClock
+
+  /** Appended to retention refusals that consult [[versions]]: the
+    * retained-version checkpoint's conservative under-report after a
+    * crashed vacuum is RECONCILABLE (vacuum always re-reads the
+    * authoritative listing), and "was vacuumed" alone sent operators to
+    * re-create/re-bootstrap when a re-run would have restored the
+    * surviving version. */
+  private[graft] val CrashedSweepHint: String =
+    " (if a recent vacuum crashed mid-sweep the version may still " +
+      "exist on disk while the retained-version checkpoint " +
+      "under-reports it — re-run vacuum on the table to reconcile, " +
+      "then retry)"
 
   def latestVersion(spark: SparkSession, root: String): Long =
     VersionedTable.latestVersion(spark, manifestsRoot(root))
@@ -103,8 +131,18 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   def versions(spark: SparkSession, root: String): Seq[Long] =
     VersionedTable.versions(spark, manifestsRoot(root))
 
+  /** Latest version whose effective commit timestamp is <= `tsMs` —
+    * the `timestampAsOf` resolution. Fails fast when t predates the
+    * oldest RETAINED version (the table did not exist yet, or the
+    * version current at t was vacuumed). */
   def versionAtTimestamp(spark: SparkSession, root: String, tsMs: Long): Long =
     VersionedTable.versionAtTimestamp(spark, manifestsRoot(root), tsMs)
+
+  /** (version, effective commit ts) for every retained version, in
+    * version order; effective = the running max of the raw stamps, so a
+    * later version never reads as older. */
+  def commitTimestamps(spark: SparkSession, root: String): Seq[(Long, Long)] =
+    VersionedTable.commitTimestamps(spark, manifestsRoot(root))
 
   /** The manifest of one version: (path, size, row_count, stats…,
     * dv_path, dv_rows, seq) — normalized so manifests committed before
@@ -121,7 +159,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
 
   /** [[manifest]] of an epoch whose record the caller already read. */
   private[graft] def manifest(spark: SparkSession,
-                              rec: VersionedTable.Commit): DataFrame =
+                              rec: EpochCommit): DataFrame =
     collected(spark, rec, narrowOnMiss = false) match {
       case Some(c) if c.full => spark.createDataFrame(c.rows.asJava, c.schema)
       case _                 => manifestFromFiles(spark, rec.key)
@@ -130,11 +168,11 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   /** The commit record of manifest epoch `version` — one read, which
     * also names the key of every cache entry over the epoch. */
   private[graft] def recordAt(spark: SparkSession, root: String,
-                              version: Long): VersionedTable.Commit =
+                              version: Long): EpochCommit =
     VersionedTable.record(spark, manifestsRoot(root), version)
 
   private def manifestFromFiles(spark: SparkSession,
-                                key: VersionedTable.EpochKey): DataFrame = {
+                                key: EpochKey): DataFrame = {
     var m = EpochCache.readParquet(spark, key.dir, key)
     if (!m.columns.contains("dv_path"))
       m = m.withColumn("dv_path", lit(null).cast("string"))
@@ -160,7 +198,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * next epoch driver-side.
     *
     * One entry per epoch in [[graft.util.EpochCache]], keyed by its
-    * [[VersionedTable.EpochKey]]. Full-width rows (stats included) are
+    * [[EpochKey]]. Full-width rows (stats included) are
     * the driver-memory hazard the round-14 ADVICE named, so an epoch
     * keeps them only when its parquet — the byte total its commit
     * record carries — is ≤ [[ManifestFullMaxBytes]] AND ≤
@@ -193,7 +231,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   /** The cached collection of one epoch; on a miss, a fresh one — full
     * width under the byte gate, else (only when `narrowOnMiss`) the
     * narrow columns — cached when within the row bounds above. */
-  private def collected(spark: SparkSession, rec: VersionedTable.Commit,
+  private def collected(spark: SparkSession, rec: EpochCommit,
                         narrowOnMiss: Boolean): Option[Collected] =
     EpochCache.get(Manifests, rec.key).orElse {
       val small = rec.bytes <= ManifestFullMaxBytes
@@ -236,7 +274,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * commit's publish built from its claim. */
   private def primeManifestCaches(spark: SparkSession, root: String,
                                   version: Long, rows: DataFrame,
-                                  key: VersionedTable.EpochKey): Unit =
+                                  key: EpochKey): Unit =
     try {
       val plan = rows.queryExecution.optimizedPlan
       LocalEpoch.localRows(plan, ManifestFullMaxRows).foreach { irows =>
@@ -271,7 +309,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     manifestCollected(spark, recordAt(spark, root, version))
 
   private def manifestCollected(spark: SparkSession,
-                                rec: VersionedTable.Commit)
+                                rec: EpochCommit)
       : (StructType, Seq[org.apache.spark.sql.Row]) = {
     val c = collected(spark, rec, narrowOnMiss = true).get
     (c.schema, c.rows)
@@ -389,7 +427,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                                           keys: Seq[String])
 
   /** A version's table metadata, committed in its manifest epoch's
-    * [[VersionedTable.Commit]] record:
+    * [[EpochCommit]] record:
     *   - `schema`: the table schema (logical names; physical names and
     *     bucket claims ride in field metadata);
     *   - `eq`: the PENDING equality deletes — applied at read until a
@@ -436,7 +474,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
 
   /** The [[Meta]] a manifest epoch's record carries; fails loudly,
     * naming the epoch, when it carries none. */
-  private def metaOf(rec: VersionedTable.Commit): Meta = {
+  private def metaOf(rec: EpochCommit): Meta = {
     val n = rec.meta
     require(n.has("schema"),
       s"manifest epoch ${rec.key.dir} carries no table metadata")
@@ -658,7 +696,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     statsCols(spark, recordAt(spark, root, version))
 
   private[graft] def statsCols(spark: SparkSession,
-                               rec: VersionedTable.Commit): Seq[String] =
+                               rec: EpochCommit): Seq[String] =
     statsOf(manifest(spark, rec))
 
   private def statsOf(m: DataFrame): Seq[String] =
@@ -783,7 +821,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     filesAt(spark, recordAt(spark, root, version))
 
   private def filesAt(spark: SparkSession,
-                      rec: VersionedTable.Commit): Seq[String] =
+                      rec: EpochCommit): Seq[String] =
     entries(spark, rec).map(_.path)
 
   /** Read one version: the manifest's files, with the committed
@@ -1100,6 +1138,26 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     primeManifestCaches(spark, root, v, rows, key)
     v
   }
+
+  /** Create an EMPTY table of `schema` tracking `statsCols` unless one
+    * exists — a streaming sink's first-batch step. Creation and the
+    * first data commit stay separately idempotent: a batch replayed
+    * after a crash between the two finds the table and lands once. */
+  def createIfMissing(spark: SparkSession, root: String, schema: StructType,
+                      statsCols: Seq[String] = Nil): Unit =
+    if (!exists(spark, root))
+      create(spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema),
+        root, statsCols): Unit
+
+  /** Whole-content save — the store of a model, index or sketch fold:
+    * [[create]] (no tracked columns) on the first save, an
+    * [[overwriteAs]] commit (content AND schema replaced) on every later
+    * one. A reader keeps the version it resolved while the next save
+    * commits. Returns the committed version. */
+  def save(df: DataFrame, root: String): Long =
+    if (!exists(df.sparkSession, root)) create(df, root, Nil)
+    else overwriteAs(df, root)
 
   /** Append commit — a change set that retires nothing
     * ([[rowDelta]]): land the batch, commit current-manifest ∪ batch.
@@ -1590,8 +1648,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     batchId == last
   }
 
-  /** Stream-idempotent append — [[VersionedTable.writeBatch]] for the
-    * manifest format: the producing micro-batch id commits atomically
+  /** Stream-idempotent append: the producing micro-batch id commits atomically
     * with the manifest version, and a batch id at or below the
     * current version's marker is a no-op — which is exactly the
     * foreachBatch redelivery case after a restart. Cost ∝ batch (the
@@ -1630,7 +1687,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                          batch: Option[Long] = None,
                          validateCons: Boolean = true,
                          adopting: Boolean = false)
-                        (next: (VersionedTable.Commit, Meta) =>
+                        (next: (EpochCommit, Meta) =>
                           Option[(DataFrame, Meta)])
       : Option[Long] = {
     val maxAttempts = 12
@@ -1938,7 +1995,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * ([[keyedFiles]], [[predicateFiles]]) read once ([[readFilesDv]]),
     * then their survivors rewritten or their matches vectored. */
   private def retire(spark: SparkSession, root: String,
-                     rec: VersionedTable.Commit, r: Retire, land: Land,
+                     rec: EpochCommit, r: Retire, land: Land,
                      grain: Grain, schema: StructType): DataFrame = {
     val (m, files) = effectiveManifest(spark, root, rec)
     val stats = statsOf(m)
@@ -2137,6 +2194,16 @@ object ManifestTable extends org.apache.spark.internal.Logging {
             evolveSchema: Boolean): Long =
     rowDelta(updates.sparkSession, root, upsert(updates, keyCols,
       evolveSchema), CopyOnWrite).get
+
+  /** Stream-idempotent KEYED REPLACE, copy-on-write — a keyed state
+    * sink's micro-batch: every row of a key in `keys` retires and `rows`,
+    * those keys' recomputed state, lands (a key absent from `rows` leaves
+    * the table). A replayed `batchId` commits nothing (None). NULL keys
+    * match nothing, as in SQL. */
+  def replaceKeysBatch(rows: DataFrame, keys: DataFrame, root: String,
+                       keyCols: Seq[String], batchId: Long): Option[Long] =
+    rowDelta(rows.sparkSession, root, ChangeSet(Some(ByKeys(keys, keyCols)),
+      Batch(rows), batchId = Some(batchId)), CopyOnWrite)
 
   /** [[foldCdc]], copy-on-write. */
   def applyCdc(changes: DataFrame, root: String, keyCols: Seq[String],
@@ -2835,7 +2902,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
   /** The entries of one manifest version, sorted by path — one
     * metadata-scale read of the epoch's cached collection. */
   private def entries(spark: SparkSession,
-                      rec: VersionedTable.Commit): Seq[Entry] = {
+                      rec: EpochCommit): Seq[Entry] = {
     val (schema, rows) = manifestCollected(spark, rec)
     val Seq(ip, is, iq, id, iv, ir) = Seq("path", "size", "seq", "dv_path",
       "dv_rows", "row_count").map(schema.fieldIndex)
@@ -2955,7 +3022,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     effectiveStates(spark, root, recordAt(spark, root, version))
 
   private def effectiveStates(spark: SparkSession, root: String,
-                              rec: VersionedTable.Commit)
+                              rec: EpochCommit)
       : Seq[(String, Option[String], Long, Long)] = {
     val pending = metaOf(rec).eq
     if (pending.isEmpty) return entries(spark, rec).map(_.state)
@@ -3116,7 +3183,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * their commit then carries the materialized vectors under an EMPTY
     * registry, folding the compaction into their own CAS commit. */
   private def effectiveManifest(spark: SparkSession, root: String,
-                                rec: VersionedTable.Commit)
+                                rec: EpochCommit)
       : (DataFrame, Seq[Entry]) = {
     val m = manifest(spark, rec)
     val files = entries(spark, rec)
@@ -3134,7 +3201,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * narrow through the shared [[touchedPaths]] proofs, and the keyed
     * match ([[keyedMatches]]) over them feeds [[withVectors]]. */
   private def resolveEq(spark: SparkSession, root: String,
-                        rec: VersionedTable.Commit, pending: Seq[EqEntry])
+                        rec: EpochCommit, pending: Seq[EqEntry])
       : Seq[(String, Option[String], Long, Long)] = {
     val files = entries(spark, rec)
     val maxSeq = pending.map(_.seq).max
@@ -3513,7 +3580,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     // fast-forward already leaves main == branch content; syncing
     // after every FF would add a pointless branch commit per publish)
     @volatile var mergedCommit = false
-    def threeWay(rec: VersionedTable.Commit, metaM: Meta)
+    def threeWay(rec: EpochCommit, metaM: Meta)
         : (DataFrame, StructType) = {
       val base = rec.key.version
       mergedCommit = true
@@ -3746,9 +3813,24 @@ object ManifestTable extends org.apache.spark.internal.Logging {
         .sortBy(_._1))
   }
 
-  /** Change feed between two versions — [[VersionedTable
-    * .changesBetween]] semantics, at cost ∝ CHANGED FILES, never ∝
-    * table (the Delta CDF grain): the two MANIFESTS diff first
+  /** CHANGE FEED between two versions — the Delta `table_changes`
+    * analog, derived rather than logged: one Debezium-shaped row per key
+    * whose content differs between `fromVersion` and `toVersion` — `op`
+    * = 'I' (key absent before), 'D' (absent after), 'U' (present in
+    * both, any payload column differs, NULL-safely) — carrying the AFTER
+    * payload for I/U and the BEFORE payload for D, plus `seq` =
+    * `toVersion` (monotone per key across successive feeds, so feeds
+    * pipe straight into [[applyCdc]] on a downstream table;
+    * `applyCdc(changesBetween(v0, v1))` onto the v0 state rebuilds v1
+    * exactly — spec-pinned). This is what the streaming change feed
+    * ([[graft.sources.v2.GraftChangeFeedTable]]) serves per batch.
+    *
+    * Contract: the table is KEYED at both versions (one row per key;
+    * duplicate keys would fan out the join), and the schema did not
+    * evolve between them.
+    *
+    * Cost ∝ CHANGED FILES, never ∝ table (the Delta CDF grain): the two
+    * MANIFESTS diff first
     * ([[changedFileSets]] — committed metadata), and only the files
     * removed between the versions (from-side) and added (to-side) are
     * scanned and key-diffed.
@@ -3775,9 +3857,34 @@ object ManifestTable extends org.apache.spark.internal.Logging {
                version: Long): DataFrame =
       readFilesDv(spark, tableSchema(spark, root, version),
         states.map(s => (s._1, s._2, s._3)), states.map(_._4).sum)
-    VersionedTable.diffKeyed(
-      subset(removed, fromVersion), subset(added, toVersion),
+    diffKeyed(subset(removed, fromVersion), subset(added, toVersion),
       keyCols, fromVersion, toVersion)
+  }
+
+  /** The keyed diff of [[changesBetween]]: two key-partitioned scans and
+    * ONE full-outer join; payloads compare as structs (no per-column
+    * join churn), and unchanged keys drop before anything else
+    * happens. */
+  private def diffKeyed(a: DataFrame, b: DataFrame, keyCols: Seq[String],
+                        fromVersion: Long, toVersion: Long): DataFrame = {
+    require(a.columns.sorted.sameElements(b.columns.sorted),
+      s"schema evolved between version $fromVersion and $toVersion — " +
+        "diff the common columns explicitly")
+    val payload = b.columns.filterNot(keyCols.contains).toSeq
+    require(payload.nonEmpty, "table has no payload columns beyond the keys")
+    def sel(df: DataFrame, as: String) =
+      df.select(keyCols.map(col) :+ struct(payload.map(col): _*).as(as): _*)
+    val j = sel(a, "_cf_a").join(sel(b, "_cf_b"), keyCols, "full_outer")
+    val changed = j.filter(col("_cf_a").isNull || col("_cf_b").isNull ||
+      !(col("_cf_a") <=> col("_cf_b")))
+    val after = coalesce(col("_cf_b"), col("_cf_a"))
+    changed.select(
+      keyCols.map(col) ++
+        payload.map(p => after.getField(p).as(p)) :+
+        when(col("_cf_a").isNull, lit("I"))
+          .when(col("_cf_b").isNull, lit("D"))
+          .otherwise(lit("U")).as("op") :+
+        lit(toVersion).as("seq"): _*)
   }
 
   /** Strip a bucket claim from every field — the inverse of
@@ -4124,7 +4231,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
 
   /** Table HISTORY — the DESCRIBE HISTORY/DETAIL ergonomics: one row
     * per retained version with its commit timestamp (running-max
-    * normalized, the [[VersionedTable.commitTimestamps]] contract),
+    * normalized, the [[commitTimestamps]] contract),
     * file count, row count, and bytes — all from the manifests alone,
     * zero data I/O, |versions| × |files| metadata rows. MANIFEST
     * GRAIN: a version with PENDING equality deletes reports its
@@ -4134,7 +4241,7 @@ object ManifestTable extends org.apache.spark.internal.Logging {
     * contract is the point of this surface, so the number is
     * documented rather than resolved. */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val ts = VersionedTable.commitTimestamps(spark, manifestsRoot(root)).toMap
+    val ts = commitTimestamps(spark, root).toMap
     // ONE aggregation job over the union of the retained manifests
     // (version tagged per branch) — not one serial job per version,
     // which turns sluggish at thousands of retained versions

@@ -142,7 +142,7 @@ object MaterializedView {
       r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation)
       : Option[String] =
     r.table match {
-      case g: graft.sources.v2.GraftTable => g.manifestInfo.map(_._1)
+      case g: graft.sources.v2.GraftTable => Some(g.tableRoot)
       case _ => None
     }
 
@@ -156,9 +156,8 @@ object MaterializedView {
       .transform {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
           r.table match {
-            case g: graft.sources.v2.GraftTable
-                if g.manifestInfo.isDefined =>
-              val (root, v) = g.manifestInfo.get
+            case g: graft.sources.v2.GraftTable =>
+              val (root, v) = g.manifestInfo
               graft.plans.GraftRelPlaceholder(root, v, r.output)
             case _ => r
           }
@@ -642,7 +641,7 @@ object MaterializedView {
       require(ManifestTable.versions(spark, root).contains(last),
         s"view lagged past retention: version $last of $what $root " +
           "was vacuumed — re-create the view" +
-          VersionedTable.CrashedSweepHint)
+          ManifestTable.CrashedSweepHint)
       vNow
     }
     val vNow = headOf(spec.baseRoot, spec.lastVersion, "base")

@@ -1,19 +1,43 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, struct, when}
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.NullNode
 import graft.util.EpochCache
 
-/** Always-readable versioned table — the epoch-flip pattern the
-  * persisted-index docs prescribe ([[graft.operators.Dedup
-  * .saveMinhashIndex]]'s non-atomicity note), implemented: every write
+/** Identity of a committed epoch of an epoch log — the key of every
+  * cache over it ([[graft.util.EpochCache]]): the epoch directory `dir`
+  * and the `claim` its [[EpochCommit]] record names, the unique name of
+  * the stage that became the epoch. [[VersionedTable.verifyClaim]]
+  * decides ownership of a published epoch by the same claim, and a
+  * root dropped and re-created at the same path keys its new epochs
+  * apart. */
+private[graft] final case class EpochKey(root: String, version: Long,
+                                         claim: String) {
+  def dir: String = s"$root/epoch=$version"
+}
+
+/** The one metadata record of an epoch:
+  *   - `key`: the epoch and its claim;
+  *   - `tsMs`: the commit timestamp ([[VersionedTable.versionAtTimestamp]]);
+  *   - `batch`: the stream replay marker
+  *     ([[VersionedTable.lastAppliedBatch]]), -1 when none — every
+  *     commit carries its base's unless it stamps its own, and a blind
+  *     full replace resets it;
+  *   - `bytes`: the epoch's data-file byte total, taken once at stage
+  *     time — the size gate of the collected-manifest cache;
+  *   - `meta`: the owner's object — a manifest table's schema and
+  *     registries. */
+private[graft] final case class EpochCommit(key: EpochKey, tsMs: Long,
+                                            batch: Long, bytes: Long,
+                                            meta: JsonNode)
+
+/** The EPOCH LOG a [[ManifestTable]] keeps its manifests in (`_manifests/`
+  * under the table root) — not a table format of its own: every write
   * lands in a FRESH `epoch=N` directory, and readers resolve the
   * current epoch through a pointer file plus the committed epoch
   * listing. A reader holding an old resolution keeps reading the old
-  * epoch's (immutable, fully written) files — parquet overwrite's
-  * delete-then-write window never exists for readers.
+  * epoch's (immutable, fully written) files.
   *
   * MULTI-WRITER SAFE commit protocol (optimistic, lock-free): a writer
   * first lands the epoch's data in a hidden `.stage-<uuid>` directory
@@ -32,9 +56,9 @@ import graft.util.EpochCache
   * `max(pointer, committed directories)`, so a writer that loses the
   * (benign) pointer-update race can never hide a newer epoch.
   *
-  * Blind writes ([[write]]) always succeed — racing writers serialize
-  * onto distinct consecutive versions, none lost. Read-modify-write
-  * commits ([[ManifestTable]]'s manifest swaps) are SERIALIZABLE via
+  * Blind writes ([[writeKeyed]]) always succeed — racing writers
+  * serialize onto distinct consecutive versions, none lost.
+  * Read-modify-write commits (the manifest swaps) are SERIALIZABLE via
   * [[tryCommitAs]]: the rewrite is computed against base version B and
   * committed only as B+1; if another writer claimed B+1 first, the
   * claim fails and the operation recomputes against the new current
@@ -43,58 +67,27 @@ import graft.util.EpochCache
   * everywhere in this package: object stores without atomic rename
   * need an external commit coordinator.
   *
-  * Every epoch is a full snapshot, so this format has no row-level
-  * DML: MERGE / DELETE / CDC fold / OPTIMIZE and row appends live in
-  * [[ManifestTable]], whose versions are file lists over immutable
-  * data files (cost ∝ touched files, not ∝ table). Epoch tables keep
-  * what whole-snapshot writers and the manifest's own `_manifests`
-  * log need: snapshot commits, as-of reads, stream-batch markers, the
-  * derived change feed ([[changesBetween]]) and [[vacuum]].
+  * Old epochs are retained for as-of reads until [[vacuum]] drops all
+  * but the newest k.
   *
-  * Old epochs are retained for as-of reads ([[readVersion]]) until
-  * [[vacuum]] drops all but the newest k.
-  *
-  * Each epoch's metadata is ONE file, its [[Commit]] record
+  * Each epoch's metadata is ONE file, its [[EpochCommit]] record
   * `_graft_commit.json`, staged last, right before the publishing
   * rename — so it commits atomically with the data it describes.
   */
-object VersionedTable {
+private[sinks] object VersionedTable {
 
   private val Pointer = "_LATEST"
   private val RecordFile = "_graft_commit.json"
 
-  private[sinks] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val NoMeta: JsonNode = NullNode.instance
-
-  /** Identity of a committed epoch — the key of every cache over it
-    * ([[graft.util.EpochCache]]): the epoch directory `dir` and the
-    * `claim` its [[Commit]] record names, the unique name of the stage
-    * that became the epoch. [[verifyClaim]] decides ownership of a
-    * published epoch by the same claim, and a root dropped and
-    * re-created at the same path keys its new epochs apart. */
-  final case class EpochKey(root: String, version: Long, claim: String) {
-    def dir: String = s"$root/epoch=$version"
-  }
-
-  /** The one metadata record of an epoch:
-    *   - `key`: the epoch and its claim;
-    *   - `tsMs`: the commit timestamp ([[versionAtTimestamp]]);
-    *   - `batch`: the stream replay marker ([[lastAppliedBatch]]), -1
-    *     when none — every commit carries its base's unless it stamps
-    *     its own, and a blind full replace resets it;
-    *   - `bytes`: the epoch's data-file byte total, taken once at stage
-    *     time — the size gate of the collected-manifest cache;
-    *   - `meta`: the owner's object — a manifest table's schema and
-    *     registries — JSON null when the owner has none. */
-  final case class Commit(key: EpochKey, tsMs: Long, batch: Long,
-                          bytes: Long, meta: JsonNode)
 
   /** The commit record of a retained epoch — one file read, decoded by
     * the one decoder; a missing, unreadable or malformed record fails
     * loudly, naming the epoch. Not cached: the record names the
     * epoch's identity, so every cache over the epoch keys on what this
     * one read returns. */
-  def record(spark: SparkSession, root: String, version: Long): Commit = {
+  def record(spark: SparkSession, root: String, version: Long): EpochCommit = {
     def fail(why: String, cause: Throwable) = throw new IllegalStateException(
       s"epoch $version of $root has no valid commit record " +
         s"($RecordFile): $why", cause)
@@ -107,24 +100,16 @@ object VersionedTable {
     if (n == null || !n.path("claim").isTextual ||
         !Seq("ts", "batch", "bytes").forall(n.path(_).isIntegralNumber))
       fail("missing claim/ts/batch/bytes", null)
-    Commit(EpochKey(root, version, n.get("claim").asText), n.get("ts").asLong,
+    EpochCommit(EpochKey(root, version, n.get("claim").asText), n.get("ts").asLong,
       n.get("batch").asLong, n.get("bytes").asLong,
       Option(n.get("meta")).getOrElse(NoMeta))
   }
-
-  /** Commit-timestamp clock — injectable so time-travel tests run on a
-    * logical clock ([[graft.util.Clock]], the repo-wide discipline);
-    * production leaves the default. Each epoch is stamped immediately
-    * before its publishing rename, so the stamp commits atomically
-    * with the epoch it describes. */
-  @volatile private[graft] var commitClock: graft.util.Clock =
-    graft.util.SystemClock
 
   private def fs(spark: SparkSession, root: String) =
     new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Newest committed version, or -1 when the table has never
+  /** Newest committed version, or -1 when the log has never
     * committed. The pointer is consulted as a fast monotone cache but
     * the committed `epoch=` listing wins when newer — a writer that
     * committed its CAS rename and then crashed (or lost the pointer
@@ -161,20 +146,15 @@ object VersionedTable {
   }
 
   /** Write `df` as the next epoch and publish it. Returns the new
-    * version. The CAS rename of the staged directory is the COMMIT: a
-    * crash before it leaves the table at the previous version with an
-    * orphaned staging directory, never a half-visible epoch. Safe
-    * under concurrent writers — each lands on its own version. `meta`
-    * rides in the epoch's [[Commit]] record, so an owner's metadata
-    * commits atomically with the epoch it describes. A blind
-    * full-epoch replace is a stream RESTART: its record resets the
-    * replay marker to -1. */
-  def write(df: DataFrame, root: String, meta: JsonNode = NoMeta): Long =
-    writeKeyed(df, root, meta)._1
-
-  /** [[write]], also returning the published epoch's [[EpochKey]] so a
-    * caller priming its own cache entry for the epoch reuses it. */
-  private[sinks] def writeKeyed(df: DataFrame, root: String,
+    * version and the published epoch's [[EpochKey]] (a caller priming
+    * its own cache entry for the epoch reuses it). The CAS rename of the
+    * staged directory is the COMMIT: a crash before it leaves the log at
+    * the previous version with an orphaned staging directory, never a
+    * half-visible epoch. Safe under concurrent writers — each lands on
+    * its own version. `meta` rides in the epoch's [[EpochCommit]]
+    * record, so an owner's metadata commits atomically with the epoch
+    * it describes. A blind write resets the replay marker to -1. */
+  def writeKeyed(df: DataFrame, root: String,
                                 meta: JsonNode): (Long, EpochKey) = {
     val spark = df.sparkSession
     var claim = stageEpoch(df, root, meta, -1L)
@@ -204,7 +184,7 @@ object VersionedTable {
     * (EXACTLY-ONCE carry-forward — a maintenance tick or batch merge
     * interleaved between micro-batches must not reset the marker, or a
     * crash-redelivered batch would apply twice) or stamps its own. */
-  private[sinks] def tryCommitAs(df: DataFrame, root: String,
+  def tryCommitAs(df: DataFrame, root: String,
                                  expectedBase: Long,
                                  meta: JsonNode,
                                  batch: Long): Option[(Long, EpochKey)] = {
@@ -234,7 +214,7 @@ object VersionedTable {
     spark.conf.getOption("spark.graft.commit.localStageMaxRows")
       .map(_.toInt).getOrElse(65536)
 
-  /** Land `df` and its [[Commit]] record in a hidden staging directory
+  /** Land `df` and its [[EpochCommit]] record in a hidden staging directory
     * readers and [[versions]] never resolve, and return the claim: the
     * stage's own unique name, `root/<claim>`. The record is written
     * last, with the data files' byte total — the local stage's one file
@@ -276,20 +256,20 @@ object VersionedTable {
       f.listStatus(dir).map(_.getLen).sum
     }
     val rec = mapper.createObjectNode().put("claim", name)
-      .put("ts", commitClock.nowMs()).put("batch", batch).put("bytes", bytes)
+      .put("ts", ManifestTable.commitClock.nowMs()).put("batch", batch).put("bytes", bytes)
     rec.set[JsonNode]("meta", meta)
     val out = f.create(new org.apache.hadoop.fs.Path(dir, RecordFile), true)
     try out.write(mapper.writeValueAsBytes(rec)) finally out.close()
     name
   }
 
-  private[graft] sealed trait Claim
-  private[graft] case object Won extends Claim
+  sealed trait Claim
+  case object Won extends Claim
   /** Lost with the stage directory intact — retry the next number. */
-  private[graft] case object Lost extends Claim
+  case object Lost extends Claim
   /** Lost AND the stage directory was consumed by a degenerate rename
     * (see [[claimEpoch]]) — the caller must re-stage before retrying. */
-  private[graft] case object LostConsumed extends Claim
+  case object LostConsumed extends Claim
 
   /** CAS: rename the staged directory to `epoch=$version` WITHOUT
     * overwrite. `FileContext.rename(…, Rename.NONE)` refuses an
@@ -331,7 +311,7 @@ object VersionedTable {
     * degenerate-rename loser — our stage was copied INSIDE the
     * winner's epoch as a hidden subdirectory (invisible to readers,
     * but garbage), so delete it and report [[LostConsumed]]. */
-  private[graft] def verifyClaim(spark: SparkSession, root: String,
+  def verifyClaim(spark: SparkSession, root: String,
                                  version: Long, stageName: String): Claim = {
     val f = fs(spark, root)
     val dst = new org.apache.hadoop.fs.Path(root, s"epoch=$version")
@@ -395,125 +375,16 @@ object VersionedTable {
     }
   }
 
-  /** The table's stream replay marker — the id of the micro-batch that
+  /** The log's stream replay marker — the id of the micro-batch that
     * produced the current epoch, carried forward by every later
     * read-modify-write commit; -1 when none (never streamed, or reset
-    * by a blind full replace). Spark's foreachBatch RE-DELIVERS the
-    * last micro-batch after a restart; without the marker a fold-style
-    * sink (incrementalAggStream, topKStream) would double-apply it.
-    * One record read: the carry-forward puts the maximum in the
-    * newest epoch. */
+    * by a blind write). Spark's foreachBatch RE-DELIVERS the last
+    * micro-batch after a restart; without the marker a batch-stamped
+    * manifest commit would apply it twice. One record read: the
+    * carry-forward puts the maximum in the newest epoch. */
   def lastAppliedBatch(spark: SparkSession, root: String): Long = {
     val v = latestVersion(spark, root)
     if (v < 0) -1L else record(spark, root, v).batch
-  }
-
-  /** [[write]] stamped with the producing batch id — and a no-op
-    * (None) when that id was already applied, which is exactly the
-    * foreachBatch replay case. Ids must be monotone per table (Spark's
-    * streaming epochIds are). Returns the committed version, or None
-    * on a detected replay.
-    *
-    * The replay check runs INSIDE the CAS loop, against each attempt's
-    * freshly resolved base: a single check before a blind commit would
-    * be a TOCTOU — a zombie driver racing its restarted successor (the
-    * exact redelivery case the marker exists for) could have BOTH
-    * writers pass the pre-check, and the CAS loser's retry would
-    * recommit the batch on top of the winner's epoch, double-applying
-    * it. Losing the claim therefore re-reads the marker before every
-    * retry. */
-  def writeBatch(df: DataFrame, root: String, batchId: Long): Option[Long] = {
-    val spark = df.sparkSession
-    if (batchId <= lastAppliedBatch(spark, root)) return None
-    // stage ONCE; the claim loop walks version numbers like
-    // [[writeKeyed]] (an append always succeeds under contention —
-    // re-staging the whole batch per lost claim, or capping attempts,
-    // would regress both). The marker re-check happens AFTER `next`
-    // was resolved each iteration: a same-batch twin either stamped
-    // the marker at a version this check reads (→ None), or claims
-    // `next` first (→ our claim loses, the next iteration re-checks)
-    // — the TOCTOU window of a check-then-blind-claim is closed.
-    var claim = stageEpoch(df, root, NoMeta, batchId)
-    var next = latestVersion(spark, root) + 1
-    while (true) {
-      if (batchId <= lastAppliedBatch(spark, root)) {
-        fs(spark, root).delete(new org.apache.hadoop.fs.Path(root, claim),
-          true): Unit
-        return None
-      }
-      claimEpoch(spark, root, claim, next) match {
-        case Won =>
-          publish(spark, root, next, df.schema, claim): Unit
-          return Some(next)
-        case Lost         => next += 1
-        case LostConsumed =>
-          claim = stageEpoch(df, root, NoMeta, batchId)
-          next += 1
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** CHANGE FEED between two committed epochs — the Delta
-    * `table_changes` analog, derived rather than logged: one
-    * Debezium-shaped row per key whose content differs between
-    * `fromVersion` and `toVersion` — `op` = 'I' (key absent before),
-    * 'D' (absent after), 'U' (present in both, any payload column
-    * differs, NULL-safely) — carrying the AFTER payload for I/U and
-    * the BEFORE payload for D, plus `seq` = `toVersion` (monotone per
-    * key across successive feeds, so feeds pipe straight into
-    * [[ManifestTable.applyCdc]] on a downstream table; the round trip
-    * `applyCdc(changesBetween(v0, v1))` onto the v0 state rebuilds v1
-    * exactly — spec-pinned). This is what the streaming change feed
-    * ([[graft.sources.v2.GraftChangeFeedTable]]) serves per batch over
-    * an epoch-directory table.
-    *
-    * Contract: the table is KEYED at both epochs (one row per key;
-    * duplicate keys would fan out the join), and the schema did not
-    * evolve between them.
-    * Scale shape: two epoch scans + ONE key-partitioned full-outer
-    * join; payloads compare as structs (no per-column join churn),
-    * unchanged keys drop before anything else happens. */
-  def changesBetween(spark: SparkSession, root: String,
-                     fromVersion: Long, toVersion: Long,
-                     keyCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "changesBetween requires key columns")
-    diffKeyed(readVersion(spark, root, fromVersion),
-      readVersion(spark, root, toVersion), keyCols, fromVersion, toVersion)
-  }
-
-  /** The derived-change-feed diff itself, shared with
-    * [[ManifestTable.changesBetween]] (identical semantics over a
-    * different epoch representation). */
-  private[sinks] def diffKeyed(a: DataFrame, b: DataFrame,
-                               keyCols: Seq[String],
-                               fromVersion: Long, toVersion: Long): DataFrame = {
-    require(a.columns.sorted.sameElements(b.columns.sorted),
-      s"schema evolved between epoch $fromVersion and $toVersion — " +
-        "diff the common columns explicitly")
-    val payload = b.columns.filterNot(keyCols.contains).toSeq
-    require(payload.nonEmpty, "table has no payload columns beyond the keys")
-    def sel(df: DataFrame, as: String) =
-      df.select(keyCols.map(col) :+
-        struct(payload.map(col): _*).as(as): _*)
-    val j = sel(a, "_cf_a").join(sel(b, "_cf_b"), keyCols, "full_outer")
-    val changed = j.filter(col("_cf_a").isNull || col("_cf_b").isNull ||
-      !(col("_cf_a") <=> col("_cf_b")))
-    val after = coalesce(col("_cf_b"), col("_cf_a"))
-    changed.select(
-      keyCols.map(col) ++
-        payload.map(p => after.getField(p).as(p)) :+
-        when(col("_cf_a").isNull, lit("I"))
-          .when(col("_cf_b").isNull, lit("D"))
-          .otherwise(lit("U")).as("op") :+
-        lit(toVersion).as("seq"): _*)
-  }
-
-  /** Read the current epoch (pointer-resolved). */
-  def read(spark: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(spark, root)
-    require(v >= 0, s"versioned table at $root has no committed epoch")
-    readVersion(spark, root, v)
   }
 
   /** Publish a just-claimed epoch: bump the pointer and prime its
@@ -537,7 +408,7 @@ object VersionedTable {
 
   /** Every field (and nested struct/array/map element) nullable — what
     * a file-source read reports regardless of writer nullability. */
-  private[sinks] def allNullable(
+  def allNullable(
       s: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -554,19 +425,6 @@ object VersionedTable {
     nt(s).asInstanceOf[StructType]
   }
 
-  /** As-of read of a retained epoch. Its parquet schema is inferred
-    * ONCE per [[EpochKey]] (footer inference was the single largest job
-    * population in the table-format query family — 118 one-task jobs
-    * in one MV-refresh query). */
-  def readVersion(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val key = record(spark, root, version).key
-    EpochCache.readParquet(spark, key.dir, key)
-  }
-
-  /** Raw commit stamp of one epoch (ms). */
-  def commitTimestamp(spark: SparkSession, root: String, version: Long): Long =
-    record(spark, root, version).tsMs
-
   /** (version, effective commit ts) for every retained epoch, in
     * version order. Effective = RUNNING MAX of the raw stamps: racing
     * writers stamp before their CAS claim, so raw stamps can be
@@ -577,7 +435,7 @@ object VersionedTable {
   def commitTimestamps(spark: SparkSession, root: String): Seq[(Long, Long)] = {
     var running = Long.MinValue
     versions(spark, root).map { v =>
-      running = math.max(running, commitTimestamp(spark, root, v))
+      running = math.max(running, record(spark, root, v).tsMs)
       v -> running
     }
   }
@@ -597,11 +455,10 @@ object VersionedTable {
       s"no retained epoch of $root is as old as $tsMs (oldest retained: " +
         s"v${stamped.head._1} @ ${stamped.head._2}) — the epoch current " +
         "at that time was vacuumed, or the table did not exist yet" +
-        CrashedSweepHint)
+        ManifestTable.CrashedSweepHint)
     eligible.last._1
   }
 
-  /** All committed-or-orphaned epoch numbers present on disk. */
   /** The retained-version CHECKPOINT — what bounds [[versions]] on a
     * long-lived table: `_VCKPT` records the versions retained at its
     * write time plus the version it was written AT; everything
@@ -618,17 +475,6 @@ object VersionedTable {
     * exact listing. Concurrent vacuums of one table are operator
     * error (each would re-record the other's victims). */
   private val Ckpt = "_VCKPT"
-
-  /** Appended to retention refusals that consult [[versions]]: the
-    * checkpoint's conservative under-report after a crashed sweep is
-    * RECONCILABLE (vacuum always re-reads the authoritative listing),
-    * and "was vacuumed" alone sent operators to re-create/re-bootstrap
-    * when a re-run would have restored the surviving version. */
-  val CrashedSweepHint: String =
-    " (if a recent vacuum crashed mid-sweep the version may still " +
-      "exist on disk while the retained-version checkpoint " +
-      "under-reports it — re-run vacuum on the table to reconcile, " +
-      "then retry)"
 
   private def writeCkpt(spark: SparkSession, root: String,
                         at: Long, kept: Seq[Long]): Unit = {

@@ -48,12 +48,10 @@ object FileManifest {
     val it = fs.listFiles(p, true)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     // hidden-ness is decided on every path component BELOW the landing
-    // dir, not just the leaf name: a crashed writer's `.stage-*`
-    // directory copied inside a committed epoch (the degenerate-rename
-    // artifact [[graft.sinks.VersionedTable]] documents) contains
-    // part-*.parquet files a leaf-only filter would list — and
-    // spark.read.parquet correctly ignores — so listing them here
-    // would serve duplicate rows to e.g. the streaming bootstrap.
+    // dir, not just the leaf name: a hidden directory (a crashed
+    // writer's `.stage-*`, a `_temporary`) can hold part-*.parquet files
+    // a leaf-only filter would list — and spark.read.parquet correctly
+    // ignores — so listing them here would serve duplicate rows.
     val baseDepth = p.toUri.getPath.split('/').count(_.nonEmpty)
     def hiddenComponent(f: org.apache.hadoop.fs.Path): Boolean =
       f.toUri.getPath.split('/').filter(_.nonEmpty).drop(baseDepth)

@@ -47,7 +47,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * [[GraftTable]] — never a blind directory write.
   *
   * DROP TABLE removes the DESCRIPTOR only (external-style semantics —
-  * epochs/manifests keep their own retention via vacuum); managed
+  * manifests keep their own retention via vacuum); managed
   * tables created without LOCATION live under the warehouse and can
   * be purged by deleting that directory.
   */
@@ -290,9 +290,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val location = Option(properties.get(TableCatalog.PROP_LOCATION))
       .getOrElse((s"$warehouse/tables" +: ident.namespace.toSeq :+
         ident.name).mkString("/"))
-    val adopting =
-      graft.sinks.ManifestTable.exists(spark, location) ||
-        graft.sinks.VersionedTable.latestVersion(spark, location) >= 0
+    val adopting = graft.sinks.ManifestTable.exists(spark, location)
+    if (!adopting) graft.sinks.ManifestTable.refuseEpochLog(spark, location)
     require(bucket.isEmpty || !adopting,
       "bucketBy declares a PHYSICAL layout — it can only be set when " +
         "creating a fresh table, not when adopting an existing LOCATION")
@@ -332,9 +331,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val location = Option(info.properties.get(TableCatalog.PROP_LOCATION))
       .getOrElse((s"$warehouse/tables" +: ident.namespace.toSeq :+
         ident.name).mkString("/"))
-    val preExisting =
-      graft.sinks.ManifestTable.exists(spark, location) ||
-        graft.sinks.VersionedTable.latestVersion(spark, location) >= 0
+    val preExisting = graft.sinks.ManifestTable.exists(spark, location)
     val t = createTable(ident, info.schema, info.partitions,
       info.properties)
     if (info.constraints().isEmpty) t
@@ -647,15 +644,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // an already-committed sibling ADD/DROP/RENAME
     if (widens.nonEmpty) {
       val loc = props.getProperty("location")
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        "ALTER COLUMN TYPE is supported on manifest-format tables only")
       graft.sinks.ManifestTable.validateWidens(spark, loc, widens.toSeq)
     }
     if (adds.nonEmpty || drops.nonEmpty) {
       val loc = props.getProperty("location")
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        "ADD/DROP COLUMN is supported on manifest-format tables only " +
-          "(epoch tables evolve through merge(evolveSchema = true))")
       // dropping a column the DECLARED MAINTENANCE rides on would
       // break every later tick (optimizeIncremental/buildBloom on a
       // schema without it) — refuse until the policy is re-declared
@@ -679,8 +671,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     if (renames.nonEmpty) {
       val loc = props.getProperty("location")
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        "RENAME COLUMN is supported on manifest-format tables only")
       renames.foreach { case (from, to) =>
         // metadata-only via the name mapping — data files, manifest
         // stat columns, and bloom bits keep the frozen
@@ -697,8 +687,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     if (nestedAdds.nonEmpty || nestedDrops.nonEmpty) {
       val loc = props.getProperty("location")
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        "nested ADD/DROP COLUMN is supported on manifest-format tables only")
       // one commit PER PARENT STRUCT (its adds and drops together) —
       // the same whole-set-validated, single-commit shape as the
       // top-level alterColumns
@@ -713,8 +701,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     if (nestedRenames.nonEmpty) {
       val loc = props.getProperty("location")
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        "nested RENAME COLUMN is supported on manifest-format tables only")
       nestedRenames.foreach { case (path, to) =>
         graft.sinks.ManifestTable.renameColumnPath(spark, loc,
           path, to): Unit
@@ -730,16 +716,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     if (setDefaults.nonEmpty) {
       val loc = props.getProperty("location")
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        "SET/DROP DEFAULT is supported on manifest-format tables only")
       setDefaults.foreach { case (name, dflt) =>
         graft.sinks.ManifestTable.setColumnDefault(spark, loc, name,
           dflt): Unit }
     }
     if (addCons.nonEmpty || dropCons.nonEmpty) {
       val loc = props.getProperty("location")
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        "ADD/DROP CONSTRAINT is supported on manifest-format tables only")
       addCons.foreach { case (n, e) =>
         graft.sinks.ManifestTable.addConstraint(spark, loc, n, e): Unit }
       dropCons.foreach { case (n, ifExists) =>
@@ -773,8 +755,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val parts = tableName.split('.')
     require(parts.length >= 2, s"expected namespace.table, got $tableName")
     val ident = Identifier.of(parts.init, parts.last)
-    readDef(ident).map(_.getProperty("location"))
+    val loc = readDef(ident).map(_.getProperty("location"))
       .getOrElse(throw new NoSuchTableException(ident))
+    require(graft.sinks.ManifestTable.exists(spark, loc),
+      s"$tableName is registered at $loc, which holds no table")
+    loc
   }
 
   // --------------------------------------------------------- procedures
@@ -807,8 +792,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * Returns the clone's location. */
   private[v2] def cloneRegistered(srcName: String, dstName: String): String = {
     val srcLoc = locationOf(srcName)
-    require(graft.sinks.ManifestTable.exists(spark, srcLoc),
-      s"clone_table is for manifest-format tables; $srcName is not one")
     val parts = dstName.split('.')
     require(parts.length >= 2, s"expected namespace.table, got $dstName")
     val dstIdent = Identifier.of(parts.init, parts.last)
@@ -850,11 +833,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                                        Map.empty)
       : String = {
     val baseLoc = locationOf(baseName)
-    require(graft.sinks.ManifestTable.exists(spark, baseLoc),
-      s"create_mv is for manifest-format tables; $baseName is not one")
     dims.foreach(d =>
       require(graft.sinks.ManifestTable.exists(spark, d.root),
-        s"create_mv dim ${d.name} is not a manifest-format table"))
+        s"create_mv dim ${d.name} has no table at ${d.root}"))
     val parts = mvName.split('.')
     require(parts.length >= 2, s"expected namespace.table, got $mvName")
     val mvIdent = Identifier.of(parts.init, parts.last)

@@ -11,20 +11,19 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** STREAMING change-feed source over graft tables — the Delta-style
+/** STREAMING change-feed source over manifest tables — the Delta-style
   * `spark.readStream.format("graft")`:
   *
   * {{{
   *   spark.readStream.format("graft")
   *     .option("keyCols", "doc_id")      // the change-feed switch
-  *     .load(root)                       // epoch OR manifest table
+  *     .load(root)
   * }}}
   *
   * Offsets ARE table versions (plus a file cursor while the bootstrap
   * drains — [[GraftVersionOffset]]). Each micro-batch (v₀, v₁]
   * delivers the derived Debezium-shaped diff
-  * ([[graft.sinks.VersionedTable.changesBetween]] /
-  * [[graft.sinks.ManifestTable.changesBetween]]): key columns +
+  * ([[graft.sinks.ManifestTable.changesBetween]]): key columns +
   * payload + `op` (I/U/D) + `seq` = v₁. The FIRST batch(es) bootstrap
   * — the whole table at the stream's starting version as 'I' rows.
   * This is the engine's one change consumer: Structured Streaming's
@@ -49,8 +48,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     is the admission control: a 100 TB bootstrap arrives as
   *     bounded file batches, each offset-committed, restartable
   *     mid-drain.
-  *   - CATCH-UP: each batch costs one keyed diff; on a manifest table
-  *     the diff scans only the files CHANGED between the two versions
+  *   - CATCH-UP: each batch costs one keyed diff, which scans only the
+  *     files CHANGED between the two versions
   *     ([[graft.sinks.ManifestTable.changedFileSets]] — cost ∝
   *     changed files, never ∝ table), and `maxVersionsPerTrigger`
   *     bounds how many versions one batch spans. The diff delta
@@ -106,8 +105,7 @@ object GraftChangeFeedTable {
   * cost ∝ appended data. A commit that removed or changed rows
   * (row-level op, keyed upsert, compaction) fails the stream fast
   * with the version named — `skipChangeCommits = true` skips such
-  * commits instead. Manifest tables only (epoch tables rewrite whole
-  * epochs). Same offsets, admission control, and replay idempotence
+  * commits instead. Same offsets, admission control, and replay idempotence
   * as the change feed ([[GraftChangeFeedStream]] — this is the same
   * stream in append mode). */
 final class GraftAppendStreamTable(spark: SparkSession, root: String,
@@ -238,30 +236,14 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(currentVersion)
 
-  private val isManifest = graft.sinks.ManifestTable.exists(spark, root)
-
-  require(!appendMode || isManifest,
-    s"append-only streaming needs the manifest format at $root — " +
-      "epoch-directory tables rewrite whole epochs (their documented " +
-      "append grain), so per-version added-file serving has no meaning " +
-      "there")
-
   private def currentVersion: Long =
-    if (isManifest) graft.sinks.ManifestTable.latestVersion(spark, root)
-    else graft.sinks.VersionedTable.latestVersion(spark, root)
+    graft.sinks.ManifestTable.latestVersion(spark, root)
 
   private def retainedVersions: Seq[Long] =
-    if (isManifest) graft.sinks.ManifestTable.versions(spark, root)
-    else graft.sinks.VersionedTable.versions(spark, root)
+    graft.sinks.ManifestTable.versions(spark, root)
 
   private def oldestRetained: Long =
     retainedVersions.headOption.getOrElse(currentVersion)
-
-  private def changes(from: Long, to: Long): DataFrame =
-    if (isManifest)
-      graft.sinks.ManifestTable.changesBetween(spark, root, from, to, keyCols)
-    else
-      graft.sinks.VersionedTable.changesBetween(spark, root, from, to, keyCols)
 
   /** The table columns of the feed (feed schema minus op/seq; in
     * append mode the feed IS the table) — the read schema of a
@@ -271,30 +253,19 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
     else StructType(feedSchema.fields.dropRight(2))
 
   /** Path-sorted (path, size, dv sidecar, dv rows) of one version's
-    * data files — the bootstrap's deterministic file order, from
-    * committed metadata (manifest rows) or one listing (epoch dir).
-    * Versions are immutable, so the memo is sound across the stream's
-    * lifetime. */
+    * EFFECTIVE data files — the bootstrap's deterministic file order,
+    * from committed metadata; pending equality deletes resolve into
+    * vectors (cached per version), so bootstrap slices serve live rows
+    * only. Versions are immutable, so the memo is sound across the
+    * stream's lifetime. */
   private val bootFilesMemo = scala.collection.concurrent.TrieMap
     .empty[Long, IndexedSeq[(String, Long, Option[String], Long)]]
 
   private def bootstrapFiles(v: Long)
       : IndexedSeq[(String, Long, Option[String], Long)] =
-    bootFilesMemo.getOrElseUpdate(v, {
-      val rows =
-        if (isManifest)
-          // EFFECTIVE files: pending equality deletes resolve into
-          // vectors (cached per version) so bootstrap slices serve
-          // live rows only
-          graft.sinks.ManifestTable.effectiveFiles(spark, root, v)
-            .toArray
-        else
-          graft.sources.FileManifest.listFiles(spark, s"$root/epoch=$v")
-            .select("path", "size").collect()
-            .map(r => (r.getString(0), r.getLong(1),
-              None: Option[String], 0L))
-      rows.sortBy(_._1).toIndexedSeq
-    })
+    bootFilesMemo.getOrElseUpdate(v,
+      graft.sinks.ManifestTable.effectiveFiles(spark, root, v)
+        .sortBy(_._1).toIndexedSeq)
 
   /** `startingVersion` / `startingTimestamp` — the Delta streaming
     * options that SKIP the snapshot bootstrap: the stream begins at
@@ -316,9 +287,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
       case s => s.toLong
     }.orElse(startingTimestamp.map { s =>
       val tsMs = GraftTimeTravel.parseTs(s)
-      val stamped = graft.sinks.VersionedTable.commitTimestamps(spark,
-        if (isManifest) graft.sinks.ManifestTable.manifestsRoot(root)
-        else root)
+      val stamped = graft.sinks.ManifestTable.commitTimestamps(spark, root)
       stamped.find(_._2 >= tsMs).map(_._1).getOrElse(
         throw new IllegalArgumentException(
           s"startingTimestamp $s is after the latest commit of $root " +
@@ -345,7 +314,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
         s"startingVersion $v of $root needs version ${v - 1L} retained " +
           "(the diff reads its state) but it was vacuumed — " +
           "re-bootstrap without the option, or start later" +
-          graft.sinks.VersionedTable.CrashedSweepHint)
+          graft.sinks.ManifestTable.CrashedSweepHint)
     }
     sv
   }
@@ -409,7 +378,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
   /** The (from, to] diff, column order pinned to the feed schema —
     * catch-up batches only; the bootstrap never comes through here. */
   private def batchDf(from: Long, to: Long): DataFrame =
-    changes(from, to)
+    graft.sinks.ManifestTable.changesBetween(spark, root, from, to, keyCols)
       .select(feedSchema.fieldNames.map(col).toIndexedSeq: _*)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
@@ -437,10 +406,8 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
   /** Serve files [fromIdx, toIdx) of version `v` directly as 'I' rows
     * — the snapshot's own immutable parquet through the delegated
     * vectorized reader, constants appended per row, ZERO copies and
-    * no scratch directory. Manifest tables plan the slice through
-    * [[GraftManifestFileIndex]] (no filesystem calls); epoch tables
-    * hand the slice's leaf files to an InMemoryFileIndex (|slice|
-    * stats, bounded by the admission control). */
+    * no scratch directory. The slice plans through
+    * [[GraftManifestFileIndex]] (no filesystem calls). */
   private def planBootstrapSlice(v: Long, fromIdx: Long,
                                  toIdx: Long): Array[InputPartition] = {
     val slice = bootstrapFiles(v).slice(fromIdx.toInt, toIdx.toInt)
@@ -471,17 +438,10 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
         // a drop + re-add it finds the DROPPED column's stale bytes —
         // the exact resurrection the mapping exists to prevent.
         // Fields whose physical name v's files lack read NULL.
-        val readSchema =
-          if (isManifest) graft.sinks.ManifestTable.toPhysical(dataSchema)
-          else dataSchema
-        val index =
-          if (isManifest) {
-            val ts = graft.sinks.ManifestTable.recordAt(spark, root, v).tsMs
-            new GraftManifestFileIndex(spark, root, pairs, ts,
-              readSchema, None)
-          } else
-            new InMemoryFileIndex(spark, pairs.map(f => new Path(f._1)),
-              Map.empty, Some(dataSchema))
+        val readSchema = graft.sinks.ManifestTable.toPhysical(dataSchema)
+        val index = new GraftManifestFileIndex(spark, root, pairs,
+          graft.sinks.ManifestTable.recordAt(spark, root, v).tsMs,
+          readSchema, None)
         val batch = ParquetScanBuilder(spark, index, readSchema, readSchema,
           CaseInsensitiveStringMap.empty()).build().toBatch
         val factory = batch.createReaderFactory()
@@ -583,7 +543,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
     // surface as a raw parquet conversion error there); a restart
     // re-infers the head schema and the set-operation type widening
     // inside the diff serves the narrow history upcast
-    if (isManifest) (from + 1L to to).foreach(checkReadCompatible)
+    (from + 1L to to).foreach(checkReadCompatible)
     // materialize the delta under the stream's checkpoint scratch —
     // ONCE per range: Spark may re-plan the same batch (retries,
     // restarts) while earlier-planned tasks still hold the files, so
@@ -599,7 +559,7 @@ final class GraftChangeFeedStream(spark: SparkSession, root: String,
       require(retainedVersions.contains(from),
         s"change-feed stream lagged past retention: version $from of " +
           s"$root was vacuumed — restart with a fresh checkpoint to " +
-          "re-bootstrap" + graft.sinks.VersionedTable.CrashedSweepHint)
+          "re-bootstrap" + graft.sinks.ManifestTable.CrashedSweepHint)
       if (f.exists(dirPath)) f.delete(dirPath, true): Unit
       batchDf(from, to).write.parquet(dir)
     }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.PartitionDirectory
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
@@ -16,23 +16,23 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.plans.StatsPruneRule
 
-/** DataSourceV2 table format over [[graft.sinks.VersionedTable]] —
-  * the epoch table as a FIRST-CLASS Spark source:
+/** DataSourceV2 source over [[graft.sinks.ManifestTable]] — the table
+  * format as a FIRST-CLASS Spark source:
   *
   * {{{
-  *   spark.read.format("graft").load(root)                        // current epoch
+  *   spark.read.format("graft").load(root)                          // current version
   *   spark.read.format("graft").option("versionAsOf", 3).load(root) // time travel
   * }}}
   *
-  * Three properties fall out of the epoch contract:
+  * Three properties fall out of the manifest contract:
   *
   *   - SNAPSHOT ISOLATION: the version is resolved ONCE, when the
-  *     table object is created; the scan reads that epoch's immutable
+  *     table object is created; the scan reads that version's immutable
   *     files no matter how many commits land afterwards — a reader
   *     can never observe a half-applied rewrite or a moved pointer.
-  *   - TIME TRAVEL: `versionAsOf` reads any retained epoch (the
-  *     `readVersion` API surfaced as reader syntax).
-  *   - DATA SKIPPING INSIDE THE SOURCE: a manifest table's file index
+  *   - TIME TRAVEL: `versionAsOf` / `timestampAsOf` read any retained
+  *     version (the `readVersion` API surfaced as reader syntax).
+  *   - DATA SKIPPING INSIDE THE SOURCE: the file index
   *     receives the pushed data filters (the DSv2 `listFiles`
   *     contract) and drops files the manifest's envelopes and bloom
   *     bits PROVE unmatching — the same proof engine as the planner
@@ -43,10 +43,9 @@ import graft.plans.StatsPruneRule
   *     built-in parquet scan this source delegates to — the engine's
   *     own strengths are reused, not reimplemented.
   *
-  * Writes bridge into each format's OWN commit protocol (see
-  * [[GraftTable.newWriteBuilder]]): row appends need the manifest
-  * format; an epoch-directory table takes only whole-table
-  * overwrites.
+  * Writes bridge into the manifest commit protocol (see
+  * [[GraftTable.newWriteBuilder]]). A root holding an epoch-directory
+  * log instead of a table is refused, naming `ManifestTable`.
   */
 class GraftTableProvider extends TableProvider with DataSourceRegister
   with org.apache.spark.sql.sources.StreamSinkProvider {
@@ -118,7 +117,7 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
     ThreadLocal.withInitial(() => None)
 
   private def resolve(options: CaseInsensitiveStringMap)
-      : (SparkSession, String, Long, Boolean) = {
+      : (SparkSession, String, Long) = {
     val spark = SparkSession.active
     val root0 = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException(
@@ -146,27 +145,20 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
               "version number, a tag, or a branch name")
         }
     }
-    // (resolution continues below; whether the caller PINNED the
-    // version explicitly is what decides the table's write surface —
-    // see [[timeTraveled]])
-    // a manifest table ([[graft.sinks.ManifestTable]]) resolves its
-    // version through its _manifests VersionedTable — epoch-directory
-    // tables resolve at the root; one reader syntax for both layouts
-    val isManifest = graft.sinks.ManifestTable.exists(spark, root)
-    val vtRoot =
-      if (isManifest) graft.sinks.ManifestTable.manifestsRoot(root) else root
+    // (whether the caller PINNED the version explicitly is what decides
+    // the table's write surface — see [[timeTraveled]])
     val version = pinnedByRef
       .orElse(Option(options.get("versionAsOf"))
         .filter(_ => namedRef.isEmpty).map(_.toLong))
-      .orElse(GraftTimeTravel.resolveTimestampAsOf(spark, vtRoot, options))
+      .orElse(GraftTimeTravel.resolveTimestampAsOf(spark, root, options))
       .orElse(resolvedAt.get().collect { case (r, v) if r == root => v })
-      .getOrElse(graft.sinks.VersionedTable.latestVersion(spark, vtRoot))
-    require(version >= 0, s"versioned table at $root has no committed epoch")
-    require(graft.sinks.VersionedTable.versions(spark, vtRoot).contains(version),
-      s"versioned table at $root has no epoch $version " +
+      .getOrElse(graft.sinks.ManifestTable.latestVersion(spark, root))
+    require(version >= 0, s"manifest table at $root has no committed version")
+    require(graft.sinks.ManifestTable.versions(spark, root).contains(version),
+      s"manifest table at $root has no version $version " +
         "(vacuumed or never committed)" +
-        graft.sinks.VersionedTable.CrashedSweepHint)
-    (spark, root, version, isManifest)
+        graft.sinks.ManifestTable.CrashedSweepHint)
+    (spark, root, version)
   }
 
   /** The `keyCols` option switches the source into CHANGE-FEED mode
@@ -178,20 +170,21 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
 
-  /** Whether ANY table (either layout) is committed at the path. A
-    * missing table resolves to a capability-less PLACEHOLDER instead
-    * of failing resolution: `writeStream.format("graft")` must be
-    * able to target a not-yet-created table (the sink creates it on
-    * the first batch), and DataStreamWriter resolves the DSv2 table
-    * BEFORE it can fall back to the V1 sink. Reads through the
-    * placeholder still fail with a clear message, at scan time. */
+  /** Whether no table is committed at the path. A missing table
+    * resolves to a capability-less PLACEHOLDER instead of failing
+    * resolution: `writeStream.format("graft")` must be able to target a
+    * not-yet-created table (the sink creates it on the first batch), and
+    * DataStreamWriter resolves the DSv2 table BEFORE it can fall back to
+    * the V1 sink. Reads through the placeholder still fail with a clear
+    * message, at scan time. An epoch-directory log is refused here. */
   private def tableMissing(options: CaseInsensitiveStringMap): Boolean = {
     val spark = SparkSession.active
     Option(options.get("path")).exists { root =>
-      options.get("versionAsOf") == null &&
-        options.get("timestampAsOf") == null &&
-        !graft.sinks.ManifestTable.exists(spark, root) &&
-        graft.sinks.VersionedTable.latestVersion(spark, root) < 0
+      !graft.sinks.ManifestTable.exists(spark, root) && {
+        graft.sinks.ManifestTable.refuseEpochLog(spark, root)
+        options.get("versionAsOf") == null &&
+          options.get("timestampAsOf") == null
+      }
     }
   }
 
@@ -201,11 +194,9 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
     // root to an outdated snapshot
     resolvedAt.remove()
     if (tableMissing(options)) return new StructType()
-    val (spark, root, v, isManifest) = resolve(options)
+    val (spark, root, v) = resolve(options)
     resolvedAt.set(Some((root, v)))
-    val dataSchema =
-      if (isManifest) graft.sinks.ManifestTable.tableSchema(spark, root, v)
-      else spark.read.parquet(s"$root/epoch=$v").schema
+    val dataSchema = graft.sinks.ManifestTable.tableSchema(spark, root, v)
     if (feedKeys(options).isEmpty) dataSchema
     else GraftChangeFeedTable.feedSchema(dataSchema)
   }
@@ -223,7 +214,7 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
     val options = new CaseInsensitiveStringMap(properties)
     if (tableMissing(options))
       return new GraftMissingTable(options.get("path"))
-    val (spark, root, v, isManifest) = resolve(options)
+    val (spark, root, v) = resolve(options)
     resolvedAt.remove()
     val keys = feedKeys(options)
     // streaming start options (Delta's startingVersion /
@@ -262,7 +253,7 @@ class GraftTableProvider extends TableProvider with DataSourceRegister
           (k == "mergemode" && v == "equality-delete"),
         s"$k must be merge-on-read or copy-on-write (mergeMode also " +
           s"accepts equality-delete), got $v") }
-      new GraftTable(spark, root, v, schema, isManifest,
+      new GraftTable(spark, root, v, schema,
         readOnly = timeTraveled(options), writeModes = modes)
     } else new GraftChangeFeedTable(spark, root, keys, schema,
       startingVersion = startV, startingTimestamp = startT)
@@ -326,14 +317,8 @@ private[v2] final class GraftStreamSink(root: String, statsCols: Seq[String],
               graft.sinks.ManifestTable.latestVersion(spark, root)))
         }
       }
-    if (!graft.sinks.ManifestTable.exists(spark, root)) {
-      statsCols.foreach(c => require(data.columns.contains(c),
-        s"statsCols column $c is not a stream column"))
-      graft.sinks.ManifestTable.create(
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), data.schema),
-        root, statsCols): Unit
-    }
+    graft.sinks.ManifestTable.createIfMissing(spark, root, data.schema,
+      statsCols)
     if (complete) {
       // Complete re-delivers the WHOLE result each trigger; a replayed
       // batch rewrites identical content — idempotent by value
@@ -375,9 +360,9 @@ private[v2] final class GraftStreamSink(root: String, statsCols: Seq[String],
 }
 
 /** `timestampAsOf` reader-option support: accepts epoch milliseconds
-  * or an ISO-8601 instant and resolves to the latest retained epoch
+  * or an ISO-8601 instant and resolves to the latest retained version
   * whose (monotone-normalized) commit stamp is <= t — see
-  * [[graft.sinks.VersionedTable.versionAtTimestamp]] for the contract
+  * [[graft.sinks.ManifestTable.versionAtTimestamp]] for the contract
   * (fail-fast on vacuumed history, running-max stamp normalization). */
 private[graft] object GraftTimeTravel {
 
@@ -393,18 +378,16 @@ private[graft] object GraftTimeTravel {
     Option(options.get("timestampAsOf")).map { s =>
       require(options.get("versionAsOf") == null,
         "give versionAsOf or timestampAsOf, not both")
-      graft.sinks.VersionedTable.versionAtTimestamp(spark, root, parseTs(s))
+      graft.sinks.ManifestTable.versionAtTimestamp(spark, root, parseTs(s))
     }
 }
 
-/** One resolved version of a versioned/manifest table (immutable
-  * snapshot): epoch-directory tables list `epoch=N`; manifest tables
-  * list exactly the resolved manifest's files and prune against that
+/** One resolved version of a manifest table (immutable snapshot): it
+  * lists exactly the resolved manifest's files and prunes against that
   * manifest's OWN envelopes (the stats are structurally in sync with
   * the file list — no coverage dance needed). */
 final class GraftTable(spark: SparkSession, root: String, version: Long,
                        dataSchema: StructType,
-                       isManifest: Boolean = false,
                        readOnly: Boolean = false,
                        writeModes: Map[String, String] = Map.empty)
   extends Table with SupportsRead
@@ -414,25 +397,22 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
 
   override def schema(): StructType = dataSchema
 
-  /** The table root and manifest-ness — what the write-side
-    * auto-merge rule ([[graft.plans.GraftSchemaMergeRule]]) needs to
-    * evolve the table and rebuild a fresh handle. */
+  /** The table root and writability — what the write-side auto-merge
+    * rule ([[graft.plans.GraftSchemaMergeRule]]) needs to evolve the
+    * table and rebuild a fresh handle. */
   private[graft] def tableRoot: String = root
-  private[graft] def manifestBacked: Boolean = isManifest && !readOnly
+  private[graft] def writable: Boolean = !readOnly
 
   /** This handle reporting a DIFFERENT schema — the auto-merge rule
     * resolves an evolving append against the UNCOMMITTED merged
     * schema so the evolution commits inside the write itself
     * (compensated on a failed landing), never during analysis. */
   private[graft] def withDataSchema(s: StructType): GraftTable =
-    new GraftTable(spark, root, version, s, isManifest, readOnly,
-      writeModes)
+    new GraftTable(spark, root, version, s, readOnly, writeModes)
 
-  /** (root, resolved version) when this is a manifest-table snapshot —
-    * [[graft.plans.MetaAggRule]] answers whole-table aggregates from
-    * that manifest with zero data I/O. */
-  private[graft] def manifestInfo: Option[(String, Long)] =
-    if (isManifest) Some((root, version)) else None
+  /** (root, resolved version) — [[graft.plans.MetaAggRule]] answers
+    * whole-table aggregates from that manifest with zero data I/O. */
+  private[graft] def manifestInfo: (String, Long) = (root, version)
 
   /** The version's CHECK-constraint registry, reported through the
     * DSv2 surface: DESCRIBE shows them, and the analyzer's own
@@ -443,8 +423,7 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
     * and every later commit re-proves its own batch. */
   private lazy val constraintsCached
       : Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    if (!isManifest) Array.empty
-    else graft.sinks.ManifestTable.constraintsAt(spark, root, version)
+    graft.sinks.ManifestTable.constraintsAt(spark, root, version)
       .map { case (n, e) =>
         org.apache.spark.sql.connector.catalog.constraints.Constraint
           .check(n).predicateSql(e)
@@ -462,13 +441,11 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
       : Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] =
     constraintsCached
 
-  /** The manifest root when SQL row-level commands (MERGE INTO /
-    * UPDATE / DELETE — [[graft.plans.GraftRowLevelSqlRule]]) may
-    * rewrite through this handle: manifest-format only (epoch tables
-    * keep their documented full-copy Scala API), and never through a
-    * pinned snapshot. */
+  /** The table root when SQL row-level commands (MERGE INTO / UPDATE /
+    * DELETE — [[graft.plans.GraftRowLevelSqlRule]]) may rewrite through
+    * this handle: never through a pinned snapshot. */
   private[graft] def rowLevelRoot: Option[String] =
-    if (isManifest && !readOnly) Some(root) else None
+    if (!readOnly) Some(root) else None
 
   /** Declared row-level write modes (`deleteMode` / `updateMode` table
     * properties, Iceberg's write-mode ergonomics): 'merge-on-read'
@@ -494,7 +471,7 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
     * than the one this table's name claims. */
   override def capabilities(): java.util.Set[TableCapability] =
     if (readOnly) java.util.EnumSet.of(TableCapability.BATCH_READ)
-    else if (isManifest)
+    else
       // AUTOMATIC_SCHEMA_EVOLUTION is what lets the analyzer's own
       // `MERGE WITH SCHEMA EVOLUTION` rule route the source's new
       // columns through catalog.alterTable (the additive evolution
@@ -504,19 +481,12 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
         TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
         TableCapability.TRUNCATE,
         TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
-    else java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE)
 
-  /** Writes bridge through V1 (`InsertableRelation`) into the table
-    * formats' OWN commit protocols — an INSERT INTO / writeTo.append
-    * is a real CAS-committed version, never a blind directory write.
-    * Manifest tables append at file-list cost. Epoch tables have no
-    * row-level writes (every epoch is a full snapshot): an append
-    * REFUSES, naming the manifest format, the same way the change
-    * feed's append mode refuses them. `overwrite = true` (TRUNCATE)
-    * replaces content on either format — on an epoch table it commits
-    * the next epoch — and history stays time-travelable. */
+  /** Writes bridge through V1 (`InsertableRelation`) into the manifest
+    * commit protocol — an INSERT INTO / writeTo.append is a real
+    * CAS-committed version at file-list cost, never a blind directory
+    * write. `overwrite = true` (TRUNCATE) replaces content, and history
+    * stays time-travelable. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -548,19 +518,10 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
                 Option(info.options.get("mergeSchema")).map(_.toBoolean)
                   .getOrElse(spark.conf
                     .get("spark.graft.schema.autoMerge", "false").toBoolean)
-              if (isManifest) {
-                if (replace) graft.sinks.ManifestTable.overwrite(data, root)
-                else if (autoMerge)
-                  graft.sinks.ManifestTable.writeMergeSchema(data, root): Unit
-                else graft.sinks.ManifestTable.write(data, root): Unit
-              } else if (replace)
-                graft.sinks.VersionedTable.write(data, root): Unit
-              else throw new UnsupportedOperationException(
-                s"$name is an epoch-directory table: every epoch is a " +
-                  "full snapshot, so it takes whole-table overwrites " +
-                  "only — row appends need the manifest format " +
-                  "(graft.sinks.ManifestTable.create the table, then " +
-                  "INSERT INTO / append)")
+              if (replace) graft.sinks.ManifestTable.overwrite(data, root)
+              else if (autoMerge)
+                graft.sinks.ManifestTable.writeMergeSchema(data, root): Unit
+              else graft.sinks.ManifestTable.write(data, root): Unit
             }
         }
     }
@@ -572,14 +533,12 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
     // physical, and the [[GraftMappedScanBuilder]] shim translates at
     // the boundary. Unmapped tables (physical == logical everywhere)
     // take the exact pre-mapping path.
-    val physSchema =
-      if (isManifest) graft.sinks.ManifestTable.toPhysical(dataSchema)
-      else dataSchema
+    val physSchema = graft.sinks.ManifestTable.toPhysical(dataSchema)
     type PushdownBuilder = ScanBuilder
       with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
       with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
     def mapped(b: PushdownBuilder): PushdownBuilder =
-      if (isManifest && graft.sinks.ManifestTable.hasMapping(dataSchema))
+      if (graft.sinks.ManifestTable.hasMapping(dataSchema))
         new GraftMappedScanBuilder(b, dataSchema)
       else b
     // bucketed tables report KeyGroupedPartitioning — one input
@@ -599,252 +558,246 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
       graft.sinks.ManifestTable.fileBuckets(spark, root, version)
     def bucketed(b: PushdownBuilder): PushdownBuilder =
       graft.sinks.ManifestTable.bucketSpecLogical(dataSchema) match {
-        case Some((ks, n)) if isManifest &&
+        case Some((ks, n)) if
             spark.conf.get("spark.sql.sources.v2.bucketing.enabled",
               "false").toBoolean =>
           new GraftBucketedScanBuilder(b, ks, n, bucketsOfVersion)
         case _ => b
       }
-    if (isManifest) {
-        // the manifest IS the listing: paths, sizes, and a commit
-        // timestamp all come from committed metadata, so the scan
-        // plans with ZERO filesystem calls (the Delta log-backed-index
-        // shape) — at 100k files an InMemoryFileIndex would stat each.
-        val rec = graft.sinks.ManifestTable.recordAt(spark, root, version)
-        val m = graft.sinks.ManifestTable.manifest(spark, rec)
-        val cols = graft.sinks.ManifestTable.statsCols(spark, rec)
-        val ts = rec.tsMs
-        // bucket-transform predicate pruning serves point/IN probes on
-        // a bucketed key from metadata alone — NOT gated on the SPJ
-        // conf (pruning costs nothing; only bucket-grained task
-        // grouping trades parallelism)
-        val bucketPrune = graft.sinks.ManifestTable
-          .bucketSpecLogical(dataSchema).map { case (ks, n) =>
-            (ks.map(graft.sinks.ManifestTable.physicalFor(dataSchema, _)),
-              n, bucketsOfVersion)
-          }
-        // LIMIT / TOP-N pushdown: the outermost builder parks the
-        // pushed limit (or order+limit) here; indexes built with a
-        // full exact live-row map consult them at listing time (see
-        // [[GraftManifestFileIndex.limitFiles]]/[[topNFiles]])
-        val limitCell =
-          new java.util.concurrent.atomic.AtomicReference[Option[Int]](None)
-        val topNCell = new java.util.concurrent.atomic
-          .AtomicReference[Option[GraftTopN]](None)
-        // per-file envelope triplets for ONE column — collected lazily
-        // (only when a top-N was actually pushed), metadata-scale
-        def envStats(physCol: String)
-            : Map[String, (Option[Any], Option[Any], Option[Long])] =
-          if (!cols.contains(physCol)) Map.empty
-          else m.select(org.apache.spark.sql.functions.col("path"),
-              org.apache.spark.sql.functions.col(s"${physCol}_min"),
-              org.apache.spark.sql.functions.col(s"${physCol}_max"),
-              org.apache.spark.sql.functions.col(s"${physCol}_nulls"))
-            .collect().map { r =>
-              r.getString(0) -> ((Option(r.get(1)), Option(r.get(2)),
-                if (r.isNullAt(3)) None else Some(r.getLong(3))))
-            }.toMap
-        def subIndex(files: Seq[(String, Long)],
-                     exactRowsByPath: Map[String, Long] = Map.empty) =
-          new GraftManifestFileIndex(spark, root, files, ts, physSchema,
-            Some((m, cols)), bucketPrune,
-            if (exactRowsByPath.isEmpty) None
-            else Some((() => limitCell.get, exactRowsByPath)),
-            if (exactRowsByPath.isEmpty) None
-            else Some((() => topNCell.get, envStats _)))
-        // runtime file filtering ([[GraftRuntimeFilterScanBuilder]]):
-        // the scan takes the dynamic-pruning planner's join-key values
-        // on every column the manifest can prove things about — the
-        // kept set re-runs the SAME listFiles proof engine (envelopes,
-        // blooms, bucket grid) over the version's full file list
-        def runtimeFilterable(b: PushdownBuilder,
-                              allFiles: Seq[(String, Long)],
-                              exactRows: Option[Long] = None)
-            : ScanBuilder = {
-          val physToLogical = dataSchema.fields.map(f =>
-            (graft.sinks.ManifestTable.physicalFor(dataSchema, f.name),
-              f.name)).toMap
-          // bloom bits serve the equality/IN probes envelopes can't
-          // (hash-distributed keys)
-          val blooms = physToLogical.keys.filter(c =>
-            m.columns.contains(graft.sinks.ManifestTable.bloomCol(c)))
-          val physAttrs = (cols ++ blooms ++
-            graft.sinks.ManifestTable.bucketSpec(dataSchema)
-              .map(_._1).getOrElse(Nil)).distinct
-          val attrs = physAttrs.flatMap(physToLogical.get).distinct
-          // per-column envelope statistics for COST-BASED planning:
-          // one metadata aggregate over the manifest's stat triplets,
-          // run lazily and only when CBO asks ([[GraftRuntimeFilter
-          // Scan.columnStatistics]]); min/max are supersets of the
-          // live rows under pending deletes — the right direction for
-          // an estimate
-          def colStats(): Map[String,
-              org.apache.spark.sql.connector.read.colstats
-                .ColumnStatistics] = {
-            // ANALYZE-pass NDV ([[graft.sinks.ManifestTable
-            // .analyzeTable]]): the join-cardinality driver CBO has no
-            // other source for; physical-keyed, may cover columns the
-            // envelopes don't track (and vice versa)
-            val ndvMap = graft.sinks.ManifestTable.metaAt(
-              spark, root, version).ndv
-            val statCols = (cols ++ ndvMap.keys.filter(
-              physToLogical.contains)).distinct
-            if (statCols.isEmpty) Map.empty
+    // the manifest IS the listing: paths, sizes, and a commit
+    // timestamp all come from committed metadata, so the scan
+    // plans with ZERO filesystem calls (the Delta log-backed-index
+    // shape) — at 100k files an InMemoryFileIndex would stat each.
+    val rec = graft.sinks.ManifestTable.recordAt(spark, root, version)
+    val m = graft.sinks.ManifestTable.manifest(spark, rec)
+    val cols = graft.sinks.ManifestTable.statsCols(spark, rec)
+    val ts = rec.tsMs
+    // bucket-transform predicate pruning serves point/IN probes on
+    // a bucketed key from metadata alone — NOT gated on the SPJ
+    // conf (pruning costs nothing; only bucket-grained task
+    // grouping trades parallelism)
+    val bucketPrune = graft.sinks.ManifestTable
+      .bucketSpecLogical(dataSchema).map { case (ks, n) =>
+        (ks.map(graft.sinks.ManifestTable.physicalFor(dataSchema, _)),
+          n, bucketsOfVersion)
+      }
+    // LIMIT / TOP-N pushdown: the outermost builder parks the
+    // pushed limit (or order+limit) here; indexes built with a
+    // full exact live-row map consult them at listing time (see
+    // [[GraftManifestFileIndex.limitFiles]]/[[topNFiles]])
+    val limitCell =
+      new java.util.concurrent.atomic.AtomicReference[Option[Int]](None)
+    val topNCell = new java.util.concurrent.atomic
+      .AtomicReference[Option[GraftTopN]](None)
+    // per-file envelope triplets for ONE column — collected lazily
+    // (only when a top-N was actually pushed), metadata-scale
+    def envStats(physCol: String)
+        : Map[String, (Option[Any], Option[Any], Option[Long])] =
+      if (!cols.contains(physCol)) Map.empty
+      else m.select(org.apache.spark.sql.functions.col("path"),
+          org.apache.spark.sql.functions.col(s"${physCol}_min"),
+          org.apache.spark.sql.functions.col(s"${physCol}_max"),
+          org.apache.spark.sql.functions.col(s"${physCol}_nulls"))
+        .collect().map { r =>
+          r.getString(0) -> ((Option(r.get(1)), Option(r.get(2)),
+            if (r.isNullAt(3)) None else Some(r.getLong(3))))
+        }.toMap
+    def subIndex(files: Seq[(String, Long)],
+                 exactRowsByPath: Map[String, Long] = Map.empty) =
+      new GraftManifestFileIndex(spark, root, files, ts, physSchema,
+        Some((m, cols)), bucketPrune,
+        if (exactRowsByPath.isEmpty) None
+        else Some((() => limitCell.get, exactRowsByPath)),
+        if (exactRowsByPath.isEmpty) None
+        else Some((() => topNCell.get, envStats _)))
+    // runtime file filtering ([[GraftRuntimeFilterScanBuilder]]):
+    // the scan takes the dynamic-pruning planner's join-key values
+    // on every column the manifest can prove things about — the
+    // kept set re-runs the SAME listFiles proof engine (envelopes,
+    // blooms, bucket grid) over the version's full file list
+    def runtimeFilterable(b: PushdownBuilder,
+                          allFiles: Seq[(String, Long)],
+                          exactRows: Option[Long] = None)
+        : ScanBuilder = {
+      val physToLogical = dataSchema.fields.map(f =>
+        (graft.sinks.ManifestTable.physicalFor(dataSchema, f.name),
+          f.name)).toMap
+      // bloom bits serve the equality/IN probes envelopes can't
+      // (hash-distributed keys)
+      val blooms = physToLogical.keys.filter(c =>
+        m.columns.contains(graft.sinks.ManifestTable.bloomCol(c)))
+      val physAttrs = (cols ++ blooms ++
+        graft.sinks.ManifestTable.bucketSpec(dataSchema)
+          .map(_._1).getOrElse(Nil)).distinct
+      val attrs = physAttrs.flatMap(physToLogical.get).distinct
+      // per-column envelope statistics for COST-BASED planning:
+      // one metadata aggregate over the manifest's stat triplets,
+      // run lazily and only when CBO asks ([[GraftRuntimeFilter
+      // Scan.columnStatistics]]); min/max are supersets of the
+      // live rows under pending deletes — the right direction for
+      // an estimate
+      def colStats(): Map[String,
+          org.apache.spark.sql.connector.read.colstats
+            .ColumnStatistics] = {
+        // ANALYZE-pass NDV ([[graft.sinks.ManifestTable
+        // .analyzeTable]]): the join-cardinality driver CBO has no
+        // other source for; physical-keyed, may cover columns the
+        // envelopes don't track (and vice versa)
+        val ndvMap = graft.sinks.ManifestTable.metaAt(
+          spark, root, version).ndv
+        val statCols = (cols ++ ndvMap.keys.filter(
+          physToLogical.contains)).distinct
+        if (statCols.isEmpty) Map.empty
+        else {
+          import org.apache.spark.sql.functions.{max => smax, min => smin, sum => ssum}
+          val envCols = statCols.filter(cols.contains)
+          val row =
+            if (envCols.isEmpty) null
             else {
-              import org.apache.spark.sql.functions.{max => smax, min => smin, sum => ssum}
-              val envCols = statCols.filter(cols.contains)
-              val row =
-                if (envCols.isEmpty) null
-                else {
-                  val aggs = envCols.flatMap(c => Seq(
-                    smin(org.apache.spark.sql.functions.col(s"${c}_min"))
-                      .as(s"${c}_min"),
-                    smax(org.apache.spark.sql.functions.col(s"${c}_max"))
-                      .as(s"${c}_max"),
-                    ssum(org.apache.spark.sql.functions.col(s"${c}_nulls"))
-                      .as(s"${c}_nulls")))
-                  m.agg(aggs.head, aggs.tail: _*).head()
-                }
-              statCols.flatMap { c =>
-                physToLogical.get(c).map { logical =>
-                  val dt = physSchema(c).dataType
-                  val conv = org.apache.spark.sql.catalyst
-                    .CatalystTypeConverters.createToCatalystConverter(dt)
-                  val hasEnv = row != null && envCols.contains(c)
-                  val lo =
-                    if (!hasEnv) None
-                    else Option(row.getAs[Any](s"${c}_min")).map(conv)
-                  val hi =
-                    if (!hasEnv) None
-                    else Option(row.getAs[Any](s"${c}_max")).map(conv)
-                  val nulls =
-                    if (!hasEnv) None
-                    else Option(row.getAs[Any](s"${c}_nulls"))
-                      .map(_.asInstanceOf[Long])
-                  val ndv = ndvMap.get(c)
-                  logical -> (new org.apache.spark.sql.connector.read
-                      .colstats.ColumnStatistics {
-                    override def min(): java.util.Optional[Object] =
-                      lo.map(v => java.util.Optional.of(
-                        v.asInstanceOf[Object]))
-                        .getOrElse(java.util.Optional.empty())
-                    override def max(): java.util.Optional[Object] =
-                      hi.map(v => java.util.Optional.of(
-                        v.asInstanceOf[Object]))
-                        .getOrElse(java.util.Optional.empty())
-                    override def nullCount(): java.util.OptionalLong =
-                      nulls.map(java.util.OptionalLong.of)
-                        .getOrElse(java.util.OptionalLong.empty())
-                    override def distinctCount(): java.util.OptionalLong =
-                      ndv.map(java.util.OptionalLong.of)
-                        .getOrElse(java.util.OptionalLong.empty())
-                  })
-                }
-              }.toMap
+              val aggs = envCols.flatMap(c => Seq(
+                smin(org.apache.spark.sql.functions.col(s"${c}_min"))
+                  .as(s"${c}_min"),
+                smax(org.apache.spark.sql.functions.col(s"${c}_max"))
+                  .as(s"${c}_max"),
+                ssum(org.apache.spark.sql.functions.col(s"${c}_nulls"))
+                  .as(s"${c}_nulls")))
+              m.agg(aggs.head, aggs.tail: _*).head()
             }
+          statCols.flatMap { c =>
+            physToLogical.get(c).map { logical =>
+              val dt = physSchema(c).dataType
+              val conv = org.apache.spark.sql.catalyst
+                .CatalystTypeConverters.createToCatalystConverter(dt)
+              val hasEnv = row != null && envCols.contains(c)
+              val lo =
+                if (!hasEnv) None
+                else Option(row.getAs[Any](s"${c}_min")).map(conv)
+              val hi =
+                if (!hasEnv) None
+                else Option(row.getAs[Any](s"${c}_max")).map(conv)
+              val nulls =
+                if (!hasEnv) None
+                else Option(row.getAs[Any](s"${c}_nulls"))
+                  .map(_.asInstanceOf[Long])
+              val ndv = ndvMap.get(c)
+              logical -> (new org.apache.spark.sql.connector.read
+                  .colstats.ColumnStatistics {
+                override def min(): java.util.Optional[Object] =
+                  lo.map(v => java.util.Optional.of(
+                    v.asInstanceOf[Object]))
+                    .getOrElse(java.util.Optional.empty())
+                override def max(): java.util.Optional[Object] =
+                  hi.map(v => java.util.Optional.of(
+                    v.asInstanceOf[Object]))
+                    .getOrElse(java.util.Optional.empty())
+                override def nullCount(): java.util.OptionalLong =
+                  nulls.map(java.util.OptionalLong.of)
+                    .getOrElse(java.util.OptionalLong.empty())
+                override def distinctCount(): java.util.OptionalLong =
+                  ndv.map(java.util.OptionalLong.of)
+                    .getOrElse(java.util.OptionalLong.empty())
+              })
+            }
+          }.toMap
+        }
+      }
+      new GraftRuntimeFilterScanBuilder(b, attrs,
+        name => graft.sinks.ManifestTable.physicalFor(dataSchema, name),
+        filters => subIndex(allFiles).listFiles(Nil, filters)
+          .flatMap(_.files).map(_.getPath.toUri.getPath).toSet,
+        exactRows, () => colStats(),
+        limitSink = Some(n => limitCell.set(Some(n))),
+        topNSink = Some(tn => topNCell.set(Some(tn))))
+    }
+    def composite(filt: Seq[GraftFiltFile],
+                  clean: Seq[(String, Long)], cleanRows: Option[Long],
+                  probes: Seq[GraftEqProbeGroup],
+                  cleanExact: Map[String, Long] = Map.empty)
+        : ScanBuilder = {
+      // row-filtering composite scan — clean files on the
+      // ordinary pruned/delegated path, filtered files on the
+      // SAME delegated vectorized path with the parquet row-index
+      // column (and any missing probe key column) appended;
+      // deleted positions and probed-out keys drop in the
+      // wrapping readers ([[GraftDvScanBuilder]]). Both branches
+      // prune from envelopes/blooms — sound for the filtered
+      // branch too, since stats are a superset of the live rows
+      // and excluded files contribute no survivors.
+      val filtSchema = org.apache.spark.sql.types.StructType(
+        physSchema.fields :+ GraftDvScanBuilder.RowIndexField)
+      runtimeFilterable(bucketed(mapped(new GraftDvScanBuilder(spark,
+        ParquetScanBuilder(spark, subIndex(clean, cleanExact),
+          physSchema, physSchema, options),
+        ParquetScanBuilder(spark,
+          subIndex(filt.map(f => (f.path, f.size))), filtSchema,
+          filtSchema, options),
+        filt, probes, cleanRows, ts))),
+        clean ++ filt.map(f => (f.path, f.size)))
+    }
+    // pending equality deletes apply PER TASK above the columnar
+    // scan by default (broadcast key sets — a pure SELECT writes
+    // NOTHING; the Iceberg v2 reader shape). The conf forces, and
+    // oversized/exotic-keyed deletes fall back to, the
+    // materializing path below.
+    val materialize = spark.conf
+      .get("spark.graft.eq.materializeOnRead", "false").toBoolean
+    val probesOpt =
+      if (materialize) None
+      else graft.sinks.ManifestTable.eqProbes(spark, root, version)
+    probesOpt match {
+      case Some(probes) =>
+        val files = graft.sinks.ManifestTable
+          .rawFiles(spark, root, version)
+        def appl(p: String, seq: Long): Array[Int] =
+          probes.indices.filter(i =>
+            probes(i).seq > seq && probes(i).touched.contains(p))
+            .toArray
+        val filt = files.flatMap { case (p, s, dv, seq, rc, dvr) =>
+          val a = appl(p, seq)
+          if (dv.isDefined || a.nonEmpty)
+            Some(GraftFiltFile(p, s, dv, a, rc, dvr))
+          else None
+        }
+        if (filt.nonEmpty) {
+          val filtSet = filt.map(_.path).toSet
+          val clean = files.filterNot(f => filtSet(f._1))
+          val groups = probes.map { pr =>
+            GraftEqProbeGroup(pr.keyCols.map(k => physSchema(
+              graft.sinks.ManifestTable.physicalFor(dataSchema, k))),
+              pr.keys)
           }
-          new GraftRuntimeFilterScanBuilder(b, attrs,
-            name => graft.sinks.ManifestTable.physicalFor(dataSchema, name),
-            filters => subIndex(allFiles).listFiles(Nil, filters)
-              .flatMap(_.files).map(_.getPath.toUri.getPath).toSet,
-            exactRows, () => colStats(),
-            limitSink = Some(n => limitCell.set(Some(n))),
-            topNSink = Some(tn => topNCell.set(Some(tn))))
-        }
-        def composite(filt: Seq[GraftFiltFile],
-                      clean: Seq[(String, Long)], cleanRows: Option[Long],
-                      probes: Seq[GraftEqProbeGroup],
-                      cleanExact: Map[String, Long] = Map.empty)
-            : ScanBuilder = {
-          // row-filtering composite scan — clean files on the
-          // ordinary pruned/delegated path, filtered files on the
-          // SAME delegated vectorized path with the parquet row-index
-          // column (and any missing probe key column) appended;
-          // deleted positions and probed-out keys drop in the
-          // wrapping readers ([[GraftDvScanBuilder]]). Both branches
-          // prune from envelopes/blooms — sound for the filtered
-          // branch too, since stats are a superset of the live rows
-          // and excluded files contribute no survivors.
-          val filtSchema = org.apache.spark.sql.types.StructType(
-            physSchema.fields :+ GraftDvScanBuilder.RowIndexField)
-          runtimeFilterable(bucketed(mapped(new GraftDvScanBuilder(spark,
-            ParquetScanBuilder(spark, subIndex(clean, cleanExact),
-              physSchema, physSchema, options),
+          composite(filt, clean.map(f => (f._1, f._2)),
+            Some(clean.map(_._5).sum), groups,
+            // clean files carry no vectors and no applicable
+            // probes — footer row counts are their exact live rows
+            clean.map(f => (f._1, f._5)).toMap)
+        } else {
+          val list = files.map(f => (f._1, f._2))
+          runtimeFilterable(bucketed(mapped(
             ParquetScanBuilder(spark,
-              subIndex(filt.map(f => (f.path, f.size))), filtSchema,
-              filtSchema, options),
-            filt, probes, cleanRows, ts))),
-            clean ++ filt.map(f => (f.path, f.size)))
+              subIndex(list, files.map(f => (f._1, f._5 - f._6)).toMap),
+              physSchema, physSchema, options))), list,
+            Some(files.map(f => f._5 - f._6).sum))
         }
-        // pending equality deletes apply PER TASK above the columnar
-        // scan by default (broadcast key sets — a pure SELECT writes
-        // NOTHING; the Iceberg v2 reader shape). The conf forces, and
-        // oversized/exotic-keyed deletes fall back to, the
-        // materializing path below.
-        val materialize = spark.conf
-          .get("spark.graft.eq.materializeOnRead", "false").toBoolean
-        val probesOpt =
-          if (materialize) None
-          else graft.sinks.ManifestTable.eqProbes(spark, root, version)
-        probesOpt match {
-          case Some(probes) =>
-            val files = graft.sinks.ManifestTable
-              .rawFiles(spark, root, version)
-            def appl(p: String, seq: Long): Array[Int] =
-              probes.indices.filter(i =>
-                probes(i).seq > seq && probes(i).touched.contains(p))
-                .toArray
-            val filt = files.flatMap { case (p, s, dv, seq, rc, dvr) =>
-              val a = appl(p, seq)
-              if (dv.isDefined || a.nonEmpty)
-                Some(GraftFiltFile(p, s, dv, a, rc, dvr))
-              else None
-            }
-            if (filt.nonEmpty) {
-              val filtSet = filt.map(_.path).toSet
-              val clean = files.filterNot(f => filtSet(f._1))
-              val groups = probes.map { pr =>
-                GraftEqProbeGroup(pr.keyCols.map(k => physSchema(
-                  graft.sinks.ManifestTable.physicalFor(dataSchema, k))),
-                  pr.keys)
-              }
-              return composite(filt, clean.map(f => (f._1, f._2)),
-                Some(clean.map(_._5).sum), groups,
-                // clean files carry no vectors and no applicable
-                // probes — footer row counts are their exact live rows
-                clean.map(f => (f._1, f._5)).toMap)
-            }
-            val list = files.map(f => (f._1, f._2))
-            return runtimeFilterable(bucketed(mapped(
-              ParquetScanBuilder(spark,
-                subIndex(list, files.map(f => (f._1, f._5 - f._6)).toMap),
-                physSchema, physSchema, options))), list,
-              Some(files.map(f => f._5 - f._6).sum))
-          case None =>
-            // scratch-materializing path: pending equality deletes
-            // resolve into deletion vectors (effectiveFiles — cached
-            // per version) and serve through the DV machinery
-            val states = graft.sinks.ManifestTable
-              .effectiveFiles(spark, root, version)
-            val dvd = states.collect { case (p, sz, Some(dv), dvr) =>
-              GraftFiltFile(p, sz, Some(dv), Array.empty, 0L, dvr) }
-            if (dvd.nonEmpty) {
-              val clean = states.collect { case (p, sz, None, _) =>
-                (p, sz) }
-              return composite(dvd, clean, None, Nil)
-            }
-            val list = states.map(f => (f._1, f._2))
-            return runtimeFilterable(bucketed(mapped(
-              ParquetScanBuilder(spark, subIndex(list), physSchema,
-                physSchema, options))), list)
+      case None =>
+        // scratch-materializing path: pending equality deletes
+        // resolve into deletion vectors (effectiveFiles — cached
+        // per version) and serve through the DV machinery
+        val states = graft.sinks.ManifestTable
+          .effectiveFiles(spark, root, version)
+        val dvd = states.collect { case (p, sz, Some(dv), dvr) =>
+          GraftFiltFile(p, sz, Some(dv), Array.empty, 0L, dvr) }
+        if (dvd.nonEmpty) {
+          val clean = states.collect { case (p, sz, None, _) =>
+            (p, sz) }
+          composite(dvd, clean, None, Nil)
+        } else {
+          val list = states.map(f => (f._1, f._2))
+          runtimeFilterable(bucketed(mapped(
+            ParquetScanBuilder(spark, subIndex(list), physSchema,
+              physSchema, options))), list)
         }
     }
-    // epoch-directory table: a plain listing of the epoch, no pruning
-    val index = new InMemoryFileIndex(spark,
-      Seq(new Path(s"$root/epoch=$version")), Map.empty, Some(dataSchema))
-    bucketed(
-      mapped(ParquetScanBuilder(spark, index, physSchema, physSchema,
-        options)))
   }
 
   /** Bucketed tables report their layout as the standard transform —
@@ -852,7 +805,7 @@ final class GraftTable(spark: SparkSession, root: String, version: Long,
   override def partitioning()
       : Array[org.apache.spark.sql.connector.expressions.Transform] =
     graft.sinks.ManifestTable.bucketSpecLogical(dataSchema) match {
-      case Some((ks, n)) if isManifest =>
+      case Some((ks, n)) =>
         ks.map(k => org.apache.spark.sql.connector.expressions.Expressions
           .bucket(n, k)).toArray
       case _ => Array.empty

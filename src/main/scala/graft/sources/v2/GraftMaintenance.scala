@@ -34,9 +34,7 @@ import org.apache.spark.sql.graft.GraftSqlShims
   *     one column keeps just those two versions, not the pre-tick one.
   *
   * Returns (optimize result, bloom results) — all None means the tick
-  * found nothing to do. Manifest-format tables only: epoch tables'
-  * re-lay is a legitimate full-cost operation a tick must not run
-  * blindly. */
+  * found nothing to do. */
 object GraftMaintenance {
 
   /** Parse `catalog.ns….table`, resolve the descriptor, run the
@@ -55,8 +53,7 @@ object GraftMaintenance {
         .NoSuchTableException(ident))
     val loc = props.getProperty("location")
     require(graft.sinks.ManifestTable.exists(spark, loc),
-      s"$tableName is not a manifest-format table — declared " +
-        "maintenance runs on the file-granular format only")
+      s"$tableName is registered at $loc, which holds no table")
     def cols(p: String): Seq[String] = Option(props.getProperty(p))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)

@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * ([[GraftMaintenance]]: clusterBy re-cluster + bloomIndex builds)
   * and returns what it did; `vacuum_table` drops history beyond the
   * newest `keep` versions and sweeps unreferenced data files
-  * (refcount-aware on the manifest format). Results come back as a
+  * (refcount-aware). Results come back as a
   * one-row [[LocalScan]] — driver-computed, metadata-scale. */
 private[v2] object GraftProcedures {
 
@@ -79,8 +79,6 @@ private[v2] object GraftProcedures {
       val tbl = input.getUTF8String(0).toString
       val from = input.getLong(1)
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"restore_table is for manifest-format tables; $tbl is not one")
       val v = graft.sinks.ManifestTable.restore(spark, loc, from)
       oneRowScan(outSchema, InternalRow(from, v))
     }
@@ -108,8 +106,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"compact_eq is for manifest-format tables; $tbl is not one")
       val v = graft.sinks.ManifestTable.compactEq(spark, loc)
       oneRowScan(outSchema, InternalRow(v.map(Long.box).orNull))
     }
@@ -137,8 +133,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"add_constraint is for manifest-format tables; $tbl is not one")
       val v = graft.sinks.ManifestTable.addConstraint(spark, loc,
         input.getUTF8String(1).toString, input.getUTF8String(2).toString)
       oneRowScan(outSchema, InternalRow(v))
@@ -164,8 +158,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"drop_constraint is for manifest-format tables; $tbl is not one")
       val v = graft.sinks.ManifestTable.dropConstraint(spark, loc,
         input.getUTF8String(1).toString)
       oneRowScan(outSchema, InternalRow(v.map(Long.box).orNull))
@@ -194,8 +186,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"create_branch is for manifest-format tables; $tbl is not one")
       val base = graft.sinks.ManifestTable.createBranch(spark, loc,
         input.getUTF8String(1).toString)
       oneRowScan(outSchema, InternalRow(base))
@@ -223,8 +213,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"create_tag is for manifest-format tables; $tbl is not one")
       val v = graft.sinks.ManifestTable.createTag(spark, loc,
         input.getUTF8String(1).toString)
       oneRowScan(outSchema, InternalRow(v))
@@ -258,8 +246,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"publish_branch is for manifest-format tables; $tbl is not one")
       val v = graft.sinks.ManifestTable.publishBranch(spark, loc,
         input.getUTF8String(1).toString,
         merge = !input.isNullAt(2) && input.getBoolean(2))
@@ -287,8 +273,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"drop_ref is for manifest-format tables; $tbl is not one")
       val name = input.getUTF8String(1).toString
       graft.sinks.ManifestTable.dropRef(spark, loc, name)
       oneRowScan(outSchema, InternalRow(UTF8String.fromString(name)))
@@ -318,8 +302,6 @@ private[v2] object GraftProcedures {
       val spark = SparkSession.active
       val tbl = input.getUTF8String(0).toString
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"analyze_table is for manifest-format tables; $tbl is not one")
       val cols = input.getUTF8String(1).toString.split(",")
         .map(_.trim).filter(_.nonEmpty).toSeq
       val v = graft.sinks.ManifestTable.analyzeTable(spark, loc, cols)
@@ -621,8 +603,6 @@ private[v2] object GraftProcedures {
       val bucketBy = input.getUTF8String(3).toString.trim
       val buckets = input.getInt(4)
       val loc = catalog.locationOf(tbl)
-      require(graft.sinks.ManifestTable.exists(spark, loc),
-        s"optimize_table is for manifest-format tables; $tbl is not one")
       val v =
         if (buckets >= 0) {
           if (buckets == 0) {
@@ -655,13 +635,14 @@ private[v2] object GraftProcedures {
     }
   }
 
-  /** `vacuum_table(table, keep)` — retention by name, format-aware. */
+  /** `vacuum_table(table, keep)` — [[graft.sinks.ManifestTable.vacuum]]
+    * by name. */
   final class Vacuum(catalog: GraftCatalog)
     extends UnboundProcedure with BoundProcedure {
     override def name(): String = "vacuum_table"
     override def description(): String =
       "drop versions beyond the newest `keep` and sweep unreferenced " +
-        "data files (refcount-aware on manifest tables)"
+        "data files (refcount-aware)"
     override def bind(inputType: StructType): BoundProcedure = this
     override def parameters(): Array[ProcedureParameter] =
       Array(ProcedureParameter.in("table", StringType).build(),
@@ -675,16 +656,9 @@ private[v2] object GraftProcedures {
       val tbl = input.getUTF8String(0).toString
       val keep = input.getInt(1)
       val loc = catalog.locationOf(tbl)
-      val retained =
-        if (graft.sinks.ManifestTable.exists(spark, loc)) {
-          graft.sinks.ManifestTable.vacuum(spark, loc, keep)
-          graft.sinks.ManifestTable.versions(spark, loc).size
-        } else {
-          graft.sinks.VersionedTable.vacuum(spark, loc, keep)
-          graft.sinks.VersionedTable.versions(spark, loc).size
-        }
-      oneRowScan(outSchema,
-        InternalRow(UTF8String.fromString(loc), retained))
+      graft.sinks.ManifestTable.vacuum(spark, loc, keep)
+      oneRowScan(outSchema, InternalRow(UTF8String.fromString(loc),
+        graft.sinks.ManifestTable.versions(spark, loc).size))
     }
   }
 }

@@ -394,9 +394,9 @@ object EventStreams {
 
   /** Streaming drift monitor: every micro-batch scores BOTH drift
     * statistics against a FIXED reference epoch and appends them —
-    * stamped with the batch id — to metrics logs committed as
-    * VersionedTable epochs (writeBatch, so a replayed batch is not
-    * scored twice):
+    * stamped with the batch id — to two manifest-table metrics logs
+    * ([[graft.sinks.ManifestTable.writeBatch]]: one append per batch,
+    * and a replayed batch is not scored twice):
     *
     *  - per-bucket PSI terms ([[graft.operators.Drift.psi]]) under
     *    `root` — the additive score that localizes WHICH bucket
@@ -414,8 +414,9 @@ object EventStreams {
     * plus the distinct-support value walk for KS (bounded by the
     * quantized support, the integer-column contract) — the reference
     * is cached at wiring time, so both statistics fold its side from
-    * memory, not a re-scan of the reference epoch. The two logs have
-    * independent replay guards; a crash between the two commits
+    * memory, not a re-scan of the reference epoch. Each commit lands
+    * the batch's rows only — cost ∝ batch, never ∝ log. The two logs
+    * have independent replay guards; a crash between the two commits
     * re-scores the batch into whichever log missed it and skips the
     * other. */
   def driftMonitorStream(events: DataFrame, root: String, ref: DataFrame,
@@ -425,79 +426,81 @@ object EventStreams {
     val refCached = ref.select(col(valCol)).cache()
     refCached.count(): Unit // materialize before the first batch
     events.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val spark = batch.sparkSession
-      if (epochId > graft.sinks.VersionedTable.lastAppliedBatch(spark, root)) {
-        val terms = graft.operators.Drift
-          .psi(refCached, batch, valCol, lo, hi, nBuckets)
-          .withColumn("batch_id", lit(epochId))
-        val log =
-          if (graft.sinks.VersionedTable.latestVersion(spark, root) >= 0)
-            graft.sinks.VersionedTable.read(spark, root).unionByName(terms)
-          else terms
-        graft.sinks.VersionedTable.writeBatch(log, root, epochId): Unit
-      }
-      if (epochId > graft.sinks.VersionedTable.lastAppliedBatch(spark, ksRoot)) {
-        val ksRow = graft.operators.Drift.ks(refCached, batch, valCol)
-          .withColumn("batch_id", lit(epochId))
-        val ksLog =
-          if (graft.sinks.VersionedTable.latestVersion(spark, ksRoot) >= 0)
-            graft.sinks.VersionedTable.read(spark, ksRoot).unionByName(ksRow)
-          else ksRow
-        graft.sinks.VersionedTable.writeBatch(ksLog, ksRoot, epochId): Unit
-      }
+      appendBatch(graft.operators.Drift
+        .psi(refCached, batch, valCol, lo, hi, nBuckets)
+        .withColumn("batch_id", lit(epochId)), root, epochId)
+      appendBatch(graft.operators.Drift.ks(refCached, batch, valCol)
+        .withColumn("batch_id", lit(epochId)), ksRoot, epochId)
     }
   }
 
-  /** Streaming maintenance of a materialized aggregate view
-    * ([[graft.operators.IncrementalAgg]] state committed as
-    * [[graft.sinks.VersionedTable]] epochs): each micro-batch of
-    * retraction-encoded delta rows ('I'/'D' in `opCol`) folds into the
-    * committed state and commits as ONE new epoch behind the atomic
-    * pointer flip — a reader always resolves a complete view, never a
-    * half-applied batch. An empty table bootstraps from zero state.
-    *
-    * Per-batch cost ∝ |batch| + |state| (the IncrementalAgg shape) —
-    * independent of how much fact history the view summarizes, which
-    * is the entire point at 100 TB. Integer-exact sums make the
-    * sequential micro-batch folds row-identical to one batch build
-    * over the union of all deltas (IncrementalAgg associativity;
-    * StreamingSpec asserts stream == one-shot). foreachBatch for the
-    * same reason as the index streams above: the fold IS the batch
-    * operator, run once per micro-batch. */
+  /** One append-log micro-batch: create the log on the first batch,
+    * then [[graft.sinks.ManifestTable.writeBatch]] — the batch's rows
+    * land and nothing else is read or rewritten; a replayed batch id
+    * commits nothing and runs no job over `rows`. */
+  private def appendBatch(rows: DataFrame, root: String, epochId: Long): Unit = {
+    graft.sinks.ManifestTable.createIfMissing(rows.sparkSession, root,
+      rows.schema)
+    graft.sinks.ManifestTable.writeBatch(rows, root, epochId): Unit
+  }
+
+  /** One keyed-state micro-batch — the fold of [[topKStream]] and
+    * [[incrementalAggStream]]: the batch's distinct `keyCols` values are
+    * the touched keys, `fold` recomputes their rows from the committed
+    * state of those keys alone (the keyed file search,
+    * [[graft.sinks.ManifestTable.readTouchedRows]]), and
+    * [[graft.sinks.ManifestTable.replaceKeysBatch]] retires the keys and
+    * lands the result in one batch-stamped commit — a key absent from
+    * it leaves the table. Per-batch cost ∝ batch + the state files the
+    * keys touch, never the whole state. A replayed batch id commits
+    * nothing and reads nothing. A NULL key refuses: a keyed retirement
+    * never matches it, so its stale row would survive beside the new
+    * one. */
+  private def keyedStateBatch(batch: DataFrame, root: String,
+      keyCols: Seq[String], stateSchema: org.apache.spark.sql.types.StructType,
+      epochId: Long)(fold: DataFrame => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    graft.sinks.ManifestTable.createIfMissing(spark, root, stateSchema,
+      keyCols)
+    if (epochId != graft.sinks.ManifestTable.lastAppliedBatch(spark, root)) {
+      val keys = batch.select(keyCols.map(col): _*).distinct().persist()
+      try {
+        require(keys.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty,
+          s"keyed state at $root cannot hold a NULL key (${keyCols.mkString(", ")})")
+        val state = graft.sinks.ManifestTable
+          .readTouchedRows(spark, root, keys, keyCols)
+          .join(keys, keyCols, "left_semi")
+        graft.sinks.ManifestTable.replaceKeysBatch(fold(state), keys, root,
+          keyCols, epochId): Unit
+      } finally keys.unpersist(): Unit
+    }
+  }
+
   /** Streaming per-group leaderboard: each micro-batch's exact top-k
     * ([[graft.functions.TopKBy]] — ≤ 2k pairs per group per partition,
-    * no window sort) merges with the committed leaderboard and commits
-    * as one VersionedTable epoch. Top-k is exactly mergeable (the
-    * global top-k lives inside the union of partial top-ks), so the
-    * stream's final state is row-identical to one batch top-k over the
-    * full feed — per-batch cost ∝ batch + |groups|·k, independent of
-    * feed history, the same operability argument as
-    * [[incrementalAggStream]]. State is stored EXPLODED (one row per
-    * kept (group, score, id)), so readers get a plain table. Rows are
-    * assumed delivered once (append stream). */
+    * no window sort) merges with the committed leaderboard rows of the
+    * groups the batch touches, and the recomputed groups replace them
+    * in one keyed commit ([[keyedStateBatch]]). Top-k is exactly
+    * mergeable (the global top-k lives inside the union of partial
+    * top-ks), so the stream's final state is row-identical to one batch
+    * top-k over the full feed — per-batch cost ∝ batch + the touched
+    * groups' state, independent of feed history. State is stored
+    * EXPLODED (one row per kept (group, score, id)), so readers get a
+    * plain table. Rows are assumed delivered once (append stream). */
   def topKStream(events: DataFrame, root: String, grpCol: String,
       scoreCol: String, idCol: String, k: Int)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val spark = batch.sparkSession
-      // replay guard: foreachBatch re-delivers the last batch after a
-      // restart; a fold sink must detect and skip it (writeBatch's
-      // contract), or the replayed rows count twice
-      if (epochId > graft.sinks.VersionedTable.lastAppliedBatch(spark, root)) {
-        graft.functions.VectorExpressions.ensureRegistered(spark)
-        val incoming = batch.select(col(grpCol).as("grp"),
-          col(scoreCol).cast("double").as("score"), col(idCol).cast("long").as("id"))
-        val state =
-          if (graft.sinks.VersionedTable.latestVersion(spark, root) >= 0)
-            graft.sinks.VersionedTable.read(spark, root)
-          else incoming.filter(lit(false))
-        val next = state.unionByName(incoming)
+      graft.functions.VectorExpressions.ensureRegistered(batch.sparkSession)
+      val incoming = batch.select(col(grpCol).as("grp"),
+        col(scoreCol).cast("double").as("score"), col(idCol).cast("long").as("id"))
+      keyedStateBatch(incoming, root, Seq("grp"), incoming.schema, epochId) {
+        state => state.unionByName(incoming)
           .groupBy(col("grp"))
           .agg(graft.functions.VectorExpressions
             .topkBy(col("score"), col("id"), k).as("tk"))
           .select(col("grp"), explode(col("tk")).as("e"))
           .select(col("grp"), col("e.score").as("score"), col("e.id").as("id"))
-        graft.sinks.VersionedTable.writeBatch(next, root, epochId): Unit
       }
     }
 
@@ -506,38 +509,26 @@ object EventStreams {
     * micro-batch splits against a declarative rule suite
     * ([[graft.operators.Expectations.split]]); clean rows flow to the
     * caller's sink, violating rows land (annotated with their broken
-    * rules) in a quarantine [[graft.sinks.VersionedTable]] whose
-    * batch-id sidecar makes the fold replay-idempotent — a restart's
-    * re-delivered batch cannot double-quarantine. Per-row decisions
-    * depend only on the row, so the union over micro-batches equals
-    * the one-shot batch split (StreamingSpec). The quarantine is a
-    * normal epoch table: as-of readable for incident forensics,
-    * vacuumed on the maintenance cadence, and its `violated_rules`
-    * column names WHY each row was held — the triage loop's input. */
+    * rules) in a quarantine manifest table, one batch-stamped append per
+    * micro-batch ([[appendBatch]]) — a restart's re-delivered batch
+    * cannot double-quarantine, and a batch costs its own rows, never
+    * the quarantine's size. Per-row decisions depend only on the row,
+    * so the union over micro-batches equals the one-shot batch split
+    * (StreamingSpec). The quarantine is a normal table: as-of readable
+    * for incident forensics, vacuumed on the maintenance cadence, and
+    * its `violated_rules` column names WHY each row was held — the
+    * triage loop's input. */
   def expectationsStream(rows: DataFrame, quarantineRoot: String,
       rules: Seq[graft.operators.Expectations.Expectation])(
       clean: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     rows.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val spark = batch.sparkSession
       val (ok, bad) = graft.operators.Expectations.split(batch, rules)
       // quarantine first: if the job dies between the two effects, the
       // replayed batch re-runs the sink but writeBatch skips the
-      // already-committed quarantine epoch (idempotent), never the
-      // reverse (clean rows shipped, violations silently lost). The
-      // epoch is the accumulated log (state ∪ batch — cost ∝
-      // quarantine size, which staying small is the whole point), so
-      // reading the current epoch reads the full quarantine.
-      if (epochId > graft.sinks.VersionedTable
-            .lastAppliedBatch(spark, quarantineRoot)) {
-        val state =
-          if (graft.sinks.VersionedTable
-                .latestVersion(spark, quarantineRoot) >= 0)
-            graft.sinks.VersionedTable.read(spark, quarantineRoot)
-          else bad.filter(org.apache.spark.sql.functions.lit(false))
-        graft.sinks.VersionedTable.writeBatch(
-          state.unionByName(bad), quarantineRoot, epochId): Unit
-      }
+      // already-committed quarantine append (idempotent), never the
+      // reverse (clean rows shipped, violations silently lost)
+      appendBatch(bad, quarantineRoot, epochId)
       clean(ok, epochId)
     }
 
@@ -570,22 +561,33 @@ object EventStreams {
     }
   }
 
+  /** Streaming maintenance of a materialized aggregate view
+    * ([[graft.operators.IncrementalAgg]] state in a manifest table):
+    * each micro-batch of retraction-encoded delta rows ('I'/'D' in
+    * `opCol`) folds into the committed rows of the keys it touches, and
+    * those keys' recomputed rows replace them in ONE batch-stamped
+    * keyed commit ([[keyedStateBatch]]) — a reader always resolves a
+    * complete view, never a half-applied batch, and a group whose
+    * count reaches 0 is retired. An empty table bootstraps from zero
+    * state.
+    *
+    * Per-batch cost ∝ |batch| + the touched keys' state — independent
+    * of how much fact history the view summarizes, which is the entire
+    * point at 100 TB. Integer-exact sums make the sequential
+    * micro-batch folds row-identical to one batch build over the union
+    * of all deltas (IncrementalAgg associativity; StreamingSpec asserts
+    * stream == one-shot). foreachBatch for the same reason as the index
+    * streams above: the fold IS the batch operator, run once per
+    * micro-batch. */
   def incrementalAggStream(deltas: DataFrame, root: String,
       keyCols: Seq[String], valCol: String, opCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     deltas.writeStream.foreachBatch { (batch: DataFrame, epochId: Long) =>
-      val spark = batch.sparkSession
-      // replay guard — see topKStream: a re-delivered batch would
-      // double-count its deltas without the batch-id sidecar check
-      if (epochId > graft.sinks.VersionedTable.lastAppliedBatch(spark, root)) {
-        val state =
-          if (graft.sinks.VersionedTable.latestVersion(spark, root) >= 0)
-            graft.sinks.VersionedTable.read(spark, root)
-          else graft.operators.IncrementalAgg.build(
-            batch.filter(lit(false)), keyCols, col(valCol))
-        val next = graft.operators.IncrementalAgg.applyDelta(
+      keyedStateBatch(batch, root, keyCols, graft.operators.IncrementalAgg
+          .build(batch.filter(lit(false)), keyCols, col(valCol)).schema,
+          epochId) { state =>
+        graft.operators.IncrementalAgg.applyDelta(
           state, batch, keyCols, col(valCol), col(opCol))
-        graft.sinks.VersionedTable.writeBatch(next, root, epochId): Unit
       }
     }
 }

@@ -75,8 +75,8 @@ class CatalogSpec extends AnyFunSuite {
     val loc = java.nio.file.Files
       .createTempDirectory("graft-catalog-adopt").toString + "/t"
     val clock = new util.LogicalClock(1000L)
-    val prev = sinks.VersionedTable.commitClock
-    sinks.VersionedTable.commitClock = clock
+    val prev = sinks.ManifestTable.commitClock
+    sinks.ManifestTable.commitClock = clock
     try {
       sinks.ManifestTable.create(Seq((1L, "a")).toDF("k", "v"), loc, Seq("k"))
       clock.advance(5000L)
@@ -93,36 +93,40 @@ class CatalogSpec extends AnyFunSuite {
       assert(spark.sql(
         s"SELECT * FROM graftc.db.adopted TIMESTAMP AS OF '$t0'")
         .collect().map(_.getLong(0)).toSeq == Seq(1L))
-    } finally sinks.VersionedTable.commitClock = prev
+    } finally sinks.ManifestTable.commitClock = prev
   }
 
-  test("epoch-directory table refuses DSv2 and SQL appends naming ManifestTable; overwrite commits the next epoch") {
+  test("an epoch-directory root is refused by the graft source, its writers and the catalog, naming ManifestTable") {
     warehouse: Unit
     val loc = java.nio.file.Files
       .createTempDirectory("graft-catalog-epoch").toString + "/t"
-    sinks.VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), loc)
-    spark.sql(s"CREATE TABLE graftc.db.epochs USING graft LOCATION '$loc'")
+    sinks.ManifestTable.create(Seq((1L, "a")).toDF("k", "v"), loc, Seq("k"))
+    // a manifest's own `_manifests` log is an epoch-directory root
+    val log = sinks.ManifestTable.manifestsRoot(loc)
     def causes(e: Throwable): String =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .map(_.getMessage).mkString(" <- ")
-    // every epoch is a full snapshot: a row append has no grain here
-    val viaWriter = intercept[Exception] {
-      Seq((2L, "b")).toDF("k", "v")
-        .write.format("graft").mode("append").save(loc)
+    val refusals = Seq(
+      intercept[Exception] { spark.read.format("graft").load(log) },
+      intercept[Exception] {
+        spark.read.format("graft").option("versionAsOf", 0).load(log)
+      },
+      intercept[Exception] {
+        Seq((2L, "b")).toDF("k", "v")
+          .write.format("graft").mode("append").save(log)
+      },
+      intercept[Exception] {
+        spark.sql(s"CREATE TABLE graftc.db.epochs USING graft LOCATION '$log'")
+      })
+    refusals.foreach { e =>
+      assert(causes(e).contains("epoch-directory log") &&
+        causes(e).contains("ManifestTable"), causes(e))
     }
-    assert(causes(viaWriter).contains("ManifestTable"), causes(viaWriter))
-    val viaSql = intercept[Exception] {
-      spark.sql("INSERT INTO graftc.db.epochs VALUES (3, 'c')")
-    }
-    assert(causes(viaSql).contains("ManifestTable"), causes(viaSql))
-    assert(sinks.VersionedTable.latestVersion(spark, loc) == 0L,
-      "a refused append must commit nothing")
-    // a whole-table overwrite is the epoch grain: the next epoch
-    Seq((4L, "d")).toDF("k", "v")
-      .write.format("graft").mode("overwrite").save(loc)
-    assert(sinks.VersionedTable.latestVersion(spark, loc) == 1L)
-    assert(spark.sql("SELECT k FROM graftc.db.epochs").collect()
-      .map(_.getLong(0)).toSeq == Seq(4L))
+    assert(!spark.catalog.tableExists("graftc.db.epochs"),
+      "a refused CREATE must register nothing")
+    // the refusals committed nothing: the table is untouched
+    assert(sinks.ManifestTable.latestVersion(spark, loc) == 0L)
+    assert(sinks.ManifestTable.read(spark, loc).count() == 1L)
   }
 
   test("a fresh session resolves by name and still prunes — no per-JVM registration involved") {

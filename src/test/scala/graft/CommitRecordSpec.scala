@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CommitRecordSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
-  import sinks.{ManifestTable, VersionedTable}
+  import sinks.ManifestTable
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString
@@ -47,7 +47,7 @@ class CommitRecordSpec extends AnyFunSuite {
     assert(ManifestTable.read(spark, root).count() == 21L)
   }
 
-  test("format: every epoch of a manifest log, a bloom index and a plain epoch table holds exactly one _graft_ entry, and every field reads back equal on a cold cache") {
+  test("format: every epoch of a manifest log, a bloom index, an adopted directory and a stream-stamped table holds exactly one _graft_ entry, and every field reads back equal on a cold cache") {
     val base = tmp("graft-record-format")
     val root = s"$base/t"
     ManifestTable.create(spark.range(40)
@@ -62,16 +62,15 @@ class CommitRecordSpec extends AnyFunSuite {
     spark.range(10).write.parquet(lay)
     val adopted = s"$base/a"
     assert(ManifestTable.adopt(spark, lay, adopted, Seq("id")).nonEmpty)
-    val plain = s"$base/p"
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "s"), plain)
-    assert(VersionedTable.writeBatch(Seq((2L, "b")).toDF("k", "s"), plain, 0L)
+    val stamped = s"$base/p"
+    ManifestTable.create(Seq((1L, "a")).toDF("k", "s"), stamped, Nil)
+    assert(ManifestTable.writeBatch(Seq((2L, "b")).toDF("k", "s"), stamped, 0L)
       .nonEmpty)
 
     // the bloom build is one more manifest epoch: no side table
     assert(!new java.io.File(root).list().exists(_.contains("bloom")))
-    val roots = Seq(ManifestTable.manifestsRoot(root),
-      ManifestTable.manifestsRoot(adopted), plain)
-    roots.foreach { r =>
+    val tables = Seq(root, adopted, stamped)
+    tables.map(ManifestTable.manifestsRoot).foreach { r =>
       val epochs = new java.io.File(r).listFiles()
         .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
       assert(epochs.nonEmpty, r)
@@ -93,11 +92,10 @@ class CommitRecordSpec extends AnyFunSuite {
       .contains(new org.apache.hadoop.fs.Path(lay).toUri.getPath))
     assert(ManifestTable.manifest(spark, root, cur)
       .filter(col(ManifestTable.bloomCol("k")).isNull).count() == 0L)
-    assert(VersionedTable.lastAppliedBatch(spark, plain) == 0L)
-    def snapshot() = roots.flatMap(r => VersionedTable.versions(spark, r)
-      .map(v => (r, v) -> VersionedTable.record(spark, r, v))) ++
-      Seq(root, adopted).flatMap(r => ManifestTable.versions(spark, r)
-        .map(v => (r, v) -> ManifestTable.metaAt(spark, r, v)))
+    assert(ManifestTable.lastAppliedBatch(spark, stamped) == 0L)
+    def snapshot() = tables.flatMap(r => ManifestTable.versions(spark, r)
+      .map(v => (r, v) -> ((ManifestTable.recordAt(spark, r, v),
+        ManifestTable.metaAt(spark, r, v)))))
     val warm = snapshot()
     util.EpochCache.clear()
     assert(snapshot() == warm, "a cold read must decode what was primed")

@@ -322,6 +322,31 @@ class NotionSpec extends AnyFunSuite {
     assert(bounded("DimStage").collect().toSeq == got("DimStage"))
   }
 
+  test("a last_edited_time tie between two definition rows resolves to ONE title in DimWorkflow and the fact") {
+    // 32 workflows, each defined twice under one key and canonical id
+    // with the same last_edited_time but different titles, and each
+    // referenced by one timeslice
+    val ids = (1 to 32).map(i => f"$i%08x-aaaa-aaaa-aaaa-aaaaaaaaaaaa")
+    val wf = "aaaaaaaa-aaaa-aaaa-aaaa-aaaaaaaaaaaa"
+    val d = Normalize.workflowDefinitions(readRaw(spark, ids.zipWithIndex
+      .flatMap { case (id, i) => Seq("A", "B").map(t =>
+        defJson.replace(wf, id).replace("My Workflow", s"Title $i $t")) }), cfg)
+    val t = Normalize.timeslices(readRaw(spark, ids.zipWithIndex.map {
+      case (id, i) => timesliceJson.replace(wf, id)
+        .replace("12345678-1234-1234-1234-1234567890ab",
+          f"$i%08x-1234-1234-1234-1234567890ab")
+    }), cfg)
+    val st = Normalize.workflowStages(readRaw(spark, Seq(stageJson)), cfg)
+    val star = Derive.deriveAll(d, st, t)
+    val dim = star("DimWorkflow").select("workflow_definition")
+      .collect().map(_.getString(0)).toSet
+    val fact = star("FactTimeslices").select("Workflow Definition")
+      .collect().map(_.getString(0)).toSet
+    assert(dim.size == 32 && fact.size == 32)
+    assert(dim == fact, s"DimWorkflow names ${(dim -- fact).toSeq.sorted} " +
+      s"where the fact names ${(fact -- dim).toSeq.sorted}")
+  }
+
   test("occupancy + throughput derive from resolvable stage intervals") {
     import spark.implicits._
     // stage with known number + a timeslice entering it

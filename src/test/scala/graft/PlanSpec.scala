@@ -120,7 +120,7 @@ class PlanSpec extends AnyFunSuite {
     * the scan (it is read separately, semi-joined to candidates). */
   test("persisted index band join prunes the key-set column from its scan") {
     val p = plan("q_dedup_incremental_idx")
-    val idxScans = "FileScan parquet [^\n]*mh_index[^\n]*".r.findAllIn(p).toList
+    val idxScans = "BatchScan graft[^\n]*mh_index[^\n]*".r.findAllIn(p).toList
     assert(idxScans.nonEmpty, s"expected index scans in:\n$p")
     assert(idxScans.exists(s => !s.contains("shs")),
       s"every index scan reads the shs array — pruning lost:\n${idxScans.mkString("\n")}")
@@ -874,11 +874,8 @@ class PlanSpec extends AnyFunSuite {
     // carrying the current version's table metadata (schema and
     // adopted directory) in its record (the poisoned entries below
     // mimic footers whose writer omitted stats)
-    val manifests = sinks.ManifestTable.manifestsRoot(statsRoot)
     def commitEntries(entries: org.apache.spark.sql.DataFrame): Unit =
-      sinks.VersionedTable.write(entries, manifests,
-        sinks.VersionedTable.record(spark, manifests,
-          sinks.ManifestTable.latestVersion(spark, statsRoot)).meta): Unit
+      sinks.ManifestLogProbe.commitEntries(spark, statsRoot, entries)
     val exact = sinks.ManifestTable.manifest(spark, statsRoot,
       sinks.ManifestTable.latestVersion(spark, statsRoot)).collect().toSeq
     val exactSchema = sinks.ManifestTable.manifest(spark, statsRoot,

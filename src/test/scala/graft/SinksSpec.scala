@@ -81,25 +81,6 @@ class SinksSpec extends AnyFunSuite {
         .withColumn("part", lit(2)).collect().toSeq)
   }
 
-  test("versioned table: epoch flips are atomic commits; as-of reads and vacuum") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vt").toString + "/t"
-    assert(sources.Tables.nation(spark, sf) != null) // warm fs
-    assert(sinks.VersionedTable.latestVersion(spark, root) == -1L)
-    val v0 = sinks.VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), root)
-    val v1 = sinks.VersionedTable.write(Seq((1L, "b"), (2L, "c")).toDF("k", "v"), root)
-    assert((v0, v1) == ((0L, 1L)))
-    assert(sinks.VersionedTable.read(spark, root).count() == 2)
-    // as-of: the old epoch is immutable and still readable
-    assert(sinks.VersionedTable.readVersion(spark, root, 0).count() == 1)
-    val v2 = sinks.VersionedTable.write(Seq((9L, "z")).toDF("k", "v"), root)
-    assert(sinks.VersionedTable.versions(spark, root) == Seq(0L, 1L, 2L))
-    sinks.VersionedTable.vacuum(spark, root, keep = 2)
-    assert(sinks.VersionedTable.versions(spark, root) == Seq(1L, 2L))
-    assert(sinks.VersionedTable.read(spark, root)
-      .collect().map(_.getLong(0)).toSeq == Seq(9L))
-    assert(v2 == 2L)
-  }
-
   test("manifest merge/delete: row-level upsert fold; delete-then-vacuum purges lineage") {
     import sinks.ManifestTable
     val root = java.nio.file.Files.createTempDirectory("graft-mtm").toString + "/t"
@@ -131,39 +112,6 @@ class SinksSpec extends AnyFunSuite {
     intercept[Exception] {
       ManifestTable.readVersion(spark, root, 1).collect()
     }
-  }
-
-  test("versioned table: racing blind writers all commit durable distinct epochs, pointer converges") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vtr").toString + "/t"
-    sinks.VersionedTable.write(Seq((0L, "base")).toDF("k", "v"), root)
-    // 4 writers race the CAS commit from a shared start line
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val futs = (1 to 4).map { i =>
-      pool.submit(new java.util.concurrent.Callable[Long] {
-        def call(): Long = {
-          gate.await()
-          sinks.VersionedTable.write(Seq((i.toLong, s"w$i")).toDF("k", "v"), root)
-        }
-      })
-    }
-    gate.countDown()
-    val got = futs.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).sorted
-    pool.shutdown()
-    // no lost epoch: every writer claimed its own consecutive version
-    assert(got == Seq(1L, 2L, 3L, 4L), s"claimed versions: $got")
-    assert(sinks.VersionedTable.versions(spark, root) == Seq(0L, 1L, 2L, 3L, 4L))
-    // pointer converges: resolution sees the newest committed epoch even
-    // if the slowest writer's pointer bump landed out of order
-    assert(sinks.VersionedTable.latestVersion(spark, root) == 4L)
-    // every epoch is durable and readable with its writer's payload
-    val payloads = (1L to 4L).map(v => sinks.VersionedTable
-      .readVersion(spark, root, v).as[(Long, String)].collect().head._2).toSet
-    assert(payloads == Set("w1", "w2", "w3", "w4"))
-    // no staging debris survives a successful commit race
-    val stages = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith(".stage-"))
-    assert(stages.isEmpty, s"orphaned staging dirs: ${stages.map(_.getName).toSeq}")
   }
 
   test("versioned table: racing merges serialize — neither update is lost") {
@@ -210,28 +158,6 @@ class SinksSpec extends AnyFunSuite {
     val mid = state(1)
     assert(mid == ((files2, Set.empty[String])) || mid == ((files0, files0)),
       s"version 1: $mid")
-  }
-
-  test("versioned table writeBatch: a replayed batch id is a no-op, the next id commits") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vtwb").toString + "/t"
-    assert(sinks.VersionedTable.lastAppliedBatch(spark, root) == -1L)
-    assert(sinks.VersionedTable.writeBatch(
-      Seq((1L, "a")).toDF("k", "v"), root, 0L).contains(0L))
-    assert(sinks.VersionedTable.lastAppliedBatch(spark, root) == 0L)
-    // the foreachBatch replay case: same id re-offered → NOTHING commits
-    assert(sinks.VersionedTable.writeBatch(
-      Seq((9L, "z")).toDF("k", "v"), root, 0L).isEmpty)
-    assert(sinks.VersionedTable.versions(spark, root) == Seq(0L))
-    assert(sinks.VersionedTable.read(spark, root)
-      .as[(Long, String)].collect().toSeq == Seq((1L, "a")))
-    // the next batch id commits normally
-    assert(sinks.VersionedTable.writeBatch(
-      Seq((2L, "b")).toDF("k", "v"), root, 1L).contains(1L))
-    assert(sinks.VersionedTable.lastAppliedBatch(spark, root) == 1L)
-    // an unstamped write (a batch rebuild) clears the marker: the
-    // stream restarts its id sequence against fresh state
-    sinks.VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), root)
-    assert(sinks.VersionedTable.lastAppliedBatch(spark, root) == -1L)
   }
 
   test("manifest applyCdc: sequential batch folds == one-shot; in-batch collapse") {
@@ -734,9 +660,9 @@ class SinksSpec extends AnyFunSuite {
       .toDF("id", "v")
     val b = Seq[(Long, String)]((2L, "y"), (3L, "c"), (4L, null), (5L, "e"))
       .toDF("id", "v")
-    val v0 = sinks.VersionedTable.write(a, root)
-    val v1 = sinks.VersionedTable.write(b, root)
-    val cf = sinks.VersionedTable.changesBetween(spark, root, v0, v1, Seq("id"))
+    val v0 = sinks.ManifestTable.create(a, root, Seq("id"))
+    val v1 = sinks.ManifestTable.overwrite(b, root)
+    val cf = sinks.ManifestTable.changesBetween(spark, root, v0, v1, Seq("id"))
     val got = cf.select(col("id"), col("op"), col("v"))
       .as[(Long, String, String)].collect().toSet
     // 1 deleted (BEFORE payload), 2 null→'y' and 4 'd'→null both U
@@ -776,13 +702,14 @@ class SinksSpec extends AnyFunSuite {
       .map(_.getMessage).mkString(" <- ")
 
   test("change-feed consumer: durable offsets, bootstrap as inserts, exact deltas, retention fail-fast") {
-    import sinks.{ManifestTable, VersionedTable}
+    import sinks.ManifestTable
     val base = java.nio.file.Files
       .createTempDirectory("graft-consume").toString
     val root = s"$base/t"
     val ckpt = s"$base/ckpt"
     val mirror = s"$base/mirror"
-    VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root)
+    ManifestTable.create(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root,
+      Seq("id"))
     val seen = scala.collection.mutable.ArrayBuffer
       .empty[Set[(Long, String, String)]]
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -810,19 +737,19 @@ class SinksSpec extends AnyFunSuite {
     consume()
     assert(seen.size == 2, "a caught-up consumer must get no batch")
     // two commits later: ONE batch carries the collapsed delta
-    VersionedTable.write(
+    ManifestTable.overwrite(
       Seq((1L, "a"), (2L, "b2"), (3L, "c")).toDF("id", "v"), root)
-    VersionedTable.write(Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), root)
+    ManifestTable.overwrite(Seq((2L, "b2"), (3L, "c")).toDF("id", "v"), root)
     consume()
     assert(seen.size == 3 && seen.last ==
       Set((1L, "D", "a"), (2L, "U", "b2"), (3L, "I", "c")), s"got $seen")
     // the consumer's applied mirror equals the source's current state
     assert(ManifestTable.read(spark, mirror)
       .as[(Long, String)].collect().toSet ==
-      VersionedTable.read(spark, root).as[(Long, String)].collect().toSet)
-    // lag past retention: vacuum away the acked epoch → fail fast
-    VersionedTable.write(Seq((9L, "z")).toDF("id", "v"), root)
-    VersionedTable.vacuum(spark, root, keep = 1)
+      ManifestTable.read(spark, root).as[(Long, String)].collect().toSet)
+    // lag past retention: vacuum away the acked version → fail fast
+    ManifestTable.overwrite(Seq((9L, "z")).toDF("id", "v"), root)
+    ManifestTable.vacuum(spark, root, keep = 1)
     val ex = intercept[Exception] { consume() }
     assert(causes(ex).contains("lagged past retention"), causes(ex))
   }
@@ -851,36 +778,6 @@ class SinksSpec extends AnyFunSuite {
       "range-clustered files must carry narrower envelopes than the hash layout")
   }
 
-  test("graft DSv2 source inherits parquet aggregate pushdown (count/min/max from footers)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-dsv2-agg").toString
-    val root = s"$base/t"
-    val docs = sources.Tables.documents(spark, sf)
-      .select("doc_id", "n_chars")
-    sinks.VersionedTable.write(docs.repartition(3), root)
-    val prev = spark.conf.getOption("spark.sql.parquet.aggregatePushdown")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try {
-      val agg = spark.read.format("graft").load(root)
-        .agg(count(lit(1)).as("n"), min(col("doc_id")).as("lo"),
-          max(col("doc_id")).as("hi"))
-      assert(agg.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: [COUNT(*)"),
-        "the delegated parquet scan must push the aggregate into footers:\n" +
-          agg.queryExecution.executedPlan.toString)
-      val r = agg.collect()(0)
-      assert(r.getLong(0) == docs.count())
-      val (lo, hi) = docs.agg(min(col("doc_id")), max(col("doc_id")))
-        .as[(Long, Long)].head()
-      assert(r.getLong(1) == lo && r.getLong(2) == hi)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.parquet.aggregatePushdown", v)
-        case None => spark.conf.unset("spark.sql.parquet.aggregatePushdown")
-      }
-    }
-  }
-
   test("graft DSv2 source: snapshot isolation, time travel, in-source stats pruning") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     import org.apache.spark.sql.execution.datasources.FilePartition
@@ -889,20 +786,20 @@ class SinksSpec extends AnyFunSuite {
     val root = s"$base/table"
     val docs = sources.Tables.documents(spark, sf)
       .select("doc_id", "lang", "n_chars")
-    sinks.VersionedTable.write(
-      docs.repartitionByRange(4, col("doc_id")), root)
-    sinks.VersionedTable.write(docs.filter(col("lang") =!= "en")
+    sinks.ManifestTable.create(
+      docs.repartitionByRange(4, col("doc_id")), root, Nil)
+    sinks.ManifestTable.overwrite(docs.filter(col("lang") =!= "en")
       .repartitionByRange(4, col("doc_id")), root)
     val nAll = docs.count()
     val nNoEn = docs.filter(col("lang") =!= "en").count()
-    // current epoch reflects the delete; versionAsOf reads history
+    // current version reflects the delete; versionAsOf reads history
     assert(spark.read.format("graft").load(root).count() == nNoEn)
     assert(spark.read.format("graft").option("versionAsOf", 0)
       .load(root).count() == nAll)
-    // snapshot isolation: a resolved reader is pinned to its epoch —
+    // snapshot isolation: a resolved reader is pinned to its version —
     // a commit landing AFTER load() must not change what it reads
     val snap = spark.read.format("graft").load(root)
-    sinks.VersionedTable.write(
+    sinks.ManifestTable.overwrite(
       docs.filter(col("lang") =!= "en" && col("lang") =!= "de"), root)
     assert(snap.count() == nNoEn,
       "a resolved snapshot must not observe later commits")
@@ -912,7 +809,7 @@ class SinksSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException] {
       spark.read.format("graft").option("versionAsOf", 99).load(root)
     }
-    assert(ex.getMessage.contains("no epoch 99"))
+    assert(ex.getMessage.contains("no version 99"))
     // in-source stats pruning: a manifest table over a range layout
     // carries its own envelopes; a pushed range filter must open fewer
     // files than the version holds
@@ -1012,8 +909,8 @@ class SinksSpec extends AnyFunSuite {
         s"(touched ${touchedByDelete.size}/${files2.size})")
     assert(ManifestTable.read(spark, root)
       .filter(col("doc_id") >= hi).count() == 0)
-    // CDC fold: upsert + delete through the file-granular path equals
-    // the VersionedTable semantics; changesBetween round-trips
+    // CDC fold: upsert + delete through the file-granular path;
+    // changesBetween round-trips
     val ch = docs.filter(col("doc_id") === k + 1)
       .withColumn("lang", lit("cdc")).withColumn("op", lit("U"))
       .withColumn("seq", lit(1L))
@@ -1224,40 +1121,6 @@ class SinksSpec extends AnyFunSuite {
     assert(seen.last.forall(_._3 == 2L), "the delta is stamped v2")
     consume()
     assert(seen.size == 2)
-  }
-
-  test("claim verification: a degenerate-rename loser is detected by the epoch's claim marker and its garbage swept") {
-    // the local filesystem's no-overwrite rename is CHECK-then-act and
-    // RawLocalFileSystem degrades a rename onto an existing directory
-    // to copy-INTO — in the race window a loser's stage can land as a
-    // hidden subdirectory inside the winner's published epoch while
-    // the rename reports success. Ownership is therefore decided by
-    // the claim in the epoch's commit record, not the rename's return.
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-vt-claim").toString + "/t"
-    sinks.VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), root)
-    val epoch = new java.io.File(s"$root/epoch=0")
-    assert(epoch.isDirectory)
-    // simulate the fallback's outcome: the loser's stage — its own
-    // record included — copied inside the winner's epoch
-    val loserName = ".stage-loser-1234"
-    val garbage = new java.io.File(epoch, loserName)
-    assert(garbage.mkdir())
-    val w = new java.io.FileWriter(new java.io.File(garbage, "_graft_commit.json"))
-    w.write(s"""{"claim":"$loserName","ts":0,"batch":-1,"meta":null}""")
-    w.close()
-    val claim = sinks.VersionedTable.verifyClaim(spark, root, 0, loserName)
-    assert(claim == sinks.VersionedTable.LostConsumed,
-      s"the loser must detect the foreign record, got $claim")
-    assert(!garbage.exists(), "the loser must sweep its copied-in stage")
-    // the true owner (whose name the epoch's record carries) verifies Won
-    val owner = sinks.VersionedTable.record(spark, root, 0).key.claim
-    assert(owner.startsWith(".stage-"))
-    assert(sinks.VersionedTable.verifyClaim(spark, root, 0, owner) ==
-      sinks.VersionedTable.Won)
-    // the epoch stays perfectly readable throughout
-    assert(sinks.VersionedTable.read(spark, root)
-      .collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("manifest bloom index: equality probes prune a hash layout; delta build indexes only new files") {
@@ -1602,8 +1465,8 @@ class SinksSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-manifest-hist").toString + "/t"
     val clock = new util.LogicalClock(1000L)
-    val prev = sinks.VersionedTable.commitClock
-    sinks.VersionedTable.commitClock = clock
+    val prev = sinks.ManifestTable.commitClock
+    sinks.ManifestTable.commitClock = clock
     try {
       ManifestTable.create(Seq((1L, "a"), (2L, "b")).toDF("k", "v"),
         root, Seq("k"))
@@ -1617,7 +1480,7 @@ class SinksSpec extends AnyFunSuite {
         Seq((0L, 1000L, 2L), (1L, 1500L, 3L)),
         s"history rows wrong: $h")
       assert(h(1)._3 > h(0)._3, "append must add files")
-    } finally sinks.VersionedTable.commitClock = prev
+    } finally sinks.ManifestTable.commitClock = prev
   }
 
   test("manifest writeBatch: a replayed batch id is a no-op, the next id commits at append cost") {
@@ -2457,17 +2320,17 @@ class SinksSpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-ts-travel").toString + "/t"
     val clock = new util.LogicalClock(1000L)
-    val prev = sinks.VersionedTable.commitClock
-    sinks.VersionedTable.commitClock = clock
+    val prev = sinks.ManifestTable.commitClock
+    sinks.ManifestTable.commitClock = clock
     try {
       // three commits at t=1000, 5000, 9000 (logical clock — the
       // repo-wide no-wall-clock discipline)
-      sinks.VersionedTable.write(Seq(1L).toDF("v"), root)
+      sinks.ManifestTable.create(Seq(1L).toDF("v"), root, Nil)
       clock.advance(4000L)
-      sinks.VersionedTable.write(Seq(1L, 2L).toDF("v"), root)
+      sinks.ManifestTable.overwrite(Seq(1L, 2L).toDF("v"), root)
       clock.advance(4000L)
-      sinks.VersionedTable.write(Seq(1L, 2L, 3L).toDF("v"), root)
-      assert(sinks.VersionedTable.commitTimestamps(spark, root) ==
+      sinks.ManifestTable.overwrite(Seq(1L, 2L, 3L).toDF("v"), root)
+      assert(sinks.ManifestTable.commitTimestamps(spark, root) ==
         Seq(0L -> 1000L, 1L -> 5000L, 2L -> 9000L))
       // exact stamps and between-stamps both resolve to "latest <= t"
       def rowsAt(ts: Long): Set[Long] =
@@ -2492,15 +2355,15 @@ class SinksSpec extends AnyFunSuite {
           .option("versionAsOf", 1).load(root)
       }
       assert(both.getMessage.contains("not both"))
-      // vacuum drops epoch 0 — its timestamp range now fails fast
-      // instead of silently answering from a newer epoch
-      sinks.VersionedTable.vacuum(spark, root, keep = 2)
+      // vacuum drops version 0 — its timestamp range now fails fast
+      // instead of silently answering from a newer version
+      sinks.ManifestTable.vacuum(spark, root, keep = 2)
       val gone = intercept[IllegalArgumentException] {
         spark.read.format("graft").option("timestampAsOf", 1000L).load(root)
       }
       assert(gone.getMessage.contains("as old as"))
       assert(rowsAt(5000L) == Set(1L, 2L), "retained history still resolves")
-    } finally sinks.VersionedTable.commitClock = prev
+    } finally sinks.ManifestTable.commitClock = prev
   }
 
   /** Listener-counted file-input bytes over a block — the
@@ -3607,53 +3470,6 @@ class SinksSpec extends AnyFunSuite {
         spark.sql("SELECT 8L as k, 800L as v"), root)
     }
     assert(again.getMessage.contains("v_small"))
-  }
-
-  test("version-list checkpointing: after a vacuum, versions() and latestVersion never LIST the directory — pointer + contiguity probe bound them at 100k-commit scale") {
-    import sinks.VersionedTable
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-vckpt").toString
-    val root = s"$dir/t"
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), root): Unit
-    VersionedTable.write(Seq((2L, "b")).toDF("k", "v"), root): Unit
-    VersionedTable.write(Seq((3L, "c")).toDF("k", "v"), root): Unit
-    // the vacuum (the only remover) installs the checkpoint
-    VersionedTable.vacuum(spark, root, keep = 2, stageTtlMs = 0L)
-    assert(VersionedTable.versions(spark, root) == Seq(1L, 2L))
-    // simulate 118 further commits: every commit is prior-latest + 1
-    // by the CAS, so bare contiguous epoch dirs stand in for them
-    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    (3L to 120L).foreach(v => f.mkdirs(
-      new org.apache.hadoop.fs.Path(root, s"epoch=$v")): Unit)
-    // reach the same on-disk table through the counting scheme
-    spark.sparkContext.hadoopConfiguration
-      .set("fs.counting.impl", classOf[CountingFs].getName)
-    val cRoot = s"counting://$root"
-    CountingFs.listCalls.set(0L)
-    val vs = VersionedTable.versions(spark, cRoot)
-    assert(vs == (1L to 120L),
-      s"checkpoint ∪ contiguous probe must serve the live set: $vs")
-    assert(CountingFs.listCalls.get() == 0L,
-      s"versions() after a vacuum must not list the directory " +
-        s"(probes existence instead), got ${CountingFs.listCalls.get()} " +
-        "list calls")
-    CountingFs.listCalls.set(0L)
-    assert(VersionedTable.latestVersion(spark, cRoot) == 120L)
-    assert(CountingFs.listCalls.get() == 0L,
-      "latestVersion rides the same bounded path")
-    // a NEVER-vacuumed table has no checkpoint and keeps the exact
-    // listing (the conservative fallback)
-    val root2 = s"$dir/u"
-    VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), root2): Unit
-    CountingFs.listCalls.set(0L)
-    assert(VersionedTable.versions(spark, s"counting://$root2") ==
-      Seq(0L))
-    assert(CountingFs.listCalls.get() > 0L,
-      "no checkpoint — the exact listing is the authority")
-    // the vacuumed version is GONE from the checkpoint view — the
-    // retention fail-fast contract stays conservative
-    assert(!VersionedTable.versions(spark, root).contains(0L))
   }
 
   test("three grains, one change: a seeded op sequence reads back identically at copy-on-write, deletion-vector and equality-delete grain, after compactEq and after optimize") {

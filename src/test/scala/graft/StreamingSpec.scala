@@ -501,7 +501,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = streaming.EventStreams.driftMonitorStream(
       stream, root, ref, "cents", 0L, 49999L, 10).start()
     try q.processAllAvailable() finally q.stop()
-    val log = sinks.VersionedTable.read(spark, root)
+    val log = sinks.ManifestTable.read(spark, root)
     def shape(df: org.apache.spark.sql.DataFrame) =
       df.select(col("bucket"), col("n_a"), col("n_b"), col("psi_term"))
         .collect()
@@ -519,7 +519,7 @@ class StreamingSpec extends AnyFunSuite {
     // under root + "_ks", each equal to the batch operator on exactly
     // that batch's rows — location shifts INSIDE a PSI bucket are
     // invisible to the bucketed terms, so the monitor logs both
-    val ksLog = sinks.VersionedTable.read(spark, root + "_ks")
+    val ksLog = sinks.ManifestTable.read(spark, root + "_ks")
     def ksShape(df: org.apache.spark.sql.DataFrame) =
       df.select(col("n_a"), col("n_b"), col("ks"), col("ks_at"))
         .collect()
@@ -554,7 +554,7 @@ class StreamingSpec extends AnyFunSuite {
       df.select(col("grp"), col("score"), col("id"))
         .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
         .toSet
-    val got = shape(sinks.VersionedTable.read(spark, root))
+    val got = shape(sinks.ManifestTable.read(spark, root))
     graft.functions.VectorExpressions.ensureRegistered(spark)
     val want = shape(ev
       .groupBy(col("event_type").as("grp"))
@@ -567,11 +567,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   /** Streaming materialized-view maintenance: insert deltas arrive over
-    * multiple micro-batches, each folding into a new VersionedTable
-    * epoch; the final view must be row-identical to a one-shot batch
-    * build, and a later retraction batch folds through the same epoch
-    * path. */
+    * multiple micro-batches, each committing the keys it touches as one
+    * new version; the final view must be row-identical to a one-shot
+    * batch build, and a later retraction batch folds through the same
+    * keyed path, retiring the groups whose count reaches 0. */
   test("streaming incremental aggregate: epoch folds equal the one-shot batch build") {
+    import spark.implicits._
     val ev = sources.Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")))
       .withColumn("cents", round(col("value") * 100, 0).cast("long"))
@@ -585,26 +586,38 @@ class StreamingSpec extends AnyFunSuite {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val q = streaming.EventStreams.incrementalAggStream(
-      stream, root, keys, "cents", "op").start()
-    try q.processAllAvailable() finally q.stop()
-    assert(sinks.VersionedTable.versions(spark, root).size >= 3,
-      "each micro-batch must commit its own epoch")
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-incragg-ckpt").toString
+    def run(): Unit = {
+      val q = streaming.EventStreams.incrementalAggStream(
+        stream, root, keys, "cents", "op")
+        .option("checkpointLocation", ckpt).start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    run()
+    // one version per micro-batch, after the empty create
+    assert(sinks.ManifestTable.versions(spark, root).size >= 4,
+      "each micro-batch must commit its own version")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("event_type", "day").collect().toSeq
-    assert(rows(sinks.VersionedTable.read(spark, root)) ==
+    assert(rows(sinks.ManifestTable.read(spark, root)) ==
       rows(operators.IncrementalAgg.build(ev, keys, col("cents"))),
       "streamed folds must equal the one-shot build")
-    // a late retraction batch folds through the same committed-state path
-    val del = ev.filter(col("event_id") % 16 === 0).withColumn("op", lit("D"))
-    sinks.VersionedTable.write(
-      operators.IncrementalAgg.applyDelta(
-        sinks.VersionedTable.read(spark, root), del, keys,
-        col("cents"), col("op")), root)
-    assert(rows(sinks.VersionedTable.read(spark, root)) ==
-      rows(operators.IncrementalAgg.build(
-        ev.filter(col("event_id") % 16 =!= 0), keys, col("cents"))),
+    // a late retraction batch folds through the same keyed path: one
+    // group loses every row, so its key must leave the view
+    val (gType, gDay) = ev.groupBy("event_type", "day").count()
+      .orderBy("count", "event_type", "day").as[(String, java.sql.Date, Long)]
+      .head() match { case (t, d, _) => (t, d) }
+    val gone = col("event_type") === gType && col("day") === gDay
+    ev.filter(col("event_id") % 16 === 0 || gone).withColumn("op", lit("D"))
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    run() // the restarted stream continues the batch ids
+    val kept = ev.filter(col("event_id") % 16 =!= 0 && !gone)
+    assert(rows(sinks.ManifestTable.read(spark, root)) ==
+      rows(operators.IncrementalAgg.build(kept, keys, col("cents"))),
       "retraction fold must equal the rebuilt post-delete view")
+    assert(sinks.ManifestTable.read(spark, root).filter(gone).isEmpty,
+      "a group whose count reaches 0 must be retired, not carried")
   }
 
   /** Streaming expectations: per-batch split with a durable
@@ -646,7 +659,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(gotClean.toSet ==
       wantClean.select("doc_id").as[Long].collect().toSet)
     assert(gotClean.size == gotClean.toSet.size, "no clean row delivered twice")
-    val quarantine = sinks.VersionedTable.read(spark, qRoot)
+    val quarantine = sinks.ManifestTable.read(spark, qRoot)
     assert(quarantine.select("doc_id").as[Long].collect().toSet ==
       wantBad.select("doc_id").as[Long].collect().toSet)
     // every quarantined row names its broken rules, matching batch
@@ -660,6 +673,72 @@ class StreamingSpec extends AnyFunSuite {
     // a doc violating BOTH rules carries both names
     val both = gotRules.filter(_._2.toSet == Set("has_text", "sane_size"))
     assert(both.keys.forall(id => id % 5 == 0 && id % 7 == 0))
+  }
+
+  /** An append fold sink costs its own micro-batch: ten equal batches
+    * into the expectations quarantine, and the data files the 10th
+    * batch's version adds (read from the manifest entries) weigh at
+    * most 2× the 1st's — a sink that rewrote the accumulated log would
+    * add ~10×. */
+  test("append fold sinks cost O(batch): the 10th equal quarantine batch adds at most 2x the 1st's bytes") {
+    import operators.Expectations.Expectation
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-fold-cost").toString
+    val inDir = s"$base/in"
+    // ten equal files of 300 rows, every row violating the rule
+    (0 until 10).foreach { i =>
+      spark.range(i * 300L, (i + 1) * 300L)
+        .select(col("id").as("doc_id"), lit("").as("text"))
+        .coalesce(1).write.mode("append").parquet(inDir)
+    }
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val qRoot = s"$base/quarantine"
+    val q = streaming.EventStreams.expectationsStream(
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        .parquet(inDir), qRoot,
+      Seq(Expectation("has_text", length(col("text")) > 0))) { (_, _) => }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    def files(v: Long): Map[String, Long] =
+      sinks.ManifestTable.manifest(spark, qRoot, v).select("path", "size")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // version 0 is the empty create; versions 1..10 are the batches
+    val vs = sinks.ManifestTable.versions(spark, qRoot)
+    assert(vs == (0L to 10L), s"one version per batch: $vs")
+    def added(v: Long): Long =
+      (files(v) -- files(v - 1).keySet).values.sum
+    assert(added(1) > 0L)
+    assert(added(10) <= 2 * added(1),
+      s"the 10th batch added ${added(10)} bytes, the 1st ${added(1)} — " +
+        "a fold sink must not rewrite its accumulated log")
+    assert(sinks.ManifestTable.read(spark, qRoot).count() == 3000L)
+  }
+
+  /** The keyed state sinks' commit: a batch-stamped keyed replace
+    * retires every touched key, lands the recomputed rows (a touched
+    * key absent from them leaves the table), and a replayed batch id
+    * commits nothing. */
+  test("keyed replace: touched keys retire, recomputed rows land, a replayed batch id commits nothing") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-keyed-replace").toString + "/t"
+    sinks.ManifestTable.create(
+      Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "n"), root, Seq("k"))
+    def state() = sinks.ManifestTable.read(spark, root).as[(Long, Long)]
+      .collect().toSet
+    val keys = Seq(2L, 3L, 4L).toDF("k")
+    val rows = Seq((2L, 21L), (4L, 40L)).toDF("k", "n")
+    val v = sinks.ManifestTable.replaceKeysBatch(rows, keys, root, Seq("k"), 0L)
+    assert(v.contains(1L))
+    assert(state() == Set((1L, 10L), (2L, 21L), (4L, 40L)))
+    assert(sinks.ManifestTable.lastAppliedBatch(spark, root) == 0L)
+    // the foreachBatch replay: the same id commits nothing
+    assert(sinks.ManifestTable.replaceKeysBatch(
+      Seq((2L, 99L)).toDF("k", "n"), Seq(2L).toDF("k"), root, Seq("k"),
+      0L).isEmpty)
+    assert(sinks.ManifestTable.latestVersion(spark, root) == 1L)
+    assert(state() == Set((1L, 10L), (2L, 21L), (4L, 40L)))
   }
 
   /** Streaming inverted-index maintenance: micro-batch upserts (new
@@ -715,9 +794,9 @@ class StreamingSpec extends AnyFunSuite {
     val base = java.nio.file.Files
       .createTempDirectory("graft-cfs-throttle").toString
     val src = s"$base/src"; val dst = s"$base/dst"
-    sinks.VersionedTable.write(Seq((1L, "a")).toDF("k", "v"), src)
-    sinks.VersionedTable.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), src)
-    sinks.VersionedTable.write(
+    sinks.ManifestTable.create(Seq((1L, "a")).toDF("k", "v"), src, Seq("k"))
+    sinks.ManifestTable.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), src)
+    sinks.ManifestTable.overwrite(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), src)
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     val q = spark.readStream.format("graft")
@@ -751,8 +830,8 @@ class StreamingSpec extends AnyFunSuite {
         s"found $leftover of 3")
     // a FRESH throttled stream on a VACUUMED table must bootstrap at
     // the oldest RETAINED version, not chase vacuumed version 0
-    sinks.VersionedTable.vacuum(spark, src, keep = 2)
-    assert(sinks.VersionedTable.versions(spark, src).head > 0L)
+    sinks.ManifestTable.vacuum(spark, src, keep = 2)
+    assert(sinks.ManifestTable.versions(spark, src).head > 0L)
     val dst2 = s"$base/dst2"
     val q2 = spark.readStream.format("graft")
       .option("keyCols", "k").option("maxVersionsPerTrigger", 1)
@@ -779,23 +858,20 @@ class StreamingSpec extends AnyFunSuite {
     * PURELY from the stream must equal the source after every run —
     * bootstrap as I-rows, then version-ranged diffs — and restarting
     * the stream on the same checkpoint with no new commits must be a
-    * content no-op. Runs against BOTH table layouts. */
+    * content no-op. Runs with the source evolving by row-level ops and
+    * by whole-snapshot overwrites. */
   test("graft change-feed stream: downstream maintained purely from the stream equals the source; restart is idempotent") {
-    Seq("epoch", "manifest").foreach { layout =>
+    Seq("snapshot", "rowlevel").foreach { layout =>
       val base = java.nio.file.Files
         .createTempDirectory(s"graft-cfs-$layout").toString
       val src = s"$base/src"; val dst = s"$base/dst"
       val ckpt = s"$base/ckpt"
       val docs = sources.Tables.documents(spark, sf)
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      if (layout == "manifest")
-        sinks.ManifestTable.create(
-          docs.repartitionByRange(4, col("doc_id"))
-            .sortWithinPartitions(col("doc_id")), src, Seq("doc_id"))
-      else sinks.VersionedTable.write(docs, src): Unit
-      def srcNow = if (layout == "manifest")
-        sinks.ManifestTable.read(spark, src)
-      else sinks.VersionedTable.read(spark, src)
+      sinks.ManifestTable.create(
+        docs.repartitionByRange(4, col("doc_id"))
+          .sortWithinPartitions(col("doc_id")), src, Seq("doc_id"))
+      def srcNow = sinks.ManifestTable.read(spark, src)
       def hop(): Unit = {
         val q = spark.readStream.format("graft")
           .option("keyCols", "doc_id").load(src)
@@ -823,14 +899,14 @@ class StreamingSpec extends AnyFunSuite {
       val k = docs.agg(min(col("doc_id"))).head().getLong(0)
       val upd = docs.filter(col("doc_id") === k)
         .withColumn("lang", lit("zz"))
-      if (layout == "manifest") {
+      if (layout == "rowlevel") {
         sinks.ManifestTable.merge(upd, src, Seq("doc_id"))
         sinks.ManifestTable.deleteWhere(spark, src, col("doc_id") === k + 3)
       } else {
-        // epoch tables commit whole snapshots: the same two changes
+        // the same two changes as whole-snapshot overwrites
         val upserted = docs.filter(col("doc_id") =!= k).unionByName(upd)
-        sinks.VersionedTable.write(upserted, src)
-        sinks.VersionedTable.write(
+        sinks.ManifestTable.overwrite(upserted, src)
+        sinks.ManifestTable.overwrite(
           upserted.filter(col("doc_id") =!= k + 3), src)
       }
       hop(); same("incremental")
@@ -1026,8 +1102,7 @@ class StreamingSpec extends AnyFunSuite {
       Seq(20L, 21L))
     // startingTimestamp: resolve to the earliest commit at-or-after
     // v2's stamp — stream v2 and the later append only
-    val ts2 = graft.sinks.VersionedTable.commitTimestamp(spark,
-      ManifestTable.manifestsRoot(src), 2L)
+    val ts2 = ManifestTable.commitTimestamps(spark, src).toMap.apply(2L)
     drain(s"$base/ts", s"$base/ckpt-ts",
       Map("startingTimestamp" -> ts2.toString))
     assert(ks(spark.read.format("graft").load(s"$base/ts")) ==
@@ -1293,56 +1368,49 @@ class StreamingSpec extends AnyFunSuite {
     * appended per row), never materializing a copy — the shape that
     * lets a 100 TB table bootstrap in restartable slices. */
   test("graft change-feed bootstrap: snapshot-served, maxFilesPerTrigger-bounded, I-rows exact, no scratch copy") {
-    Seq("manifest", "epoch").foreach { layout =>
-      val base = java.nio.file.Files
-        .createTempDirectory(s"graft-boot-$layout").toString
-      val src = s"$base/src"; val dst = s"$base/dst"; val ckpt = s"$base/ckpt"
-      val docs = sources.Tables.documents(spark, sf)
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val laid = docs.repartitionByRange(5, col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-      if (layout == "manifest")
-        sinks.ManifestTable.create(laid, src, Seq("doc_id")): Unit
-      else sinks.VersionedTable.write(laid, src): Unit
-      val nFiles =
-        if (layout == "manifest")
-          sinks.ManifestTable.filesAt(spark, src, 0).size
-        else sources.FileManifest.listFiles(spark, s"$src/epoch=0").count().toInt
-      assert(nFiles >= 4, s"[$layout] need a multi-file table, got $nFiles")
-      val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val badBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = spark.readStream.format("graft")
-        .option("keyCols", "doc_id").option("maxFilesPerTrigger", 2)
-        .load(src)
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          batches.incrementAndGet(): Unit
-          // every bootstrap row is an insert stamped with the version
-          if (df.filter(col("op") =!= "I" || col("seq") =!= 0).count() > 0)
-            badBatches.incrementAndGet(): Unit
-          if (!sinks.ManifestTable.exists(spark, dst))
-            sinks.ManifestTable.create(df.drop("op", "seq"), dst,
-              Seq("doc_id")): Unit
-          else sinks.ManifestTable.write(df.drop("op", "seq"), dst): Unit
-        }
-        .start()
-      q.awaitTermination()
-      val expectBatches = (nFiles + 1) / 2
-      assert(batches.get() == expectBatches,
-        s"[$layout] $nFiles files at 2/trigger must arrive as " +
-          s"$expectBatches batches, got ${batches.get()}")
-      assert(badBatches.get() == 0,
-        s"[$layout] bootstrap rows must all be op='I', seq=0")
-      val d = sinks.ManifestTable.read(spark, dst)
-      assert(d.exceptAll(docs).isEmpty && docs.exceptAll(d).isEmpty,
-        s"[$layout] sliced bootstrap must reassemble the exact table")
-      // zero-copy: the feed scratch was never created for the bootstrap
-      assert(!new java.io.File(s"$ckpt/sources/0/graft-feed").exists(),
-        s"[$layout] bootstrap slices must be served from the " +
-          "snapshot's own files, not a materialized copy")
-    }
+    val base = java.nio.file.Files
+      .createTempDirectory("graft-boot").toString
+    val src = s"$base/src"; val dst = s"$base/dst"; val ckpt = s"$base/ckpt"
+    val docs = sources.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    val laid = docs.repartitionByRange(5, col("doc_id"))
+      .sortWithinPartitions(col("doc_id"))
+    sinks.ManifestTable.create(laid, src, Seq("doc_id")): Unit
+    val nFiles = sinks.ManifestTable.filesAt(spark, src, 0).size
+    assert(nFiles >= 4, s"need a multi-file table, got $nFiles")
+    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val badBatches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val q = spark.readStream.format("graft")
+      .option("keyCols", "doc_id").option("maxFilesPerTrigger", 2)
+      .load(src)
+      .writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        batches.incrementAndGet(): Unit
+        // every bootstrap row is an insert stamped with the version
+        if (df.filter(col("op") =!= "I" || col("seq") =!= 0).count() > 0)
+          badBatches.incrementAndGet(): Unit
+        if (!sinks.ManifestTable.exists(spark, dst))
+          sinks.ManifestTable.create(df.drop("op", "seq"), dst,
+            Seq("doc_id")): Unit
+        else sinks.ManifestTable.write(df.drop("op", "seq"), dst): Unit
+      }
+      .start()
+    q.awaitTermination()
+    val expectBatches = (nFiles + 1) / 2
+    assert(batches.get() == expectBatches,
+      s"$nFiles files at 2/trigger must arrive as " +
+        s"$expectBatches batches, got ${batches.get()}")
+    assert(badBatches.get() == 0,
+      s"bootstrap rows must all be op='I', seq=0")
+    val d = sinks.ManifestTable.read(spark, dst)
+    assert(d.exceptAll(docs).isEmpty && docs.exceptAll(d).isEmpty,
+      s"sliced bootstrap must reassemble the exact table")
+    // zero-copy: the feed scratch was never created for the bootstrap
+    assert(!new java.io.File(s"$ckpt/sources/0/graft-feed").exists(),
+      s"bootstrap slices must be served from the " +
+        "snapshot's own files, not a materialized copy")
   }
 
   test("change-feed bootstrap of a DV-bearing snapshot: clean files zero-copy, vectored files' survivors only, then DV catch-up Ds") {
