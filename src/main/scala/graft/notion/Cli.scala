@@ -4,6 +4,8 @@ import graft.sinks.{ExcelSink, JsonlSink}
 import graft.sinks.pbi.{PbiSpec, Refresh, Registry}
 import graft.util.Par
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftSqlShims
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import scala.util.control.NonFatal
 
@@ -25,6 +27,9 @@ import scala.util.control.NonFatal
   * throttled live adapter; otherwise they replay recorded payloads from
   * `<dataDir>/recorded/` — the same offline seam the reference's tests
   * use.
+  *
+  * The commands that read landed data (normalize, excel:export,
+  * pbi:refresh, validate:coverage) plan statically (see [[planned]]).
   */
 object Cli {
 
@@ -46,9 +51,25 @@ object Cli {
 
   private val Datasets = Seq("workflowDefinitions", "workflowStages", "timeslices")
 
+  /** Runs a command in a clone of the caller's session (its conf,
+    * functions, query listeners and cache manager) with AQE off and
+    * `min(spark.sql.shuffle.partitions, defaultParallelism)` shuffle
+    * partitions. A command's input is a few thousand pages, a few MB:
+    * far below one advisory partition, so adaptive planning would
+    * coalesce each shuffle to about one partition per core and split no
+    * skew, yet still run every query stage as a job of its own. */
+  private def planned[T](env: Env)(f: Env => T): T = {
+    val static = GraftSqlShims.cloneSession(env.spark)
+    static.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, false)
+    static.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, math.min(
+      env.spark.sessionState.conf.getConf(SQLConf.SHUFFLE_PARTITIONS),
+      env.spark.sparkContext.defaultParallelism))
+    f(env.copy(spark = static))
+  }
+
   /** `normalize` (cli/index.ts:73-131): read latest raw partitions,
     * build canon datasets, evaluate quality, exclude, write 4 outputs. */
-  def normalize(env: Env, dataDir: String): Map[String, Long] = {
+  def normalize(env: Env, dataDir: String): Map[String, Long] = planned(env) { env =>
     env.cfg.validateOrThrow()
     val dates = Datasets.map { ds =>
       ds -> JsonlSink.latestDate(env.spark, dataDir, "raw", ds).getOrElse(
@@ -106,7 +127,7 @@ object Cli {
     * which no derived table outputs. The caches are dropped before
     * returning, so none outlives the command. */
   private def withCanonTables[T](env: Env, dataDir: String)(
-      f: (DataFrame, DataFrame, DataFrame) => T): T = {
+      f: (DataFrame, DataFrame, DataFrame) => T): T = planned(env) { env =>
     val empty = emptyRaw(env)
     def read(ds: String, builder: DataFrame => DataFrame) =
       canonDataset(env, dataDir, ds, StructType(
@@ -124,9 +145,10 @@ object Cli {
     * timeslices partition, with passing sample values and up to 10
     * failing timeslice ids for triage. */
   def validateCoverage(env: Env, dataDir: String): Quality.CoverageReport = {
-    val ts = canonDataset(env, dataDir, "timeslices",
-      Normalize.timeslices(emptyRaw(env), env.cfg).schema)
-    val r = Quality.coverage(ts)
+    val r = planned(env) { env =>
+      Quality.coverage(canonDataset(env, dataDir, "timeslices",
+        Normalize.timeslices(emptyRaw(env), env.cfg).schema))
+    }
     env.log(s"[validate] timeslices_total=${r.total}")
     env.log(s"[validate] workflow_instance_page_name_non_null=${r.nonNull}")
     env.log(f"[validate] workflow_instance_page_name_non_null_pct=${r.pct}%.2f%%")

@@ -477,10 +477,10 @@ object Derive {
     * order; a wave's actions run side by side, and each result is
     * collected once and becomes a LocalRelation with the same schema and
     * row order, which the later waves build on:
-    *  1. the three lookups (stage, workflow definition, label by key);
-    *     the five prefixed stage lookups are selects over the one stage
-    *     lookup;
-    *  2. FactTimeslices, DimStage, DimWorkflow and DimPlaybackFrame;
+    *  1. the three lookups (stage, workflow definition, label by key),
+    *     and DimPlaybackFrame, which reads only the timeslices; the five
+    *     prefixed stage lookups are selects over the one stage lookup;
+    *  2. FactTimeslices, DimStage and DimWorkflow;
     *  3. DimDate over the fact, StageOccupancy_Hourly over DimStage and
     *     the frames;
     *  4. StageThroughput_Daily over the occupancy.
@@ -496,20 +496,21 @@ object Derive {
     * the integrity checks still see every row. */
   def deriveAll(defs: DataFrame, stages: DataFrame, ts: DataFrame,
                 maxRows: Option[Int] = None): Map[String, DataFrame] = {
-    def wave(dfs: Seq[DataFrame], bound: Option[Int]): Seq[DataFrame] = Par.map(dfs) { df =>
+    def wave(dfs: (DataFrame, Option[Int])*): Seq[DataFrame] = Par.map(dfs) { case (df, bound) =>
       val rows = Broadcasts.collect(bound.fold(df)(n => df.limit(n + 1)))
       if (bound.exists(rows.length > _)) df
       else df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
     }
+    def bounded(dfs: DataFrame*) = dfs.map(_ -> maxRows)
     val lk = lookups(defs, stages)
-    val Seq(stageLk, wfLk, labelLk) = wave(Seq(lk.stages, lk.wf, lk.wfLabel), None)
+    val Seq(stageLk, wfLk, labelLk, frames) = wave(lk.stages -> None, lk.wf -> None,
+      lk.wfLabel -> None, dimPlaybackFrame(ts) -> maxRows)
     val local = Lookups(stageLk, wfLk, labelLk)
-    val Seq(fact, dStage, dWorkflow, frames) = wave(Seq(factFrom(ts, local),
-      dimStageFrom(stages, local), dimWorkflowFrom(labelLk), dimPlaybackFrame(ts)),
-      maxRows)
-    val Seq(dDate, occupancy) = wave(Seq(dimDate(fact),
-      occupancyFrom(ts, stageLk, dStage, frames)), maxRows)
-    val Seq(throughput) = wave(Seq(throughputFrom(ts, stageLk, dStage, occupancy)), maxRows)
+    val Seq(fact, dStage, dWorkflow) = wave(bounded(factFrom(ts, local),
+      dimStageFrom(stages, local), dimWorkflowFrom(labelLk)): _*)
+    val Seq(dDate, occupancy) = wave(bounded(dimDate(fact),
+      occupancyFrom(ts, stageLk, dStage, frames)): _*)
+    val Seq(throughput) = wave(bounded(throughputFrom(ts, stageLk, dStage, occupancy)): _*)
     val tables = Map(
       "FactTimeslices" -> fact,
       "DimWorkflow" -> dWorkflow,

@@ -40,31 +40,35 @@ object FileManifest {
 
   /** One row per data file currently in the landing dir: (path, size).
     * Driver-side listing — file counts are bounded by the layout
-    * (ParquetSink caps files/partition); record counts are not. */
+    * (ParquetSink caps files/partition); record counts are not.
+    *
+    * The walk lists each directory with `listStatus`. `listFiles(p,
+    * true)` would build a `LocatedFileStatus` per file, which reads the
+    * file's permissions: on a local filesystem without the native
+    * library, that forks an `ls -ld` per file. */
   def listFiles(spark: SparkSession, landingDir: String,
                 suffix: String = ".parquet"): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(landingDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     // hidden-ness is decided on every path component BELOW the landing
     // dir, not just the leaf name: a hidden directory (a crashed
     // writer's `.stage-*`, a `_temporary`) can hold part-*.parquet files
     // a leaf-only filter would list — and spark.read.parquet correctly
-    // ignores — so listing them here would serve duplicate rows.
-    val baseDepth = p.toUri.getPath.split('/').count(_.nonEmpty)
-    def hiddenComponent(f: org.apache.hadoop.fs.Path): Boolean =
-      f.toUri.getPath.split('/').filter(_.nonEmpty).drop(baseDepth)
-        .exists(c => c.startsWith("_") || c.startsWith("."))
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(suffix) &&
-        !hiddenComponent(f.getPath))
-        rows += ((f.getPath.toUri.getPath, f.getLen))
+    // ignores — so listing them here would serve duplicate rows. The
+    // walk never enters a hidden directory.
+    def hidden(f: org.apache.hadoop.fs.FileStatus): Boolean = {
+      val n = f.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
     }
+    def walk(dir: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).iterator.filterNot(hidden).flatMap { f =>
+        if (f.isDirectory) walk(f.getPath) else Iterator(f)
+      }
+    val rows = walk(p).filter(_.getPath.getName.endsWith(suffix))
+      .map(f => (f.getPath.toUri.getPath, f.getLen)).toSeq
     val spk = spark
     import spk.implicits._
-    rows.toSeq.toDF("path", "size")
+    rows.toDF("path", "size")
   }
 
   /** Files in the landing dir not yet committed to the manifest. */

@@ -1,8 +1,8 @@
 package graft.util
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper,
-  BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.graft.GraftSqlShims
 
 /** Collects a query's rows and then frees the broadcast relations the
@@ -19,10 +19,12 @@ import org.apache.spark.sql.graft.GraftSqlShims
   *  - Destroying them once the rows are in hand bounds the driver heap
   *    after a command by what the command returns.
   *
-  * Only the adaptive plan's materialized broadcast stages are freed:
-  * the rows are collected by then, and no other query shares them. The
-  * Dataset itself must not be run again, since its plan keeps the
-  * destroyed broadcasts; a Dataset derived from it plans its own. */
+  * Every broadcast exchange of the plan that was built is freed, planned
+  * statically or as an adaptive plan's broadcast stage: the rows are
+  * collected by then, and no other query shares them. An exchange that
+  * never ran is left alone rather than forced. The Dataset itself must
+  * not be run again, since its plan keeps the destroyed broadcasts; a
+  * Dataset derived from it plans its own. */
 object Broadcasts extends AdaptiveSparkPlanHelper {
 
   def collect[T](ds: Dataset[T]): Array[T] = {
@@ -34,9 +36,10 @@ object Broadcasts extends AdaptiveSparkPlanHelper {
       case a: AdaptiveSparkPlanExec => a.context.stageCache.values.toSeq
       case _ => Nil
     }
-    (cached ++ collectWithSubqueries(plan) { case s: BroadcastQueryStageExec => s }).collect {
-      case s: BroadcastQueryStageExec if s.isMaterialized => s.broadcast.relationFuture.get()
-    }.distinctBy(_.id).foreach(GraftSqlShims.destroyNow)
+    // an exchange that never ran is not forced: only its completion is read
+    (plan +: cached).flatMap(collectWithSubqueries(_) { case e: BroadcastExchangeExec => e })
+      .flatMap(_.completionFuture.value.flatMap(_.toOption))
+      .distinctBy(_.id).foreach(GraftSqlShims.destroyNow(_))
     rows
   }
 }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *   - turning an analyzed [[LogicalPlan]] (a MERGE statement's
   *     source relation) into a [[DataFrame]]
   *     (`classic.Dataset.ofRows`);
-  *   - the collation, broadcast, streaming and catalog hooks below.
+  *   - the collation, broadcast, session, streaming and catalog hooks
+  *     below.
   *
   * Living inside the `org.apache.spark.sql` namespace is the
   * established ecosystem pattern for exactly this seam (Delta Lake
@@ -47,6 +48,14 @@ object GraftSqlShims {
     * `destroy(blocking)` is private[spark]). */
   def destroyNow(b: org.apache.spark.broadcast.Broadcast[_]): Unit =
     b.destroy(blocking = true)
+
+  /** A copy of the session that keeps its runtime conf, temporary views,
+    * functions and query listeners (`ExecutionListenerManager`), over
+    * the same shared state and cache manager. Conf set on the copy stays
+    * in the copy. `newSession()` would start from the default conf with
+    * no listeners. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** DataFrame over an already-analyzed logical plan. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

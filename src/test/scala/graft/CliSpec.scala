@@ -124,6 +124,28 @@ class CliSpec extends AnyFunSuite {
     assert(a == xlsxEntries(s"$dataDir/b.xlsx"))
   }
 
+  test("the CLI commands plan statically, in a clone that still reports to the caller's listeners") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val dataDir = stageRawData()
+    val session = spark.newSession()
+    val client = new Refresh.FakeClient
+    val env = Cli.Env(session, NotionFixtures.cfg, client, runDate = "2026-08-12",
+      log = _ => ())
+    val log = new QueryLog(session)
+    Cli.normalize(env, dataDir)
+    Cli.excelExport(env, dataDir, s"$dataDir/out.xlsx")
+    Cli.pbiProvision(env, dataDir, "group-1", "TimeTracking")
+    Cli.pbiRefresh(env, dataDir, "group-1", "TimeTracking")
+    Cli.validateCoverage(env, dataDir)
+    val executed = log.drain()
+    assert(executed.nonEmpty, "the listener hears the commands' queries")
+    assert(!executed.exists(_.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]),
+      "no executed plan is adaptive")
+    assert(session.conf.get("spark.sql.adaptive.enabled") == "true",
+      "the caller's session keeps its conf")
+    assert(xlsxEntries(s"$dataDir/out.xlsx").size == 7 && client.tableRows.size == 7)
+  }
+
   test("excel:export derives the star once: one stage lookup, then only the checks start jobs") {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.LeftAnti

@@ -34,3 +34,28 @@ class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
 object CountingLocalFs {
   val listCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 }
+
+/** A local filesystem under its own scheme counting `listStatus` and
+  * `listLocatedStatus` calls apart — the probe for "a directory walk
+  * builds no `LocatedFileStatus`" (each one reads the file's permissions,
+  * which without the native library forks a process). Its own scheme
+  * and counters, so it never disturbs a suite counting through
+  * `counting:` in parallel. */
+class WalkCountingFs extends RawLocalFileSystem {
+  override def getScheme: String = "walkcount"
+  override def getUri: java.net.URI = java.net.URI.create("walkcount:///")
+  override def listStatus(p: Path): Array[FileStatus] = {
+    WalkCountingFs.listCalls.incrementAndGet(): Unit
+    super.listStatus(p)
+  }
+  override def listLocatedStatus(p: Path)
+      : org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] = {
+    WalkCountingFs.locatedCalls.incrementAndGet(): Unit
+    super.listLocatedStatus(p)
+  }
+}
+
+object WalkCountingFs {
+  val listCalls = new java.util.concurrent.atomic.AtomicLong(0L)
+  val locatedCalls = new java.util.concurrent.atomic.AtomicLong(0L)
+}

@@ -247,6 +247,35 @@ class SinksSpec extends AnyFunSuite {
       "same path, new size => offered again")
   }
 
+  test("file manifest: listFiles walks with listStatus, never a located listing, and skips hidden paths") {
+    val base = java.nio.file.Files.createTempDirectory("graft-walk").toString
+    def put(rel: String, bytes: Int): Unit = {
+      val f = java.nio.file.Paths.get(base, rel)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, Array.fill[Byte](bytes)(1)): Unit
+    }
+    put("a/part-1.parquet", 11)
+    put("a/b/part-2.parquet", 22)
+    put("a/_SUCCESS", 0)
+    put("a/.part-1.parquet.crc", 3)
+    put("a/notes.txt", 4)
+    put("c/_hidden.parquet", 5)
+    put(".stage-x/part-3.parquet", 6)
+    put("_temporary/0/part-4.parquet", 7)
+    def listed(dir: String) = sources.FileManifest.listFiles(spark, dir)
+      .as[(String, Long)].collect().toSet
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.walkcount.impl", classOf[WalkCountingFs].getName)
+    WalkCountingFs.listCalls.set(0L)
+    WalkCountingFs.locatedCalls.set(0L)
+    val walked = listed(s"walkcount://$base")
+    assert(WalkCountingFs.locatedCalls.get() == 0L, "no LocatedFileStatus is built")
+    // the root and its three visible directories; hidden ones are not entered
+    assert(WalkCountingFs.listCalls.get() == 4L)
+    assert(walked == Set((s"$base/a/part-1.parquet", 11L), (s"$base/a/b/part-2.parquet", 22L)))
+    assert(listed(base) == walked, "the same rows through the local filesystem")
+  }
+
   /** The property Z-order exists for, measured directly from file-level
     * min/max: under a single-column sort each file spans ~the full
     * domain of the OTHER column (no skipping possible); under Z-order
